@@ -5,9 +5,9 @@ Reference precedent: run monitoring with ≤3 resume attempts
 (dagster.docker.yaml:16-25) and the startup reaper that terminates stuck runs
 (scripts/terminate_starting_and_started_runs.py) — supervision bolted onto
 non-resumable compute.  Here resumability is structural: every stage writes
-its output as an atomic `SnapshotTable` commit plus a lineage append; re-running
-the pipeline skips stages whose snapshot already committed and recomputes the
-rest from their inputs' snapshots.
+its output as an atomic `SnapshotTable` commit whose own write also yields the
+stage's lineage row; re-running the pipeline skips stages whose snapshot
+already committed and recomputes the rest from their inputs' snapshots.
 """
 
 from __future__ import annotations
@@ -18,8 +18,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from .caching import tracked_scope
-from .io import SnapshotTable
-from .metrics import append_lineage, partition_lineage
+from .io import SnapshotTable, as_read_back
+from .metrics import append_lineage, observation_result, observe_stage
 
 
 class ExternalStageTimeout(RuntimeError):
@@ -68,9 +68,16 @@ class CheckpointedPipeline:
         emit_lineage: bool = True,
     ) -> DataFrame:
         """Run (or resume) a stage: if a committed snapshot exists, read it
-        back; otherwise compute, commit atomically, append per-partition
-        lineage, and read the committed snapshot (so downstream stages always
-        consume the durable copy, never a recomputable plan)."""
+        back; otherwise compute and commit atomically, and return the
+        committed snapshot (so downstream stages always consume the durable
+        copy, never a recomputable plan).
+
+        The commit's write is the stage's last Spark job.  Its rows and
+        checksum are observed during that write (``metrics.observe_stage``)
+        and checked against the parquet footers before the publish; the
+        lineage row (one per commit, ``partition_id = -1``) is appended with
+        pyarrow, and the read-back uses the schema the manifest recorded,
+        so no job (no second pass, no schema inference) follows it."""
         tbl = self.table(name)
         if not self.force and tbl.current_snapshot_id() is not None:
             return tbl.read(self.spark)
@@ -80,12 +87,26 @@ class CheckpointedPipeline:
         # (not the global registry) owns the frames, so a concurrent pipeline
         # in the same session can't have its caches yanked by this stage
         with tracked_scope():
-            df = fn()
-            snap_id = tbl.commit(df, partition_by=partition_by)
-        committed = tbl.read(self.spark)
+            # observe the rows as they read back, so the checksum equals a
+            # recount of the committed snapshot (io.as_read_back)
+            df, obs = observe_stage(as_read_back(fn(), partition_by), name)
+            snap_id = tbl.commit(df, partition_by=partition_by, observation=obs)
         if emit_lineage:
-            append_lineage(partition_lineage(committed, name, snapshot_id=snap_id), self.lineage_path)
-        return committed
+            self._lineage(name, snap_id, observation_result(obs))
+        return tbl.read(self.spark)
+
+    def _lineage(self, name: str, snapshot_id: int, totals: dict) -> None:
+        """One lineage row for a commit (``partition_id = -1``)."""
+        append_lineage(
+            [{
+                "stage": name,
+                "snapshot_id": snapshot_id,
+                "partition_id": -1,
+                "row_count": int(totals.get("rows") or 0),
+                "checksum": int(totals.get("checksum") or 0),
+            }],
+            self.lineage_path,
+        )
 
     def external_stage(
         self,
@@ -221,13 +242,7 @@ class CheckpointedPipeline:
                     shutil.rmtree(scratch, ignore_errors=True)
         else:
             if emit_lineage:  # failure visible to K6 reconciliation
-                failure = self.spark.createDataFrame(
-                    [(name, -1, -1, -1, 0)],
-                    "stage string, snapshot_id long, partition_id int, row_count long, checksum long",
-                )
-                from pyspark.sql import functions as F
-
-                append_lineage(failure.withColumn("committed_at", F.current_timestamp()), self.lineage_path)
+                self._lineage(name, -1, {"rows": -1})
             raise RuntimeError(
                 f"external stage {name!r} failed after {max_attempts} attempts"
             ) from last_err
@@ -247,13 +262,7 @@ class CheckpointedPipeline:
         os.replace(tmp, manifest_path)  # the commit point
 
         if emit_lineage:
-            from pyspark.sql import functions as F
-
-            row = self.spark.createDataFrame(
-                [(name, version, -1, int(meta.get("rows", 0)), int(meta.get("checksum", 0)))],
-                "stage string, snapshot_id long, partition_id int, row_count long, checksum long",
-            ).withColumn("committed_at", F.current_timestamp())
-            append_lineage(row, self.lineage_path)
+            self._lineage(name, version, meta)
         return manifest
 
     def completed_stages(self) -> list[str]:

@@ -16,6 +16,23 @@ parquet with Iceberg-style semantics built on top:
   ``start-snapshot-id``; the reference's If-Modified-Since fetch,
   util/urllib.py:59-72).
 
+Manifest fields (``_manifests/{snapshot_id:012d}.json``):
+
+* ``snapshot_id``, ``parent`` — this snapshot and the one current before it.
+* ``data_dir`` — the parquet directory this commit wrote.
+* ``mode`` — ``overwrite`` starts a new table state; ``append`` adds
+  ``data_dir`` to the parent's state.
+* ``partition_by`` — hive partition columns of ``data_dir`` (may be empty).
+* ``committed_at`` — epoch seconds; ``meta`` — caller tags (batch ids).
+* ``schema`` — the written frame's schema as Spark JSON, forced nullable and
+  in read order (partition columns last, in ``partition_by`` order).  Every
+  read passes it to ``spark.read.schema``, so no read starts a
+  schema-inference job.
+  Manifests written before this field existed fall back to inference.
+* ``files`` — ``[{path, rows}]``: each data file, relative to ``data_dir``,
+  with its row count from the parquet footer (Iceberg's per-data-file
+  ``record_count``).
+
 Swap `SnapshotTable` for `df.writeTo(tbl)` catalog calls when real Iceberg
 jars are on the classpath — the call sites don't change.
 """
@@ -24,11 +41,86 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from .metrics import observation_result
+
+
+def _as_nullable(dt):
+    """A Spark JSON data type with every field, element and map value made
+    nullable — what a parquet scan reports, whatever the writer declared."""
+    if not isinstance(dt, dict):
+        return dt
+    kind = dt.get("type")
+    if kind == "struct":
+        return {**dt, "fields": [
+            {**f, "nullable": True, "type": _as_nullable(f["type"])} for f in dt["fields"]
+        ]}
+    if kind == "array":
+        return {**dt, "elementType": _as_nullable(dt["elementType"]), "containsNull": True}
+    if kind == "map":
+        return {
+            **dt,
+            "keyType": _as_nullable(dt["keyType"]),
+            "valueType": _as_nullable(dt["valueType"]),
+            "valueContainsNull": True,
+        }
+    return dt
+
+
+def as_read_back(df: DataFrame, partition_by: list[str] | None = None) -> DataFrame:
+    """``df`` as a parquet scan reads it back once written with
+    ``partition_by``: partition columns last, in ``partition_by`` order, and
+    an empty-string partition value null (Spark writes both to the default
+    partition).  Writing this frame gives the same files as writing ``df``."""
+    if not partition_by:
+        return df
+    kinds = dict(df.dtypes)
+
+    def part(c: str):
+        return F.when(F.col(c) != "", F.col(c)).alias(c) if kinds[c] == "string" else F.col(c)
+
+    return df.select(
+        *[F.col(c) for c in df.columns if c not in partition_by],
+        *[part(c) for c in partition_by],
+    )
+
+
+def _read_schema(df: DataFrame, partition_by: list[str] | None = None) -> dict:
+    """The schema a parquet scan of ``df`` written with ``partition_by``
+    reports, as Spark JSON: forced nullable, partition columns last."""
+    return _as_nullable(as_read_back(df, partition_by).schema.jsonValue())
+
+
+def footer_rows(data_dir: str) -> list[dict]:
+    """``[{path, rows}]`` for every parquet data file under ``data_dir``
+    (paths relative to it), row counts read from the file footers."""
+    import pyarrow.parquet as pq
+
+    out = []
+    for root, dirs, names in os.walk(data_dir):
+        dirs.sort()
+        for n in sorted(names):
+            if n.startswith((".", "_")):
+                continue
+            full = os.path.join(root, n)
+            out.append({"path": os.path.relpath(full, data_dir), "rows": pq.read_metadata(full).num_rows})
+    return out
+
+
+def _scan(spark: SparkSession, dirs: list[str], schema: dict | None) -> DataFrame:
+    """Parquet scan of ``dirs`` under a recorded ``schema`` (Spark JSON);
+    ``None`` — a manifest older than recorded schemas — infers it."""
+    reader = spark.read
+    if schema is not None:
+        reader = reader.schema(T.StructType.fromJson(schema))
+    return reader.parquet(*dirs)
 
 
 class SnapshotTable:
@@ -47,6 +139,7 @@ class SnapshotTable:
         mode: str = "overwrite",
         partition_by: list[str] | None = None,
         meta: dict | None = None,
+        observation: Observation | None = None,
     ) -> int:
         """Write ``df`` as a new snapshot and atomically publish it.
 
@@ -54,7 +147,14 @@ class SnapshotTable:
         previous snapshot current (readers never see partial data).
         ``meta`` (JSON-serializable) is recorded in the manifest — callers use
         it for idempotence tags (e.g. a batch id: skip a batch whose tag is
-        already committed, the Iceberg ``wap.id`` pattern).
+        already committed, the Iceberg ``wap.id`` pattern).  The manifest also
+        records the frame's schema and each file's footer row count.
+
+        ``observation`` — attached to ``df`` with a ``rows`` metric
+        (``metrics.observe_stage``) — is checked against the footer row
+        counts before the publish: a mismatch (a task counted twice, a lost
+        file), or footers or metrics that cannot be read, removes the data
+        dir and raises, and nothing is committed.
         """
         snap_id = self._next_snapshot_id()
         data_dir = os.path.join(self.root, f"snap-{snap_id}-{uuid.uuid4().hex[:8]}")
@@ -63,6 +163,19 @@ class SnapshotTable:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(data_dir)
 
+        try:
+            files = footer_rows(data_dir)
+            if observation is not None:
+                observed = observation_result(observation)["rows"]
+                written = sum(f["rows"] for f in files)
+                if observed != written:
+                    raise RuntimeError(
+                        f"commit to {self.root}: the write observed {observed} rows "
+                        f"but its parquet footers hold {written}; nothing committed"
+                    )
+        except Exception:
+            shutil.rmtree(data_dir, ignore_errors=True)  # unpublished: no manifest
+            raise
         manifest = {
             "snapshot_id": snap_id,
             "data_dir": data_dir,
@@ -71,6 +184,8 @@ class SnapshotTable:
             "committed_at": time.time(),
             "parent": self.current_snapshot_id(),
             "meta": meta or {},
+            "schema": _read_schema(df, partition_by),
+            "files": files,
         }
         tmp = os.path.join(self.manifest_dir, f".tmp-{uuid.uuid4().hex}.json")
         with open(tmp, "w") as fh:
@@ -112,11 +227,17 @@ class SnapshotTable:
 
     def read(self, spark: SparkSession, snapshot_id: int | None = None) -> DataFrame:
         """Table state at a snapshot: the last overwrite plus all appends
-        since (Iceberg-like append chains)."""
+        since (Iceberg-like append chains), under that snapshot's schema."""
         snap = snapshot_id if snapshot_id is not None else self.current_snapshot_id()
         if snap is None:
             raise FileNotFoundError(f"table {self.root} has no committed snapshot")
-        return spark.read.parquet(*self._state_dirs(snap))
+        return _scan(spark, self._state_dirs(snap), self._manifest(snap).get("schema"))
+
+    def read_written(self, spark: SparkSession, snapshot_id: int) -> DataFrame:
+        """Only the rows ``snapshot_id``'s own commit wrote (its data dir,
+        not the append chain below it)."""
+        m = self._manifest(snapshot_id)
+        return _scan(spark, [m["data_dir"]], m.get("schema"))
 
     def snapshots(self) -> list[dict]:
         """All committed manifests, oldest → newest."""
@@ -136,8 +257,6 @@ class SnapshotTable:
         outside the keep window.  Returns ``{"expired_manifests": n,
         "deleted_dirs": m}``.
         """
-        import shutil
-
         if keep_last < 1:
             raise ValueError("keep_last must be >= 1")
         snaps = [int(m.split(".")[0]) for m in self._manifests()]
@@ -202,7 +321,7 @@ class SnapshotTable:
         manifests = [self._manifest(s) for s in new]
         if any(m.get("mode", "overwrite") != "append" for m in manifests):
             return self.read(spark)
-        return spark.read.parquet(*[m["data_dir"] for m in manifests])
+        return _scan(spark, [m["data_dir"] for m in manifests], manifests[-1].get("schema"))
 
 
 def write_day_partitioned(df: DataFrame, path: str, ts_col: str = "ts", mode: str = "overwrite") -> None:
@@ -323,7 +442,6 @@ def publish_web_asset(
     """
     import gzip
     import json as _json
-    import shutil
 
     if (content is None) == (write_fn is None):
         raise ValueError("pass exactly one of content= or write_fn=")

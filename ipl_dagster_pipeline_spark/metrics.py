@@ -2,20 +2,25 @@
 
 Reference precedent: every publish emits ``num_rows`` output metadata
 (postgis_geopandas_io_manager.py:103,260) and dedup deltas are warned
-(lamassu.py:306-311).  Here every stage can emit:
+(lamassu.py:306-311).  Here the numbers ride the commit itself:
 
-* a zero-cost ``df.observe`` row-count/checksum (collected on action), and
-* a per-PARTITION lineage frame (partition_id, row_count, checksum) computed
-  with map-side partial aggregation (spark_partition_id groupBy — the shuffle
-  moves only one row per partition), appended to a parquet ``_lineage`` table.
+* ``observe_stage`` attaches rows + checksum to the frame being committed,
+  so the commit's own write computes them — no second pass over the data;
+* the commit checks the observed rows against the parquet footers and
+  records each file's row count in the snapshot manifest (``io.py``);
+* ``append_lineage`` adds one row per commit (``partition_id = -1``) to the
+  parquet ``_lineage`` table with pyarrow, in-process — no Spark job;
+* ``stage_totals`` reconciles every stage's latest snapshot in one query.
 
-Checksums are order-insensitive (sum of per-row crc32) so they are stable
-under any partitioning/parallelism.
+Checksums are order-insensitive (sum of per-row crc32 of the row's JSON) so
+they are stable under any partitioning/parallelism, and a recount of the
+committed snapshot gives the same number.
 """
 
 from __future__ import annotations
 
 import itertools
+import os
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
@@ -147,71 +152,107 @@ def _row_checksum(df: DataFrame) -> F.Column:
 
 
 def observe_stage(df: DataFrame, stage: str) -> tuple[DataFrame, Observation]:
-    """Attach a named observation: rows + checksum, evaluated for free with
-    whatever action executes the plan.  Usage:
+    """Attach a uniquely-named observation: rows + checksum, evaluated for
+    free with whatever action executes the plan.  Usage:
 
         df, obs = observe_stage(df, 'convert')
         df.write...   # any action
         obs.get  # {'rows': ..., 'checksum': ...}
     """
-    obs = Observation(stage)
+    obs = Observation(f"{stage}_{next(_OBS_COUNTER)}")
     return df.observe(obs, F.count(F.lit(1)).alias("rows"), F.sum(_row_checksum(df)).alias("checksum")), obs
 
 
-def partition_lineage(df: DataFrame, stage: str, snapshot_id: int = 0) -> DataFrame:
-    """Per-partition (row_count, checksum) lineage frame for ``df`` as it is
-    currently partitioned.  Partial-aggregates map-side; one output row per
-    input partition.  ``snapshot_id`` ties the lineage rows to one committed
-    snapshot so reconciliation never mixes recomputed runs."""
-    return (
-        df.withColumn("__pid", F.spark_partition_id())
-        .groupBy("__pid")
-        .agg(F.count(F.lit(1)).alias("row_count"), F.sum(_row_checksum(df)).alias("checksum"))
-        .select(
-            F.lit(stage).alias("stage"),
-            F.lit(snapshot_id).cast("long").alias("snapshot_id"),
-            F.col("__pid").alias("partition_id"),
-            "row_count",
-            "checksum",
-            F.current_timestamp().alias("committed_at"),
+# how long a commit waits for its write's observed metrics to arrive
+_OBSERVATION_TIMEOUT_S = 30.0
+
+
+def observation_result(obs: Observation) -> dict:
+    """The metrics of ``obs`` once its action has run; raises if they are not
+    delivered within ``_OBSERVATION_TIMEOUT_S`` (``obs.get`` alone would block
+    forever on an observation whose action never ran)."""
+    import time
+
+    deadline = time.monotonic() + _OBSERVATION_TIMEOUT_S
+    ready = _probe_completed(obs, deadline)
+    if ready is None:  # API drift — public fallback with bounded wait
+        row = _get_with_timeout(obs, deadline - time.monotonic())
+    else:
+        row = obs.get if ready else None
+    if row is None:
+        raise RuntimeError(
+            f"observation {obs._name!r} was not delivered within {_OBSERVATION_TIMEOUT_S}s"
         )
-    )
+    return row
 
 
-def append_lineage(lineage: DataFrame, lineage_path: str) -> None:
+def append_lineage(rows: list[dict], lineage_path: str) -> None:
     """Append lineage rows to the parquet ``_lineage`` table (the engine's
     metrics sink; an Iceberg metadata table in production).
 
-    The frame is coerced to ``schema.LINEAGE_SCHEMA`` first — a drifted
+    Written in-process with pyarrow, no Spark job: one small parquet file
+    per call, hidden while written and renamed into place, so a reader
+    never sees a torn file.  Rows are coerced to ``schema.LINEAGE_SCHEMA`` first
+    (``committed_at`` defaults to now, extra keys are dropped) — a drifted
     producer (missing snapshot_id, wrong dtype) fails here, at the write
     boundary, not at some later reconciliation read."""
+    import uuid
+    from datetime import datetime, timezone
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
     from .schema import LINEAGE_SCHEMA
 
-    missing = {f.name for f in LINEAGE_SCHEMA.fields} - set(lineage.columns)
+    names = [f.name for f in LINEAGE_SCHEMA.fields]
+    now = datetime.now(timezone.utc)
+    rows = [{"committed_at": now, **r} for r in rows]
+    missing = {n for r in rows for n in names if r.get(n) is None}
     if missing:
-        raise ValueError(f"lineage frame missing columns: {sorted(missing)}")
-    from .schema import enforce_schema
+        raise ValueError(f"lineage rows missing columns: {sorted(missing)}")
+    table = pa.Table.from_pylist(
+        [{n: r[n] for n in names} for r in rows], schema=to_arrow_schema(LINEAGE_SCHEMA)
+    )
+    os.makedirs(lineage_path, exist_ok=True)
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    tmp = os.path.join(lineage_path, f".{name}.tmp")
+    pq.write_table(table, tmp)
+    os.replace(tmp, os.path.join(lineage_path, name))
 
-    enforce_schema(lineage, LINEAGE_SCHEMA).write.mode("append").parquet(lineage_path)
+
+def _snapshot_totals(spark, lineage_path: str) -> dict[tuple[str, int], tuple[int, int]]:
+    """(rows, checksum) summed per (stage, snapshot_id): one aggregation
+    over the whole lineage table, read under its declared schema."""
+    from .schema import LINEAGE_SCHEMA
+
+    if not os.path.isdir(lineage_path):
+        return {}
+    lin = spark.read.schema(LINEAGE_SCHEMA).parquet(lineage_path)
+    rows = (
+        lin.groupBy("stage", "snapshot_id")
+        .agg(F.sum("row_count").alias("r"), F.sum("checksum").alias("c"))
+        .collect()
+    )
+    return {(r["stage"], r["snapshot_id"]): (int(r["r"]), int(r["c"])) for r in rows}
+
+
+def stage_totals(spark, lineage_path: str) -> dict[str, tuple[int, int]]:
+    """Reconcile every stage at once: ``{stage: (rows, checksum)}`` at each
+    stage's LATEST snapshot — summing all history would double-count
+    recomputed stages."""
+    latest: dict[str, tuple[int, tuple[int, int]]] = {}
+    for (stage, snap), totals in _snapshot_totals(spark, lineage_path).items():
+        if stage not in latest or snap > latest[stage][0]:
+            latest[stage] = (snap, totals)
+    return {stage: totals for stage, (_, totals) in latest.items()}
 
 
 def total_from_lineage(
     spark, lineage_path: str, stage: str, snapshot_id: int | None = None
 ) -> tuple[int, int]:
-    """Reconcile a stage from its lineage rows: (total rows, total checksum).
-
-    Only the requested snapshot is summed (default: the stage's LATEST
-    snapshot) — summing all history would double-count recomputed stages.
-    """
-    lin = spark.read.parquet(lineage_path).filter(F.col("stage") == stage)
+    """One stage of :func:`stage_totals`: (total rows, total checksum) at the
+    requested snapshot (default: the stage's latest); (0, 0) if absent."""
     if snapshot_id is None:
-        latest = lin.agg(F.max("snapshot_id")).collect()[0][0]
-        if latest is None:
-            return 0, 0
-        snapshot_id = latest
-    row = (
-        lin.filter(F.col("snapshot_id") == snapshot_id)
-        .agg(F.sum("row_count").alias("r"), F.sum("checksum").alias("c"))
-        .collect()[0]
-    )
-    return int(row["r"] or 0), int(row["c"] or 0)
+        return stage_totals(spark, lineage_path).get(stage, (0, 0))
+    return _snapshot_totals(spark, lineage_path).get((stage, snapshot_id), (0, 0))

@@ -136,7 +136,7 @@ class MinHashIndex:
     def _batch_snapshot_df(self, spark: SparkSession, table: SnapshotTable, batch_id: str) -> DataFrame:
         for m in table.snapshots():
             if m.get("meta", {}).get("batch_id") == batch_id:
-                return spark.read.parquet(m["data_dir"])
+                return table.read_written(spark, m["snapshot_id"])
         raise KeyError(f"batch {batch_id!r} not committed to {table.root}")
 
     # -- core -----------------------------------------------------------

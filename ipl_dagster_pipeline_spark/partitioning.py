@@ -127,7 +127,7 @@ _WIDE_OPS = (
 )
 
 
-def fan_out_scan(df: DataFrame, target: int | None = None, force: bool = False) -> DataFrame:
+def fan_out_scan(df: DataFrame, target: int | None = None) -> DataFrame:
     """Spread an under-split source across the session's cores before a
     heavy per-row map stage (shingle/k-gram explode, portable hashing,
     ``from_xml`` decode).
@@ -148,17 +148,10 @@ def fan_out_scan(df: DataFrame, target: int | None = None, force: bool = False) 
     statistics over ``spark.sql.files.maxPartitionBytes``) — a plan-time
     metadata call, no job, ~25 ms.  It is only consulted on NARROW plans:
     a wide plan's parallelism is already shuffle-driven (and under AQE,
-    probing one would finalize/execute its stages).  Callers that KNOW a
-    post-shuffle frame under-provisions a following explode amplification
-    (AQE sizes partitions on pre-explode bytes) may pass ``force=True``
-    for an unconditional spread — measured a LOSS at every call site so
-    far (dedup_index.add_batch: 2× slower), so it is an escape hatch, not
-    a recommendation.
+    probing one would finalize/execute its stages).
     """
     spark = df.sparkSession
     target = target or spark.sparkContext.defaultParallelism
-    if force:
-        return df.repartition(target)
     try:
         plan = df._jdf.queryExecution().analyzed().toString()
         if any(op in plan for op in _WIDE_OPS):

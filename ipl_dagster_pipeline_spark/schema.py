@@ -44,9 +44,10 @@ CONV_DIM_SCHEMA = T.StructType(
     ]
 )
 
-# Per-stage lineage record (north rule: per-partition lineage + row-count /
-# checksum metrics; reference precedent: num_rows output metadata,
-# postgis_geopandas_io_manager.py:103).
+# Per-stage lineage record (north rule: lineage + row-count / checksum
+# metrics; reference precedent: num_rows output metadata,
+# postgis_geopandas_io_manager.py:103).  One row per commit, partition_id = -1;
+# per-file row counts live in the snapshot manifest (io.py).
 LINEAGE_SCHEMA = T.StructType(
     [
         T.StructField("stage", T.StringType(), False),

@@ -31,7 +31,7 @@ sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."
 from pyspark.sql import functions as F
 
 from ipl_dagster_pipeline_spark.checkpoint import CheckpointedPipeline
-from ipl_dagster_pipeline_spark.metrics import total_from_lineage
+from ipl_dagster_pipeline_spark.metrics import stage_totals
 from ipl_dagster_pipeline_spark.operators.cleaning import curate_keepers
 from ipl_dagster_pipeline_spark.operators.graph import duplicate_groups
 from ipl_dagster_pipeline_spark.operators.sampling import (
@@ -112,8 +112,9 @@ def main() -> None:
     if args.shards:
         pipe.stage("sharded", lambda: shuffle_shards(curated, "doc_id", args.shards))
 
+    totals = stage_totals(spark, pipe.lineage_path)
     for stage in pipe.completed_stages():
-        rows, checksum = total_from_lineage(spark, pipe.lineage_path, stage)
+        rows, checksum = totals.get(stage, (0, 0))
         print(f"stage={stage} rows={rows} checksum={checksum}")
     folds = {r["split"]: r["n"] for r in curated.groupBy("split").agg(F.count("*").alias("n")).collect()}
     print(f"curated corpus folds: {folds}")

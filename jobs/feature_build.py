@@ -23,7 +23,7 @@ sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."
 
 from ipl_dagster_pipeline_spark.checkpoint import CheckpointedPipeline
 from ipl_dagster_pipeline_spark.io import write_day_partitioned
-from ipl_dagster_pipeline_spark.metrics import total_from_lineage
+from ipl_dagster_pipeline_spark.metrics import stage_totals
 from ipl_dagster_pipeline_spark.plans.features import build_session_features, build_turn_features
 from ipl_dagster_pipeline_spark.session import get_spark
 from ipl_dagster_pipeline_spark.sources.transcripts import (
@@ -53,8 +53,9 @@ def main() -> None:
     publish_dir = os.path.join(args.output, "publish")
     write_day_partitioned(features, publish_dir)
 
+    totals = stage_totals(spark, pipe.lineage_path)
     for stage in pipe.completed_stages():
-        rows, checksum = total_from_lineage(spark, pipe.lineage_path, stage)
+        rows, checksum = totals.get(stage, (0, 0))
         print(f"stage={stage} rows={rows} checksum={checksum}")
     print(f"published → {publish_dir}")
 

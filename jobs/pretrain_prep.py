@@ -6,7 +6,7 @@
 One CheckpointedPipeline chaining the full suite — the Spark analog of the
 reference's whole-asset-graph run (pipeline/__init__.py:26-58: every asset
 materialized under one Definitions graph, resumable per asset).  Every stage
-is an atomic snapshot commit with per-partition lineage; a mid-pipeline
+is an atomic snapshot commit with a lineage row; a mid-pipeline
 crash resumes from the last committed stage, and the incremental dedup
 index's own batch-id idempotence makes the index stage crash-safe BETWEEN
 its internal batches too.
@@ -54,7 +54,7 @@ sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."
 from pyspark.sql import functions as F
 
 from ipl_dagster_pipeline_spark.checkpoint import CheckpointedPipeline
-from ipl_dagster_pipeline_spark.metrics import total_from_lineage
+from ipl_dagster_pipeline_spark.metrics import stage_totals
 from ipl_dagster_pipeline_spark.operators.cleaning import (
     contamination_flags,
     curate_keepers,
@@ -206,13 +206,14 @@ def main() -> None:
 
     features = pipe.stage("features", _features)
 
+    totals = stage_totals(spark, pipe.lineage_path)
     stage_rows = {}
     for stage in pipe.completed_stages():
-        rows, checksum = total_from_lineage(spark, pipe.lineage_path, stage)
+        rows, checksum = totals.get(stage, (0, 0))
         stage_rows[stage] = rows
         print(f"stage={stage} rows={rows} checksum={checksum}")
     folds = {r["fold"]: r["n"] for r in mixture.groupBy("fold").agg(F.count("*").alias("n")).collect()}
-    n_features = features.count()
+    n_features = stage_rows["features"]
     print(f"mixture folds: {folds}")
     print(f"trainer table: {n_features} rows")
 

@@ -46,7 +46,7 @@ from functools import reduce
 from pyspark.sql import functions as F
 
 from ipl_dagster_pipeline_spark.checkpoint import CheckpointedPipeline
-from ipl_dagster_pipeline_spark.metrics import total_from_lineage
+from ipl_dagster_pipeline_spark.metrics import stage_totals
 from ipl_dagster_pipeline_spark.operators.encoding import (
     count_encode_fit,
     count_encode_transform,
@@ -138,8 +138,9 @@ def main() -> None:
             lambda: sample_class_cap(train, "event_type", args.class_cap, "event_id"),
         )
 
+    totals = stage_totals(spark, pipe.lineage_path)
     for stage in pipe.completed_stages():
-        rows, checksum = total_from_lineage(spark, pipe.lineage_path, stage)
+        rows, checksum = totals.get(stage, (0, 0))
         print(f"stage={stage} rows={rows} checksum={checksum}")
     worst = (
         psi.groupBy("feature")
@@ -149,7 +150,7 @@ def main() -> None:
     )
     print("psi by feature:", {r["feature"]: round(r["psi"], 6) for r in worst})
     n_feat = len([c for c in features.columns if c not in ("event_id", "user_id", "event_type", "fold")])
-    print(f"feature table: {features.count()} rows x {n_feat} feature cols")
+    print(f"feature table: {totals['features'][0]} rows x {n_feat} feature cols")
 
 
 if __name__ == "__main__":

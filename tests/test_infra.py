@@ -11,12 +11,11 @@ from ipl_dagster_pipeline_spark.io import SnapshotTable, write_day_partitioned
 from ipl_dagster_pipeline_spark.metrics import (
     append_lineage,
     observe_stage,
-    partition_lineage,
+    stage_totals,
     total_from_lineage,
 )
 from ipl_dagster_pipeline_spark.partitioning import (
     detect_hot_keys,
-    repartition_sorted,
     salted_agg,
     with_salt,
 )
@@ -62,15 +61,38 @@ def test_salt_spreads_hot_key(small_transcripts):
 
 
 def test_lineage_reconciles_total(spark, small_transcripts, tmp_path):
+    """The same frame committed at 1 and at 7 partitions through
+    CheckpointedPipeline.stage: identical lineage totals (the checksum is
+    order- and partitioning-insensitive), one lineage row per commit, and
+    the manifest's per-file footer rows sum to the same count."""
+    pipe = CheckpointedPipeline(spark, str(tmp_path / "ckpt"))
+    pipe.stage("one", lambda: small_transcripts.coalesce(1))
+    pipe.stage("seven", lambda: small_transcripts.repartition(7))
+    totals = stage_totals(spark, pipe.lineage_path)
+    n = small_transcripts.count()
+    assert totals["one"] == totals["seven"] and totals["one"][0] == n
+    assert total_from_lineage(spark, pipe.lineage_path, "seven") == totals["seven"]
+    lin = spark.read.parquet(pipe.lineage_path).collect()
+    assert sorted(r.stage for r in lin) == ["one", "seven"]
+    assert {r.partition_id for r in lin} == {-1}
+    for stage, n_files in (("one", 1), ("seven", 7)):
+        files = pipe.table(stage).snapshots()[-1]["files"]
+        assert len(files) == n_files and sum(f["rows"] for f in files) == n
+
+
+def test_append_lineage_enforces_schema(spark, tmp_path):
+    """A drifted lineage producer fails at the write boundary."""
+    import pytest
+
     path = str(tmp_path / "lineage")
-    df = repartition_sorted(small_transcripts, n_partitions=4)
-    append_lineage(partition_lineage(df, "stage_a"), path)
-    rows, checksum = total_from_lineage(spark, path, "stage_a")
-    assert rows == small_transcripts.count()
-    # checksum is order/partitioning-insensitive: recompute with different layout
-    append_lineage(partition_lineage(small_transcripts.repartition(7), "stage_b"), path)
-    rows_b, checksum_b = total_from_lineage(spark, path, "stage_b")
-    assert rows_b == rows and checksum_b == checksum
+    with pytest.raises(ValueError, match="snapshot_id"):
+        append_lineage([{"stage": "s", "partition_id": -1, "row_count": 1, "checksum": 0}], path)
+    append_lineage(
+        [{"stage": "s", "snapshot_id": 3, "partition_id": -1, "row_count": 2, "checksum": 5, "x": 1}],
+        path,
+    )
+    assert total_from_lineage(spark, path, "s") == (2, 5)
+    assert total_from_lineage(spark, path, "s", snapshot_id=4) == (0, 0)
 
 
 def test_observe_stage_counts(small_transcripts):
