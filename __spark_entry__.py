@@ -10,509 +10,51 @@ Cross-engine hygiene (drivers hash values after sorting columns by name):
 * timestamps are emitted as epoch microseconds (``unix_micros`` / ``epoch_us``)
 * floating aggregates are rounded on BOTH sides
 * every computed column is aliased identically on both sides
+
+The queries live in the family modules of ``ipl_dagster_pipeline_spark.catalog``;
+each exports one ``CATALOG`` table of ``name -> (query, oracle SQL or None)``.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 
-from ipl_dagster_pipeline_spark.operators.asof import (
-    asof_join_broadcast_range,
-    asof_join_cogrouped,
+from ipl_dagster_pipeline_spark.catalog import (
+    documents,
+    embeddings,
+    features,
+    media,
+    relational,
+    sampling,
+    suites,
+    transcripts,
 )
-from ipl_dagster_pipeline_spark.operators.relational import (
-    anti_join,
-    broadcast_dim_join,
-    group_pivot_sum,
-    map_lookup,
-    semi_join,
-    temporal_validity_filter,
-    union_by_name,
+from ipl_dagster_pipeline_spark.catalog.common import CatalogEntry
+
+
+def _merge(*tables: dict[str, CatalogEntry]) -> dict[str, CatalogEntry]:
+    """Union of the family tables; a name defined in two tables is an error."""
+    merged: dict[str, CatalogEntry] = {}
+    for table in tables:
+        for name, row in table.items():
+            if name in merged:
+                raise ValueError(f"catalog entry {name!r} is defined twice")
+            merged[name] = row
+    return merged
+
+
+CATALOG = _merge(
+    transcripts.CATALOG,
+    relational.CATALOG,
+    sampling.CATALOG,
+    documents.CATALOG,
+    embeddings.CATALOG,
+    media.CATALOG,
+    features.CATALOG,
+    suites.CATALOG,
 )
-from ipl_dagster_pipeline_spark.operators.sessionize import (
-    session_aggregates,
-    sessionize,
-    sessionize_grouped,
-)
-from ipl_dagster_pipeline_spark.operators.windows import (
-    backfill,
-    rank_dedup,
-    with_lag_features,
-    with_lead_targets,
-    with_rolling_range,
-    with_rolling_rows,
-)
-from ipl_dagster_pipeline_spark.plans.features import build_turn_features
-from ipl_dagster_pipeline_spark.schema import TRANSCRIPT_SCHEMA, enforce_schema
-from ipl_dagster_pipeline_spark.sources.transcripts import (
-    CONV_DIM_CTE,
-    TOOL_DIM_CTE,
-    TRANSCRIPTS_CTE,
-    conv_dim_from_events,
-    tool_dim_from_events,
-    transcripts_from_events,
-)
-
-# ---------------------------------------------------------------------------
-# helpers
-# ---------------------------------------------------------------------------
-
-WITH_T = f"WITH {TRANSCRIPTS_CTE.strip()}"
-WITH_TD = f"WITH {TRANSCRIPTS_CTE.strip()}, {TOOL_DIM_CTE.strip()}"
-
-# The canonical window, as SQL text (stable tie-break on turn_idx).
-W_SQL = "PARTITION BY conv_id ORDER BY ts, turn_idx"
-# floor-seconds epoch, matching Spark's cast(timestamp as long)
-SECS = "CAST(floor(epoch(ts)) AS BIGINT)"
-
-
-def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def _ts_us(df: DataFrame, *cols: str) -> DataFrame:
-    """Replace timestamp cols by epoch-microsecond bigints named <col>_us."""
-    for c in cols:
-        # parquet written by pandas reads as TIMESTAMP_NTZ; session tz is UTC
-        # so the cast to TIMESTAMP is the identity instant
-        df = df.withColumn(f"{c}_us", F.unix_micros(F.col(c).cast("timestamp"))).drop(c)
-    return df
-
-
-# ---------------------------------------------------------------------------
-# transcript feature queries
-# ---------------------------------------------------------------------------
-
-
-def q_lag_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = transcripts_from_events(spark, sf_dir)
-    return _ts_us(with_lag_features(t), "ts")
-
-
-SQL_LAG = f"""{WITH_T}
-SELECT conv_id, turn_idx, role, text, tool,
-       lag(role) OVER ({W_SQL}) AS prev_role_1,
-       lag(tool) OVER ({W_SQL}) AS prev_tool_1,
-       {SECS} - lag({SECS}) OVER ({W_SQL}) AS ts_delta_s_1,
-       epoch_us(ts) AS ts_us
-FROM transcripts
-"""
-
-
-def q_lead_targets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = transcripts_from_events(spark, sf_dir)
-    return _ts_us(with_lead_targets(t), "ts")
-
-
-SQL_LEAD = f"""{WITH_T}
-SELECT conv_id, turn_idx, role, text, tool,
-       lead(role) OVER ({W_SQL}) AS lead_role_1,
-       lead(text) OVER ({W_SQL}) AS lead_text_1,
-       epoch_us(ts) AS ts_us
-FROM transcripts
-"""
-
-
-def q_rolling_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = transcripts_from_events(spark, sf_dir).withColumn("text_len", F.length("text").cast("long"))
-    out = with_rolling_rows(t, F.col("text_len"), k=5, out_prefix="chars")
-    return _ts_us(out.withColumn("chars_avg_5", F.round("chars_avg_5", 6)), "ts")
-
-
-SQL_ROLL_ROWS = f"""{WITH_T}
-SELECT conv_id, turn_idx, role, text, tool, epoch_us(ts) AS ts_us,
-       CAST(length(text) AS BIGINT) AS text_len,
-       CAST(sum(CAST(length(text) AS BIGINT)) OVER w5 AS BIGINT) AS chars_sum_5,
-       round(avg(CAST(length(text) AS BIGINT)) OVER w5, 6) AS chars_avg_5,
-       count(CAST(length(text) AS BIGINT)) OVER w5 AS chars_cnt_5
-FROM transcripts
-WINDOW w5 AS ({W_SQL} ROWS BETWEEN 4 PRECEDING AND CURRENT ROW)
-"""
-
-
-def q_rolling_range(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = transcripts_from_events(spark, sf_dir).withColumn("text_len", F.length("text").cast("long"))
-    return _ts_us(with_rolling_range(t, F.col("text_len"), seconds=3600, out_prefix="chars"), "ts")
-
-
-SQL_ROLL_RANGE = f"""{WITH_T}
-SELECT conv_id, turn_idx, role, text, tool, epoch_us(ts) AS ts_us,
-       CAST(length(text) AS BIGINT) AS text_len,
-       CAST(sum(CAST(length(text) AS BIGINT)) OVER wr AS BIGINT) AS chars_rsum_3600s,
-       count(CAST(length(text) AS BIGINT)) OVER wr AS chars_rcnt_3600s
-FROM transcripts
-WINDOW wr AS (PARTITION BY conv_id ORDER BY epoch_us(ts)
-              RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW)
-"""
-
-
-def q_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = transcripts_from_events(spark, sf_dir)
-    return _ts_us(backfill(t, "tool", out="tool_ffill"), "ts")
-
-
-SQL_BACKFILL = f"""{WITH_T}
-SELECT conv_id, turn_idx, role, text, tool, epoch_us(ts) AS ts_us,
-       last_value(tool IGNORE NULLS) OVER ({W_SQL}
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS tool_ffill
-FROM transcripts
-"""
-
-SQL_SESSIONIZE = f"""{WITH_T},
-g AS (
-    SELECT *, {SECS} - lag({SECS}) OVER ({W_SQL}) AS delta
-    FROM transcripts
-)
-SELECT conv_id, turn_idx, role, text, tool, epoch_us(ts) AS ts_us,
-       CAST(sum(CASE WHEN delta IS NULL OR delta > 1800 THEN 1 ELSE 0 END)
-            OVER ({W_SQL} ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS INTEGER)
-           AS session_id
-FROM g
-"""
-
-
-def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = transcripts_from_events(spark, sf_dir)
-    return _ts_us(sessionize(t, gap_seconds=1800), "ts")
-
-
-def q_sessionize_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same semantics via vectorized grouped-map pandas (Arrow) — north rule."""
-    t = transcripts_from_events(spark, sf_dir)
-    return _ts_us(sessionize_grouped(t, gap_seconds=1800), "ts")
-
-
-def q_session_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = transcripts_from_events(spark, sf_dir)
-    agg = session_aggregates(sessionize(t, gap_seconds=1800))
-    return _ts_us(agg, "session_start", "session_end")
-
-
-SQL_SESSION_AGG = f"""{WITH_T},
-g AS (
-    SELECT *, {SECS} - lag({SECS}) OVER ({W_SQL}) AS delta
-    FROM transcripts
-),
-s AS (
-    SELECT *, CAST(sum(CASE WHEN delta IS NULL OR delta > 1800 THEN 1 ELSE 0 END)
-              OVER ({W_SQL} ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS INTEGER)
-              AS session_id
-    FROM g
-)
-SELECT conv_id, session_id,
-       count(*) AS n_turns,
-       epoch_us(min(ts)) AS session_start_us,
-       epoch_us(max(ts)) AS session_end_us,
-       max({SECS}) - min({SECS}) AS span_s,
-       count(DISTINCT tool) AS n_tools,
-       CAST(sum(CASE WHEN role = 'user' THEN 1 ELSE 0 END) AS BIGINT) AS n_user_turns,
-       CAST(sum(length(text)) AS BIGINT) AS total_chars
-FROM s
-GROUP BY conv_id, session_id
-"""
-
-
-def q_asof_tool(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """As-of join via interval-broadcast (low-cardinality key path)."""
-    t = transcripts_from_events(spark, sf_dir)
-    d = tool_dim_from_events(spark, sf_dir)
-    out = asof_join_broadcast_range(t, d, key="tool", ts_col="ts")
-    return _ts_us(out, "ts", "matched_effective_from")
-
-
-def q_asof_cogrouped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same as-of semantics via cogrouped-map pandas merge_asof (sort-merge path)."""
-    t = transcripts_from_events(spark, sf_dir)
-    d = tool_dim_from_events(spark, sf_dir)
-    out = asof_join_cogrouped(t, d, key="tool", ts_col="ts")
-    return _ts_us(out, "ts", "matched_effective_from")
-
-
-SQL_ASOF = f"""{WITH_TD}
-SELECT t.conv_id, t.turn_idx, t.role, t.text, t.tool, epoch_us(t.ts) AS ts_us,
-       d.tool_category, d.cost_weight,
-       epoch_us(d.effective_from) AS matched_effective_from_us
-FROM transcripts t
-ASOF LEFT JOIN tool_dim d
-  ON t.tool = d.tool AND t.ts >= d.effective_from
-"""
-
-
-def q_dedup_turns(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = transcripts_from_events(spark, sf_dir)
-    out = rank_dedup(t, ["conv_id", "turn_idx"], [F.col("ts"), F.col("text")], keep="first")
-    return _ts_us(out, "ts")
-
-
-SQL_DEDUP = f"""{WITH_T}
-SELECT conv_id, turn_idx, role, text, tool, epoch_us(ts) AS ts_us
-FROM transcripts
-QUALIFY row_number() OVER (PARTITION BY conv_id, turn_idx ORDER BY ts, text) = 1
-"""
-
-
-def q_schema_enforce(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P1: coerce an eventish frame to the declared transcript schema —
-    missing cols created as typed nulls, extras dropped, dtypes cast."""
-    ev = _read(spark, sf_dir, "events")
-    raw = ev.select(
-        F.concat(F.lit("c"), F.col("user_id").cast("string")).alias("conv_id"),
-        F.col("event_id").alias("turn_idx"),  # long → must cast to int
-        F.col("props").alias("text"),
-        F.col("ts"),
-        F.col("value"),  # extra column → must be dropped
-    )
-    return _ts_us(enforce_schema(raw, TRANSCRIPT_SCHEMA), "ts")
-
-
-SQL_SCHEMA_ENFORCE = """
-SELECT 'c' || CAST(user_id AS VARCHAR) AS conv_id,
-       CAST(event_id AS INTEGER) AS turn_idx,
-       CAST(NULL AS VARCHAR) AS role,
-       props AS text,
-       CAST(NULL AS VARCHAR) AS tool,
-       epoch_us(ts) AS ts_us
-FROM events
-"""
-
-
-def q_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end feature build: as-of dim join + lag + rolling + backfill +
-    sessionize, all PIT-correct."""
-    t = transcripts_from_events(spark, sf_dir)
-    d = tool_dim_from_events(spark, sf_dir)
-    out = build_turn_features(t, d)
-    out = out.withColumn("chars_avg_5", F.round("chars_avg_5", 6))
-    return _ts_us(out, "ts", "matched_effective_from")
-
-
-SQL_FLAGSHIP = f"""{WITH_TD},
-j AS (
-    SELECT t.*, CAST(length(t.text) AS BIGINT) AS text_len,
-           d.tool_category, d.cost_weight, d.effective_from AS matched_effective_from
-    FROM transcripts t
-    ASOF LEFT JOIN tool_dim d ON t.tool = d.tool AND t.ts >= d.effective_from
-),
-g AS (
-    SELECT *, {SECS} - lag({SECS}) OVER ({W_SQL}) AS delta
-    FROM j
-)
-SELECT conv_id, turn_idx, role, text, tool, tool_category, cost_weight, text_len,
-       epoch_us(ts) AS ts_us, epoch_us(matched_effective_from) AS matched_effective_from_us,
-       lag(role) OVER ({W_SQL}) AS prev_role_1,
-       lag(tool) OVER ({W_SQL}) AS prev_tool_1,
-       {SECS} - lag({SECS}) OVER ({W_SQL}) AS ts_delta_s_1,
-       CAST(sum(text_len) OVER w5 AS BIGINT) AS chars_sum_5,
-       round(avg(text_len) OVER w5, 6) AS chars_avg_5,
-       count(text_len) OVER w5 AS chars_cnt_5,
-       CAST(sum(text_len) OVER wr AS BIGINT) AS chars_rsum_3600s,
-       count(text_len) OVER wr AS chars_rcnt_3600s,
-       last_value(tool IGNORE NULLS) OVER ({W_SQL}
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS tool_ffill,
-       CAST(sum(CASE WHEN delta IS NULL OR delta > 1800 THEN 1 ELSE 0 END)
-            OVER ({W_SQL} ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS INTEGER)
-           AS session_id
-FROM g
-WINDOW w5 AS ({W_SQL} ROWS BETWEEN 4 PRECEDING AND CURRENT ROW),
-       wr AS (PARTITION BY conv_id ORDER BY epoch_us(ts)
-              RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW)
-"""
-
-
-# ---------------------------------------------------------------------------
-# relational queries over the TPC-H-ish tables
-# ---------------------------------------------------------------------------
-
-
-def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q1-style hash aggregate (bench headline q1)."""
-    li = _read(spark, sf_dir, "lineitem")
-    return (
-        li.filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
-            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("sum_disc_price"),
-            F.round(F.avg("l_quantity"), 4).alias("avg_qty"),
-            F.round(F.avg("l_discount"), 4).alias("avg_disc"),
-            F.count("*").alias("count_order"),
-        )
-    )
-
-
-SQL_PRICING = """
-SELECT l_returnflag, l_linestatus,
-       round(sum(l_quantity), 2) AS sum_qty,
-       round(sum(l_extendedprice), 2) AS sum_base_price,
-       round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
-       round(avg(l_quantity), 4) AS avg_qty,
-       round(avg(l_discount), 4) AS avg_disc,
-       count(*) AS count_order
-FROM lineitem
-WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-GROUP BY l_returnflag, l_linestatus
-"""
-
-
-def q_broadcast_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J1/J2: fact×dim broadcast chain orders→customer→nation→region."""
-    orders = _read(spark, sf_dir, "orders")
-    cust = _read(spark, sf_dir, "customer")
-    nation = _read(spark, sf_dir, "nation")
-    region = _read(spark, sf_dir, "region")
-    enriched = broadcast_dim_join(
-        orders, cust.select("c_custkey", "c_name", "c_nationkey"), on=[orders.o_custkey == cust.c_custkey]
-    )
-    enriched = broadcast_dim_join(enriched, nation, on=[F.col("c_nationkey") == nation.n_nationkey])
-    enriched = broadcast_dim_join(enriched, region, on=[F.col("n_regionkey") == region.r_regionkey])
-    return enriched.groupBy("r_name", "n_name").agg(
-        F.count("*").alias("n_orders"),
-        F.round(F.sum("o_totalprice"), 2).alias("total_price"),
-    )
-
-
-SQL_BROADCAST_ENRICH = """
-SELECT r_name, n_name, count(*) AS n_orders, round(sum(o_totalprice), 2) AS total_price
-FROM orders
-JOIN customer ON o_custkey = c_custkey
-JOIN nation ON c_nationkey = n_nationkey
-JOIN region ON n_regionkey = r_regionkey
-GROUP BY r_name, n_name
-"""
-
-
-def q_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J3: customers with no orders (left-anti)."""
-    cust = _read(spark, sf_dir, "customer")
-    orders = _read(spark, sf_dir, "orders").select(F.col("o_custkey").alias("c_custkey"))
-    return anti_join(cust, orders, on="c_custkey").select("c_custkey", "c_name", "c_mktsegment")
-
-
-SQL_ANTI = """
-SELECT c_custkey, c_name, c_mktsegment
-FROM customer
-WHERE c_custkey NOT IN (SELECT o_custkey FROM orders)
-"""
-
-
-def q_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J4: parts that appear in at least one lineitem (left-semi)."""
-    part = _read(spark, sf_dir, "part")
-    li = _read(spark, sf_dir, "lineitem").select(F.col("l_partkey").alias("p_partkey"))
-    return semi_join(part, li, on="p_partkey").select("p_partkey", "p_name", "p_brand")
-
-
-SQL_SEMI = """
-SELECT p_partkey, p_name, p_brand
-FROM part
-WHERE p_partkey IN (SELECT l_partkey FROM lineitem)
-"""
-
-
-def q_pivot_status(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A1: group-sum + pivot with explicit pivot domain (no distinct pass)."""
-    orders = _read(spark, sf_dir, "orders")
-    out = group_pivot_sum(
-        orders, ["o_orderpriority"], "o_orderstatus", "o_totalprice", pivot_values=["F", "O", "P"]
-    )
-    return out.select(
-        "o_orderpriority",
-        F.round(F.coalesce(F.col("F"), F.lit(0.0)), 2).alias("total_f"),
-        F.round(F.coalesce(F.col("O"), F.lit(0.0)), 2).alias("total_o"),
-        F.round(F.coalesce(F.col("P"), F.lit(0.0)), 2).alias("total_p"),
-    )
-
-
-SQL_PIVOT = """
-SELECT o_orderpriority,
-       round(coalesce(sum(CASE WHEN o_orderstatus = 'F' THEN o_totalprice END), 0), 2) AS total_f,
-       round(coalesce(sum(CASE WHEN o_orderstatus = 'O' THEN o_totalprice END), 0), 2) AS total_o,
-       round(coalesce(sum(CASE WHEN o_orderstatus = 'P' THEN o_totalprice END), 0), 2) AS total_p
-FROM orders
-GROUP BY o_orderpriority
-"""
-
-
-def q_union_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """U1: union-by-name across differently-shaped frames."""
-    cust = _read(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("entity_key"),
-        F.col("c_name").alias("entity_name"),
-        F.col("c_acctbal").alias("acctbal"),
-        F.lit("customer").alias("kind"),
-    )
-    supp = _read(spark, sf_dir, "supplier").select(
-        F.col("s_suppkey").alias("entity_key"),
-        F.col("s_name").alias("entity_name"),
-        F.col("s_acctbal").alias("acctbal"),
-        F.lit("supplier").alias("kind"),
-    )
-    return union_by_name([cust, supp])
-
-
-SQL_UNION = """
-SELECT c_custkey AS entity_key, c_name AS entity_name, c_acctbal AS acctbal, 'customer' AS kind
-FROM customer
-UNION ALL
-SELECT s_suppkey, s_name, s_acctbal, 'supplier' FROM supplier
-"""
-
-
-def q_temporal_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P5: temporal validity filter (drop rows expired before as_of)."""
-    ev = _read(spark, sf_dir, "events")
-    out = temporal_validity_filter(ev, "ts", "2024-01-15 00:00:00")
-    return _ts_us(out.select("event_id", "user_id", "event_type", "value", "ts"), "ts")
-
-
-SQL_TEMPORAL = """
-SELECT event_id, user_id, event_type, value, epoch_us(ts) AS ts_us
-FROM events
-WHERE ts >= TIMESTAMP '2024-01-15 00:00:00'
-"""
-
-
-def q_map_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F9: dict-lookup mapping with default (INCIDENT_TYPE_MAPPPING analog)."""
-    ev = _read(spark, sf_dir, "events")
-    mapping = {"click": "INTERACTION", "view": "INTERACTION", "purchase": "CONVERSION"}
-    return ev.groupBy(
-        map_lookup(F.col("event_type"), mapping, "OTHER").alias("event_class")
-    ).agg(F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("total_value"))
-
-
-SQL_MAP_LOOKUP = """
-SELECT CASE WHEN event_type = 'click' THEN 'INTERACTION'
-            WHEN event_type = 'view' THEN 'INTERACTION'
-            WHEN event_type = 'purchase' THEN 'CONVERSION'
-            ELSE 'OTHER' END AS event_class,
-       count(*) AS n, round(sum(value), 2) AS total_value
-FROM events
-GROUP BY 1
-"""
-
-
-def q_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S5-style nested payload decode: parse the JSON props column."""
-    ev = _read(spark, sf_dir, "events")
-    return (
-        ev.withColumn("k", F.get_json_object("props", "$.k").cast("int"))
-        .groupBy("event_type")
-        .agg(F.count("*").alias("n"), F.sum("k").alias("sum_k"), F.max("k").alias("max_k"))
-    )
-
-
-SQL_JSON = """
-SELECT event_type, count(*) AS n,
-       CAST(sum(CAST(json_extract_string(props, '$.k') AS INTEGER)) AS BIGINT) AS sum_k,
-       max(CAST(json_extract_string(props, '$.k') AS INTEGER)) AS max_k
-FROM events
-GROUP BY event_type
-"""
 
 
 # ---------------------------------------------------------------------------
@@ -522,2185 +64,8 @@ GROUP BY event_type
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: end-to-end PIT feature build on sf0.001."""
-    return q_flagship(spark, "/root/testdata/sf0.001")
+    return transcripts.q_flagship(spark, "/root/testdata/sf0.001")
 
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
-        # windowed features (SURVEY §2.6)
-        "lag_features": q_lag_features,
-        "lead_targets": q_lead_targets,
-        "rolling_rows": q_rolling_rows,
-        "rolling_range": q_rolling_range,
-        "backfill_ffill": q_backfill,
-        # sessionization (W5) — both physical paths, same oracle
-        "sessionize_window": q_sessionize,
-        "sessionize_grouped": q_sessionize_grouped,
-        "session_aggregates": q_session_agg,
-        # as-of join (J5) — both physical paths, same oracle
-        "asof_broadcast_range": q_asof_tool,
-        "asof_cogrouped": q_asof_cogrouped,
-        # dedup / schema (P1/P7)
-        "dedup_turns": q_dedup_turns,
-        "schema_enforce": q_schema_enforce,
-        # flagship end-to-end
-        "flagship_features": q_flagship,
-        # relational core (§2.3-2.5, §2.7-2.8)
-        "q1_pricing_summary": q_pricing_summary,
-        "broadcast_enrich": q_broadcast_enrich,
-        "anti_join_customers": q_anti_join,
-        "semi_join_parts": q_semi_join,
-        "pivot_order_status": q_pivot_status,
-        "union_entities": q_union_entities,
-        "temporal_filter": q_temporal_filter,
-        "map_lookup_classes": q_map_lookup,
-        "json_extract_props": q_json_extract,
-    }
-
-
-def oracle_sql() -> dict[str, str]:
-    return {
-        "lag_features": SQL_LAG,
-        "lead_targets": SQL_LEAD,
-        "rolling_rows": SQL_ROLL_ROWS,
-        "rolling_range": SQL_ROLL_RANGE,
-        "backfill_ffill": SQL_BACKFILL,
-        "sessionize_window": SQL_SESSIONIZE,
-        "sessionize_grouped": SQL_SESSIONIZE,
-        "session_aggregates": SQL_SESSION_AGG,
-        "asof_broadcast_range": SQL_ASOF,
-        "asof_cogrouped": SQL_ASOF,
-        "dedup_turns": SQL_DEDUP,
-        "schema_enforce": SQL_SCHEMA_ENFORCE,
-        "flagship_features": SQL_FLAGSHIP,
-        "q1_pricing_summary": SQL_PRICING,
-        "broadcast_enrich": SQL_BROADCAST_ENRICH,
-        "anti_join_customers": SQL_ANTI,
-        "semi_join_parts": SQL_SEMI,
-        "pivot_order_status": SQL_PIVOT,
-        "union_entities": SQL_UNION,
-        "temporal_filter": SQL_TEMPORAL,
-        "map_lookup_classes": SQL_MAP_LOOKUP,
-        "json_extract_props": SQL_JSON,
-    }
-
-
-# ---------------------------------------------------------------------------
-# training-data ops: dedup / similarity / text analysis (documents, embeddings)
-# ---------------------------------------------------------------------------
-
-from ipl_dagster_pipeline_spark.operators.similarity import cosine_topk_bruteforce, lsh_topk
-from ipl_dagster_pipeline_spark.operators.text_dedup import (
-    exact_dedup,
-    minhash_lsh_dedup,
-    simhash,
-)
-from ipl_dagster_pipeline_spark.operators.textstats import (
-    with_fingerprint,
-    with_lang_id,
-    with_quality_scores,
-    with_token_counts,
-)
-
-# shared CTE: normalized text + distinct 5-char shingles (mirrors
-# text_dedup.normalize_text / shingles exactly)
-SHINGLE_CTE = """
-norm AS (
-    SELECT doc_id, trim(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS norm
-    FROM documents
-),
-sh AS (
-    SELECT DISTINCT doc_id, substring(norm, i, 5) AS s
-    FROM (SELECT doc_id, norm,
-                 unnest(generate_series(1, greatest(length(norm) - 4, 1))) AS i
-          FROM norm)
-)
-"""
-
-
-def _duck_hash(seed: int, expr: str) -> str:
-    """DuckDB text of text_dedup.portable_hash."""
-    return f"CAST(concat('0x', substring(md5(concat('{seed}:', {expr})), 1, 15)) AS BIGINT)"
-
-
-def q_doc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _read(spark, sf_dir, "documents")
-    return with_token_counts(docs).select("doc_id", "lang", "source", "n_ws_tokens", "n_re_tokens")
-
-
-SQL_DOC_TOKENS = r"""
-SELECT doc_id, lang, source,
-       CAST(length(regexp_extract_all(text, '\S+')) AS INTEGER) AS n_ws_tokens,
-       CAST(length(regexp_extract_all(text, '[A-Za-z0-9_]+|[^A-Za-z0-9_\s]')) AS INTEGER) AS n_re_tokens
-FROM documents
-"""
-
-
-def q_doc_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _read(spark, sf_dir, "documents")
-    return with_quality_scores(docs).select(
-        "doc_id", "n_chars", "alpha_ratio", "punct_ratio", "mean_word_len", "stopword_ratio"
-    )
-
-
-SQL_DOC_QUALITY = r"""
-SELECT doc_id,
-       CAST(length(text) AS BIGINT) AS n_chars,
-       round(length(regexp_extract_all(text, '[A-Za-z]')) / greatest(length(text), 1.0), 6) AS alpha_ratio,
-       round(length(regexp_extract_all(text, '[^A-Za-z0-9\s]')) / greatest(length(text), 1.0), 6) AS punct_ratio,
-       round(length(regexp_extract_all(text, '[A-Za-z]'))
-             / greatest(length(regexp_extract_all(text, '\S+')), 1.0), 6) AS mean_word_len,
-       round(length(regexp_extract_all(lower(text), '\b(the|and|of|to|in|is|that|for|with)\b'))
-             / greatest(length(regexp_extract_all(text, '\S+')), 1.0), 6) AS stopword_ratio
-FROM documents
-"""
-
-
-def q_doc_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _read(spark, sf_dir, "documents")
-    return with_lang_id(docs).select(
-        "doc_id", "lang", "score_en", "score_de", "score_es", "score_fr", "score_zh", "lang_pred"
-    )
-
-
-SQL_DOC_LANG = r"""
-WITH s AS (
-    SELECT doc_id, lang,
-        CAST(length(regexp_extract_all(lower(text), '\b(the|and|of|to|in|is|that|for|with)\b')) AS INTEGER) AS score_en,
-        CAST(length(regexp_extract_all(lower(text), '\b(der|die|das|und|ist|nicht|ein|mit|zu)\b')) AS INTEGER) AS score_de,
-        CAST(length(regexp_extract_all(lower(text), '\b(el|la|los|las|que|es|una|por|para)\b')) AS INTEGER) AS score_es,
-        CAST(length(regexp_extract_all(lower(text), '\b(le|les|des|est|une|dans|pour|sur|avec)\b')) AS INTEGER) AS score_fr,
-        CAST(length(regexp_extract_all(text, '[\x{4e00}-\x{9fff}]')) AS INTEGER) AS score_zh
-    FROM documents
-)
-SELECT doc_id, lang, score_en, score_de, score_es, score_fr, score_zh,
-       CASE WHEN greatest(score_en, score_de, score_es, score_fr, score_zh) = 0 THEN 'unknown'
-            WHEN score_zh = greatest(score_en, score_de, score_es, score_fr, score_zh) THEN 'zh'
-            WHEN score_en = greatest(score_en, score_de, score_es, score_fr, score_zh) THEN 'en'
-            WHEN score_de = greatest(score_en, score_de, score_es, score_fr, score_zh) THEN 'de'
-            WHEN score_es = greatest(score_en, score_de, score_es, score_fr, score_zh) THEN 'es'
-            ELSE 'fr' END AS lang_pred
-FROM s
-"""
-
-
-def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _read(spark, sf_dir, "documents")
-    return with_fingerprint(docs).select("doc_id", "fp", "norm_len")
-
-
-SQL_DOC_FP = r"""
-SELECT doc_id,
-       md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fp,
-       CAST(length(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS BIGINT) AS norm_len
-FROM documents
-"""
-
-
-def q_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _read(spark, sf_dir, "documents")
-    return exact_dedup(docs)
-
-
-SQL_EXACT_DEDUP = r"""
-SELECT md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fp,
-       min(doc_id) AS keep_id, count(*) AS n_copies
-FROM documents
-GROUP BY 1
-"""
-
-
-def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _read(spark, sf_dir, "documents")
-    return simhash(docs)
-
-
-_SIMHASH_BITS = ",\n        ".join(
-    f"sum(CASE WHEN (th >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS b{b}" for b in range(16)
-)
-_SIMHASH_SIG = " + ".join(f"CASE WHEN b{b} > 0 THEN {1 << b} ELSE 0 END" for b in range(16))
-SQL_SIMHASH = f"""
-WITH tok AS (
-    SELECT DISTINCT doc_id, t
-    FROM (SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS t FROM documents)
-),
-th AS (SELECT doc_id, {_duck_hash(99, 't')} AS th FROM tok),
-bits AS (SELECT doc_id, {_SIMHASH_BITS} FROM th GROUP BY doc_id)
-SELECT doc_id, CAST({_SIMHASH_SIG} AS BIGINT) AS simhash FROM bits
-"""
-
-
-def q_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _read(spark, sf_dir, "documents")
-    return minhash_lsh_dedup(docs, threshold=0.5)
-
-
-from ipl_dagster_pipeline_spark.operators.text_dedup import MINHASH_P, minhash_params
-
-# one md5 base per shingle + affine mixes — EXACTLY text_dedup.minhash_signatures
-_MH_BASE = "(CAST(concat('0x', substring(md5(s), 1, 15)) AS BIGINT) % {p})".format(p=MINHASH_P)
-_MH_MINS = ", ".join(
-    "min((base * {a} + {b}) % {p}) AS h{i}".format(a=minhash_params(i)[0], b=minhash_params(i)[1], p=MINHASH_P, i=i)
-    for i in range(16)
-)
-_MH_BANDS = "\n    UNION ALL\n    ".join(
-    "SELECT doc_id, {b} AS band, concat({cols}) AS bucket FROM mh".format(
-        b=b, cols=", '_', ".join(f"CAST(h{4*b + r} AS VARCHAR)" for r in range(4))
-    )
-    for b in range(4)
-)
-SQL_MINHASH = f"""
-WITH {SHINGLE_CTE.strip()},
-mhb AS (SELECT doc_id, {_MH_BASE} AS base FROM sh),
-mh AS (SELECT doc_id, {_MH_MINS} FROM mhb GROUP BY doc_id),
-bands AS (
-    {_MH_BANDS}
-),
-cand AS (
-    SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-    FROM bands a JOIN bands b
-      ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id
-),
-cnt AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-inter AS (
-    SELECT c.doc_a, c.doc_b, count(*) AS n_inter
-    FROM cand c
-    JOIN sh a ON a.doc_id = c.doc_a
-    JOIN sh b ON b.doc_id = c.doc_b AND b.s = a.s
-    GROUP BY 1, 2
-)
-SELECT i.doc_a, i.doc_b,
-       round(i.n_inter / (ca.n + cb.n - i.n_inter), 6) AS jaccard
-FROM inter i
-JOIN cnt ca ON ca.doc_id = i.doc_a
-JOIN cnt cb ON cb.doc_id = i.doc_b
-WHERE i.n_inter / (ca.n + cb.n - i.n_inter) >= 0.5
-"""
-
-
-def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _read(spark, sf_dir, "embeddings")
-    return cosine_topk_bruteforce(emb, query_ids=list(range(10)), k=5)
-
-
-SQL_COSINE_TOPK = """
-WITH v AS (
-    SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings
-),
-p AS (
-    SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-           round(list_dot_product(q.v, c.v)
-                 / (sqrt(list_dot_product(q.v, q.v)) * sqrt(list_dot_product(c.v, c.v))), 6) AS cos
-    FROM v q JOIN v c ON c.vec_id != q.vec_id
-    WHERE q.vec_id < 10
-)
-SELECT query_id, neighbor_id, cos,
-       CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS INTEGER) AS rnk
-FROM p
-QUALIFY rnk <= 5
-"""
-
-
-def q_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANN scale path: hyperplane-LSH buckets + exact re-rank.
-
-    Approximate by design → rows-only check, but the result carries a
-    driver-visible invariant: each ANN hit is joined against the exact
-    brute-force neighbor at the same rank and ``within_bf_bound`` must be
-    true on every row (an ANN cosine can never exceed the exact cosine at
-    equal rank — LSH searches a subset).  Recall band is asserted in
-    tests/test_trainingdata.py."""
-    emb = _read(spark, sf_dir, "embeddings")
-    qids = list(range(10))
-    ann = lsh_topk(emb, query_ids=qids, k=5)
-    bf = cosine_topk_bruteforce(emb, query_ids=qids, k=5).select(
-        "query_id", "rnk", F.col("cos").alias("bf_cos")
-    )
-    return ann.join(bf, ["query_id", "rnk"], "left").withColumn(
-        "within_bf_bound", F.col("cos") <= F.col("bf_cos") + F.lit(1e-9)
-    )
-
-
-def q_asof_conv_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """As-of union-fill path on the HIGH-cardinality key (conv_id)."""
-    from ipl_dagster_pipeline_spark.operators.asof import asof_join_union_fill
-
-    t = transcripts_from_events(spark, sf_dir)
-    d = conv_dim_from_events(spark, sf_dir)
-    out = asof_join_union_fill(t, d, key="conv_id", ts_col="ts", dim_ts="snapshot_ts")
-    return _ts_us(out, "ts", "matched_effective_from")
-
-
-SQL_ASOF_CONV = f"""WITH {TRANSCRIPTS_CTE.strip()}, {CONV_DIM_CTE.strip()}
-SELECT t.conv_id, t.turn_idx, t.role, t.text, t.tool, epoch_us(t.ts) AS ts_us,
-       d.cohort, epoch_us(d.snapshot_ts) AS matched_effective_from_us
-FROM transcripts t
-ASOF LEFT JOIN conv_dim d
-  ON t.conv_id = d.conv_id AND t.ts >= d.snapshot_ts
-"""
-
-
-def q_top3_turns(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ipl_dagster_pipeline_spark.operators.windows import top_k_per_group
-
-    t = transcripts_from_events(spark, sf_dir)
-    out = top_k_per_group(t, ["conv_id"], [F.col("ts"), F.col("turn_idx")], k=3)
-    return _ts_us(out, "ts")
-
-
-SQL_TOP3 = f"""{WITH_T}
-SELECT conv_id, turn_idx, role, text, tool, epoch_us(ts) AS ts_us
-FROM transcripts
-QUALIFY row_number() OVER ({W_SQL}) <= 3
-"""
-
-
-_EXTRA_QUERIES = {
-    "doc_token_counts": q_doc_tokens,
-    "doc_quality_scores": q_doc_quality,
-    "doc_lang_id": q_doc_lang_id,
-    "doc_fingerprint": q_doc_fingerprint,
-    "doc_exact_dedup": q_exact_dedup,
-    "doc_simhash": q_simhash,
-    "doc_minhash_lsh_pairs": q_minhash_pairs,
-    "emb_cosine_topk": q_cosine_topk,
-    "emb_lsh_topk": q_lsh_topk,
-    "asof_conv_dim_union_fill": q_asof_conv_dim,
-    "top3_turns_per_conv": q_top3_turns,
-}
-
-_EXTRA_ORACLES = {
-    "doc_token_counts": SQL_DOC_TOKENS,
-    "doc_quality_scores": SQL_DOC_QUALITY,
-    "doc_lang_id": SQL_DOC_LANG,
-    "doc_fingerprint": SQL_DOC_FP,
-    "doc_exact_dedup": SQL_EXACT_DEDUP,
-    "doc_simhash": SQL_SIMHASH,
-    "doc_minhash_lsh_pairs": SQL_MINHASH,
-    "emb_cosine_topk": SQL_COSINE_TOPK,
-    # emb_lsh_topk: intentionally no oracle (rows-only) — approximate op
-    "asof_conv_dim_union_fill": SQL_ASOF_CONV,
-    "top3_turns_per_conv": SQL_TOP3,
-}
-
-_BASE_QUERIES = queries
-_BASE_ORACLES = oracle_sql
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _BASE_QUERIES()
-    out.update(_EXTRA_QUERIES)
-    return out
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _BASE_ORACLES()
-    out.update(_EXTRA_ORACLES)
-    return out
-
-
-# ---------------------------------------------------------------------------
-# batch 3: salting equivalence, latest-per-key, scalar functions, batch windows
-# ---------------------------------------------------------------------------
-
-from ipl_dagster_pipeline_spark.functions.scalars import concat_trim
-from ipl_dagster_pipeline_spark.partitioning import salted_agg
-
-
-def q_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-phase SALTED aggregation — the oracle is the plain GROUP BY, so the
-    driver gate itself proves salting preserves semantics (SURVEY §4 skew)."""
-    t = transcripts_from_events(spark, sf_dir)
-    return salted_agg(
-        t,
-        key="conv_id",
-        aggs={"n_turns": F.count("*"), "total_chars": F.sum(F.length("text"))},
-        merges={"n_turns": F.sum("n_turns"), "total_chars": F.sum("total_chars")},
-        n_salts=8,
-        hot_keys=["c1", "c2", "c3"],
-    )
-
-
-SQL_SALTED = f"""{WITH_T}
-SELECT conv_id, count(*) AS n_turns,
-       CAST(sum(length(text)) AS BIGINT) AS total_chars
-FROM transcripts
-GROUP BY conv_id
-"""
-
-
-def q_latest_event_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A3: latest record per key via deterministic rank (keep-last dedup)."""
-    ev = _read(spark, sf_dir, "events")
-    out = rank_dedup(ev, ["user_id"], [F.col("ts"), F.col("event_id")], keep="last")
-    return _ts_us(out.select("user_id", "event_id", "event_type", "ts"), "ts")
-
-
-SQL_LATEST_EVENT = """
-SELECT user_id, event_id, event_type, epoch_us(ts) AS ts_us
-FROM events
-QUALIFY row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) = 1
-"""
-
-
-def q_distinct_group_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A2: distinct-group count + single-group detection (reference picks a
-    default vehicle type when only one form factor exists, lamassu.py:129-135)."""
-    ev = _read(spark, sf_dir, "events")
-    return ev.groupBy("user_id").agg(
-        F.count_distinct("event_type").alias("n_types"),
-        (F.count_distinct("event_type") == 1).alias("single_type"),
-        F.min("event_type").alias("first_type"),
-    )
-
-
-SQL_DISTINCT_PROBE = """
-SELECT user_id,
-       count(DISTINCT event_type) AS n_types,
-       count(DISTINCT event_type) = 1 AS single_type,
-       min(event_type) AS first_type
-FROM events
-GROUP BY user_id
-"""
-
-
-def q_word_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S3/U-explode: nested array normalize — word frequencies over documents."""
-    docs = _read(spark, sf_dir, "documents")
-    return (
-        docs.select(F.explode(F.split(F.col("text"), " ")).alias("word"))
-        .filter(F.length("word") > 0)
-        .groupBy("word")
-        .agg(F.count("*").alias("n"))
-    )
-
-
-SQL_WORDS = """
-SELECT word, count(*) AS n
-FROM (SELECT unnest(string_split(text, ' ')) AS word FROM documents)
-WHERE length(word) > 0
-GROUP BY word
-"""
-
-
-def q_scalar_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F3/F4/F5/F7 scalar parity: concat+trim, rlike, regexp_replace, contains."""
-    cust = _read(spark, sf_dir, "customer")
-    return cust.select(
-        "c_custkey",
-        concat_trim(F.col("c_name"), F.col("c_mktsegment")).alias("display_name"),
-        F.col("c_name").rlike("^Customer#0*1").alias("is_first_block"),
-        F.regexp_replace(F.col("c_name"), "[0-9]+", "#").alias("name_shape"),
-        F.col("c_mktsegment").contains("MACH").alias("is_machinery"),
-    )
-
-
-SQL_SCALARS = """
-SELECT c_custkey,
-       trim(concat_ws(' ', c_name, c_mktsegment)) AS display_name,
-       regexp_matches(c_name, '^Customer#0*1') AS is_first_block,
-       regexp_replace(c_name, '[0-9]+', '#', 'g') AS name_shape,
-       contains(c_mktsegment, 'MACH') AS is_machinery
-FROM customer
-"""
-
-
-def q_hourly_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch tumbling window (F.window) — per-hour per-type event stats."""
-    ev = _read(spark, sf_dir, "events")
-    out = (
-        ev.groupBy(F.window(F.col("ts").cast("timestamp"), "1 hour").alias("w"), "event_type")
-        .agg(F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("total_value"))
-        .select(F.col("w.start").alias("hour_start"), "event_type", "n", "total_value")
-    )
-    return _ts_us(out, "hour_start")
-
-
-SQL_HOURLY = """
-SELECT epoch_us(date_trunc('hour', ts)) AS hour_start_us, event_type,
-       count(*) AS n, round(sum(value), 2) AS total_value
-FROM events
-GROUP BY 1, 2
-"""
-
-
-def q_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q5-style multi-join aggregate (bench headline)."""
-    li = _read(spark, sf_dir, "lineitem")
-    orders = _read(spark, sf_dir, "orders")
-    cust = _read(spark, sf_dir, "customer")
-    nation = _read(spark, sf_dir, "nation")
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
-        .filter(F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
-        .groupBy("n_name")
-        .agg(
-            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("revenue"),
-            F.count("*").alias("n_items"),
-        )
-    )
-
-
-SQL_REVENUE = """
-SELECT n_name,
-       round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
-       count(*) AS n_items
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-JOIN nation ON c_nationkey = n_nationkey
-WHERE o_orderdate >= TIMESTAMP '1996-01-01'
-GROUP BY n_name
-"""
-
-
-def q_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q3-style: top revenue among unshipped orders."""
-    li = _read(spark, sf_dir, "lineitem")
-    orders = _read(spark, sf_dir, "orders")
-    cust = _read(spark, sf_dir, "customer")
-    cutoff = F.lit("1995-03-15").cast("timestamp")
-    out = (
-        cust.filter(F.col("c_mktsegment") == "BUILDING")
-        .join(orders, F.col("c_custkey") == orders.o_custkey)
-        .filter(F.col("o_orderdate") < cutoff)
-        .join(li, F.col("o_orderkey") == li.l_orderkey)
-        .filter(F.col("l_shipdate") > cutoff)
-        .groupBy("o_orderkey", "o_orderdate", "o_orderpriority")
-        # per-row cents as BIGINT, exact integer sum — immune to the
-        # double-summation-order .005 boundary that flips round(sum, 2)
-        .agg(
-            (
-                F.sum(F.round(F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100, 0).cast("long"))
-                / 100.0
-            ).alias("revenue")
-        )
-    )
-    return _ts_us(out, "o_orderdate")
-
-
-SQL_SHIPPING = """
-SELECT o_orderkey, epoch_us(o_orderdate) AS o_orderdate_us, o_orderpriority,
-       CAST(sum(CAST(round(l_extendedprice * (1 - l_discount) * 100, 0) AS BIGINT)) AS BIGINT) / 100.0 AS revenue
-FROM customer
-JOIN orders ON c_custkey = o_custkey
-JOIN lineitem ON o_orderkey = l_orderkey
-WHERE c_mktsegment = 'BUILDING'
-  AND o_orderdate < TIMESTAMP '1995-03-15'
-  AND l_shipdate > TIMESTAMP '1995-03-15'
-GROUP BY o_orderkey, o_orderdate, o_orderpriority
-"""
-
-
-_B3_QUERIES = {
-    "salted_agg_by_conv": q_salted_agg,
-    "latest_event_per_user": q_latest_event_per_user,
-    "distinct_group_probe": q_distinct_group_probe,
-    "word_counts": q_word_counts,
-    "scalar_functions": q_scalar_functions,
-    "hourly_tumbling": q_hourly_tumbling,
-    "q5_revenue_by_nation": q_revenue_by_nation,
-    "q3_shipping_priority": q_shipping_priority,
-}
-
-_B3_ORACLES = {
-    "salted_agg_by_conv": SQL_SALTED,
-    "latest_event_per_user": SQL_LATEST_EVENT,
-    "distinct_group_probe": SQL_DISTINCT_PROBE,
-    "word_counts": SQL_WORDS,
-    "scalar_functions": SQL_SCALARS,
-    "hourly_tumbling": SQL_HOURLY,
-    "q5_revenue_by_nation": SQL_REVENUE,
-    "q3_shipping_priority": SQL_SHIPPING,
-}
-
-_B2_QUERIES_FN = queries
-_B2_ORACLES_FN = oracle_sql
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _B2_QUERIES_FN()
-    out.update(_B3_QUERIES)
-    return out
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _B2_ORACLES_FN()
-    out.update(_B3_ORACLES)
-    return out
-
-
-# ---------------------------------------------------------------------------
-# batch 4: multimodal plumbing queries
-# ---------------------------------------------------------------------------
-
-from ipl_dagster_pipeline_spark.operators.multimodal import (
-    decode_media,
-    latest_media_per_source,
-    synthesize_media,
-)
-
-
-def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Arrow mapInPandas media decode (fake codec) — rows-only check; the
-    deterministic fake features are covered by tests/test_trainingdata.py."""
-    docs = _read(spark, sf_dir, "documents")
-    return decode_media(synthesize_media(docs), fake=True)
-
-
-def q_media_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A3 parity: latest media per (source, media_type) via max_by."""
-    docs = _read(spark, sf_dir, "documents")
-    return latest_media_per_source(synthesize_media(docs))
-
-
-# synthesize_media maps media_type = ['image','audio','video'][doc_id % 3] with a
-# constant source/captured_ts, so latest == max media_id per type (tie-break by id)
-SQL_MEDIA_LATEST = """
-WITH m AS (
-    SELECT doc_id AS media_id,
-           CASE WHEN doc_id % 3 = 0 THEN 'image'
-                WHEN doc_id % 3 = 1 THEN 'audio'
-                ELSE 'video' END AS media_type
-    FROM documents
-)
-SELECT 'synthetic' AS source, media_type,
-       max(media_id) AS latest_media_id, count(*) AS n_items
-FROM m
-GROUP BY media_type
-"""
-
-_B4_QUERIES = {"media_decode_features": q_media_features, "media_latest_per_source": q_media_latest}
-_B4_ORACLES = {"media_latest_per_source": SQL_MEDIA_LATEST}
-
-_B3_QUERIES_FN = queries
-_B3_ORACLES_FN = oracle_sql
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _B3_QUERIES_FN()
-    out.update(_B4_QUERIES)
-    return out
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _B3_ORACLES_FN()
-    out.update(_B4_ORACLES)
-    return out
-
-
-# ---------------------------------------------------------------------------
-# batch 5: pinned-snapshot as-of, epoch parsing, embedding near-dup pairs
-# ---------------------------------------------------------------------------
-
-from ipl_dagster_pipeline_spark.functions.scalars import epoch_seconds_to_utc_ts
-from ipl_dagster_pipeline_spark.operators.asof import asof_snapshot_broadcast
-from ipl_dagster_pipeline_spark.operators.similarity import _as_double, cosine
-
-AS_OF_PIN = "2024-01-15 00:00:00"
-
-
-def q_asof_pinned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """As-of strategy 4: pin the dim to its latest snapshot <= a fixed as_of,
-    broadcast equi-join (single-timestamp feature builds)."""
-    t = transcripts_from_events(spark, sf_dir)
-    d = tool_dim_from_events(spark, sf_dir)
-    out = asof_snapshot_broadcast(t, d, key="tool", as_of=AS_OF_PIN)
-    return _ts_us(out, "ts", "matched_effective_from")
-
-
-SQL_ASOF_PINNED = f"""{WITH_TD},
-pinned AS (
-    SELECT tool, effective_from AS matched_effective_from, tool_category, cost_weight
-    FROM tool_dim
-    WHERE effective_from <= TIMESTAMP '{AS_OF_PIN}'
-    QUALIFY row_number() OVER (PARTITION BY tool ORDER BY effective_from DESC) = 1
-)
-SELECT t.conv_id, t.turn_idx, t.role, t.text, t.tool, epoch_us(t.ts) AS ts_us,
-       p.tool_category, p.cost_weight,
-       epoch_us(p.matched_effective_from) AS matched_effective_from_us
-FROM transcripts t
-LEFT JOIN pinned p ON t.tool = p.tool
-"""
-
-
-def q_epoch_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F1: epoch-seconds -> UTC timestamp with bad input -> null."""
-    ev = _read(spark, sf_dir, "events")
-    secs = F.floor(F.col("ts").cast("timestamp").cast("double")).cast("long")
-    out = ev.select(
-        "event_id",
-        secs.alias("epoch_s"),
-        epoch_seconds_to_utc_ts(secs).alias("parsed_ts"),
-        epoch_seconds_to_utc_ts(F.lit(None).cast("long")).alias("bad_ts"),
-    )
-    return _ts_us(out, "parsed_ts", "bad_ts")
-
-
-SQL_EPOCH = """
-SELECT event_id,
-       CAST(floor(epoch(ts)) AS BIGINT) AS epoch_s,
-       CAST(floor(epoch(ts)) AS BIGINT) * 1000000 AS parsed_ts_us,
-       CAST(NULL AS BIGINT) AS bad_ts_us
-FROM events
-"""
-
-
-def q_emb_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-dup pairs (dedup mode): all pairs >= threshold.
-    Brute-force here (exact oracle); the LSH-bucketed variant is the scale
-    path (emb_lsh_topk)."""
-    emb = _read(spark, sf_dir, "embeddings")
-    base = emb.select(F.col("vec_id"), _as_double(F.col("embedding")).alias("v"))
-    a = base.select(F.col("vec_id").alias("vec_a"), F.col("v").alias("va"))
-    b = base.select(F.col("vec_id").alias("vec_b"), F.col("v").alias("vb"))
-    pairs = a.join(b, F.col("vec_a") < F.col("vec_b")).withColumn(
-        "cos", F.round(cosine(F.col("va"), F.col("vb")), 6)
-    )
-    return pairs.filter(F.col("cos") >= 0.4).select("vec_a", "vec_b", "cos")
-
-
-SQL_EMB_NEAR_DUP = """
-WITH v AS (
-    SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings
-)
-SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-       round(list_dot_product(a.v, b.v)
-             / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))), 6) AS cos
-FROM v a JOIN v b ON a.vec_id < b.vec_id
-WHERE list_dot_product(a.v, b.v)
-      / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))) >= 0.4
-"""
-
-_B5_QUERIES = {
-    "asof_pinned_snapshot": q_asof_pinned,
-    "epoch_parse": q_epoch_parse,
-    "emb_near_dup_pairs": q_emb_near_dup,
-}
-_B5_ORACLES = {
-    "asof_pinned_snapshot": SQL_ASOF_PINNED,
-    "epoch_parse": SQL_EPOCH,
-    "emb_near_dup_pairs": SQL_EMB_NEAR_DUP,
-}
-
-_B4_QUERIES_FN = queries
-_B4_ORACLES_FN = oracle_sql
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _B4_QUERIES_FN()
-    out.update(_B5_QUERIES)
-    return out
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _B4_ORACLES_FN()
-    out.update(_B5_ORACLES)
-    return out
-
-
-# ---------------------------------------------------------------------------
-# batch 6: the scaling-evidence job itself, oracle-verified
-# ---------------------------------------------------------------------------
-
-from ipl_dagster_pipeline_spark.plans.features import build_rich_turn_features
-
-
-def q_rich_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The exact job measured in BENCH/BASELINE.md (fused ~30-column feature
-    build), verified against a full SQL oracle."""
-    t = transcripts_from_events(spark, sf_dir)
-    d = tool_dim_from_events(spark, sf_dir)
-    out = build_rich_turn_features(t, d)
-    out = out.withColumn("chars_avg_5", F.round("chars_avg_5", 6)).withColumn(
-        "chars_avg_20", F.round("chars_avg_20", 6)
-    )
-    return _ts_us(out, "ts", "matched_effective_from")
-
-
-_RICH_LAGS = "\n       ".join(
-    f"lag(role, {n}) OVER ({W_SQL}) AS prev_role_{n},\n       "
-    f"lag(tool, {n}) OVER ({W_SQL}) AS prev_tool_{n},\n       "
-    f"{SECS} - lag({SECS}, {n}) OVER ({W_SQL}) AS ts_delta_s_{n},"
-    for n in (1, 2, 3)
-)
-_RICH_ROLL = "\n       ".join(
-    f"CAST(sum(text_len) OVER w{k} AS BIGINT) AS chars_sum_{k},\n       "
-    f"round(avg(text_len) OVER w{k}, 6) AS chars_avg_{k},\n       "
-    f"count(text_len) OVER w{k} AS chars_cnt_{k},"
-    for k in (5, 20)
-)
-SQL_RICH = f"""{WITH_TD},
-j AS (
-    SELECT t.*, CAST(length(t.text) AS BIGINT) AS text_len,
-           d.tool_category, d.cost_weight, d.effective_from AS matched_effective_from
-    FROM transcripts t
-    ASOF LEFT JOIN tool_dim d ON t.tool = d.tool AND t.ts >= d.effective_from
-),
-g AS (
-    SELECT *, {SECS} - lag({SECS}) OVER ({W_SQL}) AS delta
-    FROM j
-)
-SELECT conv_id, turn_idx, role, text, tool, tool_category, cost_weight, text_len,
-       epoch_us(ts) AS ts_us, epoch_us(matched_effective_from) AS matched_effective_from_us,
-       {_RICH_LAGS}
-       {_RICH_ROLL}
-       CAST(sum(CASE WHEN role = 'user' THEN 1 ELSE 0 END) OVER w20 AS BIGINT) AS user_turns_20,
-       CAST(sum(CASE WHEN role = 'assistant' THEN 1 ELSE 0 END) OVER w20 AS BIGINT) AS asst_turns_20,
-       CAST(sum(CASE WHEN tool IS NOT NULL THEN 1 ELSE 0 END) OVER w20 AS BIGINT) AS tool_turns_20,
-       max(text_len) OVER w20 AS chars_max_20w,
-       min(text_len) OVER w20 AS chars_min_20w,
-       CAST(sum(text_len) OVER wr AS BIGINT) AS chars_rsum_3600s,
-       count(text_len) OVER wr AS chars_rcnt_3600s,
-       last_value(tool IGNORE NULLS) OVER ({W_SQL}
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS tool_ffill,
-       CAST(sum(CASE WHEN delta IS NULL OR delta > 1800 THEN 1 ELSE 0 END)
-            OVER ({W_SQL} ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS INTEGER)
-           AS session_id
-FROM g
-WINDOW w5 AS ({W_SQL} ROWS BETWEEN 4 PRECEDING AND CURRENT ROW),
-       w20 AS ({W_SQL} ROWS BETWEEN 19 PRECEDING AND CURRENT ROW),
-       wr AS (PARTITION BY conv_id ORDER BY epoch_us(ts)
-              RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW)
-"""
-
-_B6_QUERIES = {"rich_features": q_rich_features}
-_B6_ORACLES = {"rich_features": SQL_RICH}
-
-_B5_QUERIES_FN = queries
-_B5_ORACLES_FN = oracle_sql
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _B5_QUERIES_FN()
-    out.update(_B6_QUERIES)
-    return out
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _B5_ORACLES_FN()
-    out.update(_B6_ORACLES)
-    return out
-
-# ---------------------------------------------------------------------------
-# batch 7 (round 2): scale-safe embedding near-dup, media oracle, F6/F12/F13/
-# F15 scalar parity, S2 preference lookup
-# ---------------------------------------------------------------------------
-
-from ipl_dagster_pipeline_spark.functions.scalars import (
-    human_moment,
-    local_date_parts,
-    point_geom,
-    split_latlon_pairs,
-)
-from ipl_dagster_pipeline_spark.operators.relational import prefer_first
-from ipl_dagster_pipeline_spark.operators.similarity import (
-    hyperplane_signs,
-    near_dup_pairs_lsh,
-)
-
-# -- emb_near_dup_lsh: the SCALE path for embedding near-duplicate pairs -----
-# (replaces the O(N²) theta join of emb_near_dup_pairs, which stays as the
-# small-SF exact-oracle mode).  The DuckDB oracle recomputes the IDENTICAL
-# hyperplane buckets (sign literals generated from the same hyperplane_signs),
-# so this approximate operator still gets a full value-hash gate.
-
-# n_planes tracks log2(corpus/target-bucket): 6 planes = 64 buckets/table
-# keeps candidate blocks bounded at both gate SFs (4 planes degraded toward
-# brute force at sf0.1's 2000 vectors: 20s -> ~8s).  The DuckDB oracle is
-# GENERATED from these constants, so it always replays the same buckets.
-_ND_PLANES, _ND_TABLES, _ND_DIM, _ND_THRESH = 6, 8, 64, 0.4
-
-
-def q_emb_near_dup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _read(spark, sf_dir, "embeddings")
-    return near_dup_pairs_lsh(
-        emb, threshold=_ND_THRESH, n_planes=_ND_PLANES, n_tables=_ND_TABLES, dim=_ND_DIM,
-        max_bucket=_ND_MAXB,
-    )
-
-
-def _nd_bucket_sql(t: int) -> str:
-    terms = []
-    for p in range(_ND_PLANES):
-        signs = hyperplane_signs(t * _ND_PLANES + p, _ND_DIM)
-        arr = "[" + ", ".join("1.0" if s > 0 else "-1.0" for s in signs) + "]"
-        terms.append(f"(CASE WHEN list_dot_product(v, {arr}) > 0 THEN {1 << p} ELSE 0 END)")
-    return " + ".join(terms)
-
-
-_ND_MAXB = 100_000  # oversized-bucket cap (no-op at gate SFs; mirrors the operator)
-_ND_BANDS_SQL = (
-    "SELECT * FROM (\n    "
-    + "\n    UNION ALL\n    ".join(
-        f"SELECT vec_id, {t} AS tbl, {_nd_bucket_sql(t)} AS bucket FROM v" for t in range(_ND_TABLES)
-    )
-    + f"\n    ) QUALIFY count(*) OVER (PARTITION BY tbl, bucket) <= {_ND_MAXB}"
-)
-_ND_COS = (
-    "list_dot_product(x.v, y.v) / (sqrt(list_dot_product(x.v, x.v)) * sqrt(list_dot_product(y.v, y.v)))"
-)
-
-SQL_EMB_ND_LSH = f"""
-WITH v AS (
-    SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings
-),
-b AS (
-    {_ND_BANDS_SQL}
-),
-cand AS (
-    SELECT DISTINCT a.vec_id AS vec_a, c.vec_id AS vec_b
-    FROM b a JOIN b c ON a.tbl = c.tbl AND a.bucket = c.bucket AND a.vec_id < c.vec_id
-)
-SELECT cand.vec_a, cand.vec_b, round({_ND_COS}, 6) AS cos
-FROM cand
-JOIN v x ON x.vec_id = cand.vec_a
-JOIN v y ON y.vec_id = cand.vec_b
-WHERE round({_ND_COS}, 6) >= {_ND_THRESH}
-"""
-
-
-# -- media_decode_features oracle: the fake decode is pure md5-of-payload
-# arithmetic (payload = utf-8 bytes of text), so DuckDB recomputes n_bytes /
-# content_hash / h0-derived dims exactly — flips the query from rows-only to
-# a full value-hash row.
-SQL_MEDIA_DECODE = """
-WITH m AS (
-    SELECT doc_id AS media_id,
-           CASE WHEN doc_id % 3 = 0 THEN 'image'
-                WHEN doc_id % 3 = 1 THEN 'audio'
-                ELSE 'video' END AS media_type,
-           md5(text) AS content_hash,
-           CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes
-    FROM documents
-),
-h AS (
-    SELECT *, CAST(concat('0x', substring(content_hash, 1, 2)) AS BIGINT) AS h0 FROM m
-)
-SELECT media_id, media_type, n_bytes,
-       CASE WHEN media_type = 'image' THEN CAST(64 + (h0 % 64) AS INTEGER) END AS width,
-       CASE WHEN media_type = 'image' THEN CAST(64 + (h0 % 48) AS INTEGER) END AS height,
-       CASE WHEN media_type <> 'image' THEN n_bytes / 1000.0 END AS duration_s,
-       content_hash
-FROM h
-"""
-
-
-# -- scalar_extras: exercises the four previously-untested scalar helpers
-# (F6 split+pairwise restructure, F12 tz conversion + date parts, F13
-# strftime formatting, F15 geometry struct) in one oracle-gated query.
-# The geometry string is built from INTEGER fields so the string→double
-# round-trip is exact on both engines.
-
-
-def q_scalar_extras(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _read(spark, sf_dir, "events")
-    geom_str = F.concat_ws(
-        " ",
-        (F.col("user_id") % 90).cast("string"),
-        (F.col("event_id") % 180).cast("string"),
-        ((F.col("user_id") + 7) % 90).cast("string"),
-        ((F.col("event_id") + 13) % 180).cast("string"),
-    )
-    pairs = split_latlon_pairs(geom_str)
-    p1 = F.element_at(pairs, 1)
-    p2 = F.element_at(pairs, 2)
-    geom = point_geom(p1["lon"], p1["lat"])
-    berlin_local = F.from_utc_timestamp(F.col("ts").cast("timestamp"), "Europe/Berlin")
-    return ev.select(
-        "event_id",
-        F.size(pairs).alias("n_pairs"),
-        p1["lat"].alias("lat1"),
-        p1["lon"].alias("lon1"),
-        p2["lat"].alias("lat2"),
-        p2["lon"].alias("lon2"),
-        geom["lon"].alias("geom_lon"),
-        geom["lat"].alias("geom_lat"),
-        *local_date_parts(F.col("ts").cast("timestamp")),
-        human_moment(berlin_local).alias("berlin_human"),
-    )
-
-
-SQL_SCALAR_EXTRAS = r"""
-WITH g AS (
-    SELECT event_id,
-           concat_ws(' ', CAST(user_id % 90 AS VARCHAR), CAST(event_id % 180 AS VARCHAR),
-                     CAST((user_id + 7) % 90 AS VARCHAR), CAST((event_id + 13) % 180 AS VARCHAR)) AS geom_str,
-           timezone('Europe/Berlin', timezone('UTC', ts)) AS berlin
-    FROM events
-),
-p AS (
-    SELECT *, regexp_split_to_array(trim(geom_str), '\s+') AS toks FROM g
-)
-SELECT event_id,
-       CAST(len(toks) // 2 AS INTEGER) AS n_pairs,
-       CAST(toks[1] AS DOUBLE) AS lat1,
-       CAST(toks[2] AS DOUBLE) AS lon1,
-       CAST(toks[3] AS DOUBLE) AS lat2,
-       CAST(toks[4] AS DOUBLE) AS lon2,
-       CAST(toks[2] AS DOUBLE) AS geom_lon,
-       CAST(toks[1] AS DOUBLE) AS geom_lat,
-       CAST(year(berlin) AS INTEGER) AS year,
-       CAST(month(berlin) AS INTEGER) AS month,
-       CAST(day(berlin) AS INTEGER) AS day,
-       CAST(hour(berlin) AS INTEGER) AS hour,
-       strftime(berlin, '%d.%m.%Y, %H:%M:%S') AS berlin_human
-FROM p
-"""
-
-
-# -- S2: catalog/preference lookup as a real engine op (reference
-# lamassu.py:93-104 — first matching language in the preference list wins,
-# fallback = any remaining language, deterministic tie-break).
-_LANG_PREFS = ["de", "en", "fr"]
-
-
-def q_prefer_first_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _read(spark, sf_dir, "documents")
-    out = prefer_first(
-        docs, keys=["source"], pref_col="lang", preferences=_LANG_PREFS, tie_break=[F.col("doc_id")]
-    )
-    return out.select("source", F.col("lang").alias("picked_lang"), F.col("doc_id").alias("picked_doc_id"))
-
-
-_PREF_CASE = "CASE " + " ".join(
-    f"WHEN lang = '{v}' THEN {i}" for i, v in enumerate(_LANG_PREFS)
-) + f" ELSE {len(_LANG_PREFS)} END"
-
-SQL_PREFER_FIRST = f"""
-SELECT source, lang AS picked_lang, doc_id AS picked_doc_id
-FROM documents
-QUALIFY row_number() OVER (PARTITION BY source ORDER BY {_PREF_CASE}, doc_id) = 1
-"""
-
-
-_B7_QUERIES = {
-    "emb_near_dup_lsh": q_emb_near_dup_lsh,
-    "scalar_extras": q_scalar_extras,
-    "prefer_first_lang": q_prefer_first_lang,
-}
-_B7_ORACLES = {
-    "emb_near_dup_lsh": SQL_EMB_ND_LSH,
-    "media_decode_features": SQL_MEDIA_DECODE,
-    "scalar_extras": SQL_SCALAR_EXTRAS,
-    "prefer_first_lang": SQL_PREFER_FIRST,
-}
-
-_B6_QUERIES_FN = queries
-_B6_ORACLES_FN = oracle_sql
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _B6_QUERIES_FN()
-    out.update(_B7_QUERIES)
-    return out
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _B6_ORACLES_FN()
-    out.update(_B7_ORACLES)
-    return out
-
-# ---------------------------------------------------------------------------
-# batch 8 (round 2): duplicate-GROUP resolution (connected components) and
-# deterministic train/val/test hash split
-# ---------------------------------------------------------------------------
-
-from ipl_dagster_pipeline_spark.operators.graph import duplicate_groups
-from ipl_dagster_pipeline_spark.operators.sampling import hash_split
-
-
-def q_emb_dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pairs → groups → keeper: connected components (hash-to-min label
-    propagation) over the LSH near-dup pair graph, keeper = min id per
-    component.  The DuckDB oracle recomputes the SAME pair graph (shared
-    hyperplane sign literals) and closes it with a recursive CTE — an
-    iterative distributed algorithm with a full value-hash gate."""
-    emb = _read(spark, sf_dir, "embeddings")
-    pairs = near_dup_pairs_lsh(
-        emb, threshold=_ND_THRESH, n_planes=_ND_PLANES, n_tables=_ND_TABLES, dim=_ND_DIM,
-        max_bucket=_ND_MAXB,
-    )
-    return duplicate_groups(pairs, left="vec_a", right="vec_b")
-
-
-_ND_CTES = f"""v AS (
-    SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings
-),
-b AS (
-    {_ND_BANDS_SQL}
-),
-cand AS (
-    SELECT DISTINCT a.vec_id AS vec_a, c.vec_id AS vec_b
-    FROM b a JOIN b c ON a.tbl = c.tbl AND a.bucket = c.bucket AND a.vec_id < c.vec_id
-),
-pairs AS (
-    SELECT cand.vec_a, cand.vec_b
-    FROM cand
-    JOIN v x ON x.vec_id = cand.vec_a
-    JOIN v y ON y.vec_id = cand.vec_b
-    WHERE round({_ND_COS}, 6) >= {_ND_THRESH}
-)"""
-
-SQL_EMB_COMPONENTS = f"""
-WITH RECURSIVE
-{_ND_CTES},
-edges AS (
-    SELECT vec_a AS s, vec_b AS d FROM pairs
-    UNION
-    SELECT vec_b, vec_a FROM pairs
-),
-reach(v, r) AS (
-    SELECT s, s FROM (SELECT DISTINCT s FROM edges)
-    UNION
-    SELECT e.d, reach.r FROM reach JOIN edges e ON e.s = reach.v
-)
-SELECT v AS member, min(r) AS keeper, v = min(r) AS is_keeper
-FROM reach
-GROUP BY v
-"""
-
-
-_SPLIT_FRACS = {"train": 0.9, "val": 0.05, "test": 0.05}
-
-
-def q_doc_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic, engine-portable train/val/test assignment: pure
-    projection on the portable md5 hash — stable under any parallelism,
-    no RNG, no shuffle (key by conv/doc id to keep entities in one fold)."""
-    docs = _read(spark, sf_dir, "documents")
-    return hash_split(docs, "doc_id", fractions=_SPLIT_FRACS).select("doc_id", "split")
-
-
-SQL_HASH_SPLIT = """
-WITH h AS (
-    SELECT doc_id,
-           CAST(concat('0x', substring(md5(concat('7:', CAST(doc_id AS VARCHAR))), 1, 15)) AS BIGINT)
-           % 10000 AS bucket
-    FROM documents
-)
-SELECT doc_id,
-       CASE WHEN bucket < 9000 THEN 'train'
-            WHEN bucket < 9500 THEN 'val'
-            ELSE 'test' END AS split
-FROM h
-"""
-
-
-_B8_QUERIES = {
-    "emb_dup_components": q_emb_dup_components,
-    "doc_hash_split": q_doc_hash_split,
-}
-_B8_ORACLES = {
-    "emb_dup_components": SQL_EMB_COMPONENTS,
-    "doc_hash_split": SQL_HASH_SPLIT,
-}
-
-_B7_QUERIES_FN = queries
-_B7_ORACLES_FN = oracle_sql
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _B7_QUERIES_FN()
-    out.update(_B8_QUERIES)
-    return out
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _B7_ORACLES_FN()
-    out.update(_B8_ORACLES)
-    return out
-
-# ---------------------------------------------------------------------------
-# batch 9 (round 2): IVF ANN — the learned-quantizer similarity scale path
-# ---------------------------------------------------------------------------
-
-from ipl_dagster_pipeline_spark.operators.similarity import ivf_topk
-
-
-def q_emb_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF approximate top-k (k-means coarse quantizer, n_probe cell search,
-    exact re-rank).  Approximate + learned (k-means float sums are not
-    engine-portable) → rows-only check, with the same driver-visible
-    ``within_bf_bound`` invariant as the LSH path: an ANN cosine can never
-    exceed the exact cosine at equal rank."""
-    emb = _read(spark, sf_dir, "embeddings")
-    qids = list(range(10))
-    ann = ivf_topk(emb, query_ids=qids, k=5, n_clusters=16, n_probe=4)
-    bf = cosine_topk_bruteforce(emb, query_ids=qids, k=5).select(
-        "query_id", "rnk", F.col("cos").alias("bf_cos")
-    )
-    return ann.join(bf, ["query_id", "rnk"], "left").withColumn(
-        "within_bf_bound", F.col("cos") <= F.col("bf_cos") + F.lit(1e-9)
-    )
-
-
-_B9_QUERIES = {"emb_ivf_topk": q_emb_ivf_topk}
-
-_B8_QUERIES_FN = queries
-_B8_ORACLES_FN = oracle_sql
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _B8_QUERIES_FN()
-    out.update(_B9_QUERIES)
-    return out
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    return _B8_ORACLES_FN()
-
-# ---------------------------------------------------------------------------
-# batch 10 (round 2): multimodal resize + frame-sample plumbing (oracle-gated)
-# ---------------------------------------------------------------------------
-
-from ipl_dagster_pipeline_spark.operators.multimodal import resize_images, sample_frames
-
-
-def q_media_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Aspect-preserving image resize plumbing: non-images pruned before the
-    Arrow exchange; fake path computes REAL fit-within geometry from the
-    fake-decode dims — fully replayed by the DuckDB oracle."""
-    docs = _read(spark, sf_dir, "documents")
-    return resize_images(synthesize_media(docs), target=(96, 96), fake=True)
-
-
-SQL_MEDIA_RESIZE = """
-WITH m AS (
-    SELECT doc_id AS media_id, md5(text) AS content_hash
-    FROM documents WHERE doc_id % 3 = 0
-),
-h AS (SELECT *, CAST(concat('0x', substring(content_hash, 1, 2)) AS BIGINT) AS h0 FROM m),
-d AS (SELECT media_id, content_hash, 64 + (h0 % 64) AS w, 64 + (h0 % 48) AS h FROM h),
-s AS (SELECT *, least(96.0 / w, 96.0 / h, 1.0) AS sc FROM d)
-SELECT media_id,
-       CAST(96 AS INTEGER) AS target_w,
-       CAST(96 AS INTEGER) AS target_h,
-       CAST(floor(w * sc) AS INTEGER) AS out_w,
-       CAST(floor(h * sc) AS INTEGER) AS out_h,
-       round(sc, 6) AS scale,
-       md5(concat(content_hash, ':96x96')) AS resized_hash
-FROM s
-"""
-
-
-def q_media_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Frame sampling plumbing: 1→N row expansion inside mapInPandas (videos
-    only reach the Arrow exchange); frame count/timestamps/hashes are
-    deterministic arithmetic the oracle replays."""
-    docs = _read(spark, sf_dir, "documents")
-    return sample_frames(synthesize_media(docs), fps=1.0, max_frames=16, fake=True)
-
-
-SQL_MEDIA_FRAMES = """
-WITH v AS (
-    SELECT doc_id AS media_id, md5(text) AS content_hash,
-           CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes
-    FROM documents WHERE doc_id % 3 = 2
-),
-n AS (
-    SELECT *, least(CAST(floor(n_bytes / 1000.0 * 1.0) AS BIGINT) + 1, 16) AS n_frames FROM v
-),
-f AS (
-    SELECT media_id, content_hash,
-           unnest(generate_series(0, CAST(n_frames - 1 AS BIGINT))) AS i
-    FROM n
-)
-SELECT media_id,
-       CAST(i AS INTEGER) AS frame_idx,
-       round(i / 1.0, 6) AS frame_ts_s,
-       md5(concat(content_hash, ':', CAST(i AS VARCHAR))) AS frame_hash
-FROM f
-"""
-
-
-_B10_QUERIES = {"media_resize_images": q_media_resize, "media_sample_frames": q_media_frames}
-_B10_ORACLES = {"media_resize_images": SQL_MEDIA_RESIZE, "media_sample_frames": SQL_MEDIA_FRAMES}
-
-_B9_QUERIES_FN = queries
-_B9_ORACLES_FN = oracle_sql
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _B9_QUERIES_FN()
-    out.update(_B10_QUERIES)
-    return out
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _B9_ORACLES_FN()
-    out.update(_B10_ORACLES)
-    return out
-
-# ---------------------------------------------------------------------------
-# batch 11 (round 2): winnowing fingerprints (rolling-hash copy detection)
-# ---------------------------------------------------------------------------
-
-from ipl_dagster_pipeline_spark.operators.text_dedup import winnow_fingerprints
-
-
-def q_doc_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Winnowing fingerprint set per document (k=5 grams, window=4): the
-    rolling-hash copy-detection index — any ≥8-char shared substring shares a
-    fingerprint; table is ~1/4 the k-gram stream."""
-    docs = _read(spark, sf_dir, "documents")
-    return winnow_fingerprints(docs, k=5, window=4)
-
-
-_WINNOW_HASH = "CAST(concat('0x', substring(md5(concat('31:', substring(norm, pos, 5))), 1, 15)) AS BIGINT)"
-
-SQL_DOC_WINNOW = rf"""
-WITH norm AS (
-    SELECT doc_id, trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS norm
-    FROM documents
-),
-ph AS (
-    SELECT doc_id, pos, {_WINNOW_HASH} AS h
-    FROM (SELECT doc_id, norm,
-                 unnest(generate_series(1, greatest(length(norm) - 4, 1))) AS pos
-          FROM norm)
-),
-wm AS (
-    SELECT doc_id, pos,
-           count(*) OVER (PARTITION BY doc_id) AS n,
-           min(h) OVER (PARTITION BY doc_id ORDER BY pos
-                        ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS wmin
-    FROM ph
-)
-SELECT DISTINCT doc_id, wmin AS fingerprint
-FROM wm
-WHERE pos <= greatest(n - 3, 1)
-"""
-
-_B11_QUERIES = {"doc_winnow_fingerprints": q_doc_winnow}
-_B11_ORACLES = {"doc_winnow_fingerprints": SQL_DOC_WINNOW}
-
-_B10_QUERIES_FN = queries
-_B10_ORACLES_FN = oracle_sql
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _B10_QUERIES_FN()
-    out.update(_B11_QUERIES)
-    return out
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _B10_ORACLES_FN()
-    out.update(_B11_ORACLES)
-    return out
-
-# ---------------------------------------------------------------------------
-# batch 12 (round 2): corpus-cleaning stages — repetition collapse, quality
-# gate, PII redaction, benchmark decontamination
-# ---------------------------------------------------------------------------
-
-from ipl_dagster_pipeline_spark.operators.cleaning import (
-    collapse_adjacent_repeats,
-    contamination_flags,
-    quality_gate,
-    redact_pii,
-)
-
-
-def q_doc_collapse_repeats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Intra-document repetition removal: adjacent duplicate tokens collapse
-    ('a a the' -> 'a the'); order-preserving reassembly via sorted struct
-    array (deterministic under any parallelism)."""
-    docs = _read(spark, sf_dir, "documents")
-    return collapse_adjacent_repeats(docs).select("doc_id", "text_clean")
-
-
-SQL_COLLAPSE_REPEATS = r"""
-WITH norm AS (
-    SELECT doc_id, trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS norm FROM documents
-),
-toks AS (
-    SELECT doc_id, i, ws[i] AS w
-    FROM (SELECT doc_id, string_split(norm, ' ') AS ws FROM norm),
-         (SELECT unnest(generate_series(1, len(ws))) AS i)
-),
-kept AS (
-    SELECT doc_id, i, w, lag(w) OVER (PARTITION BY doc_id ORDER BY i) AS prev
-    FROM toks
-)
-SELECT doc_id, string_agg(w, ' ' ORDER BY i) AS text_clean
-FROM kept
-WHERE prev IS NULL OR w <> prev
-GROUP BY doc_id
-"""
-
-
-def q_doc_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher-style rule flags + pass verdict over the textstats metrics."""
-    docs = _read(spark, sf_dir, "documents")
-    gated = quality_gate(with_quality_scores(with_token_counts(docs)))
-    return gated.select(
-        "doc_id",
-        "flag_too_short",
-        "flag_too_long",
-        "flag_low_alpha",
-        "flag_high_punct",
-        "flag_word_len",
-        "passes_quality",
-    )
-
-
-SQL_QUALITY_GATE = r"""
-WITH s AS (
-    SELECT doc_id,
-           CAST(length(regexp_extract_all(text, '\S+')) AS INTEGER) AS n_ws_tokens,
-           round(length(regexp_extract_all(text, '[A-Za-z]')) / greatest(length(text), 1.0), 6) AS alpha_ratio,
-           round(length(regexp_extract_all(text, '[^A-Za-z0-9\s]')) / greatest(length(text), 1.0), 6) AS punct_ratio,
-           round(length(regexp_extract_all(text, '[A-Za-z]'))
-                 / greatest(length(regexp_extract_all(text, '\S+')), 1.0), 6) AS mean_word_len
-    FROM documents
-),
-f AS (
-    SELECT doc_id,
-           n_ws_tokens < 10 AS flag_too_short,
-           n_ws_tokens > 100000 AS flag_too_long,
-           alpha_ratio < 0.5 AS flag_low_alpha,
-           punct_ratio > 0.2 AS flag_high_punct,
-           (mean_word_len < 2.0 OR mean_word_len > 12.0) AS flag_word_len
-    FROM s
-)
-SELECT *,
-       NOT (flag_too_short OR flag_too_long OR flag_low_alpha OR flag_high_punct OR flag_word_len)
-           AS passes_quality
-FROM f
-"""
-
-
-def q_doc_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PII redaction on deterministically-injected synthetic PII (the corpus
-    itself is PII-free): email, IP, phone -> typed placeholders via chained
-    RE2-compatible regexp_replace (global on both engines)."""
-    docs = _read(spark, sf_dir, "documents")
-    dirty = F.concat(
-        F.col("text"),
-        F.lit(" contact user"),
-        F.col("doc_id").cast("string"),
-        F.lit("@example.com or +1 555-01"),
-        (F.col("doc_id") % 100).cast("string"),
-        F.lit(" from 192.168."),
-        (F.col("doc_id") % 256).cast("string"),
-        F.lit(".7"),
-    )
-    return docs.select("doc_id", redact_pii(dirty).alias("redacted"))
-
-
-SQL_PII_REDACT = r"""
-WITH dirty AS (
-    SELECT doc_id,
-           concat(text, ' contact user', CAST(doc_id AS VARCHAR),
-                  '@example.com or +1 555-01', CAST(doc_id % 100 AS VARCHAR),
-                  ' from 192.168.', CAST(doc_id % 256 AS VARCHAR), '.7') AS t
-    FROM documents
-)
-SELECT doc_id,
-       regexp_replace(
-           regexp_replace(
-               regexp_replace(t, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-               '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '<IP>', 'g'),
-           '\+?\d[\d .-]{7,}\d', '<PHONE>', 'g') AS redacted
-FROM dirty
-"""
-
-
-def q_doc_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Eval-set decontamination probe: corpus docs sharing any 30-char-gram
-    hash with the benchmark set (doc_id < 20) are flagged.  Benchmark grams
-    broadcast; probe is a distinct-hash semi-join."""
-    docs = _read(spark, sf_dir, "documents")
-    bench = docs.filter(F.col("doc_id") < 20)
-    return contamination_flags(docs, bench, k=30)
-
-
-SQL_CONTAMINATION = r"""
-WITH norm AS (
-    SELECT doc_id, trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS norm FROM documents
-),
-grams AS (
-    SELECT DISTINCT doc_id,
-           CAST(concat('0x', substring(md5(concat('77:', substring(norm, i, 30))), 1, 15)) AS BIGINT) AS gh
-    FROM (SELECT doc_id, norm,
-                 unnest(generate_series(1, greatest(length(norm) - 29, 1))) AS i
-          FROM norm)
-),
-bench AS (SELECT DISTINCT gh FROM grams WHERE doc_id < 20),
-hits AS (
-    SELECT DISTINCT g.doc_id FROM grams g JOIN bench b ON g.gh = b.gh
-)
-SELECT d.doc_id, h.doc_id IS NOT NULL AS contaminated
-FROM (SELECT DISTINCT doc_id FROM documents) d
-LEFT JOIN hits h ON d.doc_id = h.doc_id
-"""
-
-
-_B12_QUERIES = {
-    "doc_collapse_repeats": q_doc_collapse_repeats,
-    "doc_quality_gate": q_doc_quality_gate,
-    "doc_pii_redact": q_doc_pii_redact,
-    "doc_contamination": q_doc_contamination,
-}
-_B12_ORACLES = {
-    "doc_collapse_repeats": SQL_COLLAPSE_REPEATS,
-    "doc_quality_gate": SQL_QUALITY_GATE,
-    "doc_pii_redact": SQL_PII_REDACT,
-    "doc_contamination": SQL_CONTAMINATION,
-}
-
-_B11_QUERIES_FN = queries
-_B11_ORACLES_FN = oracle_sql
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _B11_QUERIES_FN()
-    out.update(_B12_QUERIES)
-    return out
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _B11_ORACLES_FN()
-    out.update(_B12_ORACLES)
-    return out
-
-# ---------------------------------------------------------------------------
-# batch 13 (round 2): sequence packing (concat-and-chunk) on a distributed
-# global prefix sum
-# ---------------------------------------------------------------------------
-
-from ipl_dagster_pipeline_spark.operators.packing import pack_sequences
-
-
-def q_doc_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GPT-style packing manifest at seq_len=512: each doc's interval in the
-    concatenated whitespace-token stream + chunk span.  The global running
-    offset uses the two-phase distributed prefix sum (never a
-    single-partition window)."""
-    docs = _read(spark, sf_dir, "documents")
-    with_counts = docs.select(
-        "doc_id",
-        F.size(F.regexp_extract_all(F.col("text"), F.lit(r"\S+"), F.lit(0)))
-        .cast("long")
-        .alias("n_tokens"),
-    )
-    return pack_sequences(with_counts, seq_len=512)
-
-
-SQL_PACK = r"""
-WITH t AS (
-    SELECT doc_id, CAST(length(regexp_extract_all(text, '\S+')) AS BIGINT) AS n_tokens
-    FROM documents
-),
-c AS (
-    SELECT *, CAST(sum(n_tokens) OVER (ORDER BY doc_id
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum
-    FROM t
-)
-SELECT doc_id, n_tokens,
-       cum - n_tokens AS tok_start,
-       cum AS tok_end,
-       CAST(floor((cum - n_tokens) / 512) AS BIGINT) AS first_chunk,
-       CAST(floor((cum - 1) / 512) AS BIGINT) AS last_chunk,
-       CAST(floor((cum - 1) / 512) - floor((cum - n_tokens) / 512) + 1 AS BIGINT) AS n_chunks_spanned
-FROM c
-"""
-
-_B13_QUERIES = {"doc_pack_sequences": q_doc_pack_sequences}
-_B13_ORACLES = {"doc_pack_sequences": SQL_PACK}
-
-_B12_QUERIES_FN = queries
-_B12_ORACLES_FN = oracle_sql
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _B12_QUERIES_FN()
-    out.update(_B13_QUERIES)
-    return out
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _B12_ORACLES_FN()
-    out.update(_B13_ORACLES)
-    return out
-
-# ---------------------------------------------------------------------------
-# batch 14 (round 2): the incident-transform chain as one oracle-gated query
-# (P6 pattern predicates, F4 lane validation, F10 conditional derivation,
-# J3 managed-cause anti-join, J4 gegen-sibling existence probe)
-# ---------------------------------------------------------------------------
-
-from ipl_dagster_pipeline_spark.functions.incidents import (
-    detect_direction,
-    drop_managed_causes,
-    incident_subtype,
-    incident_type,
-    skip_gegen_records,
-)
-
-_LANES = ["s1", "x1", "1x", "u2w", "1", "zz"]  # + NULL slot
-_ITYPES = ["constructionWork", "roadClosed", "repairWork", "other"]
-
-
-def q_incident_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full reference transform chain on a deterministic synthetic incident
-    table derived from events: sibling-gegen direction detection → gegen-row
-    skip → managed-cause anti-join → type/subtype mapping — every rule from
-    cifs.py re-expressed and value-hash-gated."""
-    ev = _read(spark, sf_dir, "events")
-    base = ev.select(
-        F.when(
-            ev.event_id % 5 == 0,
-            F.concat(F.lit("inc-"), ev.event_id.cast("string"), F.lit("-sperrung")),
-        )
-        .when(
-            ev.event_id % 5 == 1,
-            F.concat(F.lit("inc-"), (ev.event_id - 1).cast("string"), F.lit("-gegen-sperrung")),
-        )
-        .otherwise(F.concat(F.lit("inc-"), ev.event_id.cast("string")))
-        .alias("id"),
-        F.element_at(
-            F.array(*[F.lit(x) for x in _LANES], F.lit(None).cast("string")),
-            (ev.event_id % 7 + 1).cast("int"),
-        ).alias("lane_status"),
-        F.when(
-            ev.event_id % 11 == 0, F.concat(F.lit("inc-"), (ev.event_id + 2).cast("string"))
-        ).alias("cause_ref"),
-        F.element_at(
-            F.array(*[F.lit(x) for x in _ITYPES]), (ev.event_id % 4 + 1).cast("int")
-        ).alias("itype"),
-    )
-    d = detect_direction(base)
-    d = skip_gegen_records(d)
-    d = drop_managed_causes(d)
-    mapped = incident_type(F.col("itype"))
-    return d.select(
-        "id",
-        "lane_status",
-        "direction",
-        mapped.alias("itype_mapped"),
-        incident_subtype(mapped).alias("isubtype"),
-    )
-
-
-SQL_INCIDENTS = r"""
-WITH base AS (
-    SELECT CASE WHEN event_id % 5 = 0 THEN 'inc-' || CAST(event_id AS VARCHAR) || '-sperrung'
-                WHEN event_id % 5 = 1 THEN 'inc-' || CAST(event_id - 1 AS VARCHAR) || '-gegen-sperrung'
-                ELSE 'inc-' || CAST(event_id AS VARCHAR) END AS id,
-           (['s1', 'x1', '1x', 'u2w', '1', 'zz', NULL])[(event_id % 7) + 1] AS lane_status,
-           CASE WHEN event_id % 11 = 0 THEN 'inc-' || CAST(event_id + 2 AS VARCHAR) END AS cause_ref,
-           (['constructionWork', 'roadClosed', 'repairWork', 'other'])[(event_id % 4) + 1] AS itype
-    FROM events
-),
-gegen AS (
-    SELECT DISTINCT regexp_replace(id, '-gegen-', '-') AS sib FROM base WHERE id LIKE '%-gegen-%'
-),
-dirs AS (
-    SELECT b.*, g.sib IS NOT NULL AS has_gegen
-    FROM base b LEFT JOIN gegen g ON b.id = g.sib
-),
-d2 AS (
-    SELECT *,
-        CASE WHEN id LIKE '%-sperrung' AND id NOT LIKE '%-gegen-%'
-             THEN CASE WHEN has_gegen THEN 'BOTH_DIRECTIONS' ELSE 'ONE_DIRECTION' END
-             WHEN lane_status IS NOT NULL
-                  AND regexp_matches(lane_status, '^([sxui]*l?)?[suioewx]*(1|2)[suioewx]*(r?[xsoe]*)?$')
-             THEN CASE WHEN (length(regexp_extract(lane_status, '^([^12]*)', 1)) > 0
-                             AND length(regexp_replace(regexp_extract(lane_status, '^([^12]*)', 1),
-                                                       '[usl]', '', 'g')) > 0)
-                            OR length(regexp_replace(regexp_extract(lane_status, '^[^12]*[12]([^12]*)', 1),
-                                                     '[^uiw]', '', 'g')) > 0
-                  THEN 'BOTH_DIRECTIONS' ELSE 'ONE_DIRECTION' END
-             ELSE 'BOTH_DIRECTIONS' END AS direction
-    FROM dirs
-),
-nogegen AS (
-    SELECT * FROM d2 WHERE id NOT LIKE '%-gegen%'
-),
-filtered AS (
-    -- managed causes come from the post-gegen-skip frame (pipeline order)
-    SELECT * FROM nogegen
-    WHERE id NOT IN (SELECT DISTINCT cause_ref FROM nogegen WHERE cause_ref IS NOT NULL)
-)
-SELECT id, lane_status, direction,
-       CASE WHEN itype IN ('constructionWork', 'newRoadworksLayout', 'repairWork') THEN 'CONSTRUCTION'
-            WHEN itype = 'roadClosed' THEN 'ROAD_CLOSED'
-            ELSE 'CONSTRUCTION' END AS itype_mapped,
-       CASE WHEN (CASE WHEN itype IN ('constructionWork', 'newRoadworksLayout', 'repairWork') THEN 'CONSTRUCTION'
-                       WHEN itype = 'roadClosed' THEN 'ROAD_CLOSED'
-                       ELSE 'CONSTRUCTION' END) = 'ROAD_CLOSED'
-            THEN 'ROAD_CLOSED_CONSTRUCTION' ELSE '' END AS isubtype
-FROM filtered
-"""
-
-_B14_QUERIES = {"incident_pipeline": q_incident_pipeline}
-_B14_ORACLES = {"incident_pipeline": SQL_INCIDENTS}
-
-_B13_QUERIES_FN = queries
-_B13_ORACLES_FN = oracle_sql
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _B13_QUERIES_FN()
-    out.update(_B14_QUERIES)
-    return out
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _B13_ORACLES_FN()
-    out.update(_B14_ORACLES)
-    return out
-
-# ---------------------------------------------------------------------------
-# batch 15 (round 2): S3/A5 — nested-array normalize with injected default
-# record, oracle-gated
-# ---------------------------------------------------------------------------
-
-from ipl_dagster_pipeline_spark.operators.relational import explode_json_records
-
-
-def q_explode_default_record(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S3/A5: explode a nested record array to one row per element with parent
-    meta propagated; docs with an EMPTY array (doc_id % 10 == 0) get the
-    injected default record (reference: default vehicle-type record,
-    lamassu.py:253-259)."""
-    docs = _read(spark, sf_dir, "documents")
-    arr = F.when(
-        F.col("doc_id") % 10 == 0, F.array().cast("array<struct<w:string,l:int>>")
-    ).otherwise(
-        F.transform(
-            F.split(F.col("text"), " "),
-            lambda w: F.struct(w.alias("w"), F.length(w).cast("int").alias("l")),
-        )
-    )
-    default = F.struct(F.lit("none").alias("w"), F.lit(0).cast("int").alias("l"))
-    out = explode_json_records(
-        docs.withColumn("recs", arr), "recs", meta_cols=["doc_id"], default_record=default
-    )
-    return out.select("doc_id", "w", "l")
-
-
-SQL_EXPLODE_DEFAULT = """
-WITH a AS (
-    SELECT doc_id,
-           CASE WHEN doc_id % 10 = 0 THEN [{'w': 'none', 'l': 0}]
-                ELSE list_transform(string_split(text, ' '),
-                                    w -> {'w': w, 'l': CAST(length(w) AS INTEGER)}) END AS arr
-    FROM documents
-)
-SELECT doc_id, u.w AS w, u.l AS l
-FROM (SELECT doc_id, unnest(arr) AS u FROM a)
-"""
-
-_B15_QUERIES = {"explode_default_record": q_explode_default_record}
-_B15_ORACLES = {"explode_default_record": SQL_EXPLODE_DEFAULT}
-
-_B14_QUERIES_FN = queries
-_B14_ORACLES_FN = oracle_sql
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _B14_QUERIES_FN()
-    out.update(_B15_QUERIES)
-    return out
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _B14_ORACLES_FN()
-    out.update(_B15_ORACLES)
-    return out
-
-# ---------------------------------------------------------------------------
-# batch 16 (round 2): distinctive-term extraction (TF×rarity keyword op)
-# ---------------------------------------------------------------------------
-
-
-def q_doc_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-3 distinctive terms per document: highest term frequency among
-    terms whose document frequency is below 20% of the corpus (the
-    integer-exact core of TF-IDF — no float logs, so the ranking is
-    bit-identical on any engine).  Shape at scale: token explode → two
-    map-side-combined aggregations → broadcast df-filter join → one rank
-    window per doc."""
-    docs = _read(spark, sf_dir, "documents")
-    # corpus size folds into the plan as a broadcast 1-row agg (the house
-    # pattern, lm.py:143) — no separate docs.count() job per run
-    n_docs = docs.agg(F.count(F.lit(1)).alias("__n_docs"))
-    toks = docs.select(
-        "doc_id",
-        F.explode(F.regexp_extract_all(F.lower(F.col("text")), F.lit("[a-z0-9]+"), F.lit(0))).alias("t"),
-    )
-    tf = toks.groupBy("doc_id", "t").agg(F.count(F.lit(1)).alias("tf"))
-    df_counts = tf.groupBy("t").agg(F.count(F.lit(1)).alias("df"))
-    rare = (
-        df_counts.crossJoin(F.broadcast(n_docs))
-        .filter(F.col("df") * 5 < F.col("__n_docs"))  # df < 20% of corpus
-        .drop("__n_docs")
-    )
-    w = Window.partitionBy("doc_id").orderBy(F.col("tf").desc(), F.col("df").asc(), F.col("t").asc())
-    return (
-        tf.join(F.broadcast(rare), "t")
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= 3)
-        .select("doc_id", F.col("t").alias("term"), "tf", "df", F.col("rnk").cast("int").alias("rnk"))
-    )
-
-
-SQL_TOP_TERMS = r"""
-WITH toks AS (
-    SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS t FROM documents
-),
-tf AS (SELECT doc_id, t, count(*) AS tf FROM toks GROUP BY doc_id, t),
-dfc AS (SELECT t, count(*) AS df FROM tf GROUP BY t),
-rare AS (SELECT * FROM dfc WHERE df * 5 < (SELECT count(*) FROM documents))
-SELECT tf.doc_id, tf.t AS term, tf.tf, rare.df,
-       CAST(row_number() OVER (PARTITION BY tf.doc_id ORDER BY tf.tf DESC, rare.df ASC, tf.t ASC)
-            AS INTEGER) AS rnk
-FROM tf JOIN rare ON tf.t = rare.t
-QUALIFY rnk <= 3
-"""
-
-_B16_QUERIES = {"doc_top_terms": q_doc_top_terms}
-_B16_ORACLES = {"doc_top_terms": SQL_TOP_TERMS}
-
-_B15_QUERIES_FN = queries
-_B15_ORACLES_FN = oracle_sql
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _B15_QUERIES_FN()
-    out.update(_B16_QUERIES)
-    return out
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _B15_ORACLES_FN()
-    out.update(_B16_ORACLES)
-    return out
-
-# ---------------------------------------------------------------------------
-# batch 17 (round 3): driver-gate consolidation.
-#
-# The driver's correctness gate checks the FIRST 50 ``queries()`` entries in
-# insertion order (round 2 shipped 64 and the newest 14 got no gate row), so
-# the exported contract is consolidated to EXACTLY 50 entries with the
-# previously-unchecked capability classes FIRST.  No capability is dropped:
-# overlapping queries are merged into parity/suite queries whose oracles are
-# composed from the SAME SQL building blocks (joined subqueries / tagged
-# unions), so every merged entry still carries a full value-hash gate — and
-# the parity merges are STRONGER than the originals (two physical strategies
-# must now agree row-by-row inside one gated result).  The full un-merged
-# catalog stays available as ``all_queries()`` / ``all_oracle_sql()`` for the
-# bench harness and local debugging.
-# ---------------------------------------------------------------------------
-
-
-def q_lag_lead_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W3 lag features + lead targets in one window pass (merged gate entry:
-    lag_features + lead_targets)."""
-    t = transcripts_from_events(spark, sf_dir)
-    return _ts_us(with_lead_targets(with_lag_features(t)), "ts")
-
-
-SQL_LAG_LEAD = f"""{WITH_T}
-SELECT conv_id, turn_idx, role, text, tool,
-       lag(role) OVER ({W_SQL}) AS prev_role_1,
-       lag(tool) OVER ({W_SQL}) AS prev_tool_1,
-       {SECS} - lag({SECS}) OVER ({W_SQL}) AS ts_delta_s_1,
-       lead(role) OVER ({W_SQL}) AS lead_role_1,
-       lead(text) OVER ({W_SQL}) AS lead_text_1,
-       epoch_us(ts) AS ts_us
-FROM transcripts
-"""
-
-
-def q_rolling_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W4 rows-frame + range-frame rolling aggregates sharing one sort
-    (merged gate entry: rolling_rows + rolling_range)."""
-    t = transcripts_from_events(spark, sf_dir).withColumn("text_len", F.length("text").cast("long"))
-    out = with_rolling_rows(t, F.col("text_len"), k=5, out_prefix="chars")
-    out = with_rolling_range(out, F.col("text_len"), seconds=3600, out_prefix="chars")
-    return _ts_us(out.withColumn("chars_avg_5", F.round("chars_avg_5", 6)), "ts")
-
-
-SQL_ROLLING = f"""{WITH_T}
-SELECT conv_id, turn_idx, role, text, tool, epoch_us(ts) AS ts_us,
-       CAST(length(text) AS BIGINT) AS text_len,
-       CAST(sum(CAST(length(text) AS BIGINT)) OVER w5 AS BIGINT) AS chars_sum_5,
-       round(avg(CAST(length(text) AS BIGINT)) OVER w5, 6) AS chars_avg_5,
-       count(CAST(length(text) AS BIGINT)) OVER w5 AS chars_cnt_5,
-       CAST(sum(CAST(length(text) AS BIGINT)) OVER wr AS BIGINT) AS chars_rsum_3600s,
-       count(CAST(length(text) AS BIGINT)) OVER wr AS chars_rcnt_3600s
-FROM transcripts
-WINDOW w5 AS ({W_SQL} ROWS BETWEEN 4 PRECEDING AND CURRENT ROW),
-       wr AS (PARTITION BY conv_id ORDER BY epoch_us(ts)
-              RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW)
-"""
-
-
-def q_sessionize_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W5 sessionization, BOTH physical paths in one gated result: window-sum
-    and grouped-map pandas session ids joined per turn — the oracle emits the
-    same SQL session id under both aliases, so any divergence between the two
-    implementations value-hash-fails the gate (merged: sessionize_window +
-    sessionize_grouped)."""
-    t = transcripts_from_events(spark, sf_dir)
-    w = sessionize(t, gap_seconds=1800).withColumnRenamed("session_id", "session_id_window")
-    g = sessionize_grouped(t, gap_seconds=1800).select(
-        "conv_id", "turn_idx", F.col("session_id").alias("session_id_grouped")
-    )
-    return _ts_us(w.join(g, ["conv_id", "turn_idx"]), "ts")
-
-
-_SESS_EXPR = f"""CAST(sum(CASE WHEN delta IS NULL OR delta > 1800 THEN 1 ELSE 0 END)
-            OVER ({W_SQL} ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS INTEGER)"""
-SQL_SESSIONIZE_PARITY = f"""{WITH_T},
-g AS (
-    SELECT *, {SECS} - lag({SECS}) OVER ({W_SQL}) AS delta
-    FROM transcripts
-)
-SELECT conv_id, turn_idx, role, text, tool, epoch_us(ts) AS ts_us,
-       {_SESS_EXPR} AS session_id_window,
-       {_SESS_EXPR} AS session_id_grouped
-FROM g
-"""
-
-
-def q_asof_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J5 as-of join, BOTH physical strategies in one gated result: the
-    interval-broadcast path's columns plus the cogrouped merge_asof path's
-    columns (suffix _cg) joined per turn; the oracle duplicates the single
-    ASOF JOIN answer under both names (merged: asof_broadcast_range +
-    asof_cogrouped)."""
-    t = transcripts_from_events(spark, sf_dir)
-    d = tool_dim_from_events(spark, sf_dir)
-    a = asof_join_broadcast_range(t, d, key="tool", ts_col="ts")
-    c = asof_join_cogrouped(t, d, key="tool", ts_col="ts").select(
-        "conv_id",
-        "turn_idx",
-        F.col("tool_category").alias("tool_category_cg"),
-        F.col("cost_weight").alias("cost_weight_cg"),
-        F.col("matched_effective_from").alias("matched_effective_from_cg"),
-    )
-    out = a.join(c, ["conv_id", "turn_idx"])
-    return _ts_us(out, "ts", "matched_effective_from", "matched_effective_from_cg")
-
-
-SQL_ASOF_PARITY = f"""{WITH_TD}
-SELECT t.conv_id, t.turn_idx, t.role, t.text, t.tool, epoch_us(t.ts) AS ts_us,
-       d.tool_category, d.cost_weight,
-       epoch_us(d.effective_from) AS matched_effective_from_us,
-       d.tool_category AS tool_category_cg, d.cost_weight AS cost_weight_cg,
-       epoch_us(d.effective_from) AS matched_effective_from_cg_us
-FROM transcripts t
-ASOF LEFT JOIN tool_dim d
-  ON t.tool = d.tool AND t.ts >= d.effective_from
-"""
-
-
-def q_asof_dim_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The remaining two as-of strategies in one gated result: union-fill on
-    the HIGH-cardinality conv_dim key plus the pinned-snapshot broadcast on
-    the tool key (prefix pinned_) joined per turn (merged:
-    asof_conv_dim_union_fill + asof_pinned_snapshot)."""
-    from ipl_dagster_pipeline_spark.operators.asof import asof_join_union_fill
-
-    t = transcripts_from_events(spark, sf_dir)
-    cd = conv_dim_from_events(spark, sf_dir)
-    td = tool_dim_from_events(spark, sf_dir)
-    u = asof_join_union_fill(t, cd, key="conv_id", ts_col="ts", dim_ts="snapshot_ts")
-    p = asof_snapshot_broadcast(t, td, key="tool", as_of=AS_OF_PIN).select(
-        "conv_id",
-        "turn_idx",
-        F.col("tool_category").alias("pinned_tool_category"),
-        F.col("cost_weight").alias("pinned_cost_weight"),
-        F.col("matched_effective_from").alias("pinned_effective_from"),
-    )
-    out = u.join(p, ["conv_id", "turn_idx"])
-    return _ts_us(out, "ts", "matched_effective_from", "pinned_effective_from")
-
-
-SQL_ASOF_DIM_PARITY = f"""WITH {TRANSCRIPTS_CTE.strip()}, {CONV_DIM_CTE.strip()}, {TOOL_DIM_CTE.strip()},
-pinned AS (
-    SELECT tool, effective_from AS pinned_effective_from, tool_category, cost_weight
-    FROM tool_dim
-    WHERE effective_from <= TIMESTAMP '{AS_OF_PIN}'
-    QUALIFY row_number() OVER (PARTITION BY tool ORDER BY effective_from DESC) = 1
-)
-SELECT t.conv_id, t.turn_idx, t.role, t.text, t.tool, epoch_us(t.ts) AS ts_us,
-       d.cohort, epoch_us(d.snapshot_ts) AS matched_effective_from_us,
-       p.tool_category AS pinned_tool_category, p.cost_weight AS pinned_cost_weight,
-       epoch_us(p.pinned_effective_from) AS pinned_effective_from_us
-FROM transcripts t
-ASOF LEFT JOIN conv_dim d ON t.conv_id = d.conv_id AND t.ts >= d.snapshot_ts
-LEFT JOIN pinned p ON t.tool = p.tool
-"""
-
-
-def q_scalar_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F1/F6/F12/F13/F15 scalar parity in one gated result (merged:
-    scalar_extras + epoch_parse)."""
-    base = q_scalar_extras(spark, sf_dir)
-    ep = q_epoch_parse(spark, sf_dir)
-    return base.join(ep, "event_id")
-
-
-SQL_SCALAR_SUITE = f"""
-SELECT a.*, b.epoch_s, b.parsed_ts_us, b.bad_ts_us
-FROM ({SQL_SCALAR_EXTRAS}) a JOIN ({SQL_EPOCH}) b USING (event_id)
-"""
-
-
-def q_q5_enriched(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q5-style revenue rollup joined with the broadcast enrich chain's
-    per-nation order stats (merged: q5_revenue_by_nation + broadcast_enrich)."""
-    q5 = q_revenue_by_nation(spark, sf_dir)
-    be = q_broadcast_enrich(spark, sf_dir)
-    return q5.join(be, "n_name")
-
-
-SQL_Q5_ENRICHED = f"""
-SELECT a.n_name, a.revenue, a.n_items, b.r_name, b.n_orders, b.total_price
-FROM ({SQL_REVENUE}) a JOIN ({SQL_BROADCAST_ENRICH}) b USING (n_name)
-"""
-
-
-def q_join_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J3 anti-join + J4 semi-join probes as one tagged union (merged:
-    anti_join_customers + semi_join_parts)."""
-    anti = q_anti_join(spark, sf_dir).select(
-        F.lit("anti_customer_no_orders").alias("probe"),
-        F.col("c_custkey").cast("long").alias("key"),
-        F.col("c_name").alias("name"),
-        F.col("c_mktsegment").alias("detail"),
-    )
-    semi = q_semi_join(spark, sf_dir).select(
-        F.lit("semi_part_in_lineitem").alias("probe"),
-        F.col("p_partkey").cast("long").alias("key"),
-        F.col("p_name").alias("name"),
-        F.col("p_brand").alias("detail"),
-    )
-    return anti.unionByName(semi)
-
-
-SQL_JOIN_FILTERS = """
-SELECT 'anti_customer_no_orders' AS probe, CAST(c_custkey AS BIGINT) AS key,
-       c_name AS name, c_mktsegment AS detail
-FROM customer
-WHERE c_custkey NOT IN (SELECT o_custkey FROM orders)
-UNION ALL
-SELECT 'semi_part_in_lineitem', CAST(p_partkey AS BIGINT), p_name, p_brand
-FROM part
-WHERE p_partkey IN (SELECT l_partkey FROM lineitem)
-"""
-
-
-def q_user_event_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A2 distinct-group probe + A3 latest-per-key joined per user (merged:
-    latest_event_per_user + distinct_group_probe)."""
-    latest = q_latest_event_per_user(spark, sf_dir).select(
-        "user_id",
-        F.col("event_id").alias("latest_event_id"),
-        F.col("event_type").alias("latest_event_type"),
-        F.col("ts_us").alias("latest_ts_us"),
-    )
-    probe = q_distinct_group_probe(spark, sf_dir)
-    return latest.join(probe, "user_id")
-
-
-SQL_USER_EVENT_STATS = f"""
-SELECT l.user_id, l.event_id AS latest_event_id, l.event_type AS latest_event_type,
-       l.ts_us AS latest_ts_us, p.n_types, p.single_type, p.first_type
-FROM ({SQL_LATEST_EVENT}) l JOIN ({SQL_DISTINCT_PROBE}) p USING (user_id)
-"""
-
-
-def q_doc_textstats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The full per-document text-analysis block in one pass: token counts,
-    quality scores, language ID, content fingerprint (merged:
-    doc_token_counts + doc_quality_scores + doc_lang_id + doc_fingerprint)."""
-    docs = _read(spark, sf_dir, "documents")
-    out = with_fingerprint(with_lang_id(with_quality_scores(with_token_counts(docs))))
-    return out.select(
-        "doc_id", "lang", "source", "n_ws_tokens", "n_re_tokens",
-        "n_chars", "alpha_ratio", "punct_ratio", "mean_word_len", "stopword_ratio",
-        "score_en", "score_de", "score_es", "score_fr", "score_zh", "lang_pred",
-        "fp", "norm_len",
-    )
-
-
-SQL_DOC_TEXTSTATS = f"""
-SELECT t.doc_id, t.lang, t.source, t.n_ws_tokens, t.n_re_tokens,
-       q.n_chars, q.alpha_ratio, q.punct_ratio, q.mean_word_len, q.stopword_ratio,
-       l.score_en, l.score_de, l.score_es, l.score_fr, l.score_zh, l.lang_pred,
-       f.fp, f.norm_len
-FROM ({SQL_DOC_TOKENS}) t
-JOIN ({SQL_DOC_QUALITY}) q USING (doc_id)
-JOIN ({SQL_DOC_LANG}) l USING (doc_id)
-JOIN ({SQL_DOC_FP}) f USING (doc_id)
-"""
-
-
-def q_media_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Media decode features enriched with the latest-per-source rollup
-    (merged: media_decode_features + media_latest_per_source)."""
-    decode = q_media_features(spark, sf_dir)
-    latest = q_media_latest(spark, sf_dir)
-    return decode.join(F.broadcast(latest), "media_type", "left")
-
-
-SQL_MEDIA_SUITE = f"""
-SELECT d.*, l.source, l.latest_media_id, l.n_items
-FROM ({SQL_MEDIA_DECODE}) d LEFT JOIN ({SQL_MEDIA_LATEST}) l USING (media_type)
-"""
-
-
-def q_emb_ann_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Both approximate ANN paths (hyperplane LSH + IVF) as one tagged union,
-    each row carrying the ``within_bf_bound`` invariant vs the exact
-    brute-force ranking (merged: emb_lsh_topk + emb_ivf_topk; approximate by
-    design -> rows-only, invariants asserted in tests/test_trainingdata.py)."""
-    lsh = q_lsh_topk(spark, sf_dir).withColumn("method", F.lit("lsh"))
-    ivf = q_emb_ivf_topk(spark, sf_dir).withColumn("method", F.lit("ivf"))
-    return lsh.unionByName(ivf)
-
-
-_B17_QUERIES = {
-    "lag_lead_features": q_lag_lead_features,
-    "rolling_features": q_rolling_features,
-    "sessionize_parity": q_sessionize_parity,
-    "asof_parity": q_asof_parity,
-    "asof_dim_parity": q_asof_dim_parity,
-    "scalar_suite": q_scalar_suite,
-    "q5_revenue_enriched": q_q5_enriched,
-    "join_filters": q_join_filters,
-    "user_event_stats": q_user_event_stats,
-    "doc_textstats": q_doc_textstats,
-    "media_suite": q_media_suite,
-    "emb_ann_parity": q_emb_ann_parity,
-}
-_B17_ORACLES = {
-    "lag_lead_features": SQL_LAG_LEAD,
-    "rolling_features": SQL_ROLLING,
-    "sessionize_parity": SQL_SESSIONIZE_PARITY,
-    "asof_parity": SQL_ASOF_PARITY,
-    "asof_dim_parity": SQL_ASOF_DIM_PARITY,
-    "scalar_suite": SQL_SCALAR_SUITE,
-    "q5_revenue_enriched": SQL_Q5_ENRICHED,
-    "join_filters": SQL_JOIN_FILTERS,
-    "user_event_stats": SQL_USER_EVENT_STATS,
-    "doc_textstats": SQL_DOC_TEXTSTATS,
-    "media_suite": SQL_MEDIA_SUITE,
-    # emb_ann_parity: intentionally no oracle (approximate, rows-only)
-}
-
-_B16_QUERIES_FN = queries
-_B16_ORACLES_FN = oracle_sql
 
 # The 50 gate entries, previously-unchecked capability classes FIRST (the
 # driver checks the first 50 in insertion order).
@@ -2861,3847 +226,18 @@ DRIVER_QUERY_ORDER = [
 def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """The full un-merged catalog (pre-consolidation names + merged suites) —
     used by bench.py and scripts/check_oracles.py --all."""
-    out = _B16_QUERIES_FN()
-    out.update(_B17_QUERIES)
-    return out
+    return {name: fn for name, (fn, _) in CATALOG.items()}
 
 
 def all_oracle_sql() -> dict[str, str]:
-    out = _B16_ORACLES_FN()
-    out.update(_B17_ORACLES)
-    return out
+    return {name: sql for name, (_, sql) in CATALOG.items() if sql is not None}
 
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
+def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q = all_queries()
     return {k: q[k] for k in DRIVER_QUERY_ORDER}
 
 
-def oracle_sql() -> dict[str, str]:  # noqa: F811
+def oracle_sql() -> dict[str, str]:
     o = all_oracle_sql()
     return {k: o[k] for k in DRIVER_QUERY_ORDER if k in o}
-
-# ---------------------------------------------------------------------------
-# batch 18 (round 3): deterministic stratified sampling (source-mixture
-# weighting).  Catalog-only (the exported gate stays at exactly 50 entries);
-# oracle-checked via scripts/check_oracles.py --all.
-# ---------------------------------------------------------------------------
-
-from ipl_dagster_pipeline_spark.operators.sampling import sample_stratified
-
-_STRATA_FRACS = {"en": 0.5, "de": 1.0, "zh": 0.25}
-_STRATA_DEFAULT = 0.75
-
-
-def _null_stratum(df: DataFrame, col: str, mod: int) -> DataFrame:
-    """Deterministically nullify ``col`` for doc_id % mod == 0 — an
-    adversarial NULL stratum injected into the gated queries so the driver
-    value-hash exercises null-group-key handling (round-3 verdict item:
-    'exactly the class of bug the gate can't see' when fixtures have no null
-    strata).  Portable: the same CASE renders in the DuckDB oracles."""
-    return df.withColumn(
-        col,
-        F.when(F.col("doc_id") % mod == 0, F.lit(None).cast("string")).otherwise(F.col(col)),
-    )
-
-
-def q_doc_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Source-mixture weighting: keep 50% of en, all of de, 25% of zh, 75% of
-    everything else (incl. the injected NULL stratum) — deterministic per-doc
-    hash buckets, pure projection + filter (no RNG, no sampleBy driver
-    round-trip), bit-identical on any engine/parallelism."""
-    docs = _null_stratum(_read(spark, sf_dir, "documents"), "lang", 11)
-    out = sample_stratified(
-        docs, strata_col="lang", key_col="doc_id", fractions=_STRATA_FRACS,
-        default_fraction=_STRATA_DEFAULT,
-    )
-    return out.select("doc_id", "lang", "source")
-
-
-_STRATA_BOUND_SQL = "CASE " + " ".join(
-    f"WHEN lang = '{k}' THEN {round(v * 10000)}" for k, v in _STRATA_FRACS.items()
-) + f" ELSE {round(_STRATA_DEFAULT * 10000)} END"
-
-SQL_STRATIFIED = f"""
-SELECT doc_id, lang, source
-FROM (SELECT doc_id, CASE WHEN doc_id % 11 = 0 THEN NULL ELSE lang END AS lang, source
-      FROM documents)
-WHERE {_duck_hash(13, "coalesce(CAST(doc_id AS VARCHAR), '<null>')")} % 10000
-      < {_STRATA_BOUND_SQL}
-"""
-
-_B17_ALL_QUERIES_FN = all_queries
-_B17_ALL_ORACLES_FN = all_oracle_sql
-
-
-def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _B17_ALL_QUERIES_FN()
-    out.update({"doc_stratified_sample": q_doc_stratified_sample})
-    return out
-
-
-def all_oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _B17_ALL_ORACLES_FN()
-    out.update({"doc_stratified_sample": SQL_STRATIFIED})
-    return out
-
-# ---------------------------------------------------------------------------
-# batch 19 (round 3): value-hash oracle for the deterministic LSH ANN path.
-# The hyperplane construction is hash-derived (no RNG), so DuckDB can replay
-# the EXACT buckets from shared sign literals — upgrading the LSH top-k from
-# rows-only to a full value-hash gate (catalog/--all; the exported gate keeps
-# the rows-only parity union because its IVF half is learned/engine-internal).
-# ---------------------------------------------------------------------------
-
-_LT_PLANES, _LT_TABLES, _LT_DIM, _LT_K, _LT_NQ = 8, 4, 64, 5, 10
-
-
-def q_lsh_topk_oracle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The pure LSH ANN result (no brute-force columns) so the generated
-    oracle can value-hash it: same lsh_topk call as the parity entry."""
-    emb = _read(spark, sf_dir, "embeddings")
-    return lsh_topk(
-        emb, query_ids=list(range(_LT_NQ)), k=_LT_K,
-        n_planes=_LT_PLANES, n_tables=_LT_TABLES, dim=_LT_DIM,
-    )
-
-
-def _lt_bucket_sql(t: int) -> str:
-    terms = []
-    for p in range(_LT_PLANES):
-        signs = hyperplane_signs(t * _LT_PLANES + p, _LT_DIM)
-        arr = "[" + ", ".join("1.0" if s > 0 else "-1.0" for s in signs) + "]"
-        terms.append(f"(CASE WHEN list_dot_product(v, {arr}) > 0 THEN {1 << p} ELSE 0 END)")
-    return " + ".join(terms)
-
-
-_LT_BANDS_SQL = "\n    UNION ALL\n    ".join(
-    f"SELECT vec_id, {t} AS tbl, {_lt_bucket_sql(t)} AS bucket FROM v" for t in range(_LT_TABLES)
-)
-
-SQL_LSH_TOPK = f"""
-WITH v AS (
-    SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings
-),
-b AS (
-    {_LT_BANDS_SQL}
-),
-qb AS (SELECT vec_id AS query_id, tbl, bucket FROM b WHERE vec_id < {_LT_NQ}),
-cand AS (
-    SELECT DISTINCT qb.query_id, b.vec_id
-    FROM b JOIN qb USING (tbl, bucket)
-    WHERE b.vec_id <> qb.query_id
-),
-p AS (
-    SELECT cand.query_id, cand.vec_id AS neighbor_id,
-           round(list_dot_product(q.v, c.v)
-                 / (sqrt(list_dot_product(q.v, q.v)) * sqrt(list_dot_product(c.v, c.v))), 6) AS cos
-    FROM cand
-    JOIN v q ON q.vec_id = cand.query_id
-    JOIN v c ON c.vec_id = cand.vec_id
-)
-SELECT query_id, neighbor_id, cos,
-       CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS INTEGER) AS rnk
-FROM p
-QUALIFY rnk <= {_LT_K}
-"""
-
-_B18_ALL_QUERIES_FN = all_queries
-_B18_ALL_ORACLES_FN = all_oracle_sql
-
-
-def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _B18_ALL_QUERIES_FN()
-    out.update({"emb_lsh_topk_oracle": q_lsh_topk_oracle})
-    return out
-
-
-def all_oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _B18_ALL_ORACLES_FN()
-    out.update({"emb_lsh_topk_oracle": SQL_LSH_TOPK})
-    return out
-
-# ---------------------------------------------------------------------------
-# batch 20 (round 3): mixture upsampling with fractional epochs, per-source
-# token-budget selection on a KEYED distributed prefix sum, and deterministic
-# corpus shuffle + balanced shard assignment on a global prefix sum.
-# Catalog-only (the exported gate stays at exactly 50 entries); oracle-checked
-# via scripts/check_oracles.py --all.  All three use generated oracles: the
-# DuckDB SQL is rendered from the SAME Python constants/seeds as the Spark
-# path, so every op gets a full value-hash gate.
-# ---------------------------------------------------------------------------
-
-from ipl_dagster_pipeline_spark.operators.sampling import (
-    mixture_epochs,
-    shuffle_shards,
-    token_budget_select,
-)
-
-_MIX_EPOCHS = {"en": 0.6, "de": 2.3, "zh": 1.0}
-_MIX_DEFAULT = 1.5
-_MIX_SEED = 29
-
-
-def q_doc_mixture_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Temperature-reweighted mixture with UPSAMPLING: 0.6 epochs of en,
-    2.3 epochs of de, 1 of zh, 1.5 of the rest — floor(e) copies per doc plus
-    one more iff the doc's hash bucket < frac(e).  Deterministic (no RNG),
-    pure projection + explode, each copy tagged with its epoch index.  The
-    injected NULL lang stratum takes the default epoch weight."""
-    docs = _null_stratum(_read(spark, sf_dir, "documents"), "lang", 11)
-    out = mixture_epochs(
-        docs, strata_col="lang", key_col="doc_id", epochs=_MIX_EPOCHS,
-        default_epochs=_MIX_DEFAULT, seed=_MIX_SEED,
-    )
-    return out.select("doc_id", "lang", "epoch")
-
-
-def _mix_case(selector) -> str:
-    dw = selector(_MIX_DEFAULT)
-    arms = " ".join(
-        f"WHEN lang = '{k}' THEN {selector(v)}" for k, v in _MIX_EPOCHS.items()
-    )
-    return f"CASE {arms} ELSE {dw} END"
-
-
-SQL_MIXTURE_EPOCHS = f"""
-WITH d AS (
-    SELECT doc_id, CASE WHEN doc_id % 11 = 0 THEN NULL ELSE lang END AS lang
-    FROM documents
-),
-n AS (
-    SELECT doc_id, lang,
-           {_mix_case(lambda e: int(e))}
-           + CASE WHEN {_duck_hash(_MIX_SEED, "coalesce(CAST(doc_id AS VARCHAR), '<null>')")} % 10000
-                       < {_mix_case(lambda e: round((e - int(e)) * 10000))}
-                  THEN 1 ELSE 0 END AS n_copies
-    FROM d
-)
-SELECT doc_id, lang, CAST(unnest(range(0, n_copies)) AS INTEGER) AS epoch
-FROM n
-WHERE n_copies > 0
-"""
-
-
-_TB_BUDGETS = {"src0": 800, "src1": 400}
-_TB_DEFAULT = 600
-_TB_SEED = 31
-
-
-def q_doc_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source token-budget selection ("800 tokens of src0, 400 of src1,
-    600 of everything else"): docs walk in portable-hash order per source,
-    kept while the running token total fits the budget.  The running total is
-    a KEYED two-phase distributed prefix sum — never a one-task-per-source
-    window, so a dominant source cannot become a straggler.  The injected
-    NULL source stratum (default budget) forces the null-safe offsets join
-    across partitions — the round-3 judge-reproduced bug class."""
-    docs = with_token_counts(_null_stratum(_read(spark, sf_dir, "documents"), "source", 7))
-    out = token_budget_select(
-        docs, strata_col="source", key_col="doc_id", token_col="n_ws_tokens",
-        budgets=_TB_BUDGETS, default_budget=_TB_DEFAULT, seed=_TB_SEED,
-    )
-    return out.select(
-        "doc_id", "source",
-        F.col("n_ws_tokens").cast("int").alias("n_tokens"),
-        F.col("cum_tokens").cast("long").alias("cum_tokens"),
-    )
-
-
-_TB_CASE = "CASE " + " ".join(
-    f"WHEN source = '{k}' THEN {v}" for k, v in _TB_BUDGETS.items()
-) + f" ELSE {_TB_DEFAULT} END"
-
-SQL_TOKEN_BUDGET = f"""
-WITH t AS (
-    SELECT doc_id, CASE WHEN doc_id % 7 = 0 THEN NULL ELSE source END AS source,
-           CAST(length(regexp_extract_all(text, '\\S+')) AS INTEGER) AS n_tokens,
-           {_duck_hash(_TB_SEED, "coalesce(CAST(doc_id AS VARCHAR), '<null>')")} AS h
-    FROM documents
-),
-c AS (
-    SELECT doc_id, source, n_tokens,
-           CAST(sum(n_tokens) OVER (
-               PARTITION BY source ORDER BY h, doc_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_tokens
-    FROM t
-)
-SELECT doc_id, source, n_tokens, cum_tokens
-FROM c
-WHERE cum_tokens <= {_TB_CASE}
-"""
-
-
-_SH_SHARDS = 8
-_SH_SEED = 37
-
-
-def q_doc_shuffle_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic global corpus shuffle (hash order) + round-robin shard
-    assignment: shuffle_pos is an exact corpus-wide row number computed as a
-    distributed prefix sum of 1s (range partition + broadcast offsets), never
-    a single-partition Window.orderBy."""
-    docs = _read(spark, sf_dir, "documents")
-    out = shuffle_shards(docs, key_col="doc_id", n_shards=_SH_SHARDS, seed=_SH_SEED)
-    return out.select("doc_id", "shuffle_pos", "shard")
-
-
-SQL_SHUFFLE_SHARDS = f"""
-WITH h AS (
-    SELECT doc_id,
-           {_duck_hash(_SH_SEED, "coalesce(CAST(doc_id AS VARCHAR), '<null>')")} AS h
-    FROM documents
-),
-p AS (
-    SELECT doc_id,
-           CAST(row_number() OVER (ORDER BY h, doc_id) - 1 AS BIGINT) AS shuffle_pos
-    FROM h
-)
-SELECT doc_id, shuffle_pos, CAST(shuffle_pos % {_SH_SHARDS} AS INTEGER) AS shard
-FROM p
-"""
-
-_B19_ALL_QUERIES_FN = all_queries
-_B19_ALL_ORACLES_FN = all_oracle_sql
-
-_B20_QUERIES = {
-    "doc_mixture_epochs": q_doc_mixture_epochs,
-    "doc_token_budget": q_doc_token_budget,
-    "doc_shuffle_shards": q_doc_shuffle_shards,
-}
-_B20_ORACLES = {
-    "doc_mixture_epochs": SQL_MIXTURE_EPOCHS,
-    "doc_token_budget": SQL_TOKEN_BUDGET,
-    "doc_shuffle_shards": SQL_SHUFFLE_SHARDS,
-}
-
-
-def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _B19_ALL_QUERIES_FN()
-    out.update(_B20_QUERIES)
-    return out
-
-
-def all_oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _B19_ALL_ORACLES_FN()
-    out.update(_B20_ORACLES)
-    return out
-
-# ---------------------------------------------------------------------------
-# batch 21 (round 3): exact per-group order statistics (corpus profiling).
-# Catalog-only; integer-exact lower-rank quantile selection so the DuckDB
-# value-hash holds bit-for-bit (no percentile interpolation).
-# ---------------------------------------------------------------------------
-
-from ipl_dagster_pipeline_spark.operators.profiling import group_quantiles
-
-_QP = {"p25": 25, "p50": 50, "p90": 90}
-
-
-def q_doc_length_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source doc-length profile: exact lower-rank p25/p50/p90 of n_chars
-    selected by integer rank arithmetic over a KEYED distributed prefix-sum
-    ranking — never percentile_approx, never a one-task-per-source sort.  The
-    injected NULL source stratum must survive with exact quantiles (null-safe
-    counts join — round-3 ADVICE bug class)."""
-    docs = _null_stratum(_read(spark, sf_dir, "documents"), "source", 7)
-    return group_quantiles(
-        docs, group_cols=["source"], value_col="n_chars", key_col="doc_id",
-        percents=_QP, count_col="n_docs",
-    )
-
-
-_QP_SELECTS = ",\n       ".join(
-    f"CAST(max(CASE WHEN rnk = ((n - 1) * {p}) // 100 + 1 THEN n_chars END) AS BIGINT) AS {name}"
-    for name, p in _QP.items()
-)
-
-SQL_LENGTH_QUANTILES = f"""
-WITH d AS (
-    SELECT doc_id, CASE WHEN doc_id % 7 = 0 THEN NULL ELSE source END AS source, n_chars
-    FROM documents
-),
-r AS (
-    SELECT source, n_chars, doc_id,
-           row_number() OVER (PARTITION BY source
-                              ORDER BY n_chars ASC NULLS FIRST, doc_id) AS rnk,
-           count(*) OVER (PARTITION BY source) AS n
-    FROM d
-)
-SELECT source, CAST(max(n) AS BIGINT) AS n_docs,
-       {_QP_SELECTS}
-FROM r
-GROUP BY source
-"""
-
-_B20_ALL_QUERIES_FN = all_queries
-_B20_ALL_ORACLES_FN = all_oracle_sql
-
-
-def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _B20_ALL_QUERIES_FN()
-    out.update({"doc_length_quantiles": q_doc_length_quantiles})
-    return out
-
-
-def all_oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _B20_ALL_ORACLES_FN()
-    out.update({"doc_length_quantiles": SQL_LENGTH_QUANTILES})
-    return out
-
-# ---------------------------------------------------------------------------
-# batch 22 (round 4): value-hash oracle for the IVF ANN path (round-3 verdict
-# item 2).  ``ivf_topk``'s learned k-means quantizer is engine-internal, so
-# its sibling ``ivf_topk_pinned`` pins the quantizer to a deterministic
-# hash-selected sample of corpus vectors — every step (centroid selection,
-# rounded-distance argmin assignment, probe ranking, exact cosine re-rank)
-# replays in DuckDB SQL from the SAME seed constant.  This promotes the IVF
-# capability from rows-only to a full value-hash driver row; the learned
-# variant stays in the catalog under the rows-only parity union.
-# ---------------------------------------------------------------------------
-
-from ipl_dagster_pipeline_spark.operators.similarity import ivf_topk_pinned
-
-_IVP_NC, _IVP_NP, _IVP_K, _IVP_NQ, _IVP_SEED = 16, 4, 5, 10, 43
-
-
-def q_ivf_topk_oracle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pinned-quantizer IVF ANN top-k (deterministic medoid-seeded cells,
-    n_probe nearest cells probed, exact cosine re-rank) — fully value-hashed
-    against the DuckDB replay of the identical quantizer."""
-    emb = _read(spark, sf_dir, "embeddings")
-    return ivf_topk_pinned(
-        emb, query_ids=list(range(_IVP_NQ)), k=_IVP_K,
-        n_clusters=_IVP_NC, n_probe=_IVP_NP, seed=_IVP_SEED,
-    )
-
-
-SQL_IVF_TOPK = f"""
-WITH v AS (
-    SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings
-),
-hh AS (
-    SELECT vec_id, v,
-           {_duck_hash(_IVP_SEED, "coalesce(CAST(vec_id AS VARCHAR), '<null>')")} AS h
-    FROM v
-),
-cent AS (
-    SELECT CAST(row_number() OVER (ORDER BY h, vec_id) - 1 AS INTEGER) AS cell, v AS cvec
-    FROM hh
-    QUALIFY row_number() OVER (ORDER BY h, vec_id) <= {_IVP_NC}
-),
-dists AS (
-    SELECT a.vec_id, c.cell,
-           round((list_dot_product(a.v, a.v) - 2.0 * list_dot_product(a.v, c.cvec))
-                 + list_dot_product(c.cvec, c.cvec), 6) AS d
-    FROM v a CROSS JOIN cent c
-),
-assigned AS (
-    SELECT vec_id, cell FROM dists
-    QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY d, cell) = 1
-),
-probes AS (
-    SELECT vec_id AS query_id, cell FROM dists
-    WHERE vec_id < {_IVP_NQ}
-    QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY d, cell) <= {_IVP_NP}
-),
-cand AS (
-    SELECT p.query_id, a.vec_id
-    FROM assigned a JOIN probes p USING (cell)
-    WHERE a.vec_id <> p.query_id
-),
-pr AS (
-    SELECT cand.query_id, cand.vec_id AS neighbor_id,
-           round(list_dot_product(q.v, c.v)
-                 / (sqrt(list_dot_product(q.v, q.v)) * sqrt(list_dot_product(c.v, c.v))), 6) AS cos
-    FROM cand
-    JOIN v q ON q.vec_id = cand.query_id
-    JOIN v c ON c.vec_id = cand.vec_id
-)
-SELECT query_id, neighbor_id, cos,
-       CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS INTEGER) AS rnk
-FROM pr
-QUALIFY rnk <= {_IVP_K}
-"""
-
-_B21_ALL_QUERIES_FN = all_queries
-_B21_ALL_ORACLES_FN = all_oracle_sql
-
-
-def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _B21_ALL_QUERIES_FN()
-    out.update({"emb_ivf_topk_oracle": q_ivf_topk_oracle})
-    return out
-
-
-def all_oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _B21_ALL_ORACLES_FN()
-    out.update({"emb_ivf_topk_oracle": SQL_IVF_TOPK})
-    return out
-
-# ---------------------------------------------------------------------------
-# batch 23 (round 4): exact all-pairs n-gram Jaccard dedup (the deterministic
-# complement of the MinHash path), SCD2 dimension validity-interval history,
-# and MERGE-upsert (SCD1) snapshot maintenance.  Catalog-only (the exported
-# gate stays at exactly 50 entries); oracle-checked via check_oracles --all.
-# ---------------------------------------------------------------------------
-
-from ipl_dagster_pipeline_spark.operators.dimensions import merge_upsert, scd2_history
-from ipl_dagster_pipeline_spark.operators.text_dedup import ngram_jaccard_pairs
-
-_NJ_THRESHOLD, _NJ_MAXDF = 0.5, 50
-
-
-def q_doc_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact all-pairs 5-gram Jaccard ≥ 0.5 over the discriminative shingle
-    space (df ≤ 50): inverted-index equi-join, df cap riding the join's own
-    shuffle, dropped-shingle count observable — no MinHash approximation."""
-    docs = _read(spark, sf_dir, "documents")
-    return ngram_jaccard_pairs(docs, threshold=_NJ_THRESHOLD, max_df=_NJ_MAXDF)
-
-
-SQL_NGRAM_JACCARD = f"""
-WITH {SHINGLE_CTE.strip()},
-df AS (
-    SELECT sh.doc_id, sh.s, count(*) OVER (PARTITION BY s) AS df FROM sh
-),
-rare AS (SELECT doc_id, s FROM df WHERE df <= {_NJ_MAXDF}),
-sizes AS (SELECT doc_id, count(*) AS n FROM rare GROUP BY doc_id),
-inter AS (
-    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_inter
-    FROM rare a JOIN rare b ON a.s = b.s AND a.doc_id < b.doc_id
-    GROUP BY 1, 2
-),
-j AS (
-    SELECT doc_a, doc_b,
-           round(CAST(n_inter AS DOUBLE) / (sa.n + sb.n - n_inter), 6) AS jaccard
-    FROM inter
-    JOIN sizes sa ON sa.doc_id = inter.doc_a
-    JOIN sizes sb ON sb.doc_id = inter.doc_b
-)
-SELECT doc_a, doc_b, jaccard FROM j WHERE jaccard >= {_NJ_THRESHOLD}
-"""
-
-
-def q_dim_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user event_type SCD2 history: half-open validity intervals with
-    consecutive no-op events collapsed — the dimension shape the as-of joins
-    consume for point-in-time lookups."""
-    ev = _read(spark, sf_dir, "events")
-    return scd2_history(
-        ev, key_cols=["user_id"], ts_col="ts", attr_cols=["event_type"],
-        tie_cols=["event_id"],
-    )
-
-
-SQL_SCD2_HISTORY = """
-WITH o AS (
-    SELECT user_id, ts, event_id, event_type,
-           lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev,
-           row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
-    FROM events
-),
-v AS (
-    SELECT user_id, event_type, ts AS valid_from, event_id
-    FROM o WHERE rn = 1 OR prev IS DISTINCT FROM event_type
-)
-SELECT user_id, event_type, valid_from,
-       lead(valid_from) OVER (PARTITION BY user_id ORDER BY valid_from, event_id) AS valid_to,
-       CAST(row_number() OVER (PARTITION BY user_id ORDER BY valid_from, event_id) AS INTEGER) AS version
-FROM v
-"""
-
-_MU_CUTOFF = "2024-01-03 00:00:00"
-
-
-def q_dim_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MERGE INTO semantics: the pre-cutoff per-user snapshot upserted with
-    every post-cutoff event (greatest event_id wins per user ACROSS target
-    and updates — late/stale change rows never regress a key; unmatched
-    users insert) — the next SCD1 snapshot as a pure DataFrame plan."""
-    ev = _read(spark, sf_dir, "events").select("user_id", "event_type", "value", "event_id", "ts")
-    cut = F.lit(_MU_CUTOFF).cast("timestamp_ntz")
-    w_latest = ev.filter(F.col("ts") < cut).withColumn(
-        "__rn",
-        F.row_number().over(Window.partitionBy("user_id").orderBy(F.col("event_id").desc())),
-    )
-    target = w_latest.filter(F.col("__rn") == 1).select("user_id", "event_type", "value", "event_id")
-    updates = ev.filter(F.col("ts") >= cut).select("user_id", "event_type", "value", "event_id")
-    merged = merge_upsert(target, updates, key_cols=["user_id"], order_col="event_id")
-    return merged.select("user_id", "event_type", "value", "event_id")
-
-
-SQL_MERGE_UPSERT = f"""
-WITH t AS (
-    SELECT user_id, event_type, value, event_id
-    FROM events WHERE ts < TIMESTAMP '{_MU_CUTOFF}'
-    QUALIFY row_number() OVER (PARTITION BY user_id ORDER BY event_id DESC) = 1
-),
-u AS (
-    SELECT user_id, event_type, value, event_id
-    FROM events WHERE ts >= TIMESTAMP '{_MU_CUTOFF}'
-),
-b AS (
-    SELECT *, 0 AS prio FROM t
-    UNION ALL
-    SELECT *, 1 AS prio FROM u
-)
-SELECT user_id, event_type, value, event_id
-FROM b
-QUALIFY row_number() OVER (PARTITION BY user_id ORDER BY event_id DESC NULLS LAST, prio DESC) = 1
-"""
-
-def q_dim_pit_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Point-in-time enrichment THROUGH the SCD2 intervals: each event joins
-    the dimension version whose half-open validity interval contains its ts
-    — the lookup shape the history table exists for.  An equi-join on the
-    dimension key plus an interval predicate: per-event fan-in is that key's
-    version count (dimension-sized), never a theta join over facts.
-
-    By construction every event falls in exactly one version (the intervals
-    partition each key's timeline), so row count == event count — temporal
-    leakage is structurally impossible (valid_from <= ts < valid_to)."""
-    ev = _read(spark, sf_dir, "events").select("event_id", "user_id", "ts")
-    hist = q_dim_scd2_history(spark, sf_dir)
-    j = ev.join(hist, on="user_id", how="left").filter(
-        (F.col("valid_from") <= F.col("ts"))
-        & (F.col("valid_to").isNull() | (F.col("ts") < F.col("valid_to")))
-    )
-    return j.select(
-        "event_id", "user_id", "ts",
-        F.col("event_type").alias("state_at_ts"),
-        "version",
-    )
-
-
-SQL_PIT_ENRICH = f"""
-WITH h AS ({SQL_SCD2_HISTORY})
-SELECT e.event_id, e.user_id, e.ts, h.event_type AS state_at_ts, h.version
-FROM events e
-JOIN h ON h.user_id = e.user_id
-      AND h.valid_from <= e.ts
-      AND (h.valid_to IS NULL OR e.ts < h.valid_to)
-"""
-
-_B22_ALL_QUERIES_FN = all_queries
-_B22_ALL_ORACLES_FN = all_oracle_sql
-
-_B23_QUERIES = {
-    "doc_ngram_jaccard": q_doc_ngram_jaccard,
-    "dim_scd2_history": q_dim_scd2_history,
-    "dim_merge_upsert": q_dim_merge_upsert,
-    "dim_pit_enrich": q_dim_pit_enrich,
-}
-_B23_ORACLES = {
-    "doc_ngram_jaccard": SQL_NGRAM_JACCARD,
-    "dim_scd2_history": SQL_SCD2_HISTORY,
-    "dim_merge_upsert": SQL_MERGE_UPSERT,
-    "dim_pit_enrich": SQL_PIT_ENRICH,
-}
-
-
-def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _B22_ALL_QUERIES_FN()
-    out.update(_B23_QUERIES)
-    return out
-
-
-def all_oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _B22_ALL_ORACLES_FN()
-    out.update(_B23_ORACLES)
-    return out
-
-# ---------------------------------------------------------------------------
-# batch 25 (round 4): multi-level OLAP aggregation (ROLLUP with explicit
-# grouping id — subtotal NULLs disambiguated from genuine NULL dims) and
-# exact fixed-width histogram profiling.  Catalog-only; value-hash oracles.
-# ---------------------------------------------------------------------------
-
-from ipl_dagster_pipeline_spark.operators.profiling import group_histogram
-from ipl_dagster_pipeline_spark.operators.relational import rollup_aggregate
-
-
-def q_events_rollup_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Daily × event-type ROLLUP in ONE shuffle: detail rows, per-type
-    subtotals, and the grand total, each tagged with grouping_id so a
-    subtotal NULL is distinguishable from a genuine NULL dim.  Values are
-    integer-cents so every level's sum is exact on any engine."""
-    ev = _read(spark, sf_dir, "events")
-    dimmed = ev.select(
-        F.col("event_type"),
-        F.date_format("ts", "yyyy-MM-dd").alias("day"),
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
-    )
-    return rollup_aggregate(
-        dimmed,
-        dims=["event_type", "day"],
-        aggs=[
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum("cents").alias("total_cents"),
-        ],
-    )
-
-
-SQL_ROLLUP_DAILY = """
-SELECT event_type, strftime(ts, '%Y-%m-%d') AS day,
-       CAST(2 * GROUPING(event_type) + GROUPING(strftime(ts, '%Y-%m-%d')) AS INTEGER) AS gid,
-       CAST(count(*) AS BIGINT) AS n_events,
-       CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS total_cents
-FROM events
-GROUP BY ROLLUP (event_type, strftime(ts, '%Y-%m-%d'))
-"""
-
-
-def q_doc_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact 100-char-wide length histogram per source (incl. the injected
-    NULL stratum): integer bin arithmetic, one map-side-combined shuffle,
-    output sized |groups|x|occupied bins|."""
-    docs = _null_stratum(_read(spark, sf_dir, "documents"), "source", 7)
-    return group_histogram(docs, ["source"], "n_chars", bin_width=100)
-
-
-SQL_LENGTH_HISTOGRAM = """
-SELECT source, bin, CAST(count(*) AS BIGINT) AS n_rows,
-       CAST(bin * 100 AS BIGINT) AS bin_lo
-FROM (SELECT CASE WHEN doc_id % 7 = 0 THEN NULL ELSE source END AS source,
-             CAST(floor(n_chars / 100.0) AS BIGINT) AS bin
-      FROM documents)
-GROUP BY 1, 2
-"""
-
-_B24_ALL_QUERIES_FN = all_queries
-_B24_ALL_ORACLES_FN = all_oracle_sql
-
-_B25_QUERIES = {
-    "events_rollup_daily": q_events_rollup_daily,
-    "doc_length_histogram": q_doc_length_histogram,
-}
-_B25_ORACLES = {
-    "events_rollup_daily": SQL_ROLLUP_DAILY,
-    "doc_length_histogram": SQL_LENGTH_HISTOGRAM,
-}
-
-
-def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _B24_ALL_QUERIES_FN()
-    out.update(_B25_QUERIES)
-    return out
-
-
-def all_oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _B24_ALL_ORACLES_FN()
-    out.update(_B25_ORACLES)
-    return out
-
-# ---------------------------------------------------------------------------
-# batch 26 (round 4): funnel/sequence analytics over event streams,
-# per-row-weight deterministic sampling, and edit-distance fuzzy matching.
-# Catalog-only; value-hash oracles.
-# ---------------------------------------------------------------------------
-
-from ipl_dagster_pipeline_spark.operators.sampling import sample_weighted
-
-_FUNNEL_WINDOW_S = 600
-
-
-def q_event_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sequence/funnel analytics: per user, how often an 'error' event is
-    followed by a 'click' within 600s, and the first such conversion time.
-
-    Scale shape: an equi-join on user_id with a bounded time-range
-    predicate — per-user fan-in is that user's error×click density inside
-    the window, never a cross join; the aggregation is map-side combined."""
-    ev = _read(spark, sf_dir, "events")
-    err = ev.filter(F.col("event_type") == "error").select(
-        "user_id", F.col("ts").alias("t0"), F.col("event_id").alias("err_id")
-    )
-    clk = ev.filter(F.col("event_type") == "click").select(
-        F.col("user_id").alias("u2"), F.col("ts").alias("t1")
-    )
-    hits = err.join(
-        clk,
-        (F.col("user_id") == F.col("u2"))
-        & (F.col("t1") > F.col("t0"))
-        & (F.col("t1") <= F.col("t0") + F.expr(f"INTERVAL {_FUNNEL_WINDOW_S} SECONDS")),
-    )
-    return hits.groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("n_pairs"),
-        F.countDistinct("err_id").alias("n_converting_errors"),
-        F.min("t1").alias("first_conversion"),
-    )
-
-
-SQL_EVENT_FUNNEL = f"""
-SELECT e.user_id,
-       CAST(count(*) AS BIGINT) AS n_pairs,
-       CAST(count(DISTINCT e.event_id) AS BIGINT) AS n_converting_errors,
-       min(c.ts) AS first_conversion
-FROM events e
-JOIN events c ON c.user_id = e.user_id
-             AND e.event_type = 'error' AND c.event_type = 'click'
-             AND c.ts > e.ts AND c.ts <= e.ts + INTERVAL {_FUNNEL_WINDOW_S} SECOND
-GROUP BY e.user_id
-"""
-
-
-def q_doc_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quality-proportional retention: keep each doc with probability
-    min(1, n_chars/1000) — per-ROW weight, deterministic hash buckets, pure
-    projection + filter (the recipe step 'keep long docs, thin short ones')."""
-    docs = _read(spark, sf_dir, "documents")
-    w = F.least(F.lit(1.0), F.col("n_chars") / 1000.0)
-    return sample_weighted(docs, "doc_id", w, seed=17).select("doc_id", "source", "n_chars")
-
-
-SQL_WEIGHTED_SAMPLE = f"""
-SELECT doc_id, source, n_chars
-FROM documents
-WHERE {_duck_hash(17, "coalesce(CAST(doc_id AS VARCHAR), '<null>')")} % 10000
-      < CAST(round(least(1.0, n_chars / 1000.0) * 10000) AS BIGINT)
-"""
-
-
-def q_doc_prefix_editdist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fuzzy near-match scoring: Levenshtein distance between the 40-char
-    normalized prefixes of deterministically paired docs (id, id+50) — the
-    edit-distance complement of Jaccard/MinHash for short-field matching
-    (titles, names).  JVM-side levenshtein, no UDF."""
-    docs = _read(spark, sf_dir, "documents")
-    a = docs.select(
-        F.col("doc_id").alias("doc_a"), F.substring("text", 1, 40).alias("pa")
-    )
-    b = docs.select(
-        (F.col("doc_id") - 50).alias("doc_a"),
-        F.col("doc_id").alias("doc_b"),
-        F.substring("text", 1, 40).alias("pb"),
-    )
-    return (
-        a.join(b, "doc_a")
-        .select("doc_a", "doc_b", F.levenshtein("pa", "pb").cast("int").alias("edit_dist"))
-    )
-
-
-SQL_PREFIX_EDITDIST = """
-SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-       CAST(levenshtein(substring(a.text, 1, 40), substring(b.text, 1, 40)) AS INTEGER) AS edit_dist
-FROM documents a JOIN documents b ON b.doc_id = a.doc_id + 50
-"""
-
-_B25_ALL_QUERIES_FN = all_queries
-_B25_ALL_ORACLES_FN = all_oracle_sql
-
-_B26_QUERIES = {
-    "event_funnel": q_event_funnel,
-    "doc_weighted_sample": q_doc_weighted_sample,
-    "doc_prefix_editdist": q_doc_prefix_editdist,
-}
-_B26_ORACLES = {
-    "event_funnel": SQL_EVENT_FUNNEL,
-    "doc_weighted_sample": SQL_WEIGHTED_SAMPLE,
-    "doc_prefix_editdist": SQL_PREFIX_EDITDIST,
-}
-
-
-def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _B25_ALL_QUERIES_FN()
-    out.update(_B26_QUERIES)
-    return out
-
-
-def all_oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _B25_ALL_ORACLES_FN()
-    out.update(_B26_ORACLES)
-    return out
-
-# ---------------------------------------------------------------------------
-# batch 27 (round 4): BM25 lexical ranking (rational IDF + fixed-order
-# summation — no ln, no engine-ordered float SUM, fully value-hashable) and
-# robust median/MAD outlier detection on exact order statistics.
-# Catalog-only; value-hash oracles.
-# ---------------------------------------------------------------------------
-
-from ipl_dagster_pipeline_spark.operators.profiling import robust_outliers
-from ipl_dagster_pipeline_spark.operators.ranking import bm25_scores
-
-_BM25_TERMS = ["table", "query", "hash", "window"]
-_BM25_K1, _BM25_B = 1.2, 0.75
-
-
-def q_doc_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BM25 relevance of every document against a fixed query-term set —
-    the lexical-retrieval complement of the embedding ANN family.  Rational
-    IDF and fixed-order per-term summation keep every float op
-    IEEE-identical across engines."""
-    docs = _read(spark, sf_dir, "documents")
-    return bm25_scores(docs, _BM25_TERMS, k1=_BM25_K1, b=_BM25_B)
-
-
-def _bm25_sql() -> str:
-    terms_in = ", ".join(f"'{t}'" for t in _BM25_TERMS)
-    k1p1 = repr(_BM25_K1 + 1.0)
-    one_minus_b = repr(1.0 - _BM25_B)
-    per_term = ",\n       ".join(
-        f"coalesce(max(CASE WHEN t = '{t}' THEN s END), 0.0) AS s_{i}"
-        for i, t in enumerate(_BM25_TERMS)
-    )
-    total = " + ".join(f"s_{i}" for i in range(len(_BM25_TERMS)))
-    return f"""
-WITH toks AS (
-    SELECT doc_id, unnest(regexp_split_to_array(lower(text), '\\s+')) AS t
-    FROM documents
-),
-dl AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS dl FROM toks GROUP BY doc_id),
-tot AS (SELECT CAST(count(*) AS BIGINT) AS n_docs, CAST(sum(dl) AS BIGINT) AS tot_len FROM dl),
-tf AS (
-    SELECT doc_id, t, CAST(count(*) AS BIGINT) AS tf
-    FROM toks WHERE t IN ({terms_in}) GROUP BY doc_id, t
-),
-dfq AS (SELECT t, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY t),
-s AS (
-    SELECT tf.doc_id, tf.t,
-           ((n_docs - df + 0.5) / (df + 0.5)) * (tf * {k1p1})
-           / (tf + {_BM25_K1} * ({one_minus_b} + {_BM25_B} * (dl / (tot_len / n_docs)))) AS s
-    FROM tf
-    JOIN dfq USING (t)
-    JOIN dl USING (doc_id)
-    CROSS JOIN tot
-),
-p AS (
-    SELECT doc_id,
-       {per_term},
-       CAST(count(*) AS INTEGER) AS n_terms_matched
-    FROM s GROUP BY doc_id
-)
-SELECT doc_id, round(0.0 + {total}, 6) AS score, n_terms_matched FROM p
-"""
-
-
-SQL_DOC_BM25 = _bm25_sql()
-
-
-def q_doc_length_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Robust per-source length outliers: |n_chars − median| > 3·MAD, both
-    statistics exact lower-rank order statistics on the keyed prefix-sum
-    ranking — all-integer decision, null stratum included."""
-    docs = _null_stratum(_read(spark, sf_dir, "documents"), "source", 7).select(
-        "doc_id", "source", "n_chars"
-    )
-    return robust_outliers(docs, ["source"], "n_chars", "doc_id", n_mads=3)
-
-
-SQL_LENGTH_OUTLIERS = """
-WITH d AS (SELECT CASE WHEN doc_id % 7 = 0 THEN NULL ELSE source END AS source, doc_id, n_chars
-           FROM documents),
-r AS (SELECT source, doc_id, n_chars,
-        row_number() OVER (PARTITION BY source ORDER BY n_chars ASC NULLS FIRST, doc_id) AS rnk,
-        count(*) OVER (PARTITION BY source) AS n FROM d),
-med AS (SELECT source, max(CASE WHEN rnk = ((n-1)*50)//100 + 1 THEN n_chars END) AS med FROM r GROUP BY source),
-dev AS (SELECT d.source, d.doc_id, d.n_chars, med.med, abs(d.n_chars - med.med) AS adev
-        FROM d JOIN med ON d.source IS NOT DISTINCT FROM med.source),
-r2 AS (SELECT source, doc_id, adev,
-        row_number() OVER (PARTITION BY source ORDER BY adev ASC NULLS FIRST, doc_id) AS rnk2,
-        count(*) OVER (PARTITION BY source) AS n2 FROM dev),
-mad AS (SELECT source, max(CASE WHEN rnk2 = ((n2-1)*50)//100 + 1 THEN adev END) AS mad FROM r2 GROUP BY source)
-SELECT dev.doc_id, dev.source, dev.n_chars, CAST(dev.med AS BIGINT) AS med, CAST(mad.mad AS BIGINT) AS mad
-FROM dev JOIN mad ON dev.source IS NOT DISTINCT FROM mad.source
-WHERE dev.adev > 3 * mad.mad
-"""
-
-_B26_ALL_QUERIES_FN = all_queries
-_B26_ALL_ORACLES_FN = all_oracle_sql
-
-_B27_QUERIES = {
-    "doc_bm25": q_doc_bm25,
-    "doc_length_outliers": q_doc_length_outliers,
-}
-_B27_ORACLES = {
-    "doc_bm25": SQL_DOC_BM25,
-    "doc_length_outliers": SQL_LENGTH_OUTLIERS,
-}
-
-
-def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _B26_ALL_QUERIES_FN()
-    out.update(_B27_QUERIES)
-    return out
-
-
-def all_oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _B26_ALL_ORACLES_FN()
-    out.update(_B27_ORACLES)
-    return out
-
-# ---------------------------------------------------------------------------
-# batch 28 (round 4): transcripts-native training-data prep — sliding
-# context-window assembly, prompt/completion pairing, tool-transition
-# statistics.  The turn-ordering contract (ts, event_id tie-break) carries
-# through all three.  Catalog-only; value-hash oracles.
-# ---------------------------------------------------------------------------
-
-_CTX_TURNS = 3  # current + 2 preceding
-
-
-def q_turn_context_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-turn training context: the last 3 turns (role-tagged) joined into
-    one string under the stable turn ordering — the sliding-window example
-    assembly step of a conversation-tuning pipeline.  One window pass riding
-    the per-conversation sort; list order IS the frame order, so the
-    assembled context is deterministic at any parallelism."""
-    t = transcripts_from_events(spark, sf_dir)
-    w = (
-        Window.partitionBy("conv_id")
-        .orderBy("turn_idx")
-        .rowsBetween(-(_CTX_TURNS - 1), 0)
-    )
-    # NULL-explicit tagging: coalesce BOTH parts on BOTH engines.  concat_ws
-    # silently skips null args (Spark-only semantics) while the oracle's
-    # `||` nulls the whole element, which string_agg then drops — under a
-    # null-text stratum the two diverge.  coalesce-to-'' makes the element
-    # total and identical everywhere (advice r4 #1).
-    tagged = F.concat(
-        F.coalesce(F.col("role"), F.lit("")),
-        F.lit(": "),
-        F.coalesce(F.col("text"), F.lit("")),
-    )
-    return t.select(
-        "conv_id",
-        "turn_idx",
-        F.array_join(F.collect_list(tagged).over(w), " | ").alias("context"),
-        F.count(F.lit(1)).over(w).cast("int").alias("n_ctx_turns"),
-    )
-
-
-SQL_CONTEXT_WINDOWS = f"""{WITH_T}
-SELECT conv_id, turn_idx,
-       string_agg(coalesce(role, '') || ': ' || coalesce(text, ''), ' | ') OVER (
-           PARTITION BY conv_id ORDER BY turn_idx
-           ROWS BETWEEN {_CTX_TURNS - 1} PRECEDING AND CURRENT ROW) AS context,
-       CAST(count(*) OVER (
-           PARTITION BY conv_id ORDER BY turn_idx
-           ROWS BETWEEN {_CTX_TURNS - 1} PRECEDING AND CURRENT ROW) AS INTEGER) AS n_ctx_turns
-FROM transcripts
-"""
-
-
-def q_prompt_completion_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(prompt, completion) extraction: every assistant turn whose
-    immediately preceding turn is a user turn becomes one training pair —
-    the lag features and the stable ordering doing supervision-data work."""
-    t = transcripts_from_events(spark, sf_dir)
-    w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    pairs = t.select(
-        "conv_id",
-        "turn_idx",
-        F.lag("role").over(w).alias("prev_role"),
-        F.lag("text").over(w).alias("prompt"),
-        F.col("role"),
-        F.col("text").alias("completion"),
-    )
-    return pairs.filter(
-        (F.col("role") == "assistant") & (F.col("prev_role") == "user")
-    ).select("conv_id", "turn_idx", "prompt", "completion")
-
-
-SQL_PROMPT_COMPLETION = f"""{WITH_T}
-SELECT conv_id, turn_idx, prompt, completion
-FROM (
-    SELECT conv_id, turn_idx,
-           lag(role) OVER (PARTITION BY conv_id ORDER BY turn_idx) AS prev_role,
-           lag(text) OVER (PARTITION BY conv_id ORDER BY turn_idx) AS prompt,
-           role, text AS completion
-    FROM transcripts
-)
-WHERE role = 'assistant' AND prev_role = 'user'
-"""
-
-
-def q_tool_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tool-usage bigram statistics: counts of consecutive (prev_tool →
-    tool) transitions within conversations over the tool-bearing turns —
-    the Markov-transition profile of agent behavior."""
-    t = transcripts_from_events(spark, sf_dir).filter(F.col("tool").isNotNull())
-    w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    tr = t.select("conv_id", F.lag("tool").over(w).alias("prev_tool"), "tool")
-    return (
-        tr.filter(F.col("prev_tool").isNotNull())
-        .groupBy("prev_tool", "tool")
-        .agg(F.count(F.lit(1)).alias("n_transitions"))
-    )
-
-
-SQL_TOOL_TRANSITIONS = f"""{WITH_T}
-SELECT prev_tool, tool, CAST(count(*) AS BIGINT) AS n_transitions
-FROM (
-    SELECT conv_id,
-           lag(tool) OVER (PARTITION BY conv_id ORDER BY turn_idx) AS prev_tool,
-           tool
-    FROM transcripts WHERE tool IS NOT NULL
-)
-WHERE prev_tool IS NOT NULL
-GROUP BY prev_tool, tool
-"""
-
-_B27_ALL_QUERIES_FN = all_queries
-_B27_ALL_ORACLES_FN = all_oracle_sql
-
-_B28_QUERIES = {
-    "turn_context_windows": q_turn_context_windows,
-    "prompt_completion_pairs": q_prompt_completion_pairs,
-    "tool_transitions": q_tool_transitions,
-}
-_B28_ORACLES = {
-    "turn_context_windows": SQL_CONTEXT_WINDOWS,
-    "prompt_completion_pairs": SQL_PROMPT_COMPLETION,
-    "tool_transitions": SQL_TOOL_TRANSITIONS,
-}
-
-
-def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _B27_ALL_QUERIES_FN()
-    out.update(_B28_QUERIES)
-    return out
-
-
-def all_oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _B27_ALL_ORACLES_FN()
-    out.update(_B28_ORACLES)
-    return out
-
-# ---------------------------------------------------------------------------
-# batch 29 (round 5): incremental dedup-index probe — the persistent
-# MinHashIndex (operators/dedup_index.py) exercised end-to-end through its
-# COMMITTED snapshot surface: base batch indexed, delta batch probed against
-# the stored band table, new pairs Jaccard-verified and read back from the
-# pairs snapshot.  The oracle replays the full MinHash pipeline on the union
-# and keeps the pairs with >=1 delta side — exactly the incremental
-# equivalence contract, value-hashed cross-engine.
-# ---------------------------------------------------------------------------
-
-from ipl_dagster_pipeline_spark.operators.dedup_index import MinHashIndex
-
-_INCR_CUT = 250
-
-
-def q_doc_incr_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental index probe: docs < cutoff form the stored index, docs >=
-    cutoff arrive as the appended batch; result = the batch's NEW verified
-    near-dup pairs exactly as committed to the pairs snapshot table.  The
-    probe equi-joins the delta band rows against stored ∪ delta on
-    (band, bucket) and re-shingles only the matched old docs."""
-    import tempfile
-
-    docs = _read(spark, sf_dir, "documents")
-    idx = MinHashIndex(tempfile.mkdtemp(prefix="ipl_incr_idx_"))
-    idx.add_batch(docs.filter(F.col("doc_id") < _INCR_CUT), batch_id="base")
-    return idx.add_batch(docs.filter(F.col("doc_id") >= _INCR_CUT), batch_id="delta")
-
-
-SQL_INCR_PROBE = f"""
-SELECT doc_a, doc_b, jaccard FROM ({SQL_MINHASH})
-WHERE doc_a >= {_INCR_CUT} OR doc_b >= {_INCR_CUT}
-"""
-
-_B28_ALL_QUERIES_FN = all_queries
-_B28_ALL_ORACLES_FN = all_oracle_sql
-
-_B29_QUERIES = {
-    "doc_incr_index_probe": q_doc_incr_index_probe,
-}
-_B29_ORACLES = {
-    "doc_incr_index_probe": SQL_INCR_PROBE,
-}
-
-
-def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _B28_ALL_QUERIES_FN()
-    out.update(_B29_QUERIES)
-    return out
-
-
-def all_oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _B28_ALL_ORACLES_FN()
-    out.update(_B29_ORACLES)
-    return out
-
-# ---------------------------------------------------------------------------
-# batch 30 (round 5): REAL-BPE token counting + budget selection.  The
-# merges-table BPE (operators/tokenizer.py) runs as a JVM-side replace chain
-# over the distinct vocabulary — no Python in the hot path — and the oracle
-# renders the IDENTICAL chain into DuckDB SQL (generated-oracle pattern), so
-# budget selection under real-BPE counts is fully value-hashed.
-# ---------------------------------------------------------------------------
-
-from ipl_dagster_pipeline_spark.operators.tokenizer import (
-    bpe_merges_sql_chain,
-    with_bpe_token_counts,
-)
-
-_BPE_BUDGETS = {"src0": 1200, "src1": 700}
-_BPE_DEFAULT = 900
-_BPE_SEED = 41
-
-
-def q_doc_bpe_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source token-budget selection under REAL BPE counts (the tokenizer
-    the training run would meter by, not a whitespace proxy): docs walk in
-    portable-hash order per source, kept while the running BPE-token total
-    fits the budget; the running total is the keyed distributed prefix sum;
-    the injected NULL source stratum exercises the null-safe offsets join."""
-    docs = with_bpe_token_counts(_null_stratum(_read(spark, sf_dir, "documents"), "source", 7))
-    out = token_budget_select(
-        docs, strata_col="source", key_col="doc_id", token_col="n_bpe_tokens",
-        budgets=_BPE_BUDGETS, default_budget=_BPE_DEFAULT, seed=_BPE_SEED,
-    )
-    return out.select(
-        "doc_id", "source",
-        F.col("n_bpe_tokens").cast("long").alias("n_bpe_tokens"),
-        F.col("cum_tokens").cast("long").alias("cum_tokens"),
-    )
-
-
-_BPE_CASE = "CASE " + " ".join(
-    f"WHEN source = '{k}' THEN {v}" for k, v in _BPE_BUDGETS.items()
-) + f" ELSE {_BPE_DEFAULT} END"
-
-SQL_BPE_TOKEN_BUDGET = f"""
-WITH wrd AS (
-    SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS w
-    FROM documents
-),
-occ AS (SELECT doc_id, w, count(*) AS n_occ FROM wrd GROUP BY 1, 2),
-vc AS (
-    SELECT w,
-           (length({bpe_merges_sql_chain('w')})
-            - length(replace({bpe_merges_sql_chain('w')}, '|', ''))) // 2 AS w_tokens
-    FROM (SELECT DISTINCT w FROM occ)
-),
-cnt AS (
-    SELECT o.doc_id, sum(o.n_occ * vc.w_tokens) AS n_bpe
-    FROM occ o JOIN vc USING (w) GROUP BY 1
-),
-t AS (
-    SELECT d.doc_id,
-           CASE WHEN d.doc_id % 7 = 0 THEN NULL ELSE d.source END AS source,
-           CAST(coalesce(c.n_bpe, 0) AS BIGINT) AS n_bpe_tokens,
-           {_duck_hash(_BPE_SEED, "coalesce(CAST(d.doc_id AS VARCHAR), '<null>')")} AS h
-    FROM documents d LEFT JOIN cnt c USING (doc_id)
-),
-cm AS (
-    SELECT doc_id, source, n_bpe_tokens,
-           CAST(sum(n_bpe_tokens) OVER (
-               PARTITION BY source ORDER BY h, doc_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_tokens
-    FROM t
-)
-SELECT doc_id, source, n_bpe_tokens, cum_tokens
-FROM cm
-WHERE cum_tokens <= {_BPE_CASE}
-"""
-
-_B29_ALL_QUERIES_FN = all_queries
-_B29_ALL_ORACLES_FN = all_oracle_sql
-
-_B30_QUERIES = {
-    "doc_bpe_token_budget": q_doc_bpe_token_budget,
-}
-_B30_ORACLES = {
-    "doc_bpe_token_budget": SQL_BPE_TOKEN_BUDGET,
-}
-
-
-def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _B29_ALL_QUERIES_FN()
-    out.update(_B30_QUERIES)
-    return out
-
-
-def all_oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _B29_ALL_ORACLES_FN()
-    out.update(_B30_ORACLES)
-    return out
-
-# ---------------------------------------------------------------------------
-# batch 31 (round 5): GEO semantics (SURVEY §2 S9 — reference builds station
-# point geometry from lon/lat (lamassu.py:192-196), splits roadworks by
-# geometry type with the dropped set warned (traffic_incidents.py:100-107),
-# and parses CIFS "lat lon ..." linestrings (cifs.py:251-253,303)).  The
-# testdata tables carry no coordinates, so both engines derive the SAME
-# deterministic lon/lat from integer keys — the geometry MATH is what is
-# value-hashed, not the fixture.
-# ---------------------------------------------------------------------------
-
-from ipl_dagster_pipeline_spark.functions.geo import (
-    geom_type,
-    grid_radius_join,
-    haversine_sql,
-    linestring_length_km,
-    parse_linestring,
-)
-
-_GEO_RADIUS_KM = 150.0
-
-
-def _derived_lonlat(df: DataFrame, key: str, mul_lon: int, mul_lat: int, pfx: str) -> DataFrame:
-    """lon ∈ [-180, 179.95], lat ∈ [-65, 64.95] from an integer key — exact
-    decimal-by-20 division, bit-identical in Spark and DuckDB."""
-    return df.select(
-        F.col(key),
-        (((F.col(key) * mul_lon) % 7200) / 20.0 - 180.0).alias(f"{pfx}_lon"),
-        (((F.col(key) * mul_lat) % 2600) / 20.0 - 65.0).alias(f"{pfx}_lat"),
-    )
-
-
-def q_geo_station_proximity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Nearest station within 150 km per probe point — the S9 capability on
-    Spark terms: a wrapped lon/lat-grid equi-join (never a cross product;
-    antimeridian-safe) + exact haversine refine + rank-1 window.  Suppliers
-    play stations, customers play probes; distances round to 6 dp BEFORE the
-    rank so the cross-engine ordering is identical (ties break by station
-    key)."""
-    sup = _derived_lonlat(_read(spark, sf_dir, "supplier"), "s_suppkey", 97, 53, "s")
-    cust = _derived_lonlat(_read(spark, sf_dir, "customer"), "c_custkey", 31, 17, "c")
-    pairs = grid_radius_join(
-        cust, sup, _GEO_RADIUS_KM,
-        p_lon="c_lon", p_lat="c_lat", c_lon="s_lon", c_lat="s_lat", dist_col="dist_km",
-    ).withColumn("dist_km", F.round(F.col("dist_km"), 6))
-    w = Window.partitionBy("c_custkey").orderBy(F.col("dist_km").asc(), F.col("s_suppkey").asc())
-    return (
-        pairs.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") == 1)
-        .select("c_custkey", "s_suppkey", "dist_km")
-    )
-
-
-_HAV_CS = haversine_sql("c_lon", "c_lat", "s_lon", "s_lat")
-
-SQL_GEO_STATION_PROXIMITY = f"""
-WITH s AS (
-    SELECT s_suppkey,
-           ((s_suppkey * 97) % 7200) / 20.0 - 180.0 AS s_lon,
-           ((s_suppkey * 53) % 2600) / 20.0 - 65.0 AS s_lat
-    FROM supplier
-),
-c AS (
-    SELECT c_custkey,
-           ((c_custkey * 31) % 7200) / 20.0 - 180.0 AS c_lon,
-           ((c_custkey * 17) % 2600) / 20.0 - 65.0 AS c_lat
-    FROM customer
-),
-p AS (
-    SELECT c_custkey, s_suppkey, round({_HAV_CS}, 6) AS dist_km
-    FROM c CROSS JOIN s
-    WHERE {_HAV_CS} <= {_GEO_RADIUS_KM!r}
-)
-SELECT c_custkey, s_suppkey, dist_km
-FROM (
-    SELECT *, row_number() OVER (PARTITION BY c_custkey
-                                 ORDER BY dist_km ASC, s_suppkey ASC) AS rnk
-    FROM p
-)
-WHERE rnk = 1
-"""
-
-
-def q_geo_route_lengths(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CIFS-style route processing end-to-end: per-order "lat lon lat lon"
-    TEXT (integer degrees derived from the key, 1-3 vertices) → parse →
-    geometry-type filter (only LineStrings survive, the reference's
-    roadworks rule) → great-circle length.  The oracle computes the same
-    lengths straight from the vertex arithmetic — equality proves the whole
-    Spark parse/type/length chain."""
-    o = _read(spark, sf_dir, "orders").select("o_orderkey")
-    k = F.col("o_orderkey")
-    toks = F.array(
-        *[
-            ((k * m) % F.lit(mod) - F.lit(off)).cast("string")
-            for m, mod, off in [(7, 120, 60), (11, 360, 180), (10, 120, 60),
-                                (16, 360, 180), (13, 120, 60), (21, 360, 180)]
-        ]
-    )
-    n_v = (k % 3 + 1).cast("int")
-    txt = F.array_join(F.slice(toks, 1, n_v * 2), " ")
-    geoms = o.select("o_orderkey", parse_linestring(txt).alias("pts"))
-    return (
-        geoms.filter(geom_type(F.col("pts")) == "LineString")
-        .select(
-            "o_orderkey",
-            F.size("pts").alias("n_pts"),
-            F.round(linestring_length_km(F.col("pts")), 6).alias("len_km"),
-        )
-    )
-
-
-_HAV_01 = haversine_sql("lon0", "lat0", "lon1", "lat1")
-_HAV_12 = haversine_sql("lon1", "lat1", "lon2", "lat2")
-
-SQL_GEO_ROUTE_LENGTHS = f"""
-WITH v AS (
-    SELECT o_orderkey,
-           CAST(o_orderkey % 3 + 1 AS INTEGER) AS n_pts,
-           CAST((o_orderkey * 7) % 120 - 60 AS DOUBLE) AS lat0,
-           CAST((o_orderkey * 11) % 360 - 180 AS DOUBLE) AS lon0,
-           CAST((o_orderkey * 10) % 120 - 60 AS DOUBLE) AS lat1,
-           CAST((o_orderkey * 16) % 360 - 180 AS DOUBLE) AS lon1,
-           CAST((o_orderkey * 13) % 120 - 60 AS DOUBLE) AS lat2,
-           CAST((o_orderkey * 21) % 360 - 180 AS DOUBLE) AS lon2
-    FROM orders
-)
-SELECT o_orderkey, n_pts,
-       round({_HAV_01} + CASE WHEN n_pts = 3 THEN {_HAV_12} ELSE 0.0 END, 6) AS len_km
-FROM v
-WHERE n_pts >= 2
-"""
-
-_B30_ALL_QUERIES_FN = all_queries
-_B30_ALL_ORACLES_FN = all_oracle_sql
-
-_B31_QUERIES = {
-    "geo_station_proximity": q_geo_station_proximity,
-    "geo_route_lengths": q_geo_route_lengths,
-}
-_B31_ORACLES = {
-    "geo_station_proximity": SQL_GEO_STATION_PROXIMITY,
-    "geo_route_lengths": SQL_GEO_ROUTE_LENGTHS,
-}
-
-
-def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _B30_ALL_QUERIES_FN()
-    out.update(_B31_QUERIES)
-    return out
-
-
-def all_oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _B30_ALL_ORACLES_FN()
-    out.update(_B31_ORACLES)
-    return out
-
-# ---------------------------------------------------------------------------
-# batch 32 (round 5): statistical LM quality scoring — per-doc cross-entropy
-# under the corpus's own bigram MLE (the CCNet-style signal).  Determinism
-# contract: per-occurrence surprisals quantize to INTEGER milli-nats BEFORE
-# the per-doc sum, so aggregation is exact integer arithmetic — reduction-
-# order-independent and bit-identical cross-engine (see operators/lm.py).
-# ---------------------------------------------------------------------------
-
-from ipl_dagster_pipeline_spark.operators.lm import with_bigram_surprisal
-
-
-def q_doc_lm_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _read(spark, sf_dir, "documents")
-    return with_bigram_surprisal(docs).select(
-        "doc_id", "source", "n_bigrams", "surprisal_mnats", "bits_per_bigram"
-    )
-
-
-SQL_LM_SURPRISAL = """
-WITH w AS (
-    SELECT doc_id,
-           unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS w,
-           generate_subscripts(regexp_extract_all(lower(text), '[a-z0-9]+'), 1) AS pos
-    FROM documents
-),
-bg AS (
-    SELECT doc_id, a, b FROM (
-        SELECT doc_id, lag(w) OVER (PARTITION BY doc_id ORDER BY pos) AS a, w AS b
-        FROM w
-    ) WHERE a IS NOT NULL
-),
-cab AS (SELECT a, b, count(*) AS c_ab FROM bg GROUP BY 1, 2),
-ca AS (SELECT a, count(*) AS c_a FROM bg GROUP BY 1),
-term AS (
-    SELECT bg.doc_id,
-           CAST(round(-ln(CAST(c_ab AS DOUBLE) / c_a) * 1000) AS BIGINT) AS mn
-    FROM bg JOIN cab USING (a, b) JOIN ca USING (a)
-),
-agg AS (SELECT doc_id, count(*) AS n_bigrams, sum(mn) AS s FROM term GROUP BY 1)
-SELECT d.doc_id, d.source,
-       CAST(coalesce(agg.n_bigrams, 0) AS BIGINT) AS n_bigrams,
-       CAST(coalesce(agg.s, 0) AS BIGINT) AS surprisal_mnats,
-       CASE WHEN coalesce(agg.n_bigrams, 0) > 0
-            THEN round(CAST(agg.s AS DOUBLE) / (1000.0 * ln(2.0)) / agg.n_bigrams, 6)
-       END AS bits_per_bigram
-FROM documents d LEFT JOIN agg USING (doc_id)
-"""
-
-_B31_ALL_QUERIES_FN = all_queries
-_B31_ALL_ORACLES_FN = all_oracle_sql
-
-_B32_QUERIES = {
-    "doc_lm_surprisal": q_doc_lm_surprisal,
-}
-_B32_ORACLES = {
-    "doc_lm_surprisal": SQL_LM_SURPRISAL,
-}
-
-
-def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _B31_ALL_QUERIES_FN()
-    out.update(_B32_QUERIES)
-    return out
-
-
-def all_oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _B31_ALL_ORACLES_FN()
-    out.update(_B32_ORACLES)
-    return out
-
-# ---------------------------------------------------------------------------
-# batch 33 (round 5): exact shingle CONTAINMENT pairs (overlap coefficient) —
-# catches the excerpt-inside-superset duplication symmetric Jaccard misses.
-# ---------------------------------------------------------------------------
-
-from ipl_dagster_pipeline_spark.operators.text_dedup import overlap_pairs
-
-_CT_THRESHOLD, _CT_MAXDF = 0.8, 50
-
-
-def q_doc_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """All pairs whose 5-gram overlap coefficient |A∩B|/min(|A|,|B|) ≥ 0.8 in
-    the discriminative shingle space (df ≤ 50), contained side named — the
-    quote/excerpt complement of doc_ngram_jaccard, same inverted-index shape."""
-    docs = _read(spark, sf_dir, "documents")
-    return overlap_pairs(docs, threshold=_CT_THRESHOLD, max_df=_CT_MAXDF)
-
-
-SQL_CONTAINMENT = f"""
-WITH {SHINGLE_CTE.strip()},
-df AS (
-    SELECT sh.doc_id, sh.s, count(*) OVER (PARTITION BY s) AS df FROM sh
-),
-rare AS (SELECT doc_id, s FROM df WHERE df <= {_CT_MAXDF}),
-sizes AS (SELECT doc_id, count(*) AS n FROM rare GROUP BY doc_id),
-inter AS (
-    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_inter
-    FROM rare a JOIN rare b ON a.s = b.s AND a.doc_id < b.doc_id
-    GROUP BY 1, 2
-),
-sc AS (
-    SELECT doc_a, doc_b,
-           CAST(n_inter AS BIGINT) AS n_inter,
-           CAST(sa.n AS BIGINT) AS n_a,
-           CAST(sb.n AS BIGINT) AS n_b,
-           round(CAST(n_inter AS DOUBLE) / least(sa.n, sb.n), 6) AS overlap
-    FROM inter
-    JOIN sizes sa ON sa.doc_id = inter.doc_a
-    JOIN sizes sb ON sb.doc_id = inter.doc_b
-)
-SELECT doc_a, doc_b, n_inter, n_a, n_b, overlap,
-       CASE WHEN n_a < n_b THEN doc_a
-            WHEN n_b < n_a THEN doc_b
-            ELSE least(doc_a, doc_b) END AS doc_small
-FROM sc WHERE overlap >= {_CT_THRESHOLD}
-"""
-
-_B32_ALL_QUERIES_FN = all_queries
-_B32_ALL_ORACLES_FN = all_oracle_sql
-
-_B33_QUERIES = {
-    "doc_containment_pairs": q_doc_containment_pairs,
-}
-_B33_ORACLES = {
-    "doc_containment_pairs": SQL_CONTAINMENT,
-}
-
-
-def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _B32_ALL_QUERIES_FN()
-    out.update(_B33_QUERIES)
-    return out
-
-
-def all_oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _B32_ALL_ORACLES_FN()
-    out.update(_B33_ORACLES)
-    return out
-
-# ---------------------------------------------------------------------------
-# batch 34 (round 5): per-source unigram KL divergence vs the corpus — the
-# ingest drift monitor, same integer milli-nat determinism contract as
-# doc_lm_surprisal; the injected NULL source stratum exercises the
-# null-group eqNullSafe path (joined with IS NOT DISTINCT FROM in the oracle).
-# ---------------------------------------------------------------------------
-
-from ipl_dagster_pipeline_spark.operators.lm import source_kl_divergence
-
-
-def q_source_unigram_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _null_stratum(_read(spark, sf_dir, "documents"), "source", 7)
-    return source_kl_divergence(docs)
-
-
-SQL_SOURCE_KL = """
-WITH d AS (
-    SELECT CASE WHEN doc_id % 7 = 0 THEN NULL ELSE source END AS g, text
-    FROM documents
-),
-wd AS (SELECT g, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS w FROM d),
-ngw AS (SELECT g, w, count(*) AS n_gw FROM wd GROUP BY 1, 2),
-nw AS (SELECT w, CAST(sum(n_gw) AS BIGINT) AS n_w FROM ngw GROUP BY 1),
-tg AS (SELECT g, CAST(sum(n_gw) AS BIGINT) AS t_g FROM ngw GROUP BY 1),
-tall AS (SELECT CAST(sum(n_w) AS BIGINT) AS t_all FROM nw),
-term AS (
-    SELECT ngw.g, ngw.n_gw, tg.t_g,
-           CAST(round(ln((CAST(n_gw AS DOUBLE) * t_all)
-                         / (CAST(t_g AS DOUBLE) * n_w)) * 1000) AS BIGINT) AS mn
-    FROM ngw
-    JOIN nw USING (w)
-    JOIN tg ON ngw.g IS NOT DISTINCT FROM tg.g
-    CROSS JOIN tall
-),
-agg AS (SELECT g, t_g, CAST(sum(n_gw * mn) AS BIGINT) AS klw FROM term GROUP BY 1, 2)
-SELECT g AS source,
-       t_g AS n_tokens,
-       klw AS kl_mnats_weighted,
-       round(CAST(klw AS DOUBLE) / 1000.0 / t_g, 6) AS kl_nats
-FROM agg
-"""
-
-_B33_ALL_QUERIES_FN = all_queries
-_B33_ALL_ORACLES_FN = all_oracle_sql
-
-_B34_QUERIES = {
-    "source_unigram_kl": q_source_unigram_kl,
-}
-_B34_ORACLES = {
-    "source_unigram_kl": SQL_SOURCE_KL,
-}
-
-
-def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _B33_ALL_QUERIES_FN()
-    out.update(_B34_QUERIES)
-    return out
-
-
-def all_oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _B33_ALL_ORACLES_FN()
-    out.update(_B34_ORACLES)
-    return out
-
-# ---------------------------------------------------------------------------
-# batch 35 (round 5): temperature-flattened mixture sampling — keep prob per
-# stratum ∝ n_s^(alpha-1) normalized to the largest stratum (the standard
-# multilingual-corpus rebalance); NULL stratum injected and real.
-# ---------------------------------------------------------------------------
-
-from ipl_dagster_pipeline_spark.operators.sampling import sample_temperature
-
-_TMP_ALPHA, _TMP_SCALE, _TMP_SEED = 0.5, 0.35, 19
-
-
-def q_doc_temperature_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _null_stratum(_read(spark, sf_dir, "documents"), "source", 7)
-    return sample_temperature(
-        docs, "source", "doc_id", alpha=_TMP_ALPHA, scale=_TMP_SCALE, seed=_TMP_SEED
-    ).select("doc_id", "source", "n_chars")
-
-
-SQL_TEMPERATURE_SAMPLE = f"""
-WITH d AS (
-    SELECT doc_id, CASE WHEN doc_id % 7 = 0 THEN NULL ELSE source END AS source, n_chars
-    FROM documents
-),
-c AS (SELECT source, count(*) AS n_s FROM d GROUP BY 1),
-m AS (SELECT max(n_s) AS n_max FROM c)
-SELECT doc_id, d.source AS source, n_chars
-FROM d JOIN c ON d.source IS NOT DISTINCT FROM c.source CROSS JOIN m
-WHERE {_duck_hash(_TMP_SEED, "coalesce(CAST(doc_id AS VARCHAR), '<null>')")} % 10000
-      < CAST(round(least(greatest({_TMP_SCALE!r} * pow(CAST(n_s AS DOUBLE) / n_max, {_TMP_ALPHA - 1.0!r}), 0.0), 1.0) * 10000) AS BIGINT)
-"""
-
-_B34_ALL_QUERIES_FN = all_queries
-_B34_ALL_ORACLES_FN = all_oracle_sql
-
-_B35_QUERIES = {
-    "doc_temperature_sample": q_doc_temperature_sample,
-}
-_B35_ORACLES = {
-    "doc_temperature_sample": SQL_TEMPERATURE_SAMPLE,
-}
-
-
-def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _B34_ALL_QUERIES_FN()
-    out.update(_B35_QUERIES)
-    return out
-
-
-def all_oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _B34_ALL_ORACLES_FN()
-    out.update(_B35_ORACLES)
-    return out
-
-# ---------------------------------------------------------------------------
-# batch 36 (round 5): leakage-safe target encoding — point-in-time expanding
-# per-key label stats (strictly-earlier rows only) with empirical-Bayes
-# smoothing.  The zero-temporal-leakage contract made into a feature
-# operator: integer micro-unit label sums (exact, window-tree-independent),
-# smoothed value derived from exact integers and rounded once at the end.
-# ---------------------------------------------------------------------------
-
-from ipl_dagster_pipeline_spark.operators.encoding import target_encode_pit
-
-_TE_SMOOTH = 20
-
-
-def q_event_target_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PIT target-encode user_id by the event `value` label: each event sees
-    only that user's STRICTLY earlier events (ts, event_id order) — its own
-    label never feeds its own feature.  Prior = global mean of the same
-    frame (backfill-over-closed-corpus mode; see operators/encoding.py for
-    the live-scoring caveat)."""
-    ev = _read(spark, sf_dir, "events")
-    out = target_encode_pit(
-        ev, key_col="user_id", label_col="value",
-        order_cols=["ts", "event_id"], smoothing=_TE_SMOOTH,
-    )
-    return out.select("event_id", "user_id", "te_cnt", "te_sum_micro", "te_value")
-
-
-SQL_TARGET_ENCODE = f"""
-WITH lbl AS (
-    SELECT event_id, user_id, ts,
-           CAST(round(value * 1000000) AS BIGINT) AS lm
-    FROM events
-),
-g AS (
-    SELECT CAST(coalesce(sum(lm), 0) AS BIGINT) AS p_num,
-           CAST(count(lm) AS BIGINT) AS p_den
-    FROM lbl
-),
-w AS (
-    SELECT event_id, user_id,
-           CAST(coalesce(count(lm) OVER win, 0) AS BIGINT) AS te_cnt,
-           CAST(coalesce(sum(lm) OVER win, 0) AS BIGINT) AS te_sum_micro
-    FROM lbl
-    WINDOW win AS (PARTITION BY user_id ORDER BY ts, event_id
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-)
-SELECT event_id, user_id, te_cnt, te_sum_micro,
-       CAST(CAST(
-           (CAST(te_sum_micro AS HUGEINT) * p_den + {_TE_SMOOTH} * CAST(p_num AS HUGEINT))
-               * 1000000
-           // (CAST(te_cnt + {_TE_SMOOTH} AS HUGEINT) * p_den * 1000000)
-       AS BIGINT) AS DOUBLE) / 1000000.0 AS te_value
-FROM w CROSS JOIN g
-"""
-
-_B35_ALL_QUERIES_FN = all_queries
-_B35_ALL_ORACLES_FN = all_oracle_sql
-
-_B36_QUERIES = {
-    "event_target_encode": q_event_target_encode,
-}
-_B36_ORACLES = {
-    "event_target_encode": SQL_TARGET_ENCODE,
-}
-
-
-def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _B35_ALL_QUERIES_FN()
-    out.update(_B36_QUERIES)
-    return out
-
-
-def all_oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _B35_ALL_ORACLES_FN()
-    out.update(_B36_ORACLES)
-    return out
-
-# ---------------------------------------------------------------------------
-# batch 37 (round 5): exponentially time-decayed activity features — exact
-# integer decay arithmetic over a pre-aggregated (key, day) frame, exploded
-# onto its contribution days and equi-joined back (never a per-row range
-# self-join).  The decay curve is a Python-materialized integer literal
-# table shared verbatim by the Spark plan and the oracle SQL.
-# ---------------------------------------------------------------------------
-
-from ipl_dagster_pipeline_spark.operators.decay import decay_weights, with_decayed_counts
-
-_DK_HL, _DK_H, _DK_BITS = 7.0, 28, 16
-_DK_WT = decay_weights(_DK_HL, _DK_H, _DK_BITS)
-
-
-def q_event_decayed_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-event recency-weighted user activity (half-life 7 d, horizon 28 d)
-    over strictly-past days; NULL user stratum injected so the null-safe
-    join-back is exercised by the value hash."""
-    ev = _read(spark, sf_dir, "events").withColumn(
-        "user_id",
-        F.when(F.col("event_id") % 13 == 0, F.lit(None).cast("long")).otherwise(
-            F.col("user_id")
-        ),
-    )
-    out = with_decayed_counts(
-        ev, "user_id", ts_col="ts", value_col="value",
-        half_life_days=_DK_HL, horizon_days=_DK_H, scale_bits=_DK_BITS,
-    )
-    return out.select(
-        "event_id", "user_id", "decayed_cnt_q", "decayed_cnt", "decayed_sum_q", "decayed_sum"
-    )
-
-
-_DK_WT_VALUES = ", ".join(f"({d}, {w})" for d, w in _DK_WT)
-_DK_SCALE = 1 << _DK_BITS
-
-SQL_DECAYED_FEATURES = f"""
-WITH e AS (
-    SELECT event_id,
-           CASE WHEN event_id % 13 = 0 THEN NULL ELSE user_id END AS user_id,
-           CAST(floor(epoch(ts) / 86400) AS BIGINT) AS day,
-           value
-    FROM events
-),
-a AS (
-    SELECT user_id, day, count(*) AS c,
-           CAST(coalesce(sum(CAST(round(value * 1000000) AS BIGINT)), 0) AS BIGINT) AS s
-    FROM e GROUP BY 1, 2
-),
-wt(delta, w) AS (VALUES {_DK_WT_VALUES}),
-x AS (
-    SELECT user_id, day + delta AS day,
-           CAST(w AS HUGEINT) * c AS wc, CAST(w AS HUGEINT) * s AS ws
-    FROM a CROSS JOIN wt
-),
-dec AS (SELECT user_id, day, sum(wc) AS qc, sum(ws) AS qs FROM x GROUP BY 1, 2)
-SELECT e.event_id, e.user_id,
-       CAST(coalesce(qc, 0) AS BIGINT) AS decayed_cnt_q,
-       round(CAST(coalesce(qc, 0) AS BIGINT) / {_DK_SCALE}.0, 6) AS decayed_cnt,
-       CAST(coalesce(qs, 0) AS BIGINT) AS decayed_sum_q,
-       round(CAST(coalesce(qs, 0) AS BIGINT) / ({_DK_SCALE}.0 * 1000000.0), 6) AS decayed_sum
-FROM e LEFT JOIN dec
-  ON e.user_id IS NOT DISTINCT FROM dec.user_id AND e.day = dec.day
-"""
-
-_B36_ALL_QUERIES_FN = all_queries
-_B36_ALL_ORACLES_FN = all_oracle_sql
-
-_B37_QUERIES = {
-    "event_decayed_features": q_event_decayed_features,
-}
-_B37_ORACLES = {
-    "event_decayed_features": SQL_DECAYED_FEATURES,
-}
-
-
-def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _B36_ALL_QUERIES_FN()
-    out.update(_B37_QUERIES)
-    return out
-
-
-def all_oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _B36_ALL_ORACLES_FN()
-    out.update(_B37_ORACLES)
-    return out
-
-# ---------------------------------------------------------------------------
-# batch 38 (round 5): deterministic HyperLogLog distinct sketch — portable
-# 60-bit-hash registers replayed bucket-by-bucket in the oracle (the
-# approx_count_distinct capability, made engine-portable and mergeable);
-# exact COUNT DISTINCT alongside for error visibility.
-# ---------------------------------------------------------------------------
-
-from ipl_dagster_pipeline_spark.operators.sketches import (
-    HLL_M,
-    HLL_NUMERATOR,
-    HLL_SMALL_RANGE,
-    hll_distinct,
-)
-
-_HLL_SEED = 41
-
-
-def q_event_hll_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct users per event type: HLL estimate (64 buckets) + exact —
-    the register frame is ≤ 64 rows per group however large the input."""
-    ev = _read(spark, sf_dir, "events")
-    est = hll_distinct(ev, ["event_type"], F.col("user_id"), seed=_HLL_SEED).alias("E")
-    exact = (
-        ev.groupBy("event_type")
-        .agg(F.count_distinct("user_id").alias("n_exact"))
-        .alias("X")
-    )
-    return (
-        est.join(exact, F.col("E.event_type").eqNullSafe(F.col("X.event_type")))
-        .select("E.event_type", "hll_nonempty", "hll_z_scaled", "hll_est", "n_exact")
-    )
-
-
-SQL_HLL_USERS = f"""
-WITH h AS (
-    SELECT event_type,
-           {_duck_hash(_HLL_SEED, "CAST(user_id AS VARCHAR)")} AS h
-    FROM events WHERE user_id IS NOT NULL
-),
-reg AS (
-    SELECT event_type, h & {HLL_M - 1} AS bucket,
-           max(CASE WHEN (h >> 6) = 0 THEN 55 ELSE 55 - length(bin(h >> 6)) END) AS m
-    FROM h GROUP BY 1, 2
-),
-agg AS (
-    SELECT event_type, CAST(count(*) AS BIGINT) AS hll_nonempty,
-           CAST(sum(CAST(1 AS BIGINT) << (55 - m))
-                + ({HLL_M} - count(*)) * (CAST(1 AS BIGINT) << 55) AS BIGINT) AS hll_z_scaled
-    FROM reg GROUP BY 1
-),
-ex AS (
-    SELECT event_type, CAST(count(DISTINCT user_id) AS BIGINT) AS n_exact
-    FROM events WHERE user_id IS NOT NULL GROUP BY 1
-)
-SELECT agg.event_type, hll_nonempty, hll_z_scaled,
-       round(CASE WHEN {HLL_NUMERATOR!r} / CAST(hll_z_scaled AS DOUBLE) <= {HLL_SMALL_RANGE!r}
-                       AND {HLL_M} - hll_nonempty > 0
-                  THEN {float(HLL_M)!r} * ln({float(HLL_M)!r} / ({HLL_M} - hll_nonempty))
-                  ELSE {HLL_NUMERATOR!r} / CAST(hll_z_scaled AS DOUBLE) END,
-             4) AS hll_est,
-       n_exact
-FROM agg JOIN ex ON agg.event_type IS NOT DISTINCT FROM ex.event_type
-"""
-
-_B37_ALL_QUERIES_FN = all_queries
-_B37_ALL_ORACLES_FN = all_oracle_sql
-
-_B38_QUERIES = {
-    "event_hll_users": q_event_hll_users,
-}
-_B38_ORACLES = {
-    "event_hll_users": SQL_HLL_USERS,
-}
-
-
-def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _B37_ALL_QUERIES_FN()
-    out.update(_B38_QUERIES)
-    return out
-
-
-def all_oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _B37_ALL_ORACLES_FN()
-    out.update(_B38_ORACLES)
-    return out
-
-# ---------------------------------------------------------------------------
-# batch 39 (round 5): PMI collocation mining — multiword-expression
-# candidates by pointwise mutual information over adjacent word pairs,
-# integer milli-nat quantization (the phrase-mining signal of word2vec-era
-# preprocessing); log-space association order fixed so no product overflows.
-# ---------------------------------------------------------------------------
-
-from ipl_dagster_pipeline_spark.operators.lm import pmi_collocations
-
-_PMI_MIN_COUNT = 8
-
-
-def q_doc_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _read(spark, sf_dir, "documents")
-    return pmi_collocations(docs, min_count=_PMI_MIN_COUNT)
-
-
-SQL_PMI_COLLOCATIONS = f"""
-WITH w AS (
-    SELECT doc_id,
-           unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS w,
-           generate_subscripts(regexp_extract_all(lower(text), '[a-z0-9]+'), 1) AS pos
-    FROM documents
-),
-bg AS (
-    SELECT a, b FROM (
-        SELECT lag(w) OVER (PARTITION BY doc_id ORDER BY pos) AS a, w AS b FROM w
-    ) WHERE a IS NOT NULL
-),
-cab AS (SELECT a, b, CAST(count(*) AS BIGINT) AS c_ab FROM bg GROUP BY 1, 2),
-cw AS (SELECT w, CAST(count(*) AS BIGINT) AS c_w FROM w GROUP BY 1),
-tot AS (
-    SELECT (SELECT CAST(count(*) AS BIGINT) FROM bg) AS n_bg,
-           (SELECT CAST(count(*) AS BIGINT) FROM w) AS n_uni
-),
-sc AS (
-    SELECT cab.a, cab.b, c_ab, ca.c_w AS c_a, cb.c_w AS c_b,
-           CAST(round((ln(CAST(c_ab AS DOUBLE)) - ln(CAST(ca.c_w AS DOUBLE))
-                       - ln(CAST(cb.c_w AS DOUBLE)) + 2.0 * ln(CAST(n_uni AS DOUBLE))
-                       - ln(CAST(n_bg AS DOUBLE))) * 1000) AS BIGINT) AS pmi_mnats
-    FROM cab JOIN cw ca ON cab.a = ca.w JOIN cw cb ON cab.b = cb.w CROSS JOIN tot
-    WHERE c_ab >= {_PMI_MIN_COUNT}
-)
-SELECT a, b, c_ab, c_a, c_b, pmi_mnats, round(pmi_mnats / 1000.0, 6) AS pmi FROM sc
-"""
-
-_B38_ALL_QUERIES_FN = all_queries
-_B38_ALL_ORACLES_FN = all_oracle_sql
-
-_B39_QUERIES = {
-    "doc_pmi_collocations": q_doc_pmi_collocations,
-}
-_B39_ORACLES = {
-    "doc_pmi_collocations": SQL_PMI_COLLOCATIONS,
-}
-
-
-def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _B38_ALL_QUERIES_FN()
-    out.update(_B39_QUERIES)
-    return out
-
-
-def all_oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _B38_ALL_ORACLES_FN()
-    out.update(_B39_ORACLES)
-    return out
-
-# ---------------------------------------------------------------------------
-# batch 40 (round 5): fixed-point integer PageRank over the event-type
-# transition graph — the iterative-algorithm capability (per-round
-# equi-join + agg, lineage-truncated) with an oracle that UNROLLS the
-# rounds in SQL; floor-division fixed-point means both engines replay the
-# exact same integers.
-# ---------------------------------------------------------------------------
-
-from ipl_dagster_pipeline_spark.operators.graph import pagerank
-
-_PR_ITERS, _PR_SCALE = 3, 1_000_000
-
-
-def q_event_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PageRank of event types in the per-user transition graph (edge =
-    consecutive events under the (ts, event_id) order, deduped)."""
-    ev = _read(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = ev.withColumn("__prev", F.lag("event_type").over(w))
-    edges = (
-        seq.filter(F.col("__prev").isNotNull())
-        .select(F.col("__prev").alias("src"), F.col("event_type").alias("dst"))
-        .distinct()
-    )
-    return pagerank(edges, iters=_PR_ITERS, scale=_PR_SCALE)
-
-
-def _pr_oracle_sql(iters: int) -> str:
-    its = []
-    for i in range(1, iters + 1):
-        its.append(f"""
-c{i} AS (
-    SELECT e.dst AS v, CAST(sum(((r.r * 17) // 20) // e.k) AS BIGINT) AS s
-    FROM e JOIN r{i - 1} r ON e.src = r.v
-    GROUP BY 1
-),
-r{i} AS (
-    SELECT n.v, CAST(base.b + coalesce(c{i}.s, 0) AS BIGINT) AS r
-    FROM nodes n CROSS JOIN base LEFT JOIN c{i} ON n.v = c{i}.v
-)""")
-    return f"""
-WITH seq AS (
-    SELECT event_type,
-           lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev
-    FROM events
-),
-e0 AS (SELECT DISTINCT prev AS src, event_type AS dst FROM seq WHERE prev IS NOT NULL),
-nodes AS (SELECT DISTINCT v FROM (SELECT src AS v FROM e0 UNION ALL SELECT dst FROM e0)),
-cnt AS (SELECT CAST(count(*) AS BIGINT) AS n FROM nodes),
-base AS (SELECT ({_PR_SCALE} * 3 // 20) // n AS b, {_PR_SCALE} // n AS r0v FROM cnt),
-k AS (SELECT src, CAST(count(*) AS BIGINT) AS k FROM e0 GROUP BY 1),
-e AS (SELECT e0.src, e0.dst, k.k FROM e0 JOIN k USING (src)),
-r0 AS (SELECT v, r0v AS r FROM nodes CROSS JOIN base),{",".join(its)}
-SELECT v, r AS pr_scaled, round(r / {_PR_SCALE}.0, 6) AS pr FROM r{iters}
-"""
-
-
-SQL_EVENT_PAGERANK = _pr_oracle_sql(_PR_ITERS)
-
-_B39_ALL_QUERIES_FN = all_queries
-_B39_ALL_ORACLES_FN = all_oracle_sql
-
-_B40_QUERIES = {
-    "event_pagerank": q_event_pagerank,
-}
-_B40_ORACLES = {
-    "event_pagerank": SQL_EVENT_PAGERANK,
-}
-
-
-def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _B39_ALL_QUERIES_FN()
-    out.update(_B40_QUERIES)
-    return out
-
-
-def all_oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _B39_ALL_ORACLES_FN()
-    out.update(_B40_ORACLES)
-    return out
-
-# ---------------------------------------------------------------------------
-# batch 41 (round 5): key-distribution skew profiler — the exact diagnostic
-# behind the salting/AQE decisions (north rule: skew handled EXPLICITLY);
-# global sort rides the key frame, the cumulative window sees <= top_n rows.
-# ---------------------------------------------------------------------------
-
-from ipl_dagster_pipeline_spark.partitioning import skew_profile
-
-_SKEW_TOP_N = 50
-
-
-def q_event_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-50 heaviest user_id keys in events with exact ppm concentration;
-    a NULL-key stratum injected (null keys are OFTEN the skew problem, and
-    the NULLS FIRST tie-break is the cross-engine trap this gates)."""
-    ev = _read(spark, sf_dir, "events").withColumn(
-        "user_id",
-        F.when(F.col("event_id") % 13 == 0, F.lit(None).cast("long")).otherwise(
-            F.col("user_id")
-        ),
-    )
-    return skew_profile(ev, "user_id", top_n=_SKEW_TOP_N)
-
-
-SQL_SKEW_PROFILE = f"""
-WITH e AS (
-    SELECT CASE WHEN event_id % 13 = 0 THEN NULL ELSE user_id END AS k FROM events
-),
-c AS (SELECT k, CAST(count(*) AS BIGINT) AS cnt FROM e GROUP BY 1),
-t AS (
-    SELECT CAST(coalesce(sum(cnt), 0) AS BIGINT) AS total,
-           CAST(count(*) AS BIGINT) AS n_keys
-    FROM c
-),
-top AS (SELECT k, cnt FROM c ORDER BY cnt DESC, k ASC NULLS FIRST LIMIT {_SKEW_TOP_N})
-SELECT k AS user_id, cnt,
-       (cnt * 1000000) // total AS share_ppm,
-       CAST(row_number() OVER win AS INTEGER) AS rnk,
-       (sum(cnt) OVER (win ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) * 1000000)
-           // total AS cum_ppm,
-       round(CAST(cnt AS DOUBLE) * n_keys / total, 4) AS hot_ratio
-FROM top CROSS JOIN t
-WINDOW win AS (ORDER BY cnt DESC, k ASC NULLS FIRST)
-"""
-
-_B40_ALL_QUERIES_FN = all_queries
-_B40_ALL_ORACLES_FN = all_oracle_sql
-
-_B41_QUERIES = {
-    "event_skew_profile": q_event_skew_profile,
-}
-_B41_ORACLES = {
-    "event_skew_profile": SQL_SKEW_PROFILE,
-}
-
-
-def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _B40_ALL_QUERIES_FN()
-    out.update(_B41_QUERIES)
-    return out
-
-
-def all_oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _B40_ALL_ORACLES_FN()
-    out.update(_B41_ORACLES)
-    return out
-
-# ---------------------------------------------------------------------------
-# batch 42 (round 5): rolling interpolated quantiles (median/p25/p75 of the
-# last k values per key) — Spark refuses percentile-over-frame, so the
-# operator materializes the bounded frame with collect_list; the oracle
-# replicates the SAME interpolation formula from a sorted list rather than
-# trusting DuckDB's median() internals.
-# ---------------------------------------------------------------------------
-
-from ipl_dagster_pipeline_spark.operators.windows import with_rolling_quantiles
-
-_RQ_K = 7
-_RQ_PROBS = {"roll_med": 0.5, "roll_p25": 0.25, "roll_p75": 0.75}
-
-
-def q_event_rolling_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _read(spark, sf_dir, "events")
-    out = with_rolling_quantiles(
-        ev, "value", _RQ_K, _RQ_PROBS, key="user_id", order=("ts", "event_id")
-    )
-    return out.select("event_id", "user_id", *_RQ_PROBS)
-
-
-def _rq_sql_expr(p: float, alias: str) -> str:
-    pos = f"(CAST(len(a) - 1 AS DOUBLE) * {p!r})"
-    lo = f"CAST(floor({pos}) AS INTEGER)"
-    frac = f"({pos} - {lo})"
-    return (
-        f"round(CASE WHEN len(a) = 0 THEN NULL "
-        f"WHEN {frac} = 0.0 THEN a[{lo} + 1] "
-        f"ELSE a[{lo} + 1] + (a[{lo} + 2] - a[{lo} + 1]) * {frac} END, 6) AS {alias}"
-    )
-
-
-SQL_ROLLING_QUANTILES = f"""
-WITH fr AS (
-    SELECT event_id, user_id,
-           list_sort(list_filter(
-               list(value) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                 ROWS BETWEEN {_RQ_K - 1} PRECEDING AND CURRENT ROW),
-               x -> x IS NOT NULL)) AS a
-    FROM events
-)
-SELECT event_id, user_id,
-       {", ".join(_rq_sql_expr(p, name) for name, p in _RQ_PROBS.items())}
-FROM fr
-"""
-
-_B41_ALL_QUERIES_FN = all_queries
-_B41_ALL_ORACLES_FN = all_oracle_sql
-
-_B42_QUERIES = {
-    "event_rolling_quantiles": q_event_rolling_quantiles,
-}
-_B42_ORACLES = {
-    "event_rolling_quantiles": SQL_ROLLING_QUANTILES,
-}
-
-
-def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _B41_ALL_QUERIES_FN()
-    out.update(_B42_QUERIES)
-    return out
-
-
-def all_oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _B41_ALL_ORACLES_FN()
-    out.update(_B42_ORACLES)
-    return out
-
-# ---------------------------------------------------------------------------
-# batch 43 (round 5): count-min frequency sketch — HLL's sibling for counts
-# (sketches.py cms_*).  The Spark side builds TWO sketches over disjoint
-# halves and SUM-merges them; the oracle builds one counter frame over the
-# full input directly — equality of every probe IS the CMS merge law
-# (counters are linear), replayed register-exactly in SQL.  Estimates are
-# probed for the top-k exact keys and must satisfy est ≥ true (over-count
-# only) — `over_cnt` makes the collision load visible per key.
-# ---------------------------------------------------------------------------
-
-from ipl_dagster_pipeline_spark.operators.sketches import (
-    CMS_D,
-    CMS_ROW_OFFSET,
-    CMS_W,
-    cms_estimate,
-    cms_merge,
-    cms_sketch,
-)
-from ipl_dagster_pipeline_spark.operators.text_dedup import minhash_params as _mh_params
-
-_CMS_SEED = 53
-_CMS_TOP = 24
-
-
-def q_event_cms_user_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CMS over event user_id occurrences: sketch two disjoint halves,
-    SUM-merge, probe the top-24 exact keys.  Scale shape: each half's
-    counter frame is ≤ d·w = 1024 rows (map-side combined), the merge is a
-    1024-row groupBy, and the probe broadcasts the sketch — the raw events
-    are scanned once per half and never shuffled by key."""
-    ev = _read(spark, sf_dir, "events")
-    half_a = cms_sketch(ev.where(F.col("event_id") % 2 == 0), [], F.col("user_id"), seed=_CMS_SEED)
-    half_b = cms_sketch(ev.where(F.col("event_id") % 2 == 1), [], F.col("user_id"), seed=_CMS_SEED)
-    sk = cms_merge(half_a, half_b)
-    exact = (
-        ev.where(F.col("user_id").isNotNull())
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("exact_cnt"))
-    )
-    top = exact.orderBy(F.col("exact_cnt").desc(), F.col("user_id")).limit(_CMS_TOP)
-    est = cms_estimate(sk, top, "user_id", seed=_CMS_SEED, group_cols=[])
-    return est.select(
-        "user_id",
-        "exact_cnt",
-        "cms_est",
-        (F.col("cms_est") - F.col("exact_cnt")).cast("long").alias("over_cnt"),
-    ).orderBy("user_id")
-
-
-def _cms_base_sql(expr: str) -> str:
-    return (
-        f"CAST(concat('0x', substring(md5(concat('{_CMS_SEED}:', {expr})), 1, 15)) AS BIGINT)"
-        f" % {MINHASH_P}"
-    )
-
-
-def _cms_row_sql(base: str, row: int) -> str:
-    a, b = _mh_params(CMS_ROW_OFFSET + row)
-    return f"(({base} * {a} + {b}) % {MINHASH_P}) % {CMS_W}"
-
-
-SQL_CMS_USER_COUNTS = f"""
-WITH base AS (
-    SELECT {_cms_base_sql('CAST(user_id AS VARCHAR)')} AS b
-    FROM events WHERE user_id IS NOT NULL
-),
-cells AS (
-    {" UNION ALL ".join(f"SELECT {i} AS r, {_cms_row_sql('b', i)} AS c FROM base" for i in range(CMS_D))}
-),
-counters AS (SELECT r, c, CAST(count(*) AS BIGINT) AS cnt FROM cells GROUP BY 1, 2),
-exact AS (
-    SELECT user_id, CAST(count(*) AS BIGINT) AS exact_cnt,
-           {_cms_base_sql('CAST(user_id AS VARCHAR)')} AS kb
-    FROM events WHERE user_id IS NOT NULL GROUP BY 1
-    ORDER BY exact_cnt DESC, user_id LIMIT {_CMS_TOP}
-),
-probe AS (
-    {" UNION ALL ".join(f"SELECT user_id, exact_cnt, {i} AS r, {_cms_row_sql('kb', i)} AS c FROM exact" for i in range(CMS_D))}
-),
-est AS (
-    SELECT p.user_id, p.exact_cnt,
-           CAST(min(coalesce(t.cnt, 0)) AS BIGINT) AS cms_est
-    FROM probe p LEFT JOIN counters t ON p.r = t.r AND p.c = t.c
-    GROUP BY 1, 2
-)
-SELECT user_id, exact_cnt, cms_est,
-       CAST(cms_est - exact_cnt AS BIGINT) AS over_cnt
-FROM est ORDER BY user_id
-"""
-
-_B42_ALL_QUERIES_FN = all_queries
-_B42_ALL_ORACLES_FN = all_oracle_sql
-
-_B43_QUERIES = {
-    "event_cms_user_counts": q_event_cms_user_counts,
-}
-_B43_ORACLES = {
-    "event_cms_user_counts": SQL_CMS_USER_COUNTS,
-}
-
-
-def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _B42_ALL_QUERIES_FN()
-    out.update(_B43_QUERIES)
-    return out
-
-
-def all_oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _B42_ALL_ORACLES_FN()
-    out.update(_B43_ORACLES)
-    return out
-
-# ---------------------------------------------------------------------------
-# batch 44 (round 5): leakage-safe feature-vector assembly (featurize.py) —
-# the scaler is FIT on the train fold only (frozen exact-integer milli
-# stats), TRANSFORMED over every fold, composed with explicit-domain one-hot
-# and the hashing trick.  A NULL stratum is injected into `value` so the
-# gate covers NULL propagation through fit (skipped) and transform
-# (NULL out).  The z-score is a fixed IEEE op sequence over exact BIGINTs —
-# replayed verbatim in the oracle.
-# ---------------------------------------------------------------------------
-
-from ipl_dagster_pipeline_spark.operators.featurize import (
-    hash_bucket_onehot,
-    one_hot,
-    standardize_fit,
-    standardize_transform,
-)
-
-_FV_DOMAIN = ["click", "error", "purchase", "signup", "view"]
-_FV_NUM = ["value", "plen", "hour"]
-_FV_FRACS = {"train": 0.8, "val": 0.1, "test": 0.1}
-_FV_HB = 8
-_FV_HB_SEED = 11
-
-
-def q_event_feature_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fixed-width trainer-ready feature columns from events: z-scores under
-    train-fold-frozen stats, declared-domain one-hot of event_type, 8-bucket
-    hashed user indicator.  Scale shape: one tiny global agg (fit) broadcast
-    into pure projections — zero key shuffles."""
-    ev = _read(spark, sf_dir, "events").select(
-        "event_id",
-        "user_id",
-        "event_type",
-        F.when(F.col("event_id") % 17 == 0, F.lit(None).cast("double"))
-        .otherwise(F.col("value"))
-        .alias("value"),
-        F.length("props").cast("double").alias("plen"),
-        F.hour(F.col("ts").cast("timestamp")).cast("double").alias("hour"),
-    )
-    ev = hash_split(ev, "event_id", fractions=_FV_FRACS, out_col="fold")
-    stats = standardize_fit(ev.where(F.col("fold") == "train"), _FV_NUM)
-    out = standardize_transform(ev, stats, _FV_NUM)
-    out = one_hot(out, "event_type", _FV_DOMAIN, prefix="oh")
-    out = hash_bucket_onehot(out, "user_id", _FV_HB, seed=_FV_HB_SEED)
-    return out.select(
-        "event_id",
-        "fold",
-        *[f"z_{c}" for c in _FV_NUM],
-        *[f"oh_{v}" for v in _FV_DOMAIN],
-        "oh_other",
-        *[f"hb_{i}" for i in range(_FV_HB)],
-    )
-
-
-def _fv_z_sql(c: str) -> str:
-    vm = f"CAST(round({c} * 1000) AS BIGINT)"
-    n = f"CAST(greatest(n_{c}, 1) AS DOUBLE)"
-    mean = f"(CAST(s_{c} AS DOUBLE) / {n})"
-    var = f"(CAST(q_{c} AS DOUBLE) / {n} - {mean} * {mean})"
-    return (
-        f"CASE WHEN n_{c} = 0 OR {var} <= 0 THEN 0.0 "
-        f"ELSE round((CAST({vm} AS DOUBLE) - {mean}) / sqrt({var}), 6) END AS z_{c}"
-    )
-
-
-SQL_FEATURE_VECTORS = f"""
-WITH ev AS (
-    SELECT event_id, user_id, event_type,
-           CASE WHEN event_id % 17 = 0 THEN NULL ELSE value END AS value,
-           CAST(length(props) AS DOUBLE) AS plen,
-           CAST(hour(ts) AS DOUBLE) AS hour,
-           CAST(concat('0x', substring(md5(concat('7:', CAST(event_id AS VARCHAR))), 1, 15)) AS BIGINT)
-               % 10000 AS bucket
-    FROM events
-),
-f AS (
-    SELECT *, CASE WHEN bucket < 8000 THEN 'train'
-                   WHEN bucket < 9000 THEN 'val'
-                   ELSE 'test' END AS fold
-    FROM ev
-),
-st AS (
-    SELECT
-        {", ".join(
-            f"count(CAST(round({c} * 1000) AS BIGINT)) AS n_{c}, "
-            f"CAST(coalesce(sum(CAST(round({c} * 1000) AS BIGINT)), 0) AS BIGINT) AS s_{c}, "
-            f"CAST(coalesce(sum(CAST(round({c} * 1000) AS BIGINT) * CAST(round({c} * 1000) AS BIGINT)), 0) AS BIGINT) AS q_{c}"
-            for c in _FV_NUM
-        )}
-    FROM f WHERE fold = 'train'
-)
-SELECT event_id, fold,
-       {", ".join(_fv_z_sql(c) for c in _FV_NUM)},
-       {", ".join(f"CASE WHEN event_type = '{v}' THEN 1 ELSE 0 END AS oh_{v}" for v in _FV_DOMAIN)},
-       CASE WHEN event_type IN ({", ".join(repr(v) for v in _FV_DOMAIN)}) THEN 0 ELSE 1 END AS oh_other,
-       {", ".join(
-           f"CASE WHEN CAST(concat('0x', substring(md5(concat('{_FV_HB_SEED}:', coalesce(CAST(user_id AS VARCHAR), '<null>'))), 1, 15)) AS BIGINT) % {_FV_HB} = {i} THEN 1 ELSE 0 END AS hb_{i}"
-           for i in range(_FV_HB)
-       )}
-FROM f CROSS JOIN st
-"""
-
-_B43_ALL_QUERIES_FN = all_queries
-_B43_ALL_ORACLES_FN = all_oracle_sql
-
-_B44_QUERIES = {
-    "event_feature_vectors": q_event_feature_vectors,
-}
-_B44_ORACLES = {
-    "event_feature_vectors": SQL_FEATURE_VECTORS,
-}
-
-
-def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _B43_ALL_QUERIES_FN()
-    out.update(_B44_QUERIES)
-    return out
-
-
-def all_oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _B43_ALL_ORACLES_FN()
-    out.update(_B44_ORACLES)
-    return out
-
-# ---------------------------------------------------------------------------
-# batch 45 (round 5): frozen-edge quantile binning (exact type-1 rank
-# elements fit on the train fold only), hashed feature crosses, and
-# fixed-size overlapping token-window chunking (documents → training
-# windows).  All three are pure integer/string determinism — the oracles
-# replay rank selection, the md5 bucket, and the slicing arithmetic
-# verbatim.  NULL strata are injected (value, text) so the gate covers the
-# exclusion rules (NULL value: out of fit, NULL bin; NULL text: no chunks).
-# ---------------------------------------------------------------------------
-
-from ipl_dagster_pipeline_spark.operators.chunking import chunk_token_windows
-from ipl_dagster_pipeline_spark.operators.featurize import (
-    hash_cross,
-    quantile_bins_fit,
-    quantile_bins_transform,
-)
-
-_QB_BINS = 8
-_XC_BUCKETS = 16
-_XC_SEED = 13
-_CHUNK, _CHUNK_OVERLAP = 32, 8
-
-
-def q_event_quantile_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Leakage-safe discretization: 8-bin edges frozen on the train fold's
-    non-null values (exact lower-rank quantile elements via the keyed
-    distributed prefix-sum ranking), applied to every fold.  Scale shape:
-    one ranked pass over the train fold collapsing to a single edges row,
-    then a broadcast pure projection."""
-    ev = _read(spark, sf_dir, "events").select(
-        "event_id",
-        F.when(F.col("event_id") % 17 == 0, F.lit(None).cast("double"))
-        .otherwise(F.col("value"))
-        .alias("value"),
-    )
-    ev = hash_split(ev, "event_id", fractions=_FV_FRACS, out_col="fold")
-    edges = quantile_bins_fit(
-        ev.where(F.col("fold") == "train"), "value", "event_id", _QB_BINS
-    )
-    out = quantile_bins_transform(ev, edges, "value", _QB_BINS)
-    return out.select("event_id", "fold", "qb_value")
-
-
-SQL_QUANTILE_BINS = f"""
-WITH ev AS (
-    SELECT event_id,
-           CASE WHEN event_id % 17 = 0 THEN NULL ELSE value END AS value,
-           CAST(concat('0x', substring(md5(concat('7:', CAST(event_id AS VARCHAR))), 1, 15)) AS BIGINT)
-               % 10000 AS bucket
-    FROM events
-),
-f AS (
-    SELECT *, CASE WHEN bucket < 8000 THEN 'train'
-                   WHEN bucket < 9000 THEN 'val'
-                   ELSE 'test' END AS fold
-    FROM ev
-),
-tr AS (
-    SELECT value, row_number() OVER (ORDER BY value ASC, event_id ASC) AS r
-    FROM f WHERE fold = 'train' AND value IS NOT NULL
-),
-n AS (SELECT count(*) AS c FROM tr),
-edges AS (
-    SELECT {", ".join(
-        f"max(CASE WHEN r = ((c - 1) * {i}) // {_QB_BINS} + 1 THEN value END) AS e_{i}"
-        for i in range(1, _QB_BINS)
-    )}
-    FROM tr CROSS JOIN n
-)
-SELECT event_id, fold,
-       CASE WHEN value IS NULL THEN NULL ELSE CAST(
-           {" + ".join(
-               f"(CASE WHEN e_{i} IS NOT NULL AND value > e_{i} THEN 1 ELSE 0 END)"
-               for i in range(1, _QB_BINS)
-           )} AS INTEGER) END AS qb_value
-FROM f CROSS JOIN edges
-"""
-
-
-def q_event_hash_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hashed interaction feature: event_type × hour-of-day folded into 16
-    buckets by the portable 60-bit hash of the '<name>=<value>' rendering —
-    fixed width at any joint cardinality, NULL a first-class category.
-    Pure projection: zero shuffles at any scale."""
-    ev = _read(spark, sf_dir, "events").select(
-        "event_id",
-        F.when(F.col("event_id") % 19 == 0, F.lit(None).cast("string"))
-        .otherwise(F.col("event_type"))
-        .alias("event_type"),
-        F.hour(F.col("ts").cast("timestamp")).cast("int").alias("hour"),
-    )
-    return hash_cross(ev, ["event_type", "hour"], _XC_BUCKETS, seed=_XC_SEED)
-
-
-SQL_HASH_CROSS = f"""
-WITH ev AS (
-    SELECT event_id,
-           CASE WHEN event_id % 19 = 0 THEN NULL ELSE event_type END AS event_type,
-           CAST(hour(ts) AS INTEGER) AS hour
-    FROM events
-)
-SELECT event_id, event_type, hour,
-       CAST(concat('0x', substring(md5(concat('{_XC_SEED}:',
-                concat('event_type=', coalesce(event_type, '<null>')),
-                chr(31),
-                concat('hour=', coalesce(CAST(hour AS VARCHAR), '<null>')))), 1, 15)) AS BIGINT)
-           % {_XC_BUCKETS} AS cross_bucket
-FROM ev
-"""
-
-
-def q_doc_token_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Documents → fixed-size overlapping training windows (32 tokens,
-    stride 24): integer start arithmetic + end-clipped slice, NULL text
-    yields no windows.  One posexplode, zero shuffles."""
-    docs = _read(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.when(F.col("doc_id") % 13 == 0, F.lit(None).cast("string"))
-        .otherwise(F.col("text"))
-        .alias("text"),
-    )
-    return chunk_token_windows(
-        docs, text_col="text", chunk_size=_CHUNK, overlap=_CHUNK_OVERLAP
-    )
-
-
-SQL_TOKEN_CHUNKS = f"""
-WITH d AS (
-    SELECT doc_id, string_split(text, ' ') AS toks
-    FROM documents
-    WHERE doc_id % 13 <> 0 AND text IS NOT NULL
-),
-s AS (
-    SELECT doc_id, toks, len(toks) AS n,
-           unnest(generate_series(1, len(toks), {_CHUNK - _CHUNK_OVERLAP})) AS start_tok
-    FROM d
-)
-SELECT doc_id,
-       CAST((start_tok - 1) // {_CHUNK - _CHUNK_OVERLAP} AS INTEGER) AS chunk_idx,
-       start_tok,
-       CAST(least({_CHUNK}, n - start_tok + 1) AS INTEGER) AS n_chunk_tokens,
-       array_to_string(toks[start_tok : start_tok + {_CHUNK} - 1], ' ') AS chunk_text
-FROM s
-"""
-
-_B44_ALL_QUERIES_FN = all_queries
-_B44_ALL_ORACLES_FN = all_oracle_sql
-
-_B45_QUERIES = {
-    "event_quantile_bins": q_event_quantile_bins,
-    "event_hash_cross": q_event_hash_cross,
-    "doc_token_chunks": q_doc_token_chunks,
-}
-_B45_ORACLES = {
-    "event_quantile_bins": SQL_QUANTILE_BINS,
-    "event_hash_cross": SQL_HASH_CROSS,
-    "doc_token_chunks": SQL_TOKEN_CHUNKS,
-}
-
-
-def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _B44_ALL_QUERIES_FN()
-    out.update(_B45_QUERIES)
-    return out
-
-
-def all_oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _B44_ALL_ORACLES_FN()
-    out.update(_B45_ORACLES)
-    return out
-
-# ---------------------------------------------------------------------------
-# batch 46 (round 5): frozen-fit categorical frequency encoding and
-# frozen-vocabulary sparse TF-IDF — the remaining two fit/transform
-# families (featurize scales numerics; these cover categoricals and text).
-# Pure-integer determinism throughout (ppm frequencies, rational integer
-# IDF — no log, no float division before the final values).  NULL strata
-# injected: event_type NULL is a first-class fit category; NULL text
-# vectorizes to zero sparse rows.
-# ---------------------------------------------------------------------------
-
-from ipl_dagster_pipeline_spark.operators.encoding import (
-    count_encode_fit,
-    count_encode_transform,
-)
-from ipl_dagster_pipeline_spark.operators.vectorize import tfidf_transform, vocab_fit
-
-_VOCAB_SIZE = 64
-
-
-def q_event_count_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Frequency encoding of event_type fit on the train fold only: exact
-    BIGINT counts + integer ppm frequencies, joined back null-safely (NULL
-    is a category; unseen-at-fit encodes as 0).  Scale shape: one map-side
-    hash agg for the fit, one AQE-planned join for the transform."""
-    ev = _read(spark, sf_dir, "events").select(
-        "event_id",
-        F.when(F.col("event_id") % 19 == 0, F.lit(None).cast("string"))
-        .otherwise(F.col("event_type"))
-        .alias("event_type"),
-    )
-    ev = hash_split(ev, "event_id", fractions=_FV_FRACS, out_col="fold")
-    fit = count_encode_fit(ev.where(F.col("fold") == "train"), "event_type")
-    return count_encode_transform(ev, fit, "event_type").select(
-        "event_id", "fold", "event_type", "ce_cnt", "ce_ppm"
-    )
-
-
-SQL_COUNT_ENCODING = """
-WITH ev AS (
-    SELECT event_id,
-           CASE WHEN event_id % 19 = 0 THEN NULL ELSE event_type END AS event_type,
-           CAST(concat('0x', substring(md5(concat('7:', CAST(event_id AS VARCHAR))), 1, 15)) AS BIGINT)
-               % 10000 AS bucket
-    FROM events
-),
-f AS (
-    SELECT event_id, event_type,
-           CASE WHEN bucket < 8000 THEN 'train'
-                WHEN bucket < 9000 THEN 'val'
-                ELSE 'test' END AS fold
-    FROM ev
-),
-fit AS (
-    SELECT event_type, CAST(count(*) AS BIGINT) AS cnt
-    FROM f WHERE fold = 'train' GROUP BY event_type
-),
-tot AS (SELECT count(*) AS total FROM f WHERE fold = 'train')
-SELECT f.event_id, f.fold, f.event_type,
-       CAST(coalesce(fit.cnt, 0) AS BIGINT) AS ce_cnt,
-       CAST(coalesce((fit.cnt * 1000000) // tot.total, 0) AS BIGINT) AS ce_ppm
-FROM f CROSS JOIN tot
-LEFT JOIN fit ON f.event_type IS NOT DISTINCT FROM fit.event_type
-"""
-
-
-def q_doc_tfidf_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sparse TF-IDF rows under a 64-term vocabulary FROZEN on the train
-    fold (df-rank with a total tie-break; global rank rides the keyed
-    distributed prefix sum, never a one-task window).  Weights are the
-    pure-integer rarity product — no log, bit-identical cross-engine.
-    NULL-text stratum vectorizes to zero rows."""
-    docs = _read(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.when(F.col("doc_id") % 13 == 0, F.lit(None).cast("string"))
-        .otherwise(F.col("text"))
-        .alias("text"),
-    )
-    docs = hash_split(docs, "doc_id", fractions=_SPLIT_FRACS, out_col="fold")
-    vocab = vocab_fit(docs.where(F.col("fold") == "train"), _VOCAB_SIZE)
-    return tfidf_transform(docs, vocab)
-
-
-SQL_TFIDF_VECTORS = f"""
-WITH d AS (
-    SELECT doc_id,
-           CASE WHEN doc_id % 13 = 0 THEN NULL ELSE text END AS text,
-           CAST(concat('0x', substring(md5(concat('7:', CAST(doc_id AS VARCHAR))), 1, 15)) AS BIGINT)
-               % 10000 AS bucket
-    FROM documents
-),
-f AS (
-    SELECT doc_id, text,
-           CASE WHEN bucket < 9000 THEN 'train'
-                WHEN bucket < 9500 THEN 'val'
-                ELSE 'test' END AS fold
-    FROM d
-),
-tok AS (
-    SELECT doc_id, term
-    FROM (SELECT doc_id, unnest(regexp_split_to_array(lower(text), '\\s+')) AS term FROM f)
-    WHERE term <> ''
-),
-dfc AS (
-    SELECT term, CAST(count(*) AS BIGINT) AS df_docs
-    FROM (SELECT DISTINCT t.doc_id, t.term
-          FROM tok t JOIN f ON t.doc_id = f.doc_id AND f.fold = 'train')
-    GROUP BY term
-),
-nf AS (SELECT CAST(count(DISTINCT doc_id) AS BIGINT) AS n_fit_docs FROM f WHERE fold = 'train'),
-vocab AS (
-    SELECT term, CAST(row_number() OVER (ORDER BY df_docs DESC, term ASC) AS INTEGER) AS term_idx,
-           df_docs
-    FROM dfc
-    QUALIFY term_idx <= {_VOCAB_SIZE}
-),
-tf AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf FROM tok GROUP BY doc_id, term)
-SELECT tf.doc_id, vocab.term_idx, tf.term, tf.tf,
-       CAST(tf.tf * (((nf.n_fit_docs + 1) * 1000000) // (vocab.df_docs + 1)) AS BIGINT) AS weight
-FROM tf JOIN vocab USING (term) CROSS JOIN nf
-"""
-
-_B45_ALL_QUERIES_FN = all_queries
-_B45_ALL_ORACLES_FN = all_oracle_sql
-
-_B46_QUERIES = {
-    "event_count_encoding": q_event_count_encoding,
-    "doc_tfidf_vectors": q_doc_tfidf_vectors,
-}
-_B46_ORACLES = {
-    "event_count_encoding": SQL_COUNT_ENCODING,
-    "doc_tfidf_vectors": SQL_TFIDF_VECTORS,
-}
-
-
-def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _B45_ALL_QUERIES_FN()
-    out.update(_B46_QUERIES)
-    return out
-
-
-def all_oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _B45_ALL_ORACLES_FN()
-    out.update(_B46_ORACLES)
-    return out
-
-# ---------------------------------------------------------------------------
-# batch 47 (round 5): feature-selection statistics — exact-integer pairwise
-# Pearson correlation (one global agg, literal pair explosion) and
-# contingency-table mutual information (milli-nat quantization before the
-# sum, single input scan).  The oracles replay the exact integer sufficient
-# statistics and the fixed IEEE op sequence verbatim.
-# ---------------------------------------------------------------------------
-
-from ipl_dagster_pipeline_spark.operators.stats import (
-    mutual_information,
-    pairwise_correlations,
-)
-
-_CORR_COLS = ["value", "plen", "hour"]
-
-
-def q_event_feature_correlations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pairwise Pearson r over the assembled numeric features (milli-exact
-    sufficient statistics, pairwise NULL deletion — the injected NULL value
-    stratum exercises it).  ONE map-side-combined global aggregation."""
-    ev = _read(spark, sf_dir, "events").select(
-        F.when(F.col("event_id") % 17 == 0, F.lit(None).cast("double"))
-        .otherwise(F.col("value"))
-        .alias("value"),
-        F.length("props").cast("double").alias("plen"),
-        F.hour(F.col("ts").cast("timestamp")).cast("double").alias("hour"),
-    )
-    return pairwise_correlations(ev, _CORR_COLS)
-
-
-def _corr_pair_sql(a: str, b: str) -> str:
-    va = f"CAST(round({a} * 1000) AS BIGINT)"
-    vb = f"CAST(round({b} * 1000) AS BIGINT)"
-    both = f"({a} IS NOT NULL AND {b} IS NOT NULL)"
-    stats = f"""
-    SELECT CAST(count(CASE WHEN {both} THEN 1 END) AS BIGINT) AS n_pair,
-           CAST(coalesce(sum(CASE WHEN {both} THEN CAST({va} AS HUGEINT) END), 0) AS HUGEINT) AS sx,
-           CAST(coalesce(sum(CASE WHEN {both} THEN CAST({vb} AS HUGEINT) END), 0) AS HUGEINT) AS sy,
-           CAST(coalesce(sum(CASE WHEN {both} THEN CAST({va} AS HUGEINT) * CAST({va} AS HUGEINT) END), 0) AS HUGEINT) AS sxx,
-           CAST(coalesce(sum(CASE WHEN {both} THEN CAST({vb} AS HUGEINT) * CAST({vb} AS HUGEINT) END), 0) AS HUGEINT) AS syy,
-           CAST(coalesce(sum(CASE WHEN {both} THEN CAST({va} AS HUGEINT) * CAST({vb} AS HUGEINT) END), 0) AS HUGEINT) AS sxy
-    FROM ev"""
-    return f"""
-SELECT '{a}' AS col_a, '{b}' AS col_b, n_pair,
-       CASE WHEN CAST(n_pair AS HUGEINT) * sxx - sx * sx <= 0
-              OR CAST(n_pair AS HUGEINT) * syy - sy * sy <= 0 THEN 0.0
-            ELSE round(
-                CAST(CAST(n_pair AS HUGEINT) * sxy - sx * sy AS DOUBLE)
-                / sqrt(CAST(CAST(n_pair AS HUGEINT) * sxx - sx * sx AS DOUBLE)
-                       * CAST(CAST(n_pair AS HUGEINT) * syy - sy * sy AS DOUBLE)), 6)
-       END AS r
-FROM ({stats})"""
-
-
-SQL_FEATURE_CORRELATIONS = f"""
-WITH ev AS (
-    SELECT CASE WHEN event_id % 17 = 0 THEN NULL ELSE value END AS value,
-           CAST(length(props) AS DOUBLE) AS plen,
-           CAST(hour(ts) AS DOUBLE) AS hour
-    FROM events
-)
-{" UNION ALL ".join(_corr_pair_sql(a, b) for a, b in [("value", "plen"), ("value", "hour"), ("plen", "hour")])}
-"""
-
-
-def q_event_type_hour_mi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mutual information between event_type (NULL stratum injected — NULL
-    is a real category) and hour-of-day: exact contingency integers, cell
-    surprisals quantized to milli-nats before the order-independent sum.
-    One shuffle on the cell key; marginals derive from the persisted cells."""
-    ev = _read(spark, sf_dir, "events").select(
-        F.when(F.col("event_id") % 19 == 0, F.lit(None).cast("string"))
-        .otherwise(F.col("event_type"))
-        .alias("event_type"),
-        F.hour(F.col("ts").cast("timestamp")).cast("int").alias("hour"),
-    )
-    return mutual_information(ev, "event_type", "hour")
-
-
-SQL_TYPE_HOUR_MI = """
-WITH ev AS (
-    SELECT CASE WHEN event_id % 19 = 0 THEN NULL ELSE event_type END AS event_type,
-           CAST(hour(ts) AS INTEGER) AS hour
-    FROM events
-),
-cells AS (
-    SELECT event_type, hour, CAST(count(*) AS BIGINT) AS c_xy
-    FROM ev GROUP BY event_type, hour
-),
-mx AS (SELECT event_type, CAST(sum(c_xy) AS BIGINT) AS c_x FROM cells GROUP BY event_type),
-my AS (SELECT hour, CAST(sum(c_xy) AS BIGINT) AS c_y FROM cells GROUP BY hour),
-tot AS (SELECT CAST(sum(c_xy) AS BIGINT) AS n FROM cells),
-terms AS (
-    SELECT c_xy * CAST(round(ln(CAST(c_xy AS DOUBLE) * CAST(n AS DOUBLE)
-                                / (CAST(c_x AS DOUBLE) * CAST(c_y AS DOUBLE))) * 1000) AS BIGINT) AS t
-    FROM cells
-    JOIN mx ON cells.event_type IS NOT DISTINCT FROM mx.event_type
-    JOIN my ON cells.hour IS NOT DISTINCT FROM my.hour
-    CROSS JOIN tot
-)
-SELECT (SELECT n FROM tot) AS n_rows,
-       CAST(coalesce(sum(t), 0) AS BIGINT) AS mi_mnats_scaled,
-       round(CAST(coalesce(sum(t), 0) AS DOUBLE) / (1000.0 * (SELECT n FROM tot)), 6) AS mi
-FROM terms
-"""
-
-_B46_ALL_QUERIES_FN = all_queries
-_B46_ALL_ORACLES_FN = all_oracle_sql
-
-_B47_QUERIES = {
-    "event_feature_correlations": q_event_feature_correlations,
-    "event_type_hour_mi": q_event_type_hour_mi,
-}
-_B47_ORACLES = {
-    "event_feature_correlations": SQL_FEATURE_CORRELATIONS,
-    "event_type_hour_mi": SQL_TYPE_HOUR_MI,
-}
-
-
-def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _B46_ALL_QUERIES_FN()
-    out.update(_B47_QUERIES)
-    return out
-
-
-def all_oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _B46_ALL_ORACLES_FN()
-    out.update(_B47_ORACLES)
-    return out
-
-# ---------------------------------------------------------------------------
-# batch 48 (round 5): deterministic uniform negative sampling (contrastive
-# training pairs).  Dense hash-order positions via the global two-phase
-# prefix sum, candidate positions by pure hash arithmetic, one equi-join —
-# never all-pairs, never a driver-side corpus.  The oracle replays the
-# position ranking, the draw, and the self-collision shift verbatim.
-# ---------------------------------------------------------------------------
-
-from ipl_dagster_pipeline_spark.operators.sampling import sample_negatives
-
-_NEG_K = 4
-_NEG_SEED = 53
-
-
-def q_doc_negative_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """4 deterministic uniform negatives per document: hash-dense corpus
-    positions (global prefix sum — no single-partition window), pure-hash
-    draws with a deterministic self-collision shift, one position
-    equi-join."""
-    docs = _read(spark, sf_dir, "documents").select("doc_id")
-    return sample_negatives(docs, "doc_id", _NEG_K, seed=_NEG_SEED)
-
-
-SQL_NEGATIVE_PAIRS = f"""
-WITH d AS (SELECT doc_id FROM documents),
-idx AS (
-    SELECT doc_id,
-           row_number() OVER (
-               ORDER BY {_duck_hash(_NEG_SEED, "coalesce(CAST(doc_id AS VARCHAR), '<null>')")} ASC,
-                        doc_id ASC) - 1 AS pos
-    FROM d
-),
-n AS (SELECT CAST(count(*) AS BIGINT) AS c FROM d),
-drawn AS (
-    SELECT doc_id, pos, neg_rank,
-           {_duck_hash(_NEG_SEED, "concat(coalesce(CAST(doc_id AS VARCHAR), '<null>'), ':', CAST(neg_rank AS VARCHAR))")} % c AS raw,
-           c
-    FROM (SELECT doc_id, pos, unnest(generate_series(1, {_NEG_K})) AS neg_rank FROM idx)
-    CROSS JOIN n
-),
-fixed AS (
-    SELECT doc_id, neg_rank,
-           CASE WHEN raw = pos THEN (raw + 1) % c ELSE raw END AS neg_pos
-    FROM drawn
-)
-SELECT f.doc_id, CAST(f.neg_rank AS INTEGER) AS neg_rank, i.doc_id AS neg_doc_id
-FROM fixed f JOIN idx i ON f.neg_pos = i.pos
-"""
-
-_B47_ALL_QUERIES_FN = all_queries
-_B47_ALL_ORACLES_FN = all_oracle_sql
-
-_B48_QUERIES = {
-    "doc_negative_pairs": q_doc_negative_pairs,
-}
-_B48_ORACLES = {
-    "doc_negative_pairs": SQL_NEGATIVE_PAIRS,
-}
-
-
-def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _B47_ALL_QUERIES_FN()
-    out.update(_B48_QUERIES)
-    return out
-
-
-def all_oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _B47_ALL_ORACLES_FN()
-    out.update(_B48_ORACLES)
-    return out
-
-# ---------------------------------------------------------------------------
-# batch 49 (round 5): PSI feature-drift monitor — frozen-edge quantile bins
-# fit on the train fold, exact ppm bin fractions with a deterministic 1-ppm
-# floor, per-bin (e−a)·milli-nat terms as exact BIGINTs.  NULL values form
-# the bin −1 (missingness drift is drift).  Oracle replays edges, binning,
-# floors, and the milli-nat quantization verbatim.
-# ---------------------------------------------------------------------------
-
-from ipl_dagster_pipeline_spark.operators.stats import feature_psi
-
-
-def q_event_value_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PSI terms of `value` between the train fold (reference) and the test
-    fold (serving stand-in), 8 frozen train-fit bins + the NULL bin.  Scale
-    shape: one ranked pass for edges, pure-projection binning, bin-key aggs
-    — bins, not rows, reach the final join."""
-    ev = _read(spark, sf_dir, "events").select(
-        "event_id",
-        F.when(F.col("event_id") % 17 == 0, F.lit(None).cast("double"))
-        .otherwise(F.col("value"))
-        .alias("value"),
-    )
-    ev = hash_split(ev, "event_id", fractions=_FV_FRACS, out_col="fold")
-    return feature_psi(
-        ev.where(F.col("fold") == "train"),
-        ev.where(F.col("fold") == "test"),
-        "value",
-        "event_id",
-        n_bins=_QB_BINS,
-    )
-
-
-_PSI_BIN_EXPR = "CASE WHEN value IS NULL THEN -1 ELSE " + " + ".join(
-    f"(CASE WHEN e_{i} IS NOT NULL AND value > e_{i} THEN 1 ELSE 0 END)"
-    for i in range(1, 8)
-) + " END"
-
-SQL_VALUE_PSI = f"""
-WITH ev AS (
-    SELECT event_id,
-           CASE WHEN event_id % 17 = 0 THEN NULL ELSE value END AS value,
-           CAST(concat('0x', substring(md5(concat('7:', CAST(event_id AS VARCHAR))), 1, 15)) AS BIGINT)
-               % 10000 AS bucket
-    FROM events
-),
-f AS (
-    SELECT *, CASE WHEN bucket < 8000 THEN 'train'
-                   WHEN bucket < 9000 THEN 'val'
-                   ELSE 'test' END AS fold
-    FROM ev
-),
-tr AS (
-    SELECT value, row_number() OVER (ORDER BY value ASC, event_id ASC) AS r
-    FROM f WHERE fold = 'train' AND value IS NOT NULL
-),
-n AS (SELECT count(*) AS c FROM tr),
-edges AS (
-    SELECT {", ".join(
-        f"max(CASE WHEN r = ((c - 1) * {i}) // 8 + 1 THEN value END) AS e_{i}"
-        for i in range(1, 8)
-    )}
-    FROM tr CROSS JOIN n
-),
-be AS (SELECT {_PSI_BIN_EXPR} AS bin FROM f CROSS JOIN edges WHERE fold = 'train'),
-ba AS (SELECT {_PSI_BIN_EXPR} AS bin FROM f CROSS JOIN edges WHERE fold = 'test'),
-ce AS (SELECT bin, CAST(count(*) AS BIGINT) AS n_exp FROM be GROUP BY bin),
-ca AS (SELECT bin, CAST(count(*) AS BIGINT) AS n_act FROM ba GROUP BY bin),
-j AS (
-    SELECT coalesce(ce.bin, ca.bin) AS bin,
-           coalesce(n_exp, 0) AS n_exp, coalesce(n_act, 0) AS n_act
-    FROM ce FULL OUTER JOIN ca ON ce.bin = ca.bin
-),
-tot AS (SELECT (SELECT coalesce(sum(n_exp), 0) FROM ce) AS te,
-               (SELECT coalesce(sum(n_act), 0) FROM ca) AS ta),
-ppm AS (
-    SELECT bin, n_exp, n_act,
-           greatest((n_exp * 1000000) // greatest(te, 1), 1) AS e_ppm,
-           greatest((n_act * 1000000) // greatest(ta, 1), 1) AS a_ppm
-    FROM j CROSS JOIN tot
-)
-SELECT CAST(bin AS INTEGER) AS bin, n_exp, n_act,
-       CAST(e_ppm AS BIGINT) AS e_ppm, CAST(a_ppm AS BIGINT) AS a_ppm,
-       CAST((e_ppm - a_ppm)
-            * CAST(round(ln(CAST(e_ppm AS DOUBLE) / CAST(a_ppm AS DOUBLE)) * 1000) AS BIGINT)
-        AS BIGINT) AS psi_term_scaled
-FROM ppm
-"""
-
-_B48_ALL_QUERIES_FN = all_queries
-_B48_ALL_ORACLES_FN = all_oracle_sql
-
-_B49_QUERIES = {
-    "event_value_psi": q_event_value_psi,
-}
-_B49_ORACLES = {
-    "event_value_psi": SQL_VALUE_PSI,
-}
-
-
-def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _B48_ALL_QUERIES_FN()
-    out.update(_B49_QUERIES)
-    return out
-
-
-def all_oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _B48_ALL_ORACLES_FN()
-    out.update(_B49_ORACLES)
-    return out
-
-# ---------------------------------------------------------------------------
-# batch 50 (round 5): class-balanced downsampling — at most `cap` rows per
-# class in deterministic hash order, ranked by the KEYED distributed prefix
-# sum (a dominant class spans many partitions; that skew is exactly why the
-# cap exists).  NULL class is a real group.  Oracle = per-class
-# row_number() over the identical (hash, key) order.
-# ---------------------------------------------------------------------------
-
-from ipl_dagster_pipeline_spark.operators.sampling import sample_class_cap
-
-_CAP_N = 300
-_CAP_SEED = 61
-
-
-def q_event_class_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Keep ≤300 events per event_type (NULL stratum is a real class) in
-    deterministic hash order — majority-class capping for skewed labels."""
-    ev = _read(spark, sf_dir, "events").select(
-        "event_id",
-        F.when(F.col("event_id") % 19 == 0, F.lit(None).cast("string"))
-        .otherwise(F.col("event_type"))
-        .alias("event_type"),
-    )
-    return sample_class_cap(ev, "event_type", _CAP_N, "event_id", seed=_CAP_SEED)
-
-
-SQL_CLASS_BALANCE = f"""
-WITH ev AS (
-    SELECT event_id,
-           CASE WHEN event_id % 19 = 0 THEN NULL ELSE event_type END AS event_type
-    FROM events
-),
-r AS (
-    SELECT event_id, event_type,
-           row_number() OVER (
-               PARTITION BY event_type
-               ORDER BY {_duck_hash(_CAP_SEED, "coalesce(CAST(event_id AS VARCHAR), '<null>')")} ASC,
-                        event_id ASC) AS class_rank
-    FROM ev
-)
-SELECT event_id, event_type, CAST(class_rank AS BIGINT) AS class_rank
-FROM r WHERE class_rank <= {_CAP_N}
-"""
-
-_B49_ALL_QUERIES_FN = all_queries
-_B49_ALL_ORACLES_FN = all_oracle_sql
-
-_B50_QUERIES = {
-    "event_class_balance": q_event_class_balance,
-}
-_B50_ORACLES = {
-    "event_class_balance": SQL_CLASS_BALANCE,
-}
-
-
-def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _B49_ALL_QUERIES_FN()
-    out.update(_B50_QUERIES)
-    return out
-
-
-def all_oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _B49_ALL_ORACLES_FN()
-    out.update(_B50_ORACLES)
-    return out
-
-# ---------------------------------------------------------------------------
-# batch 51 (round 5): frozen-fit imputation + winsorization — median fill
-# (exact lower-rank element) and p5/p95 clipping bounds fit on the TRAIN
-# fold, applied to every fold.  The oracle replays both rank selections and
-# the coalesce/least/greatest chain verbatim.
-# ---------------------------------------------------------------------------
-
-from ipl_dagster_pipeline_spark.operators.featurize import (
-    clip_transform,
-    impute_transform,
-    quantile_fit_elements,
-)
-
-
-def q_event_imputed_clipped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Impute NULL values with the train-fold exact median element, then
-    winsorize into the train-fold [p5, p95] elements — the standard
-    preprocessing pair under the frozen-fit discipline.  Scale shape: two
-    ranked passes over the train fold collapsing to one-row frames, then a
-    broadcast pure projection."""
-    ev = _read(spark, sf_dir, "events").select(
-        "event_id",
-        F.when(F.col("event_id") % 17 == 0, F.lit(None).cast("double"))
-        .otherwise(F.col("value"))
-        .alias("value"),
-    )
-    ev = hash_split(ev, "event_id", fractions=_FV_FRACS, out_col="fold")
-    train = ev.where(F.col("fold") == "train")
-    # ONE ranked pass fits the median AND both clip bounds (the ranking is
-    # the fit cost); the persisted one-row frame feeds both transforms
-    from ipl_dagster_pipeline_spark.caching import tracked_persist
-
-    fit = tracked_persist(quantile_fit_elements(
-        train, "value", "event_id",
-        {"imp_value": 50, "clip_lo": 5, "clip_hi": 95},
-    ))
-    out = ev.withColumn("value_raw", F.col("value"))
-    out = impute_transform(out, fit.select("imp_value"), ["value"])
-    out = clip_transform(out, fit.select("clip_lo", "clip_hi"), "value", out_col="value_clip")
-    return out.select(
-        "event_id", "fold", "value_raw",
-        F.col("value").alias("value_filled"), "value_clip",
-    )
-
-
-SQL_IMPUTED_CLIPPED = """
-WITH ev AS (
-    SELECT event_id,
-           CASE WHEN event_id % 17 = 0 THEN NULL ELSE value END AS value,
-           CAST(concat('0x', substring(md5(concat('7:', CAST(event_id AS VARCHAR))), 1, 15)) AS BIGINT)
-               % 10000 AS bucket
-    FROM events
-),
-f AS (
-    SELECT event_id, value,
-           CASE WHEN bucket < 8000 THEN 'train'
-                WHEN bucket < 9000 THEN 'val'
-                ELSE 'test' END AS fold
-    FROM ev
-),
-tr AS (
-    SELECT value, row_number() OVER (ORDER BY value ASC, event_id ASC) AS r
-    FROM f WHERE fold = 'train' AND value IS NOT NULL
-),
-n AS (SELECT count(*) AS c FROM tr),
-fit AS (
-    SELECT max(CASE WHEN r = ((c - 1) * 1) // 2 + 1 THEN value END) AS imp,
-           max(CASE WHEN r = ((c - 1) * 5) // 100 + 1 THEN value END) AS clip_lo,
-           max(CASE WHEN r = ((c - 1) * 95) // 100 + 1 THEN value END) AS clip_hi
-    FROM tr CROSS JOIN n
-)
-SELECT event_id, fold, value AS value_raw,
-       coalesce(value, imp) AS value_filled,
-       least(greatest(coalesce(value, imp), clip_lo), clip_hi) AS value_clip
-FROM f CROSS JOIN fit
-"""
-
-_B50_ALL_QUERIES_FN = all_queries
-_B50_ALL_ORACLES_FN = all_oracle_sql
-
-_B51_QUERIES = {
-    "event_imputed_clipped": q_event_imputed_clipped,
-}
-_B51_ORACLES = {
-    "event_imputed_clipped": SQL_IMPUTED_CLIPPED,
-}
-
-
-def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _B50_ALL_QUERIES_FN()
-    out.update(_B51_QUERIES)
-    return out
-
-
-def all_oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _B50_ALL_ORACLES_FN()
-    out.update(_B51_ORACLES)
-    return out
-
-# ---------------------------------------------------------------------------
-# batch 52 (round 5): wide→long feature melt (unpivot) — the reshape between
-# the trainer's wide feature table and the long (entity, feature, value)
-# layout feature stores and monitoring systems consume.  Spark's native
-# unpivot (Catalyst Expand: one pass, zero shuffles, rows × n_features
-# output); the oracle is the equivalent UNION ALL.  NULLs are RETAINED
-# (includeNulls) — a missing feature value is a fact the long layout must
-# carry, not a dropped row.
-# ---------------------------------------------------------------------------
-
-_MELT_COLS = ["value", "plen", "hour"]
-
-
-def q_event_feature_melt(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Wide → long reshape of the numeric feature columns: one output row
-    per (event, feature) with NULLs kept.  Pure one-pass Expand projection —
-    no shuffle at any scale."""
-    ev = _read(spark, sf_dir, "events").select(
-        "event_id",
-        F.when(F.col("event_id") % 17 == 0, F.lit(None).cast("double"))
-        .otherwise(F.col("value"))
-        .alias("value"),
-        F.length("props").cast("double").alias("plen"),
-        F.hour(F.col("ts").cast("timestamp")).cast("double").alias("hour"),
-    )
-    return ev.unpivot(
-        ids=["event_id"],
-        values=_MELT_COLS,
-        variableColumnName="feature",
-        valueColumnName="feature_value",
-    )
-
-
-SQL_FEATURE_MELT = f"""
-WITH ev AS (
-    SELECT event_id,
-           CASE WHEN event_id % 17 = 0 THEN NULL ELSE value END AS value,
-           CAST(length(props) AS DOUBLE) AS plen,
-           CAST(hour(ts) AS DOUBLE) AS hour
-    FROM events
-)
-{" UNION ALL ".join(
-    f"SELECT event_id, '{c}' AS feature, {c} AS feature_value FROM ev"
-    for c in _MELT_COLS
-)}
-"""
-
-_B51_ALL_QUERIES_FN = all_queries
-_B51_ALL_ORACLES_FN = all_oracle_sql
-
-_B52_QUERIES = {
-    "event_feature_melt": q_event_feature_melt,
-}
-_B52_ORACLES = {
-    "event_feature_melt": SQL_FEATURE_MELT,
-}
-
-
-def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _B51_ALL_QUERIES_FN()
-    out.update(_B52_QUERIES)
-    return out
-
-
-def all_oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _B51_ALL_ORACLES_FN()
-    out.update(_B52_ORACLES)
-    return out
-
-# ---------------------------------------------------------------------------
-# batch 53 (round 6): literal XML decode — the second half of SURVEY §2 S5.
-# The reference walks real DATEX II situation XML element-by-element
-# (pipeline/transformer/cifs.py:243-249,276-306: attribute ids, nested
-# restriction/lane elements, managed-cause references); until now the repo
-# proved the nested-payload pattern only on JSON.  Here the incident fixture
-# is rendered as a literal XML STRING column and decoded with Spark 4's
-# native from_xml (attributes via the `_` prefix, nested structs, missing
-# elements → NULL, malformed documents → all-NULL row in PERMISSIVE mode),
-# then fed through the exact cifs.py transform chain already gated by
-# incident_pipeline.  The oracle never parses XML: it derives the same
-# fields from first principles, so any from_xml mis-parse (lost attribute,
-# swallowed nested element, wrong NULL semantics) fails the value hash.
-# ---------------------------------------------------------------------------
-
-_XML_SITUATION_SCHEMA = (
-    "struct<_id: string, _type: string, "
-    "restriction: struct<laneStatus: string>, cause: struct<_ref: string>>"
-)
-
-
-def q_incident_xml_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DATEX-II-style XML decode → full incident transform chain.
-
-    Render each event as a situation document (id/type as ATTRIBUTES, lane
-    status as a NESTED element, managed cause as an attribute of an empty
-    element — the shapes cifs.py walks), with every 13th document truncated
-    mid-attribute.  from_xml decodes JVM-side (no Python in the loop);
-    malformed rows parse to NULL and are dropped before the chain, the
-    errors-become-NULL discipline of F1.  Scale: one projection, no shuffle
-    added over incident_pipeline's own joins (the fan-out below is a no-op
-    once the source scan is already wide; locally it spreads the per-row
-    XML parse across the session's cores instead of one scan task).
-    """
-    from ipl_dagster_pipeline_spark.partitioning import fan_out_scan
-
-    ev = fan_out_scan(_read(spark, sf_dir, "events"))
-    id_col = (
-        F.when(
-            ev.event_id % 5 == 0,
-            F.concat(F.lit("inc-"), ev.event_id.cast("string"), F.lit("-sperrung")),
-        )
-        .when(
-            ev.event_id % 5 == 1,
-            F.concat(F.lit("inc-"), (ev.event_id - 1).cast("string"), F.lit("-gegen-sperrung")),
-        )
-        .otherwise(F.concat(F.lit("inc-"), ev.event_id.cast("string")))
-    )
-    lane = F.element_at(
-        F.array(*[F.lit(x) for x in _LANES], F.lit(None).cast("string")),
-        (ev.event_id % 7 + 1).cast("int"),
-    )
-    cause = F.when(
-        ev.event_id % 11 == 0, F.concat(F.lit("inc-"), (ev.event_id + 2).cast("string"))
-    )
-    itype = F.element_at(F.array(*[F.lit(x) for x in _ITYPES]), (ev.event_id % 4 + 1).cast("int"))
-    doc = F.concat(
-        F.lit('<sit id="'), id_col, F.lit('" type="'), itype, F.lit('">'),
-        F.coalesce(
-            F.concat(F.lit("<restriction><laneStatus>"), lane, F.lit("</laneStatus></restriction>")),
-            F.lit("<restriction/>"),
-        ),
-        F.coalesce(F.concat(F.lit('<cause ref="'), cause, F.lit('"/>')), F.lit("")),
-        F.lit("</sit>"),
-    )
-    doc = F.when(ev.event_id % 13 == 0, F.lit('<sit id="broken')).otherwise(doc)
-    parsed = ev.select(F.from_xml(doc, _XML_SITUATION_SCHEMA).alias("p"))
-    base = parsed.select(
-        F.col("p._id").alias("id"),
-        F.col("p.restriction.laneStatus").alias("lane_status"),
-        F.col("p.cause._ref").alias("cause_ref"),
-        F.col("p._type").alias("itype"),
-    ).filter(F.col("id").isNotNull())  # malformed docs parsed to NULL → dropped
-    d = detect_direction(base)
-    d = skip_gegen_records(d)
-    d = drop_managed_causes(d)
-    mapped = incident_type(F.col("itype"))
-    return d.select(
-        "id",
-        "lane_status",
-        "direction",
-        mapped.alias("itype_mapped"),
-        incident_subtype(mapped).alias("isubtype"),
-    )
-
-
-# first-principles oracle: same field distributions, same chain, with the
-# malformed 13th documents excluded up front (they parse to NULL on Spark)
-SQL_INCIDENTS_XML = r"""
-WITH base AS (
-    SELECT CASE WHEN event_id % 5 = 0 THEN 'inc-' || CAST(event_id AS VARCHAR) || '-sperrung'
-                WHEN event_id % 5 = 1 THEN 'inc-' || CAST(event_id - 1 AS VARCHAR) || '-gegen-sperrung'
-                ELSE 'inc-' || CAST(event_id AS VARCHAR) END AS id,
-           (['s1', 'x1', '1x', 'u2w', '1', 'zz', NULL])[(event_id % 7) + 1] AS lane_status,
-           CASE WHEN event_id % 11 = 0 THEN 'inc-' || CAST(event_id + 2 AS VARCHAR) END AS cause_ref,
-           (['constructionWork', 'roadClosed', 'repairWork', 'other'])[(event_id % 4) + 1] AS itype
-    FROM events
-    WHERE event_id % 13 <> 0
-),
-gegen AS (
-    SELECT DISTINCT regexp_replace(id, '-gegen-', '-') AS sib FROM base WHERE id LIKE '%-gegen-%'
-),
-dirs AS (
-    SELECT b.*, g.sib IS NOT NULL AS has_gegen
-    FROM base b LEFT JOIN gegen g ON b.id = g.sib
-),
-d2 AS (
-    SELECT *,
-        CASE WHEN id LIKE '%-sperrung' AND id NOT LIKE '%-gegen-%'
-             THEN CASE WHEN has_gegen THEN 'BOTH_DIRECTIONS' ELSE 'ONE_DIRECTION' END
-             WHEN lane_status IS NOT NULL
-                  AND regexp_matches(lane_status, '^([sxui]*l?)?[suioewx]*(1|2)[suioewx]*(r?[xsoe]*)?$')
-             THEN CASE WHEN (length(regexp_extract(lane_status, '^([^12]*)', 1)) > 0
-                             AND length(regexp_replace(regexp_extract(lane_status, '^([^12]*)', 1),
-                                                       '[usl]', '', 'g')) > 0)
-                            OR length(regexp_replace(regexp_extract(lane_status, '^[^12]*[12]([^12]*)', 1),
-                                                     '[^uiw]', '', 'g')) > 0
-                  THEN 'BOTH_DIRECTIONS' ELSE 'ONE_DIRECTION' END
-             ELSE 'BOTH_DIRECTIONS' END AS direction
-    FROM dirs
-),
-nogegen AS (
-    SELECT * FROM d2 WHERE id NOT LIKE '%-gegen%'
-),
-filtered AS (
-    SELECT * FROM nogegen
-    WHERE id NOT IN (SELECT DISTINCT cause_ref FROM nogegen WHERE cause_ref IS NOT NULL)
-)
-SELECT id, lane_status, direction,
-       CASE WHEN itype IN ('constructionWork', 'newRoadworksLayout', 'repairWork') THEN 'CONSTRUCTION'
-            WHEN itype = 'roadClosed' THEN 'ROAD_CLOSED'
-            ELSE 'CONSTRUCTION' END AS itype_mapped,
-       CASE WHEN (CASE WHEN itype IN ('constructionWork', 'newRoadworksLayout', 'repairWork') THEN 'CONSTRUCTION'
-                       WHEN itype = 'roadClosed' THEN 'ROAD_CLOSED'
-                       ELSE 'CONSTRUCTION' END) = 'ROAD_CLOSED'
-            THEN 'ROAD_CLOSED_CONSTRUCTION' ELSE '' END AS isubtype
-FROM filtered
-"""
-
-_B52_ALL_QUERIES_FN = all_queries
-_B52_ALL_ORACLES_FN = all_oracle_sql
-
-_B53_QUERIES = {
-    "incident_xml_pipeline": q_incident_xml_pipeline,
-}
-_B53_ORACLES = {
-    "incident_xml_pipeline": SQL_INCIDENTS_XML,
-}
-
-
-def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _B52_ALL_QUERIES_FN()
-    out.update(_B53_QUERIES)
-    return out
-
-
-def all_oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _B52_ALL_ORACLES_FN()
-    out.update(_B53_ORACLES)
-    return out
-
-# ---------------------------------------------------------------------------
-# batch 54 (round 6): mergeable quantile sketch — deterministic base-2
-# log-histogram (operators/sketches.py).  Exact rank quantiles shuffle every
-# value; the 100 TB monitoring path is a sketch whose buckets are pure
-# integer functions of the value (milli-units, bitlength via bin(), shifts),
-# so partials combine map-side and UNION of inputs == merge of sketches
-# (tested).  Bucket math is BIGINT-only — no log()/pow() cross-engine
-# edge-rounding hazard — so both the register frame and the quantile reads
-# value-hash against the DuckDB replay.  Catalog-only (gate stays at 50).
-# ---------------------------------------------------------------------------
-
-from ipl_dagster_pipeline_spark.operators.sketches import (
-    loghist_quantiles,
-    loghist_sketch,
-)
-
-
-def q_event_value_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The sketch itself: (event_type, bound, cnt) — one map-side-combined
-    aggregation, ≤ a few hundred rows per group at ANY input size."""
-    ev = _read(spark, sf_dir, "events")
-    return loghist_sketch(ev, "value", ["event_type"])
-
-
-def q_event_sketch_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """p50/p95/p99 per event_type read off the sketch: cumulative walk over
-    the tiny register frame (window over the sketch, never the data); pure
-    BIGINT rank comparison 100·cum > (n−1)·p — no division anywhere."""
-    ev = _read(spark, sf_dir, "events")
-    sk = loghist_sketch(ev, "value", ["event_type"])
-    return loghist_quantiles(sk, {"p50": 50, "p95": 95, "p99": 99}, ["event_type"])
-
-
-SQL_VALUE_SKETCH = """
-WITH m AS (
-    SELECT event_type, CAST(floor(value * 1000) AS BIGINT) AS m
-    FROM events WHERE value IS NOT NULL
-),
-s AS (
-    SELECT event_type, m,
-           greatest(length(bin(abs(m))) - 4, 0) AS sh
-    FROM m
-),
-b AS (
-    SELECT event_type,
-           CASE WHEN m < 0 THEN -((abs(m) >> sh) << sh)
-                ELSE (abs(m) >> sh) << sh END AS bound
-    FROM s
-)
-SELECT event_type, bound, CAST(count(*) AS BIGINT) AS cnt
-FROM b GROUP BY event_type, bound
-"""
-
-SQL_SKETCH_QUANTILES = """
-WITH m AS (
-    SELECT event_type, CAST(floor(value * 1000) AS BIGINT) AS m
-    FROM events WHERE value IS NOT NULL
-),
-s AS (
-    SELECT event_type, m, greatest(length(bin(abs(m))) - 4, 0) AS sh FROM m
-),
-sk AS (
-    SELECT event_type,
-           CASE WHEN m < 0 THEN -((abs(m) >> sh) << sh)
-                ELSE (abs(m) >> sh) << sh END AS bound,
-           CAST(count(*) AS BIGINT) AS cnt
-    FROM s GROUP BY 1, 2
-),
-c AS (
-    SELECT event_type, bound, cnt,
-           sum(cnt) OVER (PARTITION BY event_type ORDER BY bound) AS cum,
-           sum(cnt) OVER (PARTITION BY event_type) AS n
-    FROM sk
-)
-SELECT event_type,
-       min(CASE WHEN cum * 100 > (n - 1) * 50 THEN bound END) AS q_p50,
-       min(CASE WHEN cum * 100 > (n - 1) * 95 THEN bound END) AS q_p95,
-       min(CASE WHEN cum * 100 > (n - 1) * 99 THEN bound END) AS q_p99
-FROM c GROUP BY event_type
-"""
-
-_B53_ALL_QUERIES_FN = all_queries
-_B53_ALL_ORACLES_FN = all_oracle_sql
-
-_B54_QUERIES = {
-    "event_value_sketch": q_event_value_sketch,
-    "event_sketch_quantiles": q_event_sketch_quantiles,
-}
-_B54_ORACLES = {
-    "event_value_sketch": SQL_VALUE_SKETCH,
-    "event_sketch_quantiles": SQL_SKETCH_QUANTILES,
-}
-
-
-def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _B53_ALL_QUERIES_FN()
-    out.update(_B54_QUERIES)
-    return out
-
-
-def all_oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _B53_ALL_ORACLES_FN()
-    out.update(_B54_ORACLES)
-    return out
-
-# ---------------------------------------------------------------------------
-# batch 55 (round 6): ANN recall@k observability — the metric an operator of
-# the 100 TB similarity path actually watches.  Exact brute-force top-k is
-# the truth set; the pinned-quantizer IVF path is the candidate; recall is
-# the per-query overlap.  Both halves are individually value-hashed rows
-# already (emb_cosine_topk, emb_ivf_topk_oracle); this row composes them so
-# a quantizer/probe regression shows up as a recall drop, not just a hash
-# mismatch.  Set-intersection semantics — rank ties cannot flake the count.
-# ---------------------------------------------------------------------------
-
-
-def q_emb_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """recall@k of the pinned IVF ANN vs exact brute force, per query:
-    (query_id, n_hits, k).  Both sides bucket/probe exactly as their gated
-    rows do; the join is a tiny left-semi per query — never all-pairs."""
-    emb = _read(spark, sf_dir, "embeddings")
-    qids = list(range(_IVP_NQ))
-    ivf = ivf_topk_pinned(
-        emb, query_ids=qids, k=_IVP_K,
-        n_clusters=_IVP_NC, n_probe=_IVP_NP, seed=_IVP_SEED,
-    ).select("query_id", "neighbor_id")
-    bf = cosine_topk_bruteforce(emb, query_ids=qids, k=_IVP_K).select(
-        "query_id", "neighbor_id"
-    )
-    hits = (
-        bf.join(ivf, ["query_id", "neighbor_id"], "left_semi")
-        .groupBy("query_id")
-        .agg(F.count(F.lit(1)).alias("n_hits"))
-    )
-    return (
-        bf.select("query_id")
-        .distinct()
-        .join(hits, "query_id", "left")
-        .select(
-            "query_id",
-            F.coalesce(F.col("n_hits"), F.lit(0)).cast("long").alias("n_hits"),
-            F.lit(_IVP_K).cast("int").alias("k"),
-        )
-    )
-
-
-SQL_ANN_RECALL = f"""
-WITH ivf AS ({SQL_IVF_TOPK}),
-     bf AS ({SQL_COSINE_TOPK})
-SELECT bf.query_id,
-       CAST(count(ivf.neighbor_id) AS BIGINT) AS n_hits,
-       CAST({_IVP_K} AS INTEGER) AS k
-FROM bf LEFT JOIN ivf
-  ON bf.query_id = ivf.query_id AND bf.neighbor_id = ivf.neighbor_id
-GROUP BY bf.query_id
-"""
-
-_B54_ALL_QUERIES_FN = all_queries
-_B54_ALL_ORACLES_FN = all_oracle_sql
-
-_B55_QUERIES = {"emb_ann_recall": q_emb_ann_recall}
-_B55_ORACLES = {"emb_ann_recall": SQL_ANN_RECALL}
-
-
-def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _B54_ALL_QUERIES_FN()
-    out.update(_B55_QUERIES)
-    return out
-
-
-def all_oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _B54_ALL_ORACLES_FN()
-    out.update(_B55_ORACLES)
-    return out
-
-# ---------------------------------------------------------------------------
-# batch 56 (round 6): fuzzy eval-set decontamination — the near-duplicate
-# complement of doc_contamination's exact k-gram probe.  A paraphrased or
-# lightly-edited benchmark leak has no 30-gram in common with the eval set;
-# MinHash-banded Jaccard at the dedup threshold catches it.  Benchmark bands
-# broadcast; candidates come from the (band, bucket) equi-join — never
-# all-pairs (operators/cleaning.py:fuzzy_contamination_pairs).
-# ---------------------------------------------------------------------------
-
-from ipl_dagster_pipeline_spark.operators.cleaning import fuzzy_contamination_pairs
-
-
-def q_doc_fuzzy_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, bench_id, jaccard) pairs where a corpus doc (doc_id % 97 ≠ 0)
-    is shingle-Jaccard ≥ 0.5 similar to a benchmark doc (doc_id % 97 = 0) —
-    the same deterministic split jobs/pretrain_prep.py decontaminates."""
-    docs = _read(spark, sf_dir, "documents")
-    return fuzzy_contamination_pairs(
-        docs.filter(F.col("doc_id") % 97 != 0),
-        docs.filter(F.col("doc_id") % 97 == 0),
-        threshold=0.5,
-    )
-
-
-SQL_FUZZY_CONTAMINATION = f"""
-WITH {SHINGLE_CTE.strip()},
-mhb AS (SELECT doc_id, {_MH_BASE} AS base FROM sh),
-mh AS (SELECT doc_id, {_MH_MINS} FROM mhb GROUP BY doc_id),
-bands AS (
-    {_MH_BANDS}
-),
-cand AS (
-    SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-    FROM bands a JOIN bands b
-      ON a.band = b.band AND a.bucket = b.bucket
-    WHERE a.doc_id % 97 <> 0 AND b.doc_id % 97 = 0
-),
-cnt AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-inter AS (
-    SELECT c.doc_a, c.doc_b, count(*) AS n_inter
-    FROM cand c
-    JOIN sh a ON a.doc_id = c.doc_a
-    JOIN sh b ON b.doc_id = c.doc_b AND b.s = a.s
-    GROUP BY 1, 2
-)
-SELECT i.doc_a AS doc_id, i.doc_b AS bench_id,
-       round(i.n_inter / (ca.n + cb.n - i.n_inter), 6) AS jaccard
-FROM inter i
-JOIN cnt ca ON ca.doc_id = i.doc_a
-JOIN cnt cb ON cb.doc_id = i.doc_b
-WHERE i.n_inter / (ca.n + cb.n - i.n_inter) >= 0.5
-"""
-
-_B55_ALL_QUERIES_FN = all_queries
-_B55_ALL_ORACLES_FN = all_oracle_sql
-
-_B56_QUERIES = {"doc_fuzzy_contamination": q_doc_fuzzy_contamination}
-_B56_ORACLES = {"doc_fuzzy_contamination": SQL_FUZZY_CONTAMINATION}
-
-
-def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _B55_ALL_QUERIES_FN()
-    out.update(_B56_QUERIES)
-    return out
-
-
-def all_oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _B55_ALL_ORACLES_FN()
-    out.update(_B56_ORACLES)
-    return out
-
-# ---------------------------------------------------------------------------
-# batch 57 (round 6): Z-order (Morton) layout clustering — the
-# multi-dimensional file-layout key behind Iceberg/Delta Z-ordering
-# (partitioning.py: morton_code / cluster_by_morton).  Range-partitioning on
-# one column prunes on that column only; interleaving bits of several gives
-# every clustered column narrow per-file min/max ranges, so a 100 TB scan
-# with a predicate on ANY of them skips most files on footer statistics.
-# Pure BIGINT bit arithmetic, identical in ANSI SQL — value-hashed.
-# ---------------------------------------------------------------------------
-
-from ipl_dagster_pipeline_spark.partitioning import morton_code, morton_sql
-
-
-def q_event_morton_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The Z-order key for events clustered on (hour-of-day, value): one
-    projection, no shuffle; NULL in either dimension → NULL key (incomplete
-    rows sort together at the end of the layout)."""
-    ev = _read(spark, sf_dir, "events")
-    return ev.select(
-        "event_id",
-        morton_code([F.hour(F.col("ts").cast("timestamp")), F.floor("value")]).alias("zcode"),
-    )
-
-
-SQL_MORTON_LAYOUT = f"""
-SELECT event_id, {morton_sql(["hour(ts)", "floor(value)"])} AS zcode
-FROM events
-"""
-
-_B56_ALL_QUERIES_FN = all_queries
-_B56_ALL_ORACLES_FN = all_oracle_sql
-
-_B57_QUERIES = {"event_morton_layout": q_event_morton_layout}
-_B57_ORACLES = {"event_morton_layout": SQL_MORTON_LAYOUT}
-
-
-def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _B56_ALL_QUERIES_FN()
-    out.update(_B57_QUERIES)
-    return out
-
-
-def all_oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _B56_ALL_ORACLES_FN()
-    out.update(_B57_ORACLES)
-    return out
-
-# ---------------------------------------------------------------------------
-# batch 58 (round 6): SKETCH-based frozen fits — the 100 TB path for the
-# impute/winsorize family.  The exact fits rank every value through the
-# distributed prefix sum (a full shuffle of the fit column); the sketch fits
-# read median and clip bounds off the mergeable base-2 log-histogram (ONE
-# map-side-combined aggregation) within 2^-3 relative error, and freeze an
-# artifact of the SAME shape, so impute_transform / clip_transform (and the
-# streaming fit_literals serving path) work unchanged.  The oracle replays
-# the full sketch: bucket math, division-free rank walk, and transforms.
-# ---------------------------------------------------------------------------
-
-from ipl_dagster_pipeline_spark.operators.featurize import (
-    clip_fit_sketch,
-    impute_fit_sketch,
-)
-
-
-def q_event_imputed_clipped_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Median-impute + p5/p95 winsorize under SKETCH-based frozen fits:
-    (event_id, value_raw, value_filled, value_clip)."""
-    ev = _read(spark, sf_dir, "events").select(
-        "event_id",
-        F.when(F.col("event_id") % 17 == 0, F.lit(None).cast("double"))
-        .otherwise(F.col("value"))
-        .alias("value"),
-    )
-    imputer = impute_fit_sketch(ev, ["value"])
-    clips = clip_fit_sketch(ev, "value", 5, 95)
-    out = ev.withColumn("value_raw", F.col("value"))
-    out = impute_transform(out, imputer, ["value"])
-    out = clip_transform(out, clips, "value", out_col="value_clip")
-    return out.select("event_id", "value_raw", F.col("value").alias("value_filled"), "value_clip")
-
-
-SQL_IMPUTED_CLIPPED_SKETCH = """
-WITH ev AS (
-    SELECT event_id,
-           CASE WHEN event_id % 17 = 0 THEN NULL ELSE value END AS value
-    FROM events
-),
-m AS (
-    SELECT CAST(floor(value * 1000) AS BIGINT) AS m FROM ev
-    WHERE value IS NOT NULL AND NOT isnan(value) AND NOT isinf(value)
-),
-s AS (SELECT m, greatest(length(bin(abs(m))) - 4, 0) AS sh FROM m),
-sk AS (
-    SELECT CASE WHEN m < 0 THEN -((abs(m) >> sh) << sh)
-                ELSE (abs(m) >> sh) << sh END AS bound,
-           CAST(count(*) AS BIGINT) AS cnt
-    FROM s GROUP BY 1
-),
-c AS (
-    SELECT bound, cnt,
-           sum(cnt) OVER (ORDER BY bound) AS cum,
-           sum(cnt) OVER () AS n
-    FROM sk
-),
-fit AS (
-    SELECT min(CASE WHEN cum * 100 > (n - 1) * 50 THEN bound END) / 1000 AS imp,
-           min(CASE WHEN cum * 100 > (n - 1) * 5  THEN bound END) / 1000 AS clip_lo,
-           min(CASE WHEN cum * 100 > (n - 1) * 95 THEN bound END) / 1000 AS clip_hi
-    FROM c
-)
-SELECT event_id, value AS value_raw,
-       coalesce(value, imp) AS value_filled,
-       CASE WHEN coalesce(value, imp) IS NULL THEN NULL
-            ELSE least(greatest(coalesce(value, imp), clip_lo), clip_hi) END AS value_clip
-FROM ev CROSS JOIN fit
-"""
-
-_B57_ALL_QUERIES_FN = all_queries
-_B57_ALL_ORACLES_FN = all_oracle_sql
-
-_B58_QUERIES = {"event_imputed_clipped_sketch": q_event_imputed_clipped_sketch}
-_B58_ORACLES = {"event_imputed_clipped_sketch": SQL_IMPUTED_CLIPPED_SKETCH}
-
-
-def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    out = _B57_ALL_QUERIES_FN()
-    out.update(_B58_QUERIES)
-    return out
-
-
-def all_oracle_sql() -> dict[str, str]:  # noqa: F811
-    out = _B57_ALL_ORACLES_FN()
-    out.update(_B58_ORACLES)
-    return out

@@ -22,25 +22,8 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entry_mod
+from bench import force, fresh_session
 from ipl_dagster_pipeline_spark.session import get_spark
-
-
-def force(df) -> None:
-    df.write.mode("overwrite").format("noop").save()
-    from ipl_dagster_pipeline_spark.caching import release_tracked
-
-    release_tracked()
-
-
-def fresh_session(cpus: str, sf_dir: str):
-    from pyspark.sql import SparkSession
-
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()
-    spark = get_spark(app_name="ipl-bench-extra", master=f"local[{cpus}]", shuffle_partitions=int(cpus))
-    spark.read.parquet(f"{sf_dir}/region.parquet").count()
-    return spark
 
 
 def main() -> None:

@@ -17,11 +17,6 @@ def epoch_seconds_to_utc_ts(col: Column) -> Column:
     return F.to_timestamp(F.from_unixtime(col.cast("long")))
 
 
-def iso_ts(col: Column) -> Column:
-    """F2: ISO-8601 parse (reference: datetime.fromisoformat, cifs.py:145)."""
-    return F.to_timestamp(col)
-
-
 def concat_trim(*cols: Column) -> Column:
     """F3: space-join + trim (reference: f'{roadnumber} {roadname}'.strip(),
     cifs.py:101).  concat_ws skips nulls like the reference's '' default."""
@@ -43,12 +38,6 @@ def split_latlon_pairs(col: Column) -> Column:
         lons,
         lambda la, lo: F.struct(la.cast("double").alias("lat"), lo.cast("double").alias("lon")),
     )
-
-
-def availability_col_name(form_factor: str) -> str:
-    """F11: pivot-column name templating (reference:
-    `num_<form_factor>s_available`, lamassu.py:106-120)."""
-    return f"num_{form_factor}s_available"
 
 
 def local_date_parts(ts: Column, tz: str = "Europe/Berlin") -> list[Column]:

@@ -190,19 +190,6 @@ def source_kl_divergence(
     )
 
 
-def doc_words(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """One row per word OCCURRENCE: (id, w) — the unigram companion of
-    :func:`doc_bigrams`, same tokenization."""
-    # not fanned out — consumers aggregate on vocabulary keys (see
-    # source_kl_divergence note)
-    return docs.select(
-        F.col(id_col),
-        F.explode(
-            F.regexp_extract_all(F.lower(F.col(text_col)), F.lit(WORD_RE), F.lit(0))
-        ).alias("w"),
-    )
-
-
 def pmi_collocations(
     docs: DataFrame,
     id_col: str = "doc_id",

@@ -15,7 +15,7 @@
   ``n_tables`` independent bucket assignments), candidate equi-join on
   (table, bucket), exact cosine re-rank + threshold.  Replaces the O(N²)
   theta join, which remains only as the small-SF oracle mode
-  (__spark_entry__.q_emb_near_dup).
+  (catalog.embeddings.q_emb_near_dup).
 
 All arithmetic in double (cast from float32 FIRST on both engines, so the
 widening happens at the same point).
@@ -44,7 +44,7 @@ def hyperplane_signs(plane: int, dim: int) -> list[float]:
     """Deterministic ±1 signs of hyperplane ``plane`` over ``dim`` dims.
 
     Shared by the Spark operator AND the DuckDB oracle generator
-    (__spark_entry__.py), so both engines use bit-identical planes.
+    (catalog/embeddings.py), so both engines use bit-identical planes.
     """
     return [
         1.0 if ((_GOLDEN * (plane * dim + d + 1)) >> 17) & 1 == 0 else -1.0

@@ -4,7 +4,7 @@ SimHash, n-gram Jaccard.
 Everything is built from JVM-side built-ins (md5/conv/substring/explode/
 groupBy) — no Python in the hot path — and every hash is the PORTABLE
 md5-prefix construction below, reproducible bit-for-bit in any engine (the
-DuckDB oracles in __spark_entry__ recompute identical values).
+DuckDB oracles in the catalog modules recompute identical values).
 
 Scale notes (100 TB honesty):
 * shingling explodes ~|text| rows per doc — the distinct() and min-agg are

@@ -115,7 +115,7 @@ def with_bpe_token_counts(
 
 def bpe_merges_sql_chain(expr: str, merges: list[tuple[str, str]] | None = None) -> str:
     """Render the SAME replace chain as ANSI SQL over ``expr`` — the
-    generated-oracle hook (__spark_entry__ builds DuckDB SQL from it)."""
+    generated-oracle hook (catalog/sampling.py builds DuckDB SQL from it)."""
     s = f"regexp_replace({expr}, '(.)', '|\\1|', 'g')"
     for a, b in merges if merges is not None else BPE_MERGES:
         s = f"replace({s}, '|{a}||{b}|', '|{a}{b}|')"

@@ -20,20 +20,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def configure_aqe(spark, advisory_partition_mb: int = 16) -> None:
-    """Turn on every AQE knob the engine relies on (idempotent).
-
-    ``advisory_partition_mb`` must track the deployment: too large and AQE
-    coalesces small shuffles below core count (serializing window passes —
-    see session.get_spark); 64-128 on a big cluster, 4-16 locally."""
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    spark.conf.set(
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes", str(advisory_partition_mb * 1024 * 1024)
-    )
-
-
 def detect_hot_keys(
     df: DataFrame,
     key: str = "conv_id",

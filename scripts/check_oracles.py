@@ -15,12 +15,13 @@ every pre-consolidation query the merged suites were built from.
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 import __spark_entry__ as entry_mod
 from ipl_dagster_pipeline_spark.session import get_spark

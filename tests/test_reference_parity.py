@@ -166,7 +166,7 @@ def test_xml_situation_decode(spark):
     the `_` prefix, nested elements as structs, missing elements as NULL,
     and a malformed document as an all-NULL row (PERMISSIVE) — the
     errors-become-NULL discipline the pipeline relies on to drop bad docs."""
-    from __spark_entry__ import _XML_SITUATION_SCHEMA
+    from ipl_dagster_pipeline_spark.catalog.relational import _XML_SITUATION_SCHEMA
 
     rows = [
         ('<sit id="inc-1-sperrung" type="roadClosed">'
