@@ -42,6 +42,7 @@ from ipl_dagster_pipeline_spark.operators.textstats import (
     with_quality_scores,
     with_token_counts,
 )
+from ipl_dagster_pipeline_spark.operators.tokenizer import words
 
 
 # ---------------------------------------------------------------------------
@@ -412,10 +413,7 @@ def q_doc_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpus size folds into the plan as a broadcast 1-row agg (the house
     # pattern, lm.py:143) — no separate docs.count() job per run
     n_docs = docs.agg(F.count(F.lit(1)).alias("__n_docs"))
-    toks = docs.select(
-        "doc_id",
-        F.explode(F.regexp_extract_all(F.lower(F.col("text")), F.lit("[a-z0-9]+"), F.lit(0))).alias("t"),
-    )
+    toks = docs.select("doc_id", F.explode(words(F.col("text"))).alias("t"))
     tf = toks.groupBy("doc_id", "t").agg(F.count(F.lit(1)).alias("tf"))
     df_counts = tf.groupBy("t").agg(F.count(F.lit(1)).alias("df"))
     rare = (

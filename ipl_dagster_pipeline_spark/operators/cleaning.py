@@ -23,7 +23,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..caching import tracked_persist
-from .text_dedup import normalize_text, portable_hash
+from .text_dedup import kgrams, normalize_text, portable_hash
 
 # RE2-compatible (works in Spark's Java regex AND DuckDB's RE2): no
 # backreferences, no lookarounds.
@@ -161,18 +161,8 @@ def contamination_flags(
     # (id, gh) shuffle; the semi-join probe is map-side against the broadcast
     # hash set and the only shuffle left carries the surviving hit ids).
     def grams(df: DataFrame) -> DataFrame:
-        from ..partitioning import fan_out_scan
-
-        norm = fan_out_scan(df).select(F.col(id_col), normalize_text(F.col(text_col)).alias("norm"))
-        return (
-            norm.select(
-                id_col,
-                F.explode(
-                    F.sequence(F.lit(1), F.greatest(F.length("norm") - (k - 1), F.lit(1)))
-                ).alias("i"),
-                "norm",
-            )
-            .select(id_col, portable_hash(F.expr(f"substring(norm, i, {k})"), seed).alias("gh"))
+        return kgrams(df, id_col, text_col, k).select(
+            id_col, portable_hash(F.col("gram"), seed).alias("gh")
         )
 
     bench_grams = grams(benchmark).select("gh").distinct()

@@ -26,28 +26,26 @@ tables would broadcast instead; semantics unchanged.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..caching import tracked_persist
 from ..partitioning import fan_out_scan
+from .tokenizer import words
 
-WORD_RE = "[a-z0-9]+"
 
+def adjacent_pairs(ws: Column) -> Column:
+    """``array<struct<a, b>>`` of the adjacent word pairs of the word array
+    ``ws`` (empty for fewer than two words).
 
-def doc_bigrams(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """One row per bigram OCCURRENCE: (id, a, b).  Words are lowercased
-    ``[a-z0-9]+`` runs (the tokenizer/textstats convention).
-
-    The token array is BOUND TO A COLUMN in its own projection before the
-    ``transform`` lambda touches it: ``element_at(<inline regex expr>, i)``
-    re-evaluates the regex per element access inside a higher-order
-    function (r7 measurement: 5.7 s → 0.3 s at sf0.1 for the explode
-    alone), while ``element_at(<attribute>, i)`` reads the row's array."""
-    arr = F.regexp_extract_all(F.lower(F.col(text_col)), F.lit(WORD_RE), F.lit(0))
-    ws = F.col("__ws")
+    ``ws`` must be an ATTRIBUTE (a column bound in an earlier projection),
+    not an inline :func:`tokenizer.words` expression: ``element_at(<inline
+    regex expr>, i)`` re-evaluates the regex per element access inside a
+    higher-order function (r7 measurement: 5.7 s → 0.3 s at sf0.1 for the
+    explode alone), while ``element_at(<attribute>, i)`` reads the row's
+    array."""
     # guard: Spark's sequence(2, n) DESCENDS for n < 2 — emit no pairs instead
-    pairs = F.when(
+    return F.when(
         F.size(ws) >= 2,
         F.transform(
             F.sequence(F.lit(2), F.size(ws)),
@@ -56,9 +54,17 @@ def doc_bigrams(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
             ),
         ),
     ).otherwise(F.array().cast("array<struct<a:string,b:string>>"))
+
+
+def doc_bigrams(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+    """One row per bigram OCCURRENCE: (id, a, b).  Words are lowercased
+    ``[a-z0-9]+`` runs (the tokenizer/textstats convention).
+
+    The token array is BOUND TO A COLUMN in its own projection before
+    :func:`adjacent_pairs` reads it (why: see there)."""
     return (
-        fan_out_scan(docs).select(F.col(id_col), arr.alias("__ws"))
-        .select(F.col(id_col), F.explode(pairs).alias("bg"))
+        fan_out_scan(docs).select(F.col(id_col), words(F.col(text_col)).alias("__ws"))
+        .select(F.col(id_col), F.explode(adjacent_pairs(F.col("__ws"))).alias("bg"))
         .select(id_col, F.col("bg.a").alias("a"), F.col("bg.b").alias("b"))
     )
 
@@ -153,13 +159,10 @@ def source_kl_divergence(
     # keyed map-side partials multiply with the partition count (same
     # mechanism as with_bpe_token_counts; three full-bench runs showed the
     # fan-out a consistent +0.3–0.9 s loss here)
-    words = docs.select(
-        F.col(group_col).alias("g"),
-        F.explode(
-            F.regexp_extract_all(F.lower(F.col(text_col)), F.lit(WORD_RE), F.lit(0))
-        ).alias("w"),
+    word_rows = docs.select(
+        F.col(group_col).alias("g"), F.explode(words(F.col(text_col))).alias("w")
     )
-    n_gw = words.groupBy("g", "w").agg(F.count(F.lit(1)).alias("n_gw"))
+    n_gw = word_rows.groupBy("g", "w").agg(F.count(F.lit(1)).alias("n_gw"))
     n_w = n_gw.groupBy("w").agg(F.sum("n_gw").alias("n_w"))
     t_g = n_gw.groupBy("g").agg(F.sum("n_gw").alias("t_g")).withColumnRenamed("g", "__g2")
     t_all = n_w.agg(F.sum("n_w").alias("t_all"))
@@ -223,22 +226,13 @@ def pmi_collocations(
     # scans).  The count tables are vocabulary-sized and each feeds the
     # totals AND the candidate joins, so they persist too (3 consumers for
     # c_w, 2 for c_ab).
-    arr = F.regexp_extract_all(F.lower(F.col(text_col)), F.lit(WORD_RE), F.lit(0))
-    warr = tracked_persist(fan_out_scan(docs).select(F.col(id_col), arr.alias("__ws")))
-    ws = F.col("__ws")
-    pairs = F.when(
-        F.size(ws) >= 2,
-        F.transform(
-            F.sequence(F.lit(2), F.size(ws)),
-            lambda i: F.struct(
-                F.element_at(ws, i - 1).alias("a"), F.element_at(ws, i).alias("b")
-            ),
-        ),
-    ).otherwise(F.array().cast("array<struct<a:string,b:string>>"))
-    bg = warr.select(F.explode(pairs).alias("bg")).select(
+    warr = tracked_persist(
+        fan_out_scan(docs).select(F.col(id_col), words(F.col(text_col)).alias("__ws"))
+    )
+    bg = warr.select(F.explode(adjacent_pairs(F.col("__ws"))).alias("bg")).select(
         F.col("bg.a").alias("a"), F.col("bg.b").alias("b")
     )
-    uni = warr.select(F.explode(ws).alias("w"))
+    uni = warr.select(F.explode("__ws").alias("w"))
     c_ab = tracked_persist(bg.groupBy("a", "b").agg(F.count(F.lit(1)).alias("c_ab")))
     c_w = tracked_persist(uni.groupBy("w").agg(F.count(F.lit(1)).alias("c_w")))
     totals = c_ab.agg(F.coalesce(F.sum("c_ab"), F.lit(0)).alias("n_bg")).crossJoin(

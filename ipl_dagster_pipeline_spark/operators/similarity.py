@@ -27,12 +27,10 @@ candidate blocks stay bounded) and ``n_tables`` set by the recall target
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..caching import tracked_persist
-from ..metrics import register_observation
-from ..partitioning import fan_out_scan
+from ..partitioning import capped_buckets, fan_out_scan
 
 # odd 64-bit multiplier (golden-ratio constant); bit 17 of K*i is a cheap,
 # well-mixed pseudo-random bit.  NOTE: (K*i) % 2 would collapse to parity(i) —
@@ -71,6 +69,17 @@ def cosine(a: Column, b: Column) -> Column:
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
+def _top_k(pairs: DataFrame, k: int, id_col: str) -> DataFrame:
+    """The ``k`` best ``(query_id, id_col, cos)`` rows per query, ranked by
+    cos descending with the neighbor id as the deterministic tie-break."""
+    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col(id_col).asc())
+    return (
+        pairs.withColumn("rnk", F.row_number().over(w))
+        .filter(F.col("rnk") <= k)
+        .select("query_id", F.col(id_col).alias("neighbor_id"), "cos", F.col("rnk").cast("int").alias("rnk"))
+    )
+
+
 def cosine_topk_bruteforce(
     emb: DataFrame,
     query_ids: list[int],
@@ -84,8 +93,6 @@ def cosine_topk_bruteforce(
     Ranking rounds to 6 dp BEFORE ranking with vec_id tie-break, so ranking
     is stable across engines/float orders.
     """
-    from pyspark.sql import Window
-
     # norms are bound per ROW before the pair join: cosine(qv, v) would
     # re-fold both norms per PAIR (interpreted HOF aggregates — Q×N×dim
     # steps); precomputing them is Q·dim + N·dim and bit-identical (the
@@ -99,12 +106,7 @@ def cosine_topk_bruteforce(
     pairs = base.join(F.broadcast(q), F.col(id_col) != F.col("query_id")).withColumn(
         "cos", F.round(_dot(F.col("qv"), F.col("v")) / (F.col("__nq") * F.col("__nv")), 6)
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col(id_col).asc())
-    return (
-        pairs.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", F.col(id_col).alias("neighbor_id"), "cos", F.col("rnk").cast("int").alias("rnk"))
-    )
+    return _top_k(pairs, k, id_col)
 
 
 def hyperplane_bucket(vec: Column, n_planes: int = 8, dim: int = 64, table: int = 0) -> Column:
@@ -149,8 +151,6 @@ def lsh_topk(
     Scale shape: candidate discovery is a broadcast equi-join on
     (tbl, bucket) (queries are the broadcast side), then one distinct and one
     id-equi-join to fetch vectors — never a cross product."""
-    from pyspark.sql import Window
-
     emb = fan_out_scan(emb)  # the 32-dot-product bucket projection is map-heavy
     base = emb.select(F.col(id_col), _as_double(F.col(vec_col)).alias("v")).withColumn(
         "__nv", _norm(F.col("v"))  # per-row norm, not per-pair (see bruteforce)
@@ -173,12 +173,7 @@ def lsh_topk(
         .join(F.broadcast(q), on="query_id")
         .withColumn("cos", F.round(_dot(F.col("qv"), F.col("v")) / (F.col("__nq") * F.col("__nv")), 6))
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col(id_col).asc())
-    return (
-        pairs.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", F.col(id_col).alias("neighbor_id"), "cos", F.col("rnk").cast("int").alias("rnk"))
-    )
+    return _top_k(pairs, k, id_col)
 
 
 def hyperplane_buckets_tall(
@@ -236,7 +231,6 @@ def ivf_topk(
     """
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
-    from pyspark.sql import Window
 
     base = emb.select(F.col(id_col), _as_double(F.col(vec_col)).alias("v"))
     feat = base.withColumn("features", array_to_vector(F.col("v")))
@@ -269,12 +263,7 @@ def ivf_topk(
     )
     cand = assigned.join(probes, on="cell").filter(F.col(id_col) != F.col("query_id"))
     pairs = cand.withColumn("cos", F.round(cosine(F.col("qv"), F.col("v")), 6))
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col(id_col).asc())
-    return (
-        pairs.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", F.col(id_col).alias("neighbor_id"), "cos", F.col("rnk").cast("int").alias("rnk"))
-    )
+    return _top_k(pairs, k, id_col)
 
 
 def ivf_topk_pinned(
@@ -310,8 +299,6 @@ def ivf_topk_pinned(
     cell-id / neighbor-id tie-breaks, so ordering decisions are
     bit-reproducible.
     """
-    from pyspark.sql import Window
-
     from .text_dedup import portable_hash
 
     base = emb.select(F.col(id_col), _as_double(F.col(vec_col)).alias("v"))
@@ -375,12 +362,7 @@ def ivf_topk_pinned(
     pairs = cand.join(F.broadcast(q), on="query_id").withColumn(
         "cos", F.round(_dot(F.col("qv"), F.col("v")) / (F.col("__nq") * F.col("__nv")), 6)
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col(id_col).asc())
-    return (
-        pairs.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", F.col(id_col).alias("neighbor_id"), "cos", F.col("rnk").cast("int").alias("rnk"))
-    )
+    return _top_k(pairs, k, id_col)
 
 
 def near_dup_pairs_lsh(
@@ -402,39 +384,25 @@ def near_dup_pairs_lsh(
     surviving candidate pairs.  The bucket frame is persisted so the self-join
     does not recompute the projection lineage per side.  Buckets above
     ``max_bucket`` are dropped (a degenerate direction cluster would emit B²
-    pairs) — same silent-cap honesty rule as text_dedup.lsh_candidates; the
-    count window rides the self-join's own (tbl, bucket) shuffle.
+    pairs) — the same ``partitioning.capped_buckets`` cap as
+    text_dedup.lsh_candidates; the count window rides the self-join's own
+    (tbl, bucket) shuffle.
 
     Approximation is one-sided: output ⊆ the exact pair set (recall measured
     in tests; raise ``n_tables`` to raise recall, ``n_planes`` with log2(N)).
     """
-    from pyspark.sql import Window
-
     emb = fan_out_scan(emb)  # the 32-dot-product bucket projection is map-heavy
     base = emb.select(F.col(id_col), _as_double(F.col(vec_col)).alias("v")).withColumn(
         "__nv", _norm(F.col("v"))  # per-row norm, not per-pair (see bruteforce)
     )
     buckets = hyperplane_buckets_tall(emb, n_planes, n_tables, dim, id_col, vec_col)
-    wb = Window.partitionBy("tbl", "bucket")
-    # persist the SIZED frame; observe the dropped count ABOVE the cache on
-    # one join branch (CollectMetrics below an InMemoryRelation never
-    # reports) — surfaced via metrics.observed_metrics('emb_lsh_dropped')
-    sized = tracked_persist(buckets.withColumn("__bsize", F.count(F.lit(1)).over(wb)))
-    obs = register_observation("emb_lsh_dropped")
-    a = (
-        sized.observe(
-            obs,
-            F.sum((F.col("__bsize") > max_bucket).cast("long")).alias("dropped_bucket_rows"),
-            F.count(F.lit(1)).alias("bucket_rows"),
-        )
-        .filter(F.col("__bsize") <= max_bucket)
-        .drop("__bsize")
-        .alias("a")
+    # the dropped count: metrics.observed_metrics('emb_lsh_dropped')
+    observed, kept = capped_buckets(
+        buckets, ["tbl", "bucket"], max_bucket, "emb_lsh_dropped", "dropped_bucket_rows", "bucket_rows"
     )
-    b = sized.filter(F.col("__bsize") <= max_bucket).drop("__bsize").alias("b")
     cand = (
-        a.join(
-            b,
+        observed.alias("a").join(
+            kept.alias("b"),
             (F.col("a.tbl") == F.col("b.tbl"))
             & (F.col("a.bucket") == F.col("b.bucket"))
             & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),

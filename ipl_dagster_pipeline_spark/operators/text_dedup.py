@@ -6,6 +6,9 @@ groupBy) — no Python in the hot path — and every hash is the PORTABLE
 md5-prefix construction below, reproducible bit-for-bit in any engine (the
 DuckDB oracles in the catalog modules recompute identical values).
 
+:func:`kgrams` is the package's one character k-gram stream; shingles,
+winnowing hashes and ``cleaning.contamination_flags`` project it.
+
 Scale notes (100 TB honesty):
 * shingling explodes ~|text| rows per doc — the distinct() and min-agg are
   partial-aggregated map-side before the shuffle, so the shuffle carries one
@@ -16,7 +19,8 @@ Scale notes (100 TB honesty):
   buckets above ``max_bucket`` and the dropped-row count is OBSERVABLE
   (``metrics.observed_metrics('lsh_dropped')`` after the consuming action) —
   the A4-style silent-cap warning made queryable (reference dedup-delta
-  warning, lamassu.py:306-311).
+  warning, lamassu.py:306-311).  The cap is ``partitioning.capped_buckets``,
+  shared with the n-gram inverted indexes and the embedding LSH join.
 """
 
 from __future__ import annotations
@@ -25,8 +29,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..caching import tracked_persist
-from ..metrics import register_observation
-from ..partitioning import fan_out_scan
+from ..partitioning import capped_buckets, fan_out_scan
+from .tokenizer import words
 
 # 16 hashes in 4 bands of 4 → LSH collision threshold ≈ (1/4)^(1/4) ≈ 0.71
 # Jaccard.  Bands of 2 are far too permissive on narrow-vocabulary corpora:
@@ -83,22 +87,24 @@ def exact_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
     )
 
 
-def shingles(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", k: int = 5) -> DataFrame:
-    """Distinct character k-shingles per document (1-based positions, so the
-    construction is reproducible in ANSI SQL).  The source is fanned out
-    first: the explode+hash map work is ~|text| per doc and a single-split
-    source would serialize it on one core (fan_out_scan is a no-op on
-    already-wide inputs)."""
+def kgrams(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", k: int = 5) -> DataFrame:
+    """``(id, pos, gram)``: the k characters of the normalized text starting
+    at every 1-based position (NOT distinct; 1-based so the construction is
+    reproducible in ANSI SQL).  A text shorter than k yields one gram, the
+    whole text.  The source is fanned out first: the explode+hash map work
+    is ~|text| per doc and a single-split source would serialize it on one
+    core (fan_out_scan is a no-op on already-wide inputs)."""
     norm = fan_out_scan(docs).select(F.col(id_col), normalize_text(F.col(text_col)).alias("norm"))
-    return (
-        norm.select(
-            id_col,
-            F.explode(F.sequence(F.lit(1), F.greatest(F.length("norm") - (k - 1), F.lit(1)))).alias("i"),
-            "norm",
-        )
-        .select(id_col, F.expr(f"substring(norm, i, {k})").alias("s"))
-        .distinct()
-    )
+    return norm.select(
+        id_col,
+        F.explode(F.sequence(F.lit(1), F.greatest(F.length("norm") - (k - 1), F.lit(1)))).alias("pos"),
+        "norm",
+    ).select(id_col, "pos", F.expr(f"substring(norm, pos, {k})").alias("gram"))
+
+
+def shingles(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", k: int = 5) -> DataFrame:
+    """Distinct character k-shingles ``(id, s)`` per document."""
+    return kgrams(docs, id_col, text_col, k).select(id_col, F.col("gram").alias("s")).distinct()
 
 
 def minhash_signatures(sh: DataFrame, id_col: str = "doc_id", n_hashes: int = N_HASHES) -> DataFrame:
@@ -148,45 +154,17 @@ def lsh_candidates(
     """Banded LSH: docs sharing any band bucket become candidate pairs.
 
     Buckets larger than ``max_bucket`` are dropped (logged) — a degenerate
-    bucket of B docs would emit B² pairs.
+    bucket of B docs would emit B² pairs (``partitioning.capped_buckets``,
+    observed as ``'lsh_dropped'``; its persist keeps the shingle → minhash
+    lineage from running once per join side).
     """
-    from pyspark.sql import Window
-
     bands = band_rows(sig, id_col, n_bands, rows_per_band)
-
-    # oversized-bucket cap WITHOUT a separate aggregate job + anti-join: a
-    # count window over (band, bucket) rides the same shuffle the candidate
-    # self-join needs anyway.  No eager action — the old `dropped.count()`
-    # forced the whole shingle→signature lineage to run an extra time
-    # mid-plan.  Silent-cap honesty: the dropped band-row count is attached
-    # as a named Observation (free — evaluated with whatever action consumes
-    # the candidates) and surfaced via metrics.observed_metrics('lsh_dropped').
-    wb = Window.partitionBy("band", "bucket")
-    # persist the SIZED frame (pre-filter): the candidate generation reads it
-    # TWICE (self-join) and the upstream lineage (shingle explode → minhash
-    # agg) must run once, not per join side.  Tracked so the pipeline can
-    # release the blocks after its consuming action (caching.release_tracked).
-    sized = tracked_persist(bands.withColumn("__bsize", F.count(F.lit(1)).over(wb)))
-    # the dropped count is observed ABOVE the cache on ONE join branch (a
-    # CollectMetrics below an InMemoryRelation never reports; duplicating the
-    # node on both branches would collide on the observation name) — free,
-    # evaluated with whatever action consumes the candidates, surfaced via
-    # metrics.observed_metrics('lsh_dropped').
-    obs = register_observation("lsh_dropped")
-    a = (
-        sized.observe(
-            obs,
-            F.sum((F.col("__bsize") > max_bucket).cast("long")).alias("dropped_band_rows"),
-            F.count(F.lit(1)).alias("band_rows"),
-        )
-        .filter(F.col("__bsize") <= max_bucket)
-        .drop("__bsize")
-        .alias("a")
+    observed, kept = capped_buckets(
+        bands, ["band", "bucket"], max_bucket, "lsh_dropped", "dropped_band_rows", "band_rows"
     )
-    b = sized.filter(F.col("__bsize") <= max_bucket).drop("__bsize").alias("b")
     return (
-        a.join(
-            b,
+        observed.alias("a").join(
+            kept.alias("b"),
             (F.col("a.band") == F.col("b.band"))
             & (F.col("a.bucket") == F.col("b.bucket"))
             & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
@@ -238,6 +216,31 @@ def _jaccard(cand: DataFrame, sh: DataFrame, id_col: str) -> DataFrame:
     )
 
 
+def _shingle_overlaps(
+    docs: DataFrame, k: int, max_df: int, id_col: str, text_col: str, storage_level, obs_name: str
+) -> DataFrame:
+    """Every doc pair sharing a shingle held by at most ``max_df`` docs:
+    columns ``doc_a < doc_b``, ``n_inter`` (shared such shingles), ``n_a``
+    and ``n_b`` (each doc's such shingles).  The document-frequency cap is
+    :func:`partitioning.capped_buckets` keyed by the shingle, observed as
+    ``obs_name`` with ``dropped_shingle_rows`` / ``shingle_rows``."""
+    sh = shingles(docs, id_col, text_col, k)
+    observed, kept = capped_buckets(
+        sh, ["s"], max_df, obs_name, "dropped_shingle_rows", "shingle_rows", storage_level
+    )
+    rare_a = observed.select(F.col(id_col).alias("doc_a"), "s").alias("a")
+    rare_b = kept.select(F.col(id_col).alias("doc_b"), "s").alias("b")
+    inter = (
+        rare_a.join(rare_b, (F.col("a.s") == F.col("b.s")) & (F.col("doc_a") < F.col("doc_b")))
+        .groupBy("doc_a", "doc_b")
+        .agg(F.count(F.lit(1)).alias("n_inter"))
+    )
+    counts = kept.groupBy(id_col).agg(F.count(F.lit(1)).alias("n"))
+    n_a = counts.select(F.col(id_col).alias("doc_a"), F.col("n").alias("n_a"))
+    n_b = counts.select(F.col(id_col).alias("doc_b"), F.col("n").alias("n_b"))
+    return inter.join(n_a, "doc_a").join(n_b, "doc_b")
+
+
 def ngram_jaccard_pairs(
     docs: DataFrame,
     threshold: float = 0.5,
@@ -266,39 +269,8 @@ def ngram_jaccard_pairs(
     aggregation is map-side combined.  Worst case is max_df² pairs per
     surviving shingle — bounded by the cap, tunable against recall.
     """
-    from pyspark.sql import Window
-
-    sh = shingles(docs, id_col, text_col, k)
-    wdf = Window.partitionBy("s")
-    sized = tracked_persist(
-        sh.withColumn("__df", F.count(F.lit(1)).over(wdf)), storage_level
-    )
-    obs = register_observation("ngram_df_dropped")
-    rare_a = (
-        sized.observe(
-            obs,
-            F.sum((F.col("__df") > max_df).cast("long")).alias("dropped_shingle_rows"),
-            F.count(F.lit(1)).alias("shingle_rows"),
-        )
-        .filter(F.col("__df") <= max_df)
-        .select(F.col(id_col).alias("doc_a"), "s")
-    )
-    rare_b = sized.filter(F.col("__df") <= max_df).select(
-        F.col(id_col).alias("doc_b"), "s"
-    )
-    inter = (
-        rare_a.join(rare_b, (rare_a["s"] == rare_b["s"]) & (F.col("doc_a") < F.col("doc_b")))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    counts = sized.filter(F.col("__df") <= max_df).groupBy(id_col).agg(
-        F.count(F.lit(1)).alias("n")
-    )
-    n_a = counts.select(F.col(id_col).alias("doc_a"), F.col("n").alias("n_a"))
-    n_b = counts.select(F.col(id_col).alias("doc_b"), F.col("n").alias("n_b"))
     return (
-        inter.join(n_a, "doc_a")
-        .join(n_b, "doc_b")
+        _shingle_overlaps(docs, k, max_df, id_col, text_col, storage_level, "ngram_df_dropped")
         .withColumn(
             "jaccard",
             F.round(F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")), 6),
@@ -342,15 +314,10 @@ def positional_kgram_hashes(
 ) -> DataFrame:
     """(doc, pos, h): portable hash of the k-gram at every 1-based position of
     the normalized text (NOT distinct — winnowing needs the position stream).
-    Fanned out before the explode for the same reason as :func:`shingles`."""
-    norm = fan_out_scan(docs).select(F.col(id_col), normalize_text(F.col(text_col)).alias("norm"))
-    return norm.select(
-        id_col,
-        F.explode(
-            F.sequence(F.lit(1), F.greatest(F.length("norm") - (k - 1), F.lit(1)))
-        ).alias("pos"),
-        "norm",
-    ).select(id_col, "pos", portable_hash(F.expr(f"substring(norm, pos, {k})"), seed).alias("h"))
+    A projection of :func:`kgrams`."""
+    return kgrams(docs, id_col, text_col, k).select(
+        id_col, "pos", portable_hash(F.col("gram"), seed).alias("h")
+    )
 
 
 def winnow_fingerprints(
@@ -396,10 +363,7 @@ def simhash(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", bit
     """Per-doc SimHash over distinct word tokens: bit b of the signature is
     the sign of sum(±1) of token-hash bit b."""
     tokens = (
-        fan_out_scan(docs).select(
-            F.col(id_col),
-            F.explode(F.regexp_extract_all(F.lower(F.col(text_col)), F.lit("[a-z0-9]+"), F.lit(0))).alias("t"),
-        )
+        fan_out_scan(docs).select(F.col(id_col), F.explode(words(F.col(text_col))).alias("t"))
         .distinct()
         .withColumn("th", portable_hash(F.col("t"), 99))
     )
@@ -442,39 +406,8 @@ def overlap_pairs(
     shingles, ties broken to the lower id) so downstream keeper rules can
     drop the excerpt and keep the superset.
     """
-    from pyspark.sql import Window
-
-    sh = shingles(docs, id_col, text_col, k)
-    wdf = Window.partitionBy("s")
-    sized = tracked_persist(
-        sh.withColumn("__df", F.count(F.lit(1)).over(wdf)), storage_level
-    )
-    obs = register_observation("containment_df_dropped")
-    rare_a = (
-        sized.observe(
-            obs,
-            F.sum((F.col("__df") > max_df).cast("long")).alias("dropped_shingle_rows"),
-            F.count(F.lit(1)).alias("shingle_rows"),
-        )
-        .filter(F.col("__df") <= max_df)
-        .select(F.col(id_col).alias("doc_a"), "s")
-    )
-    rare_b = sized.filter(F.col("__df") <= max_df).select(
-        F.col(id_col).alias("doc_b"), "s"
-    )
-    inter = (
-        rare_a.join(rare_b, (rare_a["s"] == rare_b["s"]) & (F.col("doc_a") < F.col("doc_b")))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    counts = sized.filter(F.col("__df") <= max_df).groupBy(id_col).agg(
-        F.count(F.lit(1)).alias("n")
-    )
-    n_a = counts.select(F.col(id_col).alias("doc_a"), F.col("n").alias("n_a"))
-    n_b = counts.select(F.col(id_col).alias("doc_b"), F.col("n").alias("n_b"))
     scored = (
-        inter.join(n_a, "doc_a")
-        .join(n_b, "doc_b")
+        _shingle_overlaps(docs, k, max_df, id_col, text_col, storage_level, "containment_df_dropped")
         .withColumn("overlap", F.round(F.col("n_inter") / F.least("n_a", "n_b"), 6))
         .filter(F.col("overlap") >= threshold)
     )

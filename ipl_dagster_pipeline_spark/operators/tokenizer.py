@@ -17,6 +17,8 @@ byte-pair-encoding vocabulary.  This module ships one:
   real-BPE counts carries a full value-hash oracle;
 * pre-tokenization = lowercased ``[a-z0-9]+`` runs (punctuation and
   whitespace carry no token mass — documented contract, same both engines).
+  :func:`words` is that pre-tokenization, the package's one word array (the
+  bigram LM, PMI, unigram KL, SimHash and keyword queries use it too).
 
 Scale shape: counts are computed once per DISTINCT word (the vocabulary
 aggregation is map-side combined; natural-language vocabularies grow ~
@@ -54,6 +56,14 @@ BPE_MERGES: list[tuple[str, str]] = [
     ("v", "e"), ("e", "x"), ("w", "or"), ("t", "er"), ("p", "l"),
     ("0", "0"), ("1", "0"), ("2", "0"), ("00", "00"),
 ]
+
+
+WORD_RE = "[a-z0-9]+"
+
+
+def words(col: Column) -> Column:
+    """The word array of ``col``: its lowercased ``[a-z0-9]+`` runs, in order."""
+    return F.regexp_extract_all(F.lower(col), F.lit(WORD_RE), F.lit(0))
 
 
 def word_symbols(word: Column) -> Column:
@@ -94,14 +104,9 @@ def with_bpe_token_counts(
     # map-side partials are corpus-vocabulary-keyed, so spreading the scan
     # multiplies the partial-agg output per partition; interleaved A/B at
     # sf0.1: min 2.6 s without vs 4.4 s with)
-    words = docs.select(
-        F.col(id_col),
-        F.explode(
-            F.regexp_extract_all(F.lower(F.col(text_col)), F.lit("[a-z0-9]+"), F.lit(0))
-        ).alias("__w"),
-    )
+    word_rows = docs.select(F.col(id_col), F.explode(words(F.col(text_col))).alias("__w"))
     # one row per (doc, word) with the occurrence count — map-side combined
-    occ = words.groupBy(id_col, "__w").agg(F.count(F.lit(1)).alias("__n_occ"))
+    occ = word_rows.groupBy(id_col, "__w").agg(F.count(F.lit(1)).alias("__n_occ"))
     vocab = occ.select("__w").distinct().withColumn("__w_tokens", bpe_token_count(F.col("__w")))
     per_doc = (
         occ.join(vocab, on="__w")

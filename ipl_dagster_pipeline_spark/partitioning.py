@@ -1,12 +1,15 @@
 """Explicit partitioning + skew handling (SURVEY §4 "physical strategies").
 
-Spark's AQE handles post-shuffle skew splitting; these helpers add the two
-things AQE cannot do:
+Spark's AQE handles post-shuffle skew splitting; these helpers add the
+three things AQE cannot do:
 
 * **hot-key detection** before an aggregation/window (sampled count — the
-  plan-time analog of AQE's runtime stats), and
+  plan-time analog of AQE's runtime stats),
 * **salted two-phase aggregation** for hot keys: partial aggregate per
-  (key, salt), then final merge — the classic map-side-combine rewrite.
+  (key, salt), then final merge — the classic map-side-combine rewrite, and
+* **capped buckets** for equi self-joins (``capped_buckets``: a bucket of
+  B rows emits B² pairs; the dropped row count is observable) — every LSH
+  candidate join and n-gram inverted index caps through it.
 
 Windows/sessionization over conv_id cannot be salted (they need the whole
 conversation in order); for those, skew is bounded because conversations are
@@ -16,8 +19,12 @@ big-side path wants (north rule).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark import StorageLevel
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from .caching import tracked_persist
+from .metrics import register_observation
 
 
 def detect_hot_keys(
@@ -84,6 +91,39 @@ def salted_agg(
     salted = with_salt(df, key=key, n_salts=n_salts, hot_keys=hot_keys, salt_source=salt_source)
     partial = salted.groupBy(key, "salt").agg(*[e.alias(n) for n, e in aggs.items()])
     return partial.groupBy(key).agg(*[e.alias(n) for n, e in merges.items()])
+
+
+def capped_buckets(
+    frame: DataFrame, keys: list[str], cap: int, obs_name: str, dropped: str, total: str,
+    storage_level: StorageLevel | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """The two sides ``(observed, kept)`` of an equi self-join on ``keys``:
+    ``frame``'s rows in buckets (``keys`` values) of at most ``cap`` rows.
+    ``metrics.observed_metrics(obs_name)`` reports ``{dropped: rows in
+    oversized buckets, total: all rows}`` after the consuming action.
+
+    No separate aggregate job, anti-join or eager ``count()`` (which would
+    re-run the upstream lineage mid-plan): a count window over ``keys``
+    rides the shuffle the self-join needs anyway.  The SIZED frame is
+    persisted (tracked; MEMORY_AND_DISK unless ``storage_level``) because
+    both join sides read it and the upstream lineage must run once, not per
+    side.  The count is observed ABOVE the cache on ONE branch: a
+    CollectMetrics below an InMemoryRelation never reports, and one on both
+    branches would collide on the observation name.
+
+    ``dedup_index.MinHashIndex.add_batch`` keeps its own probe cap: it
+    counts only the batch's ``__new`` rows of the stored ∪ new union, so
+    sharing this helper would make it branch on its caller.
+    """
+    w = Window.partitionBy(*keys)
+    sized = tracked_persist(frame.withColumn("__bsize", F.count(F.lit(1)).over(w)), storage_level)
+    small = F.col("__bsize") <= cap
+    observed = sized.observe(
+        register_observation(obs_name),
+        F.sum((F.col("__bsize") > cap).cast("long")).alias(dropped),
+        F.count(F.lit(1)).alias(total),
+    )
+    return observed.filter(small).drop("__bsize"), sized.filter(small).drop("__bsize")
 
 
 _BYTE_SUFFIX = {"b": 1, "k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
@@ -196,8 +236,6 @@ def skew_profile(df: DataFrame, key: str, top_n: int = 100) -> DataFrame:
         .limit(top_n)
         .crossJoin(F.broadcast(totals))
     )
-    from pyspark.sql import Window
-
     w = Window.orderBy(F.col("cnt").desc(), F.col("k").asc_nulls_first())
     wcum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     return top.select(
