@@ -62,6 +62,7 @@ from .text_dedup import (
     N_BANDS,
     N_HASHES,
     band_rows,
+    check_threshold,
     jaccard_pairs,
     minhash_signatures,
     shingles,
@@ -69,7 +70,9 @@ from .text_dedup import (
 
 
 class MinHashIndex:
-    """Persistent banded-MinHash near-dup index over append-only batches."""
+    """Persistent banded-MinHash near-dup index over append-only batches.
+    ``threshold`` must be in (0, 1]: ValueError otherwise, before anything
+    is written under ``root``."""
 
     def __init__(
         self,
@@ -82,6 +85,7 @@ class MinHashIndex:
         id_col: str = "doc_id",
         text_col: str = "text",
     ) -> None:
+        check_threshold("MinHashIndex", threshold)
         self.root = root
         self.params = {
             "k": k,
@@ -308,13 +312,10 @@ class MinHashIndex:
         )
         if self.docs.current_snapshot_id() is not None:
             old_docs = self.docs.read(spark).join(old_needed, on=id_col, how="leftsemi")
-            # persist the verification shingle stream: jaccard_pairs folds it
-            # into per-doc arrays whose two join sides would otherwise re-run
-            # the old-docs side — docs read + semi-join + re-shingle — per
-            # consumer (sh_new alone is already cached; the union was not)
-            sh_ver = tracked_persist(
-                sh_new.unionByName(shingles(old_docs, id_col, text_col, p["k"]))
-            )
+            # NOT persisted: jaccard_pairs reads the verification shingle
+            # stream exactly once, in its own persisted per-doc array fold —
+            # that fold, not this union, feeds both join sides
+            sh_ver = sh_new.unionByName(shingles(old_docs, id_col, text_col, p["k"]))
         else:
             sh_ver = sh_new
         new_pairs = jaccard_pairs(cand, sh_ver, id_col, p["threshold"])

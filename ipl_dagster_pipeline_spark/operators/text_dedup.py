@@ -174,10 +174,20 @@ def lsh_candidates(
     )
 
 
+def check_threshold(op: str, threshold: float) -> None:
+    """Similarity thresholds live in (0, 1]: at or below 0 the filter keeps
+    every candidate, above 1 it keeps none (NaN keeps none too) — each is a
+    caller bug, so it fails loudly instead of returning a plausible frame."""
+    if not 0 < threshold <= 1:
+        raise ValueError(f"{op}: threshold must be in (0, 1], got {threshold!r}")
+
+
 def jaccard_pairs(
     cand: DataFrame, sh: DataFrame, id_col: str = "doc_id", threshold: float = 0.5
 ) -> DataFrame:
-    """Exact n-gram Jaccard for candidate pairs: |A∩B| / (|A|+|B|-|A∩B|)."""
+    """Exact n-gram Jaccard for candidate pairs: |A∩B| / (|A|+|B|-|A∩B|).
+    ``sh`` meets :func:`_jaccard`'s preconditions; ``threshold`` is in (0, 1]."""
+    check_threshold("jaccard_pairs", threshold)
     return (
         _jaccard(cand, sh, id_col)
         .filter(F.col("jaccard") >= threshold)
@@ -186,17 +196,25 @@ def jaccard_pairs(
 
 
 def _jaccard(cand: DataFrame, sh: DataFrame, id_col: str) -> DataFrame:
+    """``cand`` plus ``n_inter``, ``n_a``, ``n_b`` and ``jaccard``.  Callers
+    guarantee two preconditions (not checked here).  (1) ``sh`` holds each
+    (doc, shingle) at most once: ``collect_list`` keeps a repeat in ``n_a``
+    / ``n_b`` while set-semantics ``array_intersect`` counts it once.  (2)
+    The frames of a unioned ``sh`` (``fuzzy_contamination_pairs``,
+    ``MinHashIndex.add_batch``) have disjoint ids, else two documents fold
+    into one array."""
     # Fold each doc's (distinct) shingle stream into ONE array row and verify
     # pairs with array_intersect: the shingle table is scanned once (a single
     # doc-keyed groupBy) instead of three times, and the widest exchange of
     # the old formulation — candidate×|A| duplicated shingle rows re-keyed by
     # (doc_b, s) — disappears; each pair is verified independently in the
     # projection after two id-keyed joins.  Per-pair both arrays ship where
-    # the row form duplicated one side, but candidate fan-out is capped
-    # upstream (max_bucket) and an array is the same payload class (≈k×text
-    # bytes) the pipeline already shuffles as doc text.  |A∩B| over distinct
-    # arrays equals the (doc, shingle) join count exactly, so the jaccard
-    # values are bit-identical.
+    # the row form duplicated one side; candidate fan-out is capped upstream
+    # (max_bucket), but a per-doc shingle array is ≈k×|text| bytes (one
+    # k-char string per position) — k times the doc text the pipeline
+    # already shuffles, so one huge document is one very wide row on every
+    # pair it joins.  |A∩B| over distinct arrays equals the (doc, shingle)
+    # join count exactly, so the jaccard values are bit-identical.
     # persisted: the fold feeds BOTH join sides (a and b) — tracked so the
     # harness's release_tracked() frees it after the consuming action
     arrs = tracked_persist(sh.groupBy(id_col).agg(F.collect_list("s").alias("__arr")))
@@ -268,7 +286,9 @@ def ngram_jaccard_pairs(
     self-join is an equi-join on the shingle (never a cross join); the pair
     aggregation is map-side combined.  Worst case is max_df² pairs per
     surviving shingle — bounded by the cap, tunable against recall.
+    ``threshold`` must be in (0, 1] (ValueError otherwise).
     """
+    check_threshold("ngram_jaccard_pairs", threshold)
     return (
         _shingle_overlaps(docs, k, max_df, id_col, text_col, storage_level, "ngram_df_dropped")
         .withColumn(
@@ -404,8 +424,10 @@ def overlap_pairs(
     ``metrics.observed_metrics('containment_df_dropped')``.  Output columns
     name the CONTAINED side explicitly (``doc_small`` = fewer surviving
     shingles, ties broken to the lower id) so downstream keeper rules can
-    drop the excerpt and keep the superset.
+    drop the excerpt and keep the superset.  ``threshold`` must be in
+    (0, 1] (ValueError otherwise).
     """
+    check_threshold("overlap_pairs", threshold)
     scored = (
         _shingle_overlaps(docs, k, max_df, id_col, text_col, storage_level, "containment_df_dropped")
         .withColumn("overlap", F.round(F.col("n_inter") / F.least("n_a", "n_b"), 6))
