@@ -41,7 +41,7 @@ import sys
 import tempfile
 import traceback
 
-LAMBDA_RE = re.compile(r"\b(x|y|z|acc|i|s|e)_\d+\b")
+LAMBDA_RE = re.compile(r"\b([xyz])_\d+\b")  # PySpark names lambda parameters x_12, y_13, ...
 EXPR_ID_RE = re.compile(r"#\d+L?")
 PLAN_ID_RE = re.compile(r"plan_id=\d+")
 TMP_RE = re.compile(re.escape(tempfile.gettempdir()) + r"/[^/\]\s,]+")
