@@ -23,11 +23,13 @@ The three classic hazards it closes:
   ``hash_cross`` does the same for INTERACTION features whose joint domain
   is unboundable.
 
-``quantile_bins_fit``/``quantile_bins_transform`` extend the frozen-fit
-discipline to discretization: edges are exact type-1 lower-rank quantile
-ELEMENTS (integer rank arithmetic over the keyed distributed prefix-sum
-ranking, `profiling.group_quantiles`' core) — never interpolated, so the
-binning is bit-identical cross-engine at any ``n_bins``.
+The exact-rank fits — quantile-bin edges (``quantile_bins_fit``), median
+fill values (``impute_fit``), winsorization bounds (``clip_fit``) and named
+elements (``quantile_fit_elements``) — are all calls of ONE rule,
+`profiling._rank_elements`: rank in ``(value, key)`` order over the
+distributed prefix sum and take the type-1 lower-rank ELEMENT by integer
+arithmetic — never interpolated, so every fit is bit-identical cross-engine.
+``impute_fit`` stacks its columns and ranks them in one pass.
 
 Determinism contract (cross-engine exact): inputs are quantized to INTEGER
 milli-units per row BEFORE aggregation, so fit statistics are exact BIGINTs
@@ -48,7 +50,7 @@ from collections.abc import Mapping
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ipl_dagster_pipeline_spark.operators.packing import with_keyed_cumsum
+from ipl_dagster_pipeline_spark.operators.profiling import _rank_elements
 from ipl_dagster_pipeline_spark.operators.text_dedup import portable_hash
 
 MILLI = 1_000
@@ -83,6 +85,21 @@ def _with_fit(df: DataFrame, fit: DataFrame | Mapping, keys: list[str]) -> DataF
             out = out.withColumn(k, F.lit(fit[k]))
         return out
     return df.crossJoin(F.broadcast(fit))
+
+
+def _stack(df: DataFrame, cols: list[str], *keep: str, cast: str | None = None) -> DataFrame:
+    """``cols`` stacked into rows ``(__c, __v, *keep)`` — ``__c`` the column
+    name, ``__v`` its value (cast to ``cast``, else Spark's common type of
+    ``cols``) — by ONE explode of a struct array: a single scan for any
+    number of columns."""
+    def v(c: str) -> Column:
+        return F.col(c).cast(cast) if cast else F.col(c)
+
+    return df.select(
+        F.explode(
+            F.array(*[F.struct(F.lit(c).alias("__c"), v(c).alias("__v"), *keep) for c in cols])
+        ).alias("__m")
+    ).select("__m.*")
 
 
 def standardize_fit(train: DataFrame, cols: list[str]) -> DataFrame:
@@ -207,44 +224,18 @@ def quantile_bins_fit(
     Edges are selected data elements, never interpolated, so the fit is
     bit-identical on any engine for any ``n_bins`` (pure integer rank
     arithmetic; ``key_col`` breaks value ties so the selected element is
-    deterministic at any parallelism).  Ranking rides the keyed two-phase
-    prefix sum (`packing.with_keyed_cumsum`) — no one-task global window.
-    NULL values are excluded from the fit (they transform to NULL).
+    deterministic at any parallelism).  Ranking is `profiling._rank_elements`
+    over one global group — no one-task global window.  NULL values are
+    excluded from the fit (they transform to NULL).
     An EMPTY fit yields a one-row frame of NULL edges; transform then maps
     everything to bin 0 (degenerate-fit convention of :func:`zscore_expr`).
     """
     if n_bins < 2:
         raise ValueError(f"n_bins must be >= 2, got {n_bins}")
-    vals = (
-        train.select(F.col(col), F.col(key_col))
-        .where(F.col(col).isNotNull())
-        .withColumn("__g", F.lit(0))
-        .withColumn("__one", F.lit(1))
-    )
-    ranked = with_keyed_cumsum(
-        vals,
-        group_cols=["__g"],
-        order_cols=[col, key_col],
-        value_col="__one",
-        out_col="__rank",
-        n_partitions=n_partitions,
-    )
-    n = ranked.agg(F.count(F.lit(1)).alias("__n"))
-    j = ranked.crossJoin(F.broadcast(n))
-    sels = {
-        i: F.expr(f"CAST(((__n - 1) * {i}) DIV {n_bins} AS BIGINT) + 1")
-        for i in range(1, n_bins)
-    }
-    hit_any = None
-    for sel in sels.values():
-        c = F.col("__rank") == sel
-        hit_any = c if hit_any is None else (hit_any | c)
-    return j.filter(hit_any).agg(
-        *[
-            F.max(F.when(F.col("__rank") == sel, F.col(col))).alias(f"be_{col}_{i}")
-            for i, sel in sels.items()
-        ]
-    )
+    return _rank_elements(
+        train.where(F.col(col).isNotNull()), [], col, key_col,
+        {f"be_{col}_{i}": (i, n_bins) for i in range(1, n_bins)}, n_partitions,
+    ).drop("__n")
 
 
 def quantile_bins_transform(
@@ -288,20 +279,26 @@ def impute_fit(
 
     ``median`` selects the exact type-1 lower-rank median ELEMENT (the
     2-bin edge of :func:`quantile_bins_fit` — integer rank arithmetic,
-    deterministic at any parallelism); ``mean`` is the exact integer milli
-    quotient ``(Σ milli) DIV n`` divided by 1000 — no float accumulation.
-    An empty or all-NULL fit leaves the fill value NULL (transform then
-    keeps NULLs — nothing to impute FROM is a loud downstream signal, not
-    a silent zero)."""
+    deterministic at any parallelism) of every column in ONE ranking: the
+    non-NULL values are stacked into ``(__c, __v, key)`` rows, ranked per
+    column name, and folded back into ``imp_<c>`` in ``cols`` order, each
+    cast back to its input type.  Same-typed columns rank in their own
+    type; a mixed integral/floating set ranks as DOUBLE (Spark's common
+    type), exact for integral values within ±2^53.  ``mean`` is the exact
+    integer milli quotient ``(Σ milli) DIV n`` divided by 1000 — no float
+    accumulation.  An empty or all-NULL fit leaves the fill value NULL
+    (transform then keeps NULLs — nothing to impute FROM is a loud
+    downstream signal, not a silent zero)."""
     if strategy not in ("median", "mean"):
         raise ValueError(f"strategy must be 'median' or 'mean', got {strategy!r}")
     if strategy == "median":
-        fits = [quantile_bins_fit(train, c, key_col, 2, n_partitions=n_partitions)
-                .withColumnRenamed(f"be_{c}_1", f"imp_{c}") for c in cols]
-        out = fits[0]
-        for f in fits[1:]:
-            out = out.crossJoin(F.broadcast(f))
-        return out
+        stacked = _stack(train, cols, key_col).where(F.col("__v").isNotNull())
+        med = _rank_elements(stacked, ["__c"], "__v", key_col, {"__med": (1, 2)}, n_partitions)
+        dtypes = {f.name: f.dataType for f in train.schema.fields}
+        return med.agg(*[
+            F.max(F.when(F.col("__c") == c, F.col("__med"))).cast(dtypes[c]).alias(f"imp_{c}")
+            for c in cols
+        ])
     aggs = []
     for c in cols:
         v = value_milli(F.col(c))
@@ -342,24 +339,15 @@ def clip_fit(
 ) -> DataFrame:
     """One-row frame of frozen winsorization bounds ``clip_lo``/``clip_hi``
     — the exact lower-rank quantile ELEMENTS of ``col`` at the given
-    integer percents (`profiling.group_quantiles` on a constant group, so
-    the ranking rides the keyed distributed prefix sum)."""
-    from ipl_dagster_pipeline_spark.operators.profiling import group_quantiles
-
+    integer percents (:func:`quantile_fit_elements`, so an empty fit is
+    zero rows and :func:`clip_transform` raises)."""
     if not 0 <= lo_percent < hi_percent <= 100:
         raise ValueError(
             f"need 0 <= lo < hi <= 100, got lo={lo_percent} hi={hi_percent}"
         )
-    q = group_quantiles(
-        train.where(F.col(col).isNotNull()).withColumn("__g", F.lit(0)),
-        group_cols=["__g"],
-        value_col=col,
-        key_col=key_col,
-        percents={"clip_lo": lo_percent, "clip_hi": hi_percent},
-        count_col="__n_fit",
-        n_partitions=n_partitions,
+    return quantile_fit_elements(
+        train, col, key_col, {"clip_lo": lo_percent, "clip_hi": hi_percent}, n_partitions
     )
-    return q.drop("__g", "__n_fit")
 
 
 def clip_transform(
@@ -397,20 +385,13 @@ def quantile_fit_elements(
     winsorization bounds: pass ``{"imp_<col>": 50, "clip_lo": 5,
     "clip_hi": 95}``, persist the row, and feed it to both
     :func:`impute_transform` and :func:`clip_transform` (each drops only
-    its own columns).  One keyed-prefix-sum ranking instead of one per
-    fit — at 100 TB the ranked pass IS the fit cost."""
-    from ipl_dagster_pipeline_spark.operators.profiling import group_quantiles
-
-    q = group_quantiles(
-        train.where(F.col(col).isNotNull()).withColumn("__g", F.lit(0)),
-        group_cols=["__g"],
-        value_col=col,
-        key_col=key_col,
-        percents=percents,
-        count_col="__n_fit",
-        n_partitions=n_partitions,
-    )
-    return q.drop("__g", "__n_fit")
+    its own columns).  One ranking instead of one per fit — at 100 TB the
+    ranked pass IS the fit cost.  The constant group makes an EMPTY fit
+    zero rows, so :func:`clip_transform` raises on it."""
+    return _rank_elements(
+        train.where(F.col(col).isNotNull()).withColumn("__g", F.lit(0)), ["__g"], col, key_col,
+        {name: (p, 100) for name, p in percents.items()}, n_partitions,
+    ).drop("__g", "__n")
 
 
 def quantile_sketch_elements(
@@ -458,33 +439,20 @@ def impute_fit_sketch(train: DataFrame, cols: list[str]) -> DataFrame:
     :func:`impute_fit(strategy='median')` (same one-row ``imp_<c>``
     artifact, consumed by :func:`impute_transform`).
 
-    ONE scan of ``train`` for ALL columns: melt to ``(col_name, value)``
-    rows and build every per-column log-histogram in a single grouped
-    aggregation, mirroring :func:`quantile_fit_elements`' one-pass
-    discipline (the per-column loop it replaces scanned the train fold
-    once per column).  The per-column quantile rows collapse back to the
+    ONE scan of ``train`` for ALL columns: stack to ``(__c, __v)`` rows
+    (the same :func:`_stack` as the exact median fit) and build every
+    per-column log-histogram in a single grouped aggregation (the
+    per-column loop it replaces scanned the train fold once per column).  The per-column quantile rows collapse back to the
     one-row artifact with a conditional aggregation — never a pivot
     collect, never a crossJoin chain."""
     from .sketches import LOGHIST_UNIT, loghist_quantiles, loghist_sketch
 
     unit = LOGHIST_UNIT
-    melted = train.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("__col"), F.col(c).cast("double").alias("__val")
-                    )
-                    for c in cols
-                ]
-            )
-        ).alias("m")
-    ).select(F.col("m.__col").alias("__col"), F.col("m.__val").alias("__val"))
-    sk = loghist_sketch(melted, "__val", ["__col"], unit=unit)
-    q = loghist_quantiles(sk, {"med": 50}, ["__col"])
+    sk = loghist_sketch(_stack(train, cols, cast="double"), "__v", ["__c"], unit=unit)
+    q = loghist_quantiles(sk, {"med": 50}, ["__c"])
     return q.agg(
         *[
-            (F.max(F.when(F.col("__col") == c, F.col("q_med"))) / unit).alias(f"imp_{c}")
+            (F.max(F.when(F.col("__c") == c, F.col("q_med"))) / unit).alias(f"imp_{c}")
             for c in cols
         ]
     )

@@ -1,20 +1,24 @@
-"""Sequence packing for pretraining pipelines: concat-and-chunk.
+"""Sequence packing for pretraining pipelines: concat-and-chunk, on the one
+distributed prefix sum every running total and rank in the package uses.
 
 The standard GPT-style packing concatenates the token stream in a canonical
 document order and slices it into fixed-length examples.  The hard part at
 100 TB is the GLOBAL running token offset — a naive
 ``Window.orderBy(doc_id)`` with no partition key plans a single-partition
-window (one task owns the whole corpus).  ``with_global_cumsum`` computes it
-scalably with the classic two-phase distributed prefix sum:
+window (one task owns the whole corpus), and ``Window.partitionBy(group)``
+plans one task per group.  ``with_keyed_cumsum`` computes a running sum per
+group (``group_cols=[]``: one global group) with the classic two-phase
+distributed prefix sum:
 
-1. range-partition + sort by the order key (the layout a packed write wants
-   anyway);
-2. LOCAL cumulative sums per partition in one vectorized Arrow pass riding
-   that sort (a partitioned window would re-exchange the whole corpus — see
-   ``_stamped_local_cumsum``);
-3. per-partition totals (one row per partition) → driver (bounded by the
-   partition count, never by data) → broadcast prefix offsets;
-4. global offset = partition prefix + local cumsum.
+1. range-partition + sort by ``(group, order)`` (the layout a packed write
+   wants anyway) — a group spans many partitions but stays contiguous;
+2. LOCAL cumulative sums per ``(partition, group)`` in one vectorized Arrow
+   pass riding that sort (a partitioned window would re-exchange the whole
+   corpus — see ``_stamped_local_cumsum``);
+3. per-(group, partition) totals → driver (bounded by groups × partitions,
+   never by data) → per-group prefix offsets over ascending partition id;
+4. offset broadcast-joined back on ``(group, partition)``: running sum =
+   offset + local cumsum.
 
 ``pack_sequences`` then maps each document to its token interval and chunk
 span — every downstream loader can slice example ``k`` as tokens
@@ -94,55 +98,25 @@ def _stamped_local_cumsum(
     return srt.mapInPandas(gen, out_schema)
 
 
-def with_global_cumsum(
-    df: DataFrame,
-    order_col: str | list[str],
-    value_col: str,
-    out_col: str = "cumsum",
-    n_partitions: int | None = None,
+def _null_safe_broadcast_join(
+    left: DataFrame, right: DataFrame, on: list[str], how: str = "inner"
 ) -> DataFrame:
-    """Exact global running sum of ``value_col`` in ``order_col`` order,
-    without a single-partition window.
+    """``left`` joined to a broadcast of the small ``right`` on NULL-SAFE
+    equality of ``on`` (``right``'s copies dropped); no ``on`` is a cross
+    join of a one-row ``right``.
 
-    The driver round-trip is one row PER PARTITION (bounded, not data-sized);
-    ties on ``order_col`` across partition boundaries are fine because range
-    partitioning puts equal keys in one partition.  Pass a LIST of order
-    columns (ending in a unique tie-breaker) when the leading key has ties and
-    the running sum must be bit-deterministic — within-tie accumulation order
-    is otherwise engine-dependent.
-    """
-    order_cols = [order_col] if isinstance(order_col, str) else list(order_col)
-    local = _stamped_local_cumsum(df, [], order_cols, value_col, n_partitions)
-    local = tracked_persist(local)
-    totals = {
-        r["__pid"]: r["t"]
-        for r in local.groupBy("__pid").agg(F.sum(value_col).alias("t")).collect()
-    }
-    prefix, acc = {}, 0
-    for pid in sorted(totals):
-        prefix[pid] = acc
-        acc += totals[pid]
-    # partition offsets as a BROADCAST-joined tiny frame, not a CASE chain:
-    # a when-chain over 10^4-10^5 range partitions blows past the codegen
-    # expression-tree limits (interpreted fallback + bloated plans); the
-    # hash join against a P-row broadcast table is O(1) per row at any P.
-    offsets_schema = T.StructType(
-        [
-            T.StructField("__pid", T.IntegerType(), False),
-            T.StructField("__offset", T.LongType(), False),
-        ]
-    )
-    offsets = df.sparkSession.createDataFrame(
-        [(int(pid), int(off)) for pid, off in prefix.items()], offsets_schema
-    )
-    return (
-        local.join(F.broadcast(offsets), on="__pid", how="left")
-        .withColumn(
-            out_col,
-            (F.coalesce(F.col("__offset"), F.lit(0)) + F.col("__local")).cast("long"),
-        )
-        .drop("__pid", "__local", "__offset")
-    )
+    A plain equi-join never matches a NULL key (null = null is not true),
+    so it would silently drop a NULL stratum or restart its running sum.
+    Catalyst extracts EqualNullSafe as hash-join keys, so the plan stays one
+    broadcast hash join with no extra exchange; a non-nullable left key
+    compares with plain ``=``, which has the same truth value."""
+    keys = {c: f"__j{i}" for i, c in enumerate(on)}
+    r = right.select(*[F.col(c).alias(keys[c]) if c in keys else c for c in right.columns])
+    cond = [
+        left[c].eqNullSafe(r[k]) if left.schema[c].nullable else left[c] == r[k]
+        for c, k in keys.items()
+    ]
+    return left.join(F.broadcast(r), on=cond or None, how=how).drop(*keys.values())
 
 
 def with_keyed_cumsum(
@@ -154,24 +128,17 @@ def with_keyed_cumsum(
     n_partitions: int | None = None,
     max_offset_rows: int = 1_000_000,
 ) -> DataFrame:
-    """Exact PER-GROUP running sum without a one-task-per-group window.
-
-    ``Window.partitionBy(group)`` serializes each group into a single task —
-    at 100 TB a dominant stratum (a crawl source that is 80% of the corpus)
-    becomes one straggler task owning 80 TB.  Instead the same two-phase
-    prefix sum as :func:`with_global_cumsum`, keyed:
-
-    1. range-partition on ``(group, order)`` — each group spans MANY
-       partitions but stays contiguous, so every partition is bounded by
-       total-bytes/parallelism regardless of group skew;
-    2. local cumsums per ``(group, partition)``;
-    3. per-(group, partition) totals → driver (one row per group×partition —
-       bounded by the partition count, never by data) → per-group prefix
-       offsets over ascending partition id;
-    4. group-global offset broadcast-joined back on ``(group, __pid)``.
+    """Exact running sum of the INTEGRAL ``value_col`` in ``order_cols``
+    order within each ``group_cols`` group (``[]``: one global running sum),
+    by the two-phase prefix sum of the module docstring — no single-task
+    window, so a dominant stratum (a crawl source that is 80% of the
+    corpus) spans many partitions instead of one straggler task.
 
     ``order_cols`` must end in a unique tie-breaker for bit-deterministic
-    output (same contract as :func:`with_global_cumsum`).
+    output; ties on the order key across partition boundaries are fine,
+    because range partitioning puts equal keys in one partition.  A
+    non-integral ``value_col`` raises ``ValueError``: the local pass sums
+    int64.
 
     CONTRACT: ``group_cols`` must be STRATA-cardinality keys (source, lang,
     fold — tens to thousands of groups).  The driver round-trip is
@@ -181,6 +148,12 @@ def with_keyed_cumsum(
     convention) — a high-cardinality keyed prefix sum needs a tree
     reduction, not this operator.
     """
+    vtype = df.schema[value_col].dataType
+    if not isinstance(vtype, T.IntegralType):
+        raise ValueError(
+            f"with_keyed_cumsum: value_col {value_col!r} must be integral, "
+            f"got {vtype.simpleString()}"
+        )
     local = _stamped_local_cumsum(df, group_cols, order_cols, value_col, n_partitions)
     local = tracked_persist(local)
     # limit(N+1) bounds what reaches the driver even in the violating case:
@@ -212,28 +185,17 @@ def with_keyed_cumsum(
             T.StructField("__offset", T.LongType(), False),
         ]
     )
+    # offsets as ONE broadcast of P·G rows (zero extra exchange), not a CASE
+    # chain: a when-chain over 10^4-10^5 range partitions blows past the
+    # codegen expression-tree limits
     offsets = df.sparkSession.createDataFrame(offset_rows, base)
-    # NULL-SAFE join: a plain equi-join on the group cols never matches a
-    # NULL stratum (null = null is never true in SQL), so a null group
-    # spanning partitions would silently restart its running sum per
-    # partition.  eqNullSafe keys still plan a broadcast HASH join (Catalyst
-    # extracts EqualNullSafe as join keys), so the physical shape is
-    # unchanged: one broadcast of P·G rows, zero extra exchange.
-    offsets = offsets.select(
-        *[F.col(g).alias(f"__og_{i}") for i, g in enumerate(group_cols)],
-        F.col("__pid").alias("__opid"),
-        "__offset",
-    )
-    cond = local["__pid"] == offsets["__opid"]
-    for i, g in enumerate(group_cols):
-        cond = cond & local[g].eqNullSafe(offsets[f"__og_{i}"])
     return (
-        local.join(F.broadcast(offsets), on=cond, how="left")
+        _null_safe_broadcast_join(local, offsets, ["__pid", *group_cols], how="left")
         .withColumn(
             out_col,
             (F.coalesce(F.col("__offset"), F.lit(0)) + F.col("__local")).cast("long"),
         )
-        .drop("__pid", "__opid", "__local", "__offset", *[f"__og_{i}" for i in range(len(group_cols))])
+        .drop("__pid", "__local", "__offset")
     )
 
 
@@ -251,7 +213,7 @@ def pack_sequences(
     overlaps), ``n_chunks_spanned``.  Deterministic: stream order is
     ``id_col`` ascending.
     """
-    cum = with_global_cumsum(docs, order_col=id_col, value_col=token_count_col, out_col="__cum")
+    cum = with_keyed_cumsum(docs, [], [id_col], token_count_col, out_col="__cum")
     return cum.select(
         id_col,
         F.col(token_count_col),

@@ -1,21 +1,24 @@
-"""Corpus profiling: exact per-group order statistics at scale.
+"""Corpus profiling: exact per-group order statistics at scale, and the one
+rank-element rule every exact-rank fit in the package uses.
 
 A data recipe wants per-source distribution facts (length quantiles, token
 quantiles) that are EXACT and engine-portable — ``percentile_approx`` is
 neither (approximate, implementation-defined), and the exact built-in
 ``percentile`` interpolates in floating point, which no cross-engine
-value-hash survives.  ``group_quantiles`` instead selects the lower-rank
-(type-1) quantile element with pure integer arithmetic:
+value-hash survives.  ``_rank_elements`` instead selects lower-rank (type-1)
+quantile ELEMENTS with pure integer arithmetic:
 
-* per-group rank in ``(value, key)`` order via the KEYED two-phase
-  distributed prefix sum (`packing.with_keyed_cumsum`) — never a
-  one-task-per-group window, so a source holding 80% of the corpus cannot
-  straggle;
-* the quantile row index is ``((n - 1) * p) DIV 100`` — integer-exact in
-  any engine, no float rounding;
-* the rows matching a quantile rank (a handful per group) are filtered
-  FIRST, so the final per-group pivot aggregates only ``len(percents)``
-  rows per group.
+* per-group rank in ``(value, key)`` order via the two-phase distributed
+  prefix sum (`packing.with_keyed_cumsum`) — never a one-task-per-group
+  window, so a source holding 80% of the corpus cannot straggle;
+* the element for fraction ``num/den`` sits at rank
+  ``((n - 1) * num) DIV den + 1`` — integer-exact in any engine;
+* the rows matching a selected rank (a handful per group) are filtered
+  FIRST, so the final per-group pivot aggregates only a few rows per group.
+
+``group_quantiles`` (percents), ``robust_outliers`` (median and MAD), and
+the frozen fits in `featurize` (quantile-bin edges, median fill values,
+winsorization bounds) are all calls of it.
 
 The reference profiles availability_status distributions with pandas
 value_counts (lamassu.py:306-311); this is the distributed order-statistics
@@ -24,12 +27,61 @@ generalization.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .packing import with_keyed_cumsum
+from .packing import _null_safe_broadcast_join, with_keyed_cumsum
 
 DEFAULT_PERCENTS = {"p25": 25, "p50": 50, "p90": 90}
+
+
+def _rank_elements(
+    df: DataFrame,
+    group_cols: list[str],
+    value_col: str,
+    key_col: str,
+    ranks: dict[str, tuple[int, int]],
+    n_partitions: int | None = None,
+) -> DataFrame:
+    """One row per group: ``group_cols``, ``__n`` (rows ranked) and, per
+    ``name: (num, den)``, the ``value_col`` element at rank
+    ``((n - 1) * num) DIV den + 1`` in ``(value, key)`` order.
+
+    ``key_col`` breaks value ties, so the element is deterministic at any
+    parallelism.  NULL values are ranked (first); callers that exclude them
+    filter first.  ``group_cols=[]`` is one global aggregation, so an empty
+    input yields one row of NULLs; with group columns it yields no rows.
+    """
+    for name, (num, den) in ranks.items():
+        if not 0 <= num <= den:
+            raise ValueError(f"rank fraction for {name!r} must be in [0, 1], got {num}/{den}")
+    ranked = with_keyed_cumsum(
+        df.select(*group_cols, value_col, key_col).withColumn("__one", F.lit(1)),
+        group_cols=group_cols,
+        order_cols=[value_col, key_col],
+        value_col="__one",
+        out_col="__rank",
+        n_partitions=n_partitions,
+    )
+    # the counts side is one row per group — broadcast assumes a
+    # strata-sized group cardinality; a data-sized one fails LOUDLY at the
+    # collect inside the broadcast, not silently
+    counts = ranked.groupBy(*group_cols).agg(F.count(F.lit(1)).alias("__n"))
+    j = _null_safe_broadcast_join(ranked, counts, group_cols)
+    sels = {
+        name: F.expr(f"CAST(((__n - 1) * {num}) DIV {den} AS BIGINT) + 1")
+        for name, (num, den) in ranks.items()
+    }
+    hits = j.filter(reduce(lambda x, y: x | y, [F.col("__rank") == sel for sel in sels.values()]))
+    return hits.groupBy(*group_cols).agg(
+        F.max("__n").cast("long").alias("__n"),
+        *[
+            F.max(F.when(F.col("__rank") == sel, F.col(value_col))).alias(name)
+            for name, sel in sels.items()
+        ],
+    )
 
 
 def group_quantiles(
@@ -42,57 +94,14 @@ def group_quantiles(
     n_partitions: int | None = None,
 ) -> DataFrame:
     """One row per group: group cols, ``count_col``, and one column per entry
-    of ``percents`` holding the exact lower-rank quantile of ``value_col``.
-
-    ``key_col`` breaks value ties so ranks are total and the selected element
-    is deterministic on any engine at any parallelism.
-    """
+    of ``percents`` holding the exact lower-rank quantile of ``value_col``
+    (rank ``((n - 1) * p) DIV 100 + 1``; ``key_col`` breaks value ties).
+    A NULL group is a real group."""
     percents = percents or DEFAULT_PERCENTS
-    for name, p in percents.items():
-        if not 0 <= p <= 100:
-            raise ValueError(f"percent for {name!r} must be in [0, 100], got {p}")
-    ranked = with_keyed_cumsum(
-        df.select(*group_cols, value_col, key_col).withColumn("__one", F.lit(1)),
-        group_cols=group_cols,
-        order_cols=[value_col, key_col],
-        value_col="__one",
-        out_col="__rank",
-        n_partitions=n_partitions,
-    )
-    # NULL-SAFE counts join: a plain inner equi-join would drop the whole
-    # NULL group (null = null never matches), silently erasing a null
-    # stratum from the profile while a SQL GROUP BY keeps it.  eqNullSafe
-    # keys still hash-join against the broadcast counts frame.
-    #
-    # The counts side is one row per group — broadcast assumes the group
-    # cardinality is broadcast-sized (sources/languages/buckets: thousands,
-    # not billions).  A group-key with data-scale cardinality would OOM the
-    # driver here LOUDLY at the collect inside broadcast, not silently skew.
-    counts = ranked.groupBy(*group_cols).agg(F.count(F.lit(1)).alias("__n"))
-    counts = counts.select(
-        *[F.col(g).alias(f"__cg_{i}") for i, g in enumerate(group_cols)], "__n"
-    )
-    cond = None
-    for i, g in enumerate(group_cols):
-        c = ranked[g].eqNullSafe(counts[f"__cg_{i}"])
-        cond = c if cond is None else (cond & c)
-    j = ranked.join(F.broadcast(counts), on=cond).drop(
-        *[f"__cg_{i}" for i in range(len(group_cols))]
-    )
-    sels = {
-        name: F.expr(f"CAST(((__n - 1) * {p}) DIV 100 AS BIGINT) + 1")
-        for name, p in percents.items()
-    }
-    hit_any = None
-    for sel in sels.values():
-        cond = F.col("__rank") == sel
-        hit_any = cond if hit_any is None else (hit_any | cond)
-    hits = j.filter(hit_any)
-    aggs = [F.max("__n").cast("long").alias(count_col)] + [
-        F.max(F.when(F.col("__rank") == sel, F.col(value_col))).alias(name)
-        for name, sel in sels.items()
-    ]
-    return hits.groupBy(*group_cols).agg(*aggs)
+    return _rank_elements(
+        df, group_cols, value_col, key_col,
+        {name: (p, 100) for name, p in percents.items()}, n_partitions,
+    ).withColumnRenamed("__n", count_col)
 
 
 def robust_outliers(
@@ -113,45 +122,22 @@ def robust_outliers(
     (:func:`group_quantiles` — keyed distributed prefix-sum ranking, never a
     one-task-per-group sort), so on integer values the whole decision is
     integer arithmetic: bit-identical on any engine, no stddev float drift.
-    Two ranking passes (values, then absolute deviations) + two broadcast
-    joins of one-row-per-group stats frames.
+    Two ranking passes (values, then absolute deviations) + two null-safe
+    broadcast joins of one-row-per-group stats frames.
     """
     from ..caching import tracked_persist
 
-    # persist the strata-sized stats frames: `dev` is consumed twice (the
-    # MAD fit and the final score join), so an unpersisted median frame
-    # would re-run its whole ranked pass per consumer (r7)
-    med = tracked_persist(group_quantiles(
-        df.select(*group_cols, value_col, key_col),
-        group_cols, value_col, key_col, {med_col: 50}, count_col="__n_med",
-        n_partitions=n_partitions,
-    ).drop("__n_med"))
-    med_k = med.select(
-        *[F.col(g).alias(f"__mg_{i}") for i, g in enumerate(group_cols)], med_col
+    def stat(frame: DataFrame, col: str, name: str) -> DataFrame:
+        # persist the strata-sized stats frame: `dev` is consumed twice (the
+        # MAD fit and the final score join), so an unpersisted median frame
+        # would re-run its whole ranked pass per consumer (r7)
+        fit = _rank_elements(frame, group_cols, col, key_col, {name: (50, 100)}, n_partitions)
+        return _null_safe_broadcast_join(frame, tracked_persist(fit.drop("__n")), group_cols)
+
+    dev = stat(df, value_col, med_col).withColumn(
+        "__adev", F.abs(F.col(value_col) - F.col(med_col))
     )
-    cond = None
-    for i, g in enumerate(group_cols):
-        c = df[g].eqNullSafe(med_k[f"__mg_{i}"])
-        cond = c if cond is None else (cond & c)
-    with_med = df.join(F.broadcast(med_k), on=cond).drop(
-        *[f"__mg_{i}" for i in range(len(group_cols))]
-    )
-    dev = with_med.withColumn("__adev", F.abs(F.col(value_col) - F.col(med_col)))
-    mad = tracked_persist(group_quantiles(
-        dev.select(*group_cols, "__adev", key_col),
-        group_cols, "__adev", key_col, {mad_col: 50}, count_col="__n_mad",
-        n_partitions=n_partitions,
-    ).drop("__n_mad"))
-    mad_k = mad.select(
-        *[F.col(g).alias(f"__dg_{i}") for i, g in enumerate(group_cols)], mad_col
-    )
-    cond2 = None
-    for i, g in enumerate(group_cols):
-        c = dev[g].eqNullSafe(mad_k[f"__dg_{i}"])
-        cond2 = c if cond2 is None else (cond2 & c)
-    scored = dev.join(F.broadcast(mad_k), on=cond2).drop(
-        *[f"__dg_{i}" for i in range(len(group_cols))]
-    )
+    scored = stat(dev, "__adev", mad_col)
     return scored.filter(F.col("__adev") > n_mads * F.col(mad_col)).drop("__adev")
 
 

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .packing import with_global_cumsum, with_keyed_cumsum
+from .packing import with_keyed_cumsum
 from .text_dedup import portable_hash
 
 GRANULARITY = 10_000
@@ -264,8 +264,9 @@ def shuffle_shards(
     equal-size shards, reproducibly.  Hash order IS the shuffle; the global
     position needs a corpus-wide row number, which a bare
     ``Window.orderBy(...)`` plans as a SINGLE-partition window.  Computed
-    instead as a global prefix sum of 1s (`with_global_cumsum`: range
-    partition + local row numbers + broadcast offsets).  ``shuffle_pos`` is
+    instead as a prefix sum of 1s over one global group
+    (`with_keyed_cumsum` with no group columns: range partition + local row
+    numbers + broadcast offsets).  ``shuffle_pos`` is
     the 0-based position in shuffled order; ``shard = pos % n_shards`` is
     round-robin, so shard sizes differ by at most one row — no
     hash-mod-imbalance.
@@ -273,9 +274,10 @@ def shuffle_shards(
     if n_shards < 1:
         raise ValueError(f"n_shards must be >= 1, got {n_shards}")
     h = portable_hash(F.coalesce(F.col(key_col).cast("string"), F.lit("<null>")), seed)
-    pos = with_global_cumsum(
+    pos = with_keyed_cumsum(
         df.withColumn("__h", h).withColumn("__one", F.lit(1)),
-        order_col=["__h", key_col],
+        group_cols=[],
+        order_cols=["__h", key_col],
         value_col="__one",
         out_col="__rn",
         n_partitions=n_partitions,
@@ -303,9 +305,10 @@ def sample_negatives(
 
     How it scales (never an all-pairs join, never a driver-side corpus):
 
-    1. every row gets a DENSE position 0..n−1 in hash order via the global
-       two-phase prefix sum (`with_global_cumsum` — no single-partition
-       window); the indexed frame is persisted and reused on both sides;
+    1. every row gets a DENSE position 0..n−1 in hash order via the
+       two-phase prefix sum over one global group (`with_keyed_cumsum` with
+       no group columns — no single-partition window); the indexed frame is
+       persisted and reused on both sides;
     2. each anchor expands to k candidates whose position is
        ``hash(id ':' rank) mod n`` — a pure projection;
     3. a self-collision (a row drawing itself) deterministically shifts to
@@ -325,11 +328,12 @@ def sample_negatives(
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     key = F.coalesce(F.col(id_col).cast("string"), F.lit("<null>"))
-    indexed = with_global_cumsum(
+    indexed = with_keyed_cumsum(
         df.select(id_col)
         .withColumn("__h", portable_hash(key, seed))
         .withColumn("__one", F.lit(1)),
-        order_col=["__h", id_col],
+        group_cols=[],
+        order_cols=["__h", id_col],
         value_col="__one",
         out_col="__rn",
         n_partitions=n_partitions,

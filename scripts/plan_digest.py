@@ -3,8 +3,10 @@
 The repeatable "same plan" proof for refactors that must not change what
 Spark runs: every catalog query (``__spark_entry__.all_queries()``, 133 at
 the time of writing) plus direct calls of the text operators that
-``jobs/pretrain_prep.py`` and the dedup/LM families use, each dumped as its
-optimized logical plan and its executed (pre-AQE) physical plan.
+``jobs/pretrain_prep.py`` and the dedup/LM families use, and of the
+exact-rank fits and prefix sums it runs (no catalog query calls
+``impute_fit`` or ``clip_fit``), each dumped as its optimized logical plan
+and its executed (pre-AQE) physical plan.
 
 Usage::
 
@@ -66,13 +68,29 @@ def _operator_calls(spark, sf_dir: str, tmp: str):
     from pyspark.sql import functions as F
 
     from ipl_dagster_pipeline_spark import io as io_mod
-    from ipl_dagster_pipeline_spark.operators import cleaning, lm, similarity, text_dedup, tokenizer
+    from ipl_dagster_pipeline_spark.operators import (
+        cleaning,
+        featurize,
+        lm,
+        packing,
+        sampling,
+        similarity,
+        text_dedup,
+        tokenizer,
+    )
     from ipl_dagster_pipeline_spark.operators.dedup_index import MinHashIndex
 
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
     emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
     bench = docs.filter(F.col("doc_id") % 97 == 0)
     cand = docs.filter(F.col("doc_id") % 97 != 0)
+    # three numeric fit columns: long, double, and long with NULLs
+    num = docs.select(
+        "doc_id",
+        "n_chars",
+        (F.col("n_chars") / 7).alias("r"),
+        F.when(F.col("doc_id") % 5 != 0, F.length("text")).alias("l"),
+    )
 
     def one(fn, *a, **kw):
         return lambda: [("", fn(*a, **kw))]
@@ -113,6 +131,11 @@ def _operator_calls(spark, sf_dir: str, tmp: str):
         ("pmi_collocations", one(lm.pmi_collocations, docs)),
         ("near_dup_pairs_lsh", one(similarity.near_dup_pairs_lsh, emb)),
         ("minhash_index.add_batch", index_batches),
+        ("impute_fit", one(featurize.impute_fit, num, ["n_chars", "r", "l"], "doc_id")),
+        ("clip_fit", one(featurize.clip_fit, num, "r", "doc_id", 1, 99)),
+        ("quantile_bins_fit", one(featurize.quantile_bins_fit, num, "n_chars", "doc_id", 8)),
+        ("shuffle_shards", one(sampling.shuffle_shards, docs, "doc_id", 8)),
+        ("pack_sequences", one(packing.pack_sequences, docs.withColumnRenamed("n_chars", "n_tokens"), 512)),
     ]
 
 

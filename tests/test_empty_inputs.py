@@ -58,7 +58,6 @@ def test_sampling_family_on_empty(empty_docs):
 def test_prefix_sums_profiling_on_empty(empty_docs):
     from ipl_dagster_pipeline_spark.operators.packing import (
         pack_sequences,
-        with_global_cumsum,
         with_keyed_cumsum,
     )
     from ipl_dagster_pipeline_spark.operators.profiling import (
@@ -67,7 +66,7 @@ def test_prefix_sums_profiling_on_empty(empty_docs):
         robust_outliers,
     )
 
-    assert with_global_cumsum(empty_docs, "doc_id", "n_chars").count() == 0
+    assert with_keyed_cumsum(empty_docs, [], ["doc_id"], "n_chars").count() == 0
     assert with_keyed_cumsum(empty_docs, ["source"], ["doc_id"], "n_chars").count() == 0
     assert pack_sequences(empty_docs.withColumnRenamed("n_chars", "n_tokens"), 512).count() == 0
     assert group_quantiles(empty_docs, ["source"], "n_chars", "doc_id").count() == 0

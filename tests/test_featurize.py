@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import uuid
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -269,3 +271,92 @@ def test_impute_fit_sketch_single_scan_for_many_columns(spark):
     row = fit.collect()[0]
     assert set(fit.columns) == {"imp_a", "imp_b", "imp_c"}
     assert all(row[c] is not None for c in fit.columns)
+
+
+@pytest.fixture(scope="module")
+def mixed(spark):
+    """Fit columns of mixed types: long ``a`` and double ``b`` with value
+    ties across keys and NULLs in some rows, all-NULL double ``c``, int
+    ``d`` with NULLs."""
+    rows = [
+        (
+            k,
+            (k * 7) % 5 if k % 4 else None,
+            float((k * 3) % 4) / 2 if k % 3 else None,
+            None,
+            k % 6 if k % 5 else None,
+        )
+        for k in range(37, 0, -1)
+    ]
+    return spark.createDataFrame(rows, "id long, a long, b double, c double, d int")
+
+
+def _median_recount(rows, c):
+    """The lower-rank median element of ``c``: rank ((n-1)*1) DIV 2 + 1 in
+    (value, id) order over the non-NULL values."""
+    vals = sorted((r[c], r["id"]) for r in rows if r[c] is not None)
+    return vals[(len(vals) - 1) // 2][0] if vals else None
+
+
+def test_impute_fit_median_equals_per_column_recount(spark, mixed):
+    from ipl_dagster_pipeline_spark.operators.featurize import impute_fit
+
+    cols = ["b", "a", "c", "d"]
+    fit = impute_fit(mixed, cols, "id", n_partitions=3)
+    # names and order follow cols; each fill value keeps its input type
+    assert fit.dtypes == [("imp_b", "double"), ("imp_a", "bigint"), ("imp_c", "double"),
+                          ("imp_d", "int")]
+    rows = mixed.collect()
+    [got] = fit.collect()
+    assert got.asDict() == {f"imp_{c}": _median_recount(rows, c) for c in cols}
+    assert got["imp_c"] is None and got["imp_a"] is not None
+    empty = impute_fit(mixed.limit(0), cols, "id")
+    assert empty.dtypes == fit.dtypes
+    assert [r.asDict() for r in empty.collect()] == [{f"imp_{c}": None for c in cols}]
+
+
+def _job_count(spark, thunk) -> int:
+    sc = spark.sparkContext
+    group = f"fit-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count")
+    try:
+        thunk()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_impute_fit_ranks_all_columns_in_one_pass(spark, mixed):
+    """Structural pin: the median fit ranks every column in ONE ranking, so
+    three columns run exactly as many Spark jobs as one."""
+    from ipl_dagster_pipeline_spark.operators.featurize import impute_fit
+
+    one = _job_count(spark, lambda: impute_fit(mixed, ["a"], "id").collect())
+    three = _job_count(spark, lambda: impute_fit(mixed, ["a", "b", "d"], "id").collect())
+    assert one > 0 and three == one
+
+
+def test_empty_fit_conventions(spark, mixed):
+    """One row of NULLs for the bin edges and fill values; zero rows for the
+    named elements and the clip bounds, so clip_transform raises."""
+    from ipl_dagster_pipeline_spark.operators.featurize import (
+        clip_fit,
+        clip_transform,
+        impute_fit,
+        quantile_bins_fit,
+        quantile_fit_elements,
+    )
+
+    empty = mixed.limit(0)
+    for fit in (
+        quantile_bins_fit(empty, "b", "id", 3),
+        impute_fit(empty, ["a", "b"], "id"),
+        impute_fit(empty, ["a", "b"], "id", strategy="mean"),
+    ):
+        assert [set(r.asDict().values()) for r in fit.collect()] == [{None}]
+    bounds = clip_fit(empty, "b", "id")
+    assert bounds.columns == ["clip_lo", "clip_hi"] and bounds.count() == 0
+    assert quantile_fit_elements(empty, "b", "id", {"m": 50}).count() == 0
+    with pytest.raises(ValueError, match="bounds row"):
+        clip_transform(mixed, bounds, "b")

@@ -84,7 +84,7 @@ def test_global_cumsum_matches_single_partition(spark):
     partitioning, including many partitions of skewed sizes."""
     from pyspark.sql import Window
 
-    from ipl_dagster_pipeline_spark.operators.packing import with_global_cumsum
+    from ipl_dagster_pipeline_spark.operators.packing import with_keyed_cumsum
 
     df = (
         spark.range(0, 5000)
@@ -94,7 +94,7 @@ def test_global_cumsum_matches_single_partition(spark):
     )
     got = {
         r.k: r.cumsum
-        for r in with_global_cumsum(df, "k", "v", n_partitions=13).collect()
+        for r in with_keyed_cumsum(df, [], ["k"], "v", n_partitions=13).collect()
     }
     exp = {
         r.k: r.c
@@ -114,14 +114,14 @@ def test_global_cumsum_many_partitions_uses_broadcast_offsets(spark):
     and values must still equal the single-partition cumsum."""
     from pyspark.sql import Window
 
-    from ipl_dagster_pipeline_spark.operators.packing import with_global_cumsum
+    from ipl_dagster_pipeline_spark.operators.packing import with_keyed_cumsum
 
     df = (
         spark.range(0, 4000)
         .withColumnRenamed("id", "k")
         .withColumn("v", (F.col("k") % 11 + 1).cast("long"))
     )
-    out = with_global_cumsum(df, "k", "v", n_partitions=256)
+    out = with_keyed_cumsum(df, [], ["k"], "v", n_partitions=256)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "CASE WHEN" not in plan
     assert "Broadcast" in plan
@@ -340,6 +340,17 @@ def test_keyed_cumsum_guards_data_cardinality_keys(spark):
     # same frame under a strata key sails through the same bound
     ok = with_keyed_cumsum(df, ["g"], ["k"], "v", n_partitions=2, max_offset_rows=10)
     assert ok.count() == 60
+
+
+@pytest.mark.parametrize("groups,n_partitions", [([], 1), (["g"], 3)])
+def test_keyed_cumsum_rejects_fractional_values(spark, groups, n_partitions):
+    """The local pass sums int64: a fractional value column must fail loudly
+    and name the column, not truncate every 0.5 to a running sum of 0."""
+    from ipl_dagster_pipeline_spark.operators.packing import with_keyed_cumsum
+
+    df = spark.createDataFrame([(i, i % 2, 0.5) for i in range(6)], "k int, g int, v double")
+    with pytest.raises(ValueError, match="'v' must be integral, got double"):
+        with_keyed_cumsum(df, groups, ["k"], "v", n_partitions=n_partitions).collect()
 
 
 def test_group_quantiles_exact_lower_rank(spark):

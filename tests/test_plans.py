@@ -82,16 +82,13 @@ def test_prefix_sum_plans_have_single_data_exchange(spark):
     test pins the Arrow-local-cumsum plan that avoids it.  The only hash
     exchanges allowed are broadcast-side/offset plumbing: zero on the final
     frame's data path."""
-    from ipl_dagster_pipeline_spark.operators.packing import (
-        with_global_cumsum,
-        with_keyed_cumsum,
-    )
+    from ipl_dagster_pipeline_spark.operators.packing import with_keyed_cumsum
 
     df = spark.createDataFrame(
         [(i, f"g{i % 3}", i % 7) for i in range(100)], ["k", "g", "v"]
     )
     for out in (
-        with_global_cumsum(df, ["k"], "v", n_partitions=4),
+        with_keyed_cumsum(df, [], ["k"], "v", n_partitions=4),
         with_keyed_cumsum(df, ["g"], ["k"], "v", n_partitions=4),
     ):
         plan = out._jdf.queryExecution().executedPlan().toString()
