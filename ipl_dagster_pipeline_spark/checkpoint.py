@@ -18,7 +18,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from .caching import tracked_scope
-from .io import SnapshotTable, as_read_back
+from .io import SnapshotTable, _write_json, as_read_back
 from .metrics import append_lineage, observation_result, observe_stage
 
 
@@ -256,10 +256,7 @@ class CheckpointedPipeline:
             "attempts": attempt,
             "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         }
-        tmp = manifest_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, manifest_path)  # the commit point
+        _write_json(manifest_path, manifest)  # the commit point
 
         if emit_lineage:
             self._lineage(name, version, meta)

@@ -23,7 +23,8 @@ Manifest fields (``_manifests/{snapshot_id:012d}.json``):
 * ``mode`` — ``overwrite`` starts a new table state; ``append`` adds
   ``data_dir`` to the parent's state.
 * ``partition_by`` — hive partition columns of ``data_dir`` (may be empty).
-* ``committed_at`` — epoch seconds; ``meta`` — caller tags (batch ids).
+* ``committed_at`` — epoch seconds.
+* ``meta`` — caller tags: each value a JSON scalar or a list of them.
 * ``schema`` — the written frame's schema as Spark JSON, forced nullable and
   in read order (partition columns last, in ``partition_by`` order).  Every
   read passes it to ``spark.read.schema``, so no read starts a
@@ -32,6 +33,21 @@ Manifest fields (``_manifests/{snapshot_id:012d}.json``):
 * ``files`` — ``[{path, rows}]``: each data file, relative to ``data_dir``,
   with its row count from the parquet footer (Iceberg's per-data-file
   ``record_count``).
+
+Tags (``SnapshotTable.tags(key)``) are how a writer makes a replay
+idempotent: it commits ``meta={key: value}`` and, before writing again,
+asks whether the table has committed ``value``.  A list-valued ``meta[key]``
+tags each element.  ``expire_snapshots`` folds the tags of the manifests it
+is about to delete into ``{table}/_tags.json`` (tmp+rename) BEFORE it
+removes any of them, so an expired tag is still known — mapped to ``None``,
+as its snapshot is gone.  The per-consumer registries this replaces
+(``_batches.json`` of the MinHash index, ``_stream_files.json`` of the
+sketch stream) are no longer read; no such table is kept in the repository
+or its test data, so none needs migrating.
+
+Manifests and ``_tags.json`` are written to a hidden tmp file in their own
+directory and renamed into place: a crash mid-write leaves the previous
+file, never a torn one.
 
 Swap `SnapshotTable` for `df.writeTo(tbl)` catalog calls when real Iceberg
 jars are on the classpath — the call sites don't change.
@@ -114,6 +130,28 @@ def footer_rows(data_dir: str) -> list[dict]:
     return out
 
 
+def _write_json(path: str, obj) -> None:
+    """Write ``obj`` to ``path`` as JSON atomically: a hidden tmp file in the
+    same directory, then a rename.  A failed write removes the tmp file."""
+    head, name = os.path.split(path)
+    tmp = os.path.join(head, f".{name}.{uuid.uuid4().hex}.tmp")
+    try:
+        with open(tmp, "w") as fh:
+            json.dump(obj, fh)
+        os.replace(tmp, path)
+    except BaseException:
+        if os.path.exists(tmp):
+            os.remove(tmp)
+        raise
+
+
+def _tag_values(value) -> list:
+    """The tag values one manifest's ``meta[key]`` holds."""
+    if value is None:
+        return []
+    return value if isinstance(value, list) else [value]
+
+
 def _scan(spark: SparkSession, dirs: list[str], schema: dict | None) -> DataFrame:
     """Parquet scan of ``dirs`` under a recorded ``schema`` (Spark JSON);
     ``None`` — a manifest older than recorded schemas — infers it."""
@@ -129,6 +167,7 @@ class SnapshotTable:
     def __init__(self, root: str) -> None:
         self.root = root
         self.manifest_dir = os.path.join(root, "_manifests")
+        self._tags_file = os.path.join(root, "_tags.json")
         os.makedirs(self.manifest_dir, exist_ok=True)
 
     # -- write ----------------------------------------------------------
@@ -145,10 +184,10 @@ class SnapshotTable:
 
         The manifest rename is the commit point; a crash before it leaves the
         previous snapshot current (readers never see partial data).
-        ``meta`` (JSON-serializable) is recorded in the manifest — callers use
-        it for idempotence tags (e.g. a batch id: skip a batch whose tag is
-        already committed, the Iceberg ``wap.id`` pattern).  The manifest also
-        records the frame's schema and each file's footer row count.
+        ``meta`` is recorded in the manifest — callers use it for idempotence
+        tags (e.g. a batch id: skip a batch whose tag ``tags`` already
+        returns, the Iceberg ``wap.id`` pattern).  The manifest also records the
+        frame's schema and each file's footer row count.
 
         ``observation`` — attached to ``df`` with a ``rows`` metric
         (``metrics.observe_stage``) — is checked against the footer row
@@ -187,22 +226,24 @@ class SnapshotTable:
             "schema": _read_schema(df, partition_by),
             "files": files,
         }
-        tmp = os.path.join(self.manifest_dir, f".tmp-{uuid.uuid4().hex}.json")
-        with open(tmp, "w") as fh:
-            json.dump(manifest, fh)
-        os.rename(tmp, os.path.join(self.manifest_dir, f"{snap_id:012d}.json"))  # atomic commit
+        _write_json(os.path.join(self.manifest_dir, f"{snap_id:012d}.json"), manifest)  # the commit
         return snap_id
 
     # -- read -----------------------------------------------------------
 
-    def _manifests(self) -> list[str]:
+    def _ids(self) -> list[int]:
+        """Committed snapshot ids, oldest → newest."""
         if not os.path.isdir(self.manifest_dir):
             return []
-        return sorted(f for f in os.listdir(self.manifest_dir) if f.endswith(".json") and not f.startswith("."))
+        return sorted(
+            int(f.split(".")[0])
+            for f in os.listdir(self.manifest_dir)
+            if f.endswith(".json") and not f.startswith(".")
+        )
 
     def current_snapshot_id(self) -> int | None:
-        ms = self._manifests()
-        return int(ms[-1].split(".")[0]) if ms else None
+        ids = self._ids()
+        return ids[-1] if ids else None
 
     def _next_snapshot_id(self) -> int:
         cur = self.current_snapshot_id()
@@ -241,7 +282,25 @@ class SnapshotTable:
 
     def snapshots(self) -> list[dict]:
         """All committed manifests, oldest → newest."""
-        return [self._manifest(int(m.split(".")[0])) for m in self._manifests()]
+        return [self._manifest(s) for s in self._ids()]
+
+    def _folded_tags(self) -> dict[str, list]:
+        """Tags of expired manifests, by meta key (``_tags.json``)."""
+        if not os.path.exists(self._tags_file):
+            return {}
+        with open(self._tags_file) as fh:
+            return json.load(fh)
+
+    def tags(self, key: str) -> dict:
+        """Every value of ``meta[key]`` this table has committed → the id of
+        the newest live snapshot that committed it, or ``None`` once that
+        manifest has expired.  Lists the manifests once, and reads them
+        before ``_tags.json``: expiry writes that file before it deletes a
+        manifest, so no tag falls between the two reads."""
+        live = {}
+        for s in self._ids():
+            live.update(dict.fromkeys(_tag_values(self._manifest(s)["meta"].get(key)), s))
+        return {**dict.fromkeys(self._folded_tags().get(key, [])), **live}
 
     # -- maintenance ----------------------------------------------------
 
@@ -254,12 +313,15 @@ class SnapshotTable:
         (the Iceberg ``expireSnapshots`` analog).  Reads of every KEPT
         snapshot are byte-identical before and after: an old overwrite base
         that a kept append chain walks through is retained even when it falls
-        outside the keep window.  Returns ``{"expired_manifests": n,
+        outside the keep window.  The expired manifests' tags are folded
+        into ``_tags.json`` before the first manifest is deleted, so
+        ``tags`` stays complete if the deletes stop part way (a rerun
+        finishes them).  Returns ``{"expired_manifests": n,
         "deleted_dirs": m}``.
         """
         if keep_last < 1:
             raise ValueError("keep_last must be >= 1")
-        snaps = [int(m.split(".")[0]) for m in self._manifests()]
+        snaps = self._ids()
         kept = set(snaps[-keep_last:])
         needed_dirs: set[str] = set()
         needed_ids: set[int] = set()
@@ -271,6 +333,12 @@ class SnapshotTable:
                 needed_dirs.add(m["data_dir"])
                 cur = m.get("parent") if m.get("mode", "overwrite") == "append" else None
         expired = [s for s in snaps if s not in needed_ids]
+        if expired:
+            folded = self._folded_tags()
+            for s in expired:
+                for key, value in self._manifest(s)["meta"].items():
+                    folded[key] = list(dict.fromkeys([*folded.get(key, []), *_tag_values(value)]))
+            _write_json(self._tags_file, folded)
         for s in expired:
             os.remove(os.path.join(self.manifest_dir, f"{s:012d}.json"))
         deleted = 0
@@ -314,8 +382,7 @@ class SnapshotTable:
         instead (a conservative superset: every surviving row may have
         changed, which downstream bucket rebuilds handle correctly).
         """
-        snaps = [int(m.split(".")[0]) for m in self._manifests()]
-        new = [s for s in snaps if s > start_snapshot_id]
+        new = [s for s in self._ids() if s > start_snapshot_id]
         if not new:
             raise ValueError("no snapshots after start_snapshot_id")
         manifests = [self._manifest(s) for s in new]

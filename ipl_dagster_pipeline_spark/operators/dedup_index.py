@@ -30,10 +30,12 @@ recompute would drop the bucket wholesale.  Dropped probe rows stay
 observable (``metrics.observed_metrics('incr_lsh_dropped')``).
 
 Resume/idempotence: each ``add_batch`` tags its three commits with
-``batch_id`` (manifest ``meta`` — the Iceberg wap.id pattern).  Re-running a
-batch skips tables that already committed it, so a crash between commits
-resumes instead of double-appending; the ``docs`` commit lands LAST and is
-the batch-done marker.
+``batch_id`` (manifest ``meta`` — the Iceberg wap.id pattern) and reads each
+table's committed tags once (``io.SnapshotTable.tags``).  Re-running a batch
+skips tables that already committed it, so a crash between commits resumes
+instead of double-appending; the ``docs`` commit lands LAST and is the
+batch-done marker.  Expiry keeps the tags of the manifests it deletes, so a
+replay stays a no-op after ``maintain()``.
 
 Scale shape: the probe is an equi shuffle join on (band, bucket) with the
 union-size cap riding the same shuffle as a count window; signatures are one
@@ -51,11 +53,11 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..caching import tracked_persist
-from ..io import SnapshotTable
+from ..io import SnapshotTable, _write_json
 from ..metrics import register_observation
 from .graph import duplicate_groups
 from .text_dedup import (
@@ -109,39 +111,10 @@ class MinHashIndex:
                     f"{self.params} — parameters are part of the index identity"
                 )
         else:
-            with open(pfile, "w") as fh:
-                json.dump(self.params, fh)
+            _write_json(pfile, self.params)
         self.docs = SnapshotTable(os.path.join(root, "docs"))
         self.bands = SnapshotTable(os.path.join(root, "bands"))
         self.pairs = SnapshotTable(os.path.join(root, "pairs"))
-
-    # -- helpers --------------------------------------------------------
-
-    def _registry_file(self) -> str:
-        return os.path.join(self.root, "_batches.json")
-
-    def _registry(self) -> dict[str, list[str]]:
-        """Batch ids whose manifests were folded away by maintain() —
-        idempotence must survive snapshot expiration (round-5 ADVICE)."""
-        if os.path.exists(self._registry_file()):
-            with open(self._registry_file()) as fh:
-                return json.load(fh)
-        return {}
-
-    def _committed_batches(self, name: str, table: SnapshotTable) -> set[str]:
-        """Union of live-manifest batch tags and the durable registry."""
-        live = {
-            m.get("meta", {}).get("batch_id")
-            for m in table.snapshots()
-            if m.get("meta", {}).get("batch_id")
-        }
-        return live | set(self._registry().get(name, []))
-
-    def _batch_snapshot_df(self, spark: SparkSession, table: SnapshotTable, batch_id: str) -> DataFrame:
-        for m in table.snapshots():
-            if m.get("meta", {}).get("batch_id") == batch_id:
-                return table.read_written(spark, m["snapshot_id"])
-        raise KeyError(f"batch {batch_id!r} not committed to {table.root}")
 
     # -- core -----------------------------------------------------------
 
@@ -170,9 +143,7 @@ class MinHashIndex:
         )
         return touched.withColumn("__new", F.lit(False)).unionByName(bands_new)
 
-    def add_batch(
-        self, batch: DataFrame, batch_id: str, check_duplicate_ids: bool = True
-    ) -> DataFrame:
+    def add_batch(self, batch: DataFrame, batch_id: str) -> DataFrame:
         """Index ``batch`` and return the NEW verified near-dup pairs —
         every (old, new) and (new, new) pair with Jaccard ≥ threshold.
 
@@ -180,78 +151,65 @@ class MinHashIndex:
         stored) ∪ new band rows on (band, bucket); verification = exact
         Jaccard over the batch shingles plus the re-shingled MATCHED old
         docs only.  Idempotent per ``batch_id`` (a replay returns the
-        already-committed pairs; after ``maintain()`` folded that batch's
-        per-batch attribution into a compaction snapshot, a replay returns
-        an EMPTY delta — the pairs themselves live on in ``all_pairs``).
+        already-committed pairs; after ``maintain()`` expired that batch's
+        pairs snapshot into a compaction, a replay returns an EMPTY delta —
+        the pairs themselves live on in ``all_pairs``).
 
-        ``check_duplicate_ids`` (default on) drops batch rows whose id is
-        already indexed — a re-submitted doc would otherwise append a second
-        bands/docs copy and poison that id's exact-Jaccard verification
-        (shingle sets union across versions).  The guard costs one
-        id-pruned anti-join against the docs table per batch; pipelines
-        that guarantee globally-unique ids upstream can disable it to keep
-        the batch strictly O(batch + neighborhood).  Dropped duplicates are
-        observable (``observed_metrics('incr_index_dup_ids')``), never
-        silent.
+        Batch rows whose id is already indexed, or repeated within the
+        batch, are dropped — a re-submitted doc would otherwise append a
+        second bands/docs copy and poison that id's exact-Jaccard
+        verification (shingle sets union across versions).  The guard costs
+        one id-pruned anti-join against the docs table per batch.  Dropped
+        duplicates are observable (``observed_metrics('incr_index_dup_ids')``),
+        never silent.
         """
         spark = batch.sparkSession
         p = self.params
         id_col, text_col = p["id_col"], p["text_col"]
-        if batch_id in self._committed_batches("docs", self.docs):  # docs commit = batch-done marker
-            try:
-                return self._batch_snapshot_df(spark, self.pairs, batch_id)
-            except KeyError:
-                # per-batch manifest expired by maintain(); replay is a no-op
-                return self.pairs.read(spark).limit(0)
+        pair_snaps = self.pairs.tags("batch_id")
+        if batch_id in self.docs.tags("batch_id"):  # docs commit = batch-done marker
+            return self._pairs_written(spark, pair_snaps.get(batch_id))
 
-        batch = batch.select(id_col, text_col)
-        docs_to_commit = batch
-        if check_duplicate_ids:
-            from pyspark.sql import Window as _W
-
-            obs_dup = register_observation("incr_index_dup_ids")
-            # guard BOTH duplicate sources: ids already stored in the index
-            # (anti-join) AND ids repeated WITHIN this batch (row_number over
-            # the batch — deterministic keep-min-text), since either would
-            # append a second docs/bands copy and poison that id's
-            # exact-Jaccard verification.  The window shuffles only the
-            # batch, never the index.  Counts observed with coalesce so a
-            # clean batch reports 0, not NULL.
-            b = batch.withColumn(
-                "__rn", F.row_number().over(_W.partitionBy(id_col).orderBy(text_col))
+        obs_dup = register_observation("incr_index_dup_ids")
+        # guard BOTH duplicate sources: ids already stored in the index
+        # (anti-join) AND ids repeated WITHIN this batch (row_number over
+        # the batch — deterministic keep-min-text).  The window shuffles only
+        # the batch, never the index.  Counts observed with coalesce so a
+        # clean batch reports 0, not NULL.
+        b = batch.select(id_col, text_col).withColumn(
+            "__rn", F.row_number().over(Window.partitionBy(id_col).orderBy(text_col))
+        )
+        if self.docs.current_snapshot_id() is not None:
+            b = b.join(
+                self.docs.read(spark).select(id_col, F.lit(True).alias("__dup")),
+                on=id_col,
+                how="left",
             )
-            if self.docs.current_snapshot_id() is not None:
-                b = b.join(
-                    self.docs.read(spark).select(id_col, F.lit(True).alias("__dup")),
-                    on=id_col,
-                    how="left",
-                )
-            else:
-                b = b.withColumn("__dup", F.lit(None).cast("boolean"))
-            # persist the FLAGGED (pre-filter) frame; the guarded batch is a
-            # cheap filter over that cache.  The dup observation costs NO
-            # action of its own any more (r6 verdict: the eager batch.count()
-            # was a full extra pass per add_batch): the CollectMetrics node
-            # is attached ABOVE the cache on exactly ONE consumer — the docs
-            # commit, which is the last write of every batch — so it is
-            # top-level in exactly one executed plan and fires with that job.
-            flags = tracked_persist(b)
-            keep = F.col("__dup").isNull() & (F.col("__rn") == 1)
-            batch = flags.filter(keep).drop("__dup", "__rn")
-            docs_to_commit = (
-                flags.observe(
-                    obs_dup,
-                    F.coalesce(F.sum(F.col("__dup").cast("long")), F.lit(0)).alias(
-                        "dropped_dup_ids"
-                    ),
-                    F.coalesce(F.sum((F.col("__rn") > 1).cast("long")), F.lit(0)).alias(
-                        "dropped_batch_dups"
-                    ),
-                    F.count(F.lit(1)).alias("batch_rows"),
-                )
-                .filter(keep)
-                .select(id_col, text_col)
+        else:
+            b = b.withColumn("__dup", F.lit(None).cast("boolean"))
+        # persist the FLAGGED (pre-filter) frame; the guarded batch is a
+        # cheap filter over that cache.  The dup observation costs NO action
+        # of its own: the CollectMetrics node is attached ABOVE the cache on
+        # exactly ONE consumer — the docs commit, which is the last write of
+        # every batch — so it is top-level in exactly one executed plan and
+        # fires with that job.
+        flags = tracked_persist(b)
+        keep = F.col("__dup").isNull() & (F.col("__rn") == 1)
+        batch = flags.filter(keep).drop("__dup", "__rn")
+        docs_to_commit = (
+            flags.observe(
+                obs_dup,
+                F.coalesce(F.sum(F.col("__dup").cast("long")), F.lit(0)).alias(
+                    "dropped_dup_ids"
+                ),
+                F.coalesce(F.sum((F.col("__rn") > 1).cast("long")), F.lit(0)).alias(
+                    "dropped_batch_dups"
+                ),
+                F.count(F.lit(1)).alias("batch_rows"),
             )
+            .filter(keep)
+            .select(id_col, text_col)
+        )
 
         # NOT fanned out: the guarded batch sits behind the dup-guard window
         # (shingles' adaptive fan-out correctly skips post-shuffle plans),
@@ -270,8 +228,6 @@ class MinHashIndex:
 
         # union-size bucket cap rides the probe join's own (band, bucket)
         # shuffle; dropped probe rows are observable, never silent
-        from pyspark.sql import Window
-
         wb = Window.partitionBy("band", "bucket")
         sized = tracked_persist(bands_all.withColumn("__bsize", F.count(F.lit(1)).over(wb)))
         obs = register_observation("incr_lsh_dropped")
@@ -321,19 +277,19 @@ class MinHashIndex:
         new_pairs = jaccard_pairs(cand, sh_ver, id_col, p["threshold"])
 
         meta = {"batch_id": batch_id}
-        if batch_id not in self._committed_batches("pairs", self.pairs):
-            self.pairs.commit(new_pairs, mode="append", meta=meta)
-        if batch_id not in self._committed_batches("bands", self.bands):
+        if batch_id not in pair_snaps:
+            pair_snaps[batch_id] = self.pairs.commit(new_pairs, mode="append", meta=meta)
+        if batch_id not in self.bands.tags("batch_id"):
             self.bands.commit(bands_new.drop("__new"), mode="append", meta=meta)
-        if batch_id not in self._committed_batches("docs", self.docs):
-            self.docs.commit(docs_to_commit, mode="append", meta=meta)
-        try:
-            return self._batch_snapshot_df(spark, self.pairs, batch_id)
-        except KeyError:
-            # partial-commit crash + maintain() folded this batch's pairs tag
-            # into the registry before the retry: the pairs live on in
-            # all_pairs, the per-batch delta is gone — empty delta, not a raise
+        self.docs.commit(docs_to_commit, mode="append", meta=meta)
+        return self._pairs_written(spark, pair_snaps[batch_id])
+
+    def _pairs_written(self, spark: SparkSession, snapshot_id: int | None) -> DataFrame:
+        """The pairs one batch's commit wrote; empty once that snapshot has
+        expired (the pairs live on in ``all_pairs``)."""
+        if snapshot_id is None:
             return self.pairs.read(spark).limit(0)
+        return self.pairs.read_written(spark, snapshot_id)
 
     # -- reads ----------------------------------------------------------
 
@@ -352,28 +308,11 @@ class MinHashIndex:
         """Periodic housekeeping: compact each table's append chain into one
         balanced overwrite snapshot, then expire pre-compaction history.
 
-        Before expiring, every live manifest's ``batch_id`` tag is folded
-        into the durable ``_batches.json`` registry at the index root, so
-        ``add_batch`` idempotence survives manifest expiration — a scheduler
-        retry of an old batch after maintenance stays a no-op instead of
-        silently double-appending (round-5 ADVICE).  The registry is written
-        tmp+rename (same atomic-publish discipline as the manifests).
+        Expiry keeps the ``batch_id`` tags of the manifests it deletes (each
+        table's ``_tags.json``, ``io.SnapshotTable.expire_snapshots``), so a
+        scheduler retry of an old batch after maintenance stays a no-op
+        instead of silently double-appending.
         """
-        reg = self._registry()
-        for name, tbl in (("docs", self.docs), ("bands", self.bands), ("pairs", self.pairs)):
-            tagged = {
-                m.get("meta", {}).get("batch_id")
-                for m in tbl.snapshots()
-                if m.get("meta", {}).get("batch_id")
-            }
-            merged = sorted(set(reg.get(name, [])) | tagged)
-            if merged:
-                reg[name] = merged
-        tmp = self._registry_file() + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(reg, fh)
-        os.replace(tmp, self._registry_file())
-
         out = {}
         for name, tbl in (("docs", self.docs), ("bands", self.bands), ("pairs", self.pairs)):
             if tbl.current_snapshot_id() is None:

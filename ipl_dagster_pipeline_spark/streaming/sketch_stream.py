@@ -11,21 +11,23 @@ never data-sized).
 Unlike the SCD1 stream (whose merge is naturally idempotent), a COUNT merge
 replayed after a crash would double-count — and unlike the dedup index,
 there is no content-level guard to fall back on.  Exactly-once is therefore
-carried at the FILE level (round-6 ADVICE): every input file that has been
-merged is recorded in a durable registry, each micro-batch merges only rows
-from files not yet recorded, and the registry commit follows the snapshot
-commit.  This is robust to checkpoint loss in BOTH directions — a fresh
-checkpoint that re-delivers all files in one batch neither double-counts
-(their files are registered) nor suppresses genuinely new files (they are
-not), which a raw ``b{batch_id}`` tag got wrong.  Reference precedent for
-skip-if-done keyed on the artifact, not the attempt: the If-Modified-Since
-fetch discipline (util/urllib.py:59-72).
+carried at the FILE level: each snapshot commit tags the input files it
+merged (``meta={"files": [...]}``), each micro-batch merges only rows from
+files the table's tags (``io.SnapshotTable.tags``) do not yet hold, and the
+manifest rename is the one commit point for the sketch AND its file
+record — a crash at any point either committed both or neither.  This is
+robust to checkpoint loss in BOTH directions — a fresh checkpoint that
+re-delivers all files in one batch neither double-counts (their files are
+tagged) nor suppresses genuinely new files (they are not), which a raw
+``b{batch_id}`` tag got wrong.  Reference precedent for skip-if-done keyed
+on the artifact, not the attempt: the If-Modified-Since fetch discipline
+(util/urllib.py:59-72).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F  # noqa: F401  (kept for parity with sibling modules)
+from pyspark.sql import functions as F
 
 from ..io import SnapshotTable
 from ..operators.sketches import loghist_merge, loghist_sketch
@@ -51,40 +53,21 @@ def stream_sketch_maintenance(
     explicitly so the query can start on a fresh deployment before the
     first input file lands (round-5 ADVICE on the dedup stream).
 
-    Housekeeping: merged input files go to a durable ``_stream_files``
-    registry (not only snapshot meta), and every ``maintain_every``
-    commits old snapshots are expired (``keep_last`` retained) — a
-    long-running stream stays O(keep_last) on disk instead of one full
-    sketch copy per batch, and file-based replay skipping survives the
-    expiration (the dedup-index registry discipline, round-5 ADVICE).
-    The registry grows with the input FILE count — the same growth rate as
-    the stream's own checkpoint file log.
+    Housekeeping: every ``maintain_every`` commits old snapshots are
+    expired (``keep_last`` retained) — a long-running stream stays
+    O(keep_last) on disk instead of one full sketch copy per batch.  Expiry
+    keeps the expired commits' file tags (the table's ``_tags.json``), so
+    replay skipping survives it; that record grows with the input FILE
+    count — the same growth rate as the stream's own checkpoint file log.
     """
-    import json
-    import os
-
     schema = schema or spark.read.parquet(input_dir).schema
     tbl = SnapshotTable(table_path)
-    registry = os.path.join(table_path, "_stream_files.json")
-
-    def _merged_files() -> set:
-        if os.path.exists(registry):
-            with open(registry) as fh:
-                return set(json.load(fh))
-        return set()
-
-    def _record(files: set) -> None:
-        t = registry + ".tmp"
-        with open(t, "w") as fh:
-            json.dump(sorted(files), fh)
-        os.replace(t, registry)
 
     def _apply(batch_df, batch_id: int) -> None:
         if not batch_df.head(1):
             return
-        seen = _merged_files()
         files = {r[0] for r in batch_df.select(F.input_file_name()).distinct().collect()}
-        new_files = sorted(files - seen)
+        new_files = sorted(files - set(tbl.tags("files")))
         if not new_files:  # crash replay / re-delivered lineage: no double count
             return
         fresh = (
@@ -95,8 +78,7 @@ def stream_sketch_maintenance(
         delta = loghist_sketch(fresh, value_col, group_cols)
         if tbl.current_snapshot_id() is not None:
             delta = loghist_merge(tbl.read(spark), delta)
-        tbl.commit(delta, meta={"stream_batch_id": f"b{batch_id}", "n_files": len(new_files)})
-        _record(seen | set(new_files))
+        tbl.commit(delta, meta={"files": new_files})
         if maintain_every and len(tbl.snapshots()) >= maintain_every:
             tbl.expire_snapshots(keep_last=keep_last)
 

@@ -152,8 +152,8 @@ def test_probe_is_delta_filtered_not_index_wide(spark, docs, tmp_path):
 def test_replay_after_maintain_is_still_idempotent(spark, docs, tmp_path):
     """Round-5 ADVICE (medium): maintain() expires the manifests carrying
     batch_id tags; a scheduler retry of an old batch afterwards must remain
-    a no-op (durable _batches.json registry), returning an empty delta —
-    never a double-append."""
+    a no-op (expiry keeps the tags in each table's _tags.json), returning an
+    empty delta — never a double-append."""
     idx = MinHashIndex(str(tmp_path / "idx"))
     b1 = docs.filter(F.col("doc_id") < 150)
     idx.add_batch(b1, batch_id="b1")
@@ -222,3 +222,24 @@ def test_in_batch_duplicate_ids_are_dropped(spark, docs, tmp_path):
     [vals] = [v for k, v in m.items()]
     assert vals["dropped_batch_dups"] == 1 and vals["dropped_dup_ids"] == 0
     assert vals["batch_rows"] == 3
+
+
+def test_torn_params_write_leaves_index_openable(tmp_path, monkeypatch):
+    """A crash while index-params.json is written must not brick the index:
+    the next open finds no params file (or a whole one), never half of one."""
+    import json
+
+    real_dump = json.dump
+
+    def torn_dump(obj, fh, *a, **kw):
+        fh.write(json.dumps(obj)[:5])
+        raise OSError("disk went away mid-write")
+
+    root = str(tmp_path / "idx")
+    monkeypatch.setattr(json, "dump", torn_dump)
+    with pytest.raises(OSError, match="mid-write"):
+        MinHashIndex(root)
+    monkeypatch.setattr(json, "dump", real_dump)
+    assert MinHashIndex(root).params["k"] == 5
+    assert MinHashIndex(root).params["k"] == 5  # and the params now persist
+    assert not [f for f in os.listdir(root) if f.startswith(".")]

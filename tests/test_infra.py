@@ -5,6 +5,7 @@ from __future__ import annotations
 import os
 
 import pyspark.sql.functions as F
+import pytest
 
 from ipl_dagster_pipeline_spark.checkpoint import CheckpointedPipeline
 from ipl_dagster_pipeline_spark.io import SnapshotTable, write_day_partitioned
@@ -167,6 +168,83 @@ def test_snapshot_compaction_preserves_contents_and_chains(spark, tmp_path):
     stats = tbl.expire_snapshots(keep_last=2)
     assert stats["expired_manifests"] == 4
     assert tbl.read(spark).count() == len(before) + 5
+
+
+def test_snapshot_tags_survive_expiry(spark, tmp_path):
+    """Scalar- and list-valued meta tags are answered from the live
+    manifests (value -> snapshot id) and, once expired, from _tags.json
+    (value -> None)."""
+    tbl = SnapshotTable(str(tmp_path / "t"))
+    s1 = tbl.commit(spark.range(3).toDF("id"), meta={"batch_id": "b1", "files": ["f1", "f2"]})
+    s2 = tbl.commit(spark.range(3).toDF("id"), mode="append", meta={"batch_id": "b2"})
+    s3 = tbl.commit(spark.range(3).toDF("id"), meta={"batch_id": "b3", "files": ["f3"]})
+    assert tbl.tags("batch_id") == {"b1": s1, "b2": s2, "b3": s3}
+    assert tbl.tags("files") == {"f1": s1, "f2": s1, "f3": s3}
+    assert tbl.tags("absent") == {}
+    assert tbl.expire_snapshots(keep_last=1)["expired_manifests"] == 2
+    assert tbl.tags("batch_id") == {"b1": None, "b2": None, "b3": s3}
+    assert tbl.tags("files") == {"f1": None, "f2": None, "f3": s3}
+    # a second expiry folds into, never over, the earlier record
+    s4 = tbl.commit(spark.range(3).toDF("id"), meta={"batch_id": "b4"})
+    tbl.expire_snapshots(keep_last=1)
+    assert tbl.tags("batch_id") == {"b1": None, "b2": None, "b3": None, "b4": s4}
+
+
+@pytest.mark.parametrize("failing_delete", [0, 1])
+def test_snapshot_tags_complete_when_expiry_stops_part_way(
+    spark, tmp_path, monkeypatch, failing_delete
+):
+    """Expiry folds the tags before it deletes any manifest: a delete that
+    fails part way (at the first or the second expired manifest) loses no
+    tag, and a second expiry finishes the job."""
+    tbl = SnapshotTable(str(tmp_path / "t"))
+    for i in range(3):
+        tbl.commit(spark.range(3).toDF("id"), meta={"batch_id": f"b{i}"})
+    real_remove = os.remove
+    deletes = []
+
+    def fail_one_manifest(path):
+        if os.path.dirname(path) == tbl.manifest_dir:
+            deletes.append(path)
+            if len(deletes) == failing_delete + 1:
+                raise OSError("interrupted")
+        real_remove(path)
+
+    monkeypatch.setattr(os, "remove", fail_one_manifest)
+    with pytest.raises(OSError, match="interrupted"):
+        tbl.expire_snapshots(keep_last=1)
+    monkeypatch.setattr(os, "remove", real_remove)
+    assert set(tbl.tags("batch_id")) == {"b0", "b1", "b2"}
+    assert tbl.expire_snapshots(keep_last=1)["expired_manifests"] == 2 - failing_delete
+    assert [m["meta"]["batch_id"] for m in tbl.snapshots()] == ["b2"]
+    assert tbl.tags("batch_id") == {"b0": None, "b1": None, "b2": tbl.current_snapshot_id()}
+
+
+def test_index_add_batch_reads_each_tables_tags_once(spark, tmp_path, monkeypatch):
+    """One add_batch lists each index table's manifests for tags at most
+    once — on a first batch, on a probing batch and on a replay."""
+    from collections import Counter
+
+    from ipl_dagster_pipeline_spark.operators.dedup_index import MinHashIndex
+
+    calls: Counter = Counter()
+    for method in ("snapshots", "tags"):
+        real = getattr(SnapshotTable, method)
+
+        def counted(self, *a, _real=real, **kw):
+            calls[os.path.basename(self.root)] += 1
+            return _real(self, *a, **kw)
+
+        monkeypatch.setattr(SnapshotTable, method, counted)
+    docs = spark.createDataFrame(
+        [(i, f"alpha beta gamma delta epsilon zeta {i % 3} eta theta") for i in range(12)],
+        "doc_id long, text string",
+    )
+    idx = MinHashIndex(str(tmp_path / "idx"))
+    for lo, batch_id in ((0, "b1"), (6, "b2"), (6, "b2")):
+        calls.clear()
+        idx.add_batch(docs.filter(F.col("doc_id").between(lo, lo + 5)), batch_id).count()
+        assert calls and max(calls.values()) == 1, (batch_id, calls)
 
 
 def test_checkpoint_resume_skips_committed(spark, small_transcripts, tmp_path):

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 from ipl_dagster_pipeline_spark.io import SnapshotTable
 from ipl_dagster_pipeline_spark.operators.sketches import loghist_quantiles, loghist_sketch
@@ -143,3 +144,31 @@ def test_streaming_sketch_fresh_checkpoint_new_file_counts_once(spark, tmp_path)
         spark, f"{input_dir}/*", table, "v", None, str(tmp_path / "ck2")
     ).awaitTermination()
     assert tbl.read(spark).agg(F.sum("cnt").alias("n")).collect()[0].n == 150
+
+
+def test_crash_after_commit_counts_once(spark, tmp_path, monkeypatch):
+    """A crash right after the snapshot commit, before the stream records the
+    batch as done: the rerun on the SAME checkpoint replays that batch, and
+    the files the commit tagged must keep it from being merged twice."""
+    input_dir = str(tmp_path / "in")
+    table = str(tmp_path / "sk")
+    ck = str(tmp_path / "ck")
+    spark.range(0, 100).select((F.col("id") / 9.0).alias("v")).write.parquet(input_dir)
+
+    real_commit = SnapshotTable.commit
+    crashed = []
+
+    def commit_then_crash(self, *a, **kw):
+        snap = real_commit(self, *a, **kw)
+        if not crashed:
+            crashed.append(snap)
+            raise RuntimeError("crash after commit")
+        return snap
+
+    monkeypatch.setattr(SnapshotTable, "commit", commit_then_crash)
+    with pytest.raises(Exception):
+        stream_sketch_maintenance(spark, input_dir, table, "v", None, ck).awaitTermination()
+    assert crashed
+    stream_sketch_maintenance(spark, input_dir, table, "v", None, ck).awaitTermination()
+    tbl = SnapshotTable(table)
+    assert tbl.read(spark).agg(F.sum("cnt").alias("n")).collect()[0].n == 100
