@@ -8,14 +8,24 @@ non-resumable compute.  Here resumability is structural: every stage writes
 its output as an atomic `SnapshotTable` commit whose own write also yields the
 stage's lineage row; re-running the pipeline skips stages whose snapshot
 already committed and recomputes the rest from their inputs' snapshots.
+
+A job declares its stages as one graph (``CheckpointedPipeline.run``): each
+stage names its inputs by its parameter names, as a Dagster asset does
+(pipeline/__init__.py:26-58), and stages whose inputs have committed run at
+the same time on worker threads — the reference's multiprocess executor
+materializes independent assets concurrently (sharing.py:122-128).  Every
+stage still goes through ``stage``, the one commit/resume primitive.
 """
 
 from __future__ import annotations
 
+import inspect
 import os
 from collections.abc import Callable
+from concurrent.futures import FIRST_COMPLETED, Future, ThreadPoolExecutor, wait
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.util import inheritable_thread_target
 
 from .caching import tracked_scope
 from .io import SnapshotTable, _write_json, as_read_back
@@ -39,10 +49,29 @@ class CheckpointedPipeline:
 
     Usage:
         pipe = CheckpointedPipeline(spark, "/tmp/ckpt")
-        t = pipe.stage("convert", lambda: transcripts_from_events(spark, sf))
-        f = pipe.stage("features", lambda: build_turn_features(t))
+        out = pipe.run(
+            convert=lambda: transcripts_from_events(spark, sf),
+            tool_dim=lambda: tool_dim_from_events(spark, sf),
+            features=lambda convert, tool_dim: build_turn_features(convert, tool_dim),
+        )
     Each stage is computed at most once per checkpoint root; a rerun after a
     crash resumes from the last committed stage snapshot.
+
+    Stage graph: ``run`` reads each stage's inputs from its parameter names
+    and starts the stage as soon as all of them have committed, so
+    ``convert`` and ``tool_dim`` above run at the same time and
+    ``features`` starts when both are durable.  Failure rule: after the first
+    stage raises, no new stage starts; stages already running finish their
+    atomic commits (a rerun resumes from them), then the first exception is
+    re-raised.
+
+    Thread-safety contract: concurrent stages share the SparkSession and the
+    checkpoint root.  Each stage commits to its own table directory and
+    appends its own uniquely named lineage file; each stage's persisted
+    intermediates belong to a ``caching.tracked_scope`` on its own thread,
+    so one stage's release never unpersists a frame a sibling still reads.
+    Stage callables must not mutate session-wide state (``spark.conf``,
+    temp views) that a sibling reads.
     """
 
     def __init__(self, spark: SparkSession, root: str, force: bool = False) -> None:
@@ -65,7 +94,6 @@ class CheckpointedPipeline:
         name: str,
         fn: Callable[[], DataFrame],
         partition_by: list[str] | None = None,
-        emit_lineage: bool = True,
     ) -> DataFrame:
         """Run (or resume) a stage: if a committed snapshot exists, read it
         back; otherwise compute and commit atomically, and return the
@@ -91,9 +119,64 @@ class CheckpointedPipeline:
             # recount of the committed snapshot (io.as_read_back)
             df, obs = observe_stage(as_read_back(fn(), partition_by), name)
             snap_id = tbl.commit(df, partition_by=partition_by, observation=obs)
-        if emit_lineage:
-            self._lineage(name, snap_id, observation_result(obs))
+        self._lineage(name, snap_id, observation_result(obs))
         return tbl.read(self.spark)
+
+    def run(self, **stages: Callable[..., DataFrame]) -> dict[str, DataFrame]:
+        """Run (or resume) a stage graph; returns ``{name: committed frame}``.
+
+        Each keyword is a stage name; its callable's parameter names are
+        the stages it reads, and it is called with their committed
+        read-backs (a callable must not use default arguments to capture
+        values — every parameter is an input).  An unknown input or a cycle
+        raises ``ValueError`` before any stage runs.  Each stage goes
+        through :meth:`stage` on a worker thread as soon as its inputs have
+        committed; the threads inherit the caller's local properties (job
+        group, description), so the caller's job group covers every
+        stage's jobs.  After the first exception no new stage starts, the
+        running ones finish their commits, and that exception is re-raised.
+        """
+        inputs = {name: list(inspect.signature(fn).parameters) for name, fn in stages.items()}
+        for name, ins in inputs.items():
+            unknown = [i for i in ins if i not in stages]
+            if unknown:
+                raise ValueError(f"stage {name!r} reads unknown stage(s) {unknown}")
+        resolved: set[str] = set()
+        while len(resolved) < len(inputs):
+            ready = {n for n, ins in inputs.items() if n not in resolved and resolved.issuperset(ins)}
+            if not ready:
+                raise ValueError(f"stage graph has a cycle through {sorted(set(inputs) - resolved)}")
+            resolved |= ready
+
+        done: dict[str, DataFrame] = {}
+        running: dict[Future, str] = {}
+        error: BaseException | None = None
+        with ThreadPoolExecutor(max_workers=len(stages), thread_name_prefix="stage") as pool:
+
+            def start_ready() -> None:
+                started = set(done) | set(running.values())
+                for n in inputs:
+                    if n not in started and all(i in done for i in inputs[n]):
+                        fn, args = stages[n], {i: done[i] for i in inputs[n]}
+                        # wrapped here, on the caller's thread: the wrapper
+                        # copies the caller's local properties when created
+                        target = inheritable_thread_target(self.spark)(self.stage)
+                        running[pool.submit(target, n, lambda fn=fn, args=args: fn(**args))] = n
+
+            start_ready()
+            while running:
+                finished, _ = wait(running, return_when=FIRST_COMPLETED)
+                for fut in finished:
+                    name = running.pop(fut)
+                    try:
+                        done[name] = fut.result()
+                    except BaseException as err:  # noqa: BLE001 — re-raised below
+                        error = error or err
+                if error is None:
+                    start_ready()
+        if error is not None:
+            raise error
+        return done
 
     def _lineage(self, name: str, snapshot_id: int, totals: dict) -> None:
         """One lineage row for a commit (``partition_id = -1``)."""
@@ -113,7 +196,6 @@ class CheckpointedPipeline:
         name: str,
         fn: Callable[..., dict],
         max_attempts: int = 3,
-        emit_lineage: bool = True,
         timeout_sec: float | None = None,
     ) -> dict:
         """Supervise a NON-Spark stage under the same checkpoint registry
@@ -241,8 +323,7 @@ class CheckpointedPipeline:
                     # safe to reap: the attempt finished (no zombie writer)
                     shutil.rmtree(scratch, ignore_errors=True)
         else:
-            if emit_lineage:  # failure visible to K6 reconciliation
-                self._lineage(name, -1, {"rows": -1})
+            self._lineage(name, -1, {"rows": -1})  # failure visible to K6 reconciliation
             raise RuntimeError(
                 f"external stage {name!r} failed after {max_attempts} attempts"
             ) from last_err
@@ -258,8 +339,7 @@ class CheckpointedPipeline:
         }
         _write_json(manifest_path, manifest)  # the commit point
 
-        if emit_lineage:
-            self._lineage(name, version, meta)
+        self._lineage(name, version, meta)
         return manifest
 
     def completed_stages(self) -> list[str]:

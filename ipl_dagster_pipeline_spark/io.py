@@ -496,7 +496,10 @@ def publish_web_asset(
     republished ``.gz`` bytes differ in the header timestamp only.
 
     Exactly one of ``content`` (bytes / str / JSON-serializable dict) or
-    ``write_fn(tmp_path) -> None`` must be given.  A failed writer leaves no
+    ``write_fn(tmp_path) -> None`` must be given; ``tmp_path`` (and the
+    ``.gz`` sibling's tmp) is a hidden file unique to this call in the target
+    directory, so concurrent publishers of one artifact never rename each
+    other's tmp away — the last rename wins.  A failed writer leaves no
     partial files.  The ``.gz`` sibling is renamed into place FIRST and the
     main file second — the main rename is the commit point; if it fails the
     stale ``.gz`` is removed so consumers fall back to the uncompressed
@@ -514,7 +517,8 @@ def publish_web_asset(
         raise ValueError("pass exactly one of content= or write_fn=")
     parent = os.path.dirname(final_path) or "."
     os.makedirs(parent, exist_ok=True)
-    tmp = final_path + ".tmp"
+    # a hidden tmp per call: two publishers of one artifact never share it
+    tmp = os.path.join(parent, f".{os.path.basename(final_path)}.{uuid.uuid4().hex}.tmp")
     try:
         if write_fn is not None:
             write_fn(tmp)

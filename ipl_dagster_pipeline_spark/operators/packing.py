@@ -27,9 +27,13 @@ span — every downstream loader can slice example ``k`` as tokens
 
 from __future__ import annotations
 
+from datetime import timezone
+
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..caching import tracked_persist
 
@@ -187,8 +191,22 @@ def with_keyed_cumsum(
     )
     # offsets as ONE broadcast of P·G rows (zero extra exchange), not a CASE
     # chain: a when-chain over 10^4-10^5 range partitions blows past the
-    # codegen expression-tree limits
-    offsets = df.sparkSession.createDataFrame(offset_rows, base)
+    # codegen expression-tree limits.  Built from an Arrow table it plans as
+    # a LocalTableScan; a list of rows would be a pickled-RDD scan, one
+    # Python-worker stage per prefix sum.  A collected TIMESTAMP is a naive
+    # local time; Arrow would read its wall clock as UTC, so it goes in as
+    # the same instant in UTC.
+    local_ts = {g for g in group_cols if isinstance(by_name[g], T.TimestampType)}
+    offsets = df.sparkSession.createDataFrame(
+        pa.Table.from_pylist(
+            [
+                {n: v.astimezone(timezone.utc) if n in local_ts and v is not None else v
+                 for n, v in zip(base.names, r)}
+                for r in offset_rows
+            ],
+            schema=to_arrow_schema(base),
+        )
+    )
     return (
         _null_safe_broadcast_join(local, offsets, ["__pid", *group_cols], how="left")
         .withColumn(

@@ -3,7 +3,9 @@
     spark-submit --py-files ipl_dagster_pipeline_spark.zip jobs/corpus_dedup.py \
         --input /root/testdata/sf0.01 --output /tmp/ipl_corpus [--force]
 
-Checkpointed stages (atomic snapshot commit + lineage per stage; rerun = resume):
+Checkpointed stages, one ``CheckpointedPipeline.run`` graph (atomic snapshot
+commit + lineage per stage; rerun = resume; ``stats``, ``exact`` and
+``pairs → groups`` run at the same time, then ``curated``):
 
     stats      token counts + quality scores + language ID per doc
     exact      exact-dup groups (md5 fingerprint, keep-min-id)
@@ -72,7 +74,7 @@ def main() -> None:
     docs = spark.read.parquet(os.path.join(args.input, "documents.parquet"))
     pipe = CheckpointedPipeline(spark, args.output, force=args.force)
 
-    def _stats():
+    def stats():
         s = with_lang_id(with_quality_scores(with_token_counts(docs)))
         if args.bpe:
             from ipl_dagster_pipeline_spark.operators.tokenizer import with_bpe_token_counts
@@ -84,12 +86,7 @@ def main() -> None:
             s = with_bigram_surprisal(s)
         return s
 
-    stats = pipe.stage("stats", _stats)
-    exact = pipe.stage("exact", lambda: exact_dedup(docs))
-    pairs = pipe.stage("pairs", lambda: minhash_lsh_dedup(docs, threshold=args.jaccard))
-    groups = pipe.stage("groups", lambda: duplicate_groups(pairs))
-
-    def _curate():
+    def curated(stats, exact, groups):
         # eligibility first (exact keeper + quality), then near-dup keepers
         # re-keyed to surviving members — see cleaning.curate_keepers
         kept = curate_keepers(stats, exact, groups, min_alpha_ratio=args.min_alpha_ratio)
@@ -108,15 +105,22 @@ def main() -> None:
             )
         return hash_split(kept, "doc_id")
 
-    curated = pipe.stage("curated", _curate)
+    stages = dict(
+        stats=stats,
+        exact=lambda: exact_dedup(docs),
+        pairs=lambda: minhash_lsh_dedup(docs, threshold=args.jaccard),
+        groups=lambda pairs: duplicate_groups(pairs),
+        curated=curated,
+    )
     if args.shards:
-        pipe.stage("sharded", lambda: shuffle_shards(curated, "doc_id", args.shards))
+        stages["sharded"] = lambda curated: shuffle_shards(curated, "doc_id", args.shards)
+    out = pipe.run(**stages)
 
     totals = stage_totals(spark, pipe.lineage_path)
     for stage in pipe.completed_stages():
         rows, checksum = totals.get(stage, (0, 0))
         print(f"stage={stage} rows={rows} checksum={checksum}")
-    folds = {r["split"]: r["n"] for r in curated.groupBy("split").agg(F.count("*").alias("n")).collect()}
+    folds = {r["split"]: r["n"] for r in out["curated"].groupBy("split").agg(F.count("*").alias("n")).collect()}
     print(f"curated corpus folds: {folds}")
 
 

@@ -3,8 +3,10 @@
     spark-submit --py-files ipl_dagster_pipeline_spark.zip jobs/feature_build.py \
         --input /root/testdata/sf0.1 --output /tmp/ipl_out [--resume]
 
-Stages (each an atomic snapshot commit + lineage append; a rerun resumes from
-the last committed stage — kill it mid-run and start again to see):
+Stages, one ``CheckpointedPipeline.run`` graph (each an atomic snapshot
+commit + lineage append; ``convert`` and ``tool_dim`` run at the same time; a
+rerun resumes from the last committed stage — kill it mid-run and start again
+to see):
 
     convert   events parquet → transcripts (schema-enforced)
     tool_dim  dim snapshots
@@ -43,15 +45,17 @@ def main() -> None:
     spark = get_spark(app_name="ipl-feature-build")
     pipe = CheckpointedPipeline(spark, args.output, force=args.force)
 
-    transcripts = pipe.stage("convert", lambda: transcripts_from_events(spark, args.input))
-    tool_dim = pipe.stage("tool_dim", lambda: tool_dim_from_events(spark, args.input))
-    features = pipe.stage(
-        "features", lambda: build_turn_features(transcripts, tool_dim, gap_seconds=args.gap_seconds)
+    out = pipe.run(
+        convert=lambda: transcripts_from_events(spark, args.input),
+        tool_dim=lambda: tool_dim_from_events(spark, args.input),
+        features=lambda convert, tool_dim: build_turn_features(
+            convert, tool_dim, gap_seconds=args.gap_seconds
+        ),
+        sessions=lambda features: build_session_features(features),
     )
-    pipe.stage("sessions", lambda: build_session_features(features))
 
     publish_dir = os.path.join(args.output, "publish")
-    write_day_partitioned(features, publish_dir)
+    write_day_partitioned(out["features"], publish_dir)
 
     totals = stage_totals(spark, pipe.lineage_path)
     for stage in pipe.completed_stages():

@@ -3,15 +3,27 @@
     spark-submit --py-files ipl_dagster_pipeline_spark.zip jobs/pretrain_prep.py \
         --input /root/testdata/sf0.01 --output /tmp/ipl_pretrain [--force]
 
-One CheckpointedPipeline chaining the full suite — the Spark analog of the
-reference's whole-asset-graph run (pipeline/__init__.py:26-58: every asset
-materialized under one Definitions graph, resumable per asset).  Every stage
-is an atomic snapshot commit with a lineage row; a mid-pipeline
-crash resumes from the last committed stage, and the incremental dedup
-index's own batch-id idempotence makes the index stage crash-safe BETWEEN
-its internal batches too.
+One CheckpointedPipeline stage graph over the full suite — the Spark analog
+of the reference's whole-asset-graph run (pipeline/__init__.py:26-58: every
+asset materialized under one Definitions graph, resumable per asset).  All
+12 stages are declared in one ``CheckpointedPipeline.run`` call; each names
+its inputs by its parameter names, and stages whose inputs have committed
+run at the same time, as the reference's multiprocess executor runs
+independent assets:
 
-Stages (in dependency order):
+    index_pairs → groups ─┐
+    exact ────────────────┼→ curated → budget → mixture ─┬→ imputer ─┐
+    stats → gate ─────────┘                              ├→ clips ───┼→ features
+                                                         └→ scaler ──┘
+
+Every stage is an atomic snapshot commit with a lineage row.  When a stage
+fails, no new stage starts, the running ones finish their commits, and the
+error is raised; a rerun resumes from every committed stage.  The
+incremental dedup index's own batch-id idempotence makes the index stage
+crash-safe BETWEEN its internal batches too.  ``index_pairs`` is the
+longest branch, so it sets the pace of the first half of the run.
+
+Stages:
 
     index_pairs  incremental MinHash-LSH near-dup index built in TWO batches
                  (the daily-cadence path, operators/dedup_index.py): verified
@@ -115,7 +127,7 @@ def main() -> None:
     pipe = CheckpointedPipeline(spark, args.output, force=args.force)
 
     # -- incremental dedup index (two daily-cadence batches) ---------------
-    def _index_pairs():
+    def index_pairs():
         index_root = os.path.join(args.output, "_minhash_index")
         if args.force:
             # the index's own batch-id idempotence would otherwise return the
@@ -130,16 +142,11 @@ def main() -> None:
         idx.add_batch(candidates.filter(F.col("doc_id") % 2 == 1), "b_odd")
         return idx.all_pairs(spark)
 
-    index_pairs = pipe.stage("index_pairs", _index_pairs)
-    exact = pipe.stage("exact", lambda: exact_dedup(candidates))
-
-    def _stats():
+    def stats():
         s = with_lang_id(with_quality_scores(with_token_counts(candidates)))
         return with_bigram_surprisal(with_bpe_token_counts(s))
 
-    stats = pipe.stage("stats", _stats)
-
-    def _gate():
+    def gate(stats):
         g = quality_gate(stats, min_alpha_ratio=args.min_alpha_ratio)
         # 30-char grams (the catalog convention): long enough that only real
         # overlap fires, not the shared small vocabulary of short snippets
@@ -153,10 +160,7 @@ def main() -> None:
             | (F.col("bits_per_bigram") <= args.max_bits_per_bigram),
         )
 
-    gate = pipe.stage("gate", _gate)
-    groups = pipe.stage("groups", lambda: duplicate_groups(index_pairs))
-
-    def _curated():
+    def curated(gate, exact, groups):
         eligible = gate.filter(
             F.col("passes_quality") & ~F.col("contaminated") & F.col("passes_lm")
         )
@@ -164,17 +168,13 @@ def main() -> None:
             eligible, exact, groups, min_alpha_ratio=args.min_alpha_ratio
         )
 
-    curated = pipe.stage("curated", _curated)
-
-    def _budget():
+    def budget(curated):
         return token_budget_select(
             curated, "source", "doc_id", "n_bpe_tokens",
             budgets={}, default_budget=args.token_budget,
         )
 
-    budget = pipe.stage("budget", _budget)
-
-    def _mixture():
+    def mixture(budget):
         mixed = mixture_epochs(
             budget, "source", "doc_id", epochs={}, default_epochs=args.curated_epochs
         )
@@ -185,9 +185,6 @@ def main() -> None:
         )
         return shuffle_shards(keyed, "example_id", args.shards)
 
-    mixture = pipe.stage("mixture", _mixture)
-    train = mixture.where(F.col("fold") == "train")
-
     # -- frozen fits (never refit on resume) + trainer feature table -------
     def _numeric(df):
         return df.select(
@@ -195,16 +192,28 @@ def main() -> None:
             *[F.col(c).cast("double").alias(c) for c in NUM_COLS],
         )
 
-    imputer = pipe.stage("imputer", lambda: impute_fit(_numeric(train), NUM_COLS, "doc_id"))
-    clips = pipe.stage("clips", lambda: clip_fit(_numeric(train), "n_ws_tokens", "doc_id", 1, 99))
-    scaler = pipe.stage("scaler", lambda: standardize_fit(_numeric(train), NUM_COLS))
+    def _train(mixture):
+        return _numeric(mixture.where(F.col("fold") == "train"))
 
-    def _features():
+    def features(mixture, imputer, clips, scaler):
         out = impute_transform(_numeric(mixture), imputer, NUM_COLS)
         out = clip_transform(out, clips, "n_ws_tokens", out_col="n_ws_tokens_winsor")
         return standardize_transform(out, scaler, NUM_COLS)
 
-    features = pipe.stage("features", _features)
+    out = pipe.run(
+        index_pairs=index_pairs,
+        groups=lambda index_pairs: duplicate_groups(index_pairs),
+        exact=lambda: exact_dedup(candidates),
+        stats=stats,
+        gate=gate,
+        curated=curated,
+        budget=budget,
+        mixture=mixture,
+        imputer=lambda mixture: impute_fit(_train(mixture), NUM_COLS, "doc_id"),
+        clips=lambda mixture: clip_fit(_train(mixture), "n_ws_tokens", "doc_id", 1, 99),
+        scaler=lambda mixture: standardize_fit(_train(mixture), NUM_COLS),
+        features=features,
+    )
 
     totals = stage_totals(spark, pipe.lineage_path)
     stage_rows = {}
@@ -212,7 +221,7 @@ def main() -> None:
         rows, checksum = totals.get(stage, (0, 0))
         stage_rows[stage] = rows
         print(f"stage={stage} rows={rows} checksum={checksum}")
-    folds = {r["fold"]: r["n"] for r in mixture.groupBy("fold").agg(F.count("*").alias("n")).collect()}
+    folds = {r["fold"]: r["n"] for r in out["mixture"].groupBy("fold").agg(F.count("*").alias("n")).collect()}
     n_features = stage_rows["features"]
     print(f"mixture folds: {folds}")
     print(f"trainer table: {n_features} rows")

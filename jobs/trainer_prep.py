@@ -11,7 +11,9 @@ lineage-tracked snapshots, not recomputable plan fragments.  Rerun =
 resume: a completed fit is never refit (which would silently move the
 frozen statistics under the trainer).
 
-Stages:
+Stages, one ``CheckpointedPipeline.run`` graph: ``folds`` first, then every
+fit plus ``psi`` and ``corr`` at the same time, ``features`` once the five
+fits have committed:
 
     folds     events + derived numerics (value/plen/hour) + deterministic
               hash fold (train/val/test)
@@ -89,7 +91,7 @@ def main() -> None:
     events = spark.read.parquet(os.path.join(args.input, "events.parquet"))
     pipe = CheckpointedPipeline(spark, args.output, force=args.force)
 
-    def _folds():
+    def folds():
         ev = events.select(
             "event_id",
             "user_id",
@@ -100,16 +102,10 @@ def main() -> None:
         )
         return hash_split(ev, "event_id", out_col="fold")
 
-    folds = pipe.stage("folds", _folds)
-    train = folds.where(F.col("fold") == "train")
+    def _train(folds):
+        return folds.where(F.col("fold") == "train")
 
-    imputer = pipe.stage("imputer", lambda: impute_fit(train, NUM_COLS, "event_id"))
-    clips = pipe.stage("clips", lambda: clip_fit(train, "value", "event_id", 1, 99))
-    scaler = pipe.stage("scaler", lambda: standardize_fit(train, NUM_COLS))
-    edges = pipe.stage("edges", lambda: quantile_bins_fit(train, "value", "event_id", N_BINS))
-    cefit = pipe.stage("cefit", lambda: count_encode_fit(train, "event_type"))
-
-    def _features():
+    def features(folds, imputer, clips, scaler, edges, cefit):
         out = impute_transform(folds, imputer, NUM_COLS)
         out = clip_transform(out, clips, "value", out_col="value_winsor")
         out = standardize_transform(out, scaler, NUM_COLS)
@@ -119,37 +115,44 @@ def main() -> None:
         out = count_encode_transform(out, cefit, "event_type")
         return out
 
-    features = pipe.stage("features", _features)
-
-    def _psi():
+    def psi(folds):
         test = folds.where(F.col("fold") == "test")
         parts = [
-            feature_psi(train, test, c, "event_id", n_bins=N_BINS)
+            feature_psi(_train(folds), test, c, "event_id", n_bins=N_BINS)
             .withColumn("feature", F.lit(c))
             for c in NUM_COLS
         ]
         return reduce(lambda a, b: a.unionByName(b), parts)
 
-    psi = pipe.stage("psi", _psi)
-    pipe.stage("corr", lambda: pairwise_correlations(folds, NUM_COLS))
+    stages = dict(
+        folds=folds,
+        imputer=lambda folds: impute_fit(_train(folds), NUM_COLS, "event_id"),
+        clips=lambda folds: clip_fit(_train(folds), "value", "event_id", 1, 99),
+        scaler=lambda folds: standardize_fit(_train(folds), NUM_COLS),
+        edges=lambda folds: quantile_bins_fit(_train(folds), "value", "event_id", N_BINS),
+        cefit=lambda folds: count_encode_fit(_train(folds), "event_type"),
+        features=features,
+        psi=psi,
+        corr=lambda folds: pairwise_correlations(folds, NUM_COLS),
+    )
     if args.class_cap:
-        pipe.stage(
-            "balanced",
-            lambda: sample_class_cap(train, "event_type", args.class_cap, "event_id"),
+        stages["balanced"] = lambda folds: sample_class_cap(
+            _train(folds), "event_type", args.class_cap, "event_id"
         )
+    out = pipe.run(**stages)
 
     totals = stage_totals(spark, pipe.lineage_path)
     for stage in pipe.completed_stages():
         rows, checksum = totals.get(stage, (0, 0))
         print(f"stage={stage} rows={rows} checksum={checksum}")
     worst = (
-        psi.groupBy("feature")
+        out["psi"].groupBy("feature")
         .agg((F.sum("psi_term_scaled") / F.lit(1e9)).alias("psi"))
         .orderBy(F.desc("psi"))
         .collect()
     )
     print("psi by feature:", {r["feature"]: round(r["psi"], 6) for r in worst})
-    n_feat = len([c for c in features.columns if c not in ("event_id", "user_id", "event_type", "fold")])
+    n_feat = len([c for c in out["features"].columns if c not in ("event_id", "user_id", "event_type", "fold")])
     print(f"feature table: {totals['features'][0]} rows x {n_feat} feature cols")
 
 

@@ -325,6 +325,50 @@ def test_keyed_cumsum_null_group_spans_partitions(spark):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
+@pytest.mark.parametrize("group_type", ["string", "int", "date", "timestamp"])
+def test_keyed_cumsum_offsets_from_arrow_match_window(spark, monkeypatch, group_type):
+    """The offsets frame is built from an Arrow table: the running sums are
+    bit-identical to a window running sum for a NULL stratum in a string,
+    int, date or timestamp group column (the timestamp with the driver in a
+    non-UTC zone, where a collected value is a naive local time), and the
+    executed plan scans the offsets as a LocalTableScan, not a Python RDD."""
+    import time
+
+    from pyspark.sql import Window
+
+    from ipl_dagster_pipeline_spark.operators.packing import with_keyed_cumsum
+
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    try:
+        day = F.date_add(F.lit("2024-03-09").cast("date"), (F.col("id") % 3).cast("int"))
+        group = {
+            "string": F.concat(F.lit("s"), (F.col("id") % 3).cast("string")),
+            "int": (F.col("id") % 4).cast("int"),
+            "date": day,
+            "timestamp": F.to_timestamp(day) + F.expr("INTERVAL 7 HOURS"),
+        }[group_type]
+        df = spark.range(240).select(
+            "id",
+            F.when(F.col("id") % 5 == 0, F.lit(None)).otherwise(group).alias("g"),
+            (F.col("id") % 11).alias("v"),
+        )
+        out = with_keyed_cumsum(df, ["g"], ["id"], "v", out_col="cs", n_partitions=8)
+        got = sorted((r.id, r.cs) for r in out.collect())
+        running = Window.partitionBy("g").orderBy("id").rowsBetween(
+            Window.unboundedPreceding, Window.currentRow
+        )
+        want = sorted(
+            (r.id, r.cs) for r in df.withColumn("cs", F.sum("v").over(running)).collect()
+        )
+        assert got == want
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan and "Scan ExistingRDD" not in plan
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+
+
 def test_keyed_cumsum_guards_data_cardinality_keys(spark):
     """Strata-keys-only contract made loud: keying the prefix sum by a
     data-cardinality column (here: the unique row key itself) must RAISE

@@ -479,6 +479,49 @@ def test_publish_web_asset_gz_sibling(tmp_path):
     assert open(target + ".gz", "rb").read() == gz1
 
 
+def test_publish_web_asset_concurrent_publishers(tmp_path):
+    """Two publishers of one artifact: A's writer pauses after writing its
+    tmp while B publishes.  Each call has its own tmp, so both return, the
+    last rename wins and no tmp file is left behind."""
+    import gzip
+    import json
+    import os
+    import threading
+
+    from ipl_dagster_pipeline_spark.io import publish_web_asset
+
+    target = str(tmp_path / "assets" / "summary.json")
+    a_wrote, b_done = threading.Event(), threading.Event()
+    result: dict = {}
+
+    def slow_writer(tmp):
+        with open(tmp, "w") as fh:
+            json.dump({"by": "a"}, fh)
+        a_wrote.set()
+        assert b_done.wait(30)
+
+    def publish_a():
+        try:
+            result["a"] = publish_web_asset(target, write_fn=slow_writer)
+        except Exception as err:  # noqa: BLE001 — asserted below
+            result["a"] = err
+
+    t = threading.Thread(target=publish_a)
+    t.start()
+    assert a_wrote.wait(30)
+    result["b"] = publish_web_asset(target, content={"by": "b"})
+    b_done.set()
+    t.join(30)
+    assert not t.is_alive()
+    assert not isinstance(result["a"], Exception), result["a"]
+    assert result["a"]["path"] == result["b"]["path"] == target
+    with open(target) as fh:
+        assert json.load(fh) == {"by": "a"}  # A renamed last
+    with gzip.open(target + ".gz") as fh:
+        assert json.load(fh) == {"by": "a"}
+    assert sorted(os.listdir(tmp_path / "assets")) == ["summary.json", "summary.json.gz"]
+
+
 def test_morton_zorder_layout(spark, tmp_path):
     """Z-order clustering: the Morton code round-trips (de-interleaving
     recovers the clamped inputs), NULL dims yield NULL codes, and the
