@@ -20,6 +20,17 @@ concurrently running pipelines should wrap its work in
 are released at scope exit and never touch the global registry, so one
 pipeline's release can't unpersist a frame another thread still reads.
 Unscoped use keeps the original single-pipeline-at-a-time semantics.
+
+Spark's cache is keyed by query plan, not by DataFrame object: a second
+persist of a plan that is already cached is a no-op, and unpersisting
+EITHER frame drops the one shared entry.  Two concurrent stages that run
+the same fit (``trainer_prep``'s ``edges`` and ``psi`` both persist the
+same prefix-sum local) would otherwise lose the cache under the slower
+one, which then recomputes it through a fresh range shuffle whose sampled
+bounds need not match the offsets it already collected.  So every
+registration holds the shared entry: persists of semantically equal plans
+(``DataFrame.sameSemantics``, the match Spark's cache uses) count as holders
+of one entry, and a release unpersists only when the last holder lets go.
 """
 
 from __future__ import annotations
@@ -34,19 +45,31 @@ from pyspark.sql import DataFrame
 _LOCK = threading.Lock()
 _TRACKED: list[DataFrame] = []
 _SCOPES = threading.local()  # .stack: list[list[DataFrame]] per thread
+# semanticHash -> [[first frame persisted with that plan, holders], ...]:
+# one entry per shared Spark cache entry, guarded by _LOCK
+_HOLDS: dict[int, list[list]] = {}
 
 
 def tracked_persist(df: DataFrame, storage_level: StorageLevel | None = None) -> DataFrame:
     """Persist ``df`` and register it for a later bulk release.
 
     Registers with the innermost active :func:`tracked_scope` on this thread
-    if one exists, else with the process-global registry."""
-    out = df.persist(storage_level or StorageLevel.MEMORY_AND_DISK)
-    stack = getattr(_SCOPES, "stack", None)
-    if stack:
-        stack[-1].append(out)
-    else:
-        with _LOCK:
+    if one exists, else with the process-global registry.  A plan another
+    live registration already persisted adds a holder to that cache entry
+    instead of a second entry (see the module docstring)."""
+    h = df.semanticHash()  # analyzes the plan outside the lock
+    with _LOCK:
+        out = df.persist(storage_level or StorageLevel.MEMORY_AND_DISK)
+        entries = _HOLDS.setdefault(h, [])
+        held = _held(entries, out)
+        if held is None:
+            entries.append([out, 1])
+        else:
+            held[1] += 1
+        stack = getattr(_SCOPES, "stack", None)
+        if stack:
+            stack[-1].append(out)
+        else:
             _TRACKED.append(out)
     return out
 
@@ -54,12 +77,43 @@ def tracked_persist(df: DataFrame, storage_level: StorageLevel | None = None) ->
 def _release(frames: list[DataFrame], blocking: bool) -> int:
     n = 0
     while frames:
+        frame = frames.pop()
         try:
-            frames.pop().unpersist(blocking)
+            # under the lock: a sibling's persist of the same plan either
+            # lands before (and keeps the entry held) or after the unpersist
+            with _LOCK:
+                if _let_go(frame):
+                    frame.unpersist(blocking)
         except Exception:  # session already stopped — nothing to release
             pass
         n += 1
     return n
+
+
+def _held(entries: list[list], frame: DataFrame) -> list | None:
+    """The entry whose cache entry ``frame`` shares: same SparkContext (one
+    cache manager) and the same plan by Spark's own cache match."""
+    sc = frame.sparkSession.sparkContext
+    return next(
+        (e for e in entries if e[0].sparkSession.sparkContext is sc and e[0].sameSemantics(frame)),
+        None,
+    )
+
+
+def _let_go(frame: DataFrame) -> bool:
+    """Drop one holder of ``frame``'s cache entry; True when it was the last."""
+    h = frame.semanticHash()
+    entries = _HOLDS.get(h, [])
+    held = _held(entries, frame)
+    if held is None:  # not registered: release it as before
+        return True
+    held[1] -= 1
+    if held[1]:
+        return False
+    entries.remove(held)
+    if not entries:
+        del _HOLDS[h]
+    return True
 
 
 def release_tracked(blocking: bool = False) -> int:

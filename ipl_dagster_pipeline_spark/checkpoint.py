@@ -23,6 +23,7 @@ import inspect
 import os
 from collections.abc import Callable
 from concurrent.futures import FIRST_COMPLETED, Future, ThreadPoolExecutor, wait
+from graphlib import TopologicalSorter
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.util import inheritable_thread_target
@@ -69,9 +70,11 @@ class CheckpointedPipeline:
     checkpoint root.  Each stage commits to its own table directory and
     appends its own uniquely named lineage file; each stage's persisted
     intermediates belong to a ``caching.tracked_scope`` on its own thread,
-    so one stage's release never unpersists a frame a sibling still reads.
-    Stage callables must not mutate session-wide state (``spark.conf``,
-    temp views) that a sibling reads.
+    and a frame whose plan a sibling also persisted (two stages running the
+    same fit persist one shared Spark cache entry) stays cached until the
+    last of them releases it, so one stage's release never unpersists a
+    frame a sibling still reads.  Stage callables must not mutate
+    session-wide state (``spark.conf``, temp views) that a sibling reads.
     """
 
     def __init__(self, spark: SparkSession, root: str, force: bool = False) -> None:
@@ -141,12 +144,8 @@ class CheckpointedPipeline:
             unknown = [i for i in ins if i not in stages]
             if unknown:
                 raise ValueError(f"stage {name!r} reads unknown stage(s) {unknown}")
-        resolved: set[str] = set()
-        while len(resolved) < len(inputs):
-            ready = {n for n, ins in inputs.items() if n not in resolved and resolved.issuperset(ins)}
-            if not ready:
-                raise ValueError(f"stage graph has a cycle through {sorted(set(inputs) - resolved)}")
-            resolved |= ready
+        graph = TopologicalSorter(inputs)
+        graph.prepare()  # a cycle raises graphlib.CycleError, a ValueError
 
         done: dict[str, DataFrame] = {}
         running: dict[Future, str] = {}
@@ -154,14 +153,12 @@ class CheckpointedPipeline:
         with ThreadPoolExecutor(max_workers=len(stages), thread_name_prefix="stage") as pool:
 
             def start_ready() -> None:
-                started = set(done) | set(running.values())
-                for n in inputs:
-                    if n not in started and all(i in done for i in inputs[n]):
-                        fn, args = stages[n], {i: done[i] for i in inputs[n]}
-                        # wrapped here, on the caller's thread: the wrapper
-                        # copies the caller's local properties when created
-                        target = inheritable_thread_target(self.spark)(self.stage)
-                        running[pool.submit(target, n, lambda fn=fn, args=args: fn(**args))] = n
+                for n in graph.get_ready():
+                    fn, args = stages[n], {i: done[i] for i in inputs[n]}
+                    # wrapped here, on the caller's thread: the wrapper
+                    # copies the caller's local properties when created
+                    target = inheritable_thread_target(self.spark)(self.stage)
+                    running[pool.submit(target, n, lambda fn=fn, args=args: fn(**args))] = n
 
             start_ready()
             while running:
@@ -170,6 +167,7 @@ class CheckpointedPipeline:
                     name = running.pop(fut)
                     try:
                         done[name] = fut.result()
+                        graph.done(name)
                     except BaseException as err:  # noqa: BLE001 — re-raised below
                         error = error or err
                 if error is None:

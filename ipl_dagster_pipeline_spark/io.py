@@ -499,11 +499,16 @@ def publish_web_asset(
     ``write_fn(tmp_path) -> None`` must be given; ``tmp_path`` (and the
     ``.gz`` sibling's tmp) is a hidden file unique to this call in the target
     directory, so concurrent publishers of one artifact never rename each
-    other's tmp away — the last rename wins.  A failed writer leaves no
-    partial files.  The ``.gz`` sibling is renamed into place FIRST and the
-    main file second — the main rename is the commit point; if it fails the
-    stale ``.gz`` is removed so consumers fall back to the uncompressed
-    asset rather than being served mismatched encodings.  A process crash
+    other's tmp away and each call publishes a whole file.  Their renames
+    are not ordered as pairs, though: when two publishers of different
+    bytes interleave (A's ``.gz``, B's ``.gz``, B's main, A's main), the
+    main file is A's and the ``.gz`` B's until the next publish — serialize
+    publishers of one artifact when they may publish different bytes.  A
+    failed writer leaves no partial files.  The ``.gz`` sibling is renamed
+    into place FIRST and the main file second — the main rename is the
+    commit point; if it fails the stale ``.gz`` is removed so consumers
+    fall back to the uncompressed asset rather than being served
+    mismatched encodings by a failed publish.  A process crash
     exactly between the two renames leaves a newer ``.gz`` beside the old
     main file until the next publish — the same bounded window the
     reference's publish has (urllib.py:110-113); only single-file artifacts

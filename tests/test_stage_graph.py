@@ -6,11 +6,13 @@ from __future__ import annotations
 
 import os
 import threading
+import time
 import uuid
 
 import pytest
 import pyspark.sql.functions as F
 
+from ipl_dagster_pipeline_spark.caching import tracked_persist
 from ipl_dagster_pipeline_spark.checkpoint import CheckpointedPipeline
 from ipl_dagster_pipeline_spark.io import SnapshotTable
 
@@ -30,6 +32,43 @@ def test_independent_stages_overlap(spark, tmp_path):
     out = pipe.run(a=lambda: meet(3), b=lambda: meet(5))
     assert {k: v.count() for k, v in out.items()} == {"a": 3, "b": 5}
     assert pipe.completed_stages() == ["a", "b"]
+
+
+def test_sibling_release_keeps_a_shared_plan_cached(spark, tmp_path):
+    """Two concurrent stages persist the same plan, as two stages running
+    the same fit do; Spark keeps one cache entry for both.  When the first
+    stage has committed (and released its scope), the entry must still be
+    cached for the sibling that reads it."""
+    both_persisted = threading.Barrier(2, timeout=WAIT_S)
+    cached_after_a: list[bool] = []
+    pipe = CheckpointedPipeline(spark, str(tmp_path / "ckpt"))
+
+    def fit():
+        local = tracked_persist(spark.range(60).selectExpr("id % 5 AS k", "id AS v"))
+        local.count()
+        both_persisted.wait()
+        return local
+
+    def a():
+        return fit().groupBy("k").count()
+
+    def b():
+        local = fit()
+        # a's lineage row is appended after its scope released its frames
+        lineage = pipe.lineage_path
+        deadline = time.monotonic() + WAIT_S
+        while not (os.path.isdir(lineage) and any(
+            f.endswith(".parquet") and not f.startswith(".") for f in os.listdir(lineage)
+        )):
+            assert time.monotonic() < deadline, "stage a never committed"
+            time.sleep(0.05)
+        cached_after_a.append(local.storageLevel.useMemory)
+        return local.groupBy("k").agg(F.sum("v").alias("v"))
+
+    out = pipe.run(a=a, b=b)
+    assert cached_after_a == [True]
+    assert out["b"].count() == 5
+    assert not spark.range(60).selectExpr("id % 5 AS k", "id AS v").storageLevel.useMemory
 
 
 def test_dependent_stage_reads_committed_input(spark, tmp_path):
@@ -136,4 +175,6 @@ def test_caller_job_group_covers_every_stage(spark, tmp_path, monkeypatch):
     bus.waitUntilEmpty()
     assert groups_at_commit == {"a": group, "b": group, "c": group}
     assert len(sc.statusTracker().getJobIdsForGroup(group)) >= 3
-    assert set(sc.statusTracker().getJobIdsForGroup(None)) == ungrouped
+    # a subset, not equality: the tracker drops its oldest jobs in batches
+    # once it holds spark.ui.retainedJobs, and the run may cross that line
+    assert set(sc.statusTracker().getJobIdsForGroup(None)) <= ungrouped
