@@ -6,10 +6,11 @@ Within one query that is correct and necessary — but in a long-lived session
 (bench reruns, streaming foreachBatch, the multi-stage curation job) the
 blocks would pin executor storage until LRU eviction.
 
-Every operator persist goes through :func:`tracked_persist`; after the
-action that consumes a stage, the caller releases everything with
-:func:`release_tracked` (the checkpointed pipeline does this automatically
-per stage).  Reference precedent for explicit resource hygiene at stage
+Every operator persist goes through :func:`tracked_persist`, always at
+``MEMORY_AND_DISK`` (what executor memory cannot hold spills to
+``spark.local.dir`` instead of being recomputed); after the action that
+consumes a stage, the caller releases everything with :func:`release_tracked`
+(the checkpointed pipeline does this automatically per stage).  Reference precedent for explicit resource hygiene at stage
 boundaries: the io-manager closes its COPY buffers per publish
 (postgis_geopandas_io_manager.py:96-107).
 
@@ -50,8 +51,9 @@ _SCOPES = threading.local()  # .stack: list[list[DataFrame]] per thread
 _HOLDS: dict[int, list[list]] = {}
 
 
-def tracked_persist(df: DataFrame, storage_level: StorageLevel | None = None) -> DataFrame:
-    """Persist ``df`` and register it for a later bulk release.
+def tracked_persist(df: DataFrame) -> DataFrame:
+    """Persist ``df`` (``MEMORY_AND_DISK``) and register it for a later
+    bulk release.
 
     Registers with the innermost active :func:`tracked_scope` on this thread
     if one exists, else with the process-global registry.  A plan another
@@ -59,7 +61,7 @@ def tracked_persist(df: DataFrame, storage_level: StorageLevel | None = None) ->
     instead of a second entry (see the module docstring)."""
     h = df.semanticHash()  # analyzes the plan outside the lock
     with _LOCK:
-        out = df.persist(storage_level or StorageLevel.MEMORY_AND_DISK)
+        out = df.persist(StorageLevel.MEMORY_AND_DISK)
         entries = _HOLDS.setdefault(h, [])
         held = _held(entries, out)
         if held is None:

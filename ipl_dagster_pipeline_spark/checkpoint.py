@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.util import inheritable_thread_target
 
 from .caching import tracked_scope
-from .io import SnapshotTable, _write_json, as_read_back
+from .io import SnapshotTable, _write_json
 from .metrics import append_lineage, observation_result, observe_stage
 
 
@@ -92,12 +92,7 @@ class CheckpointedPipeline:
             return True  # external (non-Spark) stage — see external_stage
         return self.table(stage).current_snapshot_id() is not None
 
-    def stage(
-        self,
-        name: str,
-        fn: Callable[[], DataFrame],
-        partition_by: list[str] | None = None,
-    ) -> DataFrame:
+    def stage(self, name: str, fn: Callable[[], DataFrame]) -> DataFrame:
         """Run (or resume) a stage: if a committed snapshot exists, read it
         back; otherwise compute and commit atomically, and return the
         committed snapshot (so downstream stages always consume the durable
@@ -118,10 +113,8 @@ class CheckpointedPipeline:
         # (not the global registry) owns the frames, so a concurrent pipeline
         # in the same session can't have its caches yanked by this stage
         with tracked_scope():
-            # observe the rows as they read back, so the checksum equals a
-            # recount of the committed snapshot (io.as_read_back)
-            df, obs = observe_stage(as_read_back(fn(), partition_by), name)
-            snap_id = tbl.commit(df, partition_by=partition_by, observation=obs)
+            df, obs = observe_stage(fn(), name)
+            snap_id = tbl.commit(df, observation=obs)
         self._lineage(name, snap_id, observation_result(obs))
         return tbl.read(self.spark)
 

@@ -22,17 +22,17 @@ Manifest fields (``_manifests/{snapshot_id:012d}.json``):
 * ``data_dir`` — the parquet directory this commit wrote.
 * ``mode`` — ``overwrite`` starts a new table state; ``append`` adds
   ``data_dir`` to the parent's state.
-* ``partition_by`` — hive partition columns of ``data_dir`` (may be empty).
 * ``committed_at`` — epoch seconds.
 * ``meta`` — caller tags: each value a JSON scalar or a list of them.
-* ``schema`` — the written frame's schema as Spark JSON, forced nullable and
-  in read order (partition columns last, in ``partition_by`` order).  Every
-  read passes it to ``spark.read.schema``, so no read starts a
-  schema-inference job.
+* ``schema`` — the written frame's schema as Spark JSON, forced nullable
+  (what a parquet scan reports).  Every read passes it to
+  ``spark.read.schema``, so no read starts a schema-inference job.
   Manifests written before this field existed fall back to inference.
 * ``files`` — ``[{path, rows}]``: each data file, relative to ``data_dir``,
   with its row count from the parquet footer (Iceberg's per-data-file
   ``record_count``).
+
+Older manifests may also carry a ``partition_by`` field; reads ignore it.
 
 Tags (``SnapshotTable.tags(key)``) are how a writer makes a replay
 idempotent: it commits ``meta={key: value}`` and, before writing again,
@@ -65,7 +65,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .metrics import observation_result
+from .metrics import _row_checksum, observation_result
 
 
 def _as_nullable(dt):
@@ -88,30 +88,6 @@ def _as_nullable(dt):
             "valueContainsNull": True,
         }
     return dt
-
-
-def as_read_back(df: DataFrame, partition_by: list[str] | None = None) -> DataFrame:
-    """``df`` as a parquet scan reads it back once written with
-    ``partition_by``: partition columns last, in ``partition_by`` order, and
-    an empty-string partition value null (Spark writes both to the default
-    partition).  Writing this frame gives the same files as writing ``df``."""
-    if not partition_by:
-        return df
-    kinds = dict(df.dtypes)
-
-    def part(c: str):
-        return F.when(F.col(c) != "", F.col(c)).alias(c) if kinds[c] == "string" else F.col(c)
-
-    return df.select(
-        *[F.col(c) for c in df.columns if c not in partition_by],
-        *[part(c) for c in partition_by],
-    )
-
-
-def _read_schema(df: DataFrame, partition_by: list[str] | None = None) -> dict:
-    """The schema a parquet scan of ``df`` written with ``partition_by``
-    reports, as Spark JSON: forced nullable, partition columns last."""
-    return _as_nullable(as_read_back(df, partition_by).schema.jsonValue())
 
 
 def footer_rows(data_dir: str) -> list[dict]:
@@ -176,7 +152,6 @@ class SnapshotTable:
         self,
         df: DataFrame,
         mode: str = "overwrite",
-        partition_by: list[str] | None = None,
         meta: dict | None = None,
         observation: Observation | None = None,
     ) -> int:
@@ -197,10 +172,7 @@ class SnapshotTable:
         """
         snap_id = self._next_snapshot_id()
         data_dir = os.path.join(self.root, f"snap-{snap_id}-{uuid.uuid4().hex[:8]}")
-        writer = df.write.mode("errorifexists")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(data_dir)
+        df.write.mode("errorifexists").parquet(data_dir)
 
         try:
             files = footer_rows(data_dir)
@@ -219,11 +191,10 @@ class SnapshotTable:
             "snapshot_id": snap_id,
             "data_dir": data_dir,
             "mode": mode,
-            "partition_by": partition_by or [],
             "committed_at": time.time(),
             "parent": self.current_snapshot_id(),
             "meta": meta or {},
-            "schema": _read_schema(df, partition_by),
+            "schema": _as_nullable(df.schema.jsonValue()),
             "files": files,
         }
         _write_json(os.path.join(self.manifest_dir, f"{snap_id:012d}.json"), manifest)  # the commit
@@ -253,18 +224,21 @@ class SnapshotTable:
         with open(os.path.join(self.manifest_dir, f"{snap_id:012d}.json")) as fh:
             return json.load(fh)
 
-    def _state_dirs(self, snap_id: int) -> list[str]:
-        """Data dirs composing the table state AT ``snap_id``: walk the parent
-        chain back through append snapshots to the last overwrite."""
-        dirs: list[str] = []
+    def _chain(self, snap_id: int) -> list[dict]:
+        """Manifests composing the table state AT ``snap_id``, oldest first:
+        the parent chain back through append snapshots to the last
+        overwrite."""
+        chain: list[dict] = []
         cur: int | None = snap_id
         while cur is not None:
             m = self._manifest(cur)
-            dirs.append(m["data_dir"])
-            if m.get("mode", "overwrite") != "append":
-                break
-            cur = m.get("parent")
-        return list(reversed(dirs))
+            chain.append(m)
+            cur = m.get("parent") if m.get("mode", "overwrite") == "append" else None
+        return chain[::-1]
+
+    def _state_dirs(self, snap_id: int) -> list[str]:
+        """Data dirs composing the table state AT ``snap_id``."""
+        return [m["data_dir"] for m in self._chain(snap_id)]
 
     def read(self, spark: SparkSession, snapshot_id: int | None = None) -> DataFrame:
         """Table state at a snapshot: the last overwrite plus all appends
@@ -322,17 +296,9 @@ class SnapshotTable:
         if keep_last < 1:
             raise ValueError("keep_last must be >= 1")
         snaps = self._ids()
-        kept = set(snaps[-keep_last:])
-        needed_dirs: set[str] = set()
-        needed_ids: set[int] = set()
-        for s in kept:
-            cur: int | None = s
-            while cur is not None:
-                m = self._manifest(cur)
-                needed_ids.add(cur)
-                needed_dirs.add(m["data_dir"])
-                cur = m.get("parent") if m.get("mode", "overwrite") == "append" else None
-        expired = [s for s in snaps if s not in needed_ids]
+        needed = {m["snapshot_id"]: m["data_dir"] for s in snaps[-keep_last:] for m in self._chain(s)}
+        needed_dirs = set(needed.values())
+        expired = [s for s in snaps if s not in needed]
         if expired:
             folded = self._folded_tags()
             for s in expired:
@@ -349,12 +315,7 @@ class SnapshotTable:
                 deleted += 1
         return {"expired_manifests": len(expired), "deleted_dirs": deleted}
 
-    def compact(
-        self,
-        spark: SparkSession,
-        target_files: int,
-        partition_by: list[str] | None = None,
-    ) -> int:
+    def compact(self, spark: SparkSession, target_files: int) -> int:
         """Rewrite the current state as ONE overwrite snapshot with
         ``target_files`` balanced files — the small-file compaction an
         append-per-batch table needs (each append is its own parquet dir; at
@@ -367,9 +328,7 @@ class SnapshotTable:
         documents, and appends AFTER the compaction chain off it normally.
         """
         state = self.read(spark).repartition(target_files)
-        return self.commit(
-            state, mode="overwrite", partition_by=partition_by, meta={"compaction": True}
-        )
+        return self.commit(state, mode="overwrite", meta={"compaction": True})
 
     def read_incremental(self, spark: SparkSession, start_snapshot_id: int) -> DataFrame:
         """Rows changed strictly after ``start_snapshot_id`` — the Iceberg
@@ -391,22 +350,11 @@ class SnapshotTable:
         return _scan(spark, [m["data_dir"] for m in manifests], manifests[-1].get("schema"))
 
 
-def write_day_partitioned(df: DataFrame, path: str, ts_col: str = "ts", mode: str = "overwrite") -> None:
-    """Write hive-layout ``day=…`` partitions; with the session's dynamic
-    partitionOverwriteMode, re-running a backfill replaces only the days
-    present in ``df`` (idempotent K2)."""
-    df.withColumn("day", F.to_date(F.col(ts_col))).write.mode(mode).partitionBy("day").parquet(path)
-
-
-def read_day_range(spark: SparkSession, path: str, start_day: str | None = None, end_day: str | None = None) -> DataFrame:
-    """Partition-pruned scan: the day predicates prune directories, the
-    analog of the reference's hour-directory probe (webcam_worker.py:154-172)."""
-    df = spark.read.parquet(path)
-    if start_day:
-        df = df.filter(F.col("day") >= F.lit(start_day))
-    if end_day:
-        df = df.filter(F.col("day") <= F.lit(end_day))
-    return df
+def write_day_partitioned(df: DataFrame, path: str) -> None:
+    """Write hive-layout ``day=…`` partitions of ``df``'s ``ts`` day; with the
+    session's dynamic partitionOverwriteMode, re-running a backfill replaces
+    only the days present in ``df`` (idempotent K2)."""
+    df.withColumn("day", F.to_date(F.col("ts"))).write.mode("overwrite").partitionBy("day").parquet(path)
 
 
 def snapshot_diff(
@@ -432,8 +380,6 @@ def snapshot_diff(
     tables already carry); duplicate keys raise rather than silently
     producing a many-to-many diff.
     """
-    from pyspark.sql import functions as F
-
     a = table.read(spark, snapshot_id=from_snapshot_id)
     b = table.read(spark, snapshot_id=to_snapshot_id)
     if set(a.columns) != set(b.columns):
@@ -443,12 +389,9 @@ def snapshot_diff(
     val_cols = sorted(c for c in a.columns if c not in key_cols)
 
     def _digest(df: DataFrame, tag: str) -> DataFrame:
-        out = df.select(
-            *key_cols,
-            F.crc32(
-                F.to_json(F.struct(*[F.col(c) for c in val_cols])).cast("binary")
-            ).alias(f"__crc_{tag}"),
-        )
+        # the lineage row checksum of the value columns, evaluated on df
+        crc = _row_checksum(df.select(*val_cols))
+        out = df.select(*key_cols, crc.alias(f"__crc_{tag}"))
         dup = out.groupBy(*key_cols).count().filter(F.col("count") > 1)
         if dup.head(1):
             raise ValueError(
@@ -475,11 +418,10 @@ def publish_web_asset(
     final_path: str,
     content: bytes | str | dict | None = None,
     write_fn=None,
-    precompressed: bool = True,
     source_mtime: float | None = None,
 ) -> dict:
     """Atomically publish a small non-parquet artifact (JSON summary,
-    GeoJSON layer, …) with an optional precompressed ``.gz`` sibling —
+    GeoJSON layer, …) with a precompressed ``.gz`` sibling —
     the K4 publish discipline for web assets.
 
     Reference parity: the web-asset path writes tmp → rename with a gzipped
@@ -539,20 +481,18 @@ def publish_web_asset(
 
         mtime = source_mtime if source_mtime is not None else os.stat(tmp).st_mtime
         os.utime(tmp, (mtime, mtime))
-        gz_tmp = gz_final = None
-        if precompressed:
-            gz_tmp, gz_final = tmp + ".gz", final_path + ".gz"
-            with open(tmp, "rb") as f_in, open(gz_tmp, "wb") as f_raw:
-                # pin the gzip-header mtime (and strip the filename) so the
-                # sibling is a pure function of the artifact bytes + mtime
-                with gzip.GzipFile(filename="", mode="wb", fileobj=f_raw, mtime=mtime) as f_out:
-                    shutil.copyfileobj(f_in, f_out)
-            os.utime(gz_tmp, (mtime, mtime))
-            os.replace(gz_tmp, gz_final)  # sibling first …
+        gz_tmp, gz_final = tmp + ".gz", final_path + ".gz"
+        with open(tmp, "rb") as f_in, open(gz_tmp, "wb") as f_raw:
+            # pin the gzip-header mtime (and strip the filename) so the
+            # sibling is a pure function of the artifact bytes + mtime
+            with gzip.GzipFile(filename="", mode="wb", fileobj=f_raw, mtime=mtime) as f_out:
+                shutil.copyfileobj(f_in, f_out)
+        os.utime(gz_tmp, (mtime, mtime))
+        os.replace(gz_tmp, gz_final)  # sibling first …
         try:
             os.replace(tmp, final_path)  # … main rename is the commit point
         except BaseException:
-            if precompressed and os.path.exists(gz_final):
+            if os.path.exists(gz_final):
                 os.remove(gz_final)  # never serve a .gz newer than the main file
             raise
     except BaseException:
@@ -560,8 +500,9 @@ def publish_web_asset(
             if os.path.exists(p):
                 os.remove(p)
         raise
-    out = {"path": final_path, "bytes": os.path.getsize(final_path)}
-    if precompressed:
-        out["gz_path"] = gz_final
-        out["gz_bytes"] = os.path.getsize(gz_final)
-    return out
+    return {
+        "path": final_path,
+        "gz_path": gz_final,
+        "bytes": os.path.getsize(final_path),
+        "gz_bytes": os.path.getsize(gz_final),
+    }

@@ -221,9 +221,11 @@ def append_lineage(rows: list[dict], lineage_path: str) -> None:
     os.replace(tmp, os.path.join(lineage_path, name))
 
 
-def _snapshot_totals(spark, lineage_path: str) -> dict[tuple[str, int], tuple[int, int]]:
-    """(rows, checksum) summed per (stage, snapshot_id): one aggregation
-    over the whole lineage table, read under its declared schema."""
+def stage_totals(spark, lineage_path: str) -> dict[str, tuple[int, int]]:
+    """Reconcile every stage at once: ``{stage: (rows, checksum)}`` summed
+    over each stage's LATEST snapshot — summing all history would
+    double-count recomputed stages.  One aggregation over the whole lineage
+    table, read under its declared schema."""
     from .schema import LINEAGE_SCHEMA
 
     if not os.path.isdir(lineage_path):
@@ -234,25 +236,14 @@ def _snapshot_totals(spark, lineage_path: str) -> dict[tuple[str, int], tuple[in
         .agg(F.sum("row_count").alias("r"), F.sum("checksum").alias("c"))
         .collect()
     )
-    return {(r["stage"], r["snapshot_id"]): (int(r["r"]), int(r["c"])) for r in rows}
-
-
-def stage_totals(spark, lineage_path: str) -> dict[str, tuple[int, int]]:
-    """Reconcile every stage at once: ``{stage: (rows, checksum)}`` at each
-    stage's LATEST snapshot — summing all history would double-count
-    recomputed stages."""
     latest: dict[str, tuple[int, tuple[int, int]]] = {}
-    for (stage, snap), totals in _snapshot_totals(spark, lineage_path).items():
-        if stage not in latest or snap > latest[stage][0]:
-            latest[stage] = (snap, totals)
+    for r in rows:
+        if r["stage"] not in latest or r["snapshot_id"] > latest[r["stage"]][0]:
+            latest[r["stage"]] = (r["snapshot_id"], (int(r["r"]), int(r["c"])))
     return {stage: totals for stage, (_, totals) in latest.items()}
 
 
-def total_from_lineage(
-    spark, lineage_path: str, stage: str, snapshot_id: int | None = None
-) -> tuple[int, int]:
+def total_from_lineage(spark, lineage_path: str, stage: str) -> tuple[int, int]:
     """One stage of :func:`stage_totals`: (total rows, total checksum) at the
-    requested snapshot (default: the stage's latest); (0, 0) if absent."""
-    if snapshot_id is None:
-        return stage_totals(spark, lineage_path).get(stage, (0, 0))
-    return _snapshot_totals(spark, lineage_path).get((stage, snapshot_id), (0, 0))
+    stage's latest snapshot; (0, 0) if absent."""
+    return stage_totals(spark, lineage_path).get(stage, (0, 0))

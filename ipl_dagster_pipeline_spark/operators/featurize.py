@@ -214,7 +214,6 @@ def quantile_bins_fit(
     col: str,
     key_col: str,
     n_bins: int,
-    n_partitions: int | None = None,
 ) -> DataFrame:
     """One-row frame of frozen bin edges ``be_<col>_1 … be_<col>_{n_bins-1}``
     — the exact type-1 lower-rank quantile ELEMENTS of ``col`` at ranks
@@ -234,7 +233,7 @@ def quantile_bins_fit(
         raise ValueError(f"n_bins must be >= 2, got {n_bins}")
     return _rank_elements(
         train.where(F.col(col).isNotNull()), [], col, key_col,
-        {f"be_{col}_{i}": (i, n_bins) for i in range(1, n_bins)}, n_partitions,
+        {f"be_{col}_{i}": (i, n_bins) for i in range(1, n_bins)},
     ).drop("__n")
 
 
@@ -266,54 +265,28 @@ def quantile_bins_transform(
     return out.drop(*[f"be_{col}_{i}" for i in range(1, n_bins)])
 
 
-def impute_fit(
-    train: DataFrame,
-    cols: list[str],
-    key_col: str,
-    strategy: str = "median",
-    n_partitions: int | None = None,
-) -> DataFrame:
-    """One-row frame of frozen fill values ``imp_<c>`` for ``cols`` — fit on
-    the frame you pass (the TRAIN fold), applied anywhere, like every fit in
-    this module.
+def impute_fit(train: DataFrame, cols: list[str], key_col: str) -> DataFrame:
+    """One-row frame of frozen median fill values ``imp_<c>`` for ``cols`` —
+    fit on the frame you pass (the TRAIN fold), applied anywhere, like every
+    fit in this module.
 
-    ``median`` selects the exact type-1 lower-rank median ELEMENT (the
-    2-bin edge of :func:`quantile_bins_fit` — integer rank arithmetic,
-    deterministic at any parallelism) of every column in ONE ranking: the
+    Each value is the exact type-1 lower-rank median ELEMENT (the 2-bin
+    edge of :func:`quantile_bins_fit` — integer rank arithmetic,
+    deterministic at any parallelism), all columns in ONE ranking: the
     non-NULL values are stacked into ``(__c, __v, key)`` rows, ranked per
     column name, and folded back into ``imp_<c>`` in ``cols`` order, each
     cast back to its input type.  Same-typed columns rank in their own
     type; a mixed integral/floating set ranks as DOUBLE (Spark's common
-    type), exact for integral values within ±2^53.  ``mean`` is the exact
-    integer milli quotient ``(Σ milli) DIV n`` divided by 1000 — no float
-    accumulation.  An empty or all-NULL fit leaves the fill value NULL
-    (transform then keeps NULLs — nothing to impute FROM is a loud
-    downstream signal, not a silent zero)."""
-    if strategy not in ("median", "mean"):
-        raise ValueError(f"strategy must be 'median' or 'mean', got {strategy!r}")
-    if strategy == "median":
-        stacked = _stack(train, cols, key_col).where(F.col("__v").isNotNull())
-        med = _rank_elements(stacked, ["__c"], "__v", key_col, {"__med": (1, 2)}, n_partitions)
-        dtypes = {f.name: f.dataType for f in train.schema.fields}
-        return med.agg(*[
-            F.max(F.when(F.col("__c") == c, F.col("__med"))).cast(dtypes[c]).alias(f"imp_{c}")
-            for c in cols
-        ])
-    aggs = []
-    for c in cols:
-        v = value_milli(F.col(c))
-        # greatest(count, 1): ANSI evaluates the discarded CASE branch too —
-        # a 0 denominator would raise on an empty fit (same hazard as
-        # zscore_expr)
-        aggs.append(
-            F.when(
-                F.count(v) > 0,
-                (F.expr(f"CAST(sum(CAST(round({c} * 1000) AS BIGINT)) DIV "
-                        f"greatest(count(CAST(round({c} * 1000) AS BIGINT)), 1) AS BIGINT)")
-                 .cast("double") / F.lit(1000.0)),
-            ).alias(f"imp_{c}")
-        )
-    return train.agg(*aggs)
+    type), exact for integral values within ±2^53.  An empty or all-NULL
+    fit leaves the fill value NULL (transform then keeps NULLs — nothing to
+    impute FROM is a loud downstream signal, not a silent zero)."""
+    stacked = _stack(train, cols, key_col).where(F.col("__v").isNotNull())
+    med = _rank_elements(stacked, ["__c"], "__v", key_col, {"__med": (1, 2)})
+    dtypes = {f.name: f.dataType for f in train.schema.fields}
+    return med.agg(*[
+        F.max(F.when(F.col("__c") == c, F.col("__med"))).cast(dtypes[c]).alias(f"imp_{c}")
+        for c in cols
+    ])
 
 
 def impute_transform(
@@ -335,7 +308,6 @@ def clip_fit(
     key_col: str,
     lo_percent: int = 1,
     hi_percent: int = 99,
-    n_partitions: int | None = None,
 ) -> DataFrame:
     """One-row frame of frozen winsorization bounds ``clip_lo``/``clip_hi``
     — the exact lower-rank quantile ELEMENTS of ``col`` at the given
@@ -346,7 +318,7 @@ def clip_fit(
             f"need 0 <= lo < hi <= 100, got lo={lo_percent} hi={hi_percent}"
         )
     return quantile_fit_elements(
-        train, col, key_col, {"clip_lo": lo_percent, "clip_hi": hi_percent}, n_partitions
+        train, col, key_col, {"clip_lo": lo_percent, "clip_hi": hi_percent}
     )
 
 
@@ -378,7 +350,6 @@ def quantile_fit_elements(
     col: str,
     key_col: str,
     percents: dict[str, int],
-    n_partitions: int | None = None,
 ) -> DataFrame:
     """One-row frame of NAMED exact lower-rank quantile elements of ``col``
     — the shared single ranked pass behind median imputation AND
@@ -390,7 +361,7 @@ def quantile_fit_elements(
     zero rows, so :func:`clip_transform` raises on it."""
     return _rank_elements(
         train.where(F.col(col).isNotNull()).withColumn("__g", F.lit(0)), ["__g"], col, key_col,
-        {name: (p, 100) for name, p in percents.items()}, n_partitions,
+        {name: (p, 100) for name, p in percents.items()},
     ).drop("__g", "__n")
 
 
@@ -436,7 +407,7 @@ def clip_fit_sketch(
 
 def impute_fit_sketch(train: DataFrame, cols: list[str]) -> DataFrame:
     """Sketch-based median fill values — drop-in for
-    :func:`impute_fit(strategy='median')` (same one-row ``imp_<c>``
+    :func:`impute_fit` (same one-row ``imp_<c>``
     artifact, consumed by :func:`impute_transform`).
 
     ONE scan of ``train`` for ALL columns: stack to ``(__c, __v)`` rows

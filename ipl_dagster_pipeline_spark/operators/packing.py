@@ -11,7 +11,8 @@ group (``group_cols=[]``: one global group) with the classic two-phase
 distributed prefix sum:
 
 1. range-partition + sort by ``(group, order)`` (the layout a packed write
-   wants anyway) — a group spans many partitions but stays contiguous;
+   wants anyway) into ``spark.sql.shuffle.partitions`` ranges — a group
+   spans many partitions but stays contiguous;
 2. LOCAL cumulative sums per ``(partition, group)`` in one vectorized Arrow
    pass riding that sort (a partitioned window would re-exchange the whole
    corpus — see ``_stamped_local_cumsum``);
@@ -37,13 +38,15 @@ from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..caching import tracked_persist
 
+# groups×partitions offset rows a prefix sum may collect to the driver
+MAX_OFFSET_ROWS = 1_000_000
+
 
 def _stamped_local_cumsum(
     df: DataFrame,
     group_cols: list[str],
     order_cols: list[str],
     value_col: str,
-    n_partitions: int | None,
 ) -> DataFrame:
     """Range-partition on (group, order), sort within partitions, and stamp
     each row with ``__pid`` and its per-(partition, group) running sum
@@ -59,8 +62,7 @@ def _stamped_local_cumsum(
     carries).
     """
     cols = [F.col(c) for c in group_cols + order_cols]
-    rp = df.repartitionByRange(n_partitions, *cols) if n_partitions else df.repartitionByRange(*cols)
-    srt = rp.sortWithinPartitions(*cols)
+    srt = df.repartitionByRange(*cols).sortWithinPartitions(*cols)
     out_schema = T.StructType(
         [T.StructField(f.name, f.dataType, f.nullable) for f in srt.schema.fields]
         + [
@@ -129,8 +131,6 @@ def with_keyed_cumsum(
     order_cols: list[str],
     value_col: str,
     out_col: str = "cumsum",
-    n_partitions: int | None = None,
-    max_offset_rows: int = 1_000_000,
 ) -> DataFrame:
     """Exact running sum of the INTEGRAL ``value_col`` in ``order_cols``
     order within each ``group_cols`` group (``[]``: one global running sum),
@@ -148,7 +148,7 @@ def with_keyed_cumsum(
     fold — tens to thousands of groups).  The driver round-trip is
     groups×partitions rows; keyed by a data-cardinality column (conv_id,
     doc_id) it would collect the corpus.  The collect is bounded by
-    ``max_offset_rows`` and RAISES loudly past it (failure-loudness
+    ``MAX_OFFSET_ROWS`` and RAISES loudly past it (failure-loudness
     convention) — a high-cardinality keyed prefix sum needs a tree
     reduction, not this operator.
     """
@@ -158,20 +158,20 @@ def with_keyed_cumsum(
             f"with_keyed_cumsum: value_col {value_col!r} must be integral, "
             f"got {vtype.simpleString()}"
         )
-    local = _stamped_local_cumsum(df, group_cols, order_cols, value_col, n_partitions)
+    local = _stamped_local_cumsum(df, group_cols, order_cols, value_col)
     local = tracked_persist(local)
     # limit(N+1) bounds what reaches the driver even in the violating case:
     # the agg still runs distributed, but at most N+1 rows ship back.
     totals = (
         local.groupBy(*group_cols, "__pid")
         .agg(F.sum(value_col).alias("__t"))
-        .limit(max_offset_rows + 1)
+        .limit(MAX_OFFSET_ROWS + 1)
         .collect()
     )
-    if len(totals) > max_offset_rows:
+    if len(totals) > MAX_OFFSET_ROWS:
         raise ValueError(
             f"with_keyed_cumsum: groups×partitions offset rows exceed "
-            f"max_offset_rows={max_offset_rows} — group_cols={group_cols} "
+            f"MAX_OFFSET_ROWS={MAX_OFFSET_ROWS} — group_cols={group_cols} "
             f"look data-cardinality, not strata-cardinality; use a "
             f"tree-reduction prefix sum or coarser grouping keys"
         )

@@ -43,7 +43,6 @@ def _rank_elements(
     value_col: str,
     key_col: str,
     ranks: dict[str, tuple[int, int]],
-    n_partitions: int | None = None,
 ) -> DataFrame:
     """One row per group: ``group_cols``, ``__n`` (rows ranked) and, per
     ``name: (num, den)``, the ``value_col`` element at rank
@@ -63,7 +62,6 @@ def _rank_elements(
         order_cols=[value_col, key_col],
         value_col="__one",
         out_col="__rank",
-        n_partitions=n_partitions,
     )
     # the counts side is one row per group — broadcast assumes a
     # strata-sized group cardinality; a data-sized one fails LOUDLY at the
@@ -91,7 +89,6 @@ def group_quantiles(
     key_col: str,
     percents: dict[str, int] | None = None,
     count_col: str = "n_rows",
-    n_partitions: int | None = None,
 ) -> DataFrame:
     """One row per group: group cols, ``count_col``, and one column per entry
     of ``percents`` holding the exact lower-rank quantile of ``value_col``
@@ -100,7 +97,7 @@ def group_quantiles(
     percents = percents or DEFAULT_PERCENTS
     return _rank_elements(
         df, group_cols, value_col, key_col,
-        {name: (p, 100) for name, p in percents.items()}, n_partitions,
+        {name: (p, 100) for name, p in percents.items()},
     ).withColumnRenamed("__n", count_col)
 
 
@@ -112,7 +109,6 @@ def robust_outliers(
     n_mads: int = 3,
     med_col: str = "med",
     mad_col: str = "mad",
-    n_partitions: int | None = None,
 ) -> DataFrame:
     """Per-group robust outliers: rows where ``|value - median| > n_mads *
     MAD`` (median absolute deviation) — the outlier rule that, unlike
@@ -131,7 +127,7 @@ def robust_outliers(
         # persist the strata-sized stats frame: `dev` is consumed twice (the
         # MAD fit and the final score join), so an unpersisted median frame
         # would re-run its whole ranked pass per consumer (r7)
-        fit = _rank_elements(frame, group_cols, col, key_col, {name: (50, 100)}, n_partitions)
+        fit = _rank_elements(frame, group_cols, col, key_col, {name: (50, 100)})
         return _null_safe_broadcast_join(frame, tracked_persist(fit.drop("__n")), group_cols)
 
     dev = stat(df, value_col, med_col).withColumn(

@@ -219,7 +219,6 @@ def token_budget_select(
     default_budget: int | None = None,
     seed: int = 31,
     cum_col: str = "cum_tokens",
-    n_partitions: int | None = None,
 ) -> DataFrame:
     """Select a deterministic ≈``budget``-token subset per stratum: walk each
     stratum's rows in portable-hash order (a deterministic shuffle) and keep
@@ -241,7 +240,6 @@ def token_budget_select(
         order_cols=["__h", key_col],
         value_col=token_col,
         out_col=cum_col,
-        n_partitions=n_partitions,
     )
     bound = F.lit(None).cast("long") if default_budget is None else F.lit(int(default_budget))
     for name, b in budgets.items():
@@ -256,7 +254,6 @@ def shuffle_shards(
     seed: int = 37,
     pos_col: str = "shuffle_pos",
     shard_col: str = "shard",
-    n_partitions: int | None = None,
 ) -> DataFrame:
     """Deterministic global corpus shuffle + balanced shard assignment.
 
@@ -280,7 +277,6 @@ def shuffle_shards(
         order_cols=["__h", key_col],
         value_col="__one",
         out_col="__rn",
-        n_partitions=n_partitions,
     )
     return (
         pos.withColumn(pos_col, (F.col("__rn") - 1).cast("long"))
@@ -296,7 +292,6 @@ def sample_negatives(
     seed: int = 53,
     rank_col: str = "neg_rank",
     neg_prefix: str = "neg_",
-    n_partitions: int | None = None,
 ) -> DataFrame:
     """K deterministic pseudo-random negatives per anchor row — the
     contrastive-training companion to the positive pairs the dedup family
@@ -336,7 +331,6 @@ def sample_negatives(
         order_cols=["__h", id_col],
         value_col="__one",
         out_col="__rn",
-        n_partitions=n_partitions,
     ).select(id_col, (F.col("__rn") - 1).cast("long").alias("__pos"))
     indexed = tracked_persist(indexed)
     n = indexed.count()
@@ -373,7 +367,6 @@ def sample_class_cap(
     key_col: str,
     seed: int = 61,
     rank_col: str = "class_rank",
-    n_partitions: int | None = None,
 ) -> DataFrame:
     """Class-balanced downsampling: keep at most ``cap`` rows per class,
     chosen as the first ``cap`` in deterministic hash order — the standard
@@ -396,7 +389,6 @@ def sample_class_cap(
         order_cols=["__h", key_col],
         value_col="__one",
         out_col=rank_col,
-        n_partitions=n_partitions,
     )
     return (
         ranked.where(F.col(rank_col) <= cap)

@@ -153,7 +153,6 @@ def feature_psi(
     col: str,
     key_col: str,
     n_bins: int = 10,
-    n_partitions: int | None = None,
 ) -> DataFrame:
     """Population Stability Index terms of ``col`` between an EXPECTED frame
     (the train fold / reference window) and an ACTUAL frame (the serving
@@ -182,9 +181,7 @@ def feature_psi(
 
     # persist the one-row edges artifact: BOTH bin_counts sides cross-join
     # it, and unpersisted each side re-ran the whole ranked fit pass (r7)
-    edges = tracked_persist(
-        quantile_bins_fit(expected, col, key_col, n_bins, n_partitions=n_partitions)
-    )
+    edges = tracked_persist(quantile_bins_fit(expected, col, key_col, n_bins))
 
     def bin_counts(df: DataFrame, out: str) -> DataFrame:
         binned = quantile_bins_transform(df, edges, col, n_bins, out_col="__qb")

@@ -235,7 +235,7 @@ def _jaccard(cand: DataFrame, sh: DataFrame, id_col: str) -> DataFrame:
 
 
 def _shingle_overlaps(
-    docs: DataFrame, k: int, max_df: int, id_col: str, text_col: str, storage_level, obs_name: str
+    docs: DataFrame, k: int, max_df: int, id_col: str, text_col: str, obs_name: str
 ) -> DataFrame:
     """Every doc pair sharing a shingle held by at most ``max_df`` docs:
     columns ``doc_a < doc_b``, ``n_inter`` (shared such shingles), ``n_a``
@@ -244,7 +244,7 @@ def _shingle_overlaps(
     ``obs_name`` with ``dropped_shingle_rows`` / ``shingle_rows``."""
     sh = shingles(docs, id_col, text_col, k)
     observed, kept = capped_buckets(
-        sh, ["s"], max_df, obs_name, "dropped_shingle_rows", "shingle_rows", storage_level
+        sh, ["s"], max_df, obs_name, "dropped_shingle_rows", "shingle_rows"
     )
     rare_a = observed.select(F.col(id_col).alias("doc_a"), "s").alias("a")
     rare_b = kept.select(F.col(id_col).alias("doc_b"), "s").alias("b")
@@ -266,7 +266,6 @@ def ngram_jaccard_pairs(
     max_df: int = 1000,
     id_col: str = "doc_id",
     text_col: str = "text",
-    storage_level=None,
 ) -> DataFrame:
     """EXACT all-pairs n-gram Jaccard near-duplicates via an inverted index —
     the deterministic complement of the MinHash path (whose recall is
@@ -290,7 +289,7 @@ def ngram_jaccard_pairs(
     """
     check_threshold("ngram_jaccard_pairs", threshold)
     return (
-        _shingle_overlaps(docs, k, max_df, id_col, text_col, storage_level, "ngram_df_dropped")
+        _shingle_overlaps(docs, k, max_df, id_col, text_col, "ngram_df_dropped")
         .withColumn(
             "jaccard",
             F.round(F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")), 6),
@@ -306,7 +305,6 @@ def minhash_lsh_dedup(
     text_col: str = "text",
     k: int = 5,
     threshold: float = 0.5,
-    storage_level=None,
 ) -> DataFrame:
     """Full near-dup pipeline: shingle → minhash → LSH buckets → exact
     Jaccard verification of candidates → pairs ≥ threshold.
@@ -315,15 +313,14 @@ def minhash_lsh_dedup(
     Jaccard verification's per-doc array fold once more — without the
     persist the whole normalize→explode→distinct lineage re-runs per
     consumer (round-1 bench: 14.6 s at sf0.1; single-pass target ≤5 s).
-
-    ``storage_level``: the shingle stream is ~|text| rows; at 100 TB pass
-    ``StorageLevel.DISK_ONLY`` (or point spark.local.dir at fast scratch) —
-    the default MEMORY_AND_DISK trades executor RAM for the 4× recompute.
-    Both persisted intermediates (shingles here, bands inside
-    ``lsh_candidates``) are registered with ``caching.tracked_persist`` —
+    The shingle stream is ~|text| rows; ``MEMORY_AND_DISK`` spills what
+    executor memory cannot hold to ``spark.local.dir`` (point it at fast
+    scratch at scale) instead of recomputing it.  Both persisted
+    intermediates (shingles here, bands inside ``lsh_candidates``) are
+    registered with ``caching.tracked_persist`` —
     call ``caching.release_tracked()`` after the action that consumes the
     returned pairs to free the executor storage."""
-    sh = tracked_persist(shingles(docs, id_col, text_col, k), storage_level)
+    sh = tracked_persist(shingles(docs, id_col, text_col, k))
     sig = minhash_signatures(sh, id_col)
     cand = lsh_candidates(sig, id_col)
     return jaccard_pairs(cand, sh, id_col, threshold)
@@ -408,7 +405,6 @@ def overlap_pairs(
     max_df: int = 1000,
     id_col: str = "doc_id",
     text_col: str = "text",
-    storage_level=None,
 ) -> DataFrame:
     """EXACT all-pairs shingle CONTAINMENT (overlap coefficient,
     ``|A∩B| / min(|A|,|B|)``) — the asymmetric complement of
@@ -429,7 +425,7 @@ def overlap_pairs(
     """
     check_threshold("overlap_pairs", threshold)
     scored = (
-        _shingle_overlaps(docs, k, max_df, id_col, text_col, storage_level, "containment_df_dropped")
+        _shingle_overlaps(docs, k, max_df, id_col, text_col, "containment_df_dropped")
         .withColumn("overlap", F.round(F.col("n_inter") / F.least("n_a", "n_b"), 6))
         .filter(F.col("overlap") >= threshold)
     )

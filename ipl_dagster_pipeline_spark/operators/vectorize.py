@@ -63,7 +63,6 @@ def vocab_fit(
     vocab_size: int,
     id_col: str = "doc_id",
     text_col: str = "text",
-    n_partitions: int | None = None,
 ) -> DataFrame:
     """The frozen vocabulary: one row per kept term with ``term``,
     ``term_idx`` (1-based document-frequency rank, ties broken by term —
@@ -87,7 +86,6 @@ def vocab_fit(
         order_cols=["__negdf", "term"],
         value_col="__one",
         out_col="term_idx",
-        n_partitions=n_partitions,
     )
     return (
         ranked.where(F.col("term_idx") <= vocab_size)

@@ -19,7 +19,6 @@ big-side path wants (north rule).
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -94,8 +93,7 @@ def salted_agg(
 
 
 def capped_buckets(
-    frame: DataFrame, keys: list[str], cap: int, obs_name: str, dropped: str, total: str,
-    storage_level: StorageLevel | None = None,
+    frame: DataFrame, keys: list[str], cap: int, obs_name: str, dropped: str, total: str
 ) -> tuple[DataFrame, DataFrame]:
     """The two sides ``(observed, kept)`` of an equi self-join on ``keys``:
     ``frame``'s rows in buckets (``keys`` values) of at most ``cap`` rows.
@@ -105,9 +103,8 @@ def capped_buckets(
     No separate aggregate job, anti-join or eager ``count()`` (which would
     re-run the upstream lineage mid-plan): a count window over ``keys``
     rides the shuffle the self-join needs anyway.  The SIZED frame is
-    persisted (tracked; MEMORY_AND_DISK unless ``storage_level``) because
-    both join sides read it and the upstream lineage must run once, not per
-    side.  The count is observed ABOVE the cache on ONE branch: a
+    persisted (tracked) because both join sides read it and the upstream
+    lineage must run once, not per side.  The count is observed ABOVE the cache on ONE branch: a
     CollectMetrics below an InMemoryRelation never reports, and one on both
     branches would collide on the observation name.
 
@@ -116,7 +113,7 @@ def capped_buckets(
     sharing this helper would make it branch on its caller.
     """
     w = Window.partitionBy(*keys)
-    sized = tracked_persist(frame.withColumn("__bsize", F.count(F.lit(1)).over(w)), storage_level)
+    sized = tracked_persist(frame.withColumn("__bsize", F.count(F.lit(1)).over(w)))
     small = F.col("__bsize") <= cap
     observed = sized.observe(
         register_observation(obs_name),

@@ -20,10 +20,8 @@ table — identical math to the batch path, with arrival-driven scheduling.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from ..plans.features import build_turn_features
-from ..plans.incremental import DEFAULT_BUCKETS, conv_bucket
+from ..plans.incremental import DEFAULT_BUCKETS, _rebuild_buckets
 from .session_stream import stream_transcripts
 
 
@@ -46,22 +44,8 @@ def stream_incremental_features(
     """
 
     def _rebuild(batch_df: DataFrame, batch_id: int) -> None:
-        touched = (
-            batch_df.select(conv_bucket(F.col("conv_id"), n_buckets).alias("conv_bucket"))
-            .distinct()
-        )
-        full = spark.read.parquet(input_dir).withColumn(
-            "conv_bucket", conv_bucket(F.col("conv_id"), n_buckets)
-        )
-        affected = full.join(F.broadcast(touched), "conv_bucket")
-        feats = build_turn_features(affected.drop("conv_bucket"), tool_dim, gap_seconds=gap_seconds)
-        (
-            feats.withColumn("conv_bucket", conv_bucket(F.col("conv_id"), n_buckets))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("conv_bucket")
-            .parquet(features_path)
-        )
+        full = spark.read.parquet(input_dir)
+        _rebuild_buckets(batch_df, full, tool_dim, features_path, gap_seconds, n_buckets)
 
     writer = (
         stream_transcripts(spark, input_dir)

@@ -5,6 +5,7 @@ from __future__ import annotations
 import uuid
 
 import pytest
+from conftest import shuffle_partitions
 from pyspark.sql import functions as F
 
 from ipl_dagster_pipeline_spark.operators.featurize import (
@@ -134,7 +135,7 @@ def test_hash_cross_null_and_boundary_safety(spark):
         hash_cross(df, ["u"], 64)
 
 
-def test_impute_fit_transform_median_and_mean(spark):
+def test_impute_fit_transform_median(spark):
     from ipl_dagster_pipeline_spark.operators.featurize import (
         impute_fit,
         impute_transform,
@@ -144,19 +145,15 @@ def test_impute_fit_transform_median_and_mean(spark):
         [(1, 10.0), (2, 20.0), (3, 30.0), (4, 40.0), (5, None)],
         "id long, x double",
     )
-    med = impute_fit(train, ["x"], "id", strategy="median")
+    med = impute_fit(train, ["x"], "id")
     assert med.collect()[0]["imp_x"] == 20.0  # lower median ELEMENT of 4 non-nulls
-    mean = impute_fit(train, ["x"], "id", strategy="mean")
-    assert mean.collect()[0]["imp_x"] == 25.0
     score = spark.createDataFrame([(9, None), (10, 7.0)], "id long, x double")
     out = {r["id"]: r["x"] for r in impute_transform(score, med, ["x"]).collect()}
     assert out == {9: 20.0, 10: 7.0}  # only NULLs filled
     # degenerate fit: fill value NULL → NULLs stay NULL (loud, not zero)
-    empty = impute_fit(train.limit(0), ["x"], "id", strategy="mean")
+    empty = impute_fit(train.limit(0), ["x"], "id")
     out = {r["id"]: r["x"] for r in impute_transform(score, empty, ["x"]).collect()}
     assert out == {9: None, 10: 7.0}
-    with pytest.raises(ValueError, match="strategy"):
-        impute_fit(train, ["x"], "id", strategy="mode")
 
 
 def test_clip_fit_transform_winsorizes_to_frozen_elements(spark):
@@ -302,12 +299,13 @@ def test_impute_fit_median_equals_per_column_recount(spark, mixed):
     from ipl_dagster_pipeline_spark.operators.featurize import impute_fit
 
     cols = ["b", "a", "c", "d"]
-    fit = impute_fit(mixed, cols, "id", n_partitions=3)
-    # names and order follow cols; each fill value keeps its input type
-    assert fit.dtypes == [("imp_b", "double"), ("imp_a", "bigint"), ("imp_c", "double"),
-                          ("imp_d", "int")]
-    rows = mixed.collect()
-    [got] = fit.collect()
+    with shuffle_partitions(spark, 3):
+        fit = impute_fit(mixed, cols, "id")
+        # names and order follow cols; each fill value keeps its input type
+        assert fit.dtypes == [("imp_b", "double"), ("imp_a", "bigint"), ("imp_c", "double"),
+                              ("imp_d", "int")]
+        rows = mixed.collect()
+        [got] = fit.collect()
     assert got.asDict() == {f"imp_{c}": _median_recount(rows, c) for c in cols}
     assert got["imp_c"] is None and got["imp_a"] is not None
     empty = impute_fit(mixed.limit(0), cols, "id")
@@ -352,7 +350,6 @@ def test_empty_fit_conventions(spark, mixed):
     for fit in (
         quantile_bins_fit(empty, "b", "id", 3),
         impute_fit(empty, ["a", "b"], "id"),
-        impute_fit(empty, ["a", "b"], "id", strategy="mean"),
     ):
         assert [set(r.asDict().values()) for r in fit.collect()] == [{None}]
     bounds = clip_fit(empty, "b", "id")

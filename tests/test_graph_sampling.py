@@ -2,8 +2,11 @@
 
 from __future__ import annotations
 
+import re
+
 import pyspark.sql.functions as F
 import pytest
+from conftest import shuffle_partitions
 
 from ipl_dagster_pipeline_spark.operators.graph import connected_components, duplicate_groups
 from ipl_dagster_pipeline_spark.operators.sampling import hash_split
@@ -92,10 +95,8 @@ def test_global_cumsum_matches_single_partition(spark):
         .withColumn("v", (F.col("k") % 37 + 1).cast("long"))
         .repartition(23)  # deliberately scrambled input layout
     )
-    got = {
-        r.k: r.cumsum
-        for r in with_keyed_cumsum(df, [], ["k"], "v", n_partitions=13).collect()
-    }
+    with shuffle_partitions(spark, 13):
+        got = {r.k: r.cumsum for r in with_keyed_cumsum(df, [], ["k"], "v").collect()}
     exp = {
         r.k: r.c
         for r in df.withColumn(
@@ -109,7 +110,7 @@ def test_global_cumsum_matches_single_partition(spark):
 
 
 def test_global_cumsum_many_partitions_uses_broadcast_offsets(spark):
-    """At n_partitions=256 the offsets must be a broadcast join, never a
+    """At 256 shuffle partitions the offsets must be a broadcast join, never a
     256-arm CASE chain (which falls out of codegen at real partition counts),
     and values must still equal the single-partition cumsum."""
     from pyspark.sql import Window
@@ -121,11 +122,13 @@ def test_global_cumsum_many_partitions_uses_broadcast_offsets(spark):
         .withColumnRenamed("id", "k")
         .withColumn("v", (F.col("k") % 11 + 1).cast("long"))
     )
-    out = with_keyed_cumsum(df, [], ["k"], "v", n_partitions=256)
-    plan = out._jdf.queryExecution().executedPlan().toString()
+    with shuffle_partitions(spark, 256):
+        out = with_keyed_cumsum(df, [], ["k"], "v")
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        got = {r.k: r.cumsum for r in out.collect()}
+    assert re.search(r"rangepartitioning\([^)]*, 256\)", plan), plan
     assert "CASE WHEN" not in plan
     assert "Broadcast" in plan
-    got = {r.k: r.cumsum for r in out.collect()}
     exp = {
         r.k: r.c
         for r in df.withColumn(
@@ -240,12 +243,11 @@ def test_keyed_cumsum_matches_single_partition_window(spark):
     df = spark.createDataFrame(
         [(i, f"g{i % 3}", (i * 37) % 11 + 1) for i in range(500)], ["k", "g", "v"]
     )
-    got = {
-        (r.g, r.k): r.cs
-        for r in with_keyed_cumsum(
-            df, ["g"], ["k"], "v", out_col="cs", n_partitions=16
-        ).collect()
-    }
+    with shuffle_partitions(spark, 16):
+        got = {
+            (r.g, r.k): r.cs
+            for r in with_keyed_cumsum(df, ["g"], ["k"], "v", out_col="cs").collect()
+        }
     w = Window.partitionBy("g").orderBy("k").rowsBetween(Window.unboundedPreceding, Window.currentRow)
     want = {(r.g, r.k): r.cs for r in df.withColumn("cs", F.sum("v").over(w)).collect()}
     assert got == want
@@ -257,30 +259,33 @@ def test_token_budget_select_respects_budgets(spark):
     df = spark.createDataFrame(
         [(i, f"s{i % 2}", 10) for i in range(200)], ["k", "src", "n"]
     )
-    out = token_budget_select(
-        df, "src", "k", "n", budgets={"s0": 300}, default_budget=55, n_partitions=8
-    ).collect()
-    s0 = [r for r in out if r.src == "s0"]
-    s1 = [r for r in out if r.src == "s1"]
-    assert len(s0) == 30 and max(r.cum_tokens for r in s0) == 300
-    assert len(s1) == 5 and max(r.cum_tokens for r in s1) == 50
-    # unlimited default keeps everything
-    full = token_budget_select(df, "src", "k", "n", budgets={"s0": 300}, n_partitions=8)
-    assert full.filter(F.col("src") == "s1").count() == 100
+    with shuffle_partitions(spark, 8):
+        out = token_budget_select(
+            df, "src", "k", "n", budgets={"s0": 300}, default_budget=55
+        ).collect()
+        s0 = [r for r in out if r.src == "s0"]
+        s1 = [r for r in out if r.src == "s1"]
+        assert len(s0) == 30 and max(r.cum_tokens for r in s0) == 300
+        assert len(s1) == 5 and max(r.cum_tokens for r in s1) == 50
+        # unlimited default keeps everything
+        full = token_budget_select(df, "src", "k", "n", budgets={"s0": 300})
+        assert full.filter(F.col("src") == "s1").count() == 100
 
 
 def test_shuffle_shards_balanced_and_stable(spark):
     from ipl_dagster_pipeline_spark.operators.sampling import shuffle_shards
 
     df = spark.createDataFrame([(i,) for i in range(257)], ["k"])
-    out = shuffle_shards(df, "k", n_shards=8, n_partitions=16)
-    rows = out.collect()
-    assert sorted(r.shuffle_pos for r in rows) == list(range(257))
-    sizes = sorted(
-        r["c"] for r in out.groupBy("shard").agg(F.count("*").alias("c")).collect()
-    )
-    assert sizes[-1] - sizes[0] <= 1 and len(sizes) == 8
-    again = shuffle_shards(df.repartition(7), "k", n_shards=8, n_partitions=4).collect()
+    with shuffle_partitions(spark, 16):
+        out = shuffle_shards(df, "k", n_shards=8)
+        rows = out.collect()
+        assert sorted(r.shuffle_pos for r in rows) == list(range(257))
+        sizes = sorted(
+            r["c"] for r in out.groupBy("shard").agg(F.count("*").alias("c")).collect()
+        )
+        assert sizes[-1] - sizes[0] <= 1 and len(sizes) == 8
+    with shuffle_partitions(spark, 4):
+        again = shuffle_shards(df.repartition(7), "k", n_shards=8).collect()
     assert sorted((r.k, r.shuffle_pos, r.shard) for r in again) == sorted(
         (r.k, r.shuffle_pos, r.shard) for r in rows
     )
@@ -293,10 +298,11 @@ def test_keyed_cumsum_null_groups_and_values(spark):
 
     rows = [(1, None, 5), (2, None, 7), (3, "g", None), (4, "g", 3), (5, "h", 2)]
     df = spark.createDataFrame(rows, "k int, g string, v int")
-    got = {
-        (r.g, r.k): r.cs
-        for r in with_keyed_cumsum(df, ["g"], ["k"], "v", out_col="cs", n_partitions=3).collect()
-    }
+    with shuffle_partitions(spark, 3):
+        got = {
+            (r.g, r.k): r.cs
+            for r in with_keyed_cumsum(df, ["g"], ["k"], "v", out_col="cs").collect()
+        }
     # null group is ONE group (carry crosses batches/partitions); null values
     # count as 0 so the running total stays defined
     assert got[(None, 1)] == 5 and got[(None, 2)] == 12
@@ -304,7 +310,7 @@ def test_keyed_cumsum_null_groups_and_values(spark):
 
 
 def test_keyed_cumsum_null_group_spans_partitions(spark):
-    """Judge repro (round-3 verdict): 100 null-group rows at n_partitions=8.
+    """Judge repro (round-3 verdict): 100 null-group rows at 8 partitions.
     The null stratum provably spans many partitions; a plain equi-join on the
     offsets (null = null never matches) restarts the cumsum per partition
     (max value 25 instead of 100).  The null-safe offsets join must yield the
@@ -313,14 +319,15 @@ def test_keyed_cumsum_null_group_spans_partitions(spark):
 
     rows = [(i, None, 1) for i in range(100)] + [(1000 + i, "g", 1) for i in range(16)]
     df = spark.createDataFrame(rows, "k int, g string, v int")
-    out = with_keyed_cumsum(df, ["g"], ["k"], "v", out_col="cs", n_partitions=8)
-    null_cs = sorted(r.cs for r in out.filter(F.col("g").isNull()).collect())
+    with shuffle_partitions(spark, 8):
+        out = with_keyed_cumsum(df, ["g"], ["k"], "v", out_col="cs")
+        null_cs = sorted(r.cs for r in out.filter(F.col("g").isNull()).collect())
+        g_cs = sorted(r.cs for r in out.filter(F.col("g") == "g").collect())
+        # offsets join must still be a broadcast hash join (eqNullSafe keys are
+        # extractable equi-join keys), never a nested-loop over the corpus
+        plan = out._jdf.queryExecution().executedPlan().toString()
     assert null_cs == list(range(1, 101))
-    g_cs = sorted(r.cs for r in out.filter(F.col("g") == "g").collect())
     assert g_cs == list(range(1, 17))
-    # offsets join must still be a broadcast hash join (eqNullSafe keys are
-    # extractable equi-join keys), never a nested-loop over the corpus
-    plan = out._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
     assert "BroadcastNestedLoopJoin" not in plan
 
@@ -353,8 +360,10 @@ def test_keyed_cumsum_offsets_from_arrow_match_window(spark, monkeypatch, group_
             F.when(F.col("id") % 5 == 0, F.lit(None)).otherwise(group).alias("g"),
             (F.col("id") % 11).alias("v"),
         )
-        out = with_keyed_cumsum(df, ["g"], ["id"], "v", out_col="cs", n_partitions=8)
-        got = sorted((r.id, r.cs) for r in out.collect())
+        with shuffle_partitions(spark, 8):
+            out = with_keyed_cumsum(df, ["g"], ["id"], "v", out_col="cs")
+            got = sorted((r.id, r.cs) for r in out.collect())
+            plan = out._jdf.queryExecution().executedPlan().toString()
         running = Window.partitionBy("g").orderBy("id").rowsBetween(
             Window.unboundedPreceding, Window.currentRow
         )
@@ -362,28 +371,30 @@ def test_keyed_cumsum_offsets_from_arrow_match_window(spark, monkeypatch, group_
             (r.id, r.cs) for r in df.withColumn("cs", F.sum("v").over(running)).collect()
         )
         assert got == want
-        plan = out._jdf.queryExecution().executedPlan().toString()
         assert "LocalTableScan" in plan and "Scan ExistingRDD" not in plan
     finally:
         monkeypatch.undo()
         time.tzset()
 
 
-def test_keyed_cumsum_guards_data_cardinality_keys(spark):
+def test_keyed_cumsum_guards_data_cardinality_keys(spark, monkeypatch):
     """Strata-keys-only contract made loud: keying the prefix sum by a
     data-cardinality column (here: the unique row key itself) must RAISE
-    when groups×partitions exceeds max_offset_rows, instead of silently
+    when groups×partitions exceeds MAX_OFFSET_ROWS, instead of silently
     collecting a corpus-sized offset table to the driver."""
     import pytest
 
+    from ipl_dagster_pipeline_spark.operators import packing
     from ipl_dagster_pipeline_spark.operators.packing import with_keyed_cumsum
 
+    monkeypatch.setattr(packing, "MAX_OFFSET_ROWS", 10)
     df = spark.createDataFrame([(i, i % 3, 1) for i in range(60)], "k int, g int, v int")
-    with pytest.raises(ValueError, match="max_offset_rows"):
-        with_keyed_cumsum(df, ["k"], ["k"], "v", n_partitions=2, max_offset_rows=10)
-    # same frame under a strata key sails through the same bound
-    ok = with_keyed_cumsum(df, ["g"], ["k"], "v", n_partitions=2, max_offset_rows=10)
-    assert ok.count() == 60
+    with shuffle_partitions(spark, 2):
+        with pytest.raises(ValueError, match="MAX_OFFSET_ROWS"):
+            with_keyed_cumsum(df, ["k"], ["k"], "v")
+        # same frame under a strata key sails through the same bound
+        ok = with_keyed_cumsum(df, ["g"], ["k"], "v")
+        assert ok.count() == 60
 
 
 @pytest.mark.parametrize("groups,n_partitions", [([], 1), (["g"], 3)])
@@ -393,8 +404,10 @@ def test_keyed_cumsum_rejects_fractional_values(spark, groups, n_partitions):
     from ipl_dagster_pipeline_spark.operators.packing import with_keyed_cumsum
 
     df = spark.createDataFrame([(i, i % 2, 0.5) for i in range(6)], "k int, g int, v double")
-    with pytest.raises(ValueError, match="'v' must be integral, got double"):
-        with_keyed_cumsum(df, groups, ["k"], "v", n_partitions=n_partitions).collect()
+    with shuffle_partitions(spark, n_partitions), pytest.raises(
+        ValueError, match="'v' must be integral, got double"
+    ):
+        with_keyed_cumsum(df, groups, ["k"], "v").collect()
 
 
 def test_group_quantiles_exact_lower_rank(spark):
@@ -404,12 +417,13 @@ def test_group_quantiles_exact_lower_rank(spark):
     # p50 idx 49 -> 59; p90 idx 89 -> 99.  group b: single row.
     rows = [(i, "a", 10 + i) for i in range(100)] + [(1000, "b", 7)]
     df = spark.createDataFrame(rows, "k long, g string, v long")
-    got = {
-        r.g: r
-        for r in group_quantiles(
-            df, ["g"], "v", "k", {"p25": 25, "p50": 50, "p90": 90}, count_col="n", n_partitions=8
-        ).collect()
-    }
+    with shuffle_partitions(spark, 8):
+        got = {
+            r.g: r
+            for r in group_quantiles(
+                df, ["g"], "v", "k", {"p25": 25, "p50": 50, "p90": 90}, count_col="n"
+            ).collect()
+        }
     a, b = got["a"], got["b"]
     assert (a.n, a.p25, a.p50, a.p90) == (100, 34, 59, 99)
     assert (b.n, b.p25, b.p50, b.p90) == (1, 7, 7, 7)
@@ -472,12 +486,13 @@ def test_group_quantiles_null_group_survives(spark):
 
     rows = [(i, None, 10 + i) for i in range(100)] + [(1000, "b", 7)]
     df = spark.createDataFrame(rows, "k long, g string, v long")
-    got = {
-        r.g: r
-        for r in group_quantiles(
-            df, ["g"], "v", "k", {"p25": 25, "p50": 50, "p90": 90}, count_col="n", n_partitions=8
-        ).collect()
-    }
+    with shuffle_partitions(spark, 8):
+        got = {
+            r.g: r
+            for r in group_quantiles(
+                df, ["g"], "v", "k", {"p25": 25, "p50": 50, "p90": 90}, count_col="n"
+            ).collect()
+        }
     assert set(got) == {None, "b"}
     n = got[None]
     assert (n.n, n.p25, n.p50, n.p90) == (100, 34, 59, 99)

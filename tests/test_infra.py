@@ -93,7 +93,6 @@ def test_append_lineage_enforces_schema(spark, tmp_path):
         path,
     )
     assert total_from_lineage(spark, path, "s") == (2, 5)
-    assert total_from_lineage(spark, path, "s", snapshot_id=4) == (0, 0)
 
 
 def test_observe_stage_counts(small_transcripts):

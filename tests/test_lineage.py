@@ -119,27 +119,6 @@ def test_manifest_without_schema_still_reads(spark, tmp_path):
     assert tbl.read(spark, snapshot_id=s1).count() == 1
 
 
-def test_partitioned_commit_reads_back_written_schema(spark, tmp_path):
-    """A hive-partitioned commit records its schema in read order
-    (partition columns last, in ``partition_by`` order) with the written
-    types, and its lineage totals equal a recount of the snapshot — also for
-    an empty-string partition value, which reads back null."""
-    pipe = CheckpointedPipeline(spark, str(tmp_path / "ckpt"))
-    df = spark.createDataFrame(
-        [("a", 1, 2.0), ("b", 2, 3.0), ("", 2, 4.0)], "part string, n int, x double"
-    )
-    back = pipe.stage("parts", lambda: df, partition_by=["n", "part"])
-    tbl = pipe.table("parts")
-    assert back.columns == ["x", "n", "part"]
-    assert back.schema == _inferred(spark, tbl).schema
-    assert sorted(back.select(*df.columns).collect(), key=str) == sorted(
-        [(p or None, n, x) for p, n, x in df.collect()], key=str
-    )
-    assert sum(f["rows"] for f in tbl.snapshots()[-1]["files"]) == 3
-    (recount,) = _recount(spark, pipe, "parts").collect()
-    assert stage_totals(spark, pipe.lineage_path)["parts"] == (recount[1], recount[2])
-
-
 def test_stage_starts_no_job_after_its_commit(spark, tmp_path, monkeypatch):
     """Structural pin: the commit's write is a checkpointed stage's last
     Spark job — lineage, the footer check and the read-back start none."""

@@ -5,6 +5,7 @@ from __future__ import annotations
 import re
 
 import pyspark.sql.functions as F
+from conftest import shuffle_partitions
 
 from ipl_dagster_pipeline_spark.plans.features import (
     build_rich_turn_features,
@@ -87,14 +88,15 @@ def test_prefix_sum_plans_have_single_data_exchange(spark):
     df = spark.createDataFrame(
         [(i, f"g{i % 3}", i % 7) for i in range(100)], ["k", "g", "v"]
     )
-    for out in (
-        with_keyed_cumsum(df, [], ["k"], "v", n_partitions=4),
-        with_keyed_cumsum(df, ["g"], ["k"], "v", n_partitions=4),
-    ):
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        assert plan.count("Exchange hashpartitioning") == 0, plan
-        assert "BroadcastExchange" in plan  # offsets join stays broadcast
-        assert "SinglePartition" not in plan
+    with shuffle_partitions(spark, 4):
+        for out in (
+            with_keyed_cumsum(df, [], ["k"], "v"),
+            with_keyed_cumsum(df, ["g"], ["k"], "v"),
+        ):
+            plan = out._jdf.queryExecution().executedPlan().toString()
+            assert plan.count("Exchange hashpartitioning") == 0, plan
+            assert "BroadcastExchange" in plan  # offsets join stays broadcast
+            assert "SinglePartition" not in plan
 
 
 def test_scd2_history_single_exchange_single_sort(spark):
@@ -315,3 +317,51 @@ def test_fan_out_scan_adaptive(spark, tmp_path):
     # wide plan (aggregate) returned untouched — same object, no added shuffle
     agg = df.groupBy((F.col("id") % 3).alias("g")).count()
     assert fan_out_scan(agg) is agg
+
+
+def test_incremental_update_counts_rows_on_its_write(spark, tmp_path):
+    """One incremental update runs the touched-bucket count and the
+    publishing write, nothing more: ``rebuilt_rows`` is observed by the
+    write itself, not by a cache plus a count pass over the rebuilt
+    features."""
+    import uuid
+
+    from ipl_dagster_pipeline_spark.io import SnapshotTable
+    from ipl_dagster_pipeline_spark.plans.incremental import (
+        incremental_update,
+        write_feature_buckets,
+    )
+    from ipl_dagster_pipeline_spark.sources.transcripts import (
+        synthesize_tool_dim,
+        synthesize_transcripts,
+    )
+
+    dim = synthesize_tool_dim(spark, seed=8, n_days=40)
+    base = synthesize_transcripts(spark, n_convs=12, turns_per_conv=10, seed=8)
+    late = synthesize_transcripts(spark, n_convs=2, turns_per_conv=4, seed=9).withColumn(
+        "turn_idx", F.col("turn_idx") + 10
+    )
+    tbl = SnapshotTable(str(tmp_path / "transcripts"))
+    s1 = tbl.commit(base)
+    feats_path = str(tmp_path / "features")
+    write_feature_buckets(build_turn_features(tbl.read(spark), dim), feats_path, 8)
+    tbl.commit(late, mode="append")
+
+    sc = spark.sparkContext
+    group = f"incremental-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count")
+    try:
+        stats = incremental_update(spark, tbl, dim, feats_path, since_snapshot_id=s1, n_buckets=8)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+
+    written = spark.read.parquet(feats_path)
+    touched = [r.conv_bucket for r in late.select("conv_id").distinct().join(
+        written.select("conv_id", "conv_bucket").distinct(), "conv_id").collect()]
+    assert stats["touched_buckets"] == len(set(touched))
+    assert stats["rebuilt_rows"] == written.where(F.col("conv_bucket").isin(touched)).count()
+    # the touched-bucket count and the write (its AQE stages); a count pass
+    # over the rebuilt features would add its own jobs
+    assert n_jobs == 10, n_jobs
