@@ -20,8 +20,6 @@ pandas pipeline) as an idiomatic Spark DataFrame engine over transcript tables
   sampling, concat-and-chunk sequence packing (distributed prefix sum with
   broadcast partition offsets), multimodal binary-column plumbing
   (decode/resize/frame-sample), survivor-re-keyed corpus curation
-* Structured Streaming: watermarked sessionization, dedup-within-watermark,
-  custom stateful operators, and foreachBatch late-data bucket maintenance
 
 Everything is public PySpark API; no code is copied from the reference.
 """

@@ -3,8 +3,8 @@
 Several operators persist mid-pipeline frames that are read more than once
 (MinHash shingles, LSH band/bucket frames, the prefix-sum local cumsums).
 Within one query that is correct and necessary — but in a long-lived session
-(bench reruns, streaming foreachBatch, the multi-stage curation job) the
-blocks would pin executor storage until LRU eviction.
+(bench reruns, the multi-stage curation job) the blocks would pin executor
+storage until LRU eviction.
 
 Every operator persist goes through :func:`tracked_persist`, always at
 ``MEMORY_AND_DISK`` (what executor memory cannot hold spills to

@@ -1188,9 +1188,9 @@ FROM c GROUP BY event_type
 # distributed prefix sum (a full shuffle of the fit column); the sketch fits
 # read median and clip bounds off the mergeable base-2 log-histogram (ONE
 # map-side-combined aggregation) within 2^-3 relative error, and freeze an
-# artifact of the SAME shape, so impute_transform / clip_transform (and the
-# streaming fit_literals serving path) work unchanged.  The oracle replays
-# the full sketch: bucket math, division-free rank walk, and transforms.
+# artifact of the SAME shape, so impute_transform / clip_transform work
+# unchanged.  The oracle replays the full sketch: bucket math,
+# division-free rank walk, and transforms.
 # ---------------------------------------------------------------------------
 
 

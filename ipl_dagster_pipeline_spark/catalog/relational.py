@@ -1207,7 +1207,7 @@ FROM filtered
 # ---------------------------------------------------------------------------
 # batch 57 (round 6): Z-order (Morton) layout clustering — the
 # multi-dimensional file-layout key behind Iceberg/Delta Z-ordering
-# (partitioning.py: morton_code / cluster_by_morton).  Range-partitioning on
+# (partitioning.py: morton_code).  Range-partitioning on
 # one column prunes on that column only; interleaving bits of several gives
 # every clustered column narrow per-file min/max ranges, so a 100 TB scan
 # with a predicate on ANY of them skips most files on footer statistics.

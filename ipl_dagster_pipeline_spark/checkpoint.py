@@ -29,20 +29,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.util import inheritable_thread_target
 
 from .caching import tracked_scope
-from .io import SnapshotTable, _write_json
+from .io import SnapshotTable
 from .metrics import append_lineage, observation_result, observe_stage
-
-
-class ExternalStageTimeout(RuntimeError):
-    """An external stage attempt exceeded its max runtime (the stuck-run
-    condition the reference's reaper terminates,
-    scripts/terminate_starting_and_started_runs.py:126-150)."""
-
-
-# scratch dirs whose timed-out (abandoned) worker thread may still be alive
-# in THIS process — the startup reap must never delete these; a process
-# restart clears the set, at which point the dirs are truly dead and reapable
-_ABANDONED_SCRATCH: set[str] = set()
 
 
 class CheckpointedPipeline:
@@ -88,8 +76,6 @@ class CheckpointedPipeline:
         return SnapshotTable(os.path.join(self.root, stage))
 
     def is_committed(self, stage: str) -> bool:
-        if os.path.exists(os.path.join(self.root, stage, "manifest.json")):
-            return True  # external (non-Spark) stage — see external_stage
         return self.table(stage).current_snapshot_id() is not None
 
     def stage(self, name: str, fn: Callable[[], DataFrame]) -> DataFrame:
@@ -181,157 +167,6 @@ class CheckpointedPipeline:
             }],
             self.lineage_path,
         )
-
-    def external_stage(
-        self,
-        name: str,
-        fn: Callable[..., dict],
-        max_attempts: int = 3,
-        timeout_sec: float | None = None,
-    ) -> dict:
-        """Supervise a NON-Spark stage under the same checkpoint registry
-        (SURVEY §2 S10).
-
-        Reference precedent: the GTFS import runs an external container under
-        a supervising op (pipeline/assets/gtfs.py:28-70) and the deployment
-        resumes stuck runs up to 3 times (dagster.docker.yaml:16-25) — the
-        compute is opaque to the orchestrator, only its lifecycle is managed.
-        Same split here: ``fn(work_dir)`` is arbitrary non-Spark work (fetch a
-        feed, unzip an archive, call a loader) that writes its artifacts into
-        ``work_dir`` and returns a small metadata dict (e.g. ``{'rows': n}``).
-        The pipeline owns idempotence and atomicity:
-
-        * committed stage → ``fn`` is NOT called; the stored manifest returns
-        * success publishes atomically: scratch dir → versioned output dir
-          (one rename), then the manifest (tmp + rename) — the manifest IS
-          the commit point, exactly like ``SnapshotTable.commit``
-        * an exception inside ``fn`` retries up to ``max_attempts`` with a
-          fresh scratch dir; exhaustion re-raises the last error
-        * ``timeout_sec`` bounds each attempt's runtime (the reference bounds
-          every run: start timeout 180 s / max runtime 6 h,
-          dagster.docker.yaml:16-25, plus a stuck-run reaper,
-          scripts/terminate_starting_and_started_runs.py:126-150).  A
-          timed-out attempt counts as a failed attempt.  Cancellation is
-          cooperative: if ``fn`` accepts a second parameter it receives a
-          ``threading.Event`` that is set on timeout so well-behaved work can
-          exit early; a truly hung callable is ABANDONED on its thread —
-          every attempt gets a private scratch dir, so an abandoned zombie
-          can never corrupt a later attempt's output or the publish
-        * exhaustion (errors or timeouts) appends a FAILURE row to
-          ``_lineage`` (snapshot_id=-1, row_count=-1) before re-raising, so
-          supervision is visible in K6 reconciliation; no manifest is
-          written, so the next run resumes cleanly into a new version
-        * a crash after the output rename but before the manifest write
-          leaves an orphan versioned dir; the next run re-runs ``fn`` into a
-          NEW version and commits that — readers only ever follow the
-          manifest
-        * the metadata lands in the same ``_lineage`` table (row_count from
-          ``meta['rows']``), so K6 reconciliation covers external stages too
-
-        Returns the manifest dict: ``{'stage', 'version', 'path', 'meta',
-        'attempts'}``.
-        """
-        import json
-        import shutil
-        import time
-
-        stage_root = os.path.join(self.root, name)
-        manifest_path = os.path.join(stage_root, "manifest.json")
-        os.makedirs(stage_root, exist_ok=True)
-        if not self.force and os.path.exists(manifest_path):
-            with open(manifest_path) as f:
-                return json.load(f)
-
-        import inspect
-        import threading
-        import uuid
-
-        # reap scratch left by a crashed PREVIOUS process — but never a dir a
-        # still-live abandoned (timed-out) thread of THIS process may be
-        # writing (tracked in _ABANDONED_SCRATCH); scratch names also carry a
-        # per-call uuid token, so a retry can never recreate a zombie's path
-        for d in os.listdir(stage_root):
-            p = os.path.join(stage_root, d)
-            if d.startswith("_scratch_") and p not in _ABANDONED_SCRATCH:
-                shutil.rmtree(p, ignore_errors=True)
-        run_token = uuid.uuid4().hex[:8]
-
-        existing = [
-            int(d.split("_v")[1])
-            for d in os.listdir(stage_root)
-            if d.startswith("ext_v") and d.split("_v")[1].isdigit()
-        ]
-        version = max(existing, default=0) + 1
-        out_dir = os.path.join(stage_root, f"ext_v{version}")
-
-        # cooperative cancel: fn(work_dir, cancel_event) if it takes 2 args
-        try:
-            wants_cancel = len(inspect.signature(fn).parameters) >= 2
-        except (TypeError, ValueError):
-            wants_cancel = False
-
-        def run_attempt(scratch: str) -> dict:
-            if timeout_sec is None:
-                return (fn(scratch, threading.Event()) if wants_cancel else fn(scratch)) or {}
-            cancel = threading.Event()
-            box: dict = {}
-
-            def target() -> None:
-                try:
-                    box["meta"] = (fn(scratch, cancel) if wants_cancel else fn(scratch)) or {}
-                except Exception as err:  # noqa: BLE001 — propagated below
-                    box["err"] = err
-
-            t = threading.Thread(target=target, name=f"ext-{name}", daemon=True)
-            t.start()
-            t.join(timeout_sec)
-            if t.is_alive():
-                cancel.set()  # cooperative callables exit; hung ones are abandoned
-                raise ExternalStageTimeout(
-                    f"external stage {name!r} attempt exceeded {timeout_sec}s"
-                )
-            if "err" in box:
-                raise box["err"]
-            return box["meta"]
-
-        last_err: Exception | None = None
-        scratch = ""
-        for attempt in range(1, max_attempts + 1):
-            scratch = os.path.join(stage_root, f"_scratch_{run_token}_a{attempt}")
-            shutil.rmtree(scratch, ignore_errors=True)
-            os.makedirs(scratch)
-            try:
-                meta = run_attempt(scratch)
-                break
-            except Exception as err:  # supervised retry, never a silent skip
-                last_err = err
-                if isinstance(err, ExternalStageTimeout):
-                    # the abandoned thread may still write here — never reap
-                    # this path from THIS process (in-process retries use a
-                    # fresh uuid token, so no collision is possible either)
-                    _ABANDONED_SCRATCH.add(scratch)
-                else:
-                    # safe to reap: the attempt finished (no zombie writer)
-                    shutil.rmtree(scratch, ignore_errors=True)
-        else:
-            self._lineage(name, -1, {"rows": -1})  # failure visible to K6 reconciliation
-            raise RuntimeError(
-                f"external stage {name!r} failed after {max_attempts} attempts"
-            ) from last_err
-
-        os.replace(scratch, out_dir)  # atomic publish of the artifacts
-        manifest = {
-            "stage": name,
-            "version": version,
-            "path": out_dir,
-            "meta": meta,
-            "attempts": attempt,
-            "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-        }
-        _write_json(manifest_path, manifest)  # the commit point
-
-        self._lineage(name, version, meta)
-        return manifest
 
     def completed_stages(self) -> list[str]:
         return [

@@ -1,10 +1,10 @@
 """Geo semantics (SURVEY §2 S9) — lon/lat points, linestrings, distance.
 
 Reference precedent: stations get EPSG:4326 point geometry from lon/lat
-columns (pipeline/sources/lamassu.py:192-196), roadworks are split by
-geometry type with the dropped set warned (pipeline/assets/
-traffic_incidents.py:100-107), and CIFS linestrings are parsed from
-"lat lon lat lon ..." text (pipeline/assets/cifs.py:251-253,303).
+columns (pipeline/sources/lamassu.py:192-196), roadworks are filtered by
+geometry type (pipeline/assets/traffic_incidents.py:100-107), and CIFS
+linestrings are parsed from "lat lon lat lon ..." text
+(pipeline/assets/cifs.py:251-253,303).
 
 Spark has no native geometry type; the engine's representation is plain
 columns — ``lon``/``lat`` doubles for points and ``array<struct<lon,lat>>``
@@ -60,15 +60,6 @@ def haversine_sql(lon1: str, lat1: str, lon2: str, lat2: str) -> str:
     return f"2.0 * {EARTH_RADIUS_KM!r} * asin(sqrt({a}))"
 
 
-def bbox_contains(lon: Column, lat: Column, min_lon: float, min_lat: float, max_lon: float, max_lat: float) -> Column:
-    """Inclusive bounding-box predicate (partition-prunable: plain range
-    conjunction, pushes to the parquet scan)."""
-    return (
-        (lon >= F.lit(min_lon)) & (lon <= F.lit(max_lon))
-        & (lat >= F.lit(min_lat)) & (lat <= F.lit(max_lat))
-    )
-
-
 def parse_linestring(text: Column) -> Column:
     """CIFS-style ``"lat lon lat lon ..."`` text → ``array<struct<lon,lat>>``
     (reference cifs.py:251-253,303 — F6 split + pairwise restructure).
@@ -117,25 +108,6 @@ def geom_type(points: Column) -> Column:
         .when(F.size(points) == 1, F.lit("Point"))
         .otherwise(F.lit("LineString"))
     )
-
-
-def split_by_geom_type(df: DataFrame, points_col: str, keep_type: str = "LineString"):
-    """P4 value-filter-with-side-count: keep rows whose geometry is
-    ``keep_type``; the dropped count rides the same action as a zero-cost
-    Observation (reference warns and drops non-LineStrings,
-    traffic_incidents.py:100-107).
-
-    Returns ``(kept_df, observation)``."""
-    from ..metrics import register_observation
-
-    tagged = df.withColumn("__geom_type", geom_type(F.col(points_col)))
-    obs = register_observation("geom_type_dropped")
-    observed = tagged.observe(
-        obs,
-        F.sum((F.col("__geom_type") != keep_type).cast("long")).alias("dropped"),
-        F.count(F.lit(1)).alias("total"),
-    )
-    return observed.filter(F.col("__geom_type") == keep_type).drop("__geom_type"), obs
 
 
 def grid_radius_join(

@@ -65,7 +65,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .metrics import _row_checksum, observation_result
+from .metrics import observation_result
 
 
 def _as_nullable(dt):
@@ -355,63 +355,6 @@ def write_day_partitioned(df: DataFrame, path: str) -> None:
     session's dynamic partitionOverwriteMode, re-running a backfill replaces
     only the days present in ``df`` (idempotent K2)."""
     df.withColumn("day", F.to_date(F.col("ts"))).write.mode("overwrite").partitionBy("day").parquet(path)
-
-
-def snapshot_diff(
-    spark: SparkSession,
-    table: "SnapshotTable",
-    from_snapshot_id: int,
-    to_snapshot_id: int,
-    key_cols: list[str],
-) -> DataFrame:
-    """Content-level change-data-capture between two committed snapshots:
-    one row per key whose state changed, tagged ``added`` / ``removed`` /
-    ``changed``.
-
-    ``read_incremental`` answers "what rows arrived" and degrades to a
-    conservative full state across overwrites; this answers the DIMENSION
-    question — "which keys differ between publish A and publish B" — exactly,
-    regardless of how the states were produced (appends, overwrites,
-    compactions).  Comparison is a full outer join on the keys with an
-    order-insensitive crc32 struct checksum over the non-key columns — one
-    shuffle per side, no collect, no row-order sensitivity.
-
-    Keys must be unique per snapshot (the K3 uniqueness contract dimension
-    tables already carry); duplicate keys raise rather than silently
-    producing a many-to-many diff.
-    """
-    a = table.read(spark, snapshot_id=from_snapshot_id)
-    b = table.read(spark, snapshot_id=to_snapshot_id)
-    if set(a.columns) != set(b.columns):
-        raise ValueError(
-            f"snapshot schemas differ: {sorted(a.columns)} vs {sorted(b.columns)}"
-        )
-    val_cols = sorted(c for c in a.columns if c not in key_cols)
-
-    def _digest(df: DataFrame, tag: str) -> DataFrame:
-        # the lineage row checksum of the value columns, evaluated on df
-        crc = _row_checksum(df.select(*val_cols))
-        out = df.select(*key_cols, crc.alias(f"__crc_{tag}"))
-        dup = out.groupBy(*key_cols).count().filter(F.col("count") > 1)
-        if dup.head(1):
-            raise ValueError(
-                f"snapshot {tag} has duplicate keys {key_cols} — diff requires "
-                "the K3 uniqueness contract"
-            )
-        return out
-
-    old, new = _digest(a, "old"), _digest(b, "new")
-    joined = old.join(new, on=key_cols, how="full_outer")
-    return (
-        joined.withColumn(
-            "change",
-            F.when(F.col("__crc_old").isNull(), F.lit("added"))
-            .when(F.col("__crc_new").isNull(), F.lit("removed"))
-            .when(F.col("__crc_old") != F.col("__crc_new"), F.lit("changed")),
-        )
-        .filter(F.col("change").isNotNull())
-        .select(*key_cols, "change")
-    )
 
 
 def publish_web_asset(

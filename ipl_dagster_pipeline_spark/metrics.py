@@ -92,9 +92,9 @@ def observed_metrics(prefix: str, timeout_secs: float = 1.0) -> dict[str, dict]:
     polled up to ``timeout_secs``).
 
     Successfully read observations are CONSUMED (dropped from the registry):
-    repeated polls in a long-lived session — bench loops, streaming
-    foreachBatch — neither leak JVM-backed Observation objects nor report
-    stale counts from earlier queries.  Un-run ones stay registered.
+    repeated polls in a long-lived session (bench loops) neither leak
+    JVM-backed Observation objects nor report stale counts from earlier
+    queries.  Un-run ones stay registered.
 
     Probe order: the pinned-Spark completion probe (``obs._jo.future()``,
     non-blocking) first; if that private API disappears in a Spark upgrade,

@@ -45,8 +45,6 @@ is identical at any cluster size.
 
 from __future__ import annotations
 
-from collections.abc import Mapping
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -59,32 +57,6 @@ MILLI = 1_000
 def value_milli(col: Column) -> Column:
     """Exact-integer milli-unit representation fit statistics sum over."""
     return F.round(col.cast("double") * MILLI).cast("long")
-
-
-def fit_literals(fit: DataFrame) -> dict:
-    """Collect a one-row fit frame into plain Python literals — the SERVING
-    path.  Every ``*_transform`` in this module accepts either the fit
-    DataFrame (batch: broadcast cross join) or this dict (streaming /
-    per-record scoring: the frozen fit inlines as literal columns — no join,
-    legal inside ``readStream`` plans)."""
-    rows = fit.collect()
-    if len(rows) != 1:
-        raise ValueError(f"fit frame must have exactly one row, got {len(rows)}")
-    return rows[0].asDict()
-
-
-def _with_fit(df: DataFrame, fit: DataFrame | Mapping, keys: list[str]) -> DataFrame:
-    """Attach the frozen fit columns: literal projection for a Mapping
-    (stream-safe), broadcast cross join for a one-row DataFrame."""
-    if isinstance(fit, Mapping):
-        missing = [k for k in keys if k not in fit]
-        if missing:
-            raise ValueError(f"fit dict missing keys: {missing}")
-        out = df
-        for k in keys:
-            out = out.withColumn(k, F.lit(fit[k]))
-        return out
-    return df.crossJoin(F.broadcast(fit))
 
 
 def _stack(df: DataFrame, cols: list[str], *keep: str, cast: str | None = None) -> DataFrame:
@@ -132,12 +104,11 @@ def zscore_expr(c: str, decimals: int = 6) -> Column:
 
 
 def standardize_transform(
-    df: DataFrame, stats: DataFrame | Mapping, cols: list[str], prefix: str = "z"
+    df: DataFrame, stats: DataFrame, cols: list[str], prefix: str = "z"
 ) -> DataFrame:
     """``df`` plus ``{prefix}_<c>`` z-score columns under the frozen stats
-    (broadcast cross join of the single stats row, or literal inlining when
-    given a :func:`fit_literals` dict — stream-safe; NULL in → NULL out)."""
-    out = _with_fit(df, stats, [k for c in cols for k in (f"n_{c}", f"s_{c}", f"q_{c}")])
+    (broadcast cross join of the single stats row; NULL in → NULL out)."""
+    out = df.crossJoin(F.broadcast(stats))
     for c in cols:
         out = out.withColumn(f"{prefix}_{c}", zscore_expr(c))
     return out.drop(*[k for c in cols for k in (f"n_{c}", f"s_{c}", f"q_{c}")])
@@ -239,7 +210,7 @@ def quantile_bins_fit(
 
 def quantile_bins_transform(
     df: DataFrame,
-    edges: DataFrame | Mapping,
+    edges: DataFrame,
     col: str,
     n_bins: int,
     out_col: str | None = None,
@@ -256,7 +227,7 @@ def quantile_bins_transform(
         bin_expr = bin_expr + F.when(
             e.isNotNull() & (F.col(col) > e), F.lit(1)
         ).otherwise(F.lit(0))
-    out = _with_fit(df, edges, [f"be_{col}_{i}" for i in range(1, n_bins)]).withColumn(
+    out = df.crossJoin(F.broadcast(edges)).withColumn(
         out_col,
         F.when(F.col(col).isNull(), F.lit(None).cast("int")).otherwise(
             bin_expr.cast("int")
@@ -289,14 +260,11 @@ def impute_fit(train: DataFrame, cols: list[str], key_col: str) -> DataFrame:
     ])
 
 
-def impute_transform(
-    df: DataFrame, fits: DataFrame | Mapping, cols: list[str]
-) -> DataFrame:
+def impute_transform(df: DataFrame, fits: DataFrame, cols: list[str]) -> DataFrame:
     """``df`` with NULLs in ``cols`` replaced by the frozen fill values
-    (broadcast cross join of the one-row fits frame, or literal inlining
-    for a :func:`fit_literals` dict).  A NULL fill value (degenerate fit)
-    leaves the column untouched."""
-    out = _with_fit(df, fits, [f"imp_{c}" for c in cols])
+    (broadcast cross join of the one-row fits frame).  A NULL fill value
+    (degenerate fit) leaves the column untouched."""
+    out = df.crossJoin(F.broadcast(fits))
     for c in cols:
         out = out.withColumn(c, F.coalesce(F.col(c), F.col(f"imp_{c}").cast("double")))
     return out.drop(*[f"imp_{c}" for c in cols])
@@ -323,7 +291,7 @@ def clip_fit(
 
 
 def clip_transform(
-    df: DataFrame, bounds: DataFrame | Mapping, col: str, out_col: str | None = None
+    df: DataFrame, bounds: DataFrame, col: str, out_col: str | None = None
 ) -> DataFrame:
     """``df`` plus ``{out_col}`` = ``col`` winsorized into the frozen
     ``[clip_lo, clip_hi]`` — the standard outlier guard that, unlike
@@ -331,7 +299,7 @@ def clip_transform(
     → NULL out; an empty-fit (no bounds row) is a loud error rather than a
     silent pass-through."""
     out_col = out_col or f"clipped_{col}"
-    if not isinstance(bounds, Mapping) and bounds.count() != 1:
+    if bounds.count() != 1:
         raise ValueError("clip_transform needs exactly one bounds row (empty fit?)")
     # greatest/least SKIP nulls (both engines), which would clip a NULL value
     # to clip_lo — guard explicitly so NULL in → NULL out holds
@@ -339,7 +307,7 @@ def clip_transform(
         F.col(col).isNull(), F.lit(None).cast("double")
     ).otherwise(F.least(F.greatest(F.col(col), F.col("clip_lo")), F.col("clip_hi")))
     return (
-        _with_fit(df, bounds, ["clip_lo", "clip_hi"])
+        df.crossJoin(F.broadcast(bounds))
         .withColumn(out_col, clipped)
         .drop("clip_lo", "clip_hi")
     )
@@ -382,10 +350,9 @@ def quantile_sketch_elements(
     percents off it, within 2^−3 relative error.  For a monitoring-grade
     winsorize/impute fit over a 100 TB column that tolerance is the right
     trade; the frozen artifact is identical in shape to the exact fits, so
-    every downstream ``*_transform`` (and :func:`fit_literals` serving)
-    works unchanged.  Estimates come back in ``col``'s own units (milli
-    bounds / ``unit`` — an exact integer-by-constant division, IEEE-
-    identical cross-engine).
+    every downstream ``*_transform`` works unchanged.  Estimates come back
+    in ``col``'s own units (milli bounds / ``unit`` — an exact
+    integer-by-constant division, IEEE-identical cross-engine).
     """
     from .sketches import loghist_quantiles, loghist_sketch
 

@@ -281,63 +281,6 @@ def sample_frames(media: DataFrame, fps: float = 1.0, max_frames: int = 16, fake
     return videos.mapInPandas(_sample, schema=FRAME_SCHEMA)
 
 
-IMAGE_STATS_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("format", T.StringType(), True),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("channels", T.IntegerType(), True),
-        T.StructField("channel_means", T.ArrayType(T.DoubleType()), True),
-        T.StructField("mean_luma", T.DoubleType(), True),
-    ]
-)
-
-
-def image_stats(media: DataFrame) -> DataFrame:
-    """REAL per-image statistics from decoded pixels: dimensions, channel
-    count, per-channel means, mean luma (ITU-R BT.601 for 3+ channels) —
-    the feature-extraction stage of a vision-data pipeline, decoding with
-    the engine's own codecs inside Arrow batches.  Image rows only are
-    shipped to Python (filter BEFORE the Arrow exchange)."""
-
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .imagecodec import PNG_SIG, decode_image
-
-        for pdf in batches:
-            recs = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                b = bytes(payload)
-                fmt = (
-                    "png" if b[:8] == PNG_SIG
-                    else "ppm" if b[:2] in (b"P5", b"P6")
-                    else "bmp" if b[:2] == b"BM"
-                    else "unknown"
-                )
-                arr = decode_image(b)
-                means = [round(float(m), 6) for m in arr.reshape(-1, arr.shape[2]).mean(axis=0)]
-                if arr.shape[2] >= 3:
-                    luma = 0.299 * means[0] + 0.587 * means[1] + 0.114 * means[2]
-                else:
-                    luma = means[0]
-                recs.append(
-                    {
-                        "media_id": mid,
-                        "format": fmt,
-                        "width": arr.shape[1],
-                        "height": arr.shape[0],
-                        "channels": arr.shape[2],
-                        "channel_means": means,
-                        "mean_luma": round(float(luma), 6),
-                    }
-                )
-            out = pd.DataFrame(recs, columns=[f.name for f in IMAGE_STATS_SCHEMA.fields])
-            yield out.astype({"width": "int32", "height": "int32", "channels": "int32"})
-
-    images = media.filter(F.col("media_type") == "image")
-    return images.mapInPandas(_stats, schema=IMAGE_STATS_SCHEMA)
-
-
 def latest_media_per_source(media: DataFrame) -> DataFrame:
     """A3 parity: latest media per (source, media_type) by captured_ts —
     max_by, no self-join (reference: latest webcam image probe)."""

@@ -17,12 +17,6 @@ from pyspark.sql import functions as F
 from .windows import rank_dedup
 
 
-def filter_valid(df: DataFrame, *predicates: Column) -> DataFrame:
-    """Conjunctive column-expression filter (P2/P3).  Keep predicates as
-    Column exprs (not UDFs) so they push down to the scan."""
-    return df.filter(reduce(lambda a, b: a & b, predicates))
-
-
 def temporal_validity_filter(df: DataFrame, end_col: str, as_of) -> DataFrame:
     """Drop records already expired at ``as_of`` (P5; reference skips
     situations with endtime < current_time, cifs.py:143-147)."""

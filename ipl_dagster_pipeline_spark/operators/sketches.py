@@ -18,7 +18,7 @@ The sparse register frame (only non-empty buckets) IS the sketch, and it is
 the whole scale story: sketches merge by elementwise MAX, so partial
 registers combine map-side, shuffle one tiny row per (group, bucket) — at
 most 64 rows per group regardless of input size — and UNION of inputs ==
-MAX-merge of their sketches (tested).  That is how a 100 TB distinct-count
+MAX-merge of their sketches.  That is how a 100 TB distinct-count
 runs as a single map-side-combined aggregation; the raw values are never
 shuffled.
 
@@ -70,18 +70,6 @@ def hll_sketch(
         F.shiftrightunsigned(h, HLL_P).alias("rest"),
     )
     return buck.groupBy(*group_cols, "bucket").agg(F.max(hll_rank(F.col("rest"))).alias("m"))
-
-
-def hll_merge(*sketches: DataFrame) -> DataFrame:
-    """MAX-merge register frames (same grouping schema): the sketch of the
-    UNION of the inputs, exactly."""
-    if not sketches:
-        raise ValueError("hll_merge: at least one sketch required")
-    out = sketches[0]
-    for s in sketches[1:]:
-        out = out.unionByName(s)
-    keys = [c for c in out.columns if c not in ("m",)]
-    return out.groupBy(*keys).agg(F.max("m").alias("m"))
 
 
 def hll_estimate(regs: DataFrame, group_cols: list[str]) -> DataFrame:
@@ -319,15 +307,6 @@ def loghist_sketch(
         .groupBy(*group_cols, "bound")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-
-
-def loghist_merge(*sketches: DataFrame) -> DataFrame:
-    """Merge = concat + re-sum: UNION of inputs == merge of sketches."""
-    out = sketches[0]
-    for s in sketches[1:]:
-        out = out.unionByName(s)
-    keys = [c for c in out.columns if c != "cnt"]
-    return out.groupBy(*keys).agg(F.sum("cnt").alias("cnt"))
 
 
 def loghist_quantiles(

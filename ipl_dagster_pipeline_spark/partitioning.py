@@ -13,8 +13,7 @@ three things AQE cannot do:
 
 Windows/sessionization over conv_id cannot be salted (they need the whole
 conversation in order); for those, skew is bounded because conversations are
-bounded, and `repartition_sorted` gives the range-partitioned sort the as-of
-big-side path wants (north rule).
+bounded.
 """
 
 from __future__ import annotations
@@ -181,24 +180,10 @@ def fan_out_scan(df: DataFrame, target: int | None = None) -> DataFrame:
             return df
         size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
         max_pb = _parse_bytes(spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728b"))
-    except Exception:  # un-compilable edge (e.g. streaming frame) — leave as-is
+    except Exception:  # a plan the probe cannot compile — leave as-is
         return df
     # size < target·maxPartitionBytes ⟺ the scan cannot fill `target` tasks
     return df.repartition(target) if size < target * max_pb else df
-
-
-def repartition_sorted(
-    df: DataFrame,
-    n_partitions: int | None = None,
-    key: str = "conv_id",
-    order: tuple[str, ...] = ("ts", "turn_idx"),
-) -> DataFrame:
-    """Range-partition by key and sort within partitions by (key, *order) —
-    the physical layout the sort-merge as-of path and write-ordered parquet
-    files want (north rule; SURVEY §2.7 O2)."""
-    parts = [F.col(key)]
-    rp = df.repartitionByRange(n_partitions, *parts) if n_partitions else df.repartitionByRange(*parts)
-    return rp.sortWithinPartitions(key, *order)
 
 
 def skew_profile(df: DataFrame, key: str, top_n: int = 100) -> DataFrame:
@@ -296,19 +281,3 @@ def morton_sql(exprs: list[str], bits: int = 16) -> str:
     null_guard = " OR ".join(f"({e}) IS NULL" for e in exprs)
     return f"(CASE WHEN {null_guard} THEN NULL ELSE " + " + ".join(terms) + " END)"
 
-
-def cluster_by_morton(
-    df: DataFrame, cols: list[Column], n_partitions: int | None = None, bits: int = 16
-) -> DataFrame:
-    """Z-order layout: range-partition AND sort by the Morton code, so each
-    written file covers a small hyper-rectangle of the clustered columns —
-    the write-side half of data skipping (the read side is the engine
-    consulting per-file min/max, free in Iceberg/Delta/parquet footers)."""
-    z = morton_code(cols, bits).alias("__z")
-    out = df.withColumn("__z", z)
-    rp = (
-        out.repartitionByRange(n_partitions, "__z")
-        if n_partitions
-        else out.repartitionByRange("__z")
-    )
-    return rp.sortWithinPartitions("__z").drop("__z")

@@ -27,7 +27,7 @@ pick n_buckets so a bucket ≈ a few GB.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io import SnapshotTable
@@ -50,41 +50,6 @@ def write_feature_buckets(feats: DataFrame, path: str, n_buckets: int = DEFAULT_
     )
 
 
-def _rebuild_buckets(
-    new_rows: DataFrame,
-    full: DataFrame,
-    tool_dim: DataFrame,
-    features_path: str,
-    gap_seconds: int,
-    n_buckets: int,
-) -> Observation:
-    """Rebuild the features of every conv bucket ``new_rows`` touches from
-    ``full`` history and publish them over those buckets; returns the
-    write's observation (``metrics.observe_stage``: rows, checksum).
-
-    A window feature of conversation X must be rebuilt whenever ANY turn of
-    X arrives, so the touched buckets are joined back to full history before
-    the feature build.  The dynamic overwrite mode is pinned ON THE WRITER —
-    relying on the session conf would silently become a FULL-table overwrite
-    (destroying untouched buckets) under any session that left Spark's
-    default static mode in place."""
-    touched = new_rows.select(conv_bucket(F.col("conv_id"), n_buckets).alias("conv_bucket")).distinct()
-    affected = full.withColumn("conv_bucket", conv_bucket(F.col("conv_id"), n_buckets)).join(
-        F.broadcast(touched), "conv_bucket"
-    )
-    feats = build_turn_features(affected.drop("conv_bucket"), tool_dim, gap_seconds=gap_seconds)
-    feats, obs = observe_stage(
-        feats.withColumn("conv_bucket", conv_bucket(F.col("conv_id"), n_buckets)), "incremental"
-    )
-    (
-        feats.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("conv_bucket")
-        .parquet(features_path)
-    )
-    return obs
-
-
 def incremental_update(
     spark: SparkSession,
     transcripts_table: SnapshotTable,
@@ -96,16 +61,37 @@ def incremental_update(
 ) -> dict:
     """Rebuild features for every bucket touched after ``since_snapshot_id``.
 
+    A window feature of conversation X must be rebuilt whenever ANY turn of
+    X arrives, so the touched buckets are joined back to full history before
+    the feature build.  The dynamic overwrite mode is pinned ON THE WRITER —
+    relying on the session conf would silently become a FULL-table overwrite
+    (destroying untouched buckets) under any session that left Spark's
+    default static mode in place.
+
     Returns {'touched_buckets': n, 'rebuilt_rows': n, 'to_snapshot': id};
-    ``rebuilt_rows`` is counted by the publishing write itself.
+    ``rebuilt_rows`` is counted by the publishing write itself
+    (``metrics.observe_stage``).
     """
     current = transcripts_table.current_snapshot_id()
     if current is None or current <= since_snapshot_id:
         return {"touched_buckets": 0, "rebuilt_rows": 0, "to_snapshot": since_snapshot_id}
     new_rows = transcripts_table.read_incremental(spark, since_snapshot_id)
     n_touched = new_rows.select(conv_bucket(F.col("conv_id"), n_buckets)).distinct().count()
-    obs = _rebuild_buckets(
-        new_rows, transcripts_table.read(spark), tool_dim, features_path, gap_seconds, n_buckets
+    touched = new_rows.select(conv_bucket(F.col("conv_id"), n_buckets).alias("conv_bucket")).distinct()
+    affected = (
+        transcripts_table.read(spark)
+        .withColumn("conv_bucket", conv_bucket(F.col("conv_id"), n_buckets))
+        .join(F.broadcast(touched), "conv_bucket")
+    )
+    feats = build_turn_features(affected.drop("conv_bucket"), tool_dim, gap_seconds=gap_seconds)
+    feats, obs = observe_stage(
+        feats.withColumn("conv_bucket", conv_bucket(F.col("conv_id"), n_buckets)), "incremental"
+    )
+    (
+        feats.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("conv_bucket")
+        .parquet(features_path)
     )
     return {
         "touched_buckets": n_touched,

@@ -73,16 +73,3 @@ def enforce_schema(df: DataFrame, schema: T.StructType) -> DataFrame:
         for f in schema.fields
     ]
     return df.select(*cols)
-
-
-def assert_identifier_safety(*names: str) -> None:
-    """Reject unsafe table/column identifiers before any DDL-ish use.
-
-    Reference parity: `_assert_sql_safety` regex guard
-    (postgis_geopandas_io_manager.py:62-69), SURVEY §2.2 K5.
-    """
-    import re
-
-    for name in names:
-        if not re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", name or ""):
-            raise ValueError(f"unsafe identifier: {name!r}")

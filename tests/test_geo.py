@@ -1,5 +1,5 @@
-"""Geo semantics (S9): haversine, linestring parse/length, geom-type split
-with side-count, and the wrapped-grid radius join vs brute force."""
+"""Geo semantics (S9): haversine, linestring parse/length, geom type, and the
+wrapped-grid radius join vs brute force."""
 
 from __future__ import annotations
 
@@ -7,15 +7,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from ipl_dagster_pipeline_spark.functions.geo import (
-    bbox_contains,
     geom_type,
     grid_radius_join,
     haversine_km,
     linestring_length_km,
     parse_linestring,
-    split_by_geom_type,
 )
-from ipl_dagster_pipeline_spark.metrics import observed_metrics
 
 
 def _stations(spark, n=100):
@@ -111,29 +108,6 @@ def test_parse_linestring_and_length(spark):
     assert out[2].gt == "Point" and out[2].len_km == 0.0
     assert out[3].gt == "Empty" and out[3].n == 0
     assert out[4].n is None  # null text → null geometry, never a crash
-
-
-def test_split_by_geom_type_side_count(spark):
-    df = spark.createDataFrame(
-        [(1, "0 0 1 1"), (2, "5 5"), (3, "2 2 3 3 4 4"), (4, "")],
-        "id long, txt string",
-    ).select("id", parse_linestring(F.col("txt")).alias("pts"))
-    kept, obs = split_by_geom_type(df, "pts", keep_type="LineString")
-    assert sorted(r.id for r in kept.collect()) == [1, 3]
-    got = observed_metrics("geom_type_dropped")
-    (row,) = got.values()
-    assert row["dropped"] == 2 and row["total"] == 4
-
-
-def test_bbox_contains_pushes_down(spark, tmp_path):
-    path = str(tmp_path / "pts")
-    _stations(spark).write.parquet(path)
-    df = spark.read.parquet(path)
-    q = df.filter(bbox_contains(F.col("s_lon"), F.col("s_lat"), 0.0, 0.0, 90.0, 50.0))
-    plan = q._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters" in plan and "GreaterThanOrEqual(s_lon,0.0)" in plan
-    for r in q.collect():
-        assert 0.0 <= r.s_lon <= 90.0 and 0.0 <= r.s_lat <= 50.0
 
 
 def test_grid_radius_join_null_coords_never_match(spark):

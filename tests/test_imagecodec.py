@@ -9,14 +9,12 @@ import zlib
 
 import numpy as np
 import pytest
+from imagefixtures import encode_bmp, encode_png, encode_ppm, png_chunk
 
 from ipl_dagster_pipeline_spark.operators.imagecodec import (
     PNG_SIG,
     UnsupportedImage,
     decode_image,
-    encode_bmp,
-    encode_png,
-    encode_ppm,
     resize_nearest,
 )
 
@@ -95,14 +93,12 @@ def _encode_png_filtered(arr: np.ndarray, ftype: int) -> bytes:
         prev = cur
     color_type = {1: 0, 2: 4, 3: 2, 4: 6}[c]
     ihdr = struct.pack(">IIBBBBB", w, h, 8, color_type, 0, 0, 0)
-
-    def chunk(tag, payload):
-        return (
-            struct.pack(">I", len(payload)) + tag + payload
-            + struct.pack(">I", zlib.crc32(tag + payload) & 0xFFFFFFFF)
-        )
-
-    return PNG_SIG + chunk(b"IHDR", ihdr) + chunk(b"IDAT", zlib.compress(bytes(raw))) + chunk(b"IEND", b"")
+    return (
+        PNG_SIG
+        + png_chunk(b"IHDR", ihdr)
+        + png_chunk(b"IDAT", zlib.compress(bytes(raw)))
+        + png_chunk(b"IEND", b"")
+    )
 
 
 @pytest.mark.parametrize("ftype", [0, 1, 2, 3, 4])
@@ -159,20 +155,6 @@ def test_decode_media_real_reports_true_dimensions(real_media):
         assert got[mid].n_bytes == len(payloads[mid])
         assert got[mid].content_hash == hashlib.md5(payloads[mid]).hexdigest()
         assert got[mid].duration_s is None
-
-
-def test_image_stats_real_channel_means(real_media):
-    from ipl_dagster_pipeline_spark.operators.multimodal import image_stats
-
-    df, arrs, _ = real_media
-    got = {r.media_id: r for r in image_stats(df).collect()}
-    assert {got[1].format, got[2].format, got[3].format} == {"ppm", "bmp", "png"}
-    for mid, a in arrs.items():
-        exp = [round(float(m), 6) for m in a.reshape(-1, 3).mean(axis=0)]
-        assert got[mid].channel_means == exp
-        assert got[mid].channels == 3
-        exp_luma = round(0.299 * exp[0] + 0.587 * exp[1] + 0.114 * exp[2], 6)
-        assert got[mid].mean_luma == pytest.approx(exp_luma, abs=1e-9)
 
 
 def test_resize_images_real_pixels(real_media):

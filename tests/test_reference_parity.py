@@ -21,7 +21,6 @@ from ipl_dagster_pipeline_spark.functions.incidents import (
 from ipl_dagster_pipeline_spark.operators.relational import (
     broadcast_dim_join,
     explode_json_records,
-    filter_valid,
     group_pivot_sum,
     temporal_validity_filter,
 )
@@ -47,7 +46,7 @@ def test_station_status_pivot_chain(spark):
         "vehicle_type_id string, form_factor string",
     )
 
-    active = filter_valid(stations, F.col("is_renting"), F.col("is_installed"))
+    active = stations.filter(F.col("is_renting") & F.col("is_installed"))
     exploded = explode_json_records(
         active,
         "vehicle_types_available",

@@ -8,8 +8,6 @@ from pyspark.sql import functions as F
 from ipl_dagster_pipeline_spark.operators.sketches import (
     HLL_M,
     hll_distinct,
-    hll_estimate,
-    hll_merge,
     hll_sketch,
 )
 
@@ -40,21 +38,6 @@ def test_sketch_is_bounded_and_duplicate_insensitive(vals, spark):
     # duplicating the input changes NOTHING (registers are max-stable)
     doubled = hll_sketch(vals.unionAll(vals), ["g"], F.col("v"))
     assert sk.exceptAll(doubled).count() == 0 and doubled.exceptAll(sk).count() == 0
-
-
-def test_merge_equals_sketch_of_union(vals):
-    """The mergeability law the 100-TB shape relies on: sketch(A ∪ B) ==
-    max-merge(sketch(A), sketch(B)), EXACTLY (integer registers)."""
-    a = vals.filter(F.col("v").isNull() | (F.hash("v") % 2 == 0))
-    b = vals.subtract(a.filter(F.col("v").isNotNull())).filter(F.col("v").isNotNull())
-    union_sk = hll_sketch(vals.dropDuplicates(["g", "v"]), ["g"], F.col("v"))
-    merged = hll_merge(hll_sketch(a, ["g"], F.col("v")), hll_sketch(b, ["g"], F.col("v")))
-    assert merged.exceptAll(union_sk).count() == 0
-    assert union_sk.exceptAll(merged).count() == 0
-    # and the estimates (derived deterministically) agree exactly too
-    ea = hll_estimate(union_sk, ["g"]).collect()
-    eb = hll_estimate(merged, ["g"]).collect()
-    assert sorted(map(tuple, ea)) == sorted(map(tuple, eb))
 
 
 def test_nulls_skipped_and_empty_input(spark):
@@ -147,13 +130,11 @@ def test_cms_grouped_sketch_probes_per_group(spark, freq_vals):
 
 
 def test_loghist_sketch_merge_and_error_bound(spark):
-    """Mergeable log-histogram quantiles: UNION of inputs == merge of
-    sketches (bit-identical), bounds are monotone in the value, NULLs are
+    """Log-histogram quantiles: bounds are monotone in the value, NULLs are
     excluded, negatives mirror, and every quantile estimate is within the
     2^-3 relative-error bound of the exact rank element (milli scale)."""
     from ipl_dagster_pipeline_spark.operators.sketches import (
         loghist_bound,
-        loghist_merge,
         loghist_quantiles,
         loghist_sketch,
     )
@@ -186,13 +167,6 @@ def test_loghist_sketch_merge_and_error_bound(spark):
             # negatives mirror: representative is the bucket bound closer to
             # zero (an UPPER bound of the value), same ≤2^-3 relative error
             assert m <= r.b < 0 and -r.b <= -m < -r.b + max(-r.b // 8, 1) + 1
-
-    # merge == whole
-    whole = loghist_sketch(df, "v")
-    half1 = loghist_sketch(df.limit(6), "v")
-    half2 = loghist_sketch(df.subtract(df.limit(6)), "v")
-    merged = loghist_merge(half1, half2)
-    assert merged.exceptAll(whole).count() == 0 and whole.exceptAll(merged).count() == 0
 
     # grouped quantiles stay within the sketch's relative error of exact
     ev = spark.range(0, 2000).select(
