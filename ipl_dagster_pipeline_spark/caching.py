@@ -21,6 +21,8 @@ concurrently running pipelines should wrap its work in
 are released at scope exit and never touch the global registry, so one
 pipeline's release can't unpersist a frame another thread still reads.
 Unscoped use keeps the original single-pipeline-at-a-time semantics.
+A scope also holds the Observations (capped operators' drop counts,
+``metrics.register_observation``) its thread registers, until it exits.
 
 Spark's cache is keyed by query plan, not by DataFrame object: a second
 persist of a plan that is already cached is a no-op, and unpersisting
@@ -38,17 +40,32 @@ from __future__ import annotations
 
 import threading
 from contextlib import contextmanager
+from dataclasses import dataclass, field
 from typing import Iterator
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 
 _LOCK = threading.Lock()
 _TRACKED: list[DataFrame] = []
-_SCOPES = threading.local()  # .stack: list[list[DataFrame]] per thread
+_SCOPES = threading.local()  # .stack: list[Scope] per thread
 # semanticHash -> [[first frame persisted with that plan, holders], ...]:
 # one entry per shared Spark cache entry, guarded by _LOCK
 _HOLDS: dict[int, list[list]] = {}
+
+
+@dataclass
+class Scope:
+    """What one :func:`tracked_scope` owns on its thread."""
+
+    frames: list[DataFrame] = field(default_factory=list)
+    observations: list[Observation] = field(default_factory=list)
+
+
+def current_scope() -> Scope | None:
+    """The innermost :func:`tracked_scope` open on this thread, if any."""
+    stack = getattr(_SCOPES, "stack", None)
+    return stack[-1] if stack else None
 
 
 def tracked_persist(df: DataFrame) -> DataFrame:
@@ -68,11 +85,8 @@ def tracked_persist(df: DataFrame) -> DataFrame:
             entries.append([out, 1])
         else:
             held[1] += 1
-        stack = getattr(_SCOPES, "stack", None)
-        if stack:
-            stack[-1].append(out)
-        else:
-            _TRACKED.append(out)
+        scope = current_scope()
+        (scope.frames if scope else _TRACKED).append(out)
     return out
 
 
@@ -128,17 +142,19 @@ def release_tracked(blocking: bool = False) -> int:
 
 
 @contextmanager
-def tracked_scope(blocking: bool = False) -> Iterator[list[DataFrame]]:
-    """Isolate this thread's tracked persists: frames persisted inside the
-    ``with`` block are released at exit, and a concurrent pipeline calling
-    :func:`release_tracked` (or running its own scope) cannot release them."""
+def tracked_scope(blocking: bool = False) -> Iterator[Scope]:
+    """Isolate this thread's tracked persists and Observations: frames
+    persisted inside the ``with`` block are released at exit, and a
+    concurrent pipeline calling :func:`release_tracked` (or running its own
+    scope) cannot release them; the Observations are dropped at exit."""
     stack = getattr(_SCOPES, "stack", None)
     if stack is None:
         stack = _SCOPES.stack = []
-    frames: list[DataFrame] = []
-    stack.append(frames)
+    scope = Scope()
+    stack.append(scope)
     try:
-        yield frames
+        yield scope
     finally:
         stack.pop()
-        _release(frames, blocking)
+        scope.observations.clear()
+        _release(scope.frames, blocking)

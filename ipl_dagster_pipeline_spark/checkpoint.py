@@ -30,7 +30,7 @@ from pyspark.util import inheritable_thread_target
 
 from .caching import tracked_scope
 from .io import SnapshotTable
-from .metrics import append_lineage, observation_result, observe_stage
+from .metrics import append_lineage, observation_result, observe_stage, scope_observations
 
 
 class CheckpointedPipeline:
@@ -89,7 +89,10 @@ class CheckpointedPipeline:
         and checked against the parquet footers before the publish; the
         lineage row (one per commit, ``partition_id = -1``) is appended with
         pyarrow, and the read-back uses the schema the manifest recorded,
-        so no job (no second pass, no schema inference) follows it."""
+        so no job (no second pass, no schema inference) follows it.  The
+        row's ``observations`` map sums the drop counts the stage's
+        operators registered (``metrics.scope_observations``); NULL when
+        they registered none."""
         tbl = self.table(name)
         if not self.force and tbl.current_snapshot_id() is not None:
             return tbl.read(self.spark)
@@ -98,10 +101,12 @@ class CheckpointedPipeline:
         # so a multi-stage run never accumulates executor storage; the SCOPE
         # (not the global registry) owns the frames, so a concurrent pipeline
         # in the same session can't have its caches yanked by this stage
-        with tracked_scope():
+        with tracked_scope() as scope:
             df, obs = observe_stage(fn(), name)
             snap_id = tbl.commit(df, observation=obs)
-        self._lineage(name, snap_id, observation_result(obs))
+            totals = observation_result(obs)
+            observed = scope_observations(scope.observations)
+        self._lineage(name, snap_id, totals, observed)
         return tbl.read(self.spark)
 
     def run(self, **stages: Callable[..., DataFrame]) -> dict[str, DataFrame]:
@@ -155,7 +160,7 @@ class CheckpointedPipeline:
             raise error
         return done
 
-    def _lineage(self, name: str, snapshot_id: int, totals: dict) -> None:
+    def _lineage(self, name: str, snapshot_id: int, totals: dict, observed: dict) -> None:
         """One lineage row for a commit (``partition_id = -1``)."""
         append_lineage(
             [{
@@ -164,6 +169,7 @@ class CheckpointedPipeline:
                 "partition_id": -1,
                 "row_count": int(totals.get("rows") or 0),
                 "checksum": int(totals.get("checksum") or 0),
+                "observations": observed or None,
             }],
             self.lineage_path,
         )

@@ -8,9 +8,15 @@ Reference precedent: every publish emits ``num_rows`` output metadata
   so the commit's own write computes them — no second pass over the data;
 * the commit checks the observed rows against the parquet footers and
   records each file's row count in the snapshot manifest (``io.py``);
-* ``append_lineage`` adds one row per commit (``partition_id = -1``) to the
-  parquet ``_lineage`` table with pyarrow, in-process — no Spark job;
-* ``stage_totals`` reconciles every stage's latest snapshot in one query.
+* operators that cap or drop rows (LSH oversized buckets, duplicate ids)
+  ``register_observation`` their counts with the stage's scope
+  (``caching.tracked_scope``), and the stage sums them per prefix
+  (``scope_observations``) — the dedup-delta warning made queryable;
+* ``append_lineage`` adds one row per commit (``partition_id = -1``, the
+  drop counts in its ``observations`` map) to the parquet ``_lineage``
+  table with pyarrow, in-process — no Spark job;
+* ``stage_totals`` reconciles every stage's latest snapshot, reading the
+  lineage table back with pyarrow — no Spark job either.
 
 Checksums are order-insensitive (sum of per-row crc32 of the row's JSON) so
 they are stable under any partitioning/parallelism, and a recount of the
@@ -21,27 +27,29 @@ from __future__ import annotations
 
 import itertools
 import os
+import threading
+import time
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-# ---------------------------------------------------------------------------
-# named-observation registry: operators that silently cap/drop rows (LSH
-# oversized buckets) register an Observation here so the enclosing pipeline
-# can report the dropped counts after its action — the A4-style dedup-delta
-# warning (reference lamassu.py:306-311) made queryable.
-# ---------------------------------------------------------------------------
+from .caching import current_scope
 
 _OBS_COUNTER = itertools.count()
-STAGE_OBSERVATIONS: dict[str, Observation] = {}
+# how long a stage waits, in all, for the Observations of its scope
+_SCOPE_OBSERVATION_TIMEOUT_S = 1.0
 
 
 def register_observation(prefix: str) -> Observation:
-    """A fresh uniquely-named Observation, retrievable by its prefix via
-    :func:`observed_metrics` after the consuming action ran."""
-    name = f"{prefix}_{next(_OBS_COUNTER)}"
-    obs = Observation(name)
-    STAGE_OBSERVATIONS[name] = obs
+    """A fresh Observation named ``<prefix>_<n>`` for an operator that caps
+    or drops rows.  Inside a ``caching.tracked_scope`` (every checkpointed
+    stage opens one) it joins that scope, so the stage reports its counts
+    on the lineage row (:func:`scope_observations`); outside a scope only
+    the caller holds it."""
+    obs = Observation(f"{prefix}_{next(_OBS_COUNTER)}")
+    scope = current_scope()
+    if scope is not None:
+        scope.observations.append(obs)
     return obs
 
 
@@ -49,8 +57,6 @@ def _probe_completed(obs: Observation, deadline: float) -> bool | None:
     """True/False = the pinned-Spark private probe (``obs._jo.future()``)
     says completed / not completed by ``deadline``; None = the probe API is
     gone (Spark upgrade drift) — caller must use the public fallback."""
-    import time
-
     jo = getattr(obs, "_jo", None)
     if jo is None:  # never attached to a DataFrame — definitively not run
         return False
@@ -69,8 +75,6 @@ def _get_with_timeout(obs: Observation, timeout_secs: float) -> dict | None:
     bounded by ``timeout_secs``.  ``obs.get`` blocks forever if the observing
     action never ran — the daemon thread caps that at one (leaked, idle)
     thread per un-run observation instead of blocking the pipeline."""
-    import threading
-
     box: list[dict] = []
 
     def fetch() -> None:
@@ -85,64 +89,38 @@ def _get_with_timeout(obs: Observation, timeout_secs: float) -> dict | None:
     return box[0] if box else None
 
 
-def observed_metrics(prefix: str, timeout_secs: float = 1.0) -> dict[str, dict]:
-    """All collected metrics for observations registered under ``prefix``
-    whose action has already executed (un-executed ones are skipped; metric
-    delivery is listener-async, so attached-but-not-yet-delivered ones are
-    polled up to ``timeout_secs``).
+def _read(obs: Observation, deadline: float) -> dict | None:
+    """The metrics of ``obs`` if they arrive by ``deadline``, else None: the
+    pinned-Spark completion probe first, the public fallback if it drifted
+    — a bounded wait, never silently-off (round-3 verdict #3)."""
+    ready = _probe_completed(obs, deadline)
+    if ready is None:
+        return _get_with_timeout(obs, deadline - time.monotonic())
+    return obs.get if ready else None
 
-    Successfully read observations are CONSUMED (dropped from the registry):
-    repeated polls in a long-lived session (bench loops) neither leak
-    JVM-backed Observation objects nor report stale counts from earlier
-    queries.  Un-run ones stay registered.
 
-    Probe order: the pinned-Spark completion probe (``obs._jo.future()``,
-    non-blocking) first; if that private API disappears in a Spark upgrade,
-    the public ``obs.get`` bounded by a daemon-thread timeout — cap-honesty
-    degrades to a bounded wait, never to silently-off (round-3 verdict #3).
+def scope_observations(observations: list[Observation]) -> dict[str, int]:
+    """``{"<prefix>.<metric>": n}``: the metrics of a scope's Observations
+    (each named ``<prefix>_<n>``) summed per prefix, NULL counting 0; all
+    share one ``_SCOPE_OBSERVATION_TIMEOUT_S`` deadline for the
+    listener-async delivery.
 
-    Caveat: an observation attached to a plan branch that AQE prunes away
-    entirely (e.g. empty-relation propagation when EVERY bucket was dropped)
-    never fires — treat "absent" as "branch never executed"."""
-    import time
-
-    out: dict[str, dict] = {}
-    deadline = time.monotonic() + timeout_secs
-    for name, obs in list(STAGE_OBSERVATIONS.items()):
-        if not name.startswith(prefix):
-            continue
-        ready = _probe_completed(obs, deadline)
-        if ready is False:
-            continue
-        if ready is None:  # API drift — public fallback with bounded wait
-            if getattr(obs, "_jo", None) is None:
-                continue
-            row = _get_with_timeout(obs, deadline - time.monotonic())
-            if row is None:
-                continue
-            out[name] = row
-            STAGE_OBSERVATIONS.pop(name, None)
-            continue
+    Caveat: an Observation not delivered by the deadline is left out — its
+    plan branch never ran, e.g. AQE pruned it away entirely (empty-relation
+    propagation when EVERY bucket was dropped).  Treat "absent" as "branch
+    never executed", not as zero."""
+    deadline = time.monotonic() + _SCOPE_OBSERVATION_TIMEOUT_S
+    out: dict[str, int] = {}
+    for obs in observations:
         try:
-            out[name] = obs.get
-        except Exception:
-            # completed but unreadable — ALSO consumed: a permanently-raising
-            # observation must not accumulate in long-lived sessions
-            # (advice r4 #3); it will never become readable later.
-            STAGE_OBSERVATIONS.pop(name, None)
-            continue
-        STAGE_OBSERVATIONS.pop(name, None)
+            row = _read(obs, deadline) or {}
+        except Exception:  # completed but unreadable: its action failed
+            row = {}
+        prefix = obs._name.rsplit("_", 1)[0]
+        for metric, value in row.items():
+            key = f"{prefix}.{metric}"
+            out[key] = out.get(key, 0) + int(value or 0)
     return out
-
-
-def clear_observations(prefix: str = "") -> int:
-    """Drop registered observations matching ``prefix`` (all by default) —
-    the explicit stage-boundary hook for long-lived sessions; returns how
-    many were dropped."""
-    names = [n for n in STAGE_OBSERVATIONS if n.startswith(prefix)]
-    for n in names:
-        STAGE_OBSERVATIONS.pop(n, None)
-    return len(names)
 
 
 def _row_checksum(df: DataFrame) -> F.Column:
@@ -171,14 +149,7 @@ def observation_result(obs: Observation) -> dict:
     """The metrics of ``obs`` once its action has run; raises if they are not
     delivered within ``_OBSERVATION_TIMEOUT_S`` (``obs.get`` alone would block
     forever on an observation whose action never ran)."""
-    import time
-
-    deadline = time.monotonic() + _OBSERVATION_TIMEOUT_S
-    ready = _probe_completed(obs, deadline)
-    if ready is None:  # API drift — public fallback with bounded wait
-        row = _get_with_timeout(obs, deadline - time.monotonic())
-    else:
-        row = obs.get if ready else None
+    row = _read(obs, time.monotonic() + _OBSERVATION_TIMEOUT_S)
     if row is None:
         raise RuntimeError(
             f"observation {obs._name!r} was not delivered within {_OBSERVATION_TIMEOUT_S}s"
@@ -193,9 +164,10 @@ def append_lineage(rows: list[dict], lineage_path: str) -> None:
     Written in-process with pyarrow, no Spark job: one small parquet file
     per call, hidden while written and renamed into place, so a reader
     never sees a torn file.  Rows are coerced to ``schema.LINEAGE_SCHEMA`` first
-    (``committed_at`` defaults to now, extra keys are dropped) — a drifted
-    producer (missing snapshot_id, wrong dtype) fails here, at the write
-    boundary, not at some later reconciliation read."""
+    (``committed_at`` defaults to now, extra keys are dropped, a missing
+    nullable column is NULL) — a drifted producer (missing snapshot_id,
+    wrong dtype) fails here, at the write boundary, not at some later
+    reconciliation read."""
     import uuid
     from datetime import datetime, timezone
 
@@ -208,11 +180,12 @@ def append_lineage(rows: list[dict], lineage_path: str) -> None:
     names = [f.name for f in LINEAGE_SCHEMA.fields]
     now = datetime.now(timezone.utc)
     rows = [{"committed_at": now, **r} for r in rows]
-    missing = {n for r in rows for n in names if r.get(n) is None}
+    required = [f.name for f in LINEAGE_SCHEMA.fields if not f.nullable]
+    missing = {n for r in rows for n in required if r.get(n) is None}
     if missing:
         raise ValueError(f"lineage rows missing columns: {sorted(missing)}")
     table = pa.Table.from_pylist(
-        [{n: r[n] for n in names} for r in rows], schema=to_arrow_schema(LINEAGE_SCHEMA)
+        [{n: r.get(n) for n in names} for r in rows], schema=to_arrow_schema(LINEAGE_SCHEMA)
     )
     os.makedirs(lineage_path, exist_ok=True)
     name = f"part-{uuid.uuid4().hex}.parquet"
@@ -221,29 +194,33 @@ def append_lineage(rows: list[dict], lineage_path: str) -> None:
     os.replace(tmp, os.path.join(lineage_path, name))
 
 
-def stage_totals(spark, lineage_path: str) -> dict[str, tuple[int, int]]:
+def stage_totals(lineage_path: str) -> dict[str, tuple[int, int]]:
     """Reconcile every stage at once: ``{stage: (rows, checksum)}`` summed
     over each stage's LATEST snapshot — summing all history would
-    double-count recomputed stages.  One aggregation over the whole lineage
-    table, read under its declared schema."""
+    double-count recomputed stages.
+
+    The lineage table is tiny and written by pyarrow, so pyarrow reads it
+    back under the declared schema, starting no Spark job: files written
+    before a nullable column existed read it as NULL, and the hidden
+    ``.part-*.tmp`` files of a write in flight are skipped."""
+    import pyarrow.dataset as ds
+    from pyspark.sql.pandas.types import to_arrow_schema
+
     from .schema import LINEAGE_SCHEMA
 
     if not os.path.isdir(lineage_path):
         return {}
-    lin = spark.read.schema(LINEAGE_SCHEMA).parquet(lineage_path)
-    rows = (
-        lin.groupBy("stage", "snapshot_id")
-        .agg(F.sum("row_count").alias("r"), F.sum("checksum").alias("c"))
-        .collect()
-    )
-    latest: dict[str, tuple[int, tuple[int, int]]] = {}
-    for r in rows:
-        if r["stage"] not in latest or r["snapshot_id"] > latest[r["stage"]][0]:
-            latest[r["stage"]] = (r["snapshot_id"], (int(r["r"]), int(r["c"])))
-    return {stage: totals for stage, (_, totals) in latest.items()}
+    lin = ds.dataset(lineage_path, schema=to_arrow_schema(LINEAGE_SCHEMA), format="parquet")
+    sums: dict[tuple[str, int], tuple[int, int]] = {}
+    for r in lin.to_table(columns=["stage", "snapshot_id", "row_count", "checksum"]).to_pylist():
+        rows, checksum = sums.get((r["stage"], r["snapshot_id"]), (0, 0))
+        sums[r["stage"], r["snapshot_id"]] = (rows + r["row_count"], checksum + r["checksum"])
+    latest = {stage: snap for stage, snap in sorted(sums)}  # the last snapshot wins
+    return {stage: sums[stage, snap] for stage, snap in latest.items()}
 
 
 def total_from_lineage(spark, lineage_path: str, stage: str) -> tuple[int, int]:
     """One stage of :func:`stage_totals`: (total rows, total checksum) at the
-    stage's latest snapshot; (0, 0) if absent."""
-    return stage_totals(spark, lineage_path).get(stage, (0, 0))
+    stage's latest snapshot; (0, 0) if absent.  ``spark`` is unused: the
+    lineage table is read with pyarrow."""
+    return stage_totals(lineage_path).get(stage, (0, 0))

@@ -27,7 +27,8 @@ evaluates ``max_bucket`` against the union size AT PROBE TIME, so a bucket
 that crosses the cap mid-history stops emitting FUTURE pairs (already
 verified pairs stand — the cap is a cost guard, not semantics) while a full
 recompute would drop the bucket wholesale.  Dropped probe rows stay
-observable (``metrics.observed_metrics('incr_lsh_dropped')``).
+observable: the ``incr_lsh_dropped.*`` counts on the lineage row of the
+stage that runs the batch (``metrics.register_observation``).
 
 Resume/idempotence: each ``add_batch`` tags its three commits with
 ``batch_id`` (manifest ``meta`` — the Iceberg wap.id pattern) and reads each
@@ -160,8 +161,8 @@ class MinHashIndex:
         second bands/docs copy and poison that id's exact-Jaccard
         verification (shingle sets union across versions).  The guard costs
         one id-pruned anti-join against the docs table per batch.  Dropped
-        duplicates are observable (``observed_metrics('incr_index_dup_ids')``),
-        never silent.
+        duplicates are observable (the ``incr_index_dup_ids.*`` counts on the
+        enclosing stage's lineage row), never silent.
         """
         spark = batch.sparkSession
         p = self.params

@@ -396,7 +396,7 @@ def near_dup_pairs_lsh(
         "__nv", _norm(F.col("v"))  # per-row norm, not per-pair (see bruteforce)
     )
     buckets = hyperplane_buckets_tall(emb, n_planes, n_tables, dim, id_col, vec_col)
-    # the dropped count: metrics.observed_metrics('emb_lsh_dropped')
+    # the dropped count: emb_lsh_dropped.* on the consuming stage's lineage row
     observed, kept = capped_buckets(
         buckets, ["tbl", "bucket"], max_bucket, "emb_lsh_dropped", "dropped_bucket_rows", "bucket_rows"
     )

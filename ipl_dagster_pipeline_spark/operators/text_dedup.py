@@ -17,7 +17,7 @@ Scale notes (100 TB honesty):
   join on bucket, never a cross join;
 * giant buckets (degenerate text) are capped — `lsh_candidates` drops
   buckets above ``max_bucket`` and the dropped-row count is OBSERVABLE
-  (``metrics.observed_metrics('lsh_dropped')`` after the consuming action) —
+  (``lsh_dropped.*`` on the consuming stage's lineage row) —
   the A4-style silent-cap warning made queryable (reference dedup-delta
   warning, lamassu.py:306-311).  The cap is ``partitioning.capped_buckets``,
   shared with the n-gram inverted indexes and the embedding LSH join.
@@ -277,8 +277,9 @@ def ngram_jaccard_pairs(
     df² candidate pairs; its information content is ~0).  Jaccard is then
     computed over the filtered space — internally consistent (both the
     intersection AND the doc sizes exclude dropped shingles), replayable in
-    ANSI SQL, and the dropped-shingle count is observable via
-    ``metrics.observed_metrics('ngram_df_dropped')`` (silent-cap honesty).
+    ANSI SQL, and the dropped-shingle count is observable as
+    ``ngram_df_dropped.*`` on the consuming stage's lineage row
+    (silent-cap honesty).
 
     Scale shape: the document-frequency cap is a count window riding the
     same (shingle) shuffle the inverted-index self-join needs anyway; the
@@ -416,8 +417,8 @@ def overlap_pairs(
     Same construction and guarantees as the Jaccard path: candidates share a
     discriminative shingle (document frequency ≤ ``max_df``, cap riding the
     inverted-index join's own shuffle), sizes and intersections both live in
-    the filtered shingle space, and dropped-shingle counts are observable via
-    ``metrics.observed_metrics('containment_df_dropped')``.  Output columns
+    the filtered shingle space, and dropped-shingle counts are observable as
+    ``containment_df_dropped.*`` on the consuming stage's lineage row.  Output columns
     name the CONTAINED side explicitly (``doc_small`` = fewer surviving
     shingles, ties broken to the lower id) so downstream keeper rules can
     drop the excerpt and keep the superset.  ``threshold`` must be in

@@ -96,8 +96,9 @@ def capped_buckets(
 ) -> tuple[DataFrame, DataFrame]:
     """The two sides ``(observed, kept)`` of an equi self-join on ``keys``:
     ``frame``'s rows in buckets (``keys`` values) of at most ``cap`` rows.
-    ``metrics.observed_metrics(obs_name)`` reports ``{dropped: rows in
-    oversized buckets, total: all rows}`` after the consuming action.
+    The Observation ``obs_name`` (``metrics.register_observation``) reports
+    ``{dropped: rows in oversized buckets, total: all rows}`` after the
+    consuming action — on the lineage row, inside a checkpointed stage.
 
     No separate aggregate job, anti-join or eager ``count()`` (which would
     re-run the upstream lineage mid-plan): a count window over ``keys``

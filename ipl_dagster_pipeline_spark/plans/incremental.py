@@ -17,7 +17,8 @@ untouched conversations.
 2. finds the touched buckets (a window feature of conv X must be rebuilt
    whenever ANY turn of X arrives, late ones included),
 3. rebuilds features for every conversation in those buckets from full
-   history (semi-join prune on the bucket column),
+   history (the touched bucket ids, collected once, filter the bucket
+   column),
 4. publishes with dynamic partition overwrite — re-running the same update is
    idempotent and readers never see a torn table.
 
@@ -76,12 +77,14 @@ def incremental_update(
     if current is None or current <= since_snapshot_id:
         return {"touched_buckets": 0, "rebuilt_rows": 0, "to_snapshot": since_snapshot_id}
     new_rows = transcripts_table.read_incremental(spark, since_snapshot_id)
-    n_touched = new_rows.select(conv_bucket(F.col("conv_id"), n_buckets)).distinct().count()
-    touched = new_rows.select(conv_bucket(F.col("conv_id"), n_buckets).alias("conv_bucket")).distinct()
+    # at most n_buckets ids: collected once, they count the touched buckets
+    # and prune full history as a literal filter
+    buckets = new_rows.select(conv_bucket(F.col("conv_id"), n_buckets)).distinct()
+    touched = [r[0] for r in buckets.collect()]
     affected = (
         transcripts_table.read(spark)
         .withColumn("conv_bucket", conv_bucket(F.col("conv_id"), n_buckets))
-        .join(F.broadcast(touched), "conv_bucket")
+        .where(F.col("conv_bucket").isin(touched))
     )
     feats = build_turn_features(affected.drop("conv_bucket"), tool_dim, gap_seconds=gap_seconds)
     feats, obs = observe_stage(
@@ -94,7 +97,7 @@ def incremental_update(
         .parquet(features_path)
     )
     return {
-        "touched_buckets": n_touched,
+        "touched_buckets": len(touched),
         "rebuilt_rows": observation_result(obs)["rows"],
         "to_snapshot": current,
     }

@@ -56,6 +56,9 @@ LINEAGE_SCHEMA = T.StructType(
         T.StructField("row_count", T.LongType(), False),
         T.StructField("checksum", T.LongType(), False),
         T.StructField("committed_at", T.TimestampType(), False),
+        # summed drop/cap counts the stage's operators observed,
+        # "<prefix>.<metric>" -> n (metrics.scope_observations)
+        T.StructField("observations", T.MapType(T.StringType(), T.LongType()), True),
     ]
 )
 

@@ -116,7 +116,7 @@ def main() -> None:
         stages["sharded"] = lambda curated: shuffle_shards(curated, "doc_id", args.shards)
     out = pipe.run(**stages)
 
-    totals = stage_totals(spark, pipe.lineage_path)
+    totals = stage_totals(pipe.lineage_path)
     for stage in pipe.completed_stages():
         rows, checksum = totals.get(stage, (0, 0))
         print(f"stage={stage} rows={rows} checksum={checksum}")

@@ -57,7 +57,7 @@ def main() -> None:
     publish_dir = os.path.join(args.output, "publish")
     write_day_partitioned(out["features"], publish_dir)
 
-    totals = stage_totals(spark, pipe.lineage_path)
+    totals = stage_totals(pipe.lineage_path)
     for stage in pipe.completed_stages():
         rows, checksum = totals.get(stage, (0, 0))
         print(f"stage={stage} rows={rows} checksum={checksum}")

@@ -215,7 +215,7 @@ def main() -> None:
         features=features,
     )
 
-    totals = stage_totals(spark, pipe.lineage_path)
+    totals = stage_totals(pipe.lineage_path)
     stage_rows = {}
     for stage in pipe.completed_stages():
         rows, checksum = totals.get(stage, (0, 0))

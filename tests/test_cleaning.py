@@ -113,7 +113,8 @@ def test_overlap_pairs_catches_excerpt_jaccard_misses(spark):
     """A short doc embedded verbatim in a long one: containment ≈ 1 while
     Jaccard stays below any useful threshold — the case this operator exists
     for.  Also pins the contained-side naming and the df-cap observation."""
-    from ipl_dagster_pipeline_spark.metrics import observed_metrics
+    from ipl_dagster_pipeline_spark.caching import tracked_scope
+    from ipl_dagster_pipeline_spark.metrics import scope_observations
     from ipl_dagster_pipeline_spark.operators.text_dedup import (
         ngram_jaccard_pairs,
         overlap_pairs,
@@ -130,13 +131,14 @@ def test_overlap_pairs_catches_excerpt_jaccard_misses(spark):
         [(1, long_doc), (2, excerpt), (3, "nothing in common with either")],
         "doc_id long, text string",
     )
-    got = overlap_pairs(docs, threshold=0.8, max_df=100).collect()
+    with tracked_scope() as scope:
+        got = overlap_pairs(docs, threshold=0.8, max_df=100).collect()
+        drop = scope_observations(scope.observations)
     assert len(got) == 1
     row = got[0]
     assert (row.doc_a, row.doc_b, row.doc_small) == (1, 2, 2)  # excerpt named
     assert row.overlap >= 0.95 and row.n_a > row.n_b
-    drop = observed_metrics("containment_df_dropped")
-    assert list(drop.values())[0]["dropped_shingle_rows"] == 0
+    assert drop["containment_df_dropped.dropped_shingle_rows"] == 0
     # symmetric Jaccard misses the same pair at the same bar
     jac = ngram_jaccard_pairs(docs, threshold=0.8, max_df=100).collect()
     assert jac == []

@@ -8,6 +8,8 @@ import os
 import pyspark.sql.functions as F
 import pytest
 
+from ipl_dagster_pipeline_spark.caching import tracked_scope
+from ipl_dagster_pipeline_spark.metrics import scope_observations
 from ipl_dagster_pipeline_spark.operators.dedup_index import MinHashIndex
 from ipl_dagster_pipeline_spark.operators.graph import duplicate_groups
 from ipl_dagster_pipeline_spark.operators.text_dedup import minhash_lsh_dedup
@@ -175,8 +177,6 @@ def test_duplicate_doc_ids_are_dropped_and_observed(spark, docs, tmp_path):
     """Round-5 ADVICE (low): re-submitting an already-indexed id (even with
     NEW text) must not append a second docs/bands copy — a union of shingle
     sets would silently poison that id's exact-Jaccard verification."""
-    from ipl_dagster_pipeline_spark.metrics import observed_metrics
-
     idx = MinHashIndex(str(tmp_path / "idx"))
     b1 = docs.filter(F.col("doc_id") < 100)
     idx.add_batch(b1, batch_id="b1")
@@ -186,17 +186,18 @@ def test_duplicate_doc_ids_are_dropped_and_observed(spark, docs, tmp_path):
         .withColumn("text", F.concat(F.col("text"), F.lit(" MUTATED")))
     )
     fresh = docs.filter((F.col("doc_id") >= 100) & (F.col("doc_id") < 200))
-    p2 = idx.add_batch(resub.unionByName(fresh, allowMissingColumns=False).select("doc_id", "text"), batch_id="b2")
-    p2.count()
+    with tracked_scope() as scope:
+        p2 = idx.add_batch(resub.unionByName(fresh, allowMissingColumns=False).select("doc_id", "text"), batch_id="b2")
+        p2.count()
+        m = scope_observations(scope.observations)
     stored = idx.docs.read(spark)
     assert stored.count() == 200  # one copy per id, originals win
     assert stored.groupBy("doc_id").count().filter("count > 1").count() == 0
     # original text retained for the re-submitted range
     orig_50 = docs.filter(F.col("doc_id") == 50).select("text").first()[0]
     assert stored.filter(F.col("doc_id") == 50).select("text").first()[0] == orig_50
-    m = observed_metrics("incr_index_dup_ids")
-    vals = list(m.values())[-1]
-    assert vals["dropped_dup_ids"] == 50 and vals["batch_rows"] == 150
+    assert m["incr_index_dup_ids.dropped_dup_ids"] == 50
+    assert m["incr_index_dup_ids.batch_rows"] == 150
     # and the index still equals a full recompute over the KEPT corpus
     full = minhash_lsh_dedup(docs.filter(F.col("doc_id") < 200), threshold=0.5)
     assert _pairs_set(idx.all_pairs(spark)) == _pairs_set(full)
@@ -206,22 +207,21 @@ def test_in_batch_duplicate_ids_are_dropped(spark, docs, tmp_path):
     """An id repeated WITHIN one batch must not append two docs/bands copies
     (the shingle union would poison that id's exact-Jaccard verification):
     deterministic keep-min-text, drop observable, never silent."""
-    from ipl_dagster_pipeline_spark.metrics import observed_metrics
-
     idx = MinHashIndex(str(tmp_path / "idx"))
     batch = spark.createDataFrame(
         [(7, "aaaa bbbb cccc dddd"), (7, "totally different text here"), (8, "eeee ffff gggg")],
         "doc_id long, text string",
     )
-    idx.add_batch(batch, "b1")
+    with tracked_scope() as scope:
+        idx.add_batch(batch, "b1")
+        m = scope_observations(scope.observations)
     stored = idx.docs.read(spark)
     assert stored.groupBy("doc_id").count().filter(F.col("count") > 1).count() == 0
     [kept] = stored.filter(F.col("doc_id") == 7).collect()
     assert kept.text == "aaaa bbbb cccc dddd"  # keep-min-text, deterministic
-    m = observed_metrics("incr_index_dup_ids")
-    [vals] = [v for k, v in m.items()]
-    assert vals["dropped_batch_dups"] == 1 and vals["dropped_dup_ids"] == 0
-    assert vals["batch_rows"] == 3
+    assert m["incr_index_dup_ids.dropped_batch_dups"] == 1
+    assert m["incr_index_dup_ids.dropped_dup_ids"] == 0
+    assert m["incr_index_dup_ids.batch_rows"] == 3
 
 
 def test_torn_params_write_leaves_index_openable(tmp_path, monkeypatch):

@@ -71,7 +71,7 @@ def test_lineage_reconciles_total(spark, small_transcripts, tmp_path):
     pipe = CheckpointedPipeline(spark, str(tmp_path / "ckpt"))
     pipe.stage("one", lambda: small_transcripts.coalesce(1))
     pipe.stage("seven", lambda: small_transcripts.repartition(7))
-    totals = stage_totals(spark, pipe.lineage_path)
+    totals = stage_totals(pipe.lineage_path)
     n = small_transcripts.count()
     assert totals["one"] == totals["seven"] and totals["one"][0] == n
     assert total_from_lineage(spark, pipe.lineage_path, "seven") == totals["seven"]
@@ -366,12 +366,7 @@ def test_no_per_row_python_udfs():
 
 
 # Package definitions that nothing outside tests/ reaches, kept on purpose.
-REACHABILITY_ALLOW = {
-    "metrics.observed_metrics": "tests read cap drop counts through it; "
-    "no lineage row carries them yet",
-    "metrics.clear_observations": "resets the observation registry "
-    "observed_metrics reads, between tests",
-}
+REACHABILITY_ALLOW: dict[str, str] = {}
 
 
 def _used_names(node) -> set[str]:
@@ -388,10 +383,26 @@ def _used_names(node) -> set[str]:
     return out
 
 
+def _constants(node) -> list[str]:
+    """The names a module-level assignment binds (``X = …``, ``X: T = …``,
+    ``A, B = …``); none for other statements."""
+    if isinstance(node, ast.Assign):
+        targets = node.targets
+    elif isinstance(node, ast.AnnAssign):
+        targets = [node.target]
+    else:
+        return []
+    return [
+        n.id for t in targets for n in ast.walk(t)
+        if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Store)
+    ]
+
+
 def _reached(defs: dict, names: set[str], roots: set[str]) -> set[str]:
     """Qualnames reachable by name from ``names`` and the ``roots``.  A
-    top-level definition is reached when its name is used; a method when
-    its class is reached and its name is used (dunders: always)."""
+    top-level definition or constant is reached when its name is used; a
+    method when its class is reached and its name is used (dunders:
+    always)."""
     names, hit = set(names), set()
     for q in roots:
         hit.add(q)
@@ -411,13 +422,15 @@ def _reached(defs: dict, names: set[str], roots: set[str]) -> set[str]:
 
 
 def test_no_test_only_definitions():
-    """Ratchet on the engine's surface: every top-level definition and
-    method of the package must be reachable, by name, from what runs
-    outside the tests — ``jobs/``, ``scripts/``, the non-test files of
-    ``perfbench/``, ``bench.py``, ``bench_extra.py``, ``__spark_entry__.py``,
-    every ``catalog/`` definition and the package's module-level code —
-    or be on ``REACHABILITY_ALLOW`` with a reason.  A stale allow-list
-    entry (gone, or now reached) fails too.  AST only, no Spark."""
+    """Ratchet on the engine's surface: every top-level definition, method
+    and module-level constant of the package must be reachable, by name,
+    from what runs outside the tests — ``jobs/``, ``scripts/``, the non-test
+    files of ``perfbench/``, ``bench.py``, ``bench_extra.py``,
+    ``__spark_entry__.py``, every ``catalog/`` definition and the package's
+    module-level code (a constant's own name excluded: binding it is not a
+    use) — or be on ``REACHABILITY_ALLOW`` with a reason.  A stale
+    allow-list entry (gone, or now reached) fails too.  AST only, no
+    Spark."""
     root = pathlib.Path(__file__).resolve().parents[1]
     pkg = root / "ipl_dagster_pipeline_spark"
     defs: dict[str, tuple[str, str | None, set[str]]] = {}  # qualname → (name, class, names used)
@@ -427,6 +440,14 @@ def test_no_test_only_definitions():
         parts = f.relative_to(pkg).with_suffix("").parts
         mod = ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
         for node in ast.parse(f.read_text()).body:
+            consts = [c for c in _constants(node) if not c.startswith("__")]
+            if consts:  # the value runs on import; the binding is no use
+                names |= _used_names(node) - set(consts)
+                for c in consts:
+                    defs[f"{mod}.{c}"] = (c, None, set())
+                    if parts[0] == "catalog":
+                        roots.add(f"{mod}.{c}")
+                continue
             if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
                 names |= _used_names(node)  # module-level code runs on import
                 continue

@@ -69,10 +69,36 @@ def test_lineage_equals_snapshot_recount(spark, job_run):
         r[0]: (int(r[1]), int(r[2] or 0))
         for r in reduce(lambda a, b: a.union(b), map(recount, stages)).collect()
     }
-    assert stage_totals(spark, pipe.lineage_path) == committed
+    assert stage_totals(pipe.lineage_path) == committed
     lin = spark.read.parquet(pipe.lineage_path)
     assert lin.count() == len(stages)  # one row per commit
     assert {r.partition_id for r in lin.collect()} == {-1}
+
+
+def test_lineage_observations_equal_recount(spark, job_run):
+    """The drop counts on the lineage rows equal a recount: pretrain_prep's
+    ``index_pairs`` stage (two ``MinHashIndex.add_batch`` calls) carries the
+    batch rows and probe band rows it observed, nothing dropped at this
+    size; every stage that registers no Observation has a NULL map."""
+    import pyarrow.parquet as pq
+
+    from ipl_dagster_pipeline_spark.operators import text_dedup
+
+    name, root = job_run
+    rows = {r["stage"]: r["observations"] for r in pq.read_table(os.path.join(root, "_lineage")).to_pylist()}
+    want = {}
+    if name == "pretrain_prep":
+        docs = spark.read.parquet(os.path.join(SF, "documents.parquet"))
+        candidates = docs.filter(F.col("doc_id") % 97 != 0)
+        bands = text_dedup.band_rows(text_dedup.minhash_signatures(text_dedup.shingles(candidates)))
+        want["index_pairs"] = {
+            "incr_index_dup_ids.batch_rows": candidates.count(),
+            "incr_index_dup_ids.dropped_dup_ids": 0,
+            "incr_index_dup_ids.dropped_batch_dups": 0,
+            "incr_lsh_dropped.probe_rows": bands.count(),
+            "incr_lsh_dropped.dropped_probe_rows": 0,
+        }
+    assert {s: dict(m) for s, m in rows.items() if m} == want
 
 
 def test_manifest_schema_equals_inferred(spark, job_run):
@@ -82,7 +108,7 @@ def test_manifest_schema_equals_inferred(spark, job_run):
     reads them — and the per-file footer rows sum to the snapshot's rows."""
     name, root = job_run
     pipe = CheckpointedPipeline(spark, root)
-    totals = stage_totals(spark, pipe.lineage_path)
+    totals = stage_totals(pipe.lineage_path)
     types = set()
     for stage in pipe.completed_stages():
         tbl = pipe.table(stage)
@@ -145,6 +171,48 @@ def test_stage_starts_no_job_after_its_commit(spark, tmp_path, monkeypatch):
     assert seen["commit"], "the commit's write started no job"
     assert set(sc.statusTracker().getJobIdsForGroup(group)) == seen["commit"]
     assert df.count() == 50
+
+
+def test_stage_totals_reads_old_lineage_files_without_a_job(spark, tmp_path):
+    """A ``_lineage`` file written with the six columns the table had before
+    ``observations`` existed reads next to new files: the totals are
+    unchanged, its ``observations`` read NULL, and the reconcile starts no
+    Spark job."""
+    from datetime import datetime, timezone
+
+    import pyarrow as pa
+    import pyarrow.dataset as ds
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from ipl_dagster_pipeline_spark.schema import LINEAGE_SCHEMA
+
+    pipe = CheckpointedPipeline(spark, str(tmp_path / "ckpt"))
+    pipe.stage("new", lambda: spark.range(5))
+    before = stage_totals(pipe.lineage_path)
+    old_schema = T.StructType([f for f in LINEAGE_SCHEMA.fields if f.name != "observations"])
+    old = {"stage": "old", "snapshot_id": 1, "partition_id": -1, "row_count": 9, "checksum": 4,
+           "committed_at": datetime.now(timezone.utc)}
+    pq.write_table(
+        pa.Table.from_pylist([old], schema=to_arrow_schema(old_schema)),
+        os.path.join(pipe.lineage_path, "part-old.parquet"),
+    )
+
+    sc = spark.sparkContext
+    group = f"reconcile-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "reconcile")
+    try:
+        totals = stage_totals(pipe.lineage_path)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert totals == {**before, "old": (9, 4)}
+    lin = ds.dataset(pipe.lineage_path, schema=to_arrow_schema(LINEAGE_SCHEMA), format="parquet")
+    assert {r["stage"]: r["observations"] for r in lin.to_table().to_pylist()} == {
+        "new": None, "old": None
+    }
 
 
 def _late_observation(obs):

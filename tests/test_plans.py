@@ -320,10 +320,12 @@ def test_fan_out_scan_adaptive(spark, tmp_path):
 
 
 def test_incremental_update_counts_rows_on_its_write(spark, tmp_path):
-    """One incremental update runs the touched-bucket count and the
+    """One incremental update runs the touched-bucket collect and the
     publishing write, nothing more: ``rebuilt_rows`` is observed by the
     write itself, not by a cache plus a count pass over the rebuilt
-    features."""
+    features, and the collected bucket ids both count the touched buckets
+    and prune full history, so no second scan of the new rows feeds a
+    broadcast join."""
     import uuid
 
     from ipl_dagster_pipeline_spark.io import SnapshotTable
@@ -362,6 +364,6 @@ def test_incremental_update_counts_rows_on_its_write(spark, tmp_path):
         written.select("conv_id", "conv_bucket").distinct(), "conv_id").collect()]
     assert stats["touched_buckets"] == len(set(touched))
     assert stats["rebuilt_rows"] == written.where(F.col("conv_bucket").isin(touched)).count()
-    # the touched-bucket count and the write (its AQE stages); a count pass
-    # over the rebuilt features would add its own jobs
-    assert n_jobs == 10, n_jobs
+    # the touched-bucket collect and the write (its AQE stages); a count
+    # pass over the rebuilt features would add its own jobs
+    assert n_jobs == 7, n_jobs

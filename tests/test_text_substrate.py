@@ -8,9 +8,11 @@ from __future__ import annotations
 import random
 
 import pandas as pd
+import pyspark.sql.functions as F
 import pytest
 
-from ipl_dagster_pipeline_spark.metrics import observed_metrics
+from ipl_dagster_pipeline_spark.caching import tracked_scope
+from ipl_dagster_pipeline_spark.metrics import scope_observations
 from ipl_dagster_pipeline_spark.operators import similarity, text_dedup
 from ipl_dagster_pipeline_spark.operators.dedup_index import MinHashIndex
 
@@ -46,13 +48,14 @@ def test_threshold_outside_unit_interval_raises(spark, tmp_path, op, threshold):
 # -- capped self-join sites ------------------------------------------------
 
 CAP = 4
+DEGENERATE = "the same degenerate text for every document here"
 
 
 def _docs(spark, ids_from: int = 0, n_degenerate: int = 12):
     """A degenerate block (identical text: every bucket/shingle oversized),
     unique docs, and one planted near-dup pair that survives every cap — an
     all-empty result would let AQE prune the observed branch."""
-    rows = [(ids_from + i, "the same degenerate text for every document here") for i in range(n_degenerate)]
+    rows = [(ids_from + i, DEGENERATE) for i in range(n_degenerate)]
     rows += [(100 + ids_from + i, f"unique text number {i} with words w{i} q{i} z{i}") for i in range(4)]
     rows += [
         (200 + ids_from, "a very distinctive rare sentence only this pair contains verbatim"),
@@ -66,11 +69,14 @@ def _oversized_rows(pdf: pd.DataFrame, keys: list[str], cap: int) -> int:
     return int((sizes > cap).sum())
 
 
-def _observe(prefix: str, action) -> list[dict]:
-    """The metrics of the ``prefix`` observations that ``action`` fired."""
-    observed_metrics(prefix)  # consume anything an earlier test left
-    assert action() > 0  # a surviving pair keeps the observed branch alive
-    return list(observed_metrics(prefix).values())
+def _observe(prefix: str, action) -> dict:
+    """``{metric: n}`` of the ``prefix`` counts that ``action`` (the operator
+    call and its consuming action) registers, read from a scope around it
+    the way a checkpointed stage reads them onto its lineage row."""
+    with tracked_scope() as scope:
+        assert action() > 0  # a surviving pair keeps the observed branch alive
+        observed = scope_observations(scope.observations)
+    return {k.removeprefix(f"{prefix}."): v for k, v in observed.items() if k.startswith(f"{prefix}.")}
 
 
 def _bands(df):
@@ -79,11 +85,9 @@ def _bands(df):
 
 def _lsh_candidates(spark, tmp_path):
     df = _docs(spark)
-    out = text_dedup.lsh_candidates(
-        text_dedup.minhash_signatures(text_dedup.shingles(df)), max_bucket=CAP
-    )
+    sig = text_dedup.minhash_signatures(text_dedup.shingles(df))
     bands = _bands(df)
-    got = _observe("lsh_dropped", out.count)
+    got = _observe("lsh_dropped", lambda: text_dedup.lsh_candidates(sig, max_bucket=CAP).count())
     want = {"dropped_band_rows": _oversized_rows(bands, ["band", "bucket"], CAP), "band_rows": len(bands)}
     return [(got, want)]
 
@@ -91,9 +95,8 @@ def _lsh_candidates(spark, tmp_path):
 def _shingle_site(fn, prefix, **kw):
     def site(spark, tmp_path):
         df = _docs(spark)
-        out = fn(df, max_df=CAP, **kw)
         sh = text_dedup.shingles(df).toPandas()
-        got = _observe(prefix, out.count)
+        got = _observe(prefix, lambda: fn(df, max_df=CAP, **kw).count())
         want = {"dropped_shingle_rows": _oversized_rows(sh, ["s"], CAP), "shingle_rows": len(sh)}
         return [(got, want)]
 
@@ -108,11 +111,13 @@ def _near_dup_pairs_lsh(spark, tmp_path):
         v = [rng.uniform(-1, 1) for _ in range(dim)]
         rows += [(100 + 2 * j, v), (101 + 2 * j, [x * 1.001 for x in v])]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    out = similarity.near_dup_pairs_lsh(
-        emb, threshold=0.9, n_planes=planes, n_tables=tables, dim=dim, max_bucket=CAP
-    )
     buckets = similarity.hyperplane_buckets_tall(emb, planes, tables, dim).toPandas()
-    got = _observe("emb_lsh_dropped", out.count)
+    got = _observe(
+        "emb_lsh_dropped",
+        lambda: similarity.near_dup_pairs_lsh(
+            emb, threshold=0.9, n_planes=planes, n_tables=tables, dim=dim, max_bucket=CAP
+        ).count(),
+    )
     want = {
         "dropped_bucket_rows": _oversized_rows(buckets, ["tbl", "bucket"], CAP),
         "bucket_rows": len(buckets),
@@ -153,4 +158,41 @@ def test_cap_observation_counts_oversized_bucket_rows(spark, tmp_path, site):
     observed total equals the rows that entered the cap."""
     for got, want in CAPPED_SITES[site](spark, tmp_path):
         assert min(want.values()) > 0
-        assert got == [want]
+        assert got == want
+
+
+def test_corpus_dedup_pairs_lineage_counts_dropped_band_rows(spark, tmp_path, monkeypatch):
+    """End to end: ``jobs/corpus_dedup.py``'s ``pairs`` stage over a corpus
+    with a degenerate block larger than the LSH bucket cap carries the
+    dropped band rows on its lineage row, equal to a recount of the rows in
+    oversized buckets."""
+    import inspect
+    import sys
+
+    import pyarrow.parquet as pq
+
+    import jobs.corpus_dedup as job
+
+    cap = inspect.signature(text_dedup.lsh_candidates).parameters["max_bucket"].default
+    block = spark.range(10_000, 10_000 + cap).select(
+        F.col("id").alias("doc_id"), F.lit(DEGENERATE).alias("text")
+    )
+    df = _docs(spark).unionByName(block).select(
+        "doc_id", "text", F.lit("en").alias("lang"), F.lit("s0").alias("source"),
+        F.length("text").cast("long").alias("n_chars"),
+    )
+    src = tmp_path / "in"
+    df.write.parquet(str(src / "documents.parquet"))
+    out = str(tmp_path / "out")
+    monkeypatch.setattr(sys, "argv", ["corpus_dedup.py", "--input", str(src), "--output", out])
+    job.main()
+
+    bands = _bands(df)
+    want = {
+        "lsh_dropped.dropped_band_rows": _oversized_rows(bands, ["band", "bucket"], cap),
+        "lsh_dropped.band_rows": len(bands),
+    }
+    rows = {r["stage"]: r["observations"] for r in pq.read_table(f"{out}/_lineage").to_pylist()}
+    assert want["lsh_dropped.dropped_band_rows"] > 0
+    assert dict(rows["pairs"]) == want
+    assert rows["exact"] is None  # a stage that registers no Observation

@@ -322,7 +322,8 @@ def test_winnow_short_doc_fallback(spark):
 def test_lsh_dropped_buckets_are_observable(spark):
     """Silent-cap honesty: capping oversized LSH buckets must emit an
     observable dropped count (reference dedup-delta warning analog)."""
-    from ipl_dagster_pipeline_spark.metrics import observed_metrics
+    from ipl_dagster_pipeline_spark.caching import tracked_scope
+    from ipl_dagster_pipeline_spark.metrics import scope_observations
     from ipl_dagster_pipeline_spark.operators.text_dedup import (
         lsh_candidates,
         minhash_signatures,
@@ -331,18 +332,17 @@ def test_lsh_dropped_buckets_are_observable(spark):
 
     # 12 identical docs -> every band bucket has 12 members > max_bucket=4
     # (all capped), plus 6 unique docs that survive (so AQE cannot prune the
-    # observed branch as an empty relation — see observed_metrics caveat)
+    # observed branch as an empty relation — see scope_observations caveat)
     rows = [(i, "the same degenerate text for every document here") for i in range(12)]
     rows += [(100 + i, f"unique text number {i} with words w{i} q{i} z{i} etc") for i in range(6)]
     df = spark.createDataFrame(rows, ["doc_id", "text"])
     sig = minhash_signatures(shingles(df))
-    cand = lsh_candidates(sig, max_bucket=4).toPandas()
+    with tracked_scope() as scope:
+        cand = lsh_candidates(sig, max_bucket=4).toPandas()
+        got = scope_observations(scope.observations)
     assert (cand["doc_a"] >= 100).all()  # degenerate block capped away
-    got = observed_metrics("lsh_dropped")
     # 12 docs × 4 bands = 48 oversized band rows dropped, 72 total
-    assert any(
-        m.get("dropped_band_rows", 0) == 48 and m.get("band_rows") == 72 for m in got.values()
-    ), got
+    assert got == {"lsh_dropped.dropped_band_rows": 48, "lsh_dropped.band_rows": 72}, got
 
 
 def test_ngram_jaccard_exact_all_pairs(spark):
@@ -383,26 +383,28 @@ def test_ngram_jaccard_exact_all_pairs(spark):
 def test_ngram_jaccard_df_cap_is_observable(spark):
     """Stopword-shingles over the cap leave the similarity space, and the
     dropped row count is observable (silent-cap honesty)."""
-    from ipl_dagster_pipeline_spark.metrics import observed_metrics
+    from ipl_dagster_pipeline_spark.caching import tracked_scope
+    from ipl_dagster_pipeline_spark.metrics import scope_observations
     from ipl_dagster_pipeline_spark.operators.text_dedup import ngram_jaccard_pairs
 
     # 8 docs sharing one common phrase (df=8 > cap -> dropped) + unique
     # tails, PLUS one planted near-dup pair whose shared shingles are rare
     # (df=2 <= cap) so the final output is non-empty — an all-empty result
     # would let AQE empty-relation propagation prune the observed branch
-    # (the documented observed_metrics caveat; same guard as the lsh test)
+    # (the documented scope_observations caveat; same guard as the lsh test)
     rows = [(i, f"shared common prefix phrase here unique tail {i} w{i} z{i}") for i in range(8)]
     rows += [
         (10, "a very distinctive rare sentence only this pair contains verbatim"),
         (11, "a very distinctive rare sentence only this pair contains verbatim!"),
     ]
     df = spark.createDataFrame(rows, ["doc_id", "text"])
-    pairs = ngram_jaccard_pairs(df, threshold=0.5, max_df=4).toPandas()
+    with tracked_scope() as scope:
+        pairs = ngram_jaccard_pairs(df, threshold=0.5, max_df=4).toPandas()
+        got = scope_observations(scope.observations)
     # the common-phrase docs pair with nobody (their shared shingles were
     # dropped); the planted rare pair survives
     assert set(zip(pairs.doc_a, pairs.doc_b)) == {(10, 11)}
-    got = observed_metrics("ngram_df_dropped")
-    assert any(m.get("dropped_shingle_rows", 0) > 0 for m in got.values()), got
+    assert got["ngram_df_dropped.dropped_shingle_rows"] > 0, got
 
 
 def test_tracked_scope_isolates_concurrent_pipelines(spark):
@@ -451,42 +453,54 @@ def test_tracked_release_keeps_a_plan_another_holder_persisted(spark):
     assert not first.storageLevel.useMemory
 
 
-def test_observed_metrics_survive_probe_drift(spark, monkeypatch):
+def test_scope_observations_survive_probe_drift(spark, monkeypatch):
     """Round-3 verdict #3: cap-honesty must not turn silently off if the
     private ``obs._jo.future()`` probe disappears in a Spark upgrade.  With
     the probe disabled (simulated drift), the public-API fallback still
-    delivers the observation; consumed entries leave the registry (ADVICE:
-    no unbounded Observation growth in long-lived sessions)."""
+    delivers the observation."""
     from ipl_dagster_pipeline_spark import metrics
+    from ipl_dagster_pipeline_spark.caching import tracked_scope
 
     monkeypatch.setattr(metrics, "_probe_completed", lambda obs, deadline: None)
-    obs = metrics.register_observation("drifted_cap")
-    name = [n for n in metrics.STAGE_OBSERVATIONS if n.startswith("drifted_cap")][-1]
-    df = spark.range(0, 100).observe(obs, F.count(F.lit(1)).alias("rows"))
-    df.count()
-    got = metrics.observed_metrics("drifted_cap", timeout_secs=5.0)
-    assert got[name] == {"rows": 100}
-    # consumed-on-read: gone from the registry, second poll returns nothing
-    assert name not in metrics.STAGE_OBSERVATIONS
-    assert metrics.observed_metrics("drifted_cap") == {}
+    monkeypatch.setattr(metrics, "_SCOPE_OBSERVATION_TIMEOUT_S", 5.0)
+    with tracked_scope() as scope:
+        obs = metrics.register_observation("drifted_cap")
+        spark.range(0, 100).observe(obs, F.count(F.lit(1)).alias("rows")).count()
+        assert scope.observations == [obs]
+        assert metrics.scope_observations(scope.observations) == {"drifted_cap.rows": 100}
 
 
-def test_observation_registry_bounded_and_clearable(spark):
-    """Un-run observations stay registered (absent != zero) but are
-    explicitly clearable at stage boundaries; run ones are consumed."""
+def test_stage_leaves_out_and_lets_go_of_unrun_observation(spark, tmp_path):
+    """An Observation whose branch never ran is absent from the stage's
+    lineage map (absent != zero), and nothing holds it once the stage's
+    scope has exited; one that ran is summed onto the row."""
+    import gc
+    import weakref
+
+    import pyarrow.parquet as pq
+
     from ipl_dagster_pipeline_spark import metrics
+    from ipl_dagster_pipeline_spark.checkpoint import CheckpointedPipeline
 
-    metrics.clear_observations("bound_test")
-    never_run = metrics.register_observation("bound_test_idle")
-    ran = metrics.register_observation("bound_test_ran")
-    spark.range(7).observe(ran, F.count(F.lit(1)).alias("rows")).count()
-    got = metrics.observed_metrics("bound_test", timeout_secs=5.0)
-    assert [m["rows"] for m in got.values()] == [7]
-    # the never-attached observation is still registered, then cleared
-    assert any(n.startswith("bound_test_idle") for n in metrics.STAGE_OBSERVATIONS)
-    assert metrics.clear_observations("bound_test") == 1
-    assert not any(n.startswith("bound_test") for n in metrics.STAGE_OBSERVATIONS)
-    del never_run
+    refs = []
+
+    def stage():
+        idle = metrics.register_observation("bound_test_idle")
+        spark.range(3).observe(idle, F.count(F.lit(1)).alias("rows"))  # never executed
+        refs.append(weakref.ref(idle))
+        ran = metrics.register_observation("bound_test_ran")
+        return spark.range(7).observe(ran, F.count(F.lit(1)).alias("rows"))
+
+    pipe = CheckpointedPipeline(spark, str(tmp_path / "ckpt"))
+    pipe.stage("s", stage)
+    [row] = pq.read_table(pipe.lineage_path).to_pylist()
+    assert dict(row["observations"]) == {"bound_test_ran.rows": 7}
+    gc.collect()
+    assert refs[0]() is None
+    # outside any scope, registering holds nothing either
+    outside = weakref.ref(metrics.register_observation("bound_test_outside"))
+    gc.collect()
+    assert outside() is None
 
 
 def test_tracked_persists_are_released(spark, docs):
