@@ -7,7 +7,7 @@ pandas pipeline) as an idiomatic Spark DataFrame engine over transcript tables
 
 * point-in-time-correct as-of joins (broadcast-dim and sort-merge big-side paths)
 * windowed features: lag/lead, rolling (rows + range), backfill/forward-fill
-* gap sessionization (window-sum and vectorized grouped-map pandas paths)
+* gap sessionization (window-sum and vectorized grouped-map Arrow paths)
 * schema enforcement, dedup-by-key, pivot aggregation, broadcast/anti/semi joins
 * explicit partitioning + hot-key salting, per-stage lineage/row-count metrics,
   checkpoint/resume over atomic parquet snapshot commits

@@ -134,7 +134,7 @@ WINDOW w5 AS ({W_SQL} ROWS BETWEEN 4 PRECEDING AND CURRENT ROW),
 
 def q_sessionize_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W5 sessionization, BOTH physical paths in one gated result: window-sum
-    and grouped-map pandas session ids joined per turn — the oracle emits the
+    and grouped-map Arrow session ids joined per turn — the oracle emits the
     same SQL session id under both aliases, so any divergence between the two
     implementations value-hash-fails the gate (merged: sessionize_window +
     sessionize_grouped)."""
@@ -162,7 +162,7 @@ FROM g
 
 def q_asof_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J5 as-of join, BOTH physical strategies in one gated result: the
-    interval-broadcast path's columns plus the cogrouped merge_asof path's
+    interval-broadcast path's columns plus the cogrouped-map Arrow as-of path's
     columns (suffix _cg) joined per turn; the oracle duplicates the single
     ASOF JOIN answer under both names (merged: asof_broadcast_range +
     asof_cogrouped)."""

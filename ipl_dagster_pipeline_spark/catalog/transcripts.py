@@ -141,7 +141,7 @@ def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_sessionize_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same semantics via vectorized grouped-map pandas (Arrow) — north rule."""
+    """Same semantics via vectorized grouped-map Arrow (applyInArrow) — north rule."""
     t = transcripts_from_events(spark, sf_dir)
     return _ts_us(sessionize_grouped(t, gap_seconds=1800), "ts")
 
@@ -185,7 +185,8 @@ def q_asof_tool(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_asof_cogrouped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same as-of semantics via cogrouped-map pandas merge_asof (sort-merge path)."""
+    """Same as-of semantics via cogrouped-map Arrow (applyInArrow, numpy
+    searchsorted with merge_asof semantics — the sort-merge path)."""
     t = transcripts_from_events(spark, sf_dir)
     d = tool_dim_from_events(spark, sf_dir)
     out = asof_join_cogrouped(t, d, key="tool", ts_col="ts")

@@ -6,9 +6,10 @@ Spark SQL has no ASOF join, so the engine provides three strategies:
   and forward-fill with ``last(ignorenulls)`` over a (ts, src, turn_idx)
   window.  Pure DataFrame ops: one shuffle, codegen'd, skew handled by the
   same machinery as any window (AQE).  Default/scale path.
-* ``asof_join_cogrouped`` — ``cogroup(...).applyInPandas(pd.merge_asof)``:
-  sort-merge as-of per key group, vectorized via Arrow.  The explicit
-  "range-partitioned sort for the big side" formulation from the north rule.
+* ``asof_join_cogrouped`` — ``cogroup(...).applyInArrow``: sort-merge as-of
+  per key group on Arrow tables, a numpy ``searchsorted`` over the sorted dim
+  timestamps (no pandas).  The explicit "range-partitioned sort for the big
+  side" formulation from the north rule.
 * ``asof_snapshot_broadcast`` — when features are built AS OF one fixed
   timestamp, reduce the dim to its latest snapshot ≤ as_of per key and
   broadcast equi-join (the analog of the reference joining the once-fetched
@@ -16,7 +17,8 @@ Spark SQL has no ASOF join, so the engine provides three strategies:
 
 All paths guarantee **zero temporal leakage**: every matched dim row has
 ``effective_from <= ts``; the matched ``effective_from`` is kept in the output
-so tests can assert it (tests/test_asof.py).
+so tests can assert it (tests/test_asof.py).  A fact with a NULL ``ts``
+matches no snapshot on any path.
 
 Generalizes the reference's only as-of semantics: latest image whose mtime ≤
 now within a bounded lookback (webcam_worker.py:154-207).
@@ -24,7 +26,9 @@ now within a bounded lookback (webcam_worker.py:154-207).
 
 from __future__ import annotations
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -101,11 +105,16 @@ def asof_join_cogrouped(
     ts_col: str = "ts",
     dim_ts: str = "effective_from",
 ) -> DataFrame:
-    """Sort-merge as-of per key group via cogrouped-map pandas (Arrow).
+    """Sort-merge as-of per key group via cogrouped-map Arrow.
 
-    Both sides are hash-cogrouped on ``key``; inside each group a
-    ``pd.merge_asof(direction='backward', allow_exact_matches=True)`` does the
-    sorted merge.  Secondary sort (ts, turn_idx) keeps fact ordering stable.
+    Both sides are hash-cogrouped on ``key`` and arrive as Arrow tables.  The
+    facts are sorted on (ts, turn_idx), NULLs first; the dim is stable-sorted
+    on ``dim_ts`` and ``searchsorted(side="right") - 1`` picks each fact's
+    backward match, exact matches allowed and ties resolved to the last equal
+    snapshot (``pd.merge_asof`` semantics).  A fact with a NULL ``ts``, or
+    with no snapshot at or before it, gets NULL dim columns, as on the
+    union-fill and interval-broadcast paths; a dim row with a NULL
+    ``dim_ts`` is never effective.
     """
     from pyspark.sql import types as T
 
@@ -118,35 +127,31 @@ def asof_join_cogrouped(
         + [T.StructField("matched_effective_from", T.TimestampType(), True)]
     )
     fact_cols = list(facts.columns)
-    has_turn = "turn_idx" in fact_cols
+    order = [(ts_col, "ascending")] + ([("turn_idx", "ascending")] if "turn_idx" in fact_cols else [])
 
-    def _merge(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if left.empty:
-            return pd.DataFrame(columns=fact_cols + vals + ["matched_effective_from"])
-        sort_keys = [ts_col, "turn_idx"] if has_turn else [ts_col]
-        left = left.sort_values(sort_keys, kind="mergesort")
-        if right.empty:
-            out = left.copy()
-            for c in vals:
-                out[c] = None
-            out["matched_effective_from"] = pd.NaT
-            return out
-        right = right.sort_values(dim_ts, kind="mergesort")
-        right = right.rename(columns={dim_ts: "matched_effective_from"})
-        merged = pd.merge_asof(
-            left,
-            right.drop(columns=[key]),
-            left_on=ts_col,
-            right_on="matched_effective_from",
-            direction="backward",
-            allow_exact_matches=True,
+    def _merge(left: pa.Table, right: pa.Table) -> pa.Table:
+        # an empty side arrives as a zero-row table with its full schema, so
+        # it needs no branch: a fact without a match takes a NULL index
+        left = left.take(pc.sort_indices(left, sort_keys=order, null_placement="at_start"))
+        right = right.filter(right.column(dim_ts).is_valid())
+        right = right.take(pc.sort_indices(right, sort_keys=[(dim_ts, "ascending")]))
+        ts = left.column(ts_col)
+        idx = np.searchsorted(
+            right.column(dim_ts).cast(pa.int64()).to_numpy(),
+            pc.fill_null(ts.cast(pa.int64()), 0).to_numpy(),
+            side="right",
+        ) - 1
+        miss = (idx < 0) | ~ts.is_valid().to_numpy(zero_copy_only=False)
+        picked = right.select(vals + [dim_ts]).take(pa.array(idx, mask=miss))
+        return pa.Table.from_arrays(
+            left.select(fact_cols).columns + picked.columns,
+            names=fact_cols + vals + ["matched_effective_from"],
         )
-        return merged[fact_cols + vals + ["matched_effective_from"]]
 
     return (
         facts.groupBy(key)
         .cogroup(dim.groupBy(key))
-        .applyInPandas(_merge, schema=out_schema)
+        .applyInArrow(_merge, schema=out_schema)
     )
 
 

@@ -3,10 +3,11 @@
 The repeatable "same plan" proof for refactors that must not change what
 Spark runs: every catalog query (``__spark_entry__.all_queries()``, 133 at
 the time of writing) plus direct calls of the text operators that
-``jobs/pretrain_prep.py`` and the dedup/LM families use, and of the
+``jobs/pretrain_prep.py`` and the dedup/LM families use, of the
 exact-rank fits and prefix sums it runs (no catalog query calls
-``impute_fit`` or ``clip_fit``), each dumped as its optimized logical plan
-and its executed (pre-AQE) physical plan.
+``impute_fit`` or ``clip_fit``), and of the frames that a bootstrap plus one
+``plans.incremental.incremental_update`` write, each dumped as its optimized
+logical plan and its executed (pre-AQE) physical plan.
 
 Usage::
 
@@ -122,6 +123,50 @@ def _operator_calls(spark, sf_dir: str, tmp: str):
             io_mod.SnapshotTable.commit = real
         return [(f"{i}.{name}", df) for i, (name, df) in enumerate(captured)]
 
+    def incremental():
+        # bootstrap, one late batch, one update: capture every parquet
+        # write's frame, named by the table it lands in
+        from pyspark.sql.readwriter import DataFrameWriter
+
+        from ipl_dagster_pipeline_spark.plans.features import build_turn_features
+        from ipl_dagster_pipeline_spark.plans.incremental import (
+            incremental_update,
+            write_feature_buckets,
+        )
+        from ipl_dagster_pipeline_spark.sources.transcripts import (
+            tool_dim_from_events,
+            transcripts_from_events,
+        )
+
+        work = os.path.join(tmp, "incremental")
+        captured = []
+        real = DataFrameWriter.parquet
+
+        def capture(self, path, *a, **kw):
+            captured.append((os.path.relpath(path, work).split(os.sep)[0], self._df))
+            return real(self, path, *a, **kw)
+
+        DataFrameWriter.parquet = capture
+        try:
+            t = transcripts_from_events(spark, sf_dir)
+            dim = tool_dim_from_events(spark, sf_dir)
+            tbl = io_mod.SnapshotTable(os.path.join(work, "transcripts"))
+            snap = tbl.commit(t)
+            write_feature_buckets(build_turn_features(t, dim), os.path.join(work, "features"))
+            late = t.filter((F.col("turn_idx") == 1) & (F.xxhash64("conv_id") % 16 == 0)).select(
+                "conv_id",
+                (F.col("turn_idx") + 10_000).alias("turn_idx"),
+                "role",
+                "text",
+                "tool",
+                (F.col("ts") + F.expr("INTERVAL 1 DAY")).alias("ts"),
+            )
+            tbl.commit(late, mode="append")
+            incremental_update(spark, tbl, dim, os.path.join(work, "features"), since_snapshot_id=snap)
+        finally:
+            DataFrameWriter.parquet = real
+        return [(f"{i}.{name}", df) for i, (name, df) in enumerate(captured)]
+
     return [
         ("exact_dedup", one(text_dedup.exact_dedup, cand)),
         ("shingles", one(text_dedup.shingles, docs)),
@@ -140,6 +185,7 @@ def _operator_calls(spark, sf_dir: str, tmp: str):
         ("pmi_collocations", one(lm.pmi_collocations, docs)),
         ("near_dup_pairs_lsh", one(similarity.near_dup_pairs_lsh, emb)),
         ("minhash_index.add_batch", index_batches),
+        ("incremental_update", incremental),
         ("impute_fit", one(featurize.impute_fit, num, ["n_chars", "r", "l"], "doc_id")),
         ("clip_fit", one(featurize.clip_fit, num, "r", "doc_id", 1, 99)),
         ("quantile_bins_fit", one(featurize.quantile_bins_fit, num, "n_chars", "doc_id", 8)),

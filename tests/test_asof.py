@@ -73,6 +73,25 @@ def test_exact_match_visible(spark):
         assert row.w == 2.0, fn.__name__
 
 
+def test_null_ts_fact_matches_nothing(spark):
+    """A fact with a NULL ts has no snapshot at or before it: every
+    strategy returns it with NULL dim columns, and a fact with a ts in the
+    same group still matches."""
+    import datetime as dt
+
+    t = dt.datetime(2024, 1, 2)
+    facts = spark.createDataFrame(
+        [("c1", 1, "search", None), ("c1", 2, "search", t)],
+        "conv_id string, turn_idx int, tool string, ts timestamp",
+    )
+    dim = spark.createDataFrame(
+        [("search", t - dt.timedelta(days=1), 1.0)], "tool string, effective_from timestamp, w double"
+    )
+    for fn in (asof_join_union_fill, asof_join_cogrouped, asof_join_broadcast_range):
+        got = {r.turn_idx: (r.w, r.matched_effective_from) for r in fn(facts, dim, key="tool").collect()}
+        assert got == {1: (None, None), 2: (1.0, t - dt.timedelta(days=1))}, fn.__name__
+
+
 def test_snapshot_broadcast_pins_latest_leq_asof(spark):
     facts = spark.createDataFrame([("search", 1)], ["tool", "x"])
     dim = (

@@ -99,6 +99,30 @@ def test_prefix_sum_plans_have_single_data_exchange(spark):
             assert "SinglePartition" not in plan
 
 
+def test_grouped_maps_run_arrow_native(small_transcripts, small_tool_dim):
+    """The grouped-map operators cross the Python boundary as Arrow tables:
+    a fallback to a pandas grouped map would still give the same rows, so
+    only the executed plan shows it."""
+    from ipl_dagster_pipeline_spark.operators.asof import asof_join_cogrouped
+    from ipl_dagster_pipeline_spark.operators.sessionize import sessionize_grouped
+
+    for out, node in (
+        (sessionize_grouped(small_transcripts), "FlatMapGroupsInArrow"),
+        (asof_join_cogrouped(small_transcripts, small_tool_dim, key="tool"), "FlatMapCoGroupsInArrow"),
+    ):
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert node in plan, plan
+        assert "InPandas" not in plan, plan
+
+
+def test_sessionize_plans_one_lag(small_transcripts):
+    """The window twin reads the gap once: one lag expression in its plan."""
+    from ipl_dagster_pipeline_spark.operators.sessionize import sessionize
+
+    plan = sessionize(small_transcripts)._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("lag(") == 1, plan
+
+
 def test_scd2_history_single_exchange_single_sort(spark):
     """Dimension-history contract: the change-collapse window and the
     interval/lead window must SHARE one key exchange and one sort — a second

@@ -39,28 +39,32 @@ def _spark_df(spark, rows):
 @settings(max_examples=12, deadline=None, suppress_health_check=list(HealthCheck))
 @given(rows=transcript_rows())
 def test_sessionize_property(spark, rows):
-    from ipl_dagster_pipeline_spark.operators.sessionize import sessionize
+    """Both sessionization paths (window-sum and grouped-map Arrow) agree
+    with the pandas oracle on every shape."""
+    from ipl_dagster_pipeline_spark.operators.sessionize import sessionize, sessionize_grouped
 
-    got = (
-        sessionize(_spark_df(spark, rows), gap_seconds=GAP)
-        .orderBy("conv_id", "ts", "turn_idx")
-        .toPandas()
-    )
+    df = _spark_df(spark, rows)
     pdf = pd.DataFrame(rows, columns=["conv_id", "turn_idx", "role", "text", "tool", "s"])
     pdf["ts"] = pd.Timestamp("2024-01-01") + pd.to_timedelta(pdf["s"], unit="s")
     pdf = pdf.sort_values(["conv_id", "ts", "turn_idx"], kind="mergesort")
     delta = pdf.groupby("conv_id", sort=False)["ts"].diff().dt.total_seconds()
     exp = (delta.isna() | (delta > GAP)).groupby(pdf["conv_id"], sort=False).cumsum().astype(int)
-    assert got["session_id"].tolist() == exp.tolist()
-    assert got["text"].tolist() == pdf["text"].tolist()  # stable-order text equality
+    for fn in (sessionize, sessionize_grouped):
+        got = fn(df, gap_seconds=GAP).orderBy("conv_id", "ts", "turn_idx").toPandas()
+        assert got["session_id"].tolist() == exp.tolist(), fn.__name__
+        assert got["text"].tolist() == pdf["text"].tolist(), fn.__name__  # stable-order text equality
 
 
 @settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))
 @given(rows=transcript_rows(), dim_offsets=st.lists(st.integers(-3600, 90000), min_size=1, max_size=6))
 def test_asof_property(spark, rows, dim_offsets):
     """Every matched snapshot is the latest one ≤ ts; snapshots strictly in the
-    future are never matched (zero leakage), regardless of shapes."""
-    from ipl_dagster_pipeline_spark.operators.asof import asof_join_broadcast_range
+    future are never matched (zero leakage), regardless of shapes — on the
+    interval-broadcast and the cogrouped-map Arrow paths."""
+    from ipl_dagster_pipeline_spark.operators.asof import (
+        asof_join_broadcast_range,
+        asof_join_cogrouped,
+    )
 
     facts = _spark_df(spark, rows)
     dim = spark.createDataFrame(
@@ -70,23 +74,26 @@ def test_asof_property(spark, rows, dim_offsets):
         ],
         "tool string, effective_from timestamp, w double",
     )
-    out = asof_join_broadcast_range(facts, dim, key="tool").toPandas()
-    assert (out["matched_effective_from"].dropna() <= out.loc[out["matched_effective_from"].notna(), "ts"]).all()
     # oracle: pandas merge_asof per tool
-    f = out.sort_values("ts", kind="mergesort")
+    f = facts.toPandas().sort_values("ts", kind="mergesort")
     d = dim.toPandas().sort_values("effective_from", kind="mergesort")
     exp = pd.merge_asof(
-        f[["conv_id", "turn_idx", "tool", "ts"]].sort_values("ts", kind="mergesort"),
+        f[["conv_id", "turn_idx", "tool", "ts"]],
         d.rename(columns={"effective_from": "mef"}),
         left_on="ts",
         right_on="mef",
         by="tool",
         direction="backward",
     )
-    got_map = {(r.conv_id, r.turn_idx): r.w for r in out.itertuples()}
-    for r in exp.itertuples():
-        g = got_map[(r.conv_id, r.turn_idx)]
-        assert (pd.isna(g) and pd.isna(r.w)) or g == r.w
+    for fn in (asof_join_broadcast_range, asof_join_cogrouped):
+        out = fn(facts, dim, key="tool").toPandas()
+        matched = out["matched_effective_from"].notna()
+        assert (out.loc[matched, "matched_effective_from"] <= out.loc[matched, "ts"]).all(), fn.__name__
+        got_map = {(r.conv_id, r.turn_idx): r.w for r in out.itertuples()}
+        assert len(got_map) == len(exp), fn.__name__
+        for r in exp.itertuples():
+            g = got_map[(r.conv_id, r.turn_idx)]
+            assert (pd.isna(g) and pd.isna(r.w)) or g == r.w, fn.__name__
 
 
 @settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))

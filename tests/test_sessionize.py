@@ -1,4 +1,4 @@
-"""Sessionization: window-sum vs grouped-map pandas equivalence + pandas oracle."""
+"""Sessionization: window-sum vs grouped-map Arrow equivalence + pandas oracle."""
 
 from __future__ import annotations
 
@@ -82,3 +82,23 @@ def test_subsecond_boundary_semantics_agree_across_all_paths(spark):
     for fn in (sessionize, sessionize_grouped):
         got = {(r.conv_id, r.turn_idx): r.session_id for r in fn(df, gap_seconds=1800).collect()}
         assert got == expected, fn.__name__
+
+
+def test_null_ts_turn_opens_a_session_on_both_paths(spark):
+    """A NULL-ts turn sorts first (NULLS FIRST, as the window orders) and has
+    no gap to its neighbours, so it and the turn after it both open a new
+    session — on the grouped-map path too, not only the window path."""
+    import datetime as dt
+
+    t = dt.datetime(2024, 1, 1)
+    rows = [
+        ("c", 3, "user", "c", None, t + dt.timedelta(seconds=10)),
+        ("c", 1, "user", "a", None, None),
+        ("c", 2, "user", "b", None, t),
+    ]
+    df = spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
+    )
+    for fn in (sessionize, sessionize_grouped):
+        got = {r.turn_idx: r.session_id for r in fn(df, gap_seconds=1800).collect()}
+        assert got == {1: 1, 2: 2, 3: 2}, fn.__name__
