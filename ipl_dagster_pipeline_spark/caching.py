@@ -142,11 +142,12 @@ def release_tracked(blocking: bool = False) -> int:
 
 
 @contextmanager
-def tracked_scope(blocking: bool = False) -> Iterator[Scope]:
+def tracked_scope() -> Iterator[Scope]:
     """Isolate this thread's tracked persists and Observations: frames
-    persisted inside the ``with`` block are released at exit, and a
-    concurrent pipeline calling :func:`release_tracked` (or running its own
-    scope) cannot release them; the Observations are dropped at exit."""
+    persisted inside the ``with`` block are released (non-blocking) at
+    exit, and a concurrent pipeline calling :func:`release_tracked` (or
+    running its own scope) cannot release them; the Observations are
+    dropped at exit."""
     stack = getattr(_SCOPES, "stack", None)
     if stack is None:
         stack = _SCOPES.stack = []
@@ -157,4 +158,4 @@ def tracked_scope(blocking: bool = False) -> Iterator[Scope]:
     finally:
         stack.pop()
         scope.observations.clear()
-        _release(scope.frames, blocking)
+        _release(scope.frames, False)

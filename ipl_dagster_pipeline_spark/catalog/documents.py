@@ -227,7 +227,7 @@ def q_doc_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     rolling-hash copy-detection index — any ≥8-char shared substring shares a
     fingerprint; table is ~1/4 the k-gram stream."""
     docs = _read(spark, sf_dir, "documents")
-    return winnow_fingerprints(docs, k=5, window=4)
+    return winnow_fingerprints(docs)
 
 
 _WINNOW_HASH = "CAST(concat('0x', substring(md5(concat('31:', substring(norm, pos, 5))), 1, 15)) AS BIGINT)"
@@ -661,7 +661,7 @@ def q_doc_length_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _null_stratum(_read(spark, sf_dir, "documents"), "source", 7).select(
         "doc_id", "source", "n_chars"
     )
-    return robust_outliers(docs, ["source"], "n_chars", "doc_id", n_mads=3)
+    return robust_outliers(docs, ["source"], "n_chars", "doc_id")
 
 
 SQL_LENGTH_OUTLIERS = """
@@ -913,7 +913,6 @@ def q_doc_fuzzy_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     return fuzzy_contamination_pairs(
         docs.filter(F.col("doc_id") % 97 != 0),
         docs.filter(F.col("doc_id") % 97 == 0),
-        threshold=0.5,
     )
 
 

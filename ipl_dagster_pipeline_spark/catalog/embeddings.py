@@ -230,7 +230,7 @@ def q_emb_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     exceed the exact cosine at equal rank."""
     emb = _read(spark, sf_dir, "embeddings")
     qids = list(range(10))
-    ann = ivf_topk(emb, query_ids=qids, k=5, n_clusters=16, n_probe=4)
+    ann = ivf_topk(emb, query_ids=qids)
     bf = cosine_topk_bruteforce(emb, query_ids=qids, k=5).select(
         "query_id", "rnk", F.col("cos").alias("bf_cos")
     )

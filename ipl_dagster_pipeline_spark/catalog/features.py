@@ -132,7 +132,7 @@ def q_event_decayed_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     out = with_decayed_counts(
-        ev, "user_id", ts_col="ts", value_col="value",
+        ev, "user_id", value_col="value",
         half_life_days=_DK_HL, horizon_days=_DK_H, scale_bits=_DK_BITS,
     )
     return out.select(
@@ -613,7 +613,7 @@ def q_doc_token_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("text"),
     )
     return chunk_token_windows(
-        docs, text_col="text", chunk_size=_CHUNK, overlap=_CHUNK_OVERLAP
+        docs, chunk_size=_CHUNK, overlap=_CHUNK_OVERLAP
     )
 
 

@@ -23,7 +23,7 @@ def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arrow mapInPandas media decode (fake codec) — rows-only check; the
     deterministic fake features are covered by tests/test_trainingdata.py."""
     docs = _read(spark, sf_dir, "documents")
-    return decode_media(synthesize_media(docs), fake=True)
+    return decode_media(synthesize_media(docs))
 
 
 def q_media_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -85,7 +85,7 @@ def q_media_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arrow exchange; fake path computes REAL fit-within geometry from the
     fake-decode dims — fully replayed by the DuckDB oracle."""
     docs = _read(spark, sf_dir, "documents")
-    return resize_images(synthesize_media(docs), target=(96, 96), fake=True)
+    return resize_images(synthesize_media(docs), target=(96, 96))
 
 
 SQL_MEDIA_RESIZE = """
@@ -112,7 +112,7 @@ def q_media_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     only reach the Arrow exchange); frame count/timestamps/hashes are
     deterministic arithmetic the oracle replays."""
     docs = _read(spark, sf_dir, "documents")
-    return sample_frames(synthesize_media(docs), fps=1.0, max_frames=16, fake=True)
+    return sample_frames(synthesize_media(docs))
 
 
 SQL_MEDIA_FRAMES = """

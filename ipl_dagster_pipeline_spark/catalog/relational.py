@@ -915,7 +915,7 @@ def q_geo_station_proximity(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = _derived_lonlat(_read(spark, sf_dir, "customer"), "c_custkey", 31, 17, "c")
     pairs = grid_radius_join(
         cust, sup, _GEO_RADIUS_KM,
-        p_lon="c_lon", p_lat="c_lat", c_lon="s_lon", c_lat="s_lat", dist_col="dist_km",
+        p_lon="c_lon", p_lat="c_lat", c_lon="s_lon", c_lat="s_lat",
     ).withColumn("dist_km", F.round(F.col("dist_km"), 6))
     w = Window.partitionBy("c_custkey").orderBy(F.col("dist_km").asc(), F.col("s_suppkey").asc())
     return (

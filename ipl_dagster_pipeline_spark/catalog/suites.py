@@ -168,8 +168,8 @@ def q_asof_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     asof_cogrouped)."""
     t = transcripts_from_events(spark, sf_dir)
     d = tool_dim_from_events(spark, sf_dir)
-    a = asof_join_broadcast_range(t, d, key="tool", ts_col="ts")
-    c = asof_join_cogrouped(t, d, key="tool", ts_col="ts").select(
+    a = asof_join_broadcast_range(t, d, key="tool")
+    c = asof_join_cogrouped(t, d, key="tool").select(
         "conv_id",
         "turn_idx",
         F.col("tool_category").alias("tool_category_cg"),
@@ -202,7 +202,7 @@ def q_asof_dim_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = transcripts_from_events(spark, sf_dir)
     cd = conv_dim_from_events(spark, sf_dir)
     td = tool_dim_from_events(spark, sf_dir)
-    u = asof_join_union_fill(t, cd, key="conv_id", ts_col="ts", dim_ts="snapshot_ts")
+    u = asof_join_union_fill(t, cd, key="conv_id", dim_ts="snapshot_ts")
     p = asof_snapshot_broadcast(t, td, key="tool", as_of=AS_OF_PIN).select(
         "conv_id",
         "turn_idx",

@@ -180,7 +180,7 @@ def q_asof_tool(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of join via interval-broadcast (low-cardinality key path)."""
     t = transcripts_from_events(spark, sf_dir)
     d = tool_dim_from_events(spark, sf_dir)
-    out = asof_join_broadcast_range(t, d, key="tool", ts_col="ts")
+    out = asof_join_broadcast_range(t, d, key="tool")
     return _ts_us(out, "ts", "matched_effective_from")
 
 
@@ -189,7 +189,7 @@ def q_asof_cogrouped(spark: SparkSession, sf_dir: str) -> DataFrame:
     searchsorted with merge_asof semantics — the sort-merge path)."""
     t = transcripts_from_events(spark, sf_dir)
     d = tool_dim_from_events(spark, sf_dir)
-    out = asof_join_cogrouped(t, d, key="tool", ts_col="ts")
+    out = asof_join_cogrouped(t, d, key="tool")
     return _ts_us(out, "ts", "matched_effective_from")
 
 
@@ -290,7 +290,7 @@ def q_asof_conv_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = transcripts_from_events(spark, sf_dir)
     d = conv_dim_from_events(spark, sf_dir)
-    out = asof_join_union_fill(t, d, key="conv_id", ts_col="ts", dim_ts="snapshot_ts")
+    out = asof_join_union_fill(t, d, key="conv_id", dim_ts="snapshot_ts")
     return _ts_us(out, "ts", "matched_effective_from")
 
 

@@ -35,6 +35,8 @@ EARTH_RADIUS_KM = 6371.0088
 # yields the MAXIMUM degree extent of a km radius, i.e. conservative cells
 _KM_PER_DEG_LAT_MIN = 110.574
 _KM_PER_DEG_LON_EQUATOR = 111.320
+# |latitude| bound of grid_radius_join's one-cell coverage guarantee
+_MAX_ABS_LAT = 75.0
 
 
 def haversine_km(lon1: Column, lat1: Column, lon2: Column, lat2: Column) -> Column:
@@ -118,36 +120,32 @@ def grid_radius_join(
     p_lat: str = "lat",
     c_lon: str = "lon",
     c_lat: str = "lat",
-    max_abs_lat: float = 75.0,
-    broadcast_centers: bool = True,
-    dist_col: str = "dist_km",
 ) -> DataFrame:
-    """All (point, center) pairs within ``radius_km`` — WITHOUT a cross join.
+    """All (point, center) pairs within ``radius_km``, with their
+    ``dist_km`` — WITHOUT a cross join.
 
     Both sides are assigned to a lon/lat grid whose cell size is ≥ the radius
-    everywhere below ``max_abs_lat`` (cells sized by the equatorial minimum
+    everywhere below |lat| = 75° (cells sized by the equatorial minimum
     km-per-degree and the polar-most cosine, so the degree extent of the
     radius never exceeds one cell); centers are exploded to their 3×3 cell
     neighborhood and equi-joined on the cell id, then the exact haversine
-    refine applies.  The grid prefilter is a strict superset of the true
-    result at any scale — enlarging the corpus only grows candidates, never
-    loses a match.
+    refine applies over the broadcast centers.  The grid prefilter is a
+    strict superset of the true result at any scale — enlarging the corpus
+    only grows candidates, never loses a match.
 
-    ``max_abs_lat`` is a declared contract: rows beyond it would need wider
-    neighborhoods, so they raise at plan-build time via a runtime assert
-    column rather than silently losing matches.
+    The latitude bound is a declared contract: rows beyond it would need
+    wider neighborhoods, so they raise at plan-build time via a runtime
+    assert column rather than silently losing matches.
     """
     if radius_km <= 0:
         raise ValueError("radius_km must be positive")
-    if max_abs_lat >= 89.0:
-        raise ValueError("grid_radius_join is undefined at the poles; max_abs_lat < 89")
     overlap = (set(points.columns) & set(centers.columns)) - set()
     if overlap:
         raise ValueError(
             f"points/centers share column names {sorted(overlap)} — rename one side"
         )
     lat_cell = radius_km / _KM_PER_DEG_LAT_MIN
-    lon_cell_min = radius_km / (_KM_PER_DEG_LON_EQUATOR * math.cos(math.radians(max_abs_lat)))
+    lon_cell_min = radius_km / (_KM_PER_DEG_LON_EQUATOR * math.cos(math.radians(_MAX_ABS_LAT)))
     # longitude WRAPS at ±180° and haversine is periodic, so the lon grid must
     # tile the circle: n cells of equal width ≥ the radius's degree extent,
     # indexed modulo n (a flat grid silently loses matches across the
@@ -162,9 +160,9 @@ def grid_radius_join(
         # coordinates are explicitly passed through (null cell id → the inner
         # equi-join drops the row: null coords never match, never raise).
         return (
-            F.when(F.abs(F.col(lat)) <= max_abs_lat, F.col(lat))
+            F.when(F.abs(F.col(lat)) <= _MAX_ABS_LAT, F.col(lat))
             .when(F.col(lat).isNull(), F.lit(None).cast("double"))
-            .otherwise(F.raise_error(F.lit(f"{side} latitude beyond max_abs_lat={max_abs_lat}")))
+            .otherwise(F.raise_error(F.lit(f"{side} latitude beyond max_abs_lat={_MAX_ABS_LAT}")))
         )
 
     def _cx(lon: str, delta: int = 0) -> Column:
@@ -196,10 +194,8 @@ def grid_radius_join(
         .withColumn("__cy", F.col("__cell.cy"))
         .drop("__cell")
     )
-    if broadcast_centers:
-        c = F.broadcast(c)
-    joined = p.join(c, on=["__cx", "__cy"]).withColumn(
-        dist_col,
+    joined = p.join(F.broadcast(c), on=["__cx", "__cy"]).withColumn(
+        "dist_km",
         haversine_km(F.col(p_lon), F.col(p_lat), F.col(c_lon), F.col(c_lat)),
     )
-    return joined.filter(F.col(dist_col) <= F.lit(float(radius_km))).drop("__cx", "__cy")
+    return joined.filter(F.col("dist_km") <= F.lit(float(radius_km))).drop("__cx", "__cy")

@@ -54,27 +54,27 @@ def is_opposite_direction_concerned(lane_status: Column) -> Column:
     return left_concerned | right_concerned
 
 
-def detect_direction(incidents: DataFrame, id_col: str = "id", lane_col: str = "lane_status") -> DataFrame:
+def detect_direction(incidents: DataFrame) -> DataFrame:
     """J4 parity: closure records `X-sperrung` are BOTH_DIRECTIONS iff a
     sibling `X-gegen-sperrung` exists (reference: cifs.py:218-224); otherwise
     fall back to the lane-status rule; unknown → BOTH_DIRECTIONS (defensive,
     cifs.py:226-229)."""
-    gegen = incidents.filter(F.col(id_col).contains("-gegen-")).select(
-        F.regexp_replace(F.col(id_col), "-gegen-", "-").alias("__sib")
+    gegen = incidents.filter(F.col("id").contains("-gegen-")).select(
+        F.regexp_replace(F.col("id"), "-gegen-", "-").alias("__sib")
     )
     out = incidents.join(
         F.broadcast(gegen.distinct().withColumn("__has_gegen", F.lit(True))),
-        incidents[id_col] == F.col("__sib"),
+        incidents["id"] == F.col("__sib"),
         "left",
     ).drop("__sib")
     direction = (
         F.when(
-            F.col(id_col).endswith("-sperrung") & ~F.col(id_col).contains("-gegen-"),
+            F.col("id").endswith("-sperrung") & ~F.col("id").contains("-gegen-"),
             F.when(F.col("__has_gegen"), F.lit("BOTH_DIRECTIONS")).otherwise(F.lit("ONE_DIRECTION")),
         )
         .when(
-            F.col(lane_col).isNotNull() & valid_lane_status(F.col(lane_col)),
-            F.when(is_opposite_direction_concerned(F.col(lane_col)), F.lit("BOTH_DIRECTIONS")).otherwise(
+            F.col("lane_status").isNotNull() & valid_lane_status(F.col("lane_status")),
+            F.when(is_opposite_direction_concerned(F.col("lane_status")), F.lit("BOTH_DIRECTIONS")).otherwise(
                 F.lit("ONE_DIRECTION")
             ),
         )
@@ -83,14 +83,14 @@ def detect_direction(incidents: DataFrame, id_col: str = "id", lane_col: str = "
     return out.withColumn("direction", direction).drop("__has_gegen")
 
 
-def drop_managed_causes(incidents: DataFrame, id_col: str = "id", cause_col: str = "cause_ref") -> DataFrame:
+def drop_managed_causes(incidents: DataFrame) -> DataFrame:
     """J3 parity: drop records referenced as another record's managed cause
     (reference: cifs.py:120-126,149-151) — a left-anti join."""
-    causes = incidents.filter(F.col(cause_col).isNotNull()).select(F.col(cause_col).alias(id_col))
-    return anti_join(incidents, causes.distinct(), on=id_col)
+    causes = incidents.filter(F.col("cause_ref").isNotNull()).select(F.col("cause_ref").alias("id"))
+    return anti_join(incidents, causes.distinct(), on="id")
 
 
-def skip_gegen_records(incidents: DataFrame, id_col: str = "id") -> Column | DataFrame:
+def skip_gegen_records(incidents: DataFrame) -> Column | DataFrame:
     """P6 parity: direction markers are metadata, not incidents themselves
     (reference skips ids containing '-gegen', cifs.py:135-141)."""
-    return incidents.filter(~F.col(id_col).contains("-gegen"))
+    return incidents.filter(~F.col("id").contains("-gegen"))

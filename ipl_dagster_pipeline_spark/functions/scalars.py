@@ -40,10 +40,10 @@ def split_latlon_pairs(col: Column) -> Column:
     )
 
 
-def local_date_parts(ts: Column, tz: str = "Europe/Berlin") -> list[Column]:
+def local_date_parts(ts: Column) -> list[Column]:
     """F12: tz conversion + date-part extraction (reference: Berlin-tz
     year/month/day/hour path parts, webcam_worker.py:158-169)."""
-    local = F.from_utc_timestamp(ts, tz)
+    local = F.from_utc_timestamp(ts, "Europe/Berlin")
     return [
         F.year(local).alias("year"),
         F.month(local).alias("month"),

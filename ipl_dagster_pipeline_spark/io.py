@@ -357,12 +357,7 @@ def write_day_partitioned(df: DataFrame, path: str) -> None:
     df.withColumn("day", F.to_date(F.col("ts"))).write.mode("overwrite").partitionBy("day").parquet(path)
 
 
-def publish_web_asset(
-    final_path: str,
-    content: bytes | str | dict | None = None,
-    write_fn=None,
-    source_mtime: float | None = None,
-) -> dict:
+def publish_web_asset(final_path: str, content: bytes | str | dict) -> dict:
     """Atomically publish a small non-parquet artifact (JSON summary,
     GeoJSON layer, …) with a precompressed ``.gz`` sibling —
     the K4 publish discipline for web assets.
@@ -373,57 +368,45 @@ def publish_web_asset(
     (pipeline/util/urllib.py:90-113, resources/webasset_io_manager.py:45-54).
     Spark-first notes: this is a DRIVER-side publish for collected,
     kilobyte-scale artifacts (a rollup the flagship queries already reduced);
-    bulk data stays in parquet snapshots.  The gzip header mtime (and both
-    files' mtimes) are pinned to ``source_mtime`` when given — pass the
-    upstream artifact's timestamp and a byte-identical artifact republishes
-    to a byte-identical ``.gz`` (rsync/etag friendly).  Without it the
-    write time is used (the reference's behavior, urllib.py:107-109), and
-    republished ``.gz`` bytes differ in the header timestamp only.
+    bulk data stays in parquet snapshots.  The gzip header mtime and the
+    ``.gz`` file's mtime are the written file's mtime (the reference's
+    behavior, urllib.py:107-109), and the header carries no file name.
 
-    Exactly one of ``content`` (bytes / str / JSON-serializable dict) or
-    ``write_fn(tmp_path) -> None`` must be given; ``tmp_path`` (and the
-    ``.gz`` sibling's tmp) is a hidden file unique to this call in the target
-    directory, so concurrent publishers of one artifact never rename each
-    other's tmp away and each call publishes a whole file.  Their renames
-    are not ordered as pairs, though: when two publishers of different
-    bytes interleave (A's ``.gz``, B's ``.gz``, B's main, A's main), the
-    main file is A's and the ``.gz`` B's until the next publish — serialize
-    publishers of one artifact when they may publish different bytes.  A
-    failed writer leaves no partial files.  The ``.gz`` sibling is renamed
-    into place FIRST and the main file second — the main rename is the
-    commit point; if it fails the stale ``.gz`` is removed so consumers
-    fall back to the uncompressed asset rather than being served
-    mismatched encodings by a failed publish.  A process crash
-    exactly between the two renames leaves a newer ``.gz`` beside the old
-    main file until the next publish — the same bounded window the
-    reference's publish has (urllib.py:110-113); only single-file artifacts
-    are fully atomic on POSIX renames.
+    ``content`` is bytes, a str (UTF-8) or a JSON-serializable dict (keys
+    sorted).  It is written to a hidden tmp file unique to this call in the
+    target directory (the ``.gz`` sibling's tmp too), so concurrent
+    publishers of one artifact never rename each other's tmp away and each
+    call publishes a whole file.  Their renames are not ordered as pairs,
+    though: when two publishers of different bytes interleave (A's ``.gz``,
+    B's ``.gz``, B's main, A's main), the main file is A's and the ``.gz``
+    B's until the next publish — serialize publishers of one artifact when
+    they may publish different bytes.  A failed write leaves no partial
+    files.  The ``.gz`` sibling is renamed into place FIRST and the main file
+    second — the main rename is the commit point; if it fails the stale
+    ``.gz`` is removed so consumers fall back to the uncompressed asset
+    rather than being served mismatched encodings by a failed publish.  A
+    process crash exactly between the two renames leaves a newer ``.gz``
+    beside the old main file until the next publish — the same bounded
+    window the reference's publish has (urllib.py:110-113); only single-file
+    artifacts are fully atomic on POSIX renames.
     Returns ``{'path', 'gz_path', 'bytes', 'gz_bytes'}``.
     """
     import gzip
     import json as _json
 
-    if (content is None) == (write_fn is None):
-        raise ValueError("pass exactly one of content= or write_fn=")
+    if isinstance(content, dict):
+        content = _json.dumps(content, sort_keys=True)
+    if isinstance(content, str):
+        content = content.encode("utf-8")
     parent = os.path.dirname(final_path) or "."
     os.makedirs(parent, exist_ok=True)
     # a hidden tmp per call: two publishers of one artifact never share it
     tmp = os.path.join(parent, f".{os.path.basename(final_path)}.{uuid.uuid4().hex}.tmp")
     try:
-        if write_fn is not None:
-            write_fn(tmp)
-            if not os.path.exists(tmp):
-                raise ValueError(f"write_fn did not create {tmp}")
-        else:
-            if isinstance(content, dict):
-                content = _json.dumps(content, sort_keys=True)
-            if isinstance(content, str):
-                content = content.encode("utf-8")
-            with open(tmp, "wb") as fh:
-                fh.write(content)
-
-        mtime = source_mtime if source_mtime is not None else os.stat(tmp).st_mtime
-        os.utime(tmp, (mtime, mtime))
+        with open(tmp, "wb") as fh:
+            fh.write(content)
+        mtime = os.stat(tmp).st_mtime
+        os.utime(tmp, (mtime, mtime))  # both files carry the same float mtime
         gz_tmp, gz_final = tmp + ".gz", final_path + ".gz"
         with open(tmp, "rb") as f_in, open(gz_tmp, "wb") as f_raw:
             # pin the gzip-header mtime (and strip the filename) so the

@@ -9,7 +9,7 @@ fine-tuning corpora).
 
 Chunking rule (total, crisp, engine-replayable):
 
-* the token stream is the whitespace split of ``text_col`` (1-indexed,
+* the token stream is the whitespace split of ``"text"`` (1-indexed,
   same ``split(text, ' ')`` convention as :mod:`textstats` /
   :mod:`text_dedup`);
 * window starts are ``1, 1+stride, 1+2·stride, …`` for every start ≤ n —
@@ -37,15 +37,13 @@ from pyspark.sql import functions as F
 
 def chunk_token_windows(
     docs: DataFrame,
-    text_col: str = "text",
     chunk_size: int = 64,
     overlap: int = 16,
-    out_prefix: str = "chunk",
 ) -> DataFrame:
-    """All input columns except ``text_col`` plus, per window:
-    ``{out_prefix}_idx`` (0-based), ``start_tok`` (1-based token position),
-    ``n_{out_prefix}_tokens`` (window length after end-clipping) and
-    ``{out_prefix}_text`` (the window re-joined with single spaces).
+    """All input columns except ``text`` plus, per window:
+    ``chunk_idx`` (0-based), ``start_tok`` (1-based token position),
+    ``n_chunk_tokens`` (window length after end-clipping) and
+    ``chunk_text`` (the window re-joined with single spaces).
 
     NULL text produces zero rows for that document (filtered, not a NULL
     chunk — a document with no text has no training windows).
@@ -58,10 +56,10 @@ def chunk_token_windows(
             f"chunk_size={chunk_size}"
         )
     stride = chunk_size - overlap
-    keep = [c for c in docs.columns if c != text_col]
+    keep = [c for c in docs.columns if c != "text"]
     toks = (
-        docs.where(F.col(text_col).isNotNull())
-        .withColumn("__toks", F.split(F.col(text_col), " "))
+        docs.where(F.col("text").isNotNull())
+        .withColumn("__toks", F.split(F.col("text"), " "))
         .withColumn("__n", F.size("__toks"))
     )
     # split() yields at least [''] for the empty string, so __n >= 1 and
@@ -71,16 +69,16 @@ def chunk_token_windows(
         "__toks",
         "__n",
         F.posexplode(F.sequence(F.lit(1), F.col("__n"), F.lit(stride))).alias(
-            f"{out_prefix}_idx", "start_tok"
+            "chunk_idx", "start_tok"
         ),
     )
     window = F.slice(F.col("__toks"), F.col("start_tok"), chunk_size)
     return exploded.select(
         *keep,
-        F.col(f"{out_prefix}_idx"),
+        F.col("chunk_idx"),
         F.col("start_tok"),
         F.least(F.lit(chunk_size), F.col("__n") - F.col("start_tok") + 1)
         .cast("int")
-        .alias(f"n_{out_prefix}_tokens"),
-        F.array_join(window, " ").alias(f"{out_prefix}_text"),
+        .alias("n_chunk_tokens"),
+        F.array_join(window, " ").alias("chunk_text"),
     )

@@ -43,10 +43,9 @@ def redact_pii(col: Column) -> Column:
     return out
 
 
-def collapse_adjacent_repeats(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", out_col: str = "text_clean"
-) -> DataFrame:
-    """Collapse runs of adjacent duplicate tokens ("a a the" → "a the").
+def collapse_adjacent_repeats(docs: DataFrame) -> DataFrame:
+    """``docs`` plus ``text_clean``: ``text`` with runs of adjacent
+    duplicate tokens collapsed ("a a the" → "a the").
 
     Split → positional explode → lag window per doc → drop repeats →
     order-preserving reassembly (sorted struct array, not collect order —
@@ -55,45 +54,38 @@ def collapse_adjacent_repeats(
     from pyspark.sql import Window
 
     toks = docs.select(
-        id_col, F.posexplode(F.split(normalize_text(F.col(text_col)), " ")).alias("i", "w")
+        "doc_id", F.posexplode(F.split(normalize_text(F.col("text")), " ")).alias("i", "w")
     )
-    w = Window.partitionBy(id_col).orderBy("i")
+    w = Window.partitionBy("doc_id").orderBy("i")
     kept = toks.withColumn("__prev", F.lag("w").over(w)).filter(
         F.col("__prev").isNull() | (F.col("w") != F.col("__prev"))
     )
-    rebuilt = kept.groupBy(id_col).agg(
+    rebuilt = kept.groupBy("doc_id").agg(
         F.array_join(
             F.transform(F.array_sort(F.collect_list(F.struct("i", "w"))), lambda s: s["w"]),
             " ",
-        ).alias(out_col)
+        ).alias("text_clean")
     )
-    return docs.join(rebuilt, on=id_col, how="left")
+    return docs.join(rebuilt, on="doc_id", how="left")
 
 
-def quality_gate(
-    stats: DataFrame,
-    min_tokens: int = 10,
-    max_tokens: int = 100_000,
-    min_alpha_ratio: float = 0.5,
-    max_punct_ratio: float = 0.2,
-    min_mean_word_len: float = 2.0,
-    max_mean_word_len: float = 12.0,
-) -> DataFrame:
+def quality_gate(stats: DataFrame, min_alpha_ratio: float = 0.5) -> DataFrame:
     """Gopher-style rule flags over textstats columns (``with_token_counts`` +
     ``with_quality_scores`` output).  Flags stay as columns so the pipeline
     can report per-rule kill counts before filtering on ``passes_quality``.
+    Besides ``min_alpha_ratio`` the rules are fixed: 10 to 100,000 tokens,
+    at most 20% punctuation, mean word length 2 to 12.
 
     The gate is TOTAL: a null stats column (upstream never produces one
     today, but a drifted producer might) yields flag=false — the rule simply
     does not fire — so ``passes_quality`` is never null and a
     ``filter(passes_quality)`` can never silently drop null-verdict rows."""
     flags = {
-        "flag_too_short": F.col("n_ws_tokens") < min_tokens,
-        "flag_too_long": F.col("n_ws_tokens") > max_tokens,
+        "flag_too_short": F.col("n_ws_tokens") < 10,
+        "flag_too_long": F.col("n_ws_tokens") > 100_000,
         "flag_low_alpha": F.col("alpha_ratio") < min_alpha_ratio,
-        "flag_high_punct": F.col("punct_ratio") > max_punct_ratio,
-        "flag_word_len": (F.col("mean_word_len") < min_mean_word_len)
-        | (F.col("mean_word_len") > max_mean_word_len),
+        "flag_high_punct": F.col("punct_ratio") > 0.2,
+        "flag_word_len": (F.col("mean_word_len") < 2.0) | (F.col("mean_word_len") > 12.0),
     }
     out = stats
     for name, expr in flags.items():
@@ -109,10 +101,9 @@ def curate_keepers(
     exact_groups: DataFrame,
     dup_groups: DataFrame,
     min_alpha_ratio: float = 0.5,
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """The curation selection of the corpus job: exact-dup keepers that pass
-    the quality filter, minus near-duplicate group redundancy.
+    the quality filter, minus near-duplicate group redundancy (by ``doc_id``).
 
     Eligibility is decided FIRST (exact keeper + quality), THEN the near-dup
     keeper is re-keyed to the min SURVIVING member per component — a group
@@ -124,34 +115,28 @@ def curate_keepers(
     (fp, keep_id, n_copies); ``dup_groups`` = output of
     :func:`graph.duplicate_groups` (member, keeper, is_keeper).
     """
-    exact_keepers = exact_groups.select(F.col("keep_id").alias(id_col))
-    eligible = stats.join(exact_keepers, id_col, "left_semi").filter(
+    exact_keepers = exact_groups.select(F.col("keep_id").alias("doc_id"))
+    eligible = stats.join(exact_keepers, "doc_id", "left_semi").filter(
         F.col("alpha_ratio") >= min_alpha_ratio
     )
-    comp = dup_groups.select(F.col("member").alias(id_col), F.col("keeper").alias("__component"))
-    tagged = eligible.join(comp, id_col, "left")
+    comp = dup_groups.select(F.col("member").alias("doc_id"), F.col("keeper").alias("__component"))
+    tagged = eligible.join(comp, "doc_id", "left")
     surviving_keepers = (
         tagged.filter(F.col("__component").isNotNull())
         .groupBy("__component")
-        .agg(F.min(id_col).alias("__keep_id"))
+        .agg(F.min("doc_id").alias("__keep_id"))
     )
     return (
         tagged.join(surviving_keepers, "__component", "left")
-        .filter(F.col("__component").isNull() | (F.col(id_col) == F.col("__keep_id")))
+        .filter(F.col("__component").isNull() | (F.col("doc_id") == F.col("__keep_id")))
         .drop("__component", "__keep_id")
     )
 
 
-def contamination_flags(
-    docs: DataFrame,
-    benchmark: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 5,
-    seed: int = 77,
-) -> DataFrame:
-    """Flag corpus docs sharing ANY k-gram with the benchmark set (the
-    eval-decontamination rule).  Both sides reduce to distinct k-gram HASHES;
+def contamination_flags(docs: DataFrame, benchmark: DataFrame, k: int = 5) -> DataFrame:
+    """``(doc_id, contaminated)``: flag corpus docs sharing ANY k-gram of
+    ``text`` with the benchmark set (the eval-decontamination rule).  Both
+    sides reduce to distinct k-gram HASHES (seed 77);
     the probe is a semi-join on the hash — at 100 TB the benchmark side is
     tiny and broadcasts.
     """
@@ -161,33 +146,24 @@ def contamination_flags(
     # (id, gh) shuffle; the semi-join probe is map-side against the broadcast
     # hash set and the only shuffle left carries the surviving hit ids).
     def grams(df: DataFrame) -> DataFrame:
-        return kgrams(df, id_col, text_col, k).select(
-            id_col, portable_hash(F.col("gram"), seed).alias("gh")
-        )
+        return kgrams(df, k=k).select("doc_id", portable_hash(F.col("gram"), 77).alias("gh"))
 
     bench_grams = grams(benchmark).select("gh").distinct()
     hits = (
         grams(docs)
         .join(F.broadcast(bench_grams), on="gh", how="left_semi")
-        .select(id_col)
+        .select("doc_id")
         .distinct()
         .withColumn("contaminated", F.lit(True))
     )
-    return docs.select(id_col).distinct().join(hits, on=id_col, how="left").select(
-        id_col, F.coalesce(F.col("contaminated"), F.lit(False)).alias("contaminated")
+    return docs.select("doc_id").distinct().join(hits, on="doc_id", how="left").select(
+        "doc_id", F.coalesce(F.col("contaminated"), F.lit(False)).alias("contaminated")
     )
 
 
-def fuzzy_contamination_pairs(
-    docs: DataFrame,
-    benchmark: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 5,
-    threshold: float = 0.5,
-) -> DataFrame:
-    """NEAR-duplicate eval-set decontamination: corpus docs whose shingle
-    set is Jaccard-≥-threshold similar to ANY benchmark doc — the fuzzy
+def fuzzy_contamination_pairs(docs: DataFrame, benchmark: DataFrame) -> DataFrame:
+    """NEAR-duplicate eval-set decontamination: corpus docs whose 5-shingle
+    set is Jaccard-≥-0.5 similar to ANY benchmark doc — the fuzzy
     complement of :func:`contamination_flags` (which only catches exact
     k-gram overlap; a paraphrased or lightly-edited benchmark leak slips
     past it).
@@ -200,25 +176,25 @@ def fuzzy_contamination_pairs(
     must be disjoint (they come from the same table split in practice).
 
     Returns ``(doc_id, bench_id, jaccard)`` — one row per contaminated
-    (corpus, benchmark) pair at ≥ threshold.
+    (corpus, benchmark) pair at ≥ 0.5.
     """
     from .text_dedup import band_rows, jaccard_pairs, minhash_signatures, shingles
 
-    sh_c = tracked_persist(shingles(docs, id_col, text_col, k))
-    sh_b = tracked_persist(shingles(benchmark, id_col, text_col, k))
-    bands_c = band_rows(minhash_signatures(sh_c, id_col), id_col)
-    bands_b = band_rows(minhash_signatures(sh_b, id_col), id_col)
+    sh_c = tracked_persist(shingles(docs))
+    sh_b = tracked_persist(shingles(benchmark))
+    bands_c = band_rows(minhash_signatures(sh_c))
+    bands_b = band_rows(minhash_signatures(sh_b))
     cand = (
         bands_c.join(
-            F.broadcast(bands_b.select(F.col(id_col).alias("doc_b"), "band", "bucket")),
+            F.broadcast(bands_b.select(F.col("doc_id").alias("doc_b"), "band", "bucket")),
             on=["band", "bucket"],
         )
-        .select(F.col(id_col).alias("doc_a"), "doc_b")
+        .select(F.col("doc_id").alias("doc_a"), "doc_b")
         .distinct()
     )
-    pairs = jaccard_pairs(cand, sh_c.unionByName(sh_b), id_col, threshold)
+    pairs = jaccard_pairs(cand, sh_c.unionByName(sh_b))
     return pairs.select(
-        F.col("doc_a").alias(id_col),
+        F.col("doc_a").alias("doc_id"),
         F.col("doc_b").alias("bench_id"),
         "jaccard",
     )

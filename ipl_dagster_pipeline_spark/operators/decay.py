@@ -59,25 +59,24 @@ def day_index(ts: Column) -> Column:
 def with_decayed_counts(
     df: DataFrame,
     key_col: str,
-    ts_col: str = "ts",
     value_col: str | None = None,
     half_life_days: float = 7.0,
     horizon_days: int = 28,
     scale_bits: int = 16,
-    out_prefix: str = "decayed",
 ) -> DataFrame:
-    """``df`` plus per-row decayed activity features of its key:
+    """``df`` plus per-row decayed activity features of its key, by the day
+    of ``ts``:
 
-    * ``{out}_cnt_q``   — Σ w(δ)·cnt(key, day−δ), exact BIGINT in 2^bits units
-    * ``{out}_cnt``     — the same / 2^bits, rounded 6 dp
-    * ``{out}_sum_q`` / ``{out}_sum`` — likewise over round(value·1e6) sums
-      (micro-quantized; only when ``value_col`` is given); ``{out}_sum`` is
+    * ``decayed_cnt_q``   — Σ w(δ)·cnt(key, day−δ), exact BIGINT in 2^bits units
+    * ``decayed_cnt``     — the same / 2^bits, rounded 6 dp
+    * ``decayed_sum_q`` / ``decayed_sum`` — likewise over round(value·1e6) sums
+      (micro-quantized; only when ``value_col`` is given); ``decayed_sum`` is
       in original value units, rounded 6 dp
 
     Rows on a key's first active day get exact zeros (no past ⇒ no signal).
     """
     wt = decay_weights(half_life_days, horizon_days, scale_bits)
-    day = day_index(F.col(ts_col))
+    day = day_index(F.col("ts"))
 
     aggs = [F.count(F.lit(1)).alias("__c")]
     if value_col is not None:
@@ -127,15 +126,15 @@ def with_decayed_counts(
     res = (
         out.select("L.*", "R.__qc", *(["R.__qs"] if value_col is not None else []))
         .withColumn(
-            f"{out_prefix}_cnt_q", F.coalesce(F.col("__qc"), F.lit(0)).cast("long")
+            "decayed_cnt_q", F.coalesce(F.col("__qc"), F.lit(0)).cast("long")
         )
-        .withColumn(f"{out_prefix}_cnt", F.round(F.col(f"{out_prefix}_cnt_q") / scale, 6))
+        .withColumn("decayed_cnt", F.round(F.col("decayed_cnt_q") / scale, 6))
     )
     if value_col is not None:
         res = res.withColumn(
-            f"{out_prefix}_sum_q", F.coalesce(F.col("__qs"), F.lit(0)).cast("long")
+            "decayed_sum_q", F.coalesce(F.col("__qs"), F.lit(0)).cast("long")
         ).withColumn(
-            f"{out_prefix}_sum",
-            F.round(F.col(f"{out_prefix}_sum_q") / (scale * 1_000_000.0), 6),
+            "decayed_sum",
+            F.round(F.col("decayed_sum_q") / (scale * 1_000_000.0), 6),
         )
     return res.drop("__day", "__qc", *(["__qs"] if value_col is not None else []))

@@ -73,31 +73,24 @@ from .text_dedup import (
 
 
 class MinHashIndex:
-    """Persistent banded-MinHash near-dup index over append-only batches.
-    ``threshold`` must be in (0, 1]: ValueError otherwise, before anything
-    is written under ``root``."""
+    """Persistent banded-MinHash near-dup index over append-only batches of
+    ``(doc_id, text)`` documents: 5-shingles, ``N_HASHES`` hashes in
+    ``N_BANDS`` bands.  ``threshold`` must be in (0, 1]: ValueError
+    otherwise, before anything is written under ``root``."""
 
-    def __init__(
-        self,
-        root: str,
-        k: int = 5,
-        threshold: float = 0.5,
-        n_hashes: int = N_HASHES,
-        n_bands: int = N_BANDS,
-        max_bucket: int = 1000,
-        id_col: str = "doc_id",
-        text_col: str = "text",
-    ) -> None:
+    def __init__(self, root: str, threshold: float = 0.5, max_bucket: int = 1000) -> None:
         check_threshold("MinHashIndex", threshold)
         self.root = root
+        # every key stays in index-params.json, the identity an index
+        # written by an earlier version is reopened against
         self.params = {
-            "k": k,
+            "k": 5,
             "threshold": threshold,
-            "n_hashes": n_hashes,
-            "n_bands": n_bands,
+            "n_hashes": N_HASHES,
+            "n_bands": N_BANDS,
             "max_bucket": max_bucket,
-            "id_col": id_col,
-            "text_col": text_col,
+            "id_col": "doc_id",
+            "text_col": "text",
         }
         os.makedirs(root, exist_ok=True)
         # pin the fingerprint parameters to the index: probing k=5 state with

@@ -37,11 +37,8 @@ def scd2_history(
     ts_col: str,
     attr_cols: list[str],
     tie_cols: list[str] | None = None,
-    valid_from_col: str = "valid_from",
-    valid_to_col: str = "valid_to",
-    version_col: str = "version",
 ) -> DataFrame:
-    """Type-2 history from a change log: one row per (key, version) holding
+    """Type-2 history from a change log: one row per (key, ``version``) holding
     the attribute values and the half-open interval ``[valid_from,
     valid_to)`` they were current in; the latest version has ``valid_to``
     NULL (open).
@@ -76,9 +73,9 @@ def scd2_history(
     return versions.select(
         *key_cols,
         *attr_cols,
-        F.col(ts_col).alias(valid_from_col),
-        F.lead(ts_col).over(wv).alias(valid_to_col),
-        F.row_number().over(wv).cast("int").alias(version_col),
+        F.col(ts_col).alias("valid_from"),
+        F.lead(ts_col).over(wv).alias("valid_to"),
+        F.row_number().over(wv).cast("int").alias("version"),
     )
 
 

@@ -52,13 +52,12 @@ def target_encode_pit(
     order_cols: list[str],
     smoothing: int = 20,
     prior: tuple[int, int] | None = None,
-    out_prefix: str = "te",
 ) -> DataFrame:
     """``df`` plus point-in-time target-encoding columns for ``key_col``:
 
-    * ``{out}_cnt``   — prior same-key rows with a non-NULL label (BIGINT)
-    * ``{out}_sum_micro`` — exact integer sum of their micro-quantized labels
-    * ``{out}_value`` — smoothed mean ``(sum + m·prior_mean)/(cnt + m)``,
+    * ``te_cnt``   — prior same-key rows with a non-NULL label (BIGINT)
+    * ``te_sum_micro`` — exact integer sum of their micro-quantized labels
+    * ``te_value`` — smoothed mean ``(sum + m·prior_mean)/(cnt + m)``,
       rounded to 6 dp; equals the prior mean exactly for a key's first row
 
     ``order_cols`` must totally order rows within a key (e.g. ``[ts,
@@ -95,12 +94,12 @@ def target_encode_pit(
     num = s.cast(dec) * F.lit(p_den) + F.lit(smoothing) * F.lit(p_num).cast(dec)
     den = (cnt + F.lit(smoothing)).cast(dec) * F.lit(p_den) * F.lit(MICRO)
     return (
-        df.withColumn(f"{out_prefix}_cnt", cnt)
-        .withColumn(f"{out_prefix}_sum_micro", s)
+        df.withColumn("te_cnt", cnt)
+        .withColumn("te_sum_micro", s)
         .withColumn("__te_num", num)
         .withColumn("__te_den", den)
         .withColumn(
-            f"{out_prefix}_value",
+            "te_value",
             F.expr(f"CAST((__te_num * {MICRO}) DIV __te_den AS BIGINT)").cast("double")
             / F.lit(float(MICRO)),
         )
@@ -108,32 +107,30 @@ def target_encode_pit(
     )
 
 
-def count_encode_fit(train: DataFrame, key_col: str, out_prefix: str = "ce") -> DataFrame:
+def count_encode_fit(train: DataFrame, key_col: str) -> DataFrame:
     """Frozen frequency-encoding table for ``key_col`` over the frame you
     pass (pass the TRAIN fold — same fit/transform leakage discipline as
     ``featurize.standardize_fit``): one row per observed key value with
 
-    * ``{out}_cnt`` — BIGINT occurrence count
-    * ``{out}_ppm`` — exact integer parts-per-million frequency
+    * ``ce_cnt`` — BIGINT occurrence count
+    * ``ce_ppm`` — exact integer parts-per-million frequency
       (``cnt · 10⁶ DIV total`` — no float division, bit-identical anywhere)
 
     NULL is a first-class category (groupBy keeps the NULL group; the
     transform joins null-safely).  Scale: one map-side-combined hash
     aggregation; the fit table is |distinct keys| rows."""
-    counts = train.groupBy(key_col).agg(F.count(F.lit(1)).alias(f"{out_prefix}_cnt"))
+    counts = train.groupBy(key_col).agg(F.count(F.lit(1)).alias("ce_cnt"))
     total = train.count()
     if total <= 0:
         raise ValueError("count_encode_fit: empty fit frame")
     return counts.withColumn(
-        f"{out_prefix}_ppm",
-        F.expr(f"CAST(({out_prefix}_cnt * 1000000) DIV {total} AS BIGINT)"),
+        "ce_ppm",
+        F.expr(f"CAST((ce_cnt * 1000000) DIV {total} AS BIGINT)"),
     )
 
 
-def count_encode_transform(
-    df: DataFrame, fit: DataFrame, key_col: str, out_prefix: str = "ce"
-) -> DataFrame:
-    """``df`` plus the frozen ``{out}_cnt`` / ``{out}_ppm`` columns —
+def count_encode_transform(df: DataFrame, fit: DataFrame, key_col: str) -> DataFrame:
+    """``df`` plus the frozen ``ce_cnt`` / ``ce_ppm`` columns —
     null-safe left join against the fit table (a NULL key matches the fit's
     NULL category; a key UNSEEN at fit time encodes as 0, not NULL: "never
     seen" is a statement of frequency, not missing data).
@@ -143,10 +140,10 @@ def count_encode_transform(
     fit degrades to a plain hash join, never a driver collect."""
     fk = fit.select(
         F.col(key_col).alias("__ce_k"),
-        F.col(f"{out_prefix}_cnt"),
-        F.col(f"{out_prefix}_ppm"),
+        F.col("ce_cnt"),
+        F.col("ce_ppm"),
     )
     out = df.join(fk, on=df[key_col].eqNullSafe(fk["__ce_k"]), how="left").drop("__ce_k")
-    for c in (f"{out_prefix}_cnt", f"{out_prefix}_ppm"):
+    for c in ("ce_cnt", "ce_ppm"):
         out = out.withColumn(c, F.coalesce(F.col(c), F.lit(0)).cast("long"))
     return out

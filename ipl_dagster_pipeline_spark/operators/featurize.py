@@ -89,8 +89,8 @@ def standardize_fit(train: DataFrame, cols: list[str]) -> DataFrame:
     return train.agg(*aggs)
 
 
-def zscore_expr(c: str, decimals: int = 6) -> Column:
-    """z = (v_milli − S/n) / sqrt(Q/n − (S/n)²) from the frozen integers —
+def zscore_expr(c: str) -> Column:
+    """z = (v_milli − S/n) / sqrt(Q/n − (S/n)²), rounded to 6 dp, from the frozen integers —
     a fixed IEEE op sequence, identical cross-engine; degenerate fits
     (n = 0 or zero variance) yield 0.0 rather than NaN/±inf."""
     v = value_milli(F.col(c)).cast("double")
@@ -99,18 +99,16 @@ def zscore_expr(c: str, decimals: int = 6) -> Column:
     n = F.greatest(F.col(f"n_{c}"), F.lit(1)).cast("double")
     mean = F.col(f"s_{c}").cast("double") / n
     var = F.col(f"q_{c}").cast("double") / n - mean * mean
-    z = F.round((v - mean) / F.sqrt(var), decimals)
+    z = F.round((v - mean) / F.sqrt(var), 6)
     return F.when((F.col(f"n_{c}") == 0) | (var <= 0), F.lit(0.0)).otherwise(z)
 
 
-def standardize_transform(
-    df: DataFrame, stats: DataFrame, cols: list[str], prefix: str = "z"
-) -> DataFrame:
-    """``df`` plus ``{prefix}_<c>`` z-score columns under the frozen stats
+def standardize_transform(df: DataFrame, stats: DataFrame, cols: list[str]) -> DataFrame:
+    """``df`` plus ``z_<c>`` z-score columns under the frozen stats
     (broadcast cross join of the single stats row; NULL in → NULL out)."""
     out = df.crossJoin(F.broadcast(stats))
     for c in cols:
-        out = out.withColumn(f"{prefix}_{c}", zscore_expr(c))
+        out = out.withColumn(f"z_{c}", zscore_expr(c))
     return out.drop(*[k for c in cols for k in (f"n_{c}", f"s_{c}", f"q_{c}")])
 
 
@@ -133,10 +131,8 @@ def one_hot(
     return out
 
 
-def hash_bucket_onehot(
-    df: DataFrame, col: str, n_buckets: int, seed: int = 11, prefix: str = "hb"
-) -> DataFrame:
-    """The hashing trick: indicator columns ``{prefix}_0 … {prefix}_{n−1}``
+def hash_bucket_onehot(df: DataFrame, col: str, n_buckets: int, seed: int = 11) -> DataFrame:
+    """The hashing trick: indicator columns ``hb_0 … hb_{n−1}``
     from the portable hash of ``col`` — fixed width at ANY cardinality.
     NULL keys bucket on the ``<null>`` sentinel (deterministic, not
     dropped), matching ``sampling.split_bucket``."""
@@ -147,19 +143,13 @@ def hash_bucket_onehot(
     out = df.withColumn("__hb", b)
     for i in range(n_buckets):
         out = out.withColumn(
-            f"{prefix}_{i}", F.when(F.col("__hb") == i, F.lit(1)).otherwise(F.lit(0))
+            f"hb_{i}", F.when(F.col("__hb") == i, F.lit(1)).otherwise(F.lit(0))
         )
     return out.drop("__hb")
 
 
-def hash_cross(
-    df: DataFrame,
-    cols: list[str],
-    n_buckets: int,
-    seed: int = 13,
-    out_col: str = "cross_bucket",
-) -> DataFrame:
-    """Hashed feature cross: one bucket index from the JOINT value of
+def hash_cross(df: DataFrame, cols: list[str], n_buckets: int, seed: int = 13) -> DataFrame:
+    """Hashed feature cross: one bucket index ``cross_bucket`` from the JOINT value of
     ``cols`` — the fixed-width stand-in for an interaction one-hot whose
     true domain (|A|×|B|×…) is unboundable.  Each component is rendered
     ``<name>=<value>`` and joined with an ASCII unit separator, so
@@ -177,7 +167,7 @@ def hash_cross(
         for c in cols
     ]
     key = F.concat_ws("\x1f", *parts)
-    return df.withColumn(out_col, F.pmod(portable_hash(key, seed), F.lit(n_buckets)))
+    return df.withColumn("cross_bucket", F.pmod(portable_hash(key, seed), F.lit(n_buckets)))
 
 
 def quantile_bins_fit(
@@ -337,7 +327,6 @@ def quantile_sketch_elements(
     train: DataFrame,
     col: str,
     percents: dict[str, int],
-    unit: int = 1000,
 ) -> DataFrame:
     """One-row frame of SKETCH-based quantile estimates for ``col`` — the
     100 TB alternative to the exact rank-element fits.
@@ -351,14 +340,14 @@ def quantile_sketch_elements(
     winsorize/impute fit over a 100 TB column that tolerance is the right
     trade; the frozen artifact is identical in shape to the exact fits, so
     every downstream ``*_transform`` works unchanged.  Estimates come back
-    in ``col``'s own units (milli bounds / ``unit`` — an exact
+    in ``col``'s own units (milli bounds / ``LOGHIST_UNIT`` — an exact
     integer-by-constant division, IEEE-identical cross-engine).
     """
-    from .sketches import loghist_quantiles, loghist_sketch
+    from .sketches import LOGHIST_UNIT, loghist_quantiles, loghist_sketch
 
-    sk = loghist_sketch(train, col, [], unit=unit)
+    sk = loghist_sketch(train, col, [])
     q = loghist_quantiles(sk, percents, [])
-    return q.select(*[(F.col(f"q_{n}") / unit).alias(n) for n in percents])
+    return q.select(*[(F.col(f"q_{n}") / LOGHIST_UNIT).alias(n) for n in percents])
 
 
 def clip_fit_sketch(
@@ -386,7 +375,7 @@ def impute_fit_sketch(train: DataFrame, cols: list[str]) -> DataFrame:
     from .sketches import LOGHIST_UNIT, loghist_quantiles, loghist_sketch
 
     unit = LOGHIST_UNIT
-    sk = loghist_sketch(_stack(train, cols, cast="double"), "__v", ["__c"], unit=unit)
+    sk = loghist_sketch(_stack(train, cols, cast="double"), "__v", ["__c"])
     q = loghist_quantiles(sk, {"med": 50}, ["__c"])
     return q.agg(
         *[

@@ -8,7 +8,7 @@ ACCELERATED WITH POINTER JUMPING: each round first takes the minimum label
 over the 1-hop neighborhood, then composes the label table with itself
 (L'(v) = L(L(v))), which squares the effective propagation distance —
 convergence in O(log diameter) rounds instead of O(diameter), so the default
-``max_rounds`` covers any graph a dedup can produce (2^25-hop chains).
+``MAX_ROUNDS`` covers any graph a dedup can produce (2^25-hop chains).
 
 Scale shape per round:
 
@@ -21,7 +21,7 @@ Scale shape per round:
   not grow with iterations;
 * convergence is detected with an ``Observation`` on the SAME action that
   materializes the round — no extra job per round;
-* exhausting ``max_rounds`` while labels are still changing RAISES — a
+* exhausting ``MAX_ROUNDS`` while labels are still changing RAISES — a
   silently split component would make a dedup keep several "keepers" from
   one true group (the failure mode is data corruption, not slowness).
 
@@ -35,24 +35,22 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+# label-propagation rounds before connected_components gives up
+MAX_ROUNDS = 25
+
 
 class ComponentsNotConverged(RuntimeError):
-    """Raised when label propagation still changes after ``max_rounds``."""
+    """Raised when label propagation still changes after ``MAX_ROUNDS``."""
 
 
-def connected_components(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_rounds: int = 25,
-) -> DataFrame:
+def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
     """(v, component) for every vertex in ``edges``; component = min vertex id
     reachable.  Isolated vertices (no edges) are absent by construction —
     union the node set back in if needed.
 
-    Raises :class:`ComponentsNotConverged` if ``max_rounds`` is exhausted
+    Raises :class:`ComponentsNotConverged` if ``MAX_ROUNDS`` is exhausted
     while labels are still moving (cannot happen for graphs of diameter
-    < 2^max_rounds thanks to pointer jumping, but the guard makes the
+    < 2^MAX_ROUNDS thanks to pointer jumping, but the guard makes the
     failure loud instead of silently wrong).
     """
     # symmetrize in ONE scan: a union of two selects over `edges` would make
@@ -75,6 +73,7 @@ def connected_components(
 
     comp_type = dict(labels.dtypes)["comp"]
     changed = 1
+    max_rounds = MAX_ROUNDS
     for rnd in range(max_rounds):
         # 1) neighbor-min messages ride the same shuffle as the re-aggregation.
         # Each vertex's OWN row carries its current label as __old (messages
@@ -129,23 +128,18 @@ def connected_components(
     if changed != 0:
         raise ComponentsNotConverged(
             f"connected_components did not converge within {max_rounds} rounds "
-            f"({changed} labels still changing) — raise max_rounds"
+            f"({changed} labels still changing) — raise MAX_ROUNDS"
         )
     return labels.select(F.col("v"), F.col("comp"))
 
 
-def duplicate_groups(
-    pairs: DataFrame,
-    left: str = "doc_a",
-    right: str = "doc_b",
-    max_rounds: int = 25,
-) -> DataFrame:
+def duplicate_groups(pairs: DataFrame, left: str = "doc_a", right: str = "doc_b") -> DataFrame:
     """Resolve near-dup PAIRS into GROUPS: (member, keeper, is_keeper).
 
     keeper = min id of the connected component (matches exact_dedup's
     keep-min-id rule, text_dedup.py); drop-list = rows with is_keeper false.
     """
-    comp = connected_components(pairs, src=left, dst=right, max_rounds=max_rounds)
+    comp = connected_components(pairs, src=left, dst=right)
     return comp.select(
         F.col("v").alias("member"),
         F.col("comp").alias("keeper"),
@@ -153,20 +147,13 @@ def duplicate_groups(
     )
 
 
-def pagerank(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    iters: int = 3,
-    damping_num: int = 17,
-    damping_den: int = 20,
-    scale: int = 1_000_000,
-) -> DataFrame:
-    """Fixed-iteration PageRank in EXACT fixed-point integer arithmetic:
-    (v, pr_scaled, pr) after ``iters`` synchronous rounds.
+def pagerank(edges: DataFrame, iters: int = 3, scale: int = 1_000_000) -> DataFrame:
+    """Fixed-iteration PageRank in EXACT fixed-point integer arithmetic over
+    ``(src, dst)`` edges: (v, pr_scaled, pr) after ``iters`` synchronous
+    rounds.
 
     Ranks live in integer ``scale``-units; the damping factor is the rational
-    ``damping_num/damping_den`` (default 17/20 = 0.85) and every update is
+    num/den = 17/20 = 0.85 and every update is
 
         r'(v) = (scale·(den−num) div den) div N
                 + Σ_{u→v} (r(u)·num div den) div outdeg(u)
@@ -185,11 +172,12 @@ def pagerank(
     lineage truncated per round (``localCheckpoint``) as in
     :func:`connected_components`.  The node COUNT is the only driver scalar.
     """
-    if iters < 1 or damping_den <= damping_num or damping_num < 0:
-        raise ValueError("pagerank: iters >= 1 and 0 <= damping_num < damping_den required")
+    if iters < 1:
+        raise ValueError("pagerank: iters >= 1 required")
+    damping_num, damping_den = 17, 20
     nodes = (
-        edges.select(F.col(src).alias("v"))
-        .unionByName(edges.select(F.col(dst).alias("v")))
+        edges.select(F.col("src").alias("v"))
+        .unionByName(edges.select(F.col("dst").alias("v")))
         .distinct()
         .localCheckpoint(eager=True)
     )
@@ -200,8 +188,8 @@ def pagerank(
         )
     r0 = scale // n
     base = (scale * (damping_den - damping_num) // damping_den) // n
-    outdeg = edges.groupBy(F.col(src).alias("__u")).agg(F.count(F.lit(1)).alias("__k"))
-    e = edges.select(F.col(src).alias("__u"), F.col(dst).alias("__d")).join(
+    outdeg = edges.groupBy(F.col("src").alias("__u")).agg(F.count(F.lit(1)).alias("__k"))
+    e = edges.select(F.col("src").alias("__u"), F.col("dst").alias("__d")).join(
         F.broadcast(outdeg), on="__u"
     )
     ranks = nodes.withColumn("r", F.lit(r0).cast("long"))

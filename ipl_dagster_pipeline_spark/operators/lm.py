@@ -56,22 +56,20 @@ def adjacent_pairs(ws: Column) -> Column:
     ).otherwise(F.array().cast("array<struct<a:string,b:string>>"))
 
 
-def doc_bigrams(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def doc_bigrams(docs: DataFrame) -> DataFrame:
     """One row per bigram OCCURRENCE: (id, a, b).  Words are lowercased
     ``[a-z0-9]+`` runs (the tokenizer/textstats convention).
 
     The token array is BOUND TO A COLUMN in its own projection before
     :func:`adjacent_pairs` reads it (why: see there)."""
     return (
-        fan_out_scan(docs).select(F.col(id_col), words(F.col(text_col)).alias("__ws"))
-        .select(F.col(id_col), F.explode(adjacent_pairs(F.col("__ws"))).alias("bg"))
-        .select(id_col, F.col("bg.a").alias("a"), F.col("bg.b").alias("b"))
+        fan_out_scan(docs).select(F.col("doc_id"), words(F.col("text")).alias("__ws"))
+        .select(F.col("doc_id"), F.explode(adjacent_pairs(F.col("__ws"))).alias("bg"))
+        .select("doc_id", F.col("bg.a").alias("a"), F.col("bg.b").alias("b"))
     )
 
 
-def with_bigram_surprisal(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def with_bigram_surprisal(docs: DataFrame) -> DataFrame:
     """``docs`` plus the corpus-bigram-LM score columns:
 
     * ``n_bigrams``      — bigram occurrences in the doc (0 for <2 words)
@@ -83,7 +81,7 @@ def with_bigram_surprisal(
     High bits_per_bigram = improbable word transitions (gibberish, boiler-
     plate mixtures, wrong-language fragments); low = repetitive/templated.
     """
-    bg = doc_bigrams(docs, id_col, text_col)
+    bg = doc_bigrams(docs)
     # reduce to per-doc DISTINCT bigrams with occurrence counts FIRST (one
     # map-side-combined agg), so the count-table joins move (doc, bigram)
     # rows, not raw occurrences — the same distinct-vocabulary trick the BPE
@@ -91,7 +89,7 @@ def with_bigram_surprisal(
     # scoring join (r7 plan audit: unpersisted, the explode+agg subtree ran
     # three times — once per consumer — because AQE re-planning defeated
     # exchange reuse).
-    occ = tracked_persist(bg.groupBy(id_col, "a", "b").agg(F.count(F.lit(1)).alias("n_occ")))
+    occ = tracked_persist(bg.groupBy("doc_id", "a", "b").agg(F.count(F.lit(1)).alias("n_occ")))
     cnt_ab = occ.groupBy("a", "b").agg(F.sum("n_occ").alias("c_ab"))
     # C(a) = Σ_b C(a,b): derive context counts FROM the bigram counts —
     # bigram-vocabulary-sized input instead of a third aggregation over the
@@ -110,13 +108,13 @@ def with_bigram_surprisal(
     )
     scored = (
         occ.join(model, on=["a", "b"])
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.sum("n_occ").alias("n_bigrams"),
             F.sum(F.col("n_occ") * F.col("__mnats")).alias("surprisal_mnats"),
         )
     )
-    out = docs.join(scored, on=id_col, how="left")
+    out = docs.join(scored, on="doc_id", how="left")
     n = F.coalesce(F.col("n_bigrams"), F.lit(0)).cast("long")
     s = F.coalesce(F.col("surprisal_mnats"), F.lit(0)).cast("long")
     return (
@@ -132,9 +130,7 @@ def with_bigram_surprisal(
     )
 
 
-def source_kl_divergence(
-    docs: DataFrame, group_col: str = "source", text_col: str = "text"
-) -> DataFrame:
+def source_kl_divergence(docs: DataFrame) -> DataFrame:
     """Per-group unigram KL divergence vs the whole corpus — the drift /
     contamination monitor a mixture pipeline runs per ingest: a source whose
     token distribution diverges hard from the corpus is mislabeled, corrupted,
@@ -160,7 +156,7 @@ def source_kl_divergence(
     # mechanism as with_bpe_token_counts; three full-bench runs showed the
     # fan-out a consistent +0.3–0.9 s loss here)
     word_rows = docs.select(
-        F.col(group_col).alias("g"), F.explode(words(F.col(text_col))).alias("w")
+        F.col("source").alias("g"), F.explode(words(F.col("text"))).alias("w")
     )
     n_gw = word_rows.groupBy("g", "w").agg(F.count(F.lit(1)).alias("n_gw"))
     n_w = n_gw.groupBy("w").agg(F.sum("n_gw").alias("n_w"))
@@ -186,19 +182,14 @@ def source_kl_divergence(
         .agg(F.sum(F.col("n_gw") * F.col("__mnats")).alias("kl_mnats_weighted"))
     )
     return scored.select(
-        F.col("g").alias(group_col),
+        F.col("g").alias("source"),
         F.col("t_g").cast("long").alias("n_tokens"),
         F.col("kl_mnats_weighted").cast("long").alias("kl_mnats_weighted"),
         F.round(F.col("kl_mnats_weighted") / F.lit(1000.0) / F.col("t_g"), 6).alias("kl_nats"),
     )
 
 
-def pmi_collocations(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_count: int = 5,
-) -> DataFrame:
+def pmi_collocations(docs: DataFrame, min_count: int = 5) -> DataFrame:
     """Corpus collocations by pointwise mutual information:
 
     ``PMI(a,b) = ln( P(a,b) / (P(a)·P(b)) )`` with bigram MLE ``P(a,b) =
@@ -227,7 +218,7 @@ def pmi_collocations(
     # totals AND the candidate joins, so they persist too (3 consumers for
     # c_w, 2 for c_ab).
     warr = tracked_persist(
-        fan_out_scan(docs).select(F.col(id_col), words(F.col(text_col)).alias("__ws"))
+        fan_out_scan(docs).select(F.col("doc_id"), words(F.col("text")).alias("__ws"))
     )
     bg = warr.select(F.explode(adjacent_pairs(F.col("__ws"))).alias("bg")).select(
         F.col("bg.a").alias("a"), F.col("bg.b").alias("b")

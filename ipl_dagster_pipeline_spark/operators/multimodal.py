@@ -6,17 +6,10 @@ latest-per-camera probe, webcam_worker.py) where the pipeline never decodes
 pixels either; it moves bytes and tracks metadata.
 
 The Spark-side plumbing (schema, partitioning, Arrow batch shape, UDF
-signatures) is real and tested.  The codec story (round 5):
-
-* ``fake=True`` produces deterministic md5-arithmetic features from the
-  bytes — the branch every SQL oracle replays;
-* ``fake=False`` decodes REAL image bytes via the engine's own pure-stdlib
-  codecs (PPM/PGM, 24-bit BMP, 8-bit PNG — operators/imagecodec.py), inside
-  the same Arrow batches; ``resize_images(fake=False)`` runs a real
-  nearest-neighbor resample and hashes the real output pixels;
-* real AUDIO/VIDEO decode (and video frame sampling) remains a loud
-  ``NotImplementedError`` — no honest stdlib codec exists for those; plug
-  in torchaudio/pyav there in a real deployment.
+signatures) is real and tested.  The features are deterministic
+md5-arithmetic features of the bytes, which every SQL oracle replays; a
+deployment swaps a real codec (PIL, torchaudio, pyav) into the same Arrow
+batches.
 """
 
 from __future__ import annotations
@@ -42,16 +35,16 @@ FEATURE_SCHEMA = T.StructType(
 )
 
 
-def synthesize_media(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def synthesize_media(docs: DataFrame) -> DataFrame:
     """Deterministic fake media table: payload = utf-8 bytes of the text
     (stand-in for image bytes), typed meta struct."""
     return docs.select(
-        F.col(id_col).alias("media_id"),
+        F.col("doc_id").alias("media_id"),
         F.element_at(
             F.array(F.lit("image"), F.lit("audio"), F.lit("video")),
-            (F.pmod(F.col(id_col), F.lit(3)) + 1).cast("int"),
+            (F.pmod(F.col("doc_id"), F.lit(3)) + 1).cast("int"),
         ).alias("media_type"),
-        F.encode(F.col(text_col), "utf-8").alias("payload"),
+        F.encode(F.col("text"), "utf-8").alias("payload"),
         F.struct(
             F.lit("synthetic").alias("source"),
             F.to_timestamp(F.lit("2024-01-01 00:00:00")).alias("captured_ts"),
@@ -59,50 +52,19 @@ def synthesize_media(docs: DataFrame, id_col: str = "doc_id", text_col: str = "t
     )
 
 
-def decode_media(media: DataFrame, fake: bool = True, batch_note: str = "decode") -> DataFrame:
+def decode_media(media: DataFrame) -> DataFrame:
     """Arrow-batched media decode via ``mapInPandas``.
 
     The iterator-of-batches shape is the one a real codec needs (stream
-    batches, never materialize the partition).  ``fake=True`` derives
-    deterministic pseudo-features from the payload bytes (oracle-replayable);
-    ``fake=False`` decodes real IMAGE bytes with the engine's stdlib codecs
-    (PPM/BMP/PNG, imagecodec.py) — real width/height per row; audio/video
-    rows in real mode raise ``NotImplementedError`` (no stdlib codec).
+    batches, never materialize the partition).  The features are
+    deterministic pseudo-features derived from the payload bytes
+    (oracle-replayable).
     """
 
     def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import hashlib
 
         for pdf in batches:
-            if not fake:
-                from .imagecodec import decode_image
-
-                if (pdf["media_type"] != "image").any():
-                    raise NotImplementedError(
-                        "real decode supports images only (ppm/pgm/bmp/png); "
-                        "plug in torchaudio/pyav for audio/video"
-                    )
-                recs = []
-                for mid, mtype, payload in zip(
-                    pdf["media_id"], pdf["media_type"], pdf["payload"]
-                ):
-                    arr = decode_image(bytes(payload))
-                    recs.append(
-                        {
-                            "media_id": mid,
-                            "media_type": mtype,
-                            "n_bytes": len(payload),
-                            "width": arr.shape[1],
-                            "height": arr.shape[0],
-                            "duration_s": None,
-                            "content_hash": hashlib.md5(bytes(payload)).hexdigest(),
-                        }
-                    )
-                out = pd.DataFrame(recs, columns=[f.name for f in FEATURE_SCHEMA.fields])
-                yield out.astype(
-                    {"n_bytes": "int64", "width": "int32", "height": "int32"}
-                )
-                continue
             payloads = pdf["payload"]
             n_bytes = payloads.map(lambda b: len(b) if b is not None else 0)
             digest = payloads.map(
@@ -141,17 +103,14 @@ RESIZED_SCHEMA = T.StructType(
 )
 
 
-def resize_images(media: DataFrame, target: tuple[int, int] = (224, 224), fake: bool = True) -> DataFrame:
+def resize_images(media: DataFrame, target: tuple[int, int] = (224, 224)) -> DataFrame:
     """Aspect-preserving image resize via Arrow ``mapInPandas`` (image rows
     only — non-images are filtered BEFORE the Python stage so the Arrow
     exchange never carries bytes it won't use).
 
-    ``fake=True`` computes the REAL resize geometry (fit-within scale, output
-    dims) from the fake-decode dimensions and a deterministic content hash —
-    all integer/md5 arithmetic a SQL oracle can replay.  ``fake=False``
-    decodes the real pixels (imagecodec.py), applies the same fit-within
-    geometry to the REAL dimensions, resamples nearest-neighbor, and hashes
-    the resampled pixel bytes — an actual resize, per Arrow batch.
+    Computes the REAL resize geometry (fit-within scale, output dims) from
+    the decode's pseudo-dimensions and a deterministic content hash — all
+    integer/md5 arithmetic a SQL oracle can replay.
     """
     tw, th = target
 
@@ -159,34 +118,6 @@ def resize_images(media: DataFrame, target: tuple[int, int] = (224, 224), fake: 
         import hashlib
 
         for pdf in batches:
-            if not fake:
-                from .imagecodec import decode_image, resize_nearest
-
-                recs = []
-                for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                    arr = decode_image(bytes(payload))
-                    h, w = arr.shape[:2]
-                    scale = min(tw / w, th / h, 1.0)
-                    # clamp: an extreme aspect ratio (10000x2 @ 224x224) would
-                    # truncate one dim to 0 and emit a hash of zero pixels
-                    ow, oh = max(1, int(w * scale)), max(1, int(h * scale))
-                    resized = resize_nearest(arr, ow, oh)
-                    recs.append(
-                        {
-                            "media_id": mid,
-                            "target_w": tw,
-                            "target_h": th,
-                            "out_w": ow,
-                            "out_h": oh,
-                            "scale": round(scale, 6),
-                            "resized_hash": hashlib.md5(resized.tobytes()).hexdigest(),
-                        }
-                    )
-                out = pd.DataFrame(recs, columns=[f.name for f in RESIZED_SCHEMA.fields])
-                yield out.astype(
-                    {"target_w": "int32", "target_h": "int32", "out_w": "int32", "out_h": "int32"}
-                )
-                continue
             digest = pdf["payload"].map(
                 lambda b: hashlib.md5(b).hexdigest() if b is not None else None
             )
@@ -224,13 +155,13 @@ FRAME_SCHEMA = T.StructType(
 )
 
 
-def sample_frames(media: DataFrame, fps: float = 1.0, max_frames: int = 16, fake: bool = True) -> DataFrame:
-    """Sample frames from video rows at ``fps`` via Arrow ``mapInPandas`` —
+def sample_frames(media: DataFrame) -> DataFrame:
+    """Sample frames from video rows at 1 fps via Arrow ``mapInPandas`` —
     one OUTPUT ROW PER FRAME (the iterator-of-batches contract allows 1→N
     expansion without materializing the partition).
 
-    Frame count = min(floor(fake duration · fps) + 1, max_frames); frame
-    timestamps are i/fps; the fake frame hash is md5(content_hash:i) —
+    Frame count = min(floor(pseudo duration) + 1, 16); frame timestamps are
+    i seconds; the frame hash is md5(content_hash:i) —
     deterministic arithmetic the SQL oracle replays exactly.  Non-video rows
     are pruned before the Arrow exchange.
     """
@@ -239,19 +170,15 @@ def sample_frames(media: DataFrame, fps: float = 1.0, max_frames: int = 16, fake
         import hashlib
 
         for pdf in batches:
-            if not fake:
-                raise NotImplementedError(
-                    "real frame sampling needs a video codec; install pyav/ffmpeg and replace this branch"
-                )
             rows = {"media_id": [], "frame_idx": [], "frame_ts_s": [], "frame_hash": []}
             for mid, payload in zip(pdf["media_id"], pdf["payload"]):
                 digest = hashlib.md5(payload).hexdigest() if payload is not None else None
                 duration = (len(payload) if payload is not None else 0) / 1000.0
-                n = min(int(duration * fps) + 1, max_frames)
+                n = min(int(duration) + 1, 16)
                 for i in range(n):
                     rows["media_id"].append(mid)
                     rows["frame_idx"].append(i)
-                    rows["frame_ts_s"].append(round(i / fps, 6))
+                    rows["frame_ts_s"].append(float(i))
                     rows["frame_hash"].append(
                         hashlib.md5(f"{digest}:{i}".encode()).hexdigest() if digest else None
                     )

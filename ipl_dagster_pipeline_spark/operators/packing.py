@@ -217,27 +217,22 @@ def with_keyed_cumsum(
     )
 
 
-def pack_sequences(
-    docs: DataFrame,
-    seq_len: int,
-    id_col: str = "doc_id",
-    token_count_col: str = "n_tokens",
-) -> DataFrame:
+def pack_sequences(docs: DataFrame, seq_len: int) -> DataFrame:
     """Concat-and-chunk packing manifest: each document's interval in the
     concatenated token stream and the chunk span it lands in.
 
     Output per doc: ``tok_start`` (inclusive), ``tok_end`` (exclusive),
     ``first_chunk`` / ``last_chunk`` (chunks of ``seq_len`` tokens the doc
     overlaps), ``n_chunks_spanned``.  Deterministic: stream order is
-    ``id_col`` ascending.
+    ``doc_id`` ascending.
     """
-    cum = with_keyed_cumsum(docs, [], [id_col], token_count_col, out_col="__cum")
+    cum = with_keyed_cumsum(docs, [], ["doc_id"], "n_tokens", out_col="__cum")
     return cum.select(
-        id_col,
-        F.col(token_count_col),
-        (F.col("__cum") - F.col(token_count_col)).alias("tok_start"),
+        "doc_id",
+        F.col("n_tokens"),
+        (F.col("__cum") - F.col("n_tokens")).alias("tok_start"),
         F.col("__cum").alias("tok_end"),
-        F.floor((F.col("__cum") - F.col(token_count_col)) / seq_len).cast("long").alias("first_chunk"),
+        F.floor((F.col("__cum") - F.col("n_tokens")) / seq_len).cast("long").alias("first_chunk"),
         F.floor((F.col("__cum") - 1) / seq_len).cast("long").alias("last_chunk"),
     ).withColumn(
         "n_chunks_spanned", (F.col("last_chunk") - F.col("first_chunk") + 1).cast("long")

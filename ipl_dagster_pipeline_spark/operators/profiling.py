@@ -102,15 +102,9 @@ def group_quantiles(
 
 
 def robust_outliers(
-    df: DataFrame,
-    group_cols: list[str],
-    value_col: str,
-    key_col: str,
-    n_mads: int = 3,
-    med_col: str = "med",
-    mad_col: str = "mad",
+    df: DataFrame, group_cols: list[str], value_col: str, key_col: str
 ) -> DataFrame:
-    """Per-group robust outliers: rows where ``|value - median| > n_mads *
+    """Per-group robust outliers: rows where ``|value - median| > 3 *
     MAD`` (median absolute deviation) — the outlier rule that, unlike
     mean/stddev z-scores, is not dragged by the outliers it is hunting.
 
@@ -130,21 +124,15 @@ def robust_outliers(
         fit = _rank_elements(frame, group_cols, col, key_col, {name: (50, 100)})
         return _null_safe_broadcast_join(frame, tracked_persist(fit.drop("__n")), group_cols)
 
-    dev = stat(df, value_col, med_col).withColumn(
-        "__adev", F.abs(F.col(value_col) - F.col(med_col))
+    dev = stat(df, value_col, "med").withColumn(
+        "__adev", F.abs(F.col(value_col) - F.col("med"))
     )
-    scored = stat(dev, "__adev", mad_col)
-    return scored.filter(F.col("__adev") > n_mads * F.col(mad_col)).drop("__adev")
+    scored = stat(dev, "__adev", "mad")
+    return scored.filter(F.col("__adev") > 3 * F.col("mad")).drop("__adev")
 
 
 def group_histogram(
-    df: DataFrame,
-    group_cols: list[str],
-    value_col: str,
-    bin_width: int,
-    bin_col: str = "bin",
-    lo_col: str = "bin_lo",
-    count_col: str = "n_rows",
+    df: DataFrame, group_cols: list[str], value_col: str, bin_width: int
 ) -> DataFrame:
     """Exact fixed-width histogram per group: one row per (group, bin) with
     the bin's inclusive lower edge and row count.
@@ -161,8 +149,8 @@ def group_histogram(
         raise ValueError(f"bin_width must be >= 1, got {bin_width}")
     b = F.floor(F.col(value_col) / bin_width).cast("long")
     return (
-        df.withColumn(bin_col, b)
-        .groupBy(*group_cols, bin_col)
-        .agg(F.count(F.lit(1)).alias(count_col))
-        .withColumn(lo_col, (F.col(bin_col) * bin_width).cast("long"))
+        df.withColumn("bin", b)
+        .groupBy(*group_cols, "bin")
+        .agg(F.count(F.lit(1)).alias("n_rows"))
+        .withColumn("bin_lo", (F.col("bin") * bin_width).cast("long"))
     )

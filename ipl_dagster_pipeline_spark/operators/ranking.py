@@ -33,9 +33,6 @@ def bm25_scores(
     query_terms: list[str],
     k1: float = 1.2,
     b: float = 0.75,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    score_col: str = "score",
 ) -> DataFrame:
     """One row per document matching ≥1 query term: ``score`` (rounded to
     6 dp after the fixed-order sum) and ``n_terms_matched``.
@@ -46,19 +43,19 @@ def bm25_scores(
         raise ValueError("query_terms must be non-empty")
     terms = list(dict.fromkeys(query_terms))  # de-dupe, keep order
     toks = docs.select(
-        F.col(id_col),
-        F.explode(F.split(F.lower(F.col(text_col)), r"\s+")).alias("t"),
+        F.col("doc_id"),
+        F.explode(F.split(F.lower(F.col("text")), r"\s+")).alias("t"),
     )
-    doclen = toks.groupBy(id_col).agg(F.count(F.lit(1)).alias("dl"))
+    doclen = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
     totals = doclen.agg(
         F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("tot_len")
     )
     hits = toks.filter(F.col("t").isin(terms))
-    tf = hits.groupBy(id_col, "t").agg(F.count(F.lit(1)).alias("tf"))
+    tf = hits.groupBy("doc_id", "t").agg(F.count(F.lit(1)).alias("tf"))
     df_ = tf.groupBy("t").agg(F.count(F.lit(1)).alias("df"))
     scored = (
         tf.join(F.broadcast(df_), "t")
-        .join(doclen, id_col)
+        .join(doclen, "doc_id")
         .join(F.broadcast(totals))
         .withColumn(
             "__s",
@@ -74,14 +71,14 @@ def bm25_scores(
         F.coalesce(F.max(F.when(F.col("t") == t, F.col("__s"))), F.lit(0.0)).alias(f"__s_{i}")
         for i, t in enumerate(terms)
     ]
-    agg = scored.groupBy(id_col).agg(
+    agg = scored.groupBy("doc_id").agg(
         *per_term, F.count(F.lit(1)).cast("int").alias("n_terms_matched")
     )
     total = F.lit(0.0)
     for i in range(len(terms)):
         total = total + F.col(f"__s_{i}")  # fixed, engine-independent order
     return agg.select(
-        id_col,
-        F.round(total, 6).alias(score_col),
+        "doc_id",
+        F.round(total, 6).alias("score"),
         "n_terms_matched",
     )

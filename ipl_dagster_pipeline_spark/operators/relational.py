@@ -23,20 +23,12 @@ def temporal_validity_filter(df: DataFrame, end_col: str, as_of) -> DataFrame:
     return df.filter(F.col(end_col) >= F.lit(as_of).cast("timestamp"))
 
 
-def broadcast_dim_join(
-    fact: DataFrame,
-    dim: DataFrame,
-    on: list[str] | str,
-    how: str = "inner",
-    dedup_dim_order: list[Column] | None = None,
-) -> DataFrame:
-    """Broadcast hash join fact×small-dim (J1/J2) with the reference's
-    dedup-before-join rule (lamassu.py:221) applied to the dim side when an
-    ordering is given — prevents row explosion."""
-    keys = [on] if isinstance(on, str) else list(on)
-    if dedup_dim_order is not None:
-        dim = rank_dedup(dim, keys, dedup_dim_order, keep="last")
-    return fact.join(F.broadcast(dim), on=on, how=how)
+def broadcast_dim_join(fact: DataFrame, dim: DataFrame, on: list[str] | str) -> DataFrame:
+    """Broadcast inner hash join fact×small-dim (J1/J2).  A dim with
+    repeated keys multiplies fact rows: apply the reference's
+    dedup-before-join rule (lamassu.py:221, ``rank_dedup(keep="last")``)
+    to such a dim first."""
+    return fact.join(F.broadcast(dim), on=on, how="inner")
 
 
 def anti_join(df: DataFrame, exclude: DataFrame, on: list[str] | str) -> DataFrame:
@@ -51,10 +43,11 @@ def semi_join(df: DataFrame, probe: DataFrame, on: list[str] | str) -> DataFrame
     return df.join(probe, on=on, how="left_semi")
 
 
-def union_by_name(dfs: list[DataFrame], allow_missing: bool = True) -> DataFrame:
-    """Union-all by column name across per-source frames (U1; reference
-    concatenates per-system frames, sharing.py:50-61)."""
-    return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=allow_missing), dfs)
+def union_by_name(dfs: list[DataFrame]) -> DataFrame:
+    """Union-all by column name across per-source frames, a column missing
+    from one frame reading NULL there (U1; reference concatenates
+    per-system frames, sharing.py:50-61)."""
+    return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), dfs)
 
 
 def group_pivot_sum(
@@ -129,15 +122,9 @@ def prefer_first(
     return rank_dedup(df, keys, order, keep="first")
 
 
-def rollup_aggregate(
-    df: DataFrame,
-    dims: list[str],
-    aggs: list[Column],
-    cube: bool = False,
-    gid_col: str = "gid",
-) -> DataFrame:
-    """Multi-level OLAP aggregation (ROLLUP / CUBE) with an explicit
-    grouping id.
+def rollup_aggregate(df: DataFrame, dims: list[str], aggs: list[Column]) -> DataFrame:
+    """Multi-level OLAP aggregation (ROLLUP) with an explicit grouping id
+    ``gid``.
 
     The reference pivots one level at a time (sharing.py availability
     pivot); a recipe dashboard wants per-dim, per-prefix AND grand totals in
@@ -145,15 +132,12 @@ def rollup_aggregate(
     map-side partial aggregation, so the subtotal levels cost one exchange
     total, not one scan per level.
 
-    ``gid_col`` is Spark's ``grouping_id()`` (bit i set = dim i aggregated
+    ``gid`` is Spark's ``grouping_id()`` (bit i set = dim i aggregated
     away), which disambiguates a subtotal row's NULL from a genuine NULL
     dim value — required for lossless cross-engine comparison (SQL
     ``GROUPING(...)`` composes the same bits).
     """
-    grouped = df.cube(*dims) if cube else df.rollup(*dims)
-    return grouped.agg(
-        F.grouping_id().cast("int").alias(gid_col), *aggs
-    )
+    return df.rollup(*dims).agg(F.grouping_id().cast("int").alias("gid"), *aggs)
 
 
 def map_lookup(col: Column, mapping: dict[str, str], default: str) -> Column:

@@ -7,7 +7,7 @@ repartitioning (``rand()`` and ``df.sample`` are neither engine-portable nor
 re-run-stable).  The split key is the PORTABLE md5 hash (text_dedup.portable_
 hash), so the DuckDB oracle reproduces the exact assignment bit-for-bit.
 
-``hash_split`` buckets ``portable_hash(key) % granularity`` against cumulative
+``hash_split`` buckets ``portable_hash(key) % GRANULARITY`` against cumulative
 fraction boundaries; entity-keyed splits (e.g. conv_id) keep every row of an
 entity in one fold — the leakage-safe way to split conversation data.
 
@@ -29,15 +29,15 @@ from .text_dedup import portable_hash
 GRANULARITY = 10_000
 
 
-def split_bucket(key: Column, seed: int = 7, granularity: int = GRANULARITY) -> Column:
-    """Deterministic bucket in [0, granularity) from the portable hash.
+def split_bucket(key: Column, seed: int = 7) -> Column:
+    """Deterministic bucket in [0, GRANULARITY) from the portable hash.
 
     Null keys hash as the sentinel string ``<null>`` (not SQL-null): every
     null-keyed row lands deterministically in ONE fold instead of getting a
     null assignment that silently falls out of every split."""
     return F.pmod(
         portable_hash(F.coalesce(key.cast("string"), F.lit("<null>")), seed),
-        F.lit(granularity),
+        F.lit(GRANULARITY),
     )
 
 
@@ -45,9 +45,7 @@ def hash_split(
     df: DataFrame,
     key_col: str,
     fractions: dict[str, float] | None = None,
-    seed: int = 7,
     out_col: str = "split",
-    granularity: int = GRANULARITY,
 ) -> DataFrame:
     """Assign each row to a named fold by hashing ``key_col``.
 
@@ -58,12 +56,12 @@ def hash_split(
     total = sum(fractions.values())
     if abs(total - 1.0) > 1e-9:
         raise ValueError(f"fractions must sum to 1, got {total}")
-    bucket = split_bucket(F.col(key_col), seed, granularity)
+    bucket = split_bucket(F.col(key_col), 7)
     expr = None
     acc = 0.0
     for name, frac in fractions.items():
         acc += frac
-        bound = round(acc * granularity)
+        bound = round(acc * GRANULARITY)
         cond = bucket < F.lit(bound)
         expr = F.when(cond, F.lit(name)) if expr is None else expr.when(cond, F.lit(name))
     return df.withColumn(out_col, expr)
@@ -75,8 +73,6 @@ def sample_stratified(
     key_col: str,
     fractions: dict[str, float],
     default_fraction: float = 1.0,
-    seed: int = 13,
-    granularity: int = GRANULARITY,
 ) -> DataFrame:
     """Deterministic per-stratum sampling: keep a row iff its hash bucket is
     below its stratum's fraction boundary (source-mixture weighting).
@@ -84,7 +80,7 @@ def sample_stratified(
     Unlike ``df.sampleBy`` this is a pure projection + filter: no RNG, no
     driver round-trip, the exact same rows survive at any parallelism and on
     any engine — so a mixture decision made at 100 TB is reproducible and
-    auditable.  Fractions are exact to 1/granularity; strata absent from
+    auditable.  Fractions are exact to 1/GRANULARITY; strata absent from
     ``fractions`` keep ``default_fraction``.  The hash key should be the
     entity id (doc/conv), so resampling a stratum never splits an entity.
     """
@@ -93,20 +89,14 @@ def sample_stratified(
             raise ValueError(f"fraction for stratum {name!r} must be in [0, 1], got {frac}")
     if not 0.0 <= default_fraction <= 1.0:
         raise ValueError(f"default_fraction must be in [0, 1], got {default_fraction}")
-    bucket = split_bucket(F.col(key_col), seed, granularity)
-    bound = F.lit(round(default_fraction * granularity))
+    bucket = split_bucket(F.col(key_col), 13)
+    bound = F.lit(round(default_fraction * GRANULARITY))
     for name, frac in fractions.items():
-        bound = F.when(F.col(strata_col) == name, F.lit(round(frac * granularity))).otherwise(bound)
+        bound = F.when(F.col(strata_col) == name, F.lit(round(frac * GRANULARITY))).otherwise(bound)
     return df.filter(bucket < bound)
 
 
-def sample_weighted(
-    df: DataFrame,
-    key_col: str,
-    weight: Column,
-    seed: int = 17,
-    granularity: int = GRANULARITY,
-) -> DataFrame:
+def sample_weighted(df: DataFrame, key_col: str, weight: Column, seed: int = 17) -> DataFrame:
     """Deterministic PER-ROW-weight sampling: keep a row with probability
     ``clamp(weight, 0, 1)`` — e.g. quality-score-proportional retention — by
     comparing the key's hash bucket to the row's own weight boundary.
@@ -115,12 +105,12 @@ def sample_weighted(
     no RNG, bit-identical at any parallelism/engine), generalized from a
     per-stratum constant to an arbitrary row-level weight expression.
     Monotone: raising a row's weight can only keep it kept.  The weight
-    boundary is rounded to 1/granularity — keep weight expressions
+    boundary is rounded to 1/GRANULARITY — keep weight expressions
     low-precision (exact in double) for cross-engine replay.
     """
-    bucket = split_bucket(F.col(key_col), seed, granularity)
+    bucket = split_bucket(F.col(key_col), seed)
     w = F.least(F.greatest(weight, F.lit(0.0)), F.lit(1.0))
-    bound = F.round(w * granularity).cast("long")
+    bound = F.round(w * GRANULARITY).cast("long")
     return df.filter(bucket < bound)
 
 
@@ -131,7 +121,6 @@ def sample_temperature(
     alpha: float = 0.5,
     scale: float = 1.0,
     seed: int = 19,
-    granularity: int = GRANULARITY,
 ) -> DataFrame:
     """Temperature-flattened mixture sampling: keep probability per stratum
     ∝ ``n_s^(alpha-1)``, normalized so the LARGEST stratum keeps ``scale`` —
@@ -158,7 +147,7 @@ def sample_temperature(
         .crossJoin(F.broadcast(n_max))  # 1 row — a literal at scale
     )
     w = F.lit(scale) * F.pow(F.col("__n_s") / F.col("__n_max"), F.lit(alpha - 1.0))
-    return sample_weighted(joined, key_col, w, seed, granularity).drop("__n_s", "__n_max")
+    return sample_weighted(joined, key_col, w, seed).drop("__n_s", "__n_max")
 
 
 def mixture_epochs(
@@ -168,8 +157,6 @@ def mixture_epochs(
     epochs: dict[str, float],
     default_epochs: float = 1.0,
     seed: int = 29,
-    out_col: str = "epoch",
-    granularity: int = GRANULARITY,
 ) -> DataFrame:
     """Mixture weighting with UPSAMPLING: repeat each row ``epochs[stratum]``
     times, where the epoch count may be fractional and greater than 1.
@@ -188,11 +175,11 @@ def mixture_epochs(
             raise ValueError(f"epochs for stratum {name!r} must be >= 0, got {e}")
     if default_epochs < 0:
         raise ValueError(f"default_epochs must be >= 0, got {default_epochs}")
-    bucket = split_bucket(F.col(key_col), seed, granularity)
+    bucket = split_bucket(F.col(key_col), seed)
 
     def parts(e: float) -> tuple[int, int]:
         whole = int(e)
-        return whole, round((e - whole) * granularity)
+        return whole, round((e - whole) * GRANULARITY)
 
     dw, db = parts(default_epochs)
     whole_col, bound_col = F.lit(dw), F.lit(db)
@@ -205,7 +192,7 @@ def mixture_epochs(
     return (
         df.withColumn("__n", n_copies)
         .filter(F.col("__n") > 0)
-        .withColumn(out_col, F.explode(F.sequence(F.lit(0), F.col("__n") - 1)))
+        .withColumn("epoch", F.explode(F.sequence(F.lit(0), F.col("__n") - 1)))
         .drop("__n")
     )
 
@@ -218,7 +205,6 @@ def token_budget_select(
     budgets: dict[str, int],
     default_budget: int | None = None,
     seed: int = 31,
-    cum_col: str = "cum_tokens",
 ) -> DataFrame:
     """Select a deterministic ≈``budget``-token subset per stratum: walk each
     stratum's rows in portable-hash order (a deterministic shuffle) and keep
@@ -239,22 +225,15 @@ def token_budget_select(
         group_cols=[strata_col],
         order_cols=["__h", key_col],
         value_col=token_col,
-        out_col=cum_col,
+        out_col="cum_tokens",
     )
     bound = F.lit(None).cast("long") if default_budget is None else F.lit(int(default_budget))
     for name, b in budgets.items():
         bound = F.when(F.col(strata_col) == name, F.lit(int(b))).otherwise(bound)
-    return cum.filter(bound.isNull() | (F.col(cum_col) <= bound)).drop("__h")
+    return cum.filter(bound.isNull() | (F.col("cum_tokens") <= bound)).drop("__h")
 
 
-def shuffle_shards(
-    df: DataFrame,
-    key_col: str,
-    n_shards: int,
-    seed: int = 37,
-    pos_col: str = "shuffle_pos",
-    shard_col: str = "shard",
-) -> DataFrame:
+def shuffle_shards(df: DataFrame, key_col: str, n_shards: int, seed: int = 37) -> DataFrame:
     """Deterministic global corpus shuffle + balanced shard assignment.
 
     Training wants the corpus in a pseudo-random order, split into N
@@ -279,23 +258,16 @@ def shuffle_shards(
         out_col="__rn",
     )
     return (
-        pos.withColumn(pos_col, (F.col("__rn") - 1).cast("long"))
-        .withColumn(shard_col, F.pmod(F.col(pos_col), F.lit(n_shards)).cast("int"))
+        pos.withColumn("shuffle_pos", (F.col("__rn") - 1).cast("long"))
+        .withColumn("shard", F.pmod(F.col("shuffle_pos"), F.lit(n_shards)).cast("int"))
         .drop("__h", "__one", "__rn")
     )
 
 
-def sample_negatives(
-    df: DataFrame,
-    id_col: str,
-    k: int,
-    seed: int = 53,
-    rank_col: str = "neg_rank",
-    neg_prefix: str = "neg_",
-) -> DataFrame:
+def sample_negatives(df: DataFrame, id_col: str, k: int, seed: int = 53) -> DataFrame:
     """K deterministic pseudo-random negatives per anchor row — the
     contrastive-training companion to the positive pairs the dedup family
-    finds: one row per (anchor, rank 1..k) with ``{neg_prefix}{id_col}``
+    finds: one row per (anchor, rank 1..k) with ``neg_{id_col}``
     drawn uniformly from the corpus by hash.
 
     How it scales (never an all-pairs join, never a driver-side corpus):
@@ -339,11 +311,11 @@ def sample_negatives(
     cand = indexed.select(
         F.col(id_col),
         "__pos",
-        F.explode(F.sequence(F.lit(1), F.lit(k))).alias(rank_col),
+        F.explode(F.sequence(F.lit(1), F.lit(k))).alias("neg_rank"),
     )
     draw = F.pmod(
         portable_hash(
-            F.concat(key, F.lit(":"), F.col(rank_col).cast("string")), seed
+            F.concat(key, F.lit(":"), F.col("neg_rank").cast("string")), seed
         ),
         F.lit(n),
     )
@@ -352,11 +324,11 @@ def sample_negatives(
         F.when(draw == F.col("__pos"), (draw + 1) % n).otherwise(draw).cast("long"),
     )
     negs = indexed.select(
-        F.col("__pos").alias("__neg_pos"), F.col(id_col).alias(f"{neg_prefix}{id_col}")
+        F.col("__pos").alias("__neg_pos"), F.col(id_col).alias(f"neg_{id_col}")
     )
     return (
         cand.join(negs, "__neg_pos")
-        .select(id_col, F.col(rank_col).cast("int").alias(rank_col), f"{neg_prefix}{id_col}")
+        .select(id_col, F.col("neg_rank").cast("int").alias("neg_rank"), f"neg_{id_col}")
     )
 
 
@@ -366,7 +338,6 @@ def sample_class_cap(
     cap: int,
     key_col: str,
     seed: int = 61,
-    rank_col: str = "class_rank",
 ) -> DataFrame:
     """Class-balanced downsampling: keep at most ``cap`` rows per class,
     chosen as the first ``cap`` in deterministic hash order — the standard
@@ -378,7 +349,7 @@ def sample_class_cap(
     situation a class CAP exists for.  NULL class is a real group.  The
     kept set is stable under any parallelism AND under appends that only
     add rows hashing later (hash order is data-position-independent).
-    ``rank_col`` (1-based within class) is kept for auditability.
+    ``class_rank`` (1-based within class) is kept for auditability.
     """
     if cap < 1:
         raise ValueError(f"cap must be >= 1, got {cap}")
@@ -388,10 +359,10 @@ def sample_class_cap(
         group_cols=[class_col],
         order_cols=["__h", key_col],
         value_col="__one",
-        out_col=rank_col,
+        out_col="class_rank",
     )
     return (
-        ranked.where(F.col(rank_col) <= cap)
-        .withColumn(rank_col, F.col(rank_col).cast("long"))
+        ranked.where(F.col("class_rank") <= cap)
+        .withColumn("class_rank", F.col("class_rank").cast("long"))
         .drop("__h", "__one")
     )

@@ -27,21 +27,21 @@ from pyspark.sql import functions as F
 from .windows import turn_window
 
 
-def sessionize(df: DataFrame, gap_seconds: int = 1800, key: str = "conv_id") -> DataFrame:
+def sessionize(df: DataFrame, gap_seconds: int = 1800) -> DataFrame:
     """Window-sum sessionization: session_id = 1 + count of gaps > threshold
     among all preceding turns of the conversation.  A NULL gap (first turn,
     or a NULL ``ts`` on either side) opens a session; the flag reads the
     gap once, so the plan holds one ``lag``."""
-    w = turn_window(key)
+    w = turn_window()
     gap = F.col("ts").cast("long") - F.lag(F.col("ts").cast("long")).over(w)
     new_sess = F.coalesce((gap > gap_seconds).cast("int"), F.lit(1))
-    cum = turn_window(key).rowsBetween(Window.unboundedPreceding, Window.currentRow)  # shares the chain sort
+    cum = turn_window().rowsBetween(Window.unboundedPreceding, Window.currentRow)  # shares the chain sort
     return df.withColumn("__new", new_sess).withColumn(
         "session_id", F.sum("__new").over(cum).cast("int")
     ).drop("__new")
 
 
-def sessionize_grouped(df: DataFrame, gap_seconds: int = 1800, key: str = "conv_id") -> DataFrame:
+def sessionize_grouped(df: DataFrame, gap_seconds: int = 1800) -> DataFrame:
     """Grouped-map Arrow sessionization — the same session ids as
     ``sessionize`` (equivalence covered by tests/test_sessionize.py and
     tests/test_property.py), NULL ``ts`` included: a NULL-``ts`` turn sorts
@@ -74,13 +74,13 @@ def sessionize_grouped(df: DataFrame, gap_seconds: int = 1800, key: str = "conv_
             pa.field("session_id", pa.int32(), nullable=False), pa.array(np.cumsum(new, dtype=np.int32))
         )
 
-    return df.groupBy(key).applyInArrow(_sessionize_table, schema=out_schema)
+    return df.groupBy("conv_id").applyInArrow(_sessionize_table, schema=out_schema)
 
 
-def session_aggregates(sessions: DataFrame, key: str = "conv_id") -> DataFrame:
+def session_aggregates(sessions: DataFrame) -> DataFrame:
     """Per-session rollup after sessionization (SURVEY §2.5 engine-added
     aggregates): turn count, span, distinct tools, role mix."""
-    return sessions.groupBy(key, "session_id").agg(
+    return sessions.groupBy("conv_id", "session_id").agg(
         F.count("*").alias("n_turns"),
         F.min("ts").alias("session_start"),
         F.max("ts").alias("session_end"),

@@ -80,13 +80,7 @@ def _top_k(pairs: DataFrame, k: int, id_col: str) -> DataFrame:
     )
 
 
-def cosine_topk_bruteforce(
-    emb: DataFrame,
-    query_ids: list[int],
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def cosine_topk_bruteforce(emb: DataFrame, query_ids: list[int], k: int = 5) -> DataFrame:
     """Exact top-k cosine neighbors for each query id.
 
     Queries are a broadcast dim (J1 pattern); candidates every other vector.
@@ -98,15 +92,15 @@ def cosine_topk_bruteforce(
     # steps); precomputing them is Q·dim + N·dim and bit-identical (the
     # norm product keeps the same operand order the oracle uses)
     base = fan_out_scan(emb).select(
-        F.col(id_col), _as_double(F.col(vec_col)).alias("v")
+        F.col("vec_id"), _as_double(F.col("embedding")).alias("v")
     ).withColumn("__nv", _norm(F.col("v")))
-    q = base.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_id"), F.col("v").alias("qv"), F.col("__nv").alias("__nq")
+    q = base.filter(F.col("vec_id").isin(query_ids)).select(
+        F.col("vec_id").alias("query_id"), F.col("v").alias("qv"), F.col("__nv").alias("__nq")
     )
-    pairs = base.join(F.broadcast(q), F.col(id_col) != F.col("query_id")).withColumn(
+    pairs = base.join(F.broadcast(q), F.col("vec_id") != F.col("query_id")).withColumn(
         "cos", F.round(_dot(F.col("qv"), F.col("v")) / (F.col("__nq") * F.col("__nv")), 6)
     )
-    return _top_k(pairs, k, id_col)
+    return _top_k(pairs, k, "vec_id")
 
 
 def hyperplane_bucket(vec: Column, n_planes: int = 8, dim: int = 64, table: int = 0) -> Column:
@@ -140,8 +134,6 @@ def lsh_topk(
     n_planes: int = 8,
     dim: int = 64,
     n_tables: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate top-k: candidates share any of ``n_tables`` hyperplane
     buckets (multi-table LSH — the standard recall lever: per-table miss
@@ -152,28 +144,28 @@ def lsh_topk(
     (tbl, bucket) (queries are the broadcast side), then one distinct and one
     id-equi-join to fetch vectors — never a cross product."""
     emb = fan_out_scan(emb)  # the 32-dot-product bucket projection is map-heavy
-    base = emb.select(F.col(id_col), _as_double(F.col(vec_col)).alias("v")).withColumn(
+    base = emb.select(F.col("vec_id"), _as_double(F.col("embedding")).alias("v")).withColumn(
         "__nv", _norm(F.col("v"))  # per-row norm, not per-pair (see bruteforce)
     )
-    buckets = hyperplane_buckets_tall(emb, n_planes, n_tables, dim, id_col, vec_col)
-    qb = buckets.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_id"), "tbl", "bucket"
+    buckets = hyperplane_buckets_tall(emb, n_planes, n_tables, dim)
+    qb = buckets.filter(F.col("vec_id").isin(query_ids)).select(
+        F.col("vec_id").alias("query_id"), "tbl", "bucket"
     )
     cand = (
         buckets.join(F.broadcast(qb), on=["tbl", "bucket"])
-        .filter(F.col(id_col) != F.col("query_id"))
-        .select("query_id", id_col)
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .select("query_id", "vec_id")
         .distinct()
     )
-    q = base.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_id"), F.col("v").alias("qv"), F.col("__nv").alias("__nq")
+    q = base.filter(F.col("vec_id").isin(query_ids)).select(
+        F.col("vec_id").alias("query_id"), F.col("v").alias("qv"), F.col("__nv").alias("__nq")
     )
     pairs = (
-        cand.join(base, on=id_col)
+        cand.join(base, on="vec_id")
         .join(F.broadcast(q), on="query_id")
         .withColumn("cos", F.round(_dot(F.col("qv"), F.col("v")) / (F.col("__nq") * F.col("__nv")), 6))
     )
-    return _top_k(pairs, k, id_col)
+    return _top_k(pairs, k, "vec_id")
 
 
 def hyperplane_buckets_tall(
@@ -181,17 +173,15 @@ def hyperplane_buckets_tall(
     n_planes: int,
     n_tables: int,
     dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """(id, tbl, bucket) — one row per vector per LSH table.
 
     All ``n_tables`` bucket ids are computed in ONE projection pass over each
     vector (array of structs, then explode) — the vector is read once, and the
     shuffle that follows carries only (id, tbl, bucket)."""
-    base = emb.select(F.col(id_col), _as_double(F.col(vec_col)).alias("v"))
+    base = emb.select(F.col("vec_id"), _as_double(F.col("embedding")).alias("v"))
     return base.select(
-        id_col,
+        "vec_id",
         F.explode(
             F.array(
                 *[
@@ -203,48 +193,37 @@ def hyperplane_buckets_tall(
                 ]
             )
         ).alias("tb"),
-    ).select(id_col, F.col("tb.tbl").alias("tbl"), F.col("tb.bucket").alias("bucket"))
+    ).select("vec_id", F.col("tb.tbl").alias("tbl"), F.col("tb.bucket").alias("bucket"))
 
 
-def ivf_topk(
-    emb: DataFrame,
-    query_ids: list[int],
-    k: int = 5,
-    n_clusters: int = 16,
-    n_probe: int = 4,
-    train_fraction: float = 1.0,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF (inverted-file) approximate top-k: a k-means coarse quantizer
-    partitions the corpus into ``n_clusters`` cells; each query probes its
-    ``n_probe`` nearest cells and re-ranks exactly inside them.
+def ivf_topk(emb: DataFrame, query_ids: list[int]) -> DataFrame:
+    """IVF (inverted-file) approximate top-5: a k-means coarse quantizer
+    (seed 42) partitions the ``(vec_id, embedding)`` corpus into 16 cells;
+    each query probes its 4 nearest cells and re-ranks exactly inside them.
 
-    Scale shape: training runs on a SAMPLE (``train_fraction``); corpus cell
+    Scale shape: training runs on the whole corpus; corpus cell
     assignment is a single ML-transform map (no shuffle); the query→cell
     ranking joins Q queries against a BROADCAST k-row centroid table (Q·k tiny
     rows — the only intentional non-equi join); candidate fetch is an
-    equi-join on cell id.  Expected candidates ≈ corpus · n_probe/n_clusters.
+    equi-join on cell id.  Expected candidates ≈ corpus · 4/16.
     Complements the hyperplane-LSH path: IVF adapts to the data distribution
     (learned centroids), LSH is data-independent and oracle-reproducible.
     """
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    base = emb.select(F.col(id_col), _as_double(F.col(vec_col)).alias("v"))
+    base = emb.select(F.col("vec_id"), _as_double(F.col("embedding")).alias("v"))
     feat = base.withColumn("features", array_to_vector(F.col("v")))
-    train = feat if train_fraction >= 1.0 else feat.sample(train_fraction, seed=seed)
-    model = KMeans(k=n_clusters, seed=seed, featuresCol="features", predictionCol="cell").fit(train)
-    assigned = model.transform(feat).select(id_col, "v", "cell")
+    model = KMeans(k=16, seed=42, featuresCol="features", predictionCol="cell").fit(feat)
+    assigned = model.transform(feat).select("vec_id", "v", "cell")
 
     centroids = [
         (int(i), [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())
     ]
     cent = emb.sparkSession.createDataFrame(centroids, ["cell", "cvec"])
 
-    q = assigned.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_id"), F.col("v").alias("qv")
+    q = assigned.filter(F.col("vec_id").isin(query_ids)).select(
+        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
     )
     # rank the k centroids per query (Q×k rows — bounded by design)
     qc = q.crossJoin(F.broadcast(cent)).withColumn(
@@ -258,12 +237,12 @@ def ivf_topk(
     wq = Window.partitionBy("query_id").orderBy(F.col("cdist").asc(), F.col("cell").asc())
     probes = (
         qc.withColumn("__pr", F.row_number().over(wq))
-        .filter(F.col("__pr") <= n_probe)
+        .filter(F.col("__pr") <= 4)
         .select("query_id", "qv", "cell")
     )
-    cand = assigned.join(probes, on="cell").filter(F.col(id_col) != F.col("query_id"))
+    cand = assigned.join(probes, on="cell").filter(F.col("vec_id") != F.col("query_id"))
     pairs = cand.withColumn("cos", F.round(cosine(F.col("qv"), F.col("v")), 6))
-    return _top_k(pairs, k, id_col)
+    return _top_k(pairs, 5, "vec_id")
 
 
 def ivf_topk_pinned(
@@ -273,8 +252,6 @@ def ivf_topk_pinned(
     n_clusters: int = 16,
     n_probe: int = 4,
     seed: int = 43,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF approximate top-k with a PINNED deterministic coarse quantizer —
     the value-hash-oracle-able sibling of :func:`ivf_topk`.
@@ -301,17 +278,16 @@ def ivf_topk_pinned(
     """
     from .text_dedup import portable_hash
 
-    base = emb.select(F.col(id_col), _as_double(F.col(vec_col)).alias("v"))
-    h = portable_hash(F.coalesce(F.col(id_col).cast("string"), F.lit("<null>")), seed)
+    base = emb.select(F.col("vec_id"), _as_double(F.col("embedding")).alias("v"))
+    h = portable_hash(F.coalesce(F.col("vec_id").cast("string"), F.lit("<null>")), seed)
     seed_rows = (
-        base.withColumn("__h", h).orderBy("__h", id_col).limit(n_clusters).select("v").collect()
+        base.withColumn("__h", h).orderBy("__h", "vec_id").limit(n_clusters).select("v").collect()
     )
     cents = [(c, [float(x) for x in r["v"]]) for c, r in enumerate(seed_rows)]
     if not cents:  # empty corpus: no quantizer — empty result, normal schema
+        id_type = emb.schema["vec_id"].dataType.simpleString()
         return emb.sparkSession.createDataFrame(
-            [], f"query_id {emb.schema[id_col].dataType.simpleString()}, "
-                f"neighbor_id {emb.schema[id_col].dataType.simpleString()}, "
-                "cos double, rnk int"
+            [], f"query_id {id_type}, neighbor_id {id_type}, cos double, rnk int"
         )
 
     def _self_dot(cvals: list[float]) -> float:
@@ -339,12 +315,12 @@ def ivf_topk_pinned(
     )
     withd = base.withColumn("__vv", _dot(F.col("v"), F.col("v"))).withColumn("__darr", darr)
     assigned = withd.withColumn("cell", F.array_min("__darr").getField("cell")).select(
-        id_col, "v", "cell", F.sqrt("__vv").alias("__nv")
+        "vec_id", "v", "cell", F.sqrt("__vv").alias("__nv")
     )
     probes = (
-        withd.filter(F.col(id_col).isin(query_ids))
+        withd.filter(F.col("vec_id").isin(query_ids))
         .select(
-            F.col(id_col).alias("query_id"),
+            F.col("vec_id").alias("query_id"),
             F.explode(
                 F.transform(
                     F.slice(F.array_sort("__darr"), 1, n_probe),
@@ -353,16 +329,16 @@ def ivf_topk_pinned(
             ).alias("cell"),
         )
     )
-    q = base.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_id"), F.col("v").alias("qv"), _norm(F.col("v")).alias("__nq")
+    q = base.filter(F.col("vec_id").isin(query_ids)).select(
+        F.col("vec_id").alias("query_id"), F.col("v").alias("qv"), _norm(F.col("v")).alias("__nq")
     )
     cand = assigned.join(F.broadcast(probes), on="cell").filter(
-        F.col(id_col) != F.col("query_id")
+        F.col("vec_id") != F.col("query_id")
     )
     pairs = cand.join(F.broadcast(q), on="query_id").withColumn(
         "cos", F.round(_dot(F.col("qv"), F.col("v")) / (F.col("__nq") * F.col("__nv")), 6)
     )
-    return _top_k(pairs, k, id_col)
+    return _top_k(pairs, k, "vec_id")
 
 
 def near_dup_pairs_lsh(
@@ -372,8 +348,6 @@ def near_dup_pairs_lsh(
     n_tables: int = 8,
     dim: int = 64,
     max_bucket: int = 100_000,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Scale-safe embedding near-duplicate pairs: multi-table hyperplane LSH
     candidates + exact cosine re-rank + threshold.
@@ -392,10 +366,10 @@ def near_dup_pairs_lsh(
     in tests; raise ``n_tables`` to raise recall, ``n_planes`` with log2(N)).
     """
     emb = fan_out_scan(emb)  # the 32-dot-product bucket projection is map-heavy
-    base = emb.select(F.col(id_col), _as_double(F.col(vec_col)).alias("v")).withColumn(
+    base = emb.select(F.col("vec_id"), _as_double(F.col("embedding")).alias("v")).withColumn(
         "__nv", _norm(F.col("v"))  # per-row norm, not per-pair (see bruteforce)
     )
-    buckets = hyperplane_buckets_tall(emb, n_planes, n_tables, dim, id_col, vec_col)
+    buckets = hyperplane_buckets_tall(emb, n_planes, n_tables, dim)
     # the dropped count: emb_lsh_dropped.* on the consuming stage's lineage row
     observed, kept = capped_buckets(
         buckets, ["tbl", "bucket"], max_bucket, "emb_lsh_dropped", "dropped_bucket_rows", "bucket_rows"
@@ -405,13 +379,13 @@ def near_dup_pairs_lsh(
             kept.alias("b"),
             (F.col("a.tbl") == F.col("b.tbl"))
             & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+            & (F.col("a.vec_id") < F.col("b.vec_id")),
         )
-        .select(F.col(f"a.{id_col}").alias("vec_a"), F.col(f"b.{id_col}").alias("vec_b"))
+        .select(F.col("a.vec_id").alias("vec_a"), F.col("b.vec_id").alias("vec_b"))
         .distinct()
     )
-    va = base.select(F.col(id_col).alias("vec_a"), F.col("v").alias("va"), F.col("__nv").alias("__na"))
-    vb = base.select(F.col(id_col).alias("vec_b"), F.col("v").alias("vb"), F.col("__nv").alias("__nb"))
+    va = base.select(F.col("vec_id").alias("vec_a"), F.col("v").alias("va"), F.col("__nv").alias("__na"))
+    vb = base.select(F.col("vec_id").alias("vec_b"), F.col("v").alias("vb"), F.col("__nv").alias("__nb"))
     pairs = (
         cand.join(va, "vec_a")
         .join(vb, "vec_b")

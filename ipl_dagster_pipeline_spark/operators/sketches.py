@@ -272,25 +272,19 @@ LOGHIST_SUB_BITS = 3
 LOGHIST_UNIT = 1000
 
 
-def loghist_bound(value: Column, sub_bits: int = LOGHIST_SUB_BITS, unit: int = LOGHIST_UNIT) -> Column:
+def loghist_bound(value: Column) -> Column:
     """The bucket representative (lower bound of |value| in milli-units,
     sign-mirrored) — a pure integer projection, NULL in → NULL out."""
-    m = F.floor(value * unit).cast("long")
+    m = F.floor(value * LOGHIST_UNIT).cast("long")
     a = F.abs(m)
-    shift = F.greatest(F.length(F.bin(a)) - F.lit(1 + sub_bits), F.lit(0))
+    shift = F.greatest(F.length(F.bin(a)) - F.lit(1 + LOGHIST_SUB_BITS), F.lit(0))
     # SQL shiftright/shiftleft accept a column-valued shift (the pyspark
     # wrappers insist on a literal int)
     bound = F.call_function("shiftleft", F.call_function("shiftright", a, shift), shift)
     return (F.when(m < 0, -bound).otherwise(bound)).cast("long")
 
 
-def loghist_sketch(
-    df: DataFrame,
-    value_col: str,
-    group_cols: list[str] | None = None,
-    sub_bits: int = LOGHIST_SUB_BITS,
-    unit: int = LOGHIST_UNIT,
-) -> DataFrame:
+def loghist_sketch(df: DataFrame, value_col: str, group_cols: list[str] | None = None) -> DataFrame:
     """(group…, bound, cnt) — one map-side-combined aggregation; NULL values
     are excluded (count them upstream if missingness matters).  NaN/±Inf are
     excluded too: Spark casts NaN→0L while DuckDB refuses the cast, so
@@ -303,7 +297,7 @@ def loghist_sketch(
         df = df.filter(~F.isnan(c) & (F.abs(c) != float("inf")))
     return (
         df.filter(F.col(value_col).isNotNull())
-        .select(*group_cols, loghist_bound(F.col(value_col), sub_bits, unit).alias("bound"))
+        .select(*group_cols, loghist_bound(F.col(value_col)).alias("bound"))
         .groupBy(*group_cols, "bound")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )

@@ -41,9 +41,7 @@ from ipl_dagster_pipeline_spark.operators.featurize import value_milli
 DEC = "decimal(38,0)"
 
 
-def pairwise_correlations(
-    df: DataFrame, cols: list[str], out_r: str = "r"
-) -> DataFrame:
+def pairwise_correlations(df: DataFrame, cols: list[str]) -> DataFrame:
     """One row per unordered column pair: ``col_a``, ``col_b``, ``n_pair``
     (rows where BOTH are non-NULL — pairwise deletion) and ``r`` (Pearson
     correlation of the milli-quantized values, 6 dp; 0.0 for degenerate
@@ -89,7 +87,7 @@ def pairwise_correlations(
                 F.lit(a).alias("col_a"),
                 F.lit(b).alias("col_b"),
                 F.col(f"n_{tag}").alias("n_pair"),
-                r.alias(out_r),
+                r.alias("r"),
             )
         )
     return stats.select(F.explode(F.array(*rows)).alias("p")).select("p.*")

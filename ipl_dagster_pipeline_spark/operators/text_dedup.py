@@ -16,7 +16,7 @@ Scale notes (100 TB honesty):
 * LSH band buckets are the join key — the candidate join is an equi shuffle
   join on bucket, never a cross join;
 * giant buckets (degenerate text) are capped — `lsh_candidates` drops
-  buckets above ``max_bucket`` and the dropped-row count is OBSERVABLE
+  buckets above ``LSH_MAX_BUCKET`` and the dropped-row count is OBSERVABLE
   (``lsh_dropped.*`` on the consuming stage's lineage row) —
   the A4-style silent-cap warning made queryable (reference dedup-delta
   warning, lamassu.py:306-311).  The cap is ``partitioning.capped_buckets``,
@@ -39,6 +39,8 @@ from .tokenizer import words
 # precision knob — at 100 TB use 128 hashes (16×8) and a higher threshold.
 N_HASHES = 16
 N_BANDS = 4
+# docs per LSH band bucket above which `lsh_candidates` drops the bucket
+LSH_MAX_BUCKET = 1000
 
 
 def portable_hash(col: Column, seed: int) -> Column:
@@ -78,12 +80,13 @@ def fingerprint(col: Column) -> Column:
     return F.md5(normalize_text(col))
 
 
-def exact_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Exact dedup via hash-groupBy: one keeper (min id) per fingerprint."""
+def exact_dedup(docs: DataFrame) -> DataFrame:
+    """Exact dedup via hash-groupBy: one keeper (min ``doc_id``) per
+    fingerprint of ``text``."""
     return (
-        docs.withColumn("fp", fingerprint(F.col(text_col)))
+        docs.withColumn("fp", fingerprint(F.col("text")))
         .groupBy("fp")
-        .agg(F.min(id_col).alias("keep_id"), F.count("*").alias("n_copies"))
+        .agg(F.min("doc_id").alias("keep_id"), F.count("*").alias("n_copies"))
     )
 
 
@@ -144,32 +147,26 @@ def band_rows(
     )
 
 
-def lsh_candidates(
-    sig: DataFrame,
-    id_col: str = "doc_id",
-    n_bands: int = N_BANDS,
-    rows_per_band: int = N_HASHES // N_BANDS,
-    max_bucket: int = 1000,
-) -> DataFrame:
+def lsh_candidates(sig: DataFrame) -> DataFrame:
     """Banded LSH: docs sharing any band bucket become candidate pairs.
 
-    Buckets larger than ``max_bucket`` are dropped (logged) — a degenerate
+    Buckets larger than ``LSH_MAX_BUCKET`` are dropped (logged) — a degenerate
     bucket of B docs would emit B² pairs (``partitioning.capped_buckets``,
     observed as ``'lsh_dropped'``; its persist keeps the shingle → minhash
     lineage from running once per join side).
     """
-    bands = band_rows(sig, id_col, n_bands, rows_per_band)
+    bands = band_rows(sig)
     observed, kept = capped_buckets(
-        bands, ["band", "bucket"], max_bucket, "lsh_dropped", "dropped_band_rows", "band_rows"
+        bands, ["band", "bucket"], LSH_MAX_BUCKET, "lsh_dropped", "dropped_band_rows", "band_rows"
     )
     return (
         observed.alias("a").join(
             kept.alias("b"),
             (F.col("a.band") == F.col("b.band"))
             & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+            & (F.col(f"a.doc_id") < F.col(f"b.doc_id")),
         )
-        .select(F.col(f"a.{id_col}").alias("doc_a"), F.col(f"b.{id_col}").alias("doc_b"))
+        .select(F.col(f"a.doc_id").alias("doc_a"), F.col(f"b.doc_id").alias("doc_b"))
         .distinct()
     )
 
@@ -234,39 +231,29 @@ def _jaccard(cand: DataFrame, sh: DataFrame, id_col: str) -> DataFrame:
     )
 
 
-def _shingle_overlaps(
-    docs: DataFrame, k: int, max_df: int, id_col: str, text_col: str, obs_name: str
-) -> DataFrame:
-    """Every doc pair sharing a shingle held by at most ``max_df`` docs:
+def _shingle_overlaps(docs: DataFrame, max_df: int, obs_name: str) -> DataFrame:
+    """Every ``doc_id`` pair sharing a 5-shingle held by at most ``max_df`` docs:
     columns ``doc_a < doc_b``, ``n_inter`` (shared such shingles), ``n_a``
     and ``n_b`` (each doc's such shingles).  The document-frequency cap is
     :func:`partitioning.capped_buckets` keyed by the shingle, observed as
     ``obs_name`` with ``dropped_shingle_rows`` / ``shingle_rows``."""
-    sh = shingles(docs, id_col, text_col, k)
     observed, kept = capped_buckets(
-        sh, ["s"], max_df, obs_name, "dropped_shingle_rows", "shingle_rows"
+        shingles(docs), ["s"], max_df, obs_name, "dropped_shingle_rows", "shingle_rows"
     )
-    rare_a = observed.select(F.col(id_col).alias("doc_a"), "s").alias("a")
-    rare_b = kept.select(F.col(id_col).alias("doc_b"), "s").alias("b")
+    rare_a = observed.select(F.col("doc_id").alias("doc_a"), "s").alias("a")
+    rare_b = kept.select(F.col("doc_id").alias("doc_b"), "s").alias("b")
     inter = (
         rare_a.join(rare_b, (F.col("a.s") == F.col("b.s")) & (F.col("doc_a") < F.col("doc_b")))
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("n_inter"))
     )
-    counts = kept.groupBy(id_col).agg(F.count(F.lit(1)).alias("n"))
-    n_a = counts.select(F.col(id_col).alias("doc_a"), F.col("n").alias("n_a"))
-    n_b = counts.select(F.col(id_col).alias("doc_b"), F.col("n").alias("n_b"))
+    counts = kept.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
+    n_a = counts.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("n_a"))
+    n_b = counts.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("n_b"))
     return inter.join(n_a, "doc_a").join(n_b, "doc_b")
 
 
-def ngram_jaccard_pairs(
-    docs: DataFrame,
-    threshold: float = 0.5,
-    k: int = 5,
-    max_df: int = 1000,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.5, max_df: int = 1000) -> DataFrame:
     """EXACT all-pairs n-gram Jaccard near-duplicates via an inverted index —
     the deterministic complement of the MinHash path (whose recall is
     probabilistic) for when the recipe demands "every pair ≥ τ, exactly".
@@ -290,7 +277,7 @@ def ngram_jaccard_pairs(
     """
     check_threshold("ngram_jaccard_pairs", threshold)
     return (
-        _shingle_overlaps(docs, k, max_df, id_col, text_col, "ngram_df_dropped")
+        _shingle_overlaps(docs, max_df, "ngram_df_dropped")
         .withColumn(
             "jaccard",
             F.round(F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")), 6),
@@ -300,14 +287,8 @@ def ngram_jaccard_pairs(
     )
 
 
-def minhash_lsh_dedup(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 5,
-    threshold: float = 0.5,
-) -> DataFrame:
-    """Full near-dup pipeline: shingle → minhash → LSH buckets → exact
+def minhash_lsh_dedup(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
+    """Full near-dup pipeline over ``(doc_id, text)``: 5-shingle → minhash → LSH buckets → exact
     Jaccard verification of candidates → pairs ≥ threshold.
 
     ``sh`` is persisted: it feeds the signature aggregation once and the
@@ -321,34 +302,25 @@ def minhash_lsh_dedup(
     registered with ``caching.tracked_persist`` —
     call ``caching.release_tracked()`` after the action that consumes the
     returned pairs to free the executor storage."""
-    sh = tracked_persist(shingles(docs, id_col, text_col, k))
-    sig = minhash_signatures(sh, id_col)
-    cand = lsh_candidates(sig, id_col)
-    return jaccard_pairs(cand, sh, id_col, threshold)
+    sh = tracked_persist(shingles(docs))
+    return jaccard_pairs(lsh_candidates(minhash_signatures(sh)), sh, threshold=threshold)
 
 
-def positional_kgram_hashes(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", k: int = 5, seed: int = 31
-) -> DataFrame:
-    """(doc, pos, h): portable hash of the k-gram at every 1-based position of
+def positional_kgram_hashes(docs: DataFrame) -> DataFrame:
+    """(doc, pos, h): portable hash (seed 31) of the 5-gram at every 1-based position of
     the normalized text (NOT distinct — winnowing needs the position stream).
     A projection of :func:`kgrams`."""
-    return kgrams(docs, id_col, text_col, k).select(
-        id_col, "pos", portable_hash(F.col("gram"), seed).alias("h")
+    return kgrams(docs).select(
+        "doc_id", "pos", portable_hash(F.col("gram"), 31).alias("h")
     )
 
 
-def winnow_fingerprints(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 5,
-    window: int = 4,
-) -> DataFrame:
-    """Winnowing document fingerprints (Schleimer et al., SIGMOD 2003): the
-    DISTINCT set of per-window minima over the rolling k-gram hash stream —
-    guaranteed to share fingerprints with any copy that overlaps by at least
-    ``window + k - 1`` characters, and ~1/window the size of the full stream.
+def winnow_fingerprints(docs: DataFrame) -> DataFrame:
+    """Winnowing ``doc_id`` fingerprints (Schleimer et al., SIGMOD 2003): the
+    DISTINCT set of per-window minima over the rolling k-gram hash stream of
+    ``text`` (k = 5, window = 4) — guaranteed to share fingerprints with any
+    copy that overlaps by at least ``window + k - 1`` characters, and
+    ~1/window the size of the full stream.
 
     One window pass over (doc, pos) + a distinct — the fingerprint table is
     the join key for copy detection at corpus scale (equi-join on
@@ -361,9 +333,10 @@ def winnow_fingerprints(
     """
     from pyspark.sql import Window as W
 
-    ph = positional_kgram_hashes(docs, id_col, text_col, k)
-    n_pos = W.partitionBy(id_col)
-    w = W.partitionBy(id_col).orderBy("pos").rowsBetween(0, window - 1)
+    window = 4
+    ph = positional_kgram_hashes(docs)
+    n_pos = W.partitionBy("doc_id")
+    w = W.partitionBy("doc_id").orderBy("pos").rowsBetween(0, window - 1)
     return (
         ph.withColumn("__n", F.count(F.lit(1)).over(n_pos))
         .withColumn("wmin", F.min("h").over(w))
@@ -372,16 +345,18 @@ def winnow_fingerprints(
         # keeps position 1 for docs shorter than one window, whose truncated
         # frame at pos 1 covers the whole doc → min(h) fallback fingerprint
         .filter(F.col("pos") <= F.greatest(F.col("__n") - (window - 1), F.lit(1)))
-        .select(id_col, F.col("wmin").alias("fingerprint"))
+        .select("doc_id", F.col("wmin").alias("fingerprint"))
         .distinct()
     )
 
 
-def simhash(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", bits: int = 16) -> DataFrame:
-    """Per-doc SimHash over distinct word tokens: bit b of the signature is
-    the sign of sum(±1) of token-hash bit b."""
+def simhash(docs: DataFrame) -> DataFrame:
+    """Per-``doc_id`` 16-bit SimHash over the distinct word tokens of
+    ``text``: bit b of the signature is the sign of sum(±1) of token-hash
+    bit b."""
+    bits = 16
     tokens = (
-        fan_out_scan(docs).select(F.col(id_col), F.explode(words(F.col(text_col))).alias("t"))
+        fan_out_scan(docs).select(F.col("doc_id"), F.explode(words(F.col("text"))).alias("t"))
         .distinct()
         .withColumn("th", portable_hash(F.col("t"), 99))
     )
@@ -391,22 +366,15 @@ def simhash(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", bit
         ).alias(f"b{b}")
         for b in range(bits)
     ]
-    agg = tokens.groupBy(id_col).agg(*bit_sums)
+    agg = tokens.groupBy("doc_id").agg(*bit_sums)
     sig = None
     for b in range(bits):
         term = F.when(F.col(f"b{b}") > 0, F.lit(1 << b)).otherwise(F.lit(0))
         sig = term if sig is None else sig + term
-    return agg.select(id_col, sig.cast("long").alias("simhash"))
+    return agg.select("doc_id", sig.cast("long").alias("simhash"))
 
 
-def overlap_pairs(
-    docs: DataFrame,
-    threshold: float = 0.8,
-    k: int = 5,
-    max_df: int = 1000,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def overlap_pairs(docs: DataFrame, threshold: float = 0.8, max_df: int = 1000) -> DataFrame:
     """EXACT all-pairs shingle CONTAINMENT (overlap coefficient,
     ``|A∩B| / min(|A|,|B|)``) — the asymmetric complement of
     :func:`ngram_jaccard_pairs`: a short document embedded verbatim inside a
@@ -426,7 +394,7 @@ def overlap_pairs(
     """
     check_threshold("overlap_pairs", threshold)
     scored = (
-        _shingle_overlaps(docs, k, max_df, id_col, text_col, "containment_df_dropped")
+        _shingle_overlaps(docs, max_df, "containment_df_dropped")
         .withColumn("overlap", F.round(F.col("n_inter") / F.least("n_a", "n_b"), 6))
         .filter(F.col("overlap") >= threshold)
     )

@@ -30,21 +30,21 @@ def _count_matches(col: Column, pattern: str) -> Column:
     return F.size(F.regexp_extract_all(col, F.lit(pattern), F.lit(0)))
 
 
-def with_token_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def with_token_counts(docs: DataFrame) -> DataFrame:
     """Whitespace-token and regex-piece-token counts (JVM regex, no UDF).
 
     ``n_re_tokens`` is the cheap word+punct piece count (one regex pass); for
     counts from an actual merges-table tokenizer use
     ``tokenizer.with_bpe_token_counts`` (``n_bpe_tokens``)."""
-    return docs.withColumn("n_ws_tokens", _count_matches(F.col(text_col), WS_TOKEN_RE)).withColumn(
-        "n_re_tokens", _count_matches(F.col(text_col), TOKEN_RE)
+    return docs.withColumn("n_ws_tokens", _count_matches(F.col("text"), WS_TOKEN_RE)).withColumn(
+        "n_re_tokens", _count_matches(F.col("text"), TOKEN_RE)
     )
 
 
-def with_quality_scores(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def with_quality_scores(docs: DataFrame) -> DataFrame:
     """Heuristic quality features: length, alpha/punct/space ratios, mean
     word length, stopword ratio — the standard pre-training quality block."""
-    t = F.col(text_col)
+    t = F.col("text")
     n = F.length(t).cast("double")
     n_alpha = _count_matches(t, r"[A-Za-z]").cast("double")
     n_punct = _count_matches(t, r"[^A-Za-z0-9\s]").cast("double")
@@ -60,12 +60,12 @@ def with_quality_scores(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def with_lang_id(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def with_lang_id(docs: DataFrame) -> DataFrame:
     """Marker-word language ID with deterministic tie-break order
     (zh → en → de → es → fr → unknown)."""
-    lowered = F.lower(F.col(text_col))
+    lowered = F.lower(F.col("text"))
     scores = {lang: _count_matches(lowered, pat) for lang, pat in LANG_MARKERS.items()}
-    scores["zh"] = _count_matches(F.col(text_col), CJK_RE)
+    scores["zh"] = _count_matches(F.col("text"), CJK_RE)
     out = docs
     for lang, s in scores.items():
         out = out.withColumn(f"score_{lang}", s)
@@ -81,8 +81,8 @@ def with_lang_id(docs: DataFrame, text_col: str = "text") -> DataFrame:
     return out.withColumn("lang_pred", pred)
 
 
-def with_fingerprint(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def with_fingerprint(docs: DataFrame) -> DataFrame:
     """Content fingerprint: md5 of normalized text + normalized length."""
-    return docs.withColumn("fp", fingerprint(F.col(text_col))).withColumn(
-        "norm_len", F.length(normalize_text(F.col(text_col))).cast("long")
+    return docs.withColumn("fp", fingerprint(F.col("text"))).withColumn(
+        "norm_len", F.length(normalize_text(F.col("text"))).cast("long")
     )

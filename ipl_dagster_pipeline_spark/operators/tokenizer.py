@@ -71,27 +71,22 @@ def word_symbols(word: Column) -> Column:
     return F.regexp_replace(word, "(.)", "|$1|")
 
 
-def bpe_symbol_string(word: Column, merges: list[tuple[str, str]] | None = None) -> Column:
-    """Apply the merge rules in order as a plain-replace chain."""
+def bpe_symbol_string(word: Column) -> Column:
+    """Apply the ``BPE_MERGES`` rules in order as a plain-replace chain."""
     s = word_symbols(word)
-    for a, b in merges if merges is not None else BPE_MERGES:
+    for a, b in BPE_MERGES:
         s = F.replace(s, F.lit(f"|{a}||{b}|"), F.lit(f"|{a}{b}|"))
     return s
 
 
-def bpe_token_count(word: Column, merges: list[tuple[str, str]] | None = None) -> Column:
+def bpe_token_count(word: Column) -> Column:
     """Token count of one word: symbols remaining after all merges."""
-    s = bpe_symbol_string(word, merges)
+    s = bpe_symbol_string(word)
     return ((F.length(s) - F.length(F.replace(s, F.lit("|"), F.lit("")))) / 2).cast("long")
 
 
-def with_bpe_token_counts(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    out_col: str = "n_bpe_tokens",
-) -> DataFrame:
-    """``docs`` plus the real-BPE token count of ``text_col``.
+def with_bpe_token_counts(docs: DataFrame) -> DataFrame:
+    """``docs`` plus the real-BPE token count of ``text``.
 
     Words = lowercased ``[a-z0-9]+`` runs; count = Σ over word OCCURRENCES
     of the word's BPE length, computed once per distinct word and equi-joined
@@ -104,24 +99,24 @@ def with_bpe_token_counts(
     # map-side partials are corpus-vocabulary-keyed, so spreading the scan
     # multiplies the partial-agg output per partition; interleaved A/B at
     # sf0.1: min 2.6 s without vs 4.4 s with)
-    word_rows = docs.select(F.col(id_col), F.explode(words(F.col(text_col))).alias("__w"))
+    word_rows = docs.select(F.col("doc_id"), F.explode(words(F.col("text"))).alias("__w"))
     # one row per (doc, word) with the occurrence count — map-side combined
-    occ = word_rows.groupBy(id_col, "__w").agg(F.count(F.lit(1)).alias("__n_occ"))
+    occ = word_rows.groupBy("doc_id", "__w").agg(F.count(F.lit(1)).alias("__n_occ"))
     vocab = occ.select("__w").distinct().withColumn("__w_tokens", bpe_token_count(F.col("__w")))
     per_doc = (
         occ.join(vocab, on="__w")
-        .groupBy(id_col)
-        .agg(F.sum(F.col("__n_occ") * F.col("__w_tokens")).alias(out_col))
+        .groupBy("doc_id")
+        .agg(F.sum(F.col("__n_occ") * F.col("__w_tokens")).alias("n_bpe_tokens"))
     )
-    return docs.join(per_doc, on=id_col, how="left").withColumn(
-        out_col, F.coalesce(F.col(out_col), F.lit(0)).cast("long")
+    return docs.join(per_doc, on="doc_id", how="left").withColumn(
+        "n_bpe_tokens", F.coalesce(F.col("n_bpe_tokens"), F.lit(0)).cast("long")
     )
 
 
-def bpe_merges_sql_chain(expr: str, merges: list[tuple[str, str]] | None = None) -> str:
+def bpe_merges_sql_chain(expr: str) -> str:
     """Render the SAME replace chain as ANSI SQL over ``expr`` — the
     generated-oracle hook (catalog/sampling.py builds DuckDB SQL from it)."""
     s = f"regexp_replace({expr}, '(.)', '|\\1|', 'g')"
-    for a, b in merges if merges is not None else BPE_MERGES:
+    for a, b in BPE_MERGES:
         s = f"replace({s}, '|{a}||{b}|', '|{a}{b}|')"
     return s

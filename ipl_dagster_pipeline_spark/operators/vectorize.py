@@ -47,23 +47,18 @@ from ipl_dagster_pipeline_spark.operators.packing import with_keyed_cumsum
 PPM = 1_000_000
 
 
-def _doc_terms(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Exploded (id, term) token stream — empty/NULL text yields no rows.
+def _doc_terms(docs: DataFrame) -> DataFrame:
+    """Exploded (doc_id, term) token stream of ``text`` — empty/NULL text yields no rows.
     NOT fanned out: the stream feeds vocabulary-keyed aggregations whose
     map-side partials would multiply with the partition count (measured a
     mild loss at sf0.1, same mechanism as with_bpe_token_counts)."""
     return docs.select(
-        F.col(id_col),
-        F.explode(F.split(F.lower(F.col(text_col)), r"\s+")).alias("term"),
+        F.col("doc_id"),
+        F.explode(F.split(F.lower(F.col("text")), r"\s+")).alias("term"),
     ).where(F.col("term") != "")
 
 
-def vocab_fit(
-    train_docs: DataFrame,
-    vocab_size: int,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def vocab_fit(train_docs: DataFrame, vocab_size: int) -> DataFrame:
     """The frozen vocabulary: one row per kept term with ``term``,
     ``term_idx`` (1-based document-frequency rank, ties broken by term —
     stable at any parallelism), ``df_docs`` (documents containing the
@@ -71,9 +66,9 @@ def vocab_fit(
     so the transform needs no second frame)."""
     if vocab_size < 1:
         raise ValueError(f"vocab_size must be >= 1, got {vocab_size}")
-    n_fit = train_docs.select(id_col).distinct().count()
+    n_fit = train_docs.select("doc_id").distinct().count()
     df_counts = (
-        _doc_terms(train_docs, id_col, text_col)
+        _doc_terms(train_docs)
         .distinct()
         .groupBy("term")
         .agg(F.count(F.lit(1)).alias("df_docs"))
@@ -94,25 +89,20 @@ def vocab_fit(
     )
 
 
-def tfidf_transform(
-    docs: DataFrame,
-    vocab: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def tfidf_transform(docs: DataFrame, vocab: DataFrame) -> DataFrame:
     """Sparse TF-IDF rows under the frozen vocabulary: one row per
     (document, in-vocabulary term) with ``tf`` and the exact-integer
     ``weight = tf · ((n_fit_docs+1)·10⁶ DIV (df_docs+1))``.
     Out-of-vocabulary terms drop (inner join); documents with no
     in-vocabulary term produce zero rows (an all-zero sparse vector)."""
     tf = (
-        _doc_terms(docs, id_col, text_col)
-        .groupBy(id_col, "term")
+        _doc_terms(docs)
+        .groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
     idf = F.expr(f"CAST(((n_fit_docs + 1) * {PPM}) DIV (df_docs + 1) AS BIGINT)")
     return (
         tf.join(F.broadcast(vocab), "term")
         .withColumn("weight", (F.col("tf") * idf).cast("long"))
-        .select(id_col, "term_idx", "term", F.col("tf").cast("long").alias("tf"), "weight")
+        .select("doc_id", "term_idx", "term", F.col("tf").cast("long").alias("tf"), "weight")
     )

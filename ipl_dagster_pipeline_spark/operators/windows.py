@@ -21,7 +21,7 @@ KEY = "conv_id"
 ORDER = ("ts", "turn_idx")
 
 
-def turn_window(key: str = KEY) -> WindowSpec:
+def turn_window() -> WindowSpec:
     """The canonical per-conversation window with stable tie-breaking.
 
     Orders by the RAW (ts, turn_idx) columns — never computed expressions:
@@ -30,53 +30,37 @@ def turn_window(key: str = KEY) -> WindowSpec:
     columns the whole chain (lag, rolling rows, rolling range via interval
     frame, backfill, sessionize) shares ONE sort after one conv_id shuffle.
     """
-    return Window.partitionBy(key).orderBy(*ORDER)
+    return Window.partitionBy(KEY).orderBy(*ORDER)
 
 
-def with_lag_features(
-    df: DataFrame,
-    cols: dict[str, Column] | None = None,
-    n: int = 1,
-    key: str = KEY,
-) -> DataFrame:
-    """lag-n features per conversation (SURVEY W3).
-
-    Default feature block: previous role, previous tool, seconds since the
-    previous turn.  One shuffle on ``key``; all expressions JVM-side.
+def with_lag_features(df: DataFrame) -> DataFrame:
+    """lag-1 features per conversation (SURVEY W3): previous role, previous
+    tool, seconds since the previous turn.  One shuffle on ``conv_id``; all
+    expressions JVM-side.
     """
-    w = turn_window(key)
-    if cols is None:
-        cols = {
-            f"prev_role_{n}": F.lag("role", n).over(w),
-            f"prev_tool_{n}": F.lag("tool", n).over(w),
-            f"ts_delta_s_{n}": (
-                F.col("ts").cast("long") - F.lag(F.col("ts").cast("long"), n).over(w)
-            ).cast("long"),
-        }
-    out = df
-    for name, expr in cols.items():
-        out = out.withColumn(name, expr)
-    return out
-
-
-def with_lead_targets(df: DataFrame, n: int = 1, key: str = KEY) -> DataFrame:
-    """lead-n TARGET columns (``lead_`` prefix = excluded from PIT features)."""
-    w = turn_window(key)
-    return df.withColumn(f"lead_role_{n}", F.lead("role", n).over(w)).withColumn(
-        f"lead_text_{n}", F.lead("text", n).over(w)
+    w = turn_window()
+    return (
+        df.withColumn("prev_role_1", F.lag("role", 1).over(w))
+        .withColumn("prev_tool_1", F.lag("tool", 1).over(w))
+        .withColumn(
+            "ts_delta_s_1",
+            (F.col("ts").cast("long") - F.lag(F.col("ts").cast("long"), 1).over(w)).cast("long"),
+        )
     )
 
 
-def with_rolling_rows(
-    df: DataFrame,
-    value: Column,
-    k: int,
-    out_prefix: str,
-    key: str = KEY,
-) -> DataFrame:
+def with_lead_targets(df: DataFrame) -> DataFrame:
+    """lead-1 TARGET columns (``lead_`` prefix = excluded from PIT features)."""
+    w = turn_window()
+    return df.withColumn("lead_role_1", F.lead("role", 1).over(w)).withColumn(
+        "lead_text_1", F.lead("text", 1).over(w)
+    )
+
+
+def with_rolling_rows(df: DataFrame, value: Column, k: int, out_prefix: str) -> DataFrame:
     """Rolling aggregates over the last ``k`` rows INCLUDING current (W4, rows
     frame).  Frame ends at CURRENT ROW — never looks forward."""
-    w = turn_window(key).rowsBetween(-(k - 1), Window.currentRow)
+    w = turn_window().rowsBetween(-(k - 1), Window.currentRow)
     return (
         df.withColumn(f"{out_prefix}_sum_{k}", F.sum(value).over(w))
         .withColumn(f"{out_prefix}_avg_{k}", F.avg(value).over(w))
@@ -89,7 +73,6 @@ def with_rolling_range(
     value: Column | str,
     seconds: int,
     out_prefix: str,
-    key: str = KEY,
 ) -> DataFrame:
     """Rolling aggregates over a trailing time range ``[ts - seconds, ts]``
     (W4, range frame).  Range frames need a single numeric sort key, so we
@@ -112,7 +95,7 @@ def with_rolling_range(
         df = df.withColumn(tmp, value)
         value_sql = tmp
     over = (
-        f"OVER (PARTITION BY {key} ORDER BY ts "
+        f"OVER (PARTITION BY {KEY} ORDER BY ts "
         f"RANGE BETWEEN INTERVAL {seconds} SECONDS PRECEDING AND CURRENT ROW)"
     )
     # single select so both aggregates land in ONE physical Window node
@@ -125,14 +108,14 @@ def with_rolling_range(
     return out.drop(tmp) if tmp else out
 
 
-def backfill(df: DataFrame, col: str, out: str | None = None, key: str = KEY) -> DataFrame:
+def backfill(df: DataFrame, col: str, out: str | None = None) -> DataFrame:
     """Forward-fill (a.k.a. backfill a sparse column from the past): the last
     non-null value at or before the current turn (W2) — the generalization of
     the reference's latest-image-as-of-now probe (webcam_worker.py:154-207).
 
     PIT-safe by construction: frame is (-inf, 0].
     """
-    w = turn_window(key).rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    w = turn_window().rowsBetween(Window.unboundedPreceding, Window.currentRow)
     return df.withColumn(out or f"{col}_ffill", F.last(col, ignorenulls=True).over(w))
 
 

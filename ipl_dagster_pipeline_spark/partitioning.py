@@ -30,12 +30,11 @@ def detect_hot_keys(
     key: str = "conv_id",
     sample_fraction: float = 0.01,
     hot_multiplier: float = 20.0,
-    max_keys: int = 1000,
 ) -> list:
     """Sample-count keys and return those ``hot_multiplier``× above the mean.
 
     One cheap job over a sample (seeded — deterministic); returns at most
-    ``max_keys`` key values for broadcast into `salt_hot_keys`.
+    1000 key values, heaviest first, for broadcast into `with_salt`.
     """
     sampled = df.sample(fraction=sample_fraction, seed=42) if sample_fraction < 1.0 else df
     counts = sampled.groupBy(key).count()
@@ -43,7 +42,7 @@ def detect_hot_keys(
     if stats["mean"] is None:
         return []
     cutoff = stats["mean"] * hot_multiplier
-    rows = counts.filter(F.col("count") > cutoff).orderBy(F.col("count").desc()).limit(max_keys).collect()
+    rows = counts.filter(F.col("count") > cutoff).orderBy(F.col("count").desc()).limit(1000).collect()
     return [r[0] for r in rows]
 
 
@@ -52,16 +51,15 @@ def with_salt(
     key: str = "conv_id",
     n_salts: int = 16,
     hot_keys: list | None = None,
-    salt_source: str = "turn_idx",
 ) -> DataFrame:
-    """Add a ``salt`` column: 0 for normal keys, hash(salt_source) % n for hot
+    """Add a ``salt`` column: 0 for normal keys, hash(turn_idx) % n for hot
     keys — spreading each hot key over ``n_salts`` reducers."""
     if not hot_keys:
         return df.withColumn("salt", F.lit(0))
     is_hot = F.col(key).isin(list(hot_keys))
     return df.withColumn(
         "salt",
-        F.when(is_hot, F.pmod(F.xxhash64(F.col(salt_source)), F.lit(n_salts)).cast("int")).otherwise(
+        F.when(is_hot, F.pmod(F.xxhash64(F.col("turn_idx")), F.lit(n_salts)).cast("int")).otherwise(
             F.lit(0)
         ),
     )
@@ -74,7 +72,6 @@ def salted_agg(
     merges: dict[str, Column],
     n_salts: int = 16,
     hot_keys: list | None = None,
-    salt_source: str = "turn_idx",
 ) -> DataFrame:
     """Two-phase aggregation with explicit salting of hot keys.
 
@@ -86,7 +83,7 @@ def salted_agg(
     Phase 1 groups by (key, salt) — hot keys fan out over n_salts reducers;
     phase 2 merges the ≤ n_salts partials per key (tiny).
     """
-    salted = with_salt(df, key=key, n_salts=n_salts, hot_keys=hot_keys, salt_source=salt_source)
+    salted = with_salt(df, key=key, n_salts=n_salts, hot_keys=hot_keys)
     partial = salted.groupBy(key, "salt").agg(*[e.alias(n) for n, e in aggs.items()])
     return partial.groupBy(key).agg(*[e.alias(n) for n, e in merges.items()])
 
@@ -150,7 +147,7 @@ _WIDE_OPS = (
 )
 
 
-def fan_out_scan(df: DataFrame, target: int | None = None) -> DataFrame:
+def fan_out_scan(df: DataFrame) -> DataFrame:
     """Spread an under-split source across the session's cores before a
     heavy per-row map stage (shingle/k-gram explode, portable hashing,
     ``from_xml`` decode).
@@ -174,7 +171,7 @@ def fan_out_scan(df: DataFrame, target: int | None = None) -> DataFrame:
     probing one would finalize/execute its stages).
     """
     spark = df.sparkSession
-    target = target or spark.sparkContext.defaultParallelism
+    target = spark.sparkContext.defaultParallelism
     try:
         plan = df._jdf.queryExecution().analyzed().toString()
         if any(op in plan for op in _WIDE_OPS):
@@ -236,7 +233,11 @@ def skew_profile(df: DataFrame, key: str, top_n: int = 100) -> DataFrame:
     )
 
 
-def morton_code(cols: list[Column], bits: int = 16) -> Column:
+# bits per column in a Z-order code
+MORTON_BITS = 16
+
+
+def morton_code(cols: list[Column]) -> Column:
     """Z-order (Morton) interleave of N non-negative integer columns — the
     multi-dimensional layout key behind Iceberg/Delta Z-ordering.
 
@@ -246,11 +247,12 @@ def morton_code(cols: list[Column], bits: int = 16) -> Column:
     so a 100 TB scan with a predicate on ANY of them skips most files on
     footer statistics.  Pure integer bit arithmetic (``(x >> i & 1) <<
     (N·i + j)`` summed) — JVM-side, deterministic, and replayable in ANSI
-    SQL for the value-hash oracle.  Inputs are clamped to ``[0, 2^bits)``;
-    NULL in any column → NULL code (sorts last, keeping incomplete rows
-    together).  ``N·bits`` must fit a BIGINT (≤ 62).
+    SQL for the value-hash oracle.  Inputs are clamped to
+    ``[0, 2^MORTON_BITS)``; NULL in any column → NULL code (sorts last,
+    keeping incomplete rows together).  ``N·MORTON_BITS`` must fit a BIGINT
+    (≤ 62).
     """
-    n = len(cols)
+    n, bits = len(cols), MORTON_BITS
     if n * bits > 62:
         raise ValueError(f"{n} cols × {bits} bits = {n * bits} exceeds BIGINT range")
     cap = (1 << bits) - 1
@@ -270,9 +272,9 @@ def morton_code(cols: list[Column], bits: int = 16) -> Column:
     return F.when(any_null, F.lit(None)).otherwise(out).cast("long")
 
 
-def morton_sql(exprs: list[str], bits: int = 16) -> str:
+def morton_sql(exprs: list[str]) -> str:
     """The identical interleave as an ANSI-SQL string (oracle replay)."""
-    n = len(exprs)
+    n, bits = len(exprs), MORTON_BITS
     clamped = [f"least(greatest(CAST({e} AS BIGINT), 0), {(1 << bits) - 1})" for e in exprs]
     terms = [
         f"((({c} >> {i}) & 1) << {n * i + j})"

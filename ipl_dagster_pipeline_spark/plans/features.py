@@ -23,10 +23,9 @@ def build_turn_features(
     transcripts: DataFrame,
     tool_dim: DataFrame | None = None,
     gap_seconds: int = 1800,
-    rolling_rows: int = 5,
-    rolling_seconds: int = 3600,
 ) -> DataFrame:
-    """Per-turn PIT-correct feature vector.
+    """Per-turn PIT-correct feature vector: lag-1, 5-row and 3600 s rolling
+    text lengths, the forward-filled tool and the gap session id.
 
     Every feature reads only rows with ts' <= ts (lag/rolling/backfill frames
     end at CURRENT ROW; the as-of join matches effective_from <= ts).
@@ -43,28 +42,28 @@ def build_turn_features(
     if tool_dim is not None:
         # tool has ~5 distinct values → interval-broadcast path (skew-free),
         # not the window path (which would partition by tool).
-        df = asof_join_broadcast_range(df, tool_dim, key="tool", ts_col="ts")
+        df = asof_join_broadcast_range(df, tool_dim, key="tool")
 
     from pyspark.sql import Window as W
 
     w = turn_window()
-    wk = w.rowsBetween(-(rolling_rows - 1), 0)
+    wk = w.rowsBetween(-4, 0)
     wcum = w.rowsBetween(W.unboundedPreceding, W.currentRow)
     tl = F.col("text_len")
     range_over = (
         "OVER (PARTITION BY conv_id ORDER BY ts "
-        f"RANGE BETWEEN INTERVAL {rolling_seconds} SECONDS PRECEDING AND CURRENT ROW)"
+        "RANGE BETWEEN INTERVAL 3600 SECONDS PRECEDING AND CURRENT ROW)"
     )
     df = df.select(
         "*",
         F.lag("role").over(w).alias("prev_role_1"),
         F.lag("tool").over(w).alias("prev_tool_1"),
         (F.col("ts").cast("long") - F.lag(F.col("ts").cast("long")).over(w)).alias("ts_delta_s_1"),
-        F.sum(tl).over(wk).alias(f"chars_sum_{rolling_rows}"),
-        F.avg(tl).over(wk).alias(f"chars_avg_{rolling_rows}"),
-        F.count(tl).over(wk).alias(f"chars_cnt_{rolling_rows}"),
-        F.expr(f"sum(text_len) {range_over}").alias(f"chars_rsum_{rolling_seconds}s"),
-        F.expr(f"count(text_len) {range_over}").alias(f"chars_rcnt_{rolling_seconds}s"),
+        F.sum(tl).over(wk).alias("chars_sum_5"),
+        F.avg(tl).over(wk).alias("chars_avg_5"),
+        F.count(tl).over(wk).alias("chars_cnt_5"),
+        F.expr(f"sum(text_len) {range_over}").alias("chars_rsum_3600s"),
+        F.expr(f"count(text_len) {range_over}").alias("chars_rcnt_3600s"),
         F.last("tool", ignorenulls=True).over(wcum).alias("tool_ffill"),
     )
     new_sess = F.when(
@@ -78,15 +77,9 @@ def build_session_features(turn_features: DataFrame) -> DataFrame:
     return session_aggregates(turn_features)
 
 
-def build_rich_turn_features(
-    transcripts: DataFrame,
-    tool_dim: DataFrame | None = None,
-    gap_seconds: int = 1800,
-    lags: tuple[int, ...] = (1, 2, 3),
-    rolling_rows_ks: tuple[int, ...] = (5, 20),
-    rolling_seconds: int = 3600,
-) -> DataFrame:
-    """Production-shaped feature set (~30 feature columns), FUSED.
+def build_rich_turn_features(transcripts: DataFrame, tool_dim: DataFrame | None = None) -> DataFrame:
+    """Production-shaped feature set (~30 feature columns), FUSED: lags 1-3,
+    5- and 20-row and 3600 s rolling windows, 1800 s gap sessions.
 
     Every Window physical node is one full row-copy pass over the partition;
     chaining operator helpers layer-by-layer planned ~10 Window nodes — 10
@@ -100,7 +93,7 @@ def build_rich_turn_features(
 
     df = transcripts.withColumn("text_len", F.length("text").cast("long"))
     if tool_dim is not None:
-        df = asof_join_broadcast_range(df, tool_dim, key="tool", ts_col="ts")
+        df = asof_join_broadcast_range(df, tool_dim, key="tool")
 
     w = turn_window()
     from pyspark.sql import Window as W
@@ -109,10 +102,10 @@ def build_rich_turn_features(
     tl = F.col("text_len")
     range_over = (
         "OVER (PARTITION BY conv_id ORDER BY ts "
-        f"RANGE BETWEEN INTERVAL {rolling_seconds} SECONDS PRECEDING AND CURRENT ROW)"
+        "RANGE BETWEEN INTERVAL 3600 SECONDS PRECEDING AND CURRENT ROW)"
     )
     exprs = []
-    for n in lags:
+    for n in (1, 2, 3):
         exprs += [
             F.lag("role", n).over(w).alias(f"prev_role_{n}"),
             F.lag("tool", n).over(w).alias(f"prev_tool_{n}"),
@@ -120,7 +113,7 @@ def build_rich_turn_features(
                 f"ts_delta_s_{n}"
             ),
         ]
-    for k in rolling_rows_ks:
+    for k in (5, 20):
         wk = w.rowsBetween(-(k - 1), 0)
         exprs += [
             F.sum(tl).over(wk).alias(f"chars_sum_{k}"),
@@ -134,11 +127,11 @@ def build_rich_turn_features(
         F.sum(F.when(F.col("tool").isNotNull(), 1).otherwise(0)).over(w20).alias("tool_turns_20"),
         F.max(tl).over(w20).alias("chars_max_20w"),
         F.min(tl).over(w20).alias("chars_min_20w"),
-        F.expr(f"sum(text_len) {range_over}").alias(f"chars_rsum_{rolling_seconds}s"),
-        F.expr(f"count(text_len) {range_over}").alias(f"chars_rcnt_{rolling_seconds}s"),
+        F.expr(f"sum(text_len) {range_over}").alias("chars_rsum_3600s"),
+        F.expr(f"count(text_len) {range_over}").alias("chars_rcnt_3600s"),
         F.last("tool", ignorenulls=True).over(wcum).alias("tool_ffill"),
         (F.col("ts").cast("long") - F.lag(F.col("ts").cast("long")).over(w)).alias("__gap_s"),
     ]
     df = df.select("*", *exprs)
-    new_sess = F.when(F.col("__gap_s").isNull() | (F.col("__gap_s") > gap_seconds), 1).otherwise(0)
+    new_sess = F.when(F.col("__gap_s").isNull() | (F.col("__gap_s") > 1800), 1).otherwise(0)
     return df.select("*", F.sum(new_sess).over(wcum).cast("int").alias("session_id")).drop("__gap_s")

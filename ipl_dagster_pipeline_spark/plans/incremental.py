@@ -23,7 +23,7 @@ untouched conversations.
    idempotent and readers never see a torn table.
 
 At 100 TB this touches |touched buckets| × bucket-size rows, not the table;
-pick n_buckets so a bucket ≈ a few GB.
+pick ``N_BUCKETS`` so a bucket ≈ a few GB.
 """
 
 from __future__ import annotations
@@ -35,16 +35,17 @@ from ..io import SnapshotTable
 from ..metrics import observation_result, observe_stage
 from .features import build_turn_features
 
-DEFAULT_BUCKETS = 64
+# conv_id hash buckets of the features table
+N_BUCKETS = 64
 
 
-def conv_bucket(col, n_buckets: int = DEFAULT_BUCKETS):
-    return F.pmod(F.xxhash64(col), F.lit(n_buckets)).cast("int")
+def conv_bucket(col):
+    return F.pmod(F.xxhash64(col), F.lit(N_BUCKETS)).cast("int")
 
 
-def write_feature_buckets(feats: DataFrame, path: str, n_buckets: int = DEFAULT_BUCKETS) -> None:
+def write_feature_buckets(feats: DataFrame, path: str) -> None:
     (
-        feats.withColumn("conv_bucket", conv_bucket(F.col("conv_id"), n_buckets))
+        feats.withColumn("conv_bucket", conv_bucket(F.col("conv_id")))
         .write.mode("overwrite")
         .partitionBy("conv_bucket")
         .parquet(path)
@@ -57,8 +58,6 @@ def incremental_update(
     tool_dim: DataFrame,
     features_path: str,
     since_snapshot_id: int,
-    gap_seconds: int = 1800,
-    n_buckets: int = DEFAULT_BUCKETS,
 ) -> dict:
     """Rebuild features for every bucket touched after ``since_snapshot_id``.
 
@@ -77,19 +76,17 @@ def incremental_update(
     if current is None or current <= since_snapshot_id:
         return {"touched_buckets": 0, "rebuilt_rows": 0, "to_snapshot": since_snapshot_id}
     new_rows = transcripts_table.read_incremental(spark, since_snapshot_id)
-    # at most n_buckets ids: collected once, they count the touched buckets
+    # at most N_BUCKETS ids: collected once, they count the touched buckets
     # and prune full history as a literal filter
-    buckets = new_rows.select(conv_bucket(F.col("conv_id"), n_buckets)).distinct()
+    buckets = new_rows.select(conv_bucket(F.col("conv_id"))).distinct()
     touched = [r[0] for r in buckets.collect()]
     affected = (
         transcripts_table.read(spark)
-        .withColumn("conv_bucket", conv_bucket(F.col("conv_id"), n_buckets))
+        .withColumn("conv_bucket", conv_bucket(F.col("conv_id")))
         .where(F.col("conv_bucket").isin(touched))
     )
-    feats = build_turn_features(affected.drop("conv_bucket"), tool_dim, gap_seconds=gap_seconds)
-    feats, obs = observe_stage(
-        feats.withColumn("conv_bucket", conv_bucket(F.col("conv_id"), n_buckets)), "incremental"
-    )
+    feats = build_turn_features(affected.drop("conv_bucket"), tool_dim)
+    feats, obs = observe_stage(feats.withColumn("conv_bucket", conv_bucket(F.col("conv_id"))), "incremental")
     (
         feats.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")

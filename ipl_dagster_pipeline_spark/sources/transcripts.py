@@ -68,6 +68,10 @@ conv_dim AS (
 """
 
 
+# the first generated timestamp (UTC) of transcripts and tool-dim snapshots
+START_TS = "2024-01-01 00:00:00"
+
+
 def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/events.parquet")
 
@@ -148,7 +152,6 @@ def synthesize_transcripts(
     n_convs: int = 100,
     turns_per_conv: int = 20,
     seed: int = 42,
-    start_ts: str = "2024-01-01 00:00:00",
     hot_conv_fraction: float = 0.0,
     hot_multiplier: int = 50,
 ) -> DataFrame:
@@ -192,20 +195,20 @@ def synthesize_transcripts(
             F.when(h % 4 == 3, F.lit(None).cast("string"))
             .otherwise(F.element_at(F.array(*[F.lit(t) for t in _TOOLS]), ((h % 4) + 1).cast("int")))
             .alias("tool"),
-            (F.to_timestamp(F.lit(start_ts)) + F.make_interval(secs=F.col("offset_s").cast("double"))).alias("ts"),
+            (F.to_timestamp(F.lit(START_TS)) + F.make_interval(secs=F.col("offset_s").cast("double"))).alias("ts"),
         )
     )
     return enforce_schema(df, TRANSCRIPT_SCHEMA)
 
 
-def synthesize_tool_dim(spark: SparkSession, seed: int = 42, n_days: int = 40, start_ts: str = "2024-01-01 00:00:00") -> DataFrame:
+def synthesize_tool_dim(spark: SparkSession, seed: int = 42, n_days: int = 40) -> DataFrame:
     """Deterministic dim snapshots: one row per (tool, day)."""
     days = spark.range(n_days).select(F.col("id").alias("day_no"))
     tools = spark.createDataFrame([(t,) for t in _TOOLS], ["tool"])
     h = F.abs(F.xxhash64(F.lit(seed), F.col("tool"), F.col("day_no")))
     df = days.crossJoin(tools).select(
         "tool",
-        (F.to_timestamp(F.lit(start_ts)) + F.make_interval(days=F.col("day_no").cast("int"))).alias(
+        (F.to_timestamp(F.lit(START_TS)) + F.make_interval(days=F.col("day_no").cast("int"))).alias(
             "effective_from"
         ),
         F.when(h % 2 == 0, F.lit("interact")).otherwise(F.lit("transact")).alias("tool_category"),

@@ -92,6 +92,25 @@ def test_null_ts_fact_matches_nothing(spark):
         assert got == {1: (None, None), 2: (1.0, t - dt.timedelta(days=1))}, fn.__name__
 
 
+def test_null_effective_from_dim_row_is_never_effective(spark):
+    """A dim row with a NULL effective_from matches no fact on any
+    strategy: the fact before the only dated snapshot gets NULL dim
+    columns, not the undated row's value."""
+    import datetime as dt
+
+    facts = spark.createDataFrame(
+        [("c1", 1, "search", dt.datetime(2024, 1, 2))],
+        "conv_id string, turn_idx int, tool string, ts timestamp",
+    )
+    dim = spark.createDataFrame(
+        [("search", None, 9.0), ("search", dt.datetime(2024, 1, 3), 1.0)],
+        "tool string, effective_from timestamp, w double",
+    )
+    for fn in (asof_join_union_fill, asof_join_cogrouped, asof_join_broadcast_range):
+        [row] = fn(facts, dim, key="tool").collect()
+        assert (row.w, row.matched_effective_from) == (None, None), fn.__name__
+
+
 def test_snapshot_broadcast_pins_latest_leq_asof(spark):
     facts = spark.createDataFrame([("search", 1)], ["tool", "x"])
     dim = (

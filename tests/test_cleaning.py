@@ -161,7 +161,7 @@ def test_fuzzy_contamination_catches_paraphrase(spark):
     )
     bench = spark.createDataFrame([(97, bench_text)], "doc_id long, text string")
 
-    pairs = fuzzy_contamination_pairs(corpus, bench, threshold=0.5).collect()
+    pairs = fuzzy_contamination_pairs(corpus, bench).collect()
     assert [(r.doc_id, r.bench_id) for r in pairs] == [(1, 97)]
     assert pairs[0].jaccard > 0.5
 

@@ -88,9 +88,21 @@ def test_crash_between_commits_resumes_without_double_append(spark, docs, tmp_pa
 
 
 def test_param_mismatch_fails_loudly(tmp_path):
-    MinHashIndex(str(tmp_path / "idx"), k=5)
+    MinHashIndex(str(tmp_path / "idx"), threshold=0.5)
     with pytest.raises(ValueError, match="index identity"):
-        MinHashIndex(str(tmp_path / "idx"), k=7)
+        MinHashIndex(str(tmp_path / "idx"), threshold=0.7)
+
+
+def test_default_index_params_file_is_pinned(tmp_path):
+    """The exact ``index-params.json`` a default index writes: an index
+    reopens only against these bytes' values, so changing them orphans
+    every index already on disk."""
+    root = tmp_path / "idx"
+    MinHashIndex(str(root))
+    assert (root / "index-params.json").read_text() == (
+        '{"k": 5, "threshold": 0.5, "n_hashes": 16, "n_bands": 4, '
+        '"max_bucket": 1000, "id_col": "doc_id", "text_col": "text"}'
+    )
 
 
 def test_empty_batch_and_no_match_batch(spark, docs, tmp_path):

@@ -124,7 +124,7 @@ def test_hash_cross_null_and_boundary_safety(spark):
         [(1, "a", "b|c"), (2, "a|b", "c"), (3, None, "c"), (4, "<null>", "c")],
         "id long, u string, v string",
     )
-    rows = {r["id"]: r["cb"] for r in hash_cross(df, ["u", "v"], 64, out_col="cb").collect()}
+    rows = {r["id"]: r["cross_bucket"] for r in hash_cross(df, ["u", "v"], 64).collect()}
     assert all(0 <= b < 64 for b in rows.values())
     # component boundaries cannot collide ("a","b|c") vs ("a|b","c"),
     # and a literal "<null>" string is distinguishable only by chance —

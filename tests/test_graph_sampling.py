@@ -25,29 +25,31 @@ def test_connected_components_chain_and_islands(spark):
 
 def test_connected_components_long_path_converges(spark):
     # path 0-1-...-30: worst-case diameter for label propagation; must still
-    # converge within max_rounds and label everything with 0
+    # converge within the round budget and label everything with 0
     edges = spark.createDataFrame([(i, i + 1) for i in range(30)], ["src", "dst"])
-    comp = connected_components(edges, max_rounds=40).collect()
+    comp = connected_components(edges).collect()
     assert all(r.comp == 0 for r in comp)
     assert len(comp) == 31
 
 
 def test_connected_components_deep_chain_default_rounds(spark):
     """Pointer jumping: a 300-hop path (diameter far above the round budget
-    of plain one-hop propagation) converges within the DEFAULT max_rounds —
+    of plain one-hop propagation) converges within MAX_ROUNDS —
     the silent-split hazard of the one-hop formulation is gone."""
     edges = spark.createDataFrame([(i, i + 1) for i in range(300)], ["src", "dst"])
-    comp = connected_components(edges).collect()  # default max_rounds=25
+    comp = connected_components(edges).collect()  # MAX_ROUNDS = 25
     assert len(comp) == 301
     assert all(r.comp == 0 for r in comp)
 
 
-def test_connected_components_raises_on_nonconvergence(spark):
+def test_connected_components_raises_on_nonconvergence(spark, monkeypatch):
+    from ipl_dagster_pipeline_spark.operators import graph
     from ipl_dagster_pipeline_spark.operators.graph import ComponentsNotConverged
 
+    monkeypatch.setattr(graph, "MAX_ROUNDS", 1)
     edges = spark.createDataFrame([(i, i + 1) for i in range(60)], ["src", "dst"])
     with pytest.raises(ComponentsNotConverged, match="did not converge"):
-        connected_components(edges, max_rounds=1)
+        connected_components(edges)
 
 
 def test_duplicate_groups_keeper_rule(spark):
@@ -468,14 +470,6 @@ def test_rollup_aggregate_levels_and_gid(spark):
     assert got[("y", None, 1)] == (1, 8)
     assert got[(None, None, 3)] == (4, 15)
     assert len(got) == 6  # 3 detail + 2 subtotal + 1 grand
-    # cube adds the per-d level (gid 2: t aggregated)
-    cube = {
-        (r.t, r.d, r.gid): (r.n, r.s)
-        for r in rollup_aggregate(df, ["t", "d"], aggs, cube=True).collect()
-    }
-    assert cube[(None, "d1", 2)] == (3, 11)
-    assert cube[(None, "d2", 2)] == (1, 4)
-    assert len(cube) == 8
 
 
 def test_group_quantiles_null_group_survives(spark):
@@ -589,5 +583,3 @@ def test_pagerank_empty_and_validation(spark):
     e = spark.createDataFrame([("a", "b")], "src string, dst string")
     with pytest.raises(ValueError):
         pagerank(e, iters=0)
-    with pytest.raises(ValueError):
-        pagerank(e, damping_num=20, damping_den=20)

@@ -3,8 +3,10 @@
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 from ipl_dagster_pipeline_spark.io import SnapshotTable
+from ipl_dagster_pipeline_spark.plans import incremental
 from ipl_dagster_pipeline_spark.plans.features import build_turn_features
 from ipl_dagster_pipeline_spark.plans.incremental import (
     incremental_update,
@@ -16,6 +18,11 @@ from ipl_dagster_pipeline_spark.sources.transcripts import (
 )
 
 N_BUCKETS = 8
+
+
+@pytest.fixture(autouse=True)
+def _few_buckets(monkeypatch):
+    monkeypatch.setattr(incremental, "N_BUCKETS", N_BUCKETS)
 
 
 def _key(pdf):
@@ -34,14 +41,12 @@ def test_incremental_matches_full_rebuild(spark, tmp_path):
     tbl = SnapshotTable(str(tmp_path / "transcripts"))
     s1 = tbl.commit(base)
     feats_path = str(tmp_path / "features")
-    write_feature_buckets(build_turn_features(tbl.read(spark), dim), feats_path, N_BUCKETS)
+    write_feature_buckets(build_turn_features(tbl.read(spark), dim), feats_path)
     before = spark.read.parquet(feats_path).count()
     assert before == base.count()
 
     tbl.commit(late, mode="append")  # read() now sees base+late (append chain)
-    stats = incremental_update(
-        spark, tbl, dim, feats_path, since_snapshot_id=s1, n_buckets=N_BUCKETS
-    )
+    stats = incremental_update(spark, tbl, dim, feats_path, since_snapshot_id=s1)
     assert stats["touched_buckets"] <= N_BUCKETS
 
     got = _key(spark.read.parquet(feats_path).drop("conv_bucket").toPandas())
@@ -62,12 +67,12 @@ def test_incremental_rerun_is_idempotent(spark, tmp_path):
     tbl = SnapshotTable(str(tmp_path / "t"))
     s1 = tbl.commit(base)
     feats_path = str(tmp_path / "f")
-    write_feature_buckets(build_turn_features(tbl.read(spark), dim), feats_path, N_BUCKETS)
+    write_feature_buckets(build_turn_features(tbl.read(spark), dim), feats_path)
     tbl.commit(late, mode="append")
 
-    r1 = incremental_update(spark, tbl, dim, feats_path, since_snapshot_id=s1, n_buckets=N_BUCKETS)
+    r1 = incremental_update(spark, tbl, dim, feats_path, since_snapshot_id=s1)
     count1 = spark.read.parquet(feats_path).count()
-    r2 = incremental_update(spark, tbl, dim, feats_path, since_snapshot_id=s1, n_buckets=N_BUCKETS)
+    r2 = incremental_update(spark, tbl, dim, feats_path, since_snapshot_id=s1)
     count2 = spark.read.parquet(feats_path).count()
     assert count1 == count2 and r1["rebuilt_rows"] == r2["rebuilt_rows"]
 
@@ -80,11 +85,11 @@ def test_untouched_buckets_survive_overwrite(spark, tmp_path):
     tbl = SnapshotTable(str(tmp_path / "t"))
     s1 = tbl.commit(base)
     feats_path = str(tmp_path / "f")
-    write_feature_buckets(build_turn_features(tbl.read(spark), dim), feats_path, N_BUCKETS)
+    write_feature_buckets(build_turn_features(tbl.read(spark), dim), feats_path)
 
     late = base.filter("conv_id = 'c0'").withColumn("turn_idx", F.col("turn_idx") + 5)
     tbl.commit(late, mode="append")
-    incremental_update(spark, tbl, dim, feats_path, since_snapshot_id=s1, n_buckets=N_BUCKETS)
+    incremental_update(spark, tbl, dim, feats_path, since_snapshot_id=s1)
 
     out = spark.read.parquet(feats_path)
     assert out.select("conv_id").distinct().count() == 40  # nothing clipped
@@ -114,6 +119,6 @@ def test_overwrite_in_range_rebuilds_everything_without_double_count(spark, tmp_
 
     feats_path = str(tmp_path / "f")
     dim = synthesize_tool_dim(spark, seed=3, n_days=10)
-    stats = incremental_update(spark, tbl, dim, feats_path, since_snapshot_id=s1, n_buckets=8)
+    stats = incremental_update(spark, tbl, dim, feats_path, since_snapshot_id=s1)
     assert stats["rebuilt_rows"] == replaced.count()
     assert spark.read.parquet(feats_path).count() == replaced.count()

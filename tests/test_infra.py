@@ -421,6 +421,26 @@ def _reached(defs: dict, names: set[str], roots: set[str]) -> set[str]:
     return hit
 
 
+def _package_modules(root: pathlib.Path) -> dict[str, ast.Module]:
+    """Every package module's AST, by dotted name below the package."""
+    pkg = root / "ipl_dagster_pipeline_spark"
+    out = {}
+    for f in sorted(pkg.rglob("*.py")):
+        parts = f.relative_to(pkg).with_suffix("").parts
+        out[".".join(parts[:-1] if parts[-1] == "__init__" else parts)] = ast.parse(f.read_text())
+    return out
+
+
+def _entry_modules(root: pathlib.Path) -> list[ast.Module]:
+    """What runs the package from outside it: ``jobs/``, ``scripts/``, the
+    non-test files of ``perfbench/``, ``bench*.py`` and
+    ``__spark_entry__.py``."""
+    files = sorted(root.glob("bench*.py")) + [root / "__spark_entry__.py"]
+    for d in ("jobs", "scripts", "perfbench"):
+        files += [p for p in sorted((root / d).rglob("*.py")) if not p.name.startswith("test_")]
+    return [ast.parse(f.read_text()) for f in files]
+
+
 def test_no_test_only_definitions():
     """Ratchet on the engine's surface: every top-level definition, method
     and module-level constant of the package must be reachable, by name,
@@ -432,20 +452,18 @@ def test_no_test_only_definitions():
     allow-list entry (gone, or now reached) fails too.  AST only, no
     Spark."""
     root = pathlib.Path(__file__).resolve().parents[1]
-    pkg = root / "ipl_dagster_pipeline_spark"
     defs: dict[str, tuple[str, str | None, set[str]]] = {}  # qualname → (name, class, names used)
     names: set[str] = set()
     roots: set[str] = set()
-    for f in sorted(pkg.rglob("*.py")):
-        parts = f.relative_to(pkg).with_suffix("").parts
-        mod = ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
-        for node in ast.parse(f.read_text()).body:
+    for mod, tree in _package_modules(root).items():
+        in_catalog = mod.split(".")[0] == "catalog"
+        for node in tree.body:
             consts = [c for c in _constants(node) if not c.startswith("__")]
             if consts:  # the value runs on import; the binding is no use
                 names |= _used_names(node) - set(consts)
                 for c in consts:
                     defs[f"{mod}.{c}"] = (c, None, set())
-                    if parts[0] == "catalog":
+                    if in_catalog:
                         roots.add(f"{mod}.{c}")
                 continue
             if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
@@ -465,13 +483,10 @@ def test_no_test_only_definitions():
             for m in node.body if isinstance(node, ast.ClassDef) else ():
                 if isinstance(m, (ast.FunctionDef, ast.AsyncFunctionDef)):
                     defs[f"{q}.{m.name}"] = (m.name, q, _used_names(m))
-            if parts[0] == "catalog":
+            if in_catalog:
                 roots.add(q)
-    entry = [root / "bench.py", root / "bench_extra.py", root / "__spark_entry__.py"]
-    for d in ("jobs", "scripts", "perfbench"):
-        entry += [p for p in (root / d).rglob("*.py") if not p.name.startswith("test_")]
-    for f in entry:
-        names |= _used_names(ast.parse(f.read_text()))
+    for tree in _entry_modules(root):
+        names |= _used_names(tree)
 
     reached = _reached(defs, names, roots)
     stale = sorted(q for q in REACHABILITY_ALLOW if q not in defs or q in reached)
@@ -487,6 +502,155 @@ def test_no_test_only_definitions():
         "package definitions nothing outside tests/ reaches — delete them, or "
         f"add them to REACHABILITY_ALLOW with a reason: {dead}"
     )
+
+
+# Defaulted parameters that no caller outside tests/ sets to another value,
+# kept on purpose: "module.function(param)" → reason.
+OPTIONS_ALLOW: dict[str, str] = {
+    "io.SnapshotTable.read(snapshot_id)": "time travel to a retained snapshot, what expiry "
+    "and compaction must keep readable (test_infra, test_lineage)",
+    "operators.dimensions.merge_upsert(delete_col)": "MERGE INTO's delete arm; without it "
+    "the dim_merge_upsert plan loses its false __del column and changes",
+    "operators.encoding.target_encode_pit(prior)": "the train-fold prior for scoring rows "
+    "outside the fitted frame (the module's leakage caveat)",
+    "operators.featurize.clip_fit(lo_percent)": "winsorization percent: both jobs pass 1 "
+    "explicitly as their policy, tests fit other percents",
+    "operators.featurize.clip_fit(hi_percent)": "winsorization percent: both jobs pass 99 "
+    "explicitly as their policy, tests fit other percents",
+    "operators.sessionize.sessionize(gap_seconds)": "the session gap of gap sessionization; "
+    "build_turn_features(gap_seconds), set by the feature_build CLI, mirrors it",
+    "operators.sessionize.sessionize_grouped(gap_seconds)": "the session gap, as on sessionize",
+    "partitioning.detect_hot_keys(key)": "the frozen benchmark (perfbench/workloads.py) "
+    "passes 'conv_id' positionally",
+}
+
+
+def _literal(node: ast.expr):
+    """A comparable form of a literal argument; a fresh object (equal to
+    nothing) for any other expression."""
+    try:
+        value = ast.literal_eval(node)
+    except (ValueError, TypeError, SyntaxError, MemoryError, RecursionError):
+        return object()
+    return type(value), value
+
+
+def _defaulted_params(modules: dict[str, ast.Module]) -> dict[str, list[tuple[str, str, ast.expr, int | None]]]:
+    """Call name → ``(option, param, default, positional index)`` for every
+    defaulted parameter of a top-level function, method or constructor
+    (``ClassName(...)`` is a call of ``__init__``).  ``option`` reads
+    ``module.function(param)``; the index skips a method's ``self``, and is
+    None for a keyword-only parameter."""
+    out: dict[str, list] = {}
+    for mod, tree in modules.items():
+        for node in tree.body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                fns = [(f"{mod}.{node.name}", node.name, node, 0)]
+            elif isinstance(node, ast.ClassDef):
+                fns = [
+                    (
+                        f"{mod}.{node.name}.{m.name}",
+                        node.name if m.name == "__init__" else m.name,
+                        m,
+                        0 if any(getattr(d, "id", None) == "staticmethod" for d in m.decorator_list) else 1,
+                    )
+                    for m in node.body
+                    if isinstance(m, (ast.FunctionDef, ast.AsyncFunctionDef))
+                ]
+            else:
+                continue
+            for q, called_as, fn, bound in fns:
+                a = fn.args
+                pos = a.posonlyargs + a.args
+                first = len(pos) - len(a.defaults)
+                sites = out.setdefault(called_as, [])
+                for i, (p, d) in enumerate(zip(pos[first:], a.defaults)):
+                    sites.append((f"{q}({p.arg})", p.arg, d, first + i - bound))
+                for p, d in zip(a.kwonlyargs, a.kw_defaults):
+                    if d is not None:
+                        sites.append((f"{q}({p.arg})", p.arg, d, None))
+    return out
+
+
+def _option_report(
+    modules: dict[str, ast.Module], callers: list[ast.Module], allow: dict[str, str]
+) -> tuple[list[str], list[str]]:
+    """``(unset, stale)``: the options of ``modules`` that no call in
+    ``callers`` sets to a non-literal or to a literal other than the
+    default, less ``allow``; and the ``allow`` entries that are no such
+    option (gone, or now set)."""
+    params = _defaulted_params(modules)
+    options = {p[0] for sites in params.values() for p in sites}
+    varied = set()
+    for tree in callers:
+        for call in ast.walk(tree):
+            if not isinstance(call, ast.Call):
+                continue
+            name = call.func.id if isinstance(call.func, ast.Name) else getattr(call.func, "attr", None)
+            spread = any(isinstance(a, ast.Starred) for a in call.args) or any(
+                k.arg is None for k in call.keywords
+            )
+            kw = {k.arg: k.value for k in call.keywords}
+            for option, param, default, idx in params.get(name, ()):
+                arg = kw.get(param)
+                if arg is None and idx is not None and idx < len(call.args):
+                    arg = call.args[idx]
+                if spread or (arg is not None and _literal(arg) != _literal(default)):
+                    varied.add(option)
+    single = options - varied
+    return sorted(single - set(allow)), sorted(set(allow) - single)
+
+
+def test_no_single_valued_options():
+    """Ratchet on the engine's knobs: every defaulted parameter of a package
+    function, method or constructor must be set, by some caller outside
+    tests/ (``jobs/``, ``scripts/``, the non-test files of ``perfbench/``,
+    ``bench*.py``, ``__spark_entry__.py`` or the package itself, catalog
+    included), to a non-literal or to a literal other than its default — or
+    be on ``OPTIONS_ALLOW`` with a reason.  A parameter nothing sets is a
+    constant.  Calls are matched by name: ``f(...)`` and ``x.f(...)`` both
+    count for every package ``f`` (``C(...)`` for ``C.__init__``), and a
+    call with ``*args`` or ``**kwargs`` sets every parameter.  A stale
+    allow-list entry (gone, or now set) fails too.  AST only, no Spark."""
+    root = pathlib.Path(__file__).resolve().parents[1]
+    modules = _package_modules(root)
+    unset, stale = _option_report(modules, list(modules.values()) + _entry_modules(root), OPTIONS_ALLOW)
+    assert stale == [], f"stale OPTIONS_ALLOW entries (gone or now set): {stale}"
+    assert unset == [], (
+        "defaulted parameters no caller outside tests/ sets to another value — "
+        f"make them constants, or add them to OPTIONS_ALLOW with a reason: {unset}"
+    )
+
+
+def test_option_scanner_cases():
+    """The option ratchet's scanner on a synthetic package and caller."""
+    pkg = {
+        "mod": ast.parse(
+            "def f(df, a=1, b='x', *, c=None):\n"
+            "    pass\n"
+            "class C:\n"
+            "    def __init__(self, root, k=5):\n"
+            "        pass\n"
+            "    def m(self, n=2):\n"
+            "        pass\n"
+        )
+    }
+
+    def report(src: str, allow=None):
+        return _option_report(pkg, [ast.parse(src)], allow or {})
+
+    everything = ["mod.C.__init__(k)", "mod.C.m(n)", "mod.f(a)", "mod.f(b)", "mod.f(c)"]
+    # a default passed explicitly (by keyword or position) sets nothing
+    assert report("f(df, 1, b='x', c=None); C(r, 5).m(2)") == (everything, [])
+    # a literal other than the default sets the option; so does 1.0 for 1
+    assert report("f(df, 2); C(r, k=7); x.m(n=2.0)")[0] == ["mod.f(b)", "mod.f(c)"]
+    # any non-literal sets it
+    assert report("f(df, b=name, c=g())")[0] == ["mod.C.__init__(k)", "mod.C.m(n)", "mod.f(a)"]
+    # forwarding *args / **kwargs sets every parameter of the callee
+    assert report("f(df, **opts); C(*args)")[0] == ["mod.C.m(n)"]
+    # an allow-list entry hides its option; a stale one (set, or gone) fails
+    assert report("", {"mod.f(a)": "why"})[0] == everything[:2] + ["mod.f(b)", "mod.f(c)"]
+    assert report("f(df, a=2)", {"mod.f(a)": "why", "mod.g(z)": "gone"})[1] == ["mod.f(a)", "mod.g(z)"]
 
 
 def test_skew_profile_exact_numbers(spark):
@@ -508,14 +672,15 @@ def test_skew_profile_exact_numbers(spark):
         skew_profile(df, "k", top_n=0)
 
 
-def test_publish_web_asset_gz_sibling(tmp_path):
+def test_publish_web_asset_gz_sibling(tmp_path, monkeypatch):
     """K4 web-asset publish (reference urllib.py:90-113,
     webasset_io_manager.py:45-54): atomic tmp→rename, precompressed .gz
-    sibling with the SAME mtime as the source, deterministic gz bytes, no
-    partial files on writer failure."""
+    sibling with the SAME mtime as the source, no partial files on writer
+    failure."""
     import gzip
     import json
     import os
+    import shutil
 
     from ipl_dagster_pipeline_spark.io import publish_web_asset
 
@@ -530,41 +695,30 @@ def test_publish_web_asset_gz_sibling(tmp_path):
     st, st_gz = os.stat(target), os.stat(target + ".gz")
     assert st.st_mtime == st_gz.st_mtime  # one Last-Modified for both encodings
     assert not [f for f in os.listdir(tmp_path / "assets") if f.endswith(".tmp")]
-
-    # republish with a pinned source_mtime → byte-identical gz AND file
-    publish_web_asset(target, content=payload, source_mtime=1700000000.0)
     gz1 = open(target + ".gz", "rb").read()
-    publish_web_asset(target, content=payload, source_mtime=1700000000.0)
-    assert open(target + ".gz", "rb").read() == gz1
-    assert os.stat(target).st_mtime == os.stat(target + ".gz").st_mtime == 1700000000.0
 
-    # writer failure leaves no partial files and keeps the old asset
-    def bad_writer(tmp):
-        with open(tmp, "w") as fh:
-            fh.write("partial")
+    # a write failing mid-.gz leaves no partial files and keeps the old asset
+    def disk_full(src, dst):
+        dst.write(b"partial")
         raise OSError("disk full")
 
-    import pytest
-
+    monkeypatch.setattr(shutil, "copyfileobj", disk_full)
     with pytest.raises(OSError, match="disk full"):
-        publish_web_asset(target, write_fn=bad_writer)
+        publish_web_asset(target, content={"stations": 4})
     with open(target) as fh:
         assert json.load(fh) == payload  # old asset intact
+    assert open(target + ".gz", "rb").read() == gz1
     assert not [f for f in os.listdir(tmp_path / "assets") if ".tmp" in f]
 
-    # misuse is loud; the committed pair survives everything above unchanged
-    with pytest.raises(ValueError, match="exactly one"):
-        publish_web_asset(target)
-    assert open(target + ".gz", "rb").read() == gz1
 
-
-def test_publish_web_asset_concurrent_publishers(tmp_path):
-    """Two publishers of one artifact: A's writer pauses after writing its
-    tmp while B publishes.  Each call has its own tmp, so both return, the
-    last rename wins and no tmp file is left behind."""
+def test_publish_web_asset_concurrent_publishers(tmp_path, monkeypatch):
+    """Two publishers of one artifact: A pauses after writing its tmp while
+    B publishes.  Each call has its own tmp, so both return, the last
+    rename wins and no tmp file is left behind."""
     import gzip
     import json
     import os
+    import shutil
     import threading
 
     from ipl_dagster_pipeline_spark.io import publish_web_asset
@@ -572,20 +726,24 @@ def test_publish_web_asset_concurrent_publishers(tmp_path):
     target = str(tmp_path / "assets" / "summary.json")
     a_wrote, b_done = threading.Event(), threading.Event()
     result: dict = {}
+    copy = shutil.copyfileobj
 
-    def slow_writer(tmp):
-        with open(tmp, "w") as fh:
-            json.dump({"by": "a"}, fh)
-        a_wrote.set()
-        assert b_done.wait(30)
+    def pausing_copy(src, dst):
+        # A's tmp is written; hold A here, before any of its renames
+        if threading.current_thread().name == "publisher-a":
+            a_wrote.set()
+            assert b_done.wait(30)
+        copy(src, dst)
+
+    monkeypatch.setattr(shutil, "copyfileobj", pausing_copy)
 
     def publish_a():
         try:
-            result["a"] = publish_web_asset(target, write_fn=slow_writer)
+            result["a"] = publish_web_asset(target, content={"by": "a"})
         except Exception as err:  # noqa: BLE001 — asserted below
             result["a"] = err
 
-    t = threading.Thread(target=publish_a)
+    t = threading.Thread(target=publish_a, name="publisher-a")
     t.start()
     assert a_wrote.wait(30)
     result["b"] = publish_web_asset(target, content={"by": "b"})
@@ -604,21 +762,21 @@ def test_publish_web_asset_concurrent_publishers(tmp_path):
 def test_morton_zorder_layout(spark):
     """The Z-order (Morton) code round-trips (de-interleaving recovers the
     clamped inputs) and a NULL dim yields a NULL code."""
-    from ipl_dagster_pipeline_spark.partitioning import morton_code
+    from ipl_dagster_pipeline_spark.partitioning import MORTON_BITS, morton_code
 
     df = spark.range(0, 4096).select(
         (F.col("id") % 64).alias("x"),
         ((F.col("id") / 64).cast("long") % 64).alias("y"),  # independent 64×64 grid
     )
-    coded = df.select("x", "y", morton_code([F.col("x"), F.col("y")], bits=6).alias("z")).collect()
+    coded = df.select("x", "y", morton_code([F.col("x"), F.col("y")]).alias("z")).collect()
     for r in coded:
-        x = sum(((r.z >> (2 * i)) & 1) << i for i in range(6))
-        y = sum(((r.z >> (2 * i + 1)) & 1) << i for i in range(6))
+        x = sum(((r.z >> (2 * i)) & 1) << i for i in range(MORTON_BITS))
+        y = sum(((r.z >> (2 * i + 1)) & 1) << i for i in range(MORTON_BITS))
         assert (x, y) == (r.x, r.y)
 
     [nz] = (
         spark.createDataFrame([(None, 3)], "a int, b int")
-        .select(morton_code([F.col("a"), F.col("b")], bits=6).alias("z"))
+        .select(morton_code([F.col("a"), F.col("b")]).alias("z"))
         .collect()
     )
     assert nz.z is None

@@ -343,7 +343,7 @@ def test_fan_out_scan_adaptive(spark, tmp_path):
     assert fan_out_scan(agg) is agg
 
 
-def test_incremental_update_counts_rows_on_its_write(spark, tmp_path):
+def test_incremental_update_counts_rows_on_its_write(spark, tmp_path, monkeypatch):
     """One incremental update runs the touched-bucket collect and the
     publishing write, nothing more: ``rebuilt_rows`` is observed by the
     write itself, not by a cache plus a count pass over the rebuilt
@@ -353,10 +353,13 @@ def test_incremental_update_counts_rows_on_its_write(spark, tmp_path):
     import uuid
 
     from ipl_dagster_pipeline_spark.io import SnapshotTable
+    from ipl_dagster_pipeline_spark.plans import incremental
     from ipl_dagster_pipeline_spark.plans.incremental import (
         incremental_update,
         write_feature_buckets,
     )
+
+    monkeypatch.setattr(incremental, "N_BUCKETS", 8)
     from ipl_dagster_pipeline_spark.sources.transcripts import (
         synthesize_tool_dim,
         synthesize_transcripts,
@@ -370,14 +373,14 @@ def test_incremental_update_counts_rows_on_its_write(spark, tmp_path):
     tbl = SnapshotTable(str(tmp_path / "transcripts"))
     s1 = tbl.commit(base)
     feats_path = str(tmp_path / "features")
-    write_feature_buckets(build_turn_features(tbl.read(spark), dim), feats_path, 8)
+    write_feature_buckets(build_turn_features(tbl.read(spark), dim), feats_path)
     tbl.commit(late, mode="append")
 
     sc = spark.sparkContext
     group = f"incremental-jobs-{uuid.uuid4().hex}"
     sc.setJobGroup(group, "job count")
     try:
-        stats = incremental_update(spark, tbl, dim, feats_path, since_snapshot_id=s1, n_buckets=8)
+        stats = incremental_update(spark, tbl, dim, feats_path, since_snapshot_id=s1)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()

@@ -125,7 +125,7 @@ def test_connected_components_match_union_find(spark, edges):
     expected = {v: find(v) for v in parent}
 
     df = spark.createDataFrame(edges, ["src", "dst"])
-    got = {r.v: r.comp for r in connected_components(df, max_rounds=40).collect()}
+    got = {r.v: r.comp for r in connected_components(df).collect()}
     assert got == expected
 
 

@@ -24,6 +24,7 @@ from ipl_dagster_pipeline_spark.operators.relational import (
     group_pivot_sum,
     temporal_validity_filter,
 )
+from ipl_dagster_pipeline_spark.operators.windows import rank_dedup
 
 
 # -- §3.1 station-status pivot chain (lamassu.py:137-180 semantics) ----------
@@ -53,12 +54,11 @@ def test_station_status_pivot_chain(spark):
         meta_cols=["station_id"],
         default_record=F.struct(F.lit("default").alias("vehicle_type_id"), F.lit(0).alias("count")),
     )
-    joined = broadcast_dim_join(
-        exploded,
-        vehicle_types,
-        on="vehicle_type_id",
-        dedup_dim_order=[F.col("form_factor")],  # keep-last dedup (lamassu.py:221)
+    # keep-last dim dedup before the join (lamassu.py:221)
+    vehicle_types = rank_dedup(
+        vehicle_types, ["vehicle_type_id"], [F.col("form_factor")], keep="last"
     )
+    joined = broadcast_dim_join(exploded, vehicle_types, on="vehicle_type_id")
     pivoted = group_pivot_sum(joined, ["station_id"], "form_factor", "count",
                               pivot_values=["bicycle", "car_dup"])
     rows = {r.station_id: r.asDict() for r in pivoted.collect()}

@@ -87,7 +87,9 @@ def _lsh_candidates(spark, tmp_path):
     df = _docs(spark)
     sig = text_dedup.minhash_signatures(text_dedup.shingles(df))
     bands = _bands(df)
-    got = _observe("lsh_dropped", lambda: text_dedup.lsh_candidates(sig, max_bucket=CAP).count())
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(text_dedup, "LSH_MAX_BUCKET", CAP)
+        got = _observe("lsh_dropped", lambda: text_dedup.lsh_candidates(sig).count())
     want = {"dropped_band_rows": _oversized_rows(bands, ["band", "bucket"], CAP), "band_rows": len(bands)}
     return [(got, want)]
 
@@ -166,14 +168,13 @@ def test_corpus_dedup_pairs_lineage_counts_dropped_band_rows(spark, tmp_path, mo
     with a degenerate block larger than the LSH bucket cap carries the
     dropped band rows on its lineage row, equal to a recount of the rows in
     oversized buckets."""
-    import inspect
     import sys
 
     import pyarrow.parquet as pq
 
     import jobs.corpus_dedup as job
 
-    cap = inspect.signature(text_dedup.lsh_candidates).parameters["max_bucket"].default
+    cap = text_dedup.LSH_MAX_BUCKET
     block = spark.range(10_000, 10_000 + cap).select(
         F.col("id").alias("doc_id"), F.lit(DEGENERATE).alias("text")
     )

@@ -173,7 +173,7 @@ def test_near_dup_lsh_finds_planted_dups_and_is_subset(spark, emb):
 
 def test_media_decode_plumbing(docs):
     media = synthesize_media(docs)
-    feats = decode_media(media, fake=True)
+    feats = decode_media(media)
     pdf = feats.toPandas()
     assert len(pdf) == docs.count()
     img = pdf[pdf.media_type == "image"]
@@ -181,18 +181,6 @@ def test_media_decode_plumbing(docs):
     aud = pdf[pdf.media_type == "audio"]
     assert aud.width.isna().all() and aud.duration_s.notna().all()
     assert pdf.content_hash.notna().all()
-
-
-def test_media_decode_real_path_rejects_nonimage_bytes(docs):
-    """Real mode decodes REAL images only: synthetic text payloads and
-    audio/video rows both fail loudly (UnsupportedImage / NotImplementedError),
-    never fabricate pixels.  The real-codec happy path is covered in
-    tests/test_imagecodec.py."""
-    media = synthesize_media(docs)
-    with pytest.raises(
-        Exception, match="NotImplementedError|UnsupportedImage|unrecognized|images only"
-    ):
-        decode_media(media, fake=False).collect()
 
 
 def test_latest_media_per_source(docs):
@@ -207,7 +195,7 @@ def test_ivf_topk_recall_and_subset(emb):
 
     qids = list(range(20))
     bf = cosine_topk_bruteforce(emb, qids, k=5).toPandas()
-    ann = ivf_topk(emb, qids, k=5, n_clusters=16, n_probe=4).toPandas()
+    ann = ivf_topk(emb, qids).toPandas()
     bf_set = set(zip(bf.query_id, bf.neighbor_id))
     ann_set = set(zip(ann.query_id, ann.neighbor_id))
     recall = len(bf_set & ann_set) / len(bf_set)
@@ -254,24 +242,19 @@ def test_media_resize_and_frame_sample_plumbing(docs):
     from ipl_dagster_pipeline_spark.operators.multimodal import resize_images, sample_frames
 
     media = synthesize_media(docs)
-    resized = resize_images(media, target=(96, 96), fake=True).toPandas()
+    resized = resize_images(media, target=(96, 96)).toPandas()
     n_images = media.filter("media_type = 'image'").count()
     assert len(resized) == n_images  # non-images never reach the Arrow stage
     assert (resized.out_w <= 96).all() and (resized.out_h <= 96).all()
     assert (resized.scale <= 1.0).all() and (resized.scale > 0).all()  # never upscale
     # aspect preserved within integer truncation: out_w/out_h ≈ w/h
-    frames = sample_frames(media, fps=1.0, max_frames=16, fake=True).toPandas()
+    frames = sample_frames(media).toPandas()
     n_videos = media.filter("media_type = 'video'").count()
     assert frames.media_id.nunique() == n_videos
     per = frames.groupby("media_id").frame_idx.agg(["min", "max", "count"])
     assert (per["min"] == 0).all()
     assert (per["max"] == per["count"] - 1).all()  # contiguous 0..n-1
     assert (per["count"] <= 16).all()
-    # real codec paths stay stubbed
-    with pytest.raises(Exception, match="NotImplementedError|codec"):
-        resize_images(media, fake=False).collect()
-    with pytest.raises(Exception, match="NotImplementedError|codec"):
-        sample_frames(media, fake=False).collect()
 
 
 def test_winnow_fingerprints_detect_shared_substrings(spark, docs):
@@ -307,7 +290,7 @@ def test_winnow_short_doc_fallback(spark):
         [(1, "ab"), (2, "abcdefg"), (3, "abcdefgh"), (4, "ab"), (5, "")],
         ["doc_id", "text"],
     )
-    fp = winnow_fingerprints(df, k=5, window=4).toPandas()
+    fp = winnow_fingerprints(df).toPandas()
     per = fp.groupby("doc_id").fingerprint.agg(["count", "min"])
     # every doc (even the 2-char and empty ones) has >= 1 fingerprint
     assert sorted(per.index) == [1, 2, 3, 4, 5]
@@ -319,18 +302,20 @@ def test_winnow_short_doc_fallback(spark):
     assert per.loc[3, "count"] == 1
 
 
-def test_lsh_dropped_buckets_are_observable(spark):
+def test_lsh_dropped_buckets_are_observable(spark, monkeypatch):
     """Silent-cap honesty: capping oversized LSH buckets must emit an
     observable dropped count (reference dedup-delta warning analog)."""
     from ipl_dagster_pipeline_spark.caching import tracked_scope
     from ipl_dagster_pipeline_spark.metrics import scope_observations
+    from ipl_dagster_pipeline_spark.operators import text_dedup
     from ipl_dagster_pipeline_spark.operators.text_dedup import (
         lsh_candidates,
         minhash_signatures,
         shingles,
     )
 
-    # 12 identical docs -> every band bucket has 12 members > max_bucket=4
+    monkeypatch.setattr(text_dedup, "LSH_MAX_BUCKET", 4)
+    # 12 identical docs -> every band bucket has 12 members > the cap of 4
     # (all capped), plus 6 unique docs that survive (so AQE cannot prune the
     # observed branch as an empty relation — see scope_observations caveat)
     rows = [(i, "the same degenerate text for every document here") for i in range(12)]
@@ -338,7 +323,7 @@ def test_lsh_dropped_buckets_are_observable(spark):
     df = spark.createDataFrame(rows, ["doc_id", "text"])
     sig = minhash_signatures(shingles(df))
     with tracked_scope() as scope:
-        cand = lsh_candidates(sig, max_bucket=4).toPandas()
+        cand = lsh_candidates(sig).toPandas()
         got = scope_observations(scope.observations)
     assert (cand["doc_a"] >= 100).all()  # degenerate block capped away
     # 12 docs × 4 bands = 48 oversized band rows dropped, 72 total
@@ -418,7 +403,7 @@ def test_tracked_scope_isolates_concurrent_pipelines(spark):
     )
 
     release_tracked(blocking=True)
-    with tracked_scope(blocking=True):
+    with tracked_scope():
         mine = tracked_persist(spark.range(50).selectExpr("id", "id * 2 AS v"))
         mine.count()
         assert mine.storageLevel.useMemory
@@ -443,10 +428,10 @@ def test_tracked_release_keeps_a_plan_another_holder_persisted(spark):
     def plan():
         return spark.range(40).selectExpr("id % 7 AS k", "id * 3 AS v")
 
-    with tracked_scope(blocking=True):
+    with tracked_scope():
         first = tracked_persist(plan())
         first.count()
-        with tracked_scope(blocking=True):
+        with tracked_scope():
             second = tracked_persist(plan())
             assert second is not first and second.storageLevel.useMemory
         assert first.storageLevel.useMemory
@@ -584,7 +569,7 @@ def test_robust_outliers_planted_and_null_group(spark):
         + [(2000, None, 1)]                                # null-group outlier
     )
     df = spark.createDataFrame(rows, "doc_id long, g string, v long")
-    out = robust_outliers(df, ["g"], "v", "doc_id", n_mads=3)
+    out = robust_outliers(df, ["g"], "v", "doc_id")
     got = {(r.g, r.doc_id): (r.med, r.mad) for r in out.collect()}
     assert set(got) == {("a", 1000), (None, 2000)}
     med, mad = got[("a", 1000)]
