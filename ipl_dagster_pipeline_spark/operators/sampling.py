@@ -56,7 +56,7 @@ def hash_split(
     total = sum(fractions.values())
     if abs(total - 1.0) > 1e-9:
         raise ValueError(f"fractions must sum to 1, got {total}")
-    bucket = split_bucket(F.col(key_col), 7)
+    bucket = split_bucket(F.col(key_col))
     expr = None
     acc = 0.0
     for name, frac in fractions.items():

@@ -164,9 +164,9 @@ def lsh_candidates(sig: DataFrame) -> DataFrame:
             kept.alias("b"),
             (F.col("a.band") == F.col("b.band"))
             & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col(f"a.doc_id") < F.col(f"b.doc_id")),
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
-        .select(F.col(f"a.doc_id").alias("doc_a"), F.col(f"b.doc_id").alias("doc_b"))
+        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .distinct()
     )
 
