@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 from ipl_dagster_pipeline_spark.catalog.common import CatalogEntry, _duck_hash, _read
 from ipl_dagster_pipeline_spark.operators.graph import duplicate_groups
 from ipl_dagster_pipeline_spark.operators.similarity import (
+    EMB_LSH_MAX_BUCKET,
     _as_double,
     cosine,
     cosine_topk_bruteforce,
@@ -115,8 +116,7 @@ _ND_PLANES, _ND_TABLES, _ND_DIM, _ND_THRESH = 6, 8, 64, 0.4
 def q_emb_near_dup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _read(spark, sf_dir, "embeddings")
     return near_dup_pairs_lsh(
-        emb, threshold=_ND_THRESH, n_planes=_ND_PLANES, n_tables=_ND_TABLES, dim=_ND_DIM,
-        max_bucket=_ND_MAXB,
+        emb, threshold=_ND_THRESH, n_planes=_ND_PLANES, n_tables=_ND_TABLES, dim=_ND_DIM
     )
 
 
@@ -129,13 +129,13 @@ def _nd_bucket_sql(t: int) -> str:
     return " + ".join(terms)
 
 
-_ND_MAXB = 100_000  # oversized-bucket cap (no-op at gate SFs; mirrors the operator)
 _ND_BANDS_SQL = (
     "SELECT * FROM (\n    "
     + "\n    UNION ALL\n    ".join(
         f"SELECT vec_id, {t} AS tbl, {_nd_bucket_sql(t)} AS bucket FROM v" for t in range(_ND_TABLES)
     )
-    + f"\n    ) QUALIFY count(*) OVER (PARTITION BY tbl, bucket) <= {_ND_MAXB}"
+    # the operator's oversized-bucket cap (a no-op at gate SFs)
+    + f"\n    ) QUALIFY count(*) OVER (PARTITION BY tbl, bucket) <= {EMB_LSH_MAX_BUCKET}"
 )
 _ND_COS = (
     "list_dot_product(x.v, y.v) / (sqrt(list_dot_product(x.v, x.v)) * sqrt(list_dot_product(y.v, y.v)))"
@@ -174,8 +174,7 @@ def q_emb_dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     iterative distributed algorithm with a full value-hash gate."""
     emb = _read(spark, sf_dir, "embeddings")
     pairs = near_dup_pairs_lsh(
-        emb, threshold=_ND_THRESH, n_planes=_ND_PLANES, n_tables=_ND_TABLES, dim=_ND_DIM,
-        max_bucket=_ND_MAXB,
+        emb, threshold=_ND_THRESH, n_planes=_ND_PLANES, n_tables=_ND_TABLES, dim=_ND_DIM
     )
     return duplicate_groups(pairs, left="vec_a", right="vec_b")
 

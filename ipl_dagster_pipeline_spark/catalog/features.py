@@ -10,11 +10,14 @@ from ipl_dagster_pipeline_spark.catalog.sampling import _SPLIT_FRACS
 from ipl_dagster_pipeline_spark.operators.chunking import chunk_token_windows
 from ipl_dagster_pipeline_spark.operators.decay import decay_weights, with_decayed_counts
 from ipl_dagster_pipeline_spark.operators.encoding import (
+    TE_SMOOTHING,
     count_encode_fit,
     count_encode_transform,
     target_encode_pit,
 )
 from ipl_dagster_pipeline_spark.operators.featurize import (
+    CROSS_SEED,
+    HASH_ONEHOT_SEED,
     clip_fit_sketch,
     clip_transform,
     hash_bucket_onehot,
@@ -28,13 +31,15 @@ from ipl_dagster_pipeline_spark.operators.featurize import (
     standardize_fit,
     standardize_transform,
 )
-from ipl_dagster_pipeline_spark.operators.sampling import hash_split, sample_class_cap
+from ipl_dagster_pipeline_spark.operators.sampling import CAP_SEED, hash_split, sample_class_cap
 from ipl_dagster_pipeline_spark.operators.sketches import (
     CMS_D,
     CMS_ROW_OFFSET,
+    CMS_SEED,
     CMS_W,
     HLL_M,
     HLL_NUMERATOR,
+    HLL_SEED,
     HLL_SMALL_RANGE,
     cms_estimate,
     cms_merge,
@@ -63,8 +68,6 @@ from ipl_dagster_pipeline_spark.partitioning import skew_profile
 # smoothed value derived from exact integers and rounded once at the end.
 # ---------------------------------------------------------------------------
 
-_TE_SMOOTH = 20
-
 
 def q_event_target_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PIT target-encode user_id by the event `value` label: each event sees
@@ -75,7 +78,7 @@ def q_event_target_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _read(spark, sf_dir, "events")
     out = target_encode_pit(
         ev, key_col="user_id", label_col="value",
-        order_cols=["ts", "event_id"], smoothing=_TE_SMOOTH,
+        order_cols=["ts", "event_id"],
     )
     return out.select("event_id", "user_id", "te_cnt", "te_sum_micro", "te_value")
 
@@ -101,9 +104,9 @@ w AS (
 )
 SELECT event_id, user_id, te_cnt, te_sum_micro,
        CAST(CAST(
-           (CAST(te_sum_micro AS HUGEINT) * p_den + {_TE_SMOOTH} * CAST(p_num AS HUGEINT))
+           (CAST(te_sum_micro AS HUGEINT) * p_den + {TE_SMOOTHING} * CAST(p_num AS HUGEINT))
                * 1000000
-           // (CAST(te_cnt + {_TE_SMOOTH} AS HUGEINT) * p_den * 1000000)
+           // (CAST(te_cnt + {TE_SMOOTHING} AS HUGEINT) * p_den * 1000000)
        AS BIGINT) AS DOUBLE) / 1000000.0 AS te_value
 FROM w CROSS JOIN g
 """
@@ -180,14 +183,12 @@ FROM e LEFT JOIN dec
 # exact COUNT DISTINCT alongside for error visibility.
 # ---------------------------------------------------------------------------
 
-_HLL_SEED = 41
-
 
 def q_event_hll_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct users per event type: HLL estimate (64 buckets) + exact —
     the register frame is ≤ 64 rows per group however large the input."""
     ev = _read(spark, sf_dir, "events")
-    est = hll_distinct(ev, ["event_type"], F.col("user_id"), seed=_HLL_SEED).alias("E")
+    est = hll_distinct(ev, ["event_type"], F.col("user_id")).alias("E")
     exact = (
         ev.groupBy("event_type")
         .agg(F.count_distinct("user_id").alias("n_exact"))
@@ -202,7 +203,7 @@ def q_event_hll_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 SQL_HLL_USERS = f"""
 WITH h AS (
     SELECT event_type,
-           {_duck_hash(_HLL_SEED, "CAST(user_id AS VARCHAR)")} AS h
+           {_duck_hash(HLL_SEED, "CAST(user_id AS VARCHAR)")} AS h
     FROM events WHERE user_id IS NOT NULL
 ),
 reg AS (
@@ -331,7 +332,6 @@ FROM fr
 # only) — `over_cnt` makes the collision load visible per key.
 # ---------------------------------------------------------------------------
 
-_CMS_SEED = 53
 _CMS_TOP = 24
 
 
@@ -342,8 +342,8 @@ def q_event_cms_user_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     1024-row groupBy, and the probe broadcasts the sketch — the raw events
     are scanned once per half and never shuffled by key."""
     ev = _read(spark, sf_dir, "events")
-    half_a = cms_sketch(ev.where(F.col("event_id") % 2 == 0), [], F.col("user_id"), seed=_CMS_SEED)
-    half_b = cms_sketch(ev.where(F.col("event_id") % 2 == 1), [], F.col("user_id"), seed=_CMS_SEED)
+    half_a = cms_sketch(ev.where(F.col("event_id") % 2 == 0), [], F.col("user_id"))
+    half_b = cms_sketch(ev.where(F.col("event_id") % 2 == 1), [], F.col("user_id"))
     sk = cms_merge(half_a, half_b)
     exact = (
         ev.where(F.col("user_id").isNotNull())
@@ -351,7 +351,7 @@ def q_event_cms_user_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("exact_cnt"))
     )
     top = exact.orderBy(F.col("exact_cnt").desc(), F.col("user_id")).limit(_CMS_TOP)
-    est = cms_estimate(sk, top, "user_id", seed=_CMS_SEED, group_cols=[])
+    est = cms_estimate(sk, top, "user_id", group_cols=[])
     return est.select(
         "user_id",
         "exact_cnt",
@@ -362,7 +362,7 @@ def q_event_cms_user_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _cms_base_sql(expr: str) -> str:
     return (
-        f"CAST(concat('0x', substring(md5(concat('{_CMS_SEED}:', {expr})), 1, 15)) AS BIGINT)"
+        f"CAST(concat('0x', substring(md5(concat('{CMS_SEED}:', {expr})), 1, 15)) AS BIGINT)"
         f" % {MINHASH_P}"
     )
 
@@ -416,7 +416,6 @@ _FV_DOMAIN = ["click", "error", "purchase", "signup", "view"]
 _FV_NUM = ["value", "plen", "hour"]
 _FV_FRACS = {"train": 0.8, "val": 0.1, "test": 0.1}
 _FV_HB = 8
-_FV_HB_SEED = 11
 
 
 def q_event_feature_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -438,7 +437,7 @@ def q_event_feature_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats = standardize_fit(ev.where(F.col("fold") == "train"), _FV_NUM)
     out = standardize_transform(ev, stats, _FV_NUM)
     out = one_hot(out, "event_type", _FV_DOMAIN, prefix="oh")
-    out = hash_bucket_onehot(out, "user_id", _FV_HB, seed=_FV_HB_SEED)
+    out = hash_bucket_onehot(out, "user_id", _FV_HB)
     return out.select(
         "event_id",
         "fold",
@@ -491,7 +490,7 @@ SELECT event_id, fold,
        {", ".join(f"CASE WHEN event_type = '{v}' THEN 1 ELSE 0 END AS oh_{v}" for v in _FV_DOMAIN)},
        CASE WHEN event_type IN ({", ".join(repr(v) for v in _FV_DOMAIN)}) THEN 0 ELSE 1 END AS oh_other,
        {", ".join(
-           f"CASE WHEN CAST(concat('0x', substring(md5(concat('{_FV_HB_SEED}:', coalesce(CAST(user_id AS VARCHAR), '<null>'))), 1, 15)) AS BIGINT) % {_FV_HB} = {i} THEN 1 ELSE 0 END AS hb_{i}"
+           f"CASE WHEN CAST(concat('0x', substring(md5(concat('{HASH_ONEHOT_SEED}:', coalesce(CAST(user_id AS VARCHAR), '<null>'))), 1, 15)) AS BIGINT) % {_FV_HB} = {i} THEN 1 ELSE 0 END AS hb_{i}"
            for i in range(_FV_HB)
        )}
 FROM f CROSS JOIN st
@@ -510,7 +509,6 @@ FROM f CROSS JOIN st
 
 _QB_BINS = 8
 _XC_BUCKETS = 16
-_XC_SEED = 13
 _CHUNK, _CHUNK_OVERLAP = 32, 8
 
 
@@ -582,7 +580,7 @@ def q_event_hash_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("event_type"),
         F.hour(F.col("ts").cast("timestamp")).cast("int").alias("hour"),
     )
-    return hash_cross(ev, ["event_type", "hour"], _XC_BUCKETS, seed=_XC_SEED)
+    return hash_cross(ev, ["event_type", "hour"], _XC_BUCKETS)
 
 
 SQL_HASH_CROSS = f"""
@@ -593,7 +591,7 @@ WITH ev AS (
     FROM events
 )
 SELECT event_id, event_type, hour,
-       CAST(concat('0x', substring(md5(concat('{_XC_SEED}:',
+       CAST(concat('0x', substring(md5(concat('{CROSS_SEED}:',
                 concat('event_type=', coalesce(event_type, '<null>')),
                 chr(31),
                 concat('hour=', coalesce(CAST(hour AS VARCHAR), '<null>')))), 1, 15)) AS BIGINT)
@@ -951,7 +949,6 @@ FROM ppm
 # ---------------------------------------------------------------------------
 
 _CAP_N = 300
-_CAP_SEED = 61
 
 
 def q_event_class_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -963,7 +960,7 @@ def q_event_class_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.col("event_type"))
         .alias("event_type"),
     )
-    return sample_class_cap(ev, "event_type", _CAP_N, "event_id", seed=_CAP_SEED)
+    return sample_class_cap(ev, "event_type", _CAP_N, "event_id")
 
 
 SQL_CLASS_BALANCE = f"""
@@ -976,7 +973,7 @@ r AS (
     SELECT event_id, event_type,
            row_number() OVER (
                PARTITION BY event_type
-               ORDER BY {_duck_hash(_CAP_SEED, "coalesce(CAST(event_id AS VARCHAR), '<null>')")} ASC,
+               ORDER BY {_duck_hash(CAP_SEED, "coalesce(CAST(event_id AS VARCHAR), '<null>')")} ASC,
                         event_id ASC) AS class_rank
     FROM ev
 )

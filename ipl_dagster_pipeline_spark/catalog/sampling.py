@@ -8,6 +8,9 @@ from pyspark.sql import functions as F
 from ipl_dagster_pipeline_spark.catalog.common import CatalogEntry, _duck_hash, _read
 from ipl_dagster_pipeline_spark.operators.packing import pack_sequences
 from ipl_dagster_pipeline_spark.operators.sampling import (
+    MIX_SEED,
+    NEG_SEED,
+    SHUFFLE_SEED,
     hash_split,
     mixture_epochs,
     sample_negatives,
@@ -156,7 +159,6 @@ WHERE {_duck_hash(13, "coalesce(CAST(doc_id AS VARCHAR), '<null>')")} % 10000
 
 _MIX_EPOCHS = {"en": 0.6, "de": 2.3, "zh": 1.0}
 _MIX_DEFAULT = 1.5
-_MIX_SEED = 29
 
 
 def q_doc_mixture_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -168,7 +170,7 @@ def q_doc_mixture_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _null_stratum(_read(spark, sf_dir, "documents"), "lang", 11)
     out = mixture_epochs(
         docs, strata_col="lang", key_col="doc_id", epochs=_MIX_EPOCHS,
-        default_epochs=_MIX_DEFAULT, seed=_MIX_SEED,
+        default_epochs=_MIX_DEFAULT,
     )
     return out.select("doc_id", "lang", "epoch")
 
@@ -189,7 +191,7 @@ WITH d AS (
 n AS (
     SELECT doc_id, lang,
            {_mix_case(lambda e: int(e))}
-           + CASE WHEN {_duck_hash(_MIX_SEED, "coalesce(CAST(doc_id AS VARCHAR), '<null>')")} % 10000
+           + CASE WHEN {_duck_hash(MIX_SEED, "coalesce(CAST(doc_id AS VARCHAR), '<null>')")} % 10000
                        < {_mix_case(lambda e: round((e - int(e)) * 10000))}
                   THEN 1 ELSE 0 END AS n_copies
     FROM d
@@ -250,7 +252,6 @@ WHERE cum_tokens <= {_TB_CASE}
 
 
 _SH_SHARDS = 8
-_SH_SEED = 37
 
 
 def q_doc_shuffle_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -259,14 +260,14 @@ def q_doc_shuffle_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     distributed prefix sum of 1s (range partition + broadcast offsets), never
     a single-partition Window.orderBy."""
     docs = _read(spark, sf_dir, "documents")
-    out = shuffle_shards(docs, key_col="doc_id", n_shards=_SH_SHARDS, seed=_SH_SEED)
+    out = shuffle_shards(docs, key_col="doc_id", n_shards=_SH_SHARDS)
     return out.select("doc_id", "shuffle_pos", "shard")
 
 
 SQL_SHUFFLE_SHARDS = f"""
 WITH h AS (
     SELECT doc_id,
-           {_duck_hash(_SH_SEED, "coalesce(CAST(doc_id AS VARCHAR), '<null>')")} AS h
+           {_duck_hash(SHUFFLE_SEED, "coalesce(CAST(doc_id AS VARCHAR), '<null>')")} AS h
     FROM documents
 ),
 p AS (
@@ -406,7 +407,6 @@ WHERE {_duck_hash(_TMP_SEED, "coalesce(CAST(doc_id AS VARCHAR), '<null>')")} % 1
 # ---------------------------------------------------------------------------
 
 _NEG_K = 4
-_NEG_SEED = 53
 
 
 def q_doc_negative_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -415,7 +415,7 @@ def q_doc_negative_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     draws with a deterministic self-collision shift, one position
     equi-join."""
     docs = _read(spark, sf_dir, "documents").select("doc_id")
-    return sample_negatives(docs, "doc_id", _NEG_K, seed=_NEG_SEED)
+    return sample_negatives(docs, "doc_id", _NEG_K)
 
 
 SQL_NEGATIVE_PAIRS = f"""
@@ -423,14 +423,14 @@ WITH d AS (SELECT doc_id FROM documents),
 idx AS (
     SELECT doc_id,
            row_number() OVER (
-               ORDER BY {_duck_hash(_NEG_SEED, "coalesce(CAST(doc_id AS VARCHAR), '<null>')")} ASC,
+               ORDER BY {_duck_hash(NEG_SEED, "coalesce(CAST(doc_id AS VARCHAR), '<null>')")} ASC,
                         doc_id ASC) - 1 AS pos
     FROM d
 ),
 n AS (SELECT CAST(count(*) AS BIGINT) AS c FROM d),
 drawn AS (
     SELECT doc_id, pos, neg_rank,
-           {_duck_hash(_NEG_SEED, "concat(coalesce(CAST(doc_id AS VARCHAR), '<null>'), ':', CAST(neg_rank AS VARCHAR))")} % c AS raw,
+           {_duck_hash(NEG_SEED, "concat(coalesce(CAST(doc_id AS VARCHAR), '<null>'), ':', CAST(neg_rank AS VARCHAR))")} % c AS raw,
            c
     FROM (SELECT doc_id, pos, unnest(generate_series(1, {_NEG_K})) AS neg_rank FROM idx)
     CROSS JOIN n

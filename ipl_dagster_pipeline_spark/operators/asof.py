@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def _dim_value_cols(dim: DataFrame, key: str, dim_ts: str = "effective_from") -> list[str]:
+def _dim_value_cols(dim: DataFrame, key: str, dim_ts: str) -> list[str]:
     return [c for c in dim.columns if c not in (key, dim_ts)]
 
 
@@ -116,7 +116,7 @@ def asof_join_cogrouped(facts: DataFrame, dim: DataFrame, key: str) -> DataFrame
     """
     from pyspark.sql import types as T
 
-    vals = _dim_value_cols(dim, key)
+    vals = _dim_value_cols(dim, key, "effective_from")
     # NB: StructType.add mutates in place — build a fresh StructType, never
     # extend df.schema (it's the DataFrame's cached schema object).
     out_schema = T.StructType(

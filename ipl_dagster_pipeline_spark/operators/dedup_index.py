@@ -82,7 +82,8 @@ class MinHashIndex:
         check_threshold("MinHashIndex", threshold)
         self.root = root
         # every key stays in index-params.json, the identity an index
-        # written by an earlier version is reopened against
+        # written by an earlier version is reopened against; k, n_hashes,
+        # n_bands and the columns are text_dedup's constants
         self.params = {
             "k": 5,
             "threshold": threshold,
@@ -126,13 +127,12 @@ class MinHashIndex:
         survives the semi-join).  Reference precedent: fetch only what
         changed (If-Modified-Since discipline, util/urllib.py:59-72).
         """
-        id_col = self.params["id_col"]
         if self.bands.current_snapshot_id() is None:
             return bands_new
         delta_keys = bands_new.select("band", "bucket").distinct()
         touched = (
             self.bands.read(spark)
-            .select(id_col, "band", "bucket")
+            .select("doc_id", "band", "bucket")
             .join(delta_keys, on=["band", "bucket"], how="leftsemi")
         )
         return touched.withColumn("__new", F.lit(False)).unionByName(bands_new)
@@ -159,7 +159,6 @@ class MinHashIndex:
         """
         spark = batch.sparkSession
         p = self.params
-        id_col, text_col = p["id_col"], p["text_col"]
         pair_snaps = self.pairs.tags("batch_id")
         if batch_id in self.docs.tags("batch_id"):  # docs commit = batch-done marker
             return self._pairs_written(spark, pair_snaps.get(batch_id))
@@ -170,13 +169,13 @@ class MinHashIndex:
         # the batch — deterministic keep-min-text).  The window shuffles only
         # the batch, never the index.  Counts observed with coalesce so a
         # clean batch reports 0, not NULL.
-        b = batch.select(id_col, text_col).withColumn(
-            "__rn", F.row_number().over(Window.partitionBy(id_col).orderBy(text_col))
+        b = batch.select("doc_id", "text").withColumn(
+            "__rn", F.row_number().over(Window.partitionBy("doc_id").orderBy("text"))
         )
         if self.docs.current_snapshot_id() is not None:
             b = b.join(
-                self.docs.read(spark).select(id_col, F.lit(True).alias("__dup")),
-                on=id_col,
+                self.docs.read(spark).select("doc_id", F.lit(True).alias("__dup")),
+                on="doc_id",
                 how="left",
             )
         else:
@@ -202,7 +201,7 @@ class MinHashIndex:
                 F.count(F.lit(1)).alias("batch_rows"),
             )
             .filter(keep)
-            .select(id_col, text_col)
+            .select("doc_id", "text")
         )
 
         # NOT fanned out: the guarded batch sits behind the dup-guard window
@@ -210,13 +209,9 @@ class MinHashIndex:
         # and an unconditional repartition was MEASURED 2× slower here — the
         # extra exchange plus fixed-width stages under every cached frame
         # cost more than the explode parallelism buys on a delta batch
-        sh_new = tracked_persist(shingles(batch, id_col, text_col, p["k"]))
-        sig_new = minhash_signatures(sh_new, id_col, p["n_hashes"])
-        rows_per_band = p["n_hashes"] // p["n_bands"]
+        sh_new = tracked_persist(shingles(batch))
         bands_new = tracked_persist(
-            band_rows(sig_new, id_col, p["n_bands"], rows_per_band).withColumn(
-                "__new", F.lit(True)
-            )
+            band_rows(minhash_signatures(sh_new)).withColumn("__new", F.lit(True))
         )
         bands_all = self._touched_bands(spark, bands_new)
 
@@ -234,10 +229,10 @@ class MinHashIndex:
                 F.sum(F.col("__new").cast("long")).alias("probe_rows"),
             )
             .filter(F.col("__new") & (F.col("__bsize") <= p["max_bucket"]))
-            .select(F.col(id_col).alias("__pid_a"), "band", "bucket")
+            .select(F.col("doc_id").alias("__pid_a"), "band", "bucket")
         )
         base = sized.filter(F.col("__bsize") <= p["max_bucket"]).select(
-            F.col(id_col).alias("__pid_b"), "band", "bucket"
+            F.col("doc_id").alias("__pid_b"), "band", "bucket"
         )
         cand = (
             probe.join(base, on=["band", "bucket"])
@@ -253,22 +248,22 @@ class MinHashIndex:
         # verification shingles: the batch's (already persisted) + ONLY the
         # old docs that matched a candidate — a semi-join, candidate-bounded
         cand_ids = (
-            cand.select(F.col("doc_a").alias(id_col))
-            .unionByName(cand.select(F.col("doc_b").alias(id_col)))
+            cand.select(F.col("doc_a").alias("doc_id"))
+            .unionByName(cand.select(F.col("doc_b").alias("doc_id")))
             .distinct()
         )
         old_needed = cand_ids.join(
-            batch.select(id_col), on=id_col, how="left_anti"
+            batch.select("doc_id"), on="doc_id", how="left_anti"
         )
         if self.docs.current_snapshot_id() is not None:
-            old_docs = self.docs.read(spark).join(old_needed, on=id_col, how="leftsemi")
+            old_docs = self.docs.read(spark).join(old_needed, on="doc_id", how="leftsemi")
             # NOT persisted: jaccard_pairs reads the verification shingle
             # stream exactly once, in its own persisted per-doc array fold —
             # that fold, not this union, feeds both join sides
-            sh_ver = sh_new.unionByName(shingles(old_docs, id_col, text_col, p["k"]))
+            sh_ver = sh_new.unionByName(shingles(old_docs))
         else:
             sh_ver = sh_new
-        new_pairs = jaccard_pairs(cand, sh_ver, id_col, p["threshold"])
+        new_pairs = jaccard_pairs(cand, sh_ver, p["threshold"])
 
         meta = {"batch_id": batch_id}
         if batch_id not in pair_snaps:

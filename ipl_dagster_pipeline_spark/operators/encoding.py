@@ -38,6 +38,9 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 MICRO = 1_000_000
+# the smoothing weight m of the target encoding: a key's mean counts as much
+# as the prior once it has m labelled rows
+TE_SMOOTHING = 20
 
 
 def label_micro(label: Column) -> Column:
@@ -50,7 +53,6 @@ def target_encode_pit(
     key_col: str,
     label_col: str,
     order_cols: list[str],
-    smoothing: int = 20,
     prior: tuple[int, int] | None = None,
 ) -> DataFrame:
     """``df`` plus point-in-time target-encoding columns for ``key_col``:
@@ -58,7 +60,7 @@ def target_encode_pit(
     * ``te_cnt``   — prior same-key rows with a non-NULL label (BIGINT)
     * ``te_sum_micro`` — exact integer sum of their micro-quantized labels
     * ``te_value`` — smoothed mean ``(sum + m·prior_mean)/(cnt + m)``,
-      rounded to 6 dp; equals the prior mean exactly for a key's first row
+      ``m = TE_SMOOTHING``, rounded to 6 dp; equals the prior mean exactly for a key's first row
 
     ``order_cols`` must totally order rows within a key (e.g. ``[ts,
     event_id]`` with a unique id last) — a tie would make "strictly earlier"
@@ -91,8 +93,8 @@ def target_encode_pit(
     # division followed by round(), whose half-way behavior is
     # engine-defined at the last decimal.
     dec = "decimal(38,0)"
-    num = s.cast(dec) * F.lit(p_den) + F.lit(smoothing) * F.lit(p_num).cast(dec)
-    den = (cnt + F.lit(smoothing)).cast(dec) * F.lit(p_den) * F.lit(MICRO)
+    num = s.cast(dec) * F.lit(p_den) + F.lit(TE_SMOOTHING) * F.lit(p_num).cast(dec)
+    den = (cnt + F.lit(TE_SMOOTHING)).cast(dec) * F.lit(p_den) * F.lit(MICRO)
     return (
         df.withColumn("te_cnt", cnt)
         .withColumn("te_sum_micro", s)

@@ -131,13 +131,18 @@ def one_hot(
     return out
 
 
-def hash_bucket_onehot(df: DataFrame, col: str, n_buckets: int, seed: int = 11) -> DataFrame:
+# portable-hash seeds of the hashing trick and the hashed cross
+HASH_ONEHOT_SEED = 11
+CROSS_SEED = 13
+
+
+def hash_bucket_onehot(df: DataFrame, col: str, n_buckets: int) -> DataFrame:
     """The hashing trick: indicator columns ``hb_0 … hb_{n−1}``
     from the portable hash of ``col`` — fixed width at ANY cardinality.
     NULL keys bucket on the ``<null>`` sentinel (deterministic, not
     dropped), matching ``sampling.split_bucket``."""
     b = F.pmod(
-        portable_hash(F.coalesce(F.col(col).cast("string"), F.lit("<null>")), seed),
+        portable_hash(F.coalesce(F.col(col).cast("string"), F.lit("<null>")), HASH_ONEHOT_SEED),
         F.lit(n_buckets),
     )
     out = df.withColumn("__hb", b)
@@ -148,7 +153,7 @@ def hash_bucket_onehot(df: DataFrame, col: str, n_buckets: int, seed: int = 11) 
     return out.drop("__hb")
 
 
-def hash_cross(df: DataFrame, cols: list[str], n_buckets: int, seed: int = 13) -> DataFrame:
+def hash_cross(df: DataFrame, cols: list[str], n_buckets: int) -> DataFrame:
     """Hashed feature cross: one bucket index ``cross_bucket`` from the JOINT value of
     ``cols`` — the fixed-width stand-in for an interaction one-hot whose
     true domain (|A|×|B|×…) is unboundable.  Each component is rendered
@@ -167,7 +172,7 @@ def hash_cross(df: DataFrame, cols: list[str], n_buckets: int, seed: int = 13) -
         for c in cols
     ]
     key = F.concat_ws("\x1f", *parts)
-    return df.withColumn("cross_bucket", F.pmod(portable_hash(key, seed), F.lit(n_buckets)))
+    return df.withColumn("cross_bucket", F.pmod(portable_hash(key, CROSS_SEED), F.lit(n_buckets)))
 
 
 def quantile_bins_fit(

@@ -150,13 +150,20 @@ def sample_temperature(
     return sample_weighted(joined, key_col, w, seed).drop("__n_s", "__n_max")
 
 
+# portable-hash seeds of the hash-ordered samplers below (the catalog's
+# DuckDB oracles replay the same seeds)
+MIX_SEED = 29
+SHUFFLE_SEED = 37
+NEG_SEED = 53
+CAP_SEED = 61
+
+
 def mixture_epochs(
     df: DataFrame,
     strata_col: str,
     key_col: str,
     epochs: dict[str, float],
     default_epochs: float = 1.0,
-    seed: int = 29,
 ) -> DataFrame:
     """Mixture weighting with UPSAMPLING: repeat each row ``epochs[stratum]``
     times, where the epoch count may be fractional and greater than 1.
@@ -175,7 +182,7 @@ def mixture_epochs(
             raise ValueError(f"epochs for stratum {name!r} must be >= 0, got {e}")
     if default_epochs < 0:
         raise ValueError(f"default_epochs must be >= 0, got {default_epochs}")
-    bucket = split_bucket(F.col(key_col), seed)
+    bucket = split_bucket(F.col(key_col), MIX_SEED)
 
     def parts(e: float) -> tuple[int, int]:
         whole = int(e)
@@ -233,7 +240,7 @@ def token_budget_select(
     return cum.filter(bound.isNull() | (F.col("cum_tokens") <= bound)).drop("__h")
 
 
-def shuffle_shards(df: DataFrame, key_col: str, n_shards: int, seed: int = 37) -> DataFrame:
+def shuffle_shards(df: DataFrame, key_col: str, n_shards: int) -> DataFrame:
     """Deterministic global corpus shuffle + balanced shard assignment.
 
     Training wants the corpus in a pseudo-random order, split into N
@@ -249,7 +256,7 @@ def shuffle_shards(df: DataFrame, key_col: str, n_shards: int, seed: int = 37) -
     """
     if n_shards < 1:
         raise ValueError(f"n_shards must be >= 1, got {n_shards}")
-    h = portable_hash(F.coalesce(F.col(key_col).cast("string"), F.lit("<null>")), seed)
+    h = portable_hash(F.coalesce(F.col(key_col).cast("string"), F.lit("<null>")), SHUFFLE_SEED)
     pos = with_keyed_cumsum(
         df.withColumn("__h", h).withColumn("__one", F.lit(1)),
         group_cols=[],
@@ -264,7 +271,7 @@ def shuffle_shards(df: DataFrame, key_col: str, n_shards: int, seed: int = 37) -
     )
 
 
-def sample_negatives(df: DataFrame, id_col: str, k: int, seed: int = 53) -> DataFrame:
+def sample_negatives(df: DataFrame, id_col: str, k: int) -> DataFrame:
     """K deterministic pseudo-random negatives per anchor row — the
     contrastive-training companion to the positive pairs the dedup family
     finds: one row per (anchor, rank 1..k) with ``neg_{id_col}``
@@ -297,7 +304,7 @@ def sample_negatives(df: DataFrame, id_col: str, k: int, seed: int = 53) -> Data
     key = F.coalesce(F.col(id_col).cast("string"), F.lit("<null>"))
     indexed = with_keyed_cumsum(
         df.select(id_col)
-        .withColumn("__h", portable_hash(key, seed))
+        .withColumn("__h", portable_hash(key, NEG_SEED))
         .withColumn("__one", F.lit(1)),
         group_cols=[],
         order_cols=["__h", id_col],
@@ -315,7 +322,7 @@ def sample_negatives(df: DataFrame, id_col: str, k: int, seed: int = 53) -> Data
     )
     draw = F.pmod(
         portable_hash(
-            F.concat(key, F.lit(":"), F.col("neg_rank").cast("string")), seed
+            F.concat(key, F.lit(":"), F.col("neg_rank").cast("string")), NEG_SEED
         ),
         F.lit(n),
     )
@@ -337,7 +344,6 @@ def sample_class_cap(
     class_col: str,
     cap: int,
     key_col: str,
-    seed: int = 61,
 ) -> DataFrame:
     """Class-balanced downsampling: keep at most ``cap`` rows per class,
     chosen as the first ``cap`` in deterministic hash order — the standard
@@ -355,7 +361,7 @@ def sample_class_cap(
         raise ValueError(f"cap must be >= 1, got {cap}")
     key = F.coalesce(F.col(key_col).cast("string"), F.lit("<null>"))
     ranked = with_keyed_cumsum(
-        df.withColumn("__h", portable_hash(key, seed)).withColumn("__one", F.lit(1)),
+        df.withColumn("__h", portable_hash(key, CAP_SEED)).withColumn("__one", F.lit(1)),
         group_cols=[class_col],
         order_cols=["__h", key_col],
         value_col="__one",

@@ -341,13 +341,16 @@ def ivf_topk_pinned(
     return _top_k(pairs, k, "vec_id")
 
 
+# vectors per (table, bucket) above which `near_dup_pairs_lsh` drops the bucket
+EMB_LSH_MAX_BUCKET = 100_000
+
+
 def near_dup_pairs_lsh(
     emb: DataFrame,
     threshold: float = 0.4,
     n_planes: int = 4,
     n_tables: int = 8,
     dim: int = 64,
-    max_bucket: int = 100_000,
 ) -> DataFrame:
     """Scale-safe embedding near-duplicate pairs: multi-table hyperplane LSH
     candidates + exact cosine re-rank + threshold.
@@ -357,7 +360,7 @@ def near_dup_pairs_lsh(
     theta/cross join); the exact re-rank joins vectors back by id only for
     surviving candidate pairs.  The bucket frame is persisted so the self-join
     does not recompute the projection lineage per side.  Buckets above
-    ``max_bucket`` are dropped (a degenerate direction cluster would emit B²
+    ``EMB_LSH_MAX_BUCKET`` are dropped (a degenerate direction cluster would emit B²
     pairs) — the same ``partitioning.capped_buckets`` cap as
     text_dedup.lsh_candidates; the count window rides the self-join's own
     (tbl, bucket) shuffle.
@@ -372,7 +375,7 @@ def near_dup_pairs_lsh(
     buckets = hyperplane_buckets_tall(emb, n_planes, n_tables, dim)
     # the dropped count: emb_lsh_dropped.* on the consuming stage's lineage row
     observed, kept = capped_buckets(
-        buckets, ["tbl", "bucket"], max_bucket, "emb_lsh_dropped", "dropped_bucket_rows", "bucket_rows"
+        buckets, ["tbl", "bucket"], EMB_LSH_MAX_BUCKET, "emb_lsh_dropped", "dropped_bucket_rows", "bucket_rows"
     )
     cand = (
         observed.alias("a").join(

@@ -57,13 +57,15 @@ def hll_rank(rest: Column) -> Column:
     ).cast("int")
 
 
-def hll_sketch(
-    df: DataFrame, group_cols: list[str], value: Column, seed: int = 41
-) -> DataFrame:
+# the portable-hash seed of the HLL register hash
+HLL_SEED = 41
+
+
+def hll_sketch(df: DataFrame, group_cols: list[str], value: Column) -> DataFrame:
     """The sparse HLL register frame: (group…, bucket, m) with one row per
     NON-EMPTY bucket — ≤ 64 rows per group, the mergeable sketch state.
     NULL values are skipped (SQL COUNT DISTINCT convention)."""
-    h = portable_hash(value.cast("string"), seed)
+    h = portable_hash(value.cast("string"), HLL_SEED)
     buck = df.where(value.isNotNull()).select(
         *group_cols,
         h.bitwiseAND(HLL_M - 1).alias("bucket"),
@@ -101,11 +103,9 @@ def hll_estimate(regs: DataFrame, group_cols: list[str]) -> DataFrame:
     )
 
 
-def hll_distinct(
-    df: DataFrame, group_cols: list[str], value: Column, seed: int = 41
-) -> DataFrame:
+def hll_distinct(df: DataFrame, group_cols: list[str], value: Column) -> DataFrame:
     """End-to-end convenience: sketch → estimate per group."""
-    return hll_estimate(hll_sketch(df, group_cols, value, seed), group_cols)
+    return hll_estimate(hll_sketch(df, group_cols, value), group_cols)
 
 
 # ---------------------------------------------------------------------------
@@ -135,6 +135,7 @@ from ipl_dagster_pipeline_spark.operators.text_dedup import (  # noqa: E402
 CMS_D = 4  # hash rows
 CMS_W = 256  # counters per row
 CMS_ROW_OFFSET = 100  # minhash_params index offset for the CMS hash family
+CMS_SEED = 53  # the portable-hash seed of the CMS key base
 
 
 def cms_col(base: Column, row: int) -> Column:
@@ -143,14 +144,14 @@ def cms_col(base: Column, row: int) -> Column:
     return ((base * a + b) % MINHASH_P) % CMS_W
 
 
-def _cms_base(value: Column, seed: int) -> Column:
-    return portable_hash(value.cast("string"), seed) % MINHASH_P
+def _cms_base(value: Column) -> Column:
+    return portable_hash(value.cast("string"), CMS_SEED) % MINHASH_P
 
 
-def _cms_cells(df: DataFrame, group_cols: list[str], value: Column, seed: int) -> DataFrame:
+def _cms_cells(df: DataFrame, group_cols: list[str], value: Column) -> DataFrame:
     """One (group…, key-ish, r, c) row per input row per hash row."""
     based = df.where(value.isNotNull()).select(
-        *group_cols, _cms_base(value, seed).alias("__base")
+        *group_cols, _cms_base(value).alias("__base")
     )
     cells = F.array(
         *[
@@ -163,13 +164,11 @@ def _cms_cells(df: DataFrame, group_cols: list[str], value: Column, seed: int) -
     )
 
 
-def cms_sketch(
-    df: DataFrame, group_cols: list[str], value: Column, seed: int = 53
-) -> DataFrame:
+def cms_sketch(df: DataFrame, group_cols: list[str], value: Column) -> DataFrame:
     """The sparse CMS counter frame (group…, r, c, cnt): one row per
     NON-ZERO counter — ≤ d·w rows per group, the mergeable sketch state.
     NULL values are skipped (they are not a key occurrence)."""
-    return _cms_cells(df, group_cols, value, seed).groupBy(*group_cols, "r", "c").agg(
+    return _cms_cells(df, group_cols, value).groupBy(*group_cols, "r", "c").agg(
         F.count(F.lit(1)).alias("cnt")
     )
 
@@ -190,7 +189,6 @@ def cms_estimate(
     sketch: DataFrame,
     keys: DataFrame,
     key_col: str,
-    seed: int = 53,
     group_cols: list[str] | None = None,
 ) -> DataFrame:
     """Point-frequency estimates for a (small) candidate-key frame:
@@ -230,7 +228,7 @@ def cms_estimate(
             f"cms_estimate: sketch is grouped by {group_cols} but keys frame "
             f"lacks {missing} — probing across groups would break est >= true"
         )
-    probe = keys.withColumn("__base", _cms_base(F.col(key_col), seed))
+    probe = keys.withColumn("__base", _cms_base(F.col(key_col)))
     cells = F.array(
         *[
             F.struct(F.lit(i).alias("r"), cms_col(F.col("__base"), i).alias("c"))

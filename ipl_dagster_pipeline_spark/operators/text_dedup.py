@@ -90,60 +90,57 @@ def exact_dedup(docs: DataFrame) -> DataFrame:
     )
 
 
-def kgrams(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", k: int = 5) -> DataFrame:
-    """``(id, pos, gram)``: the k characters of the normalized text starting
+def kgrams(docs: DataFrame, k: int = 5) -> DataFrame:
+    """``(doc_id, pos, gram)``: the k characters of the normalized ``text`` starting
     at every 1-based position (NOT distinct; 1-based so the construction is
     reproducible in ANSI SQL).  A text shorter than k yields one gram, the
     whole text.  The source is fanned out first: the explode+hash map work
     is ~|text| per doc and a single-split source would serialize it on one
     core (fan_out_scan is a no-op on already-wide inputs)."""
-    norm = fan_out_scan(docs).select(F.col(id_col), normalize_text(F.col(text_col)).alias("norm"))
+    norm = fan_out_scan(docs).select(F.col("doc_id"), normalize_text(F.col("text")).alias("norm"))
     return norm.select(
-        id_col,
+        "doc_id",
         F.explode(F.sequence(F.lit(1), F.greatest(F.length("norm") - (k - 1), F.lit(1)))).alias("pos"),
         "norm",
-    ).select(id_col, "pos", F.expr(f"substring(norm, pos, {k})").alias("gram"))
+    ).select("doc_id", "pos", F.expr(f"substring(norm, pos, {k})").alias("gram"))
 
 
-def shingles(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", k: int = 5) -> DataFrame:
-    """Distinct character k-shingles ``(id, s)`` per document."""
-    return kgrams(docs, id_col, text_col, k).select(id_col, F.col("gram").alias("s")).distinct()
+def shingles(docs: DataFrame) -> DataFrame:
+    """Distinct character 5-shingles ``(doc_id, s)`` per document."""
+    return kgrams(docs).select("doc_id", F.col("gram").alias("s")).distinct()
 
 
-def minhash_signatures(sh: DataFrame, id_col: str = "doc_id", n_hashes: int = N_HASHES) -> DataFrame:
-    """Per-doc MinHash signature: min over shingles of each universal hash.
-    One md5 per shingle + cheap affine mixes; one map-side-combined
-    aggregation; signature is n_hashes columns."""
+def minhash_signatures(sh: DataFrame) -> DataFrame:
+    """Per-``doc_id`` MinHash signature: min over shingles of each universal
+    hash.  One md5 per shingle + cheap affine mixes; one map-side-combined
+    aggregation; signature is ``N_HASHES`` columns."""
     based = sh.withColumn("__base", _hash_base(F.col("s")))
     mins = []
-    for i in range(n_hashes):
+    for i in range(N_HASHES):
         a, b = minhash_params(i)
         mins.append(F.min((F.col("__base") * a + b) % MINHASH_P).alias(f"h{i}"))
-    return based.groupBy(id_col).agg(*mins)
+    return based.groupBy("doc_id").agg(*mins)
 
 
-def band_rows(
-    sig: DataFrame,
-    id_col: str = "doc_id",
-    n_bands: int = N_BANDS,
-    rows_per_band: int = N_HASHES // N_BANDS,
-) -> DataFrame:
-    """LSH band rows ``(id, band, bucket)`` from an n_hashes-wide signature
-    frame: ALL bands in ONE pass (array of structs, then explode).  A
+def band_rows(sig: DataFrame) -> DataFrame:
+    """LSH band rows ``(doc_id, band, bucket)`` from an ``N_HASHES``-wide
+    signature frame, ``N_BANDS`` bands of ``N_HASHES // N_BANDS`` rows: ALL
+    bands in ONE pass (array of structs, then explode).  A
     union of per-band selects would replicate the signature subtree —
     shingle explode + minhash aggregation — once per band in the physical
     plan (r7 plan audit: 4 Generate+HashAggregate chains for 4 bands);
     the explode reads each signature row exactly once.  Shared by the
     one-shot ``lsh_candidates`` and the persistent
     ``dedup_index.MinHashIndex`` (the stored probe table IS this frame)."""
+    rows_per_band = N_HASHES // N_BANDS
     structs = []
-    for b in range(n_bands):
+    for b in range(N_BANDS):
         cols = [F.col(f"h{b * rows_per_band + r}").cast("string") for r in range(rows_per_band)]
         structs.append(
             F.struct(F.lit(b).alias("band"), F.concat_ws("_", *cols).alias("bucket"))
         )
-    return sig.select(F.col(id_col), F.explode(F.array(*structs)).alias("__bb")).select(
-        id_col, F.col("__bb.band").alias("band"), F.col("__bb.bucket").alias("bucket")
+    return sig.select(F.col("doc_id"), F.explode(F.array(*structs)).alias("__bb")).select(
+        "doc_id", F.col("__bb.band").alias("band"), F.col("__bb.bucket").alias("bucket")
     )
 
 
@@ -179,20 +176,18 @@ def check_threshold(op: str, threshold: float) -> None:
         raise ValueError(f"{op}: threshold must be in (0, 1], got {threshold!r}")
 
 
-def jaccard_pairs(
-    cand: DataFrame, sh: DataFrame, id_col: str = "doc_id", threshold: float = 0.5
-) -> DataFrame:
+def jaccard_pairs(cand: DataFrame, sh: DataFrame, threshold: float = 0.5) -> DataFrame:
     """Exact n-gram Jaccard for candidate pairs: |A∩B| / (|A|+|B|-|A∩B|).
     ``sh`` meets :func:`_jaccard`'s preconditions; ``threshold`` is in (0, 1]."""
     check_threshold("jaccard_pairs", threshold)
     return (
-        _jaccard(cand, sh, id_col)
+        _jaccard(cand, sh)
         .filter(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard"))
     )
 
 
-def _jaccard(cand: DataFrame, sh: DataFrame, id_col: str) -> DataFrame:
+def _jaccard(cand: DataFrame, sh: DataFrame) -> DataFrame:
     """``cand`` plus ``n_inter``, ``n_a``, ``n_b`` and ``jaccard``.  Callers
     guarantee two preconditions (not checked here).  (1) ``sh`` holds each
     (doc, shingle) at most once: ``collect_list`` keeps a repeat in ``n_a``
@@ -214,9 +209,9 @@ def _jaccard(cand: DataFrame, sh: DataFrame, id_col: str) -> DataFrame:
     # join count exactly, so the jaccard values are bit-identical.
     # persisted: the fold feeds BOTH join sides (a and b) — tracked so the
     # harness's release_tracked() frees it after the consuming action
-    arrs = tracked_persist(sh.groupBy(id_col).agg(F.collect_list("s").alias("__arr")))
-    a = arrs.select(F.col(id_col).alias("doc_a"), F.col("__arr").alias("__arr_a"))
-    b = arrs.select(F.col(id_col).alias("doc_b"), F.col("__arr").alias("__arr_b"))
+    arrs = tracked_persist(sh.groupBy("doc_id").agg(F.collect_list("s").alias("__arr")))
+    a = arrs.select(F.col("doc_id").alias("doc_a"), F.col("__arr").alias("__arr_a"))
+    b = arrs.select(F.col("doc_id").alias("doc_b"), F.col("__arr").alias("__arr_b"))
     return (
         cand.join(a, "doc_a")
         .join(b, "doc_b")

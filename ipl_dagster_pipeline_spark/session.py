@@ -19,6 +19,7 @@ def get_spark(
     app_name: str = "ipl-spark-engine",
     master: str | None = None,
     shuffle_partitions: int | None = None,
+    extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) the engine SparkSession.
 
@@ -60,4 +61,6 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
+    for k, v in (extra_conf or {}).items():
+        b = b.config(k, v)
     return b.getOrCreate()

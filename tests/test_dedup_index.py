@@ -151,11 +151,7 @@ def test_probe_is_delta_filtered_not_index_wide(spark, docs, tmp_path):
         shingles,
     )
 
-    p = idx.params
-    sig = minhash_signatures(shingles(b2, p["id_col"], p["text_col"], p["k"]), p["id_col"], p["n_hashes"])
-    bands_new = band_rows(sig, p["id_col"], p["n_bands"], p["n_hashes"] // p["n_bands"]).withColumn(
-        "__new", F.lit(True)
-    )
+    bands_new = band_rows(minhash_signatures(shingles(b2))).withColumn("__new", F.lit(True))
     plan = idx._touched_bands(spark, bands_new)._jdf.queryExecution().optimizedPlan().toString()
     assert "LeftSemi" in plan, plan
     # and the semi-join keys are the bucket coordinates, not the doc id

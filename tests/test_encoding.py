@@ -7,6 +7,7 @@ import datetime as dt
 import pytest
 from pyspark.sql import functions as F
 
+from ipl_dagster_pipeline_spark.operators import encoding
 from ipl_dagster_pipeline_spark.operators.encoding import MICRO, target_encode_pit
 
 
@@ -17,10 +18,11 @@ def _events(spark, rows):
     )
 
 
-def test_first_row_gets_exactly_the_prior(spark):
+def test_first_row_gets_exactly_the_prior(spark, monkeypatch):
+    monkeypatch.setattr(encoding, "TE_SMOOTHING", 2)
     df = _events(spark, [(1, 0, 7, 2.0), (2, 10, 7, 4.0), (3, 20, 7, 100.0)])
     out = (
-        target_encode_pit(df, "user_id", "value", ["ts", "event_id"], smoothing=2)
+        target_encode_pit(df, "user_id", "value", ["ts", "event_id"])
         .orderBy("event_id")
         .collect()
     )
@@ -65,10 +67,11 @@ def test_null_labels_skipped_but_rows_kept(spark):
     assert out[3]["te_cnt"] == 1 and out[3]["te_sum_micro"] == 6 * MICRO
 
 
-def test_explicit_prior_and_validation(spark):
+def test_explicit_prior_and_validation(spark, monkeypatch):
+    monkeypatch.setattr(encoding, "TE_SMOOTHING", 5)
     df = _events(spark, [(1, 0, 7, 2.0)])
     out = target_encode_pit(
-        df, "user_id", "value", ["ts", "event_id"], smoothing=5, prior=(10 * MICRO, 2)
+        df, "user_id", "value", ["ts", "event_id"], prior=(10 * MICRO, 2)
     ).collect()[0]
     assert out["te_value"] == pytest.approx(5.0, abs=1e-6)  # prior mean 10/2
     with pytest.raises(ValueError, match="denominator"):

@@ -63,7 +63,7 @@ def test_one_hot_declared_domain(frame):
 
 
 def test_hash_bucket_onehot_partition_of_unity(frame):
-    out = hash_bucket_onehot(frame, "cat", 4, seed=11)
+    out = hash_bucket_onehot(frame, "cat", 4)
     hb = [f"hb_{i}" for i in range(4)]
     rows = out.select(*[F.col(c) for c in hb]).collect()
     assert all(sum(r) == 1 for r in rows)  # exactly one bucket per row

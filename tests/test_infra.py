@@ -5,6 +5,7 @@ from __future__ import annotations
 import ast
 import os
 import pathlib
+import string
 
 import pyspark.sql.functions as F
 import pytest
@@ -431,14 +432,39 @@ def _package_modules(root: pathlib.Path) -> dict[str, ast.Module]:
     return out
 
 
+def _program_in(text: str) -> ast.Module | None:
+    """The AST of a Python program held in a string (a ``str.format``
+    template's fields read as a name), or None: a string counts when it
+    parses and imports something, so SQL and prose stay out."""
+    try:
+        text = "".join(
+            lit + ("_field" if f is not None else "") for lit, f, _, _ in string.Formatter().parse(text)
+        )
+    except ValueError:
+        pass  # not a format template: parse it as it stands
+    try:
+        tree = ast.parse(text)
+    except (SyntaxError, ValueError):
+        return None
+    return tree if any(isinstance(n, (ast.Import, ast.ImportFrom)) for n in ast.walk(tree)) else None
+
+
 def _entry_modules(root: pathlib.Path) -> list[ast.Module]:
     """What runs the package from outside it: ``jobs/``, ``scripts/``, the
     non-test files of ``perfbench/``, ``bench*.py`` and
-    ``__spark_entry__.py``."""
+    ``__spark_entry__.py`` — and the programs these hold in strings (the
+    subprocess snippets of ``scripts/bench_scaling.py``)."""
     files = sorted(root.glob("bench*.py")) + [root / "__spark_entry__.py"]
     for d in ("jobs", "scripts", "perfbench"):
         files += [p for p in sorted((root / d).rglob("*.py")) if not p.name.startswith("test_")]
-    return [ast.parse(f.read_text()) for f in files]
+    trees = [ast.parse(f.read_text()) for f in files]
+    held = [
+        _program_in(n.value)
+        for t in trees
+        for n in ast.walk(t)
+        if isinstance(n, ast.Constant) and isinstance(n.value, str)
+    ]
+    return trees + [t for t in held if t is not None]
 
 
 def test_no_test_only_definitions():
@@ -572,31 +598,98 @@ def _defaulted_params(modules: dict[str, ast.Module]) -> dict[str, list[tuple[st
     return out
 
 
+def _module_constants(tree: ast.Module) -> dict[str, ast.expr]:
+    """Module-level names bound once, to a literal: what a call that passes
+    such a name passes."""
+    bound: dict[str, list[ast.expr]] = {}
+    for node in tree.body:
+        if isinstance(node, ast.Assign) and len(node.targets) == 1 and isinstance(node.targets[0], ast.Name):
+            bound.setdefault(node.targets[0].id, []).append(node.value)
+        elif isinstance(node, ast.AnnAssign) and isinstance(node.target, ast.Name) and node.value:
+            bound.setdefault(node.target.id, []).append(node.value)
+    return {k: v[0] for k, v in bound.items() if len(v) == 1 and isinstance(_literal(v[0]), tuple)}
+
+
+def _scoped_calls(tree: ast.AST) -> list[tuple[ast.AST | None, ast.Call]]:
+    """``(fn, call)`` for every call in ``tree``; ``fn`` is the innermost
+    enclosing def or lambda, None at module level."""
+    out = []
+
+    def visit(node: ast.AST, fn: ast.AST | None) -> None:
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, ast.Call):
+                out.append((fn, child))
+            scope = child if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)) else fn
+            visit(child, scope)
+
+    visit(tree, None)
+    return out
+
+
 def _option_report(
     modules: dict[str, ast.Module], callers: list[ast.Module], allow: dict[str, str]
 ) -> tuple[list[str], list[str]]:
     """``(unset, stale)``: the options of ``modules`` that no call in
-    ``callers`` sets to a non-literal or to a literal other than the
-    default, less ``allow``; and the ``allow`` entries that are no such
-    option (gone, or now set)."""
+    ``modules`` or ``callers`` sets to a non-literal or to a literal other
+    than the default, less ``allow``; and the ``allow`` entries that are no
+    such option (gone, or now set).  A name bound once at module level to a
+    literal reads as that literal, and a package function passing on its own
+    defaulted parameter (same default) sets the callee only where its own
+    option is set."""
     params = _defaulted_params(modules)
     options = {p[0] for sites in params.values() for p in sites}
-    varied = set()
-    for tree in callers:
-        for call in ast.walk(tree):
-            if not isinstance(call, ast.Call):
-                continue
+    holders = {}  # def node → the "module.function" its options are named by
+    for mod, tree in modules.items():
+        for node in tree.body:
+            for fn in node.body if isinstance(node, ast.ClassDef) else [node]:
+                if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    holders[id(fn)] = f"{mod}.{node.name}.{fn.name}" if fn is not node else f"{mod}.{fn.name}"
+    varied, via = set(), []  # via: (option, the caller's own option it passes on)
+    for tree in list(modules.values()) + callers:
+        consts = _module_constants(tree)
+        for fn, call in _scoped_calls(tree):
             name = call.func.id if isinstance(call.func, ast.Name) else getattr(call.func, "attr", None)
+            if name not in params:
+                continue
             spread = any(isinstance(a, ast.Starred) for a in call.args) or any(
                 k.arg is None for k in call.keywords
             )
             kw = {k.arg: k.value for k in call.keywords}
-            for option, param, default, idx in params.get(name, ()):
+            fn_defaults, fn_stores = {}, set()
+            if fn is not None:
+                a = fn.args
+                pos = a.posonlyargs + a.args
+                fn_defaults = {p.arg: None for p in pos + a.kwonlyargs + [a.vararg, a.kwarg] if p}
+                fn_defaults.update({p.arg: d for p, d in zip(pos[len(pos) - len(a.defaults):], a.defaults)})
+                fn_defaults.update({p.arg: d for p, d in zip(a.kwonlyargs, a.kw_defaults) if d})
+                fn_stores = {n.id for n in ast.walk(fn) if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Store)}
+            for option, param, default, idx in params[name]:
                 arg = kw.get(param)
                 if arg is None and idx is not None and idx < len(call.args):
                     arg = call.args[idx]
-                if spread or (arg is not None and _literal(arg) != _literal(default)):
+                if spread:
                     varied.add(option)
+                    continue
+                if arg is None:
+                    continue
+                if isinstance(arg, ast.Name) and arg.id in fn_defaults:  # the caller's own parameter
+                    outer = fn_defaults[arg.id]
+                    if id(fn) in holders and outer is not None and _literal(outer) == _literal(default):
+                        via.append((option, f"{holders[id(fn)]}({arg.id})"))
+                        continue
+                    varied.add(option)
+                    continue
+                if isinstance(arg, ast.Name) and arg.id in consts and arg.id not in fn_stores:
+                    arg = consts[arg.id]
+                if _literal(arg) != _literal(default):
+                    varied.add(option)
+    grew = True
+    while grew:
+        grew = False
+        for option, outer in via:
+            if outer in varied and option not in varied:
+                varied.add(option)
+                grew = True
     single = options - varied
     return sorted(single - set(allow)), sorted(set(allow) - single)
 
@@ -610,11 +703,18 @@ def test_no_single_valued_options():
     be on ``OPTIONS_ALLOW`` with a reason.  A parameter nothing sets is a
     constant.  Calls are matched by name: ``f(...)`` and ``x.f(...)`` both
     count for every package ``f`` (``C(...)`` for ``C.__init__``), and a
-    call with ``*args`` or ``**kwargs`` sets every parameter.  A stale
-    allow-list entry (gone, or now set) fails too.  AST only, no Spark."""
+    call with ``*args`` or ``**kwargs`` sets every parameter.  A name bound
+    once at module level to a literal reads as that literal, and a package
+    function passing on its own defaulted parameter sets the callee only
+    where its own option is set; any other non-literal argument counts as a
+    second value, so a constant passed through an attribute, a subscript or
+    a local (``f(x=self.params["k"])``) keeps its option alive unseen.
+    Code held in strings is seen only where it parses as a program with an
+    import (``_program_in``).  A stale allow-list entry (gone, or now set)
+    fails too.  AST only, no Spark."""
     root = pathlib.Path(__file__).resolve().parents[1]
     modules = _package_modules(root)
-    unset, stale = _option_report(modules, list(modules.values()) + _entry_modules(root), OPTIONS_ALLOW)
+    unset, stale = _option_report(modules, _entry_modules(root), OPTIONS_ALLOW)
     assert stale == [], f"stale OPTIONS_ALLOW entries (gone or now set): {stale}"
     assert unset == [], (
         "defaulted parameters no caller outside tests/ sets to another value — "
@@ -651,6 +751,26 @@ def test_option_scanner_cases():
     # an allow-list entry hides its option; a stale one (set, or gone) fails
     assert report("", {"mod.f(a)": "why"})[0] == everything[:2] + ["mod.f(b)", "mod.f(c)"]
     assert report("f(df, a=2)", {"mod.f(a)": "why", "mod.g(z)": "gone"})[1] == ["mod.f(a)", "mod.g(z)"]
+    # a program held in a format template counts, its fields as names; SQL does not
+    held = _program_in("import mod\nmod.f(df, a={n}, b={{'k': 1}})")
+    assert _option_report(pkg, [held], {})[0] == ["mod.C.__init__(k)", "mod.C.m(n)", "mod.f(c)"]
+    assert _program_in("sum(x) / count(x)") is None
+    # a module constant reads as its literal; a function passing on its own
+    # defaulted parameter sets the callee only where its own option is set
+    fwd = {
+        "mod": ast.parse(
+            "K = 1\n"
+            "def f(df, a=1):\n"
+            "    pass\n"
+            "def g(df, a=1):\n"
+            "    f(df, a=a)\n"
+            "def h(df):\n"
+            "    f(df, a=K)\n"
+        )
+    }
+    assert _option_report(fwd, [ast.parse("h(df)")], {})[0] == ["mod.f(a)", "mod.g(a)"]
+    assert _option_report(fwd, [ast.parse("g(df, a=2)")], {})[0] == []
+    assert _option_report(fwd, [ast.parse("K = 2\nf(df, a=K)")], {})[0] == ["mod.g(a)"]
 
 
 def test_skew_profile_exact_numbers(spark):

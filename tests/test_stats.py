@@ -100,7 +100,7 @@ def test_sample_class_cap_caps_and_keeps_null_class(spark):
 
     rows = [(i, "big" if i < 90 else ("small" if i < 96 else None)) for i in range(100)]
     df = spark.createDataFrame(rows, "id long, cls string")
-    out = sample_class_cap(df, "cls", 10, "id", seed=61).collect()
+    out = sample_class_cap(df, "cls", 10, "id").collect()
     by = {}
     for r in out:
         by.setdefault(r["cls"], []).append(r)
@@ -109,7 +109,7 @@ def test_sample_class_cap_caps_and_keeps_null_class(spark):
     assert len(by[None]) == 4            # NULL class survives
     assert all(1 <= r["class_rank"] <= 10 for r in out)
     # deterministic under different parallelism
-    out2 = sample_class_cap(df.repartition(13), "cls", 10, "id", seed=61).collect()
+    out2 = sample_class_cap(df.repartition(13), "cls", 10, "id").collect()
     assert sorted((r["id"], r["class_rank"]) for r in out) == sorted(
         (r["id"], r["class_rank"]) for r in out2
     )

@@ -114,12 +114,14 @@ def _near_dup_pairs_lsh(spark, tmp_path):
         rows += [(100 + 2 * j, v), (101 + 2 * j, [x * 1.001 for x in v])]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     buckets = similarity.hyperplane_buckets_tall(emb, planes, tables, dim).toPandas()
-    got = _observe(
-        "emb_lsh_dropped",
-        lambda: similarity.near_dup_pairs_lsh(
-            emb, threshold=0.9, n_planes=planes, n_tables=tables, dim=dim, max_bucket=CAP
-        ).count(),
-    )
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(similarity, "EMB_LSH_MAX_BUCKET", CAP)
+        got = _observe(
+            "emb_lsh_dropped",
+            lambda: similarity.near_dup_pairs_lsh(
+                emb, threshold=0.9, n_planes=planes, n_tables=tables, dim=dim
+            ).count(),
+        )
     want = {
         "dropped_bucket_rows": _oversized_rows(buckets, ["tbl", "bucket"], CAP),
         "bucket_rows": len(buckets),

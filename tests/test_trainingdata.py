@@ -577,19 +577,21 @@ def test_robust_outliers_planted_and_null_group(spark):
 
 
 class TestSampleNegatives:
-    def test_counts_and_no_self_negatives(self, spark):
+    def test_counts_and_no_self_negatives(self, spark, monkeypatch):
+        from ipl_dagster_pipeline_spark.operators import sampling
         from ipl_dagster_pipeline_spark.operators.sampling import sample_negatives
 
         df = spark.createDataFrame([(i,) for i in range(20)], "doc_id long")
-        out = sample_negatives(df, "doc_id", 3, seed=53).collect()
+        out = sample_negatives(df, "doc_id", 3).collect()
         assert len(out) == 60  # every anchor gets exactly k rows
         assert all(r["neg_doc_id"] != r["doc_id"] for r in out)  # never self
         assert all(1 <= r["neg_rank"] <= 3 for r in out)
         # deterministic: a second run is identical
-        again = sample_negatives(df, "doc_id", 3, seed=53).collect()
+        again = sample_negatives(df, "doc_id", 3).collect()
         assert sorted(map(tuple, out)) == sorted(map(tuple, again))
         # a different seed draws a different sample
-        other = sample_negatives(df, "doc_id", 3, seed=54).collect()
+        monkeypatch.setattr(sampling, "NEG_SEED", 54)
+        other = sample_negatives(df, "doc_id", 3).collect()
         assert sorted(map(tuple, out)) != sorted(map(tuple, other))
 
     def test_two_row_corpus_and_guards(self, spark):
